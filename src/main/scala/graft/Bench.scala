@@ -83,7 +83,7 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    Bitmaps.register(spark)
+    graft.functions.ChCompat.register(spark)
 
     def force(df: DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()

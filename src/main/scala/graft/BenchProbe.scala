@@ -86,7 +86,7 @@ object BenchProbe {
       // cumulative slice of the scored projection (noop-forced, spread
       // like the query) to find which expression family owns the CPU
       import graft.text.TextFunctions
-      TextFunctions.register(spark)
+      graft.functions.ChCompat.register(spark)
       val base = graft.engine.Warehouse.spreadForCompute(
         docs.select(col("doc_id"), col("lang"), col("text")), "doc_id")
       def noop(df: org.apache.spark.sql.DataFrame): Unit =

@@ -438,7 +438,7 @@ object BenchScale {
       if (opOn("sequence_match")) measure("sequence_match") {
         // the TypedImperativeAggregate collects (ts, mask) per uid — the
         // hot group's buffer holds 1M events on one task
-        graft.functions.SequenceMatch.register(spark)
+        graft.functions.ChCompat.register(spark)
         events.groupBy("uid").agg(
           graft.functions.SequenceMatch.sequence_match("(?1).*(?2).*(?3)",
             col("ts"), col("etype") === 0, col("etype") === 1,

@@ -1,6 +1,10 @@
 package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+import org.apache.spark.sql.catalyst.expressions.{Alias, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, OneRowRelation, Project, SubqueryAlias}
+import org.apache.spark.sql.catalyst.rules.Rule
 
 /** SparkSessionExtensions entry point — the idiomatic packaging for a Spark
   * library's custom functions: start any session with
@@ -9,28 +13,29 @@ import org.apache.spark.sql.SparkSessionExtensions
   *   spark.sql.extensions=graft.GraftExtensions
   * }}}
   *
-  * (or `.withExtensions(new GraftExtensions)`) and every graft function —
-  * bitmap aggregate family, MinHash, cosine, and the ClickHouse-dialect
-  * names — resolves in SQL without further setup. The per-session
-  * `ChCompat.register(spark)` call remains available for sessions created
-  * without extensions (the injected rule covers new sessions at build time).
+  * (or `.withExtensions(new GraftExtensions)`) and the whole
+  * [[functions.FunctionTable]] — bitmap aggregate family, MinHash, cosine,
+  * the ClickHouse-dialect names and the `numbers` / `merge` table
+  * functions — resolves in SQL without further setup, as does
+  * `system.one`. Sessions built without the extension call
+  * `functions.ChCompat.register(spark)` instead.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    // Function registration needs a live session registry; inject via a
-    // no-op resolution rule that registers once on first analysis.
-    ext.injectResolutionRule { session =>
-      functions.ChCompat.register(session)
-      // marker read by mv.Projection.attach: this session already runs
-      // ProjectionRewrite in the main optimizer, don't add a second copy
-      session.conf.set(GraftExtensions.MarkerConf, "true")
-      NoopRule
-    }
+    functions.FunctionTable.quietRegistryLogger
+    functions.FunctionTable.functions.foreach(ext.injectFunction)
+    functions.FunctionTable.tableFunctions.foreach(ext.injectTableFunction)
+    ext.injectResolutionRule(_ => SystemOne)
     // CH-projection-style automatic aggregate routing onto registered state
     // tables (no-op until graft.mv.Projection.register is called). The rule
     // carries ITS session: a plan optimized while another session is
     // thread-active still consults only this session's store.
-    ext.injectOptimizerRule(session => new mv.ProjectionRewrite(session))
+    ext.injectOptimizerRule { session =>
+      // marker read by mv.Projection.attach: this session already runs
+      // ProjectionRewrite in the main optimizer, don't add a second copy
+      session.conf.set(GraftExtensions.MarkerConf, "true")
+      new mv.ProjectionRewrite(session)
+    }
   }
 }
 
@@ -41,8 +46,15 @@ object GraftExtensions {
   val MarkerConf = "spark.graft.extensions.injected"
 }
 
-private object NoopRule
-  extends org.apache.spark.sql.catalyst.rules.Rule[
-    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] {
-  override def apply(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) = p
+/** CH's one-row `system.one` (`SELECT … FROM system.one`, the reference
+  * doc's hand-built-rows idiom) as a plan, so extension sessions need no
+  * catalog view: one row, `dummy = 0`.
+  */
+private object SystemOne extends Rule[LogicalPlan] {
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.resolveOperators {
+    case u: UnresolvedRelation
+        if u.multipartIdentifier.map(_.toLowerCase) == Seq("system", "one") =>
+      SubqueryAlias(Seq("system", "one"),
+        Project(Seq(Alias(Literal(0), "dummy")()), OneRowRelation()))
+  }
 }

@@ -17,7 +17,7 @@ object PlanAudit {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    functions.Bitmaps.register(spark)
+    graft.functions.ChCompat.register(spark)
 
     for (name <- Seq("q01_pricing_summary", "q02_filter_project", "q04_join_group",
         "q05_dict_enrich", "q20_state_rollup", "q23_ch_dialect_mv", "q24_dictget_sql",

@@ -39,7 +39,7 @@ object PlanDump {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    functions.Bitmaps.register(spark)
+    graft.functions.ChCompat.register(spark)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     for (name <- names) {
       try {

@@ -24,7 +24,7 @@ object Smoke {
     // probe 1: bitmap_merge_agg fed raw ids (the doc's -Merge misuse) must
     // fail at analysis time, not corrupt silently
     import graft.functions.Bitmaps
-    Bitmaps.register(spark)
+    graft.functions.ChCompat.register(spark)
     val ev = Tables(spark, "/root/testdata/sf0.001").events
     try {
       ev.agg(Bitmaps.bitmap_merge_agg(col("user_id"))).collect()

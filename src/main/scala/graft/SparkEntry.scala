@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
-import graft.functions.Bitmaps
+import graft.functions.ChCompat
 import graft.queries.{dec, ChPack, ExtendedPack, MvPack, PipelinePack, RelationalPack, TextPack, VectorPack}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
@@ -18,7 +18,7 @@ object SparkEntry {
     * rollup to (day, segment) (ref :60-70).
     */
   def entry(spark: SparkSession): DataFrame = {
-    Bitmaps.register(spark)
+    ChCompat.register(spark)
     val t = Tables(spark, "/root/testdata/sf0.001")
     val enriched = t.eventsWithDefaults
       .join(broadcast(t.customer), col("user_id") === col("c_custkey"), "left_outer")
@@ -40,11 +40,16 @@ object SparkEntry {
       .orderBy("day", "segment")
   }
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. Each builder
+    * first binds the SQL function table into its session (a registry
+    * lookup once bound), so the packs themselves register nothing.
+    */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    RelationalPack.queries ++ MvPack.queries ++ ChPack.queries ++
+    (RelationalPack.queries ++ MvPack.queries ++ ChPack.queries ++
       TextPack.queries ++ VectorPack.queries ++ ExtendedPack.queries ++
-      PipelinePack.queries
+      PipelinePack.queries).map { case (name, build) =>
+      name -> { (s: SparkSession, dir: String) => ChCompat.register(s); build(s, dir) }
+    }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */

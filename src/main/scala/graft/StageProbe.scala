@@ -30,7 +30,7 @@ object StageProbe {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    functions.Bitmaps.register(spark)
+    graft.functions.ChCompat.register(spark)
 
     case class St(id: Int, name: String, ms: Long, tasks: Int,
         inputMB: Double, shReadMB: Double, shWriteMB: Double,

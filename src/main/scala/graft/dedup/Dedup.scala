@@ -62,7 +62,7 @@ object Dedup {
     * (fraction of matching positions — the standard unbiased estimator).
     * Evaluated once per CANDIDATE PAIR, so it runs through the primitive
     * [[graft.functions.SigMatchCount]] expression rather than an
-    * interpreted zip_with lambda (requires `MinHash.register`, which every
+    * interpreted zip_with lambda (requires `ChCompat.register`, which every
     * pipeline entry point here calls).
     */
   def estJaccard(sigA: Column, sigB: Column, numHashes: Int): Column =
@@ -77,8 +77,7 @@ object Dedup {
   def minhashSignatures(
       df: DataFrame, textCol: String, idCol: String,
       numHashes: Int, shingleSize: Int = 3): DataFrame = {
-    graft.functions.MinHash.register(df.sparkSession)
-    graft.text.TextFunctions.register(df.sparkSession) // shingles_n
+    graft.functions.ChCompat.register(df.sparkSession)
     // spread first: the k-hash work below must not run inside a
     // single-task scan of a small/one-row-group file
     graft.engine.Warehouse
@@ -103,7 +102,7 @@ object Dedup {
       shingleSize: Int = 3): DataFrame = {
     val rowsPerBand = numHashes / bands
     require(bands * rowsPerBand == numHashes, "bands must divide numHashes")
-    graft.functions.MinHash.register(df.sparkSession)
+    graft.functions.ChCompat.register(df.sparkSession)
     // explode shingles, build signatures with the tight-loop aggregate —
     // the distributed formulation (shuffle keyed by doc id), and ~100×
     // faster than evaluating k hashes in interpreted lambdas per shingle
@@ -172,7 +171,7 @@ object Dedup {
   def minhashSignaturesMd5(
       df: DataFrame, textCol: String, idCol: String,
       numHashes: Int, shingleSize: Int = 3): DataFrame = {
-    graft.text.TextFunctions.register(df.sparkSession) // shingles_n
+    graft.functions.ChCompat.register(df.sparkSession)
     val mins = (0 until numHashes).map { j =>
       min(substring(md5(concat(lit(s"$j:"), col("sh"))), 1, 16)).as(s"__h$j")
     }
@@ -234,7 +233,7 @@ object Dedup {
       shingleSize: Int = 3,
       threshold: Double = 0.2,
       maxShingleDf: Int = Int.MaxValue): DataFrame = {
-    graft.text.TextFunctions.register(df.sparkSession) // shingles_n
+    graft.functions.ChCompat.register(df.sparkSession)
     // persist: `sh` is read three times (per-doc sizes + both self-join
     // sides); the tokenize/shingle/explode subtree must evaluate once.
     val shRaw = graft.engine.Warehouse
@@ -269,7 +268,7 @@ object Dedup {
     * via the single-pass [[graft.functions.Simhash64Expr]] (one xxhash64
     * per token + 64 counter bumps — the composed 64-bit-lambda HOF form
     * evaluated interpreted and was the simhash pipeline's scale cost).
-    * Requires `Simhash.register` on the session (every entry point here
+    * Requires `ChCompat.register` on the session (every entry point here
     * does it).
     */
   def simhash64(text: Column): Column = simhash64FromTokens(tokens(text))
@@ -310,7 +309,7 @@ object Dedup {
       struct(lit(c).as("c"),
         call_function("shiftright", col("sh"), lit(offsets(c))).bitwiseAND(lit(mask)).as("v"))
     }
-    graft.functions.Simhash.register(df.sparkSession)
+    graft.functions.ChCompat.register(df.sparkSession)
     val sigs = graft.engine.Warehouse
       .spreadForCompute(df.select(col(idCol).as("id"), col(textCol).as("__text")), "id")
       .select(col("id"), tokens(col("__text")).as("toks"))
@@ -412,7 +411,7 @@ object Dedup {
   def semanticClusters(
       emb: DataFrame, idCol: String, vecCol: String, threshold: Double,
       exact: Boolean = false, tables: Int = 8, bits: Int = 6): DataFrame = {
-    graft.functions.VectorOps.register(emb.sparkSession)
+    graft.functions.ChCompat.register(emb.sparkSession)
     val pairs =
       if (exact) {
         val a = emb.select(col(idCol).as("id_a"), col(vecCol).as("__va"))

@@ -2,7 +2,7 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -47,26 +47,20 @@ object Bitmaps {
     l.toInt
   }
 
-  /** Register `bitmap_agg` / `bitmap_merge_agg` in the session's function
-    * registry (idempotent). Needed before the Column helpers below resolve.
+  /** `bitmap_agg` / `bitmap_merge_agg` and the raw scalar algebra: the
+    * SQL names the Column helpers below resolve through.
     */
-  def register(spark: SparkSession): Unit = Registration.once(spark, "Bitmaps") {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "bitmap_agg", exprs => BitmapAggregate(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "bitmap_merge_agg", exprs => BitmapMergeAggregate(exprs.head), "built-in")
+  val functions = FunctionTable.define(this) { f =>
+    f("bitmap_agg")(exprs => BitmapAggregate(exprs.head))
+    f("bitmap_merge_agg")(exprs => BitmapMergeAggregate(exprs.head))
     for (op <- Seq("and", "or", "xor"))
-      reg.createOrReplaceTempFunction(
-        s"bitmap_${op}_fold_agg", exprs => BitmapFoldAggregate(exprs.head, op), "built-in")
+      f(s"bitmap_${op}_fold_agg")(exprs => BitmapFoldAggregate(exprs.head, op))
     // raw (null-propagating) scalar algebra — the Column helpers below
     // wrap these with the CH null conventions
-    reg.createOrReplaceTempFunction(
-      "bitmap_cardinality_raw", exprs => BitmapCardinalityExpr(exprs.head), "built-in")
+    f("bitmap_cardinality_raw")(exprs => BitmapCardinalityExpr(exprs.head))
     for ((name, op) <- Seq("bitmap_and_raw" -> "and", "bitmap_or_raw" -> "or",
         "bitmap_and_card_raw" -> "and_card", "bitmap_or_card_raw" -> "or_card"))
-      reg.createOrReplaceTempFunction(
-        name, exprs => BitmapBinaryExpr(exprs(0), exprs(1), op), "built-in")
+      f(name)(exprs => BitmapBinaryExpr(exprs(0), exprs(1), op))
   }
 
   /** groupBitmap: aggregate integral ids into a serialized RoaringBitmap. */
@@ -85,7 +79,7 @@ object Bitmaps {
   // CASE/COALESCE for the null conventions the former UDF forms had: a
   // NULL bitmap counts as empty for cardinalities and as identity for OR,
   // but AND of a NULL is NULL (unknown ∧ x is unknown). Requires
-  // Bitmaps.register on the session (query packs and StateTable do this).
+  // ChCompat.register on the session (query packs and StateTable do this).
 
   /** bitmapCardinality — NULL counts 0 */
   def bitmap_cardinality(c: Column): Column =

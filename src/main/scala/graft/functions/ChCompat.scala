@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
@@ -50,65 +51,37 @@ import org.apache.spark.sql.types._
   */
 object ChCompat {
 
-  /** True while this thread is inside the system.one catalog setup — breaks
-    * the register → catalog → analyzer-build → register recursion when the
-    * extensions path invokes register during analyzer construction.
+  /** Bind the [[FunctionTable]] into a session built without
+    * [[graft.GraftExtensions]], and create CH's one-row `system.one`.
+    * Idempotent: a session whose registry already binds the table's last
+    * entry to our builder instance (a repeat call, an extensions session,
+    * a clone of a registered session) costs one registry lookup. A
+    * registration that fails part-way leaves that entry unbound, so the
+    * next call retries it.
     */
-  private val inCatalogSetup: ThreadLocal[java.lang.Boolean] =
-    ThreadLocal.withInitial(() => java.lang.Boolean.FALSE)
-
-  def register(spark: SparkSession): Unit = Registration.once(spark, "ChCompat") {
-    Bitmaps.register(spark)
-    MinHash.register(spark)
-    VectorOps.register(spark)
-    FreqTopK.register(spark)
-    WindowFunnel.register(spark)
-    SequenceMatch.register(spark)
-    UniqUpTo.register(spark)
-    MapAggregates.register(spark)
-    Simhash.register(spark)
-    Hashes.register(spark)
-    graft.text.TextFunctions.register(spark)
-    graft.text.Bpe.register(spark)
-    ForEach.register(spark)
-    StatAggregates.register(spark)
-    StringDistance.register(spark)
-    GeoFormat.register(spark)
-    Moving.register(spark)
-    SketchAggs.register(spark)
-    SequenceNextNode.register(spark)
-    StatMatrix.register(spark)
-    HtmlText.register(spark)
-    // CH's one-row system table (`FROM system.one` — the doc's hand-built
-    // rows idiom, doc:335-495, selects literals from it). The catalog
-    // round-trip needs the session's ANALYZER; when register() itself runs
-    // from inside analyzer construction (GraftExtensions injects it as a
-    // resolution-rule builder), touching spark.catalog here would re-enter
-    // the builder and recurse without bound. Registration.once's
-    // in-progress guard makes that nested call a no-op (rule objects need
-    // no functions at construction time), and this thread-local keeps the
-    // catalog block itself non-re-entrant as a second line of defense;
-    // the OUTER frame then creates system.one normally.
-    if (!inCatalogSetup.get()) {
-      inCatalogSetup.set(true)
-      try {
-        if (!spark.catalog.databaseExists("system") ||
-            !spark.catalog.tableExists("system.one")) {
-          spark.sql("CREATE DATABASE IF NOT EXISTS system")
-          spark.sql("CREATE OR REPLACE VIEW system.one AS SELECT 0 AS dummy")
-        }
-      } finally inCatalogSetup.set(false)
+  def register(spark: SparkSession): Unit = if (!registered(spark)) synchronized {
+    if (!registered(spark)) {
+      // CH's one-row system table (`FROM system.one` — the doc's hand-built
+      // rows idiom, doc:335-495, selects literals from it)
+      if (!spark.catalog.databaseExists("system") ||
+          !spark.catalog.tableExists("system.one")) {
+        spark.sql("CREATE DATABASE IF NOT EXISTS system")
+        spark.sql("CREATE OR REPLACE VIEW system.one AS SELECT 0 AS dummy")
+      }
+      FunctionTable.quietRegistryLogger
+      val tables = spark.sessionState.tableFunctionRegistry
+      FunctionTable.tableFunctions.foreach { case (id, info, b) => tables.registerFunction(id, info, b) }
+      val reg = spark.sessionState.functionRegistry
+      FunctionTable.functions.foreach { case (id, info, b) => reg.registerFunction(id, info, b) }
     }
-    val reg = spark.sessionState.functionRegistry
-    def f(name: String)(builder: Seq[Expression] => Expression): Unit =
-      reg.createOrReplaceTempFunction(name, builder, "built-in")
+  }
 
+  private lazy val last = FunctionTable.functions.last
 
-    ChCompatDates.registerInto(spark)
-    ChCompatStrings.registerInto(spark)
-    ChCompatArrays.registerInto(spark)
-    ChCompatAggs.registerInto(spark)
+  private def registered(spark: SparkSession): Boolean =
+    spark.sessionState.functionRegistry.lookupFunctionBuilder(last._1).exists(_ eq last._3)
 
+  private[functions] val functions = FunctionTable.define(this) { f =>
     // ---- misc introspection / control ---------------------------------
     f("throwIf") { es =>
       val msg = if (es.length >= 2) es(1)
@@ -121,12 +94,35 @@ object ChCompat {
     f("currentDatabase") { _ => CurrentDatabase() }
     f("currentUser") { _ => CurrentUser() }
     f("version") { _ => SparkVersion() }
-    // ---- table functions ---------------------------------------------
+
+    // ---- dictionary lookup (dim.dict_user_dim.sql:24-27) -------------
+    // key is cast to long (dictionary PRIMARY KEY is UInt64); TRY mode
+    // makes uncastable keys act as missing rather than fail the job.
+    // COMPLEX_KEY_HASHED dictionaries take the key tuple instead:
+    // dictGet(d, a, tuple(k1, k2)) or the flat dictGet(d, a, k1, k2).
+    f("dictGet") { es =>
+      val dictName = stringLit(es(0), "dictGet dictionary name")
+      val attr = stringLit(es(1), "dictGet attribute name")
+      es.drop(2) match {
+        case Seq(t: CreateNamedStruct) =>
+          DictGetComplexExpr(dictName, attr, t.valExprs)
+        case Seq(single) =>
+          DictGetExpr(dictName, attr, Cast(single, LongType, None, EvalMode.TRY))
+        case multi =>
+          DictGetComplexExpr(dictName, attr, multi)
+      }
+    }
+    // CH tuple(...) — here only meaningful as the dictGet key carrier, but
+    // it resolves anywhere a struct does
+    f("tuple")(es => CreateStruct(es))
+  }
+
+  /** CH's table functions, the [[FunctionTable]]'s two plan-valued entries. */
+  private[functions] val tableFunctions: Seq[FunctionTable.Entry[LogicalPlan]] = Seq(
     // numbers(N) / numbers(offset, N) — CH's generated source (doc:565-597
     // sizing experiments; SURVEY §2.1 S8); output column is `number` like
     // CH, not range()'s id
-    spark.sessionState.tableFunctionRegistry.createOrReplaceTempFunction(
-      "numbers", { es: Seq[Expression] =>
+    FunctionTable.entry(this, "numbers", { es: Seq[Expression] =>
         def intLit(e: Expression, what: String): Long = e match {
           case Literal(v: Number, ByteType | ShortType | IntegerType | LongType) =>
             v.longValue()
@@ -143,7 +139,7 @@ object ChCompat {
           start, start + count, 1L, None)
         org.apache.spark.sql.catalyst.plans.logical.Project(
           Seq(Alias(range.output.head, "number")()), range)
-      }, "built-in")
+      }),
 
     // merge('db', 'tables_regexp') — CH's union table function: every
     // table of `db` whose name matches the (unanchored) regex, unioned BY
@@ -151,8 +147,10 @@ object ChCompat {
     // Missing columns resolve as NULL (documented divergence: CH fills
     // type defaults). Tables enumerate at plan construction — the regex
     // is against the catalog, resolution stays with the analyzer.
-    spark.sessionState.tableFunctionRegistry.createOrReplaceTempFunction(
-      "merge", { es: Seq[Expression] =>
+    // The builder runs during analysis, where the active session is the
+    // querying one.
+    FunctionTable.entry(this, "merge", { es: Seq[Expression] =>
+        val spark = SparkSession.active
         require(es.length == 2, s"merge takes (db, tables_regexp), got ${es.length} args")
         val db = stringLit(es(0), "merge database")
         val re = stringLit(es(1), "merge tables_regexp").r
@@ -176,29 +174,7 @@ object ChCompat {
         }
         if (scans.length == 1) scans.head
         else Union(scans, byName = true, allowMissingCol = true)
-      }, "built-in")
-
-    // ---- dictionary lookup (dim.dict_user_dim.sql:24-27) -------------
-    // key is cast to long (dictionary PRIMARY KEY is UInt64); TRY mode
-    // makes uncastable keys act as missing rather than fail the job.
-    // COMPLEX_KEY_HASHED dictionaries take the key tuple instead:
-    // dictGet(d, a, tuple(k1, k2)) or the flat dictGet(d, a, k1, k2).
-    f("dictGet") { es =>
-      val dictName = stringLit(es(0), "dictGet dictionary name")
-      val attr = stringLit(es(1), "dictGet attribute name")
-      es.drop(2) match {
-        case Seq(t: CreateNamedStruct) =>
-          DictGetComplexExpr(dictName, attr, t.valExprs)
-        case Seq(single) =>
-          DictGetExpr(dictName, attr, Cast(single, LongType, None, EvalMode.TRY))
-        case multi =>
-          DictGetComplexExpr(dictName, attr, multi)
-      }
-    }
-    // CH tuple(...) — here only meaningful as the dictGet key carrier, but
-    // it resolves anywhere a struct does
-    f("tuple")(es => CreateStruct(es))
-  }
+      }))
 
   /** The `-If` combinator: feed the value only where cond holds; Spark
     * aggregates skip nulls, exactly CH's conditional-aggregate semantics.

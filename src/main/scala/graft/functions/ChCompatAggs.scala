@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
@@ -19,10 +18,7 @@ private[functions] object ChCompatAggs {
 
   import ChCompat.{onlyIf, chFormatToJava, hllState, hllMerge, medianMerged, medianFinalize, stringLit}
 
-  def registerInto(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    def f(name: String)(builder: Seq[Expression] => Expression): Unit =
-      reg.createOrReplaceTempFunction(name, builder, "built-in")
+  val functions = FunctionTable.define(this) { f =>
     // ---- misc aggregates / aliases ------------------------------------
     // exactly one distinct value → that value, else NULL
     f("singleValueOrNull") { es =>
@@ -430,7 +426,7 @@ private[functions] object ChCompatAggs {
         Literal("b"), RegrIntercept(y, x).toAggregateExpression()))
     }
 
-    // (JSON family lives in ChCompatStrings.registerInto — the split must
+    // (JSON family lives in ChCompatStrings.functions — the split must
     // stay a verbatim move, not a fork; a fourth-review-pass diff caught
     // this block duplicated in both files, with the later registration
     // silently winning.)

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
@@ -18,10 +17,7 @@ private[functions] object ChCompatArrays {
 
   import ChCompat.{onlyIf, chFormatToJava, hllState, hllMerge, medianMerged, medianFinalize, stringLit}
 
-  def registerInto(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    def f(name: String)(builder: Seq[Expression] => Expression): Unit =
-      reg.createOrReplaceTempFunction(name, builder, "built-in")
+  val functions = FunctionTable.define(this) { f =>
     // ---- CH array functions (lambda-first argument order) ------------
     f("arrayMap") { es => ArrayTransform(es(1), es.head) }
     f("arrayFilter") { es => ArrayFilter(es(1), es.head) }

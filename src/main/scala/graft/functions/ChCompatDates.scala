@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
@@ -10,17 +9,14 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
 /** ChCompat's date/time family: the scalar date/time/cast spellings and
-  * the date-completion tail. Split out of [[ChCompat]] verbatim (register
-  * is delegated from there; see that object's doc for the dialect map).
+  * the date-completion tail. Split out of [[ChCompat]] verbatim (its entries
+  * join the [[FunctionTable]]; see ChCompat's doc for the dialect map).
   */
 private[functions] object ChCompatDates {
 
   import ChCompat.{onlyIf, chFormatToJava, hllState, hllMerge, medianMerged, medianFinalize, stringLit}
 
-  def registerInto(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    def f(name: String)(builder: Seq[Expression] => Expression): Unit =
-      reg.createOrReplaceTempFunction(name, builder, "built-in")
+  val functions = FunctionTable.define(this) { f =>
     // ---- scalar date/time/casts --------------------------------------
     f("toDate") { es => Cast(es.head, DateType) }
     f("toStartOfHour") { es => TruncTimestamp(Literal("HOUR"), es.head) }

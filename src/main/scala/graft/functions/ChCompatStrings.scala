@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
@@ -17,10 +16,7 @@ private[functions] object ChCompatStrings {
 
   import ChCompat.{onlyIf, chFormatToJava, hllState, hllMerge, medianMerged, medianFinalize, stringLit}
 
-  def registerInto(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    def f(name: String)(builder: Seq[Expression] => Expression): Unit =
-      reg.createOrReplaceTempFunction(name, builder, "built-in")
+  val functions = FunctionTable.define(this) { f =>
     // ---- CH URL functions (composed on ParseUrl — codegen'd java.net
     // parsing, no UDF). CH returns '' where java yields null/absent, so
     // every part is coalesced onto ''. Divergence notes: no public-suffix

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -57,17 +57,16 @@ case class ComputeOnce(child: Expression) extends UnaryExpression {
 }
 
 object ComputeOnce {
-  def register(spark: SparkSession): Unit =
-    Registration.once(spark, "ComputeOnce") {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "compute_once", es => {
-          require(es.length == 1, "usage: compute_once(expr)")
-          ComputeOnce(es.head)
-        }, "built-in")
+  val functions = FunctionTable.define(this) { f =>
+    f("compute_once") { es =>
+      require(es.length == 1, "usage: compute_once(expr)")
+      ComputeOnce(es.head)
     }
+  }
 
   /** Pin `c`'s evaluation to where it is projected (see class doc).
-    * Requires [[register]] on the session.
+    * Requires [[ChCompat.register]] (or [[graft.GraftExtensions]]) on the
+    * session.
     */
   def once(c: Column): Column = call_function("compute_once", c)
 }

@@ -2,7 +2,7 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -29,11 +29,9 @@ object ForEach {
 
   private val ops = Set("sum", "min", "max", "avg")
 
-  def register(spark: SparkSession): Unit = Registration.once(spark, "ForEach") {
-    val reg = spark.sessionState.functionRegistry
+  val functions = FunctionTable.define(this) { f =>
     for (op <- ops)
-      reg.createOrReplaceTempFunction(s"${op}ForEach",
-        es => ForEachAgg(es.head, op).toAggregateExpression(), "built-in")
+      f(s"${op}ForEach")(es => ForEachAgg(es.head, op).toAggregateExpression())
   }
 
   def sum_foreach(c: Column): Column = call_function("sumForEach", c)

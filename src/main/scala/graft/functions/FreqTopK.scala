@@ -4,7 +4,7 @@ import java.nio.ByteBuffer
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
@@ -53,11 +53,9 @@ object FreqTopK {
     FreqTopKAgg(es.head, k, valuesOnly, weight = Some(es(1))).toAggregateExpression()
   }
 
-  def register(spark: SparkSession): Unit = Registration.once(spark, "FreqTopK") {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "freq_topk", es => buildAgg(es, valuesOnly = false), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "freq_topk_weighted", es => buildWeighted(es, valuesOnly = false), "built-in")
+  val functions = FunctionTable.define(this) { f =>
+    f("freq_topk")(es => buildAgg(es, valuesOnly = false))
+    f("freq_topk_weighted")(es => buildWeighted(es, valuesOnly = false))
   }
 
   /** Frequent items with estimates: array<struct<value, est, err>>. */

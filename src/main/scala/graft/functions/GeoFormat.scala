@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -24,11 +23,7 @@ object GeoFormat {
   val chRadius = 6372797.560856
   val wgsMeanRadius = 6371008.8
 
-  def register(spark: SparkSession): Unit = Registration.once(spark, "GeoFormat") {
-    val reg = spark.sessionState.functionRegistry
-    def f(name: String)(b: Seq[Expression] => Expression): Unit =
-      reg.createOrReplaceTempFunction(name, b, "built-in")
-
+  val functions = FunctionTable.define(this) { f =>
     f("greatCircleDistance") { es => HaversineExpr(es, chRadius) }
     f("geoDistance") { es => HaversineExpr(es, wgsMeanRadius) }
     f("geohashEncode") { es =>

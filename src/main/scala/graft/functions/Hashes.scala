@@ -2,7 +2,7 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -70,11 +70,7 @@ object Hashes {
     "intHash64" -> ChHashAlgo.IntHash64,
     "javaHash" -> ChHashAlgo.JavaHash)
 
-  def register(spark: SparkSession): Unit = Registration.once(spark, "Hashes") {
-    val reg = spark.sessionState.functionRegistry
-    def f(name: String)(builder: Seq[Expression] => Expression): Unit =
-      reg.createOrReplaceTempFunction(name, builder, "built-in")
-
+  val functions = FunctionTable.define(this) { f =>
     algos.foreach { case (name, algo) =>
       f(name) { es =>
         require(es.length == 1, s"usage: $name(x)")

@@ -2,7 +2,6 @@ package graft.functions
 
 import java.nio.charset.{CharsetDecoder, CodingErrorAction, StandardCharsets}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GetJsonObject, LengthOfJsonArray, Literal, RegExpReplace}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -30,11 +29,7 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object HtmlText {
 
-  def register(spark: SparkSession): Unit = Registration.once(spark, "HtmlText") {
-    val reg = spark.sessionState.functionRegistry
-    def f(name: String)(b: Seq[Expression] => Expression): Unit =
-      reg.createOrReplaceTempFunction(name, b, "built-in")
-
+  val functions = FunctionTable.define(this) { f =>
     f("extractTextFromHTML") { es => HtmlTextExpr(es.head) }
     f("extractAllGroupsHorizontal") { es =>
       ExtractGroupsExpr(es(0), es(1), horizontal = true)

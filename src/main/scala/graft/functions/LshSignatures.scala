@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, XxHash64Function}
@@ -24,14 +24,13 @@ import org.apache.spark.sql.types._
   */
 object LshSignatures {
 
-  def register(spark: SparkSession): Unit = Registration.once(spark, "LshSignatures") {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "lsh_signatures", es => {
-          require(es.length == 3, "usage: lsh_signatures(vec, tables, bits)")
-          val t = intLit(es(1), "tables")
-          val b = intLit(es(2), "bits")
-          LshSignaturesExpr(es.head, t, b)
-        }, "built-in")
+  val functions = FunctionTable.define(this) { f =>
+    f("lsh_signatures") { es =>
+      require(es.length == 3, "usage: lsh_signatures(vec, tables, bits)")
+      val t = intLit(es(1), "tables")
+      val b = intLit(es(2), "bits")
+      LshSignaturesExpr(es.head, t, b)
+    }
   }
 
   private def intLit(e: Expression, what: String): Int = e match {

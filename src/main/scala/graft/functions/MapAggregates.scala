@@ -4,7 +4,7 @@ import java.nio.ByteBuffer
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -38,11 +38,10 @@ object MapAggregates {
     MapCombineAgg(es(0), es(1), op).toAggregateExpression()
   }
 
-  def register(spark: SparkSession): Unit = Registration.once(spark, "MapAggregates") {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("sumMap", build(_, MapCombineOp.Sum), "built-in")
-    reg.createOrReplaceTempFunction("minMap", build(_, MapCombineOp.Min), "built-in")
-    reg.createOrReplaceTempFunction("maxMap", build(_, MapCombineOp.Max), "built-in")
+  val functions = FunctionTable.define(this) { f =>
+    f("sumMap")(build(_, MapCombineOp.Sum))
+    f("minMap")(build(_, MapCombineOp.Min))
+    f("maxMap")(build(_, MapCombineOp.Max))
   }
 
   def sum_map(keys: Column, values: Column): Column = call_function("sumMap", keys, values)

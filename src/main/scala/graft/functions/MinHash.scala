@@ -2,7 +2,7 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -28,18 +28,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * serialization happens only at the shuffle boundary.
   */
 object MinHash {
-  def register(spark: SparkSession): Unit = Registration.once(spark, "MinHash") {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_agg",
-      exprs => MinHashAggregate(exprs.head,
-        exprs(1).eval(null).asInstanceOf[Number].intValue()),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sig_match_count", exprs => SigMatchCount(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "lsh_buckets", exprs => LshBucketsExpr(exprs.head,
-        exprs(1).eval(null).asInstanceOf[Number].intValue(),
-        exprs(2).eval(null).asInstanceOf[Number].intValue()), "built-in")
+  val functions = FunctionTable.define(this) { f =>
+    f("minhash_agg")(exprs => MinHashAggregate(exprs.head,
+      exprs(1).eval(null).asInstanceOf[Number].intValue()))
+    f("sig_match_count")(exprs => SigMatchCount(exprs(0), exprs(1)))
+    f("lsh_buckets")(exprs => LshBucketsExpr(exprs.head,
+      exprs(1).eval(null).asInstanceOf[Number].intValue(),
+      exprs(2).eval(null).asInstanceOf[Number].intValue()))
   }
 
   /** Signature column: group rows by doc first, one shingle per row. */

@@ -4,7 +4,6 @@ import java.nio.ByteBuffer
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
@@ -31,11 +30,7 @@ import org.apache.spark.sql.types._
   */
 object Moving {
 
-  def register(spark: SparkSession): Unit = Registration.once(spark, "Moving") {
-    val reg = spark.sessionState.functionRegistry
-    def f(name: String)(b: Seq[Expression] => Expression): Unit =
-      reg.createOrReplaceTempFunction(name, b, "built-in")
-
+  val functions = FunctionTable.define(this) { f =>
     f("groupArrayMovingSum") { es =>
       MovingSumAgg(es.head, if (es.length >= 2) es(1) else Literal(0),
         avg = false).toAggregateExpression()

@@ -2,7 +2,7 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -72,17 +72,12 @@ object QuantileSketch {
       s"$what must be a numeric literal, got: $other")
   }
 
-  def register(spark: SparkSession): Unit = Registration.once(spark, "QuantileSketch") {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("quantile_sketch_agg",
-      exprs => QuantileSketchAggregate(exprs.head,
-        if (exprs.length > 1) evalDouble(exprs(1), "quantile_sketch_agg eps") else 0.01),
-      "built-in")
-    reg.createOrReplaceTempFunction("quantile_sketch_merge_agg",
-      exprs => QuantileSketchMergeAggregate(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("quantile_sketch_value",
-      exprs => QuantileSketchValueExpr(exprs.head,
-        evalDouble(exprs(1), "quantile_sketch_value q")), "built-in")
+  val functions = FunctionTable.define(this) { f =>
+    f("quantile_sketch_agg")(exprs => QuantileSketchAggregate(exprs.head,
+      if (exprs.length > 1) evalDouble(exprs(1), "quantile_sketch_agg eps") else 0.01))
+    f("quantile_sketch_merge_agg")(exprs => QuantileSketchMergeAggregate(exprs.head))
+    f("quantile_sketch_value")(exprs => QuantileSketchValueExpr(exprs.head,
+      evalDouble(exprs(1), "quantile_sketch_value q")))
   }
 
   /** quantileTDigestState-role: aggregate doubles into a bounded sketch. */

@@ -4,7 +4,7 @@ import java.nio.ByteBuffer
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
@@ -52,11 +52,9 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object SequenceMatch {
 
-  def register(spark: SparkSession): Unit = Registration.once(spark, "SequenceMatch") {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sequenceMatch", es => build(es, count = false), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sequenceCount", es => build(es, count = true), "built-in")
+  val functions = FunctionTable.define(this) { f =>
+    f("sequenceMatch")(es => build(es, count = false))
+    f("sequenceCount")(es => build(es, count = true))
   }
 
   private def build(es: Seq[Expression], count: Boolean) = {

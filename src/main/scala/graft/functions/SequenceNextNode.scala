@@ -5,7 +5,6 @@ import java.nio.charset.StandardCharsets
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -32,20 +31,18 @@ import org.apache.spark.unsafe.types.UTF8String
   * are partitioning-independent (CH leaves equal-ts order undefined).
   */
 object SequenceNextNode {
-  def register(spark: SparkSession): Unit = Registration.once(spark, "SequenceNextNode") {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sequenceNextNode",
-      es => {
-        def lit(e: Expression, what: String): String = e match {
-          case l if l.foldable => String.valueOf(l.eval()).toLowerCase
-          case other => throw new IllegalArgumentException(
-            s"sequenceNextNode: $what must be a string literal, got $other")
-        }
-        require(es.length >= 6,
-          "sequenceNextNode(direction, base, ts, event, base_cond, cond1, ...)")
-        SequenceNextNodeAgg(lit(es(0), "direction"), lit(es(1), "base"),
-          es(2), es(3), es(4), es.drop(5)).toAggregateExpression()
-      }, "built-in")
+  val functions = FunctionTable.define(this) { f =>
+    f("sequenceNextNode") { es =>
+      def lit(e: Expression, what: String): String = e match {
+        case l if l.foldable => String.valueOf(l.eval()).toLowerCase
+        case other => throw new IllegalArgumentException(
+          s"sequenceNextNode: $what must be a string literal, got $other")
+      }
+      require(es.length >= 6,
+        "sequenceNextNode(direction, base, ts, event, base_cond, cond1, ...)")
+      SequenceNextNodeAgg(lit(es(0), "direction"), lit(es(1), "base"),
+        es(2), es(3), es(4), es.drop(5)).toAggregateExpression()
+    }
   }
 }
 

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, XxHash64Function}
@@ -23,12 +23,11 @@ import org.apache.spark.sql.types._
   */
 object Simhash {
 
-  def register(spark: SparkSession): Unit = Registration.once(spark, "Simhash") {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "simhash64", es => {
-          require(es.length == 1, "usage: simhash64(tokens)")
-          Simhash64Expr(es.head)
-        }, "built-in")
+  val functions = FunctionTable.define(this) { f =>
+    f("simhash64") { es =>
+      require(es.length == 1, "usage: simhash64(tokens)")
+      Simhash64Expr(es.head)
+    }
   }
 
   def simhash64(toks: Column): Column = call_function("simhash64", toks)

@@ -7,7 +7,6 @@ import scala.collection.mutable
 
 import org.apache.datasketches.memory.Memory
 import org.apache.datasketches.theta.{CompactSketch, SetOperation, Sketches, UpdateSketch}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
@@ -33,11 +32,7 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object SketchAggs {
 
-  def register(spark: SparkSession): Unit = Registration.once(spark, "SketchAggs") {
-    val reg = spark.sessionState.functionRegistry
-    def f(name: String)(b: Seq[Expression] => Expression): Unit =
-      reg.createOrReplaceTempFunction(name, b, "built-in")
-
+  val functions = FunctionTable.define(this) { f =>
     f("histogram") { es =>
       HistogramAgg(es(0), if (es.length >= 2) es(1) else Literal(10))
         .toAggregateExpression()

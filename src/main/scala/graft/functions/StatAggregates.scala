@@ -5,7 +5,7 @@ import java.nio.charset.StandardCharsets
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -40,11 +40,7 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object StatAggregates {
 
-  def register(spark: SparkSession): Unit = Registration.once(spark, "StatAggregates") {
-    val reg = spark.sessionState.functionRegistry
-    def f(name: String)(b: Seq[Expression] => Expression): Unit =
-      reg.createOrReplaceTempFunction(name, b, "built-in")
-
+  val functions = FunctionTable.define(this) { f =>
     f("entropy") { es => EntropyAgg(es.head).toAggregateExpression() }
     f("cramersV") { es => AssocAgg(es(0), es(1), "cramersV").toAggregateExpression() }
     f("cramersVBiasCorrected") { es =>

@@ -5,7 +5,6 @@ import java.nio.charset.StandardCharsets
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -34,10 +33,7 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object StatMatrix {
 
-  def register(spark: SparkSession): Unit = Registration.once(spark, "StatMatrix") {
-    val reg = spark.sessionState.functionRegistry
-    def f(name: String)(b: Seq[Expression] => Expression): Unit =
-      reg.createOrReplaceTempFunction(name, b, "built-in")
+  val functions = FunctionTable.define(this) { f =>
     for (mode <- Seq("corr", "covarSamp", "covarPop"))
       f(s"${mode}Matrix") { es =>
         CoMomentMatrixAgg(es, mode).toAggregateExpression()

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, Levenshtein}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.trees.BinaryLike
@@ -23,11 +23,7 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object StringDistance {
 
-  def register(spark: SparkSession): Unit = Registration.once(spark, "StringDistance") {
-    val reg = spark.sessionState.functionRegistry
-    def f(name: String)(b: Seq[Expression] => Expression): Unit =
-      reg.createOrReplaceTempFunction(name, b, "built-in")
-
+  val functions = FunctionTable.define(this) { f =>
     f("editDistance") { es => Levenshtein(es(0), es(1)) }
     f("levenshteinDistance") { es => Levenshtein(es(0), es(1)) }
     f("damerauLevenshteinDistance") { es => StringDistExpr(es(0), es(1), "damerau") }

@@ -4,7 +4,7 @@ import java.nio.ByteBuffer
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
@@ -28,17 +28,16 @@ import org.apache.spark.sql.types._
   */
 object TopK {
 
-  def register(spark: SparkSession): Unit = Registration.once(spark, "TopK") {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "topk_by_score", exprs => {
-          require(exprs.length == 2, "topk_by_score(struct(score, id), k)")
-          val k = exprs(1) match {
-            case Literal(v: Int, IntegerType) => v
-            case other => throw new IllegalArgumentException(
-              s"topk_by_score: k must be an integer literal, got $other")
-          }
-          TopKByScore(exprs(0), k)
-        }, "built-in")
+  val functions = FunctionTable.define(this) { f =>
+    f("topk_by_score") { exprs =>
+      require(exprs.length == 2, "topk_by_score(struct(score, id), k)")
+      val k = exprs(1) match {
+        case Literal(v: Int, IntegerType) => v
+        case other => throw new IllegalArgumentException(
+          s"topk_by_score: k must be an integer literal, got $other")
+      }
+      TopKByScore(exprs(0), k)
+    }
   }
 
   /** `scoreAndId` must be `struct(score: double, id: bigint)`. */

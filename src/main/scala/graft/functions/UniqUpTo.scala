@@ -4,7 +4,7 @@ import java.nio.ByteBuffer
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
@@ -29,19 +29,18 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object UniqUpTo {
 
-  def register(spark: SparkSession): Unit = Registration.once(spark, "UniqUpTo") {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "uniqUpTo", es => {
-          require(es.length == 2, "usage: uniqUpTo(N, x)")
-          val n = es.head match {
-            case Literal(v: Int, IntegerType) => v
-            case Literal(v: Long, LongType) => v.toInt
-            case other => throw new IllegalArgumentException(
-              s"uniqUpTo: N must be an integer literal, got $other")
-          }
-          require(n >= 1 && n <= 1000000, s"uniqUpTo: N out of range: $n")
-          UniqUpToAgg(es(1), n).toAggregateExpression()
-        }, "built-in")
+  val functions = FunctionTable.define(this) { f =>
+    f("uniqUpTo") { es =>
+      require(es.length == 2, "usage: uniqUpTo(N, x)")
+      val n = es.head match {
+        case Literal(v: Int, IntegerType) => v
+        case Literal(v: Long, LongType) => v.toInt
+        case other => throw new IllegalArgumentException(
+          s"uniqUpTo: N must be an integer literal, got $other")
+      }
+      require(n >= 1 && n <= 1000000, s"uniqUpTo: N out of range: $n")
+      UniqUpToAgg(es(1), n).toAggregateExpression()
+    }
   }
 
   def uniq_up_to(n: Int, x: Column): Column = call_function("uniqUpTo", lit(n), x)

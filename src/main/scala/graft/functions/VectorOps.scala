@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -19,20 +19,12 @@ import org.apache.spark.sql.types._
   * stay bit-equal to the DuckDB oracle's mirrored fold.
   */
 object VectorOps {
-  def register(spark: SparkSession): Unit = Registration.once(spark, "VectorOps") {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "cosine_sim", exprs => CosineSimilarity(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "mean_vector", exprs => MeanVectorAggregate(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "l2_norm", exprs => L2Norm(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "l2_normalize", exprs => L2Normalize(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "quantize_int8", exprs => QuantizeInt8(exprs.head), "built-in")
-    LshSignatures.register(spark)
-    VectorQuant.register(spark)
+  val functions = FunctionTable.define(this) { f =>
+    f("cosine_sim")(exprs => CosineSimilarity(exprs(0), exprs(1)))
+    f("mean_vector")(exprs => MeanVectorAggregate(exprs.head))
+    f("l2_norm")(exprs => L2Norm(exprs.head))
+    f("l2_normalize")(exprs => L2Normalize(exprs.head))
+    f("quantize_int8")(exprs => QuantizeInt8(exprs.head))
   }
 
   /** Cosine similarity of two float/double array columns, in double. */

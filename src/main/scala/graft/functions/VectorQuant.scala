@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
@@ -30,38 +30,37 @@ import org.apache.spark.sql.types._
   */
 object VectorQuant {
 
-  def register(spark: SparkSession): Unit = Registration.once(spark, "VectorQuant") {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("nearest_centroids", es => {
+  val functions = FunctionTable.define(this) { f =>
+    f("nearest_centroids") { es =>
       require(es.length == 3, "usage: nearest_centroids(vec, centroidsLit, n)")
       val (cids, cents) = centroidsLit(es(1))
       NearestCentroidsExpr(es.head, cids, cents, intLit(es(2), "n"))
-    }, "built-in")
-    reg.createOrReplaceTempFunction("pq_nearest_code", es => {
+    }
+    f("pq_nearest_code") { es =>
       require(es.length == 3, "usage: pq_nearest_code(mIdx, subvec, codebookLit)")
       PqNearestCodeExpr(es(0), es(1), codebookLit(es(2)))
-    }, "built-in")
-    reg.createOrReplaceTempFunction("pq_encode", es => {
+    }
+    f("pq_encode") { es =>
       require(es.length == 2, "usage: pq_encode(vec, codebookLit)")
       PqEncodeExpr(es.head, codebookLit(es(1)))
-    }, "built-in")
-    reg.createOrReplaceTempFunction("pq_lut", es => {
+    }
+    f("pq_lut") { es =>
       require(es.length == 2, "usage: pq_lut(vec, codebookLit)")
       PqLutExpr(es.head, codebookLit(es(1)))
-    }, "built-in")
-    reg.createOrReplaceTempFunction("pq_decode", es => {
+    }
+    f("pq_decode") { es =>
       require(es.length == 2, "usage: pq_decode(codes, codebookLit)")
       PqDecodeExpr(es.head, codebookLit(es(1)))
-    }, "built-in")
-    reg.createOrReplaceTempFunction("pq_adc_dot", es => {
+    }
+    f("pq_adc_dot") { es =>
       require(es.length == 2, "usage: pq_adc_dot(codes, lut)")
       PqAdcDotExpr(es(0), es(1))
-    }, "built-in")
-    reg.createOrReplaceTempFunction("pq_recon_error", es => {
+    }
+    f("pq_recon_error") { es =>
       require(es.length == 2, "usage: pq_recon_error(vec, codebookLit)")
       PqReconErrorExpr(es.head, codebookLit(es(1)))
-    }, "built-in")
-    reg.createOrReplaceTempFunction("pq_adc_score", es => {
+    }
+    f("pq_adc_score") { es =>
       require(es.length == 4, "usage: pq_adc_score(codes, lut, pn, codebookLit)")
       val cb = codebookLit(es(3))
       // |centroid|² per (m, code), same double promotion as Codebook.cnorm2
@@ -71,7 +70,7 @@ object VectorQuant {
         s
       })
       PqAdcScoreExpr(es(0), es(1), es(2), cnorm2)
-    }, "built-in")
+    }
   }
 
   /** Ids of the `n` nearest centroids to `vec` by cosine, ordered by

@@ -4,7 +4,7 @@ import java.nio.ByteBuffer
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
@@ -46,34 +46,33 @@ import org.apache.spark.sql.types._
   */
 object WindowFunnel {
 
-  def register(spark: SparkSession): Unit = Registration.once(spark, "WindowFunnel") {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "windowFunnel", es => {
-          require(es.length >= 3,
-            "usage: windowFunnel(ts, windowSeconds, ['mode', ...] cond1, ...)")
-          val window = es(1) match {
-            case Literal(v: Int, IntegerType) => v.toLong
-            case Literal(v: Long, LongType) => v
-            case other => throw new IllegalArgumentException(
-              s"windowFunnel: windowSeconds must be an integer literal, got $other")
-          }
-          // CH's mode arguments ride between the window and the conditions
-          // as string literals ('strict_order' / 'strict_dedup' /
-          // 'strict_increase')
-          val (modeLits, conds) = es.drop(2).span {
-            case Literal(_, StringType) => true
-            case _ => false
-          }
-          val modes = modeLits.map {
-            case Literal(s, StringType) => String.valueOf(s)
-          }.toSet
-          val known = Set("strict_order", "strict_dedup", "strict_increase")
-          val unknown = modes -- known
-          require(unknown.isEmpty, s"windowFunnel: unknown modes $unknown")
-          WindowFunnelAgg(es.head, window, conds,
-            strictOrder = modes("strict_order"),
-            strictDedup = modes("strict_dedup")).toAggregateExpression()
-        }, "built-in")
+  val functions = FunctionTable.define(this) { f =>
+    f("windowFunnel") { es =>
+      require(es.length >= 3,
+        "usage: windowFunnel(ts, windowSeconds, ['mode', ...] cond1, ...)")
+      val window = es(1) match {
+        case Literal(v: Int, IntegerType) => v.toLong
+        case Literal(v: Long, LongType) => v
+        case other => throw new IllegalArgumentException(
+          s"windowFunnel: windowSeconds must be an integer literal, got $other")
+      }
+      // CH's mode arguments ride between the window and the conditions
+      // as string literals ('strict_order' / 'strict_dedup' /
+      // 'strict_increase')
+      val (modeLits, conds) = es.drop(2).span {
+        case Literal(_, StringType) => true
+        case _ => false
+      }
+      val modes = modeLits.map {
+        case Literal(s, StringType) => String.valueOf(s)
+      }.toSet
+      val known = Set("strict_order", "strict_dedup", "strict_increase")
+      val unknown = modes -- known
+      require(unknown.isEmpty, s"windowFunnel: unknown modes $unknown")
+      WindowFunnelAgg(es.head, window, conds,
+        strictOrder = modes("strict_order"),
+        strictDedup = modes("strict_dedup")).toAggregateExpression()
+    }
   }
 
   def window_funnel(ts: Column, windowSeconds: Long, conds: Column*): Column =

@@ -41,6 +41,12 @@ object Multimodal {
       StructField("height", IntegerType),
       StructField("duration_ms", LongType))))))
 
+  val functions = graft.functions.FunctionTable.define(this) { f =>
+    f("video_samples")(es => VideoSamplesExpr(es.head))
+    f("image_meta")(es => ImageMetaExpr(es.head))
+    f("media_meta")(es => MediaMetaExpr(es.head))
+  }
+
   /** STUB decoder for the formats that need external codec libraries
     * (inter-frame video, perceptual audio codecs): a deterministic
     * 16-bin byte histogram, L1-normalized — shape-compatible with the
@@ -282,11 +288,7 @@ object Multimodal {
     * pipeline needs.
     */
   def sampleFrames(media: DataFrame, frames: Int): DataFrame = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    graft.functions.Registration.once(spark, "video_samples") {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "video_samples", exprs => VideoSamplesExpr(exprs.head), "built-in")
-    }
+    graft.functions.ChCompat.register(media.sparkSession)
     val pick = s"element_at(__sync, cast(frame_idx * __n / $frames as int) + 1)"
     val chunked = media
       .withColumn("__sync", call_function("video_samples", col("blob")))
@@ -327,11 +329,7 @@ object Multimodal {
     * only codec-library formats behind [[decodeStub]]'s seam.
     */
   def imageMeta(blob: Column): Column = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    graft.functions.Registration.once(spark, "image_meta") {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "image_meta", exprs => ImageMetaExpr(exprs.head), "built-in")
-    }
+    graft.functions.ChCompat.register(org.apache.spark.sql.SparkSession.active)
     call_function("image_meta", blob)
   }
 
@@ -346,11 +344,7 @@ object Multimodal {
     * stay behind [[decodeStub]]'s seam.
     */
   def mediaMeta(blob: Column): Column = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    graft.functions.Registration.once(spark, "media_meta") {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "media_meta", exprs => MediaMetaExpr(exprs.head), "built-in")
-    }
+    graft.functions.ChCompat.register(org.apache.spark.sql.SparkSession.active)
     call_function("media_meta", blob)
   }
 }

@@ -65,7 +65,7 @@ final case class MaxMetric(name: String, src: Column) extends Metric {
 
 /** AggregateFunction(groupBitmap, UInt32): exact UV as a RoaringBitmap state
   * (ref dwm.mainpage_stat_mv_dis.sql:134-139). Finalizes to cardinality.
-  * Requires Bitmaps.register on the session (StateTable does this).
+  * Requires `ChCompat.register` on the session (StateTable does this).
   */
 final case class BitmapUvMetric(name: String, src: Column) extends Metric {
   val state: Column = Bitmaps.bitmap_agg(src).as(name)
@@ -96,7 +96,7 @@ final case class MedianExactMetric(name: String, src: Column) extends Metric {
   * unbounded value array (SCALE.md §3). State is a GK summary capped at
   * the compress threshold regardless of group size (documented divergence:
   * GK, not t-digest — the bounded/mergeable/ε-approximate contract is the
-  * same). Finalizes to the `q`-quantile. Requires QuantileSketch.register
+  * same). Finalizes to the `q`-quantile. Requires `ChCompat.register`
   * (StateTable does this).
   */
 final case class QuantileSketchMetric(name: String, src: Column,
@@ -111,7 +111,7 @@ final case class QuantileSketchMetric(name: String, src: Column,
   * state (round-8 StatAggregates) — the MV-incremental form of the
   * one-shot `entropy` aggregate; merge folds maps, finalize computes the
   * bit-exact same value (sorted-order reduction). State size ∝ the
-  * group's distinct values. Requires StatAggregates.register (StateTable
+  * group's distinct values. Requires `ChCompat.register` (StateTable
   * does this).
   */
 final case class EntropyMetric(name: String, src: Column) extends Metric {
@@ -125,7 +125,7 @@ final case class EntropyMetric(name: String, src: Column) extends Metric {
   * is the sorted (keys, values) struct, and merging is just sumMap over
   * the stored arrays — the aggregate is its own merge, so the OPTIMIZE-
   * FINAL invariant holds by construction. State size ∝ the group's
-  * distinct keys. Requires MapAggregates.register (StateTable does this).
+  * distinct keys. Requires `ChCompat.register` (StateTable does this).
   */
 final case class SumMapMetric(name: String, keys: Column, values: Column) extends Metric {
   val state: Column = graft.functions.MapAggregates.sum_map(keys, values).as(name)

@@ -139,11 +139,11 @@ object Projection {
     * optimizer batches per query.
     */
   def attach(spark: SparkSession): Unit = synchronized {
-    // the extensions marker is set by an injected RESOLUTION rule builder,
-    // which only runs once the analyzer is built — force that first, or an
-    // attach() before the session's first query would miss the marker and
-    // install the duplicate copy anyway
-    spark.sessionState.analyzer
+    // the extensions marker is set by the injected optimizer-rule builder,
+    // which Spark only runs when it assembles the optimizer's rules — do
+    // that first, or an attach() before the session's first query would
+    // miss the marker and install the duplicate copy anyway
+    spark.sessionState.optimizer.extendedOperatorOptimizationRules
     var cur = spark.experimental.extraOptimizations
     if (!cur.exists(_.isInstanceOf[Store])) cur = cur :+ new Store
     if (!cur.exists(_.isInstanceOf[ProjectionRewrite]) &&

@@ -6,7 +6,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.Bitmaps
+import graft.functions.ChCompat
 
 /** A persisted partial-aggregate state table — the Spark-native analog of a
   * ReplicatedAggregatingMergeTree store behind a materialized view
@@ -44,10 +44,7 @@ final class StateTable(
     val partitionCol: String,
     val metrics: Seq[Metric]) {
 
-  Bitmaps.register(spark)
-  graft.functions.MapAggregates.register(spark)
-  graft.functions.QuantileSketch.register(spark)
-  graft.functions.StatAggregates.register(spark)
+  ChCompat.register(spark)
   recoverFromCompact()
   recoverInFlightIngest()
 

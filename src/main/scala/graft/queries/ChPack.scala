@@ -21,7 +21,6 @@ object ChPack {
     // (ref dwm.mainpage_stat_mv_dis.sql:28-70, exact-bitmap variant :184-200):
     // inner -State at (day,hour,event_type), outer -Merge to (day,event_type).
     "q23_ch_dialect_mv" -> { (s, dir) =>
-      ChCompat.register(s)
       Tables(s, dir).eventsWithDefaults.createOrReplaceTempView("graft_ch_events")
       s.sql(
         """SELECT day, event_type,
@@ -76,7 +75,6 @@ object ChPack {
     // add*/subtract* family, toUnixTimestamp, Sunday/Monday week starts,
     // toDayOfWeek/Year, toStartOfYear — plus avgIf/avgWeighted per day.
     "q118_ch_date_math" -> { (s, dir) =>
-      ChCompat.register(s)
       Tables(s, dir).events.createOrReplaceTempView("graft_dm_events")
       s.sql(graft.engine.ChSql(
         """SELECT event_id,
@@ -106,7 +104,6 @@ object ChPack {
     // avgIf / avgWeighted per day over events — the missing -If/-Weighted
     // average aggregates next to sumIf/countIf/minIf/maxIf.
     "q119_avg_family" -> { (s, dir) =>
-      ChCompat.register(s)
       Tables(s, dir).events.createOrReplaceTempView("graft_avg_events")
       s.sql(
         """SELECT toDate(ts) AS day,
@@ -123,7 +120,6 @@ object ChPack {
     // DuckDB's `upper(substr(md5(x),1,16))` value-for-value — gating the
     // expression + codegen + the byte-level MD5/endianness convention.
     "q121_half_md5" -> { (s, dir) =>
-      ChCompat.register(s)
       Tables(s, dir).documents.createOrReplaceTempView("graft_hm_docs")
       s.sql(
         """SELECT doc_id,
@@ -153,7 +149,6 @@ object ChPack {
     // per uid). A violated invariant empties the oracle's result, failing
     // the row-count compare — DuckDB is the verifier, not a mirror.
     "q170_shard_parity" -> { (s, dir) =>
-      ChCompat.register(s)
       val stage = s"/tmp/graft_q170_stage_${new java.io.File(dir).getName}"
       Tables(s, dir).events.select(col("event_id"), col("user_id"))
         .withColumn("sip_bucket", expr("pmod(sipHash64(user_id), 16)"))
@@ -167,7 +162,6 @@ object ChPack {
     },
 
     "q122_hash_shard" -> { (s, dir) =>
-      ChCompat.register(s)
       Tables(s, dir).events.createOrReplaceTempView("graft_hs_events")
       s.sql(graft.engine.ChSql(
         """SELECT pmod(sipHash64(user_id), 16)  AS sip_bucket,
@@ -187,7 +181,6 @@ object ChPack {
     // the whole partial/merge/eval path of the aggregate.
     "q47_freq_topk" -> { (s, dir) =>
       import org.apache.spark.sql.types.IntegerType
-      graft.functions.FreqTopK.register(s)
       Tables(s, dir).eventsWithDefaults
         .groupBy("day")
         .agg(graft.functions.FreqTopK.freq_topk(col("event_type"), 3).as("t"))
@@ -203,7 +196,6 @@ object ChPack {
     // the bitmap funnel (q21), via the composed boolean-Max aggregate.
     // (Array indexing is Spark's 0-based form.)
     "q48_retention" -> { (s, dir) =>
-      ChCompat.register(s)
       Tables(s, dir).eventsWithDefaults.createOrReplaceTempView("graft_ret_events")
       s.sql(
         """SELECT day,
@@ -243,7 +235,6 @@ object ChPack {
     // testdata, so the oracle's ts-order mirrors the aggregate's
     // (ts, mask)-order exactly.
     "q66_sequence_match" -> { (s, dir) =>
-      ChCompat.register(s)
       Tables(s, dir).eventsWithDefaults.createOrReplaceTempView("graft_seq_events")
       s.sql(
         """SELECT day,
@@ -273,7 +264,6 @@ object ChPack {
     // Covers saturated (N=10 over users), unsaturated (N=5000), and
     // string-typed (N=3 over event types) paths in one query.
     "q68_uniq_up_to" -> { (s, dir) =>
-      ChCompat.register(s)
       Tables(s, dir).eventsWithDefaults.createOrReplaceTempView("graft_upto_events")
       s.sql(
         """SELECT day,
@@ -292,7 +282,6 @@ object ChPack {
     "q69_topk_weighted" -> { (s, dir) =>
       import org.apache.spark.sql.functions._
       import org.apache.spark.sql.types.{IntegerType, LongType}
-      graft.functions.FreqTopK.register(s)
       Tables(s, dir).eventsWithDefaults
         .withColumn("w", floor(col("value") * 1000).cast(LongType))
         .groupBy("day")
@@ -309,7 +298,6 @@ object ChPack {
     "q70_sum_map" -> { (s, dir) =>
       import org.apache.spark.sql.functions._
       import org.apache.spark.sql.types.LongType
-      graft.functions.MapAggregates.register(s)
       Tables(s, dir).eventsWithDefaults
         .withColumn("w", floor(col("value") * 1000).cast(LongType))
         .groupBy("day")
@@ -329,7 +317,6 @@ object ChPack {
     // row-expanding FROM modifier (bare form — the array column is
     // replaced by its elements).
     "q95_array_join_clause" -> { (s, dir) =>
-      graft.text.TextFunctions.register(s)
       Tables(s, dir).documents.filter(col("doc_id") < 50)
         .select(col("doc_id"),
           graft.text.TextFunctions.tokens(col("text")).as("tok"))
@@ -357,7 +344,6 @@ object ChPack {
     // the _table virtual column attributing each row — counts and exact
     // id ranges per shard under the gate.
     "q92_merge_tables" -> { (s, dir) =>
-      ChCompat.register(s)
       val e = Tables(s, dir).events
       e.filter(col("event_id") % 3 === 0).createOrReplaceTempView("graft_evt_shard_a")
       e.filter(col("event_id") % 3 === 1).createOrReplaceTempView("graft_evt_shard_b")
@@ -387,7 +373,6 @@ object ChPack {
     // — GLOBAL strips (Catalyst owns distribution), ANY resolves through
     // ChAnyJoin, quantilesExact aggregates the flat spelling.
     "q90_quantiles_multi" -> { (s, dir) =>
-      ChCompat.register(s)
       val t = Tables(s, dir)
       t.lineitem.select(col("l_orderkey"), col("l_quantity"), col("l_extendedprice"))
         .createOrReplaceTempView("graft_qm_lines")
@@ -409,7 +394,6 @@ object ChPack {
     },
 
     "q71_ch_scalars" -> { (s, dir) =>
-      ChCompat.register(s)
       Tables(s, dir).events.createOrReplaceTempView("graft_scalar_events")
       s.sql(
         """SELECT event_id,
@@ -431,7 +415,6 @@ object ChPack {
     // arrayDistinct/arraySort/arraySlice composition — all HOF/array
     // expressions, gated row-exact.
     "q72_ch_arrays" -> { (s, dir) =>
-      ChCompat.register(s)
       Tables(s, dir).documents
         .select(col("doc_id"), graft.text.TextFunctions.tokens(col("text")).as("toks"))
         .createOrReplaceTempView("graft_arr_docs")
@@ -488,7 +471,6 @@ object ChPack {
     // per-doc token-length arrays — the per-row fold/index-lambda family
     // a series analyst leans on; all expression-composed, bigint lanes.
     "q103_ch_array_math" -> { (s, dir) =>
-      ChCompat.register(s)
       Tables(s, dir).documents
         .select(col("doc_id"), graft.text.TextFunctions.tokens(col("text")).as("toks"))
         .createOrReplaceTempView("graft_arrm_docs")
@@ -514,7 +496,6 @@ object ChPack {
     // lowerings (q103's machinery), here over the same token-length
     // lanes so every supported name is value-gated at once.
     "q107_array_reduce" -> { (s, dir) =>
-      ChCompat.register(s)
       Tables(s, dir).documents
         .select(col("doc_id"), graft.text.TextFunctions.tokens(col("text")).as("toks"))
         .createOrReplaceTempView("graft_arrr_docs")
@@ -541,7 +522,6 @@ object ChPack {
     // ⇒ existence-equivalent; no (user, ts) ties in the testdata). Deeper
     // funnels are brute-force-verified in WindowFunnelSpec.
     "q73_window_funnel" -> { (s, dir) =>
-      ChCompat.register(s)
       Tables(s, dir).eventsWithDefaults.createOrReplaceTempView("graft_wf_events")
       s.sql(
         """SELECT day,
@@ -561,7 +541,6 @@ object ChPack {
     // SQL dictGet enrichment (ref dim.dict_user_dim.sql:24-27): broadcast
     // point-lookup, no shuffle of the fact side beyond the aggregation.
     "q24_dictget_sql" -> { (s, dir) =>
-      ChCompat.register(s)
       val t = Tables(s, dir)
       Dictionaries.register(s, "dim.dict_nation",
         t.nation.select(col("n_nationkey"), col("n_name")), keyCol = "n_nationkey")
@@ -581,7 +560,6 @@ object ChPack {
     // TOTALS becomes GROUPING SETS ((keys), ()) — the grand-total row's
     // keys are NULL (the Spark/DuckDB convention; CH renders defaults).
     "q85_with_totals" -> { (s, dir) =>
-      ChCompat.register(s)
       Tables(s, dir).events.createOrReplaceTempView("graft_totals_events")
       s.sql(graft.engine.ChSql(
         """SELECT event_type, count(*) AS n, uniqExact(user_id) AS uv
@@ -598,7 +576,6 @@ object ChPack {
     // GROUP BY. Super-aggregate keys are NULL (Spark/DuckDB convention;
     // CH renders type defaults — same documented divergence as TOTALS).
     "q106_with_rollup" -> { (s, dir) =>
-      ChCompat.register(s)
       Tables(s, dir).lineitem.createOrReplaceTempView("graft_ru_lineitem")
       s.sql(graft.engine.ChSql(
         """SELECT l_returnflag, l_linestatus,
@@ -616,7 +593,6 @@ object ChPack {
     // part from the raw pieces — an independent construction/parse
     // cross-check). Expression-only, codegen'd, no UDF.
     "q97_url_funcs" -> { (s, dir) =>
-      ChCompat.register(s)
       Tables(s, dir).customer.createOrReplaceTempView("graft_url_customer")
       s.sql(
         """SELECT url,
@@ -646,7 +622,6 @@ object ChPack {
     // countSubstrings / match) over the documents corpus; booleans cast
     // to BIGINT so both engines hash the same ints.
     "q98_string_search" -> { (s, dir) =>
-      ChCompat.register(s)
       s.read.parquet(dir + "/documents.parquet").createOrReplaceTempView("graft_ss_docs")
       s.sql(
         """SELECT doc_id,
@@ -678,7 +653,6 @@ object ChPack {
     // null counts, original rows untouched; the CH report-densification
     // modifier a time-series user expects.
     "q84_with_fill" -> { (s, dir) =>
-      ChCompat.register(s)
       Tables(s, dir).events.createOrReplaceTempView("graft_fill_events")
       graft.operators.WithFill.sql(s,
         """SELECT toHour(ts) AS h, count(*) AS purchases
@@ -692,7 +666,6 @@ object ChPack {
     // linear per-step accumulation) — CH evaluates the expression against
     // the PREVIOUS row, so `max_uid + 10` climbs by 10 per filled hour.
     "q116_fill_interpolate" -> { (s, dir) =>
-      ChCompat.register(s)
       Tables(s, dir).events.createOrReplaceTempView("graft_fill2_events")
       graft.operators.WithFill.sql(s,
         """SELECT toHour(ts) AS h, count(*) AS purchases, max(user_id) AS max_uid
@@ -708,7 +681,6 @@ object ChPack {
     // Integer lanes keep BIGINT-exact sums under any merge order; avg is
     // exact-sum / presence-count, one double division per lane.
     "q136_foreach" -> { (s, dir) =>
-      ChCompat.register(s)
       Tables(s, dir).events.createOrReplaceTempView("graft_fe_events")
       s.sql(
         """SELECT event_type,
@@ -732,7 +704,6 @@ object ChPack {
     // all composite built-in aggregates (codegen'd, map-side combined),
     // no custom state.
     "q137_stat_pack" -> { (s, dir) =>
-      ChCompat.register(s)
       Tables(s, dir).lineitem.createOrReplaceTempView("graft_stat_li")
       s.sql(
         """SELECT l_returnflag,
@@ -753,7 +724,6 @@ object ChPack {
     // pair-count map per aggregate, map-side combined, sorted-order
     // float reduction (bit-deterministic under any partitioning).
     "q138_entropy_assoc" -> { (s, dir) =>
-      ChCompat.register(s)
       Tables(s, dir).events.createOrReplaceTempView("graft_ent_events")
       s.sql(
         """SELECT round(entropy(event_type), 6) AS h_type,
@@ -769,7 +739,6 @@ object ChPack {
     // group (overlaps once, adjacent merge) — compacted-island state,
     // O(islands) through the exchange; integral in, BIGINT-exact out.
     "q139_interval_sum" -> { (s, dir) =>
-      ChCompat.register(s)
       Tables(s, dir).events.createOrReplaceTempView("graft_iv_events")
       s.sql(
         """SELECT event_type,
@@ -784,7 +753,6 @@ object ChPack {
     // order — the deterministic deltaSum (plain deltaSum keeps CH's own
     // merge-order caveat and stays spec-tested).
     "q140_delta_sum" -> { (s, dir) =>
-      ChCompat.register(s)
       Tables(s, dir).events.createOrReplaceTempView("graft_ds_events")
       s.sql(
         """SELECT event_type,
@@ -799,7 +767,6 @@ object ChPack {
     // first value with accumulated ≥ level·total) — integer in/out,
     // hash-exact.
     "q141_weighted_quantile" -> { (s, dir) =>
-      ChCompat.register(s)
       Tables(s, dir).lineitem.createOrReplaceTempView("graft_wq_li")
       s.sql(
         """SELECT l_returnflag,
@@ -815,7 +782,6 @@ object ChPack {
     // Pearson over rank pairs in sorted order) — group-sized state like
     // medianExact; the rank transform is inherently per-group-global.
     "q142_rank_corr" -> { (s, dir) =>
-      ChCompat.register(s)
       Tables(s, dir).lineitem.createOrReplaceTempView("graft_rc_li")
       s.sql(
         """SELECT l_returnflag,
@@ -832,7 +798,6 @@ object ChPack {
     // mirrored by the DuckDB built-in of the same definition.
     // (ngramDistance / ngramSearch have no DuckDB twin — spec-pinned.)
     "q143_string_distance" -> { (s, dir) =>
-      ChCompat.register(s)
       Tables(s, dir).part.createOrReplaceTempView("graft_sd_part")
       s.sql(
         """SELECT p_partkey,
@@ -855,7 +820,6 @@ object ChPack {
     // split/reverseSplit) pinned on literals, and exact ROC arrayAUC per
     // event_type against a rank-window mirror.
     "q144_array_battery" -> { (s, dir) =>
-      ChCompat.register(s)
       Tables(s, dir).lineitem.createOrReplaceTempView("graft_ab_li")
       Tables(s, dir).events.createOrReplaceTempView("graft_ab_events")
       s.sql(
@@ -894,7 +858,6 @@ object ChPack {
     // multiSearch needle-array family — all composites over codegen'd
     // built-ins.
     "q145_date_helpers" -> { (s, dir) =>
-      ChCompat.register(s)
       Tables(s, dir).events.createOrReplaceTempView("graft_dh_events")
       s.sql(
         """SELECT event_id,
@@ -925,7 +888,6 @@ object ChPack {
     // formatters / unicode bar — deterministic pins where no SQL mirror
     // exists.
     "q146_geo_format" -> { (s, dir) =>
-      ChCompat.register(s)
       Tables(s, dir).events.createOrReplaceTempView("graft_geo_events")
       s.sql(
         """WITH pts AS (
@@ -959,7 +921,6 @@ object ChPack {
     // statistics mirror in DuckDB aggregate/window SQL (p-values have no
     // DuckDB special functions and are spec-pinned instead).
     "q147_two_sample_tests" -> { (s, dir) =>
-      ChCompat.register(s)
       Tables(s, dir).events.createOrReplaceTempView("graft_tt_events")
       s.sql(
         """SELECT round(studentTTest(value, user_id % 2).t_statistic, 6) AS st_t,
@@ -974,7 +935,6 @@ object ChPack {
     // one-sample t; matrix entries gate against DuckDB's pairwise
     // corr/covar at 1e-6 rounding, p-values are spec-pinned.
     "q163_stat_matrix" -> { (s, dir) =>
-      ChCompat.register(s)
       Tables(s, dir).events.createOrReplaceTempView("graft_smx_events")
       s.sql(
         """WITH t AS (
@@ -1004,7 +964,6 @@ object ChPack {
     // distinct positions per group, so CH's unspecified-collision caveat
     // never triggers) + the arrayShiftLeft/Right scalar completions.
     "q164_array_insert" -> { (s, dir) =>
-      ChCompat.register(s)
       Tables(s, dir).events.createOrReplaceTempView("graft_gai_events")
       s.sql(
         """WITH dow AS (
@@ -1026,7 +985,6 @@ object ChPack {
     // mirrored in DuckDB by explicit window cumsums + arg_max/arg_min
     // bracket selection, in the same double expression order.
     "q165_interp_quantile" -> { (s, dir) =>
-      ChCompat.register(s)
       Tables(s, dir).events.createOrReplaceTempView("graft_iq_events")
       s.sql(
         """WITH t AS (
@@ -1049,7 +1007,6 @@ object ChPack {
     // idiom — and merges per event_type (the reset-on-change grouping
     // argument). DuckDB mirrors with plain lag/lead/windowed SUM.
     "q169_running_window" -> { (s, dir) =>
-      ChCompat.register(s)
       Tables(s, dir).events.createOrReplaceTempView("graft_rw_events")
       s.sql(graft.engine.ChSql(
         """WITH h AS (
@@ -1070,7 +1027,6 @@ object ChPack {
     // directly mirrored by DuckDB's bit_and/bit_or/bit_xor and
     // arg_min/arg_max FILTER.
     "q168_bit_aggs" -> { (s, dir) =>
-      ChCompat.register(s)
       Tables(s, dir).events.createOrReplaceTempView("graft_ba_events")
       s.sql(
         """SELECT event_type,
@@ -1088,7 +1044,6 @@ object ChPack {
     // arrays come from collect_set, the fold only ever shrinks past its
     // seed. Sorted output; set-theoretic DuckDB mirror.
     "q167_array_intersect" -> { (s, dir) =>
-      ChCompat.register(s)
       Tables(s, dir).events.createOrReplaceTempView("graft_ai_events")
       s.sql(
         """WITH a AS (
@@ -1106,7 +1061,6 @@ object ChPack {
     // formula op-for-op; the F statistic mirrors the ssb/ssw closed form
     // (p-values are spec-pinned via the F = t² bridge).
     "q166_quantile_anova" -> { (s, dir) =>
-      ChCompat.register(s)
       Tables(s, dir).events.createOrReplaceTempView("graft_qa_events")
       s.sql(
         """WITH t AS (
@@ -1130,7 +1084,6 @@ object ChPack {
     // aggregate/window SQL. (groupArrayMovingSum/Avg carry CH's
     // arrival-order caveat and stay spec-pinned on one partition.)
     "q148_sequence_aggs" -> { (s, dir) =>
-      ChCompat.register(s)
       Tables(s, dir).events.createOrReplaceTempView("graft_sq_events")
       s.sql(
         """SELECT event_type,
@@ -1151,7 +1104,6 @@ object ChPack {
     // majority), histogram (adaptive centroids — exact when distinct ≤
     // bins), sparkbar over a full residue domain.
     "q149_sketch_aggs" -> { (s, dir) =>
-      ChCompat.register(s)
       Tables(s, dir).events.createOrReplaceTempView("graft_sk_events")
       s.sql(
         """SELECT event_type,
@@ -1172,7 +1124,6 @@ object ChPack {
     // both interval kinds, parseDateTime [BestEffort], fromUnixTimestamp,
     // dateTrunc spelling) and singleValueOrNull.
     "q150_maps_dates" -> { (s, dir) =>
-      ChCompat.register(s)
       Tables(s, dir).events.createOrReplaceTempView("graft_mp_events")
       s.sql(
         """WITH sv AS (
@@ -1212,7 +1163,6 @@ object ChPack {
     // 'first_match' (chain anchored at the first cond1 hit), both
     // forward. Mirrored by DuckDB ordered-list indexing per user.
     "q151_sequence_next_node" -> { (s, dir) =>
-      ChCompat.register(s)
       Tables(s, dir).events.createOrReplaceTempView("graft_snn_events")
       s.sql(
         """SELECT user_id,
@@ -1233,7 +1183,6 @@ object ChPack {
     // double-lane folds mirroring DuckDB's list functions on DOUBLE[])
     // plus the encoding / bit / IPv4 scalar battery over events.
     "q152_vector_bits" -> { (s, dir) =>
-      ChCompat.register(s)
       Tables(s, dir).embeddings.createOrReplaceTempView("graft_vm_emb")
       Tables(s, dir).events.createOrReplaceTempView("graft_vm_events")
       s.sql(
@@ -1283,7 +1232,6 @@ object ChPack {
     // Unicode normalization/repair, query fingerprinting, raw JSON
     // array splitting.
     "q153_html_text" -> { (s, dir) =>
-      ChCompat.register(s)
       Tables(s, dir).events.createOrReplaceTempView("graft_ht_events")
       s.sql(
         """SELECT event_id,
@@ -1316,7 +1264,6 @@ object ChPack {
     // special functions pinned on literals (machine-precision
     // commons-math3 — no DuckDB twin).
     "q154_ks_ztest" -> { (s, dir) =>
-      ChCompat.register(s)
       Tables(s, dir).events.createOrReplaceTempView("graft_kz_events")
       s.sql(
         """SELECT event_type,
@@ -1334,7 +1281,6 @@ object ChPack {
     // tumble(ts, INTERVAL) expands via Spark's TimeWindowing rule; the
     // bucket bounds and counts mirror the epoch-grid arithmetic.
     "q155_tumble_windows" -> { (s, dir) =>
-      ChCompat.register(s)
       Tables(s, dir).events.createOrReplaceTempView("graft_tw_events")
       s.sql(
         """SELECT CAST(win.start AS STRING) AS ws,
@@ -1354,7 +1300,6 @@ object ChPack {
     // and the first-row-per-group shorthand (CH executes DISTINCT ON as
     // LIMIT 1 BY — so does the rewrite).
     "q156_qualify_distinct_on" -> { (s, dir) =>
-      ChCompat.register(s)
       Tables(s, dir).orders.createOrReplaceTempView("graft_qd_orders")
       val top = graft.engine.ChQualify.sql(s,
         """SELECT o_custkey, o_orderkey, o_totalprice,
@@ -1383,7 +1328,6 @@ object ChPack {
     // aggregates at registration (codegen'd, map-side combined); plus
     // plural weighted quantiles and the capped distinct collect.
     "q158_resample" -> { (s, dir) =>
-      ChCompat.register(s)
       Tables(s, dir).events.createOrReplaceTempView("graft_rs_events")
       s.sql(
         """SELECT event_type,
@@ -1405,7 +1349,6 @@ object ChPack {
     // one-shot aggregate computes — CH's MV-incremental contract,
     // mirrored by DuckDB's direct entropy / cumulative-weight scan.
     "q159_stat_state_merge" -> { (s, dir) =>
-      ChCompat.register(s)
       Tables(s, dir).eventsWithDefaults.createOrReplaceTempView("graft_sm_events")
       s.sql(
         """WITH partials AS (
@@ -1427,7 +1370,6 @@ object ChPack {
     // aggregates: every point weighted exp(−(t_max − t)/λ) — mirrored by
     // the same formula over DuckDB's EXP.
     "q160_time_decayed" -> { (s, dir) =>
-      ChCompat.register(s)
       Tables(s, dir).events.createOrReplaceTempView("graft_td_events")
       s.sql(
         """SELECT event_type,
@@ -1448,8 +1390,6 @@ object ChPack {
     // view/purchase uid bitmaps, each value mirrored by DuckDB list
     // algebra over the same distinct-uid sets.
     "q135_bitmap_algebra" -> { (s, dir) =>
-      ChCompat.register(s)
-      graft.functions.Bitmaps.register(s)
       Tables(s, dir).events.createOrReplaceTempView("graft_bm_events")
       s.sql(
         """WITH b AS (
@@ -1478,7 +1418,6 @@ object ChPack {
     // value-gates (sum of toDecimal64 goes through the exact decimal
     // accumulator before ONE double cast).
     "q133_ch_casts" -> { (s, dir) =>
-      ChCompat.register(s)
       Tables(s, dir).lineitem.createOrReplaceTempView("graft_cast_li")
       s.sql(
         """SELECT l_returnflag,
@@ -1500,7 +1439,6 @@ object ChPack {
     // array-length/object-size length contract, all value-gated against
     // DuckDB's json extension.
     "q132_ch_json" -> { (s, dir) =>
-      ChCompat.register(s)
       Tables(s, dir).events.createOrReplaceTempView("graft_json_events")
       s.sql(
         """SELECT event_type,
@@ -1521,7 +1459,6 @@ object ChPack {
     // intersection is arraySort-wrapped — CH and Spark both return
     // first-array order, but the gate compares canonical forms.
     "q131_group_array_sorted" -> { (s, dir) =>
-      ChCompat.register(s)
       Tables(s, dir).documents
         .select(col("doc_id"), col("lang"),
           graft.text.TextFunctions.tokens(col("text")).as("toks"))

@@ -436,8 +436,6 @@ object ExtendedPack {
     // formulas). p_value is omitted from the gate (DuckDB has no erfc);
     // ChCompatSpec pins it against python-math vectors instead.
     "q173_dialect_tail" -> { (s, dir) =>
-      graft.functions.ChCompat.register(s)
-      graft.functions.Bitmaps.register(s)
       Tables(s, dir).events.createOrReplaceTempView("graft_dt_events")
       s.sql(
         """SELECT event_type,
@@ -477,7 +475,6 @@ object ExtendedPack {
     // DuckDB has no WITH TIES — the oracle mirrors with its own
     // QUALIFY + rank(), an independent engine path.
     "q174_with_ties" -> { (s, dir) =>
-      graft.functions.ChCompat.register(s)
       Tables(s, dir).lineitem.createOrReplaceTempView("graft_wt_lineitem")
       s.sql(graft.engine.ChSql(
         """SELECT l_orderkey, l_linenumber, l_quantity

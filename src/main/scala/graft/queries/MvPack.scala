@@ -25,7 +25,6 @@ object MvPack {
     // A6/A7/A9: -State at (day,hour,type), -Merge rollup to (day,type).
     // Exact UV via RoaringBitmap states (A11), re-summable counters (A8).
     "q20_state_rollup" -> { (s, dir) =>
-      Bitmaps.register(s)
       val state = Tables(s, dir).eventsWithDefaults
         .groupBy("day", "hour", "event_type")
         .agg(
@@ -44,7 +43,6 @@ object MvPack {
     // A12: bitmap funnel — view ∧ click ∧ purchase cardinalities per day
     // (ref dwm.mainpage_stat_mv_dis.sql:280-290; bitmapAnd nesting doc:1238).
     "q21_bitmap_funnel" -> { (s, dir) =>
-      Bitmaps.register(s)
       val bm = Tables(s, dir).eventsWithDefaults
         .groupBy("day")
         .agg(
@@ -68,7 +66,6 @@ object MvPack {
     // state column is the fold input (the CH signature), so the whole
     // query is two map-side-combined aggregations, no re-scan of raw ids.
     "q162_bitmap_fold" -> { (s, dir) =>
-      Bitmaps.register(s)
       val daily = Tables(s, dir).eventsWithDefaults
         .groupBy("day", "event_type")
         .agg(Bitmaps.bitmap_agg(col("user_id")).as("uv_bm"))
@@ -282,7 +279,6 @@ object MvPack {
     // declared query's aggregate can match this projection (registration
     // outlives this builder on the shared driver session).
     "q171_projection_route" -> { (s, dir) =>
-      Bitmaps.register(s)
       val src = Tables(s, dir).eventsWithDefaults.filter(col("event_id") >= 0)
       val wh = graft.engine.ChReplay.scratchWarehouse("graft-q171")
       val st = new graft.mv.StateTable(s, wh + "/st",

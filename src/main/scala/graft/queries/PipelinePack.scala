@@ -105,7 +105,6 @@ object PipelinePack {
     // BpeSpec additionally pins the classic-example merges, rank-order
     // application, reconstruction, and monotonicity.
     "q125_bpe_encode" -> { (s, dir) =>
-      graft.text.Bpe.register(s)
       val docs = Tables(s, dir).documents
       val merges = graft.text.Bpe.train(docs, "text", numMerges = 40)
       docs.select(col("doc_id"),
@@ -125,7 +124,6 @@ object PipelinePack {
     // scan). Hash-gates pieces AND counts, so the encode path — not just
     // q102's pair counting — is oracle-proven.
     "q177_bpe_exact" -> { (s, dir) =>
-      graft.text.Bpe.register(s)
       val docs = Tables(s, dir).documents
       val merges = graft.text.Bpe.train(docs, "text", numMerges = 5)
       docs
@@ -210,7 +208,6 @@ object PipelinePack {
     // spent — bucket-granular verdicts, doc-level resolution only inside
     // the one boundary tie-class.
     "q104_token_budget" -> { (s, dir) =>
-      TextFunctions.register(s)
       val scored = Tables(s, dir).documents
         .select(col("doc_id"), col("lang"), col("text"),
           TextFunctions.tokens(col("text")).as("toks"))
@@ -309,8 +306,6 @@ object PipelinePack {
     // row_number-window top-k; ties broken by lowest doc_id, so the result
     // is total-order deterministic).
     "q62_quality_topk" -> { (s, dir) =>
-      graft.functions.TopK.register(s)
-      TextFunctions.register(s)
       val scored = graft.engine.Warehouse
         .spreadForCompute(Tables(s, dir).documents, "doc_id")
         .select(col("doc_id"), col("lang"), col("text"),

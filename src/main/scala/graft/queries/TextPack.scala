@@ -24,10 +24,8 @@ object TextPack {
     * does CPU-heavy per-row work (tokenize/langid/minhash) that must not
     * run on one core. No-op on wide inputs (Warehouse.spreadForCompute).
     */
-  private def docs(s: SparkSession, dir: String): DataFrame = {
-    TextFunctions.register(s) // token_set_count behind quality/langid
+  private def docs(s: SparkSession, dir: String): DataFrame =
     graft.engine.Warehouse.spreadForCompute(Tables(s, dir).documents, "doc_id")
-  }
 
   val queries: Map[String, Q] = Map(
     // Exact dedup accounting per (lang, source): md5-keyed distinct counts.
@@ -163,8 +161,6 @@ object TextPack {
     // payloads co-locate), one small aggregation; every stage is the
     // declared-and-gated form of an operator proven alone (q37/q32/q30).
     "q39_corpus_pipeline" -> { (s, dir) =>
-      graft.functions.ComputeOnce.register(s)
-      TextFunctions.register(s)
       import graft.functions.ComputeOnce.once
       // the CHEAP conjunct of the gate runs AT THE SCAN (guide §2.3
       // "shuffle fewer bytes" / r14 verdict): ws_token_count is a
@@ -266,7 +262,6 @@ object TextPack {
     // aggregation-shaped mode per doc (explode → count → max_by with a
     // total (cnt, gram) order, so ties are deterministic in both engines).
     "q93_repetition" -> { (s, dir) =>
-      TextFunctions.register(s)
       val base = graft.engine.Warehouse.spreadForCompute(docs(s, dir), "doc_id")
         .select(col("doc_id"), col("text"),
           TextFunctions.tokens(col("text")).as("toks"))
@@ -354,7 +349,6 @@ object TextPack {
     // many distinct shingles) is fully hash-checked. n=8 instead of the
     // published 13 keeps the snippets long enough to shingle at this SF.
     "q87_decontaminate" -> { (s, dir) =>
-      graft.text.TextFunctions.register(s)
       val d = docs(s, dir)
       val norm = graft.text.TextFunctions.normalizeForDedup(col("text"))
       val bench = d.filter(col("doc_id") % 10 === 0)

@@ -19,7 +19,6 @@ object VectorPack {
     // Full probe-vs-corpus cosine scoring (no top-k cutoff → no ranking
     // instability in the declared result; the top-k path is q41).
     "q40_cosine_probe" -> { (s, dir) =>
-      graft.functions.VectorOps.register(s)
       val e = Tables(s, dir).embeddings
       val probe = e.filter(col("vec_id") === 0).select(col("embedding").as("pvec"))
       e.filter(col("vec_id") =!= 0)
@@ -185,7 +184,6 @@ object VectorPack {
     // is O(n²) by definition: the declared query is the CORRECTNESS anchor
     // run at small SF; at 100 TB the LSH-bucketed q43 is the shape to run.
     "q45_cosine_neardup_exact" -> { (s, dir) =>
-      graft.functions.VectorOps.register(s)
       val e = Tables(s, dir).embeddings
       val a = e.select(col("vec_id").as("id_a"), col("embedding").as("va"))
       val b = e.select(col("vec_id").as("id_b"), col("embedding").as("vb"))
@@ -201,7 +199,6 @@ object VectorPack {
     // per dimension so every code and normalized value is hash-gated.
     // All per-row expression work — no shuffle until the final sort.
     "q65_embed_quantize" -> { (s, dir) =>
-      graft.functions.VectorOps.register(s)
       Tables(s, dir).embeddings
         .select(col("vec_id"),
           graft.functions.VectorOps.l2_norm(col("embedding")).as("l2_norm"),
@@ -231,7 +228,6 @@ object VectorPack {
     // recursive-CTE oracle); the LSH candidate path is the 100 TB shape,
     // refinement-tested in DedupSpec.
     "q117_semantic_dedup" -> { (s, dir) =>
-      graft.functions.VectorOps.register(s)
       graft.dedup.Dedup.semanticClusters(Tables(s, dir).embeddings,
           "vec_id", "embedding", threshold = 0.3, exact = true)
         .orderBy("vec_id")

@@ -24,7 +24,7 @@ object Ann {
 
   /** Cosine similarity of two float-array columns, computed in double.
     * Delegates to the tight-loop [[graft.functions.CosineSimilarity]]
-    * expression (requires `VectorOps.register` on the session — every Ann
+    * expression (requires `ChCompat.register` on the session — every Ann
     * method does this; ad-hoc users call it once). Same index-order double
     * fold as the composable zip_with/aggregate form, ~an order of magnitude
     * less per-row allocation.
@@ -41,7 +41,7 @@ object Ann {
     * 100 TB. Ties break by lowest neighbor_id (deterministic).
     */
   private def topKPerProbe(scored: DataFrame, k: Int): DataFrame = {
-    graft.functions.TopK.register(scored.sparkSession)
+    graft.functions.ChCompat.register(scored.sparkSession)
     scored
       .groupBy("probe_id")
       .agg(graft.functions.TopK.topk_by_score(
@@ -59,7 +59,7 @@ object Ann {
   def bruteForceTopK(
       corpus: DataFrame, probes: DataFrame,
       idCol: String, vecCol: String, k: Int): DataFrame = {
-    graft.functions.VectorOps.register(corpus.sparkSession)
+    graft.functions.ChCompat.register(corpus.sparkSession)
     // no spread here: one cosine per (row × probe) is light — an extra
     // exchange costs more than single-task scoring saves (measured); the
     // heavy-signature paths (lshIndex/ivfIndex) do spread
@@ -80,7 +80,7 @@ object Ann {
     * the single-pass [[graft.functions.LshSignaturesExpr]] (planes cached
     * per executor; the composed HOF form re-hashed every (plane, dim) pair
     * per row — verified bit-identical, so persisted indexes stay valid).
-    * Requires `VectorOps.register` (every entry point here does it).
+    * Requires `ChCompat.register` (every entry point here does it).
     */
   private def signaturesExpr(vec: Column, tables: Int, bits: Int): Column =
     graft.functions.LshSignatures.lsh_signatures(vec, tables, bits)
@@ -92,7 +92,7 @@ object Ann {
     */
   def lshIndex(corpus: DataFrame, idCol: String, vecCol: String,
       tables: Int = 8, bits: Int = 6): DataFrame = {
-    graft.functions.VectorOps.register(corpus.sparkSession)
+    graft.functions.ChCompat.register(corpus.sparkSession)
     // spread: the signature expression hashes tables × bits × dim values
     // per row — the heaviest per-row math in this module
     graft.engine.Warehouse.spreadForCompute(
@@ -111,7 +111,7 @@ object Ann {
       index: DataFrame, probes: DataFrame,
       idCol: String, vecCol: String, k: Int,
       tables: Int = 8, bits: Int = 6): DataFrame = {
-    graft.functions.VectorOps.register(index.sparkSession)
+    graft.functions.ChCompat.register(index.sparkSession)
     val p = probes.select(col(idCol).as("probe_id"), col(vecCol).as("pvec"),
         explode(signaturesExpr(col(vecCol), tables, bits)).as("bk"))
       .select(col("bk.tbl").as("tbl"), col("bk.bucket").as("bucket"),
@@ -171,7 +171,7 @@ object Ann {
     */
   def refineCentroids(corpus: DataFrame, idCol: String, vecCol: String,
       cents: Array[(Int, Array[Float])], iterations: Int = 2): Array[(Int, Array[Float])] = {
-    graft.functions.VectorOps.register(corpus.sparkSession)
+    graft.functions.ChCompat.register(corpus.sparkSession)
     var c = cents
     for (_ <- 1 to iterations) {
       val updated = ivfIndex(corpus, idCol, vecCol, c)
@@ -195,7 +195,7 @@ object Ann {
     // (tight double loop over a plan-literal centroid table) — the former
     // per-row UDF boxed every vector element nlist times on the
     // corpus-sized build path
-    graft.functions.VectorOps.register(corpus.sparkSession)
+    graft.functions.ChCompat.register(corpus.sparkSession)
     graft.engine.Warehouse.spreadForCompute(
         corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cvec")), "neighbor_id")
       .select(col("neighbor_id"), col("cvec"),
@@ -219,7 +219,7 @@ object Ann {
   def ivfTopK(index: DataFrame, cents: Array[(Int, Array[Float])],
       probes: DataFrame, idCol: String, vecCol: String, k: Int,
       nprobe: Int): DataFrame = {
-    graft.functions.VectorOps.register(index.sparkSession)
+    graft.functions.ChCompat.register(index.sparkSession)
     val p = probes.select(col(idCol).as("probe_id"), col(vecCol).as("pvec"))
       .withColumn("list_id", explode(
         graft.functions.VectorQuant.nearest_centroids(col("pvec"), cents, nprobe)))
@@ -236,7 +236,7 @@ object Ann {
   def cosineNearDups(
       corpus: DataFrame, idCol: String, vecCol: String,
       threshold: Double = 0.95, tables: Int = 8, bits: Int = 6): DataFrame = {
-    graft.functions.VectorOps.register(corpus.sparkSession)
+    graft.functions.ChCompat.register(corpus.sparkSession)
     val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // Two compact caches instead of one fat one: the hyperplane-signature
     // pipeline (tables × bits × dim hashed dot products per row) must run

@@ -51,8 +51,7 @@ object IvfPq {
   def assignResiduals(corpus: DataFrame, idCol: String, vecCol: String,
       cents: Array[(Int, Array[Float])]): DataFrame = {
     val spark = corpus.sparkSession
-    graft.functions.VectorOps.register(spark)
-    graft.functions.VectorQuant.register(spark)
+    graft.functions.ChCompat.register(spark)
     corpus.select(col(idCol).as("id"), col(vecCol).as("vec"))
       .withColumn("list_id", element_at(
         graft.functions.VectorQuant.nearest_centroids(col("vec"), cents, 1), 1))
@@ -80,7 +79,7 @@ object IvfPq {
   def encode(corpus: DataFrame, idCol: String, vecCol: String,
       cents: Array[(Int, Array[Float])], cb: Pq.Codebook): DataFrame = {
     val spark = corpus.sparkSession
-    graft.functions.VectorOps.register(spark)
+    graft.functions.ChCompat.register(spark)
     val enc = graft.engine.Warehouse.spreadForCompute(
         assignResiduals(corpus, idCol, vecCol, cents), "id")
       .withColumn("codes",
@@ -103,9 +102,7 @@ object IvfPq {
       cb: Pq.Codebook, probes: DataFrame, idCol: String, vecCol: String,
       k: Int, nprobe: Int): DataFrame = {
     val spark = encoded.sparkSession
-    graft.functions.VectorOps.register(spark)
-    graft.functions.VectorQuant.register(spark)
-    graft.functions.TopK.register(spark)
+    graft.functions.ChCompat.register(spark)
     val p = probes
       .select(col(idCol).as("probe_id"), col(vecCol).as("pvec"),
         graft.functions.VectorQuant.pq_lut(col(vecCol), cb.centroids).as("lut"),
@@ -143,8 +140,7 @@ object IvfPq {
   def rerank(shortlist: DataFrame, corpus: DataFrame, probes: DataFrame,
       idCol: String, vecCol: String, k: Int): DataFrame = {
     val spark = shortlist.sparkSession
-    graft.functions.VectorOps.register(spark)
-    graft.functions.TopK.register(spark)
+    graft.functions.ChCompat.register(spark)
     val c = corpus.select(col(idCol).cast(LongType).as("neighbor_id"),
       col(vecCol).as("cvec"))
     val p = probes.select(col(idCol).cast(LongType).as("probe_id"),

@@ -64,7 +64,7 @@ object Pq {
   def trainCodebook(corpus: DataFrame, idCol: String, vecCol: String,
       m: Int = 8, ksub: Int = 16, iterations: Int = 2): Codebook = {
     val spark = corpus.sparkSession
-    graft.functions.VectorOps.register(spark)
+    graft.functions.ChCompat.register(spark)
     val first = corpus.select(col(vecCol)).head()
     val dim = first.getSeq[Float](0).length
     require(dim % m == 0, s"embedding dim $dim not divisible by m=$m")
@@ -103,7 +103,7 @@ object Pq {
     * compressed index (m bytes of information per vector).
     */
   def encode(corpus: DataFrame, idCol: String, vecCol: String, cb: Codebook): DataFrame = {
-    graft.functions.VectorOps.register(corpus.sparkSession)
+    graft.functions.ChCompat.register(corpus.sparkSession)
     graft.engine.Warehouse.spreadForCompute(
         corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("vec")), "neighbor_id")
       .select(col("neighbor_id"),
@@ -122,7 +122,7 @@ object Pq {
     */
   private def probeTables(probes: DataFrame, cb: Codebook,
       idCol: String, vecCol: String): DataFrame = {
-    graft.functions.VectorOps.register(probes.sparkSession)
+    graft.functions.ChCompat.register(probes.sparkSession)
     // pn = l2_norm: bit-identical to the former inline UDF (index-order
     // double sum of squares, then sqrt)
     probes.select(col(idCol).as("probe_id"),
@@ -135,8 +135,7 @@ object Pq {
     */
   private def scoreAndTopK(cand: DataFrame, cb: Codebook, k: Int): DataFrame = {
     val spark = cand.sparkSession
-    graft.functions.VectorOps.register(spark)
-    graft.functions.TopK.register(spark)
+    graft.functions.ChCompat.register(spark)
     cand
       .withColumn("cos_sim", graft.functions.VectorQuant.pq_adc_score(
         col("codes"), col("lut"), col("pn"), cb.centroids))
@@ -156,7 +155,7 @@ object Pq {
     */
   def adcTopK(encoded: DataFrame, cb: Codebook, probes: DataFrame,
       idCol: String, vecCol: String, k: Int): DataFrame = {
-    graft.functions.VectorOps.register(encoded.sparkSession)
+    graft.functions.ChCompat.register(encoded.sparkSession)
     val p = probeTables(probes, cb, idCol, vecCol)
     val cand = encoded.crossJoin(broadcast(p))
       .filter(col("neighbor_id") =!= col("probe_id"))
@@ -176,7 +175,7 @@ object Pq {
       encoded: DataFrame, cb: Codebook,
       probes: DataFrame, idCol: String, vecCol: String,
       k: Int, nprobe: Int): DataFrame = {
-    graft.functions.VectorOps.register(ivf.sparkSession)
+    graft.functions.ChCompat.register(ivf.sparkSession)
     val p = probeTables(probes, cb, idCol, vecCol)
       .join(probes.select(col(idCol).as("probe_id"),
         explode(graft.functions.VectorQuant.nearest_centroids(
@@ -194,7 +193,7 @@ object Pq {
     */
   def quantizationError(corpus: DataFrame, idCol: String, vecCol: String,
       cb: Codebook): Double = {
-    graft.functions.VectorOps.register(corpus.sparkSession)
+    graft.functions.ChCompat.register(corpus.sparkSession)
     corpus.select(avg(
       graft.functions.VectorQuant.pq_recon_error(col(vecCol), cb.centroids)))
       .head().getDouble(0)

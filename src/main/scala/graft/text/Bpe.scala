@@ -135,28 +135,27 @@ object Bpe {
     merges.toSeq
   }
 
-  /** Register `bpeEncode(text, mergesArrayLiteral)` on the session —
-    * the merges argument must be a foldable array<string> of "left right"
-    * pairs in rank order (what [[encode]] passes).
+  /** `bpeEncode(text, mergesArrayLiteral)` — the merges argument must be
+    * a foldable array<string> of "left right" pairs in rank order (what
+    * [[encode]] passes).
     */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = graft.functions.Registration.once(spark, "Bpe") {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "bpeEncode", es => {
-          require(es.length == 2, "usage: bpeEncode(text, merges)")
-          require(es(1).foldable, "bpeEncode merges must be a literal array")
-          val pairs = es(1).eval() match {
-            case a: org.apache.spark.sql.catalyst.util.ArrayData =>
-              (0 until a.numElements()).map(i => a.getUTF8String(i).toString).toArray
-            case _ => Array.empty[String]
-          }
-          BpeEncodeExpr(es.head, pairs)
-        }, "built-in")
+  val functions = graft.functions.FunctionTable.define(this) { f =>
+    f("bpeEncode") { es =>
+      require(es.length == 2, "usage: bpeEncode(text, merges)")
+      require(es(1).foldable, "bpeEncode merges must be a literal array")
+      val pairs = es(1).eval() match {
+        case a: org.apache.spark.sql.catalyst.util.ArrayData =>
+          (0 until a.numElements()).map(i => a.getUTF8String(i).toString).toArray
+        case _ => Array.empty[String]
+      }
+      BpeEncodeExpr(es.head, pairs)
+    }
   }
 
   /** Encode `text` (whitespace-split) into BPE pieces under `merges`.
     * Returns `array<string>` of pieces, `</w>`-marked at word ends.
-    * Requires [[register]] on the session (repo-wide registration runs
-    * it via ChCompat).
+    * Requires `ChCompat.register` (or [[graft.GraftExtensions]]) on the
+    * session.
     */
   def encode(text: Column, merges: Seq[Merge]): Column =
     call_function("bpeEncode", text,

@@ -102,7 +102,7 @@ object Curation {
   def stratifiedSample(df: DataFrame, groupCols: Seq[String], keyCol: String,
       quota: Int, salt: String = ""): DataFrame = {
     require(quota >= 1, s"quota must be >= 1: $quota")
-    graft.functions.TopK.register(df.sparkSession)
+    graft.functions.ChCompat.register(df.sparkSession)
     val h = conv(substring(md5(concat(col(keyCol).cast(StringType), lit(salt))), 1, 13), 16, 10)
       .cast(LongType)
     val picked = df
@@ -162,7 +162,7 @@ object Curation {
     * not be defeated by case or punctuation differences.
     */
   def benchmarkShingles(bench: DataFrame, textCol: String, n: Int): DataFrame = {
-    TextFunctions.register(bench.sparkSession)
+    graft.functions.ChCompat.register(bench.sparkSession)
     bench
       .select(explode(TextFunctions.shingles(
         TextFunctions.tokens(TextFunctions.normalizeForDedup(col(textCol))), n)).as("sh"))
@@ -184,7 +184,7 @@ object Curation {
     */
   def contaminationReport(docs: DataFrame, idCol: String, textCol: String,
       bench: DataFrame, benchTextCol: String, n: Int = 13): DataFrame = {
-    TextFunctions.register(docs.sparkSession)
+    graft.functions.ChCompat.register(docs.sparkSession)
     val probe = benchmarkShingles(bench, benchTextCol, n)
     docs
       .select(col(idCol), explode(TextFunctions.shingles(

@@ -1,6 +1,6 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{CreateArray, Expression, Literal}
@@ -20,57 +20,52 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object TextFunctions {
 
-  /** Registers [[TokenSetCount]] as `token_set_count(arr, array('a',...),
-    * lowercase)` — the stopword-hit counter behind [[qualityFeatures]] and
-    * [[langId]]. Query packs and ChCompat call this; ad-hoc users of those
-    * two functions must too.
+  /** SQL names of the text primitives, among them
+    * `token_set_count(arr, array('a',...), lowercase)`: the stopword-hit
+    * counter behind [[qualityFeatures]] and [[langId]].
     */
-  def register(spark: SparkSession): Unit = graft.functions.Registration.once(spark, "TextFunctions") {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "token_set_count", es => {
-        require(es.length == 3, "usage: token_set_count(arr, array('w',...), lowercase)")
-        val words = es(1) match {
-          case CreateArray(items, _) => items.map {
-            case Literal(s: UTF8String, StringType) => s.toString
-            case other => throw new IllegalArgumentException(
-              s"token_set_count: word list must be string literals, got $other")
-          }
+  val functions = graft.functions.FunctionTable.define(this) { f =>
+    f("token_set_count") { es =>
+      require(es.length == 3, "usage: token_set_count(arr, array('w',...), lowercase)")
+      val words = es(1) match {
+        case CreateArray(items, _) => items.map {
+          case Literal(s: UTF8String, StringType) => s.toString
           case other => throw new IllegalArgumentException(
-            s"token_set_count: second arg must be an array literal, got $other")
+            s"token_set_count: word list must be string literals, got $other")
         }
-        val lc = es(2) match {
-          case Literal(b: Boolean, BooleanType) => b
+        case other => throw new IllegalArgumentException(
+          s"token_set_count: second arg must be an array literal, got $other")
+      }
+      val lc = es(2) match {
+        case Literal(b: Boolean, BooleanType) => b
+        case other => throw new IllegalArgumentException(
+          s"token_set_count: lowercase flag must be a boolean literal, got $other")
+      }
+      TokenSetCount(es.head, words, lc)
+    }
+    f("char_set_count") { es =>
+      require(es.length == 2, "usage: char_set_count(text, array('字',...))")
+      val chars = es(1) match {
+        case CreateArray(items, _) => items.map {
+          case Literal(s: UTF8String, StringType) => s.toString
           case other => throw new IllegalArgumentException(
-            s"token_set_count: lowercase flag must be a boolean literal, got $other")
+            s"char_set_count: char list must be string literals, got $other")
         }
-        TokenSetCount(es.head, words, lc)
-      }, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "char_set_count", es => {
-        require(es.length == 2, "usage: char_set_count(text, array('字',...))")
-        val chars = es(1) match {
-          case CreateArray(items, _) => items.map {
-            case Literal(s: UTF8String, StringType) => s.toString
-            case other => throw new IllegalArgumentException(
-              s"char_set_count: char list must be string literals, got $other")
-          }
-          case other => throw new IllegalArgumentException(
-            s"char_set_count: second arg must be an array literal, got $other")
-        }
-        CharSetCount(es.head, chars)
-      }, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingles_n", es => {
-        val n = es(1) match {
-          case Literal(v: Int, IntegerType) => v
-          case other => throw new IllegalArgumentException(
-            s"shingles_n: n must be an integer literal, got $other")
-        }
-        require(n >= 1, s"shingles_n: n must be positive, got $n")
-        ShinglesExpr(es.head, n)
-      }, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "compression_ratio", es => CompressionRatioExpr(es.head), "built-in")
+        case other => throw new IllegalArgumentException(
+          s"char_set_count: second arg must be an array literal, got $other")
+      }
+      CharSetCount(es.head, chars)
+    }
+    f("shingles_n") { es =>
+      val n = es(1) match {
+        case Literal(v: Int, IntegerType) => v
+        case other => throw new IllegalArgumentException(
+          s"shingles_n: n must be an integer literal, got $other")
+      }
+      require(n >= 1, s"shingles_n: n must be positive, got $n")
+      ShinglesExpr(es.head, n)
+    }
+    f("compression_ratio")(es => CompressionRatioExpr(es.head))
   }
 
   /** Deflate-based compression ratio (compressed/raw bytes) — the classic
@@ -130,7 +125,7 @@ object TextFunctions {
     * evaluated interpreted with a per-shingle array allocation). Returns
     * an empty array for documents shorter than n tokens (mirroring the
     * DuckDB oracles' empty generate_series). Requires
-    * [[TextFunctions.register]] on the session.
+    * `ChCompat.register` (or [[graft.GraftExtensions]]) on the session.
     */
   def shingles(toks: Column, n: Int): Column =
     call_function("shingles_n", toks, lit(n))

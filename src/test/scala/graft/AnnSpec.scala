@@ -12,7 +12,7 @@ class AnnSpec extends SparkSpec {
   private lazy val emb = Tables(spark, "/root/testdata/sf0.001").embeddings
 
   test("cosine is exact: self-similarity 1, symmetric") {
-    graft.functions.VectorOps.register(spark)
+    graft.functions.ChCompat.register(spark)
     val two = emb.filter(col("vec_id") < 2)
       .select(col("vec_id"), col("embedding"))
     val selfSim = two.select(Ann.cosine(col("embedding"), col("embedding")).as("c"))
@@ -147,7 +147,7 @@ class AnnSpec extends SparkSpec {
 
   test("Lloyd refinement tightens clusters and keeps IVF recall") {
     import graft.functions.VectorOps
-    VectorOps.register(spark)
+    graft.functions.ChCompat.register(spark)
     def withinClusterSim(cents: Array[(Int, Array[Float])]): Double = {
       val bc = spark.sparkContext.broadcast(cents.toMap)
       val centCol = udf { (lid: Int) => bc.value(lid).toSeq }
@@ -217,7 +217,7 @@ class AnnSpec extends SparkSpec {
       if (na == 0 || nb == 0) -2.0 else dot / (math.sqrt(na) * math.sqrt(nb))
     }
     val cents = Ann.pickCentroids(emb, "vec_id", "embedding", 8)
-    graft.functions.VectorOps.register(spark)
+    graft.functions.ChCompat.register(spark)
     val got = emb.select(col("vec_id"),
         graft.functions.VectorQuant.nearest_centroids(col("embedding"), cents, 3).as("nc"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Int](1).toSeq).toMap

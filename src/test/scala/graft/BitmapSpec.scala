@@ -19,7 +19,7 @@ class BitmapSpec extends SparkSpec {
 
   test("bitmap_agg cardinality == countDistinct on arbitrary multisets") {
     import spark.implicits._
-    register(spark)
+    graft.functions.ChCompat.register(spark)
     for (i <- 1 to 12) {
       val uids = uidLists(Gen.Parameters.default.withSize(i * 17), Seed(i.toLong)).get
       val df = uids.toDF("uid")
@@ -30,7 +30,7 @@ class BitmapSpec extends SparkSpec {
 
   test("merge of per-partition states == state over all rows (doc:326-505)") {
     import spark.implicits._
-    register(spark)
+    graft.functions.ChCompat.register(spark)
     val uids = (1L to 400L) ++ (200L to 600L) ++ Seq(7L, 7L, 7L)
     val df = uids.toDF("uid").withColumn("part", pmod(monotonically_increasing_id(), lit(7)))
     val states = df.groupBy("part").agg(bitmap_agg(col("uid")).as("bm"))
@@ -40,7 +40,7 @@ class BitmapSpec extends SparkSpec {
 
   test("bitmap algebra == set algebra") {
     import spark.implicits._
-    register(spark)
+    graft.functions.ChCompat.register(spark)
     val a = (1L to 100L).toSet
     val b = (60L to 160L).toSet
     val df = a.toSeq.map(("a", _)).++(b.toSeq.map(("b", _))).toDF("tag", "uid")
@@ -60,7 +60,7 @@ class BitmapSpec extends SparkSpec {
 
   test("extended algebra (xor/andnot/subsets/extrema) == set algebra via SQL names") {
     import spark.implicits._
-    register(spark)
+    graft.functions.ChCompat.register(spark)
     graft.functions.ChCompat.register(spark)
     val a = Set(1L, 3L, 5L, 7L, 60L, 61L, 100L, 250L)
     val b = Set(5L, 7L, 9L, 61L, 400L)
@@ -102,7 +102,7 @@ class BitmapSpec extends SparkSpec {
 
   test("groupBitmapAnd/Or/Xor fold aggregates == set folds, any partitioning") {
     import spark.implicits._
-    register(spark)
+    graft.functions.ChCompat.register(spark)
     graft.functions.ChCompat.register(spark)
     // three group members with overlapping sets
     val sets = Seq((1L to 100L).toSet, (60L to 160L).toSet, (80L to 90L).toSet ++ Set(1L))
@@ -143,7 +143,7 @@ class BitmapSpec extends SparkSpec {
 
   test("uint32 boundary values round-trip") {
     import spark.implicits._
-    register(spark)
+    graft.functions.ChCompat.register(spark)
     val uids = Seq(0L, 1L, Int.MaxValue.toLong, Int.MaxValue.toLong + 1, 0xFFFFFFFFL)
     val got = uids.toDF("uid").agg(bitmap_cardinality(bitmap_agg(col("uid"))))
       .collect()(0).getLong(0)

@@ -24,7 +24,7 @@ class BpeSpec extends SparkSpec {
   }
 
   test("encode applies merges in rank order with end-of-word marker") {
-    graft.text.Bpe.register(spark)
+    graft.functions.ChCompat.register(spark)
     val docs = Seq.fill(5)("low").mkString(" ") + " lowest lowest"
     val df = Seq(docs).toDF("text")
     val merges = Bpe.train(df, "text", numMerges = 2, vocabCap = 100)
@@ -41,7 +41,7 @@ class BpeSpec extends SparkSpec {
   }
 
   test("more merges never increase the token count; zero merges = chars") {
-    graft.text.Bpe.register(spark)
+    graft.functions.ChCompat.register(spark)
     val df = Tables(spark, "/root/testdata/sf0.001").documents.limit(50)
     val m0 = Bpe.train(df, "text", 0)
     val m20 = Bpe.train(df, "text", 20)
@@ -62,7 +62,7 @@ class BpeSpec extends SparkSpec {
   }
 
   test("concatenating pieces reconstructs the original words") {
-    graft.text.Bpe.register(spark)
+    graft.functions.ChCompat.register(spark)
     val df = Tables(spark, "/root/testdata/sf0.001").documents.limit(30)
     val merges = Bpe.train(df, "text", 50)
     val bad = df.select($"text",
@@ -74,7 +74,7 @@ class BpeSpec extends SparkSpec {
   }
 
   test("supplementary-plane characters are ONE symbol, not two surrogates") {
-    graft.text.Bpe.register(spark)
+    graft.functions.ChCompat.register(spark)
     // U+1D11E (musical G clef) needs a surrogate pair in UTF-16 — a
     // code-unit split would shear it into two invalid half symbols,
     // diverging from the q177 DuckDB oracle's code-point split

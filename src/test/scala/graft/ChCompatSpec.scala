@@ -2463,7 +2463,6 @@ class ChCompatSpec extends SparkSpec {
       "toBool / widthBucket / mapContainsKeyLike / toMillisecond / hop " +
       "bounds / bitmapTransform / proportionsZTest") {
     graft.functions.ChCompat.register(spark)
-    graft.functions.Bitmaps.register(spark)
     val r = spark.sql(
       """SELECT splitByRegexp('\\d+', 'abc123def456ghi') AS sp,
         |       splitByRegexp('\\d+', '12ab34cd') AS sp2,

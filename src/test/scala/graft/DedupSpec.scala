@@ -11,8 +11,7 @@ class DedupSpec extends SparkSpec {
 
   override def beforeAll(): Unit = {
     super.beforeAll()
-    graft.functions.Simhash.register(spark)
-    graft.text.TextFunctions.register(spark)
+    graft.functions.ChCompat.register(spark)
   }
 
   private lazy val docs = {

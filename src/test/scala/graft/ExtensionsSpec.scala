@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Row, SparkSession}
+
+import graft.functions.FunctionTable
 
 /** spark.sql.extensions packaging: a session built with GraftExtensions
   * resolves graft + ClickHouse-dialect functions with no explicit register
@@ -32,25 +34,32 @@ class ExtensionsSpec extends SparkSpec {
     }
   }
 
-  test("Registration.once: re-entrant frames no-op; an outer-frame failure retries") {
-    var runs = 0
-    def body(): Unit = {
-      runs += 1
-      // same-thread re-entry (the analyzer-construction path): must neither
-      // re-run the body nor mark the key done before the outer frame ends
-      graft.functions.Registration.once(spark, "reentry-test")(body())
-      if (runs == 1) sys.error("outer frame fails after the nested call returned")
+  test("fresh GraftExtensions session: every table name, numbers() and " +
+      "system.one resolve with no register call") {
+    val base = spark
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    // system.one must come from the injected rule, not from a catalog view
+    // another suite's plain session created in the shared catalog
+    val hadView = base.catalog.databaseExists("system") &&
+      base.catalog.tableExists("system.one")
+    if (hadView) base.sql("DROP VIEW system.one")
+    try {
+      val s2 = SparkSession.builder()
+        .master("local[4]")
+        .appName("graft-ext-table-test")
+        .withExtensions(new GraftExtensions)
+        .getOrCreate()
+      val missing = FunctionTable.functions.map(_._1.funcName)
+        .filterNot(s2.catalog.functionExists)
+      assert(missing.isEmpty, s"not resolvable on an extensions session: $missing")
+      assert(s2.sql("SELECT count(*) FROM numbers(3)").head().getLong(0) == 3L)
+      assert(s2.sql("SELECT dummy FROM system.one").collect().toSeq == Seq(Row(0)))
+    } finally {
+      if (hadView) base.sql("CREATE OR REPLACE VIEW system.one AS SELECT 0 AS dummy")
+      SparkSession.setDefaultSession(base)
+      SparkSession.setActiveSession(base)
     }
-    intercept[RuntimeException](
-      graft.functions.Registration.once(spark, "reentry-test")(body()))
-    assert(runs == 1) // nested frame did not re-run the body
-    // the failed outer frame must NOT have been marked done (not even by
-    // its nested frame) — the next call retries and succeeds
-    graft.functions.Registration.once(spark, "reentry-test")(body())
-    assert(runs == 2)
-    // now complete: further calls are a set lookup
-    graft.functions.Registration.once(spark, "reentry-test")(body())
-    assert(runs == 2)
   }
 
   test("Projection.attach on an extensions session adds no second rewrite " +
@@ -65,8 +74,9 @@ class ExtensionsSpec extends SparkSpec {
         .withExtensions(new GraftExtensions)
         .getOrCreate()
       // attach BEFORE the session's first query: attach itself must force
-      // the analyzer (where the injected builder sets the marker), or a
-      // fresh extensions session would get the duplicate rule after all
+      // the optimizer's rule builders (where the injected one sets the
+      // marker), or a fresh extensions session would get the duplicate
+      // rule after all
       graft.mv.Projection.attach(s2)
       assert(s2.conf.getOption(GraftExtensions.MarkerConf).contains("true"))
       assert(!s2.experimental.extraOptimizations

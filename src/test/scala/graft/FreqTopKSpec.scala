@@ -11,7 +11,7 @@ class FreqTopKSpec extends SparkSpec {
 
   test("exact counts and order when distinct values fit the sketch") {
     import spark.implicits._
-    FreqTopK.register(spark)
+    graft.functions.ChCompat.register(spark)
     // value v appears v times, 50 distinct — well under the 8k-capacity
     val df = (1 to 50).flatMap(v => Seq.fill(v)(v.toLong)).toDF("x").repartition(4)
     val out = df.agg(FreqTopK.freq_topk(col("x"), 5).as("t"))
@@ -22,7 +22,7 @@ class FreqTopKSpec extends SparkSpec {
 
   test("heavy hitters survive eviction at 10k distinct over capacity 64") {
     import spark.implicits._
-    FreqTopK.register(spark)
+    graft.functions.ChCompat.register(spark)
     val hitters = Seq("AAA", "BBB", "CCC")
     val rows = (1 to 10000).map(i => s"noise$i") ++
       hitters.flatMap(h => Seq.fill(500)(h))

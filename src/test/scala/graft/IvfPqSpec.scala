@@ -161,8 +161,7 @@ class IvfPqSpec extends SparkSpec {
   }
 
   test("pq_decode / pq_adc_dot agree with local replicas") {
-    graft.functions.VectorOps.register(spark)
-    graft.functions.VectorQuant.register(spark)
+    graft.functions.ChCompat.register(spark)
     val cb = Pq.trainCodebook(emb, "vec_id", "embedding", m = 8, ksub = 16, iterations = 1)
     val rows = emb.select(col("vec_id"),
         graft.functions.VectorQuant.pq_encode(col("embedding"), cb.centroids).as("codes"),

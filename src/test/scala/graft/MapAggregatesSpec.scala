@@ -13,7 +13,7 @@ class MapAggregatesSpec extends SparkSpec {
   import spark.implicits._
 
   test("sumMap combines multi-entry maps; keys come back sorted") {
-    MapAggregates.register(spark)
+    graft.functions.ChCompat.register(spark)
     Seq(
       (1, Seq("b", "a"), Seq(1L, 2L)),
       (1, Seq("a", "c"), Seq(10L, 5L)),
@@ -29,7 +29,7 @@ class MapAggregatesSpec extends SparkSpec {
   }
 
   test("minMap/maxMap with long keys and double values") {
-    MapAggregates.register(spark)
+    graft.functions.ChCompat.register(spark)
     Seq(
       (Seq(1L, 2L), Seq(3.5, 1.0)),
       (Seq(2L, 3L), Seq(4.0, -1.0)),
@@ -44,7 +44,7 @@ class MapAggregatesSpec extends SparkSpec {
   }
 
   test("null entries are dropped; length mismatch fails loudly") {
-    MapAggregates.register(spark)
+    graft.functions.ChCompat.register(spark)
     val ok = Seq((Seq[Option[String]](Some("a"), None), Seq[Option[Long]](Some(1L), Some(2L))))
       .toDF("ks", "vs")
     val got = ok.select(MapAggregates.sum_map($"ks", $"vs").as("m"))
@@ -81,7 +81,6 @@ class MapAggregatesSpec extends SparkSpec {
   }
 
   test("topKWeighted: weight-summed ranking in the exact regime") {
-    graft.functions.FreqTopK.register(spark)
     graft.functions.ChCompat.register(spark)
     // few heavy rows of 'rare' outweigh many light rows of 'common'
     val rows = Seq.fill(50)(("common", 1L)) ++ Seq.fill(2)(("rare", 100L))

@@ -41,6 +41,16 @@ class MultimodalSpec extends SparkSpec {
     assert(out.select("frame_idx").distinct().count() == 4)
   }
 
+  test("frame sampling resolves on the media's own session, not the active one") {
+    val other = spark.newSession()
+    org.apache.spark.sql.SparkSession.setActiveSession(spark)
+    val media2 = Multimodal.fakeMediaFromText(
+      other.range(5).selectExpr("id AS doc_id", "concat('doc ', id) AS text"), "doc_id", "text")
+    val out = Multimodal.sampleFrames(media2, frames = 2)
+    assert(out.sparkSession eq other)
+    assert(out.count() == 10)
+  }
+
   // --- a hand-built MP4 with known sample tables -------------------------
   // atoms: ftyp, moov(trak(mdia(hdlr:vide, minf(stbl(stsz,stsc,stco,stss))))),
   // mdat with 6 samples of sizes 10..60 in two 3-sample chunks

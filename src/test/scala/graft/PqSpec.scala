@@ -148,7 +148,7 @@ class PqSpec extends SparkSpec {
       best
     }
     val cb = Pq.trainCodebook(emb, "vec_id", "embedding", m = 8, ksub = 16, iterations = 1)
-    graft.functions.VectorOps.register(spark)
+    graft.functions.ChCompat.register(spark)
     val rows = emb.select(col("vec_id"),
         graft.functions.VectorQuant.pq_encode(col("embedding"), cb.centroids).as("codes"),
         graft.functions.VectorQuant.pq_lut(col("embedding"), cb.centroids).as("lut"),

@@ -118,7 +118,7 @@ class SequenceMatchSpec extends SparkSpec {
   // ---- SQL end-to-end -----------------------------------------------------
 
   test("SQL registration: funnel triple over grouped events") {
-    SequenceMatch.register(spark)
+    graft.functions.ChCompat.register(spark)
     val rows = Seq(
       // u1: view -> click -> buy (with noise between)
       (1L, 1L, "view"), (1L, 2L, "noise"), (1L, 3L, "click"), (1L, 4L, "buy"),
@@ -142,7 +142,7 @@ class SequenceMatchSpec extends SparkSpec {
   }
 
   test("CH semantics: events matching no condition are invisible to adjacency") {
-    SequenceMatch.register(spark)
+    graft.functions.ChCompat.register(spark)
     val rows = Seq(
       // u1: view -> noise -> click; CH '(?1)(?2)' matches (noise skipped)
       (1L, 1L, "view"), (1L, 2L, "noise"), (1L, 3L, "click"),
@@ -163,7 +163,7 @@ class SequenceMatchSpec extends SparkSpec {
   }
 
   test("bigint ts is epoch seconds: guards compare in seconds") {
-    SequenceMatch.register(spark)
+    graft.functions.ChCompat.register(spark)
     val rows = Seq(
       (1L, 0L, "a"), (1L, 10L, "b"),    // gap 10 s
       (2L, 0L, "a"), (2L, 7200L, "b"))  // gap 2 h
@@ -179,7 +179,7 @@ class SequenceMatchSpec extends SparkSpec {
   }
 
   test("time guard through SQL: gap bound decides the match") {
-    SequenceMatch.register(spark)
+    graft.functions.ChCompat.register(spark)
     val rows = Seq(
       (1L, 0L, "a"), (1L, 10L, "b"),   // gap 10s
       (2L, 0L, "a"), (2L, 100L, "b"))  // gap 100s

@@ -8,7 +8,7 @@ class TextSpec extends SparkSpec {
 
   override def beforeAll(): Unit = {
     super.beforeAll()
-    graft.text.TextFunctions.register(spark) // token_set_count
+    graft.functions.ChCompat.register(spark)
   }
 
   test("langId votes the right language on clear-cut snippets") {

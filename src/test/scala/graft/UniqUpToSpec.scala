@@ -15,7 +15,7 @@ class UniqUpToSpec extends SparkSpec {
   import spark.implicits._
 
   test("equals least(count distinct, N+1) across N, including string keys") {
-    UniqUpTo.register(spark)
+    graft.functions.ChCompat.register(spark)
     val rnd = new scala.util.Random(5)
     Seq.fill(2000)((rnd.nextInt(40).toLong, "t" + rnd.nextInt(17)))
       .toDF("uid", "etype").createOrReplaceTempView("upto_t")
@@ -34,7 +34,7 @@ class UniqUpToSpec extends SparkSpec {
   }
 
   test("grouped two-phase path: per-group saturation independent") {
-    UniqUpTo.register(spark)
+    graft.functions.ChCompat.register(spark)
     (0 until 1000).map(i => (i % 3, i.toLong))
       .toDF("g", "uid").createOrReplaceTempView("upto_g")
     val got = spark.sql(

@@ -19,7 +19,7 @@ class VectorOpsSpec extends SparkSpec {
     .toDF("id", "v")
 
   test("l2_norm and l2_normalize: unit norm, zero vector yields null") {
-    VectorOps.register(spark)
+    graft.functions.ChCompat.register(spark)
     val got = vecDf.select($"id", VectorOps.l2_norm($"v").as("n"),
         VectorOps.l2_normalize($"v").as("u"))
       .collect().map(r => (r.getLong(0),
@@ -36,7 +36,7 @@ class VectorOpsSpec extends SparkSpec {
   }
 
   test("quantize_int8: extremes hit ±127, zero vector yields null, bounds hold") {
-    VectorOps.register(spark)
+    graft.functions.ChCompat.register(spark)
     val got = vecDf.select($"id", VectorOps.quantize_int8($"v").as("q"))
       .collect().map(r => (r.getLong(0), if (r.isNullAt(1)) null else r.getSeq[Int](1)))
       .toMap
@@ -49,7 +49,7 @@ class VectorOpsSpec extends SparkSpec {
   }
 
   test("cosine is invariant under normalization") {
-    VectorOps.register(spark)
+    graft.functions.ChCompat.register(spark)
     val rnd = new scala.util.Random(3)
     val vs = Seq.fill(20)((rnd.nextLong(), Array.fill(16)(rnd.nextFloat() - 0.5f)))
       .toDF("id", "v")

@@ -28,7 +28,7 @@ class WindowFunnelSpec extends SparkSpec {
 
   test("hand-crafted chains: depth, window cutoff, ties never chain") {
     import spark.implicits._
-    WindowFunnel.register(spark)
+    graft.functions.ChCompat.register(spark)
     // bigint ts = CH DateTime epoch seconds; window 5 = 5 seconds
     val rows = Seq(
       // g1: clean 3-chain within window
@@ -53,7 +53,7 @@ class WindowFunnelSpec extends SparkSpec {
 
   test("strict_order: any stored event between steps interrupts (CH's A->B->D->C)") {
     import spark.implicits._
-    WindowFunnel.register(spark)
+    graft.functions.ChCompat.register(spark)
     val rows = Seq(
       // CH doc example: A B D C — D interrupts the A->B->C search at level 2
       ("g1", 1L, "A"), ("g1", 2L, "B"), ("g1", 3L, "D"), ("g1", 4L, "C"),
@@ -77,7 +77,7 @@ class WindowFunnelSpec extends SparkSpec {
 
   test("strict_dedup: repeating an already-matched condition interrupts") {
     import spark.implicits._
-    WindowFunnel.register(spark)
+    graft.functions.ChCompat.register(spark)
     val rows = Seq(
       // A B A C: the second A repeats matched cond1 between B and C -> 2
       ("g1", 1L, "A"), ("g1", 2L, "B"), ("g1", 3L, "A"), ("g1", 4L, "C"),
@@ -99,7 +99,7 @@ class WindowFunnelSpec extends SparkSpec {
 
   test("strict_increase is the baseline contract: mode accepted, same result") {
     import spark.implicits._
-    WindowFunnel.register(spark)
+    graft.functions.ChCompat.register(spark)
     Seq(("g", 1L, "A"), ("g", 1L, "B"), ("g", 2L, "B"))
       .toDF("g", "ts", "et").createOrReplaceTempView("graft_wf_si")
     val q = (mode: String) => spark.sql(
@@ -111,7 +111,7 @@ class WindowFunnelSpec extends SparkSpec {
 
   test("matches brute force on 300 seeded random groups (incl. ties)") {
     import spark.implicits._
-    WindowFunnel.register(spark)
+    graft.functions.ChCompat.register(spark)
     val rnd = new scala.util.Random(42)
     val cases = (0 until 300).map { gid =>
       val n = 1 + rnd.nextInt(8)
