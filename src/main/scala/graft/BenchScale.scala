@@ -129,16 +129,7 @@ object BenchScale {
       Set("ingest", "probe", "cc", "ivf", "compact", "tfidf", "spans", "stats",
         "hotkey"))
     def on(s: String): Boolean = sections.isEmpty || sections.contains(s)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.bench()
     val out = new StringBuilder
     def emit(json: String): Unit = { println(json); out.append(json).append('\n'); () }
 

@@ -1,22 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // NOTE: deliberately NOT raising the objectHashAggregate sort-fallback
-      // threshold here (Bench does): the gate should exercise the default-
-      // config sort-based path of the state aggregates too
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.gate()
     new java.io.File(outDir).mkdirs()
     // dev-loop filter: SPARK_GRAFT_ONLY=q97,q98 runs just those queries
     // (comma-separated name prefixes); unset = the driver's full sweep

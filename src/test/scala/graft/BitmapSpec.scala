@@ -149,4 +149,24 @@ class BitmapSpec extends SparkSpec {
       .collect()(0).getLong(0)
     assert(got == uids.size.toLong)
   }
+
+  test("bitmap_merge_agg over raw user_id longs fails at analysis") {
+    import spark.implicits._
+    graft.functions.ChCompat.register(spark)
+    // the -Merge misuse: states expected, raw ids given
+    val ids = Seq(1L, 2L, 3L).toDF("user_id")
+    intercept[org.apache.spark.sql.AnalysisException] {
+      ids.agg(bitmap_merge_agg(col("user_id"))).collect()
+    }
+  }
+
+  test("an id outside uint32 fails at runtime instead of truncating") {
+    graft.functions.ChCompat.register(spark)
+    val e = intercept[Exception] {
+      spark.range(3).agg(bitmap_agg(lit(-5L))).collect()
+    }
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(c => String.valueOf(c.getMessage)).toList
+    assert(msgs.exists(_.contains("out of uint32 range")), msgs.mkString("\n"))
+  }
 }

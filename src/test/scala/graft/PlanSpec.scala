@@ -170,7 +170,7 @@ class PlanSpec extends SparkSpec {
   // TREE — hash AND range partitionings; subtrees persisted by the query
   // itself collapse into InMemoryRelation, which is what executes, so the
   // count is stable regardless of suite order). Measured from the plans as
-  // shipped (PlanProbe prints current numbers). A regression — a lost
+  // shipped (`graft.Dev plan` prints current numbers). A regression — a lost
   // broadcast, a new accidental shuffle — fails by query name; a NEW query
   // must declare its budget here before it ships.
   private val exchangeBudgets = Map(
@@ -487,13 +487,13 @@ class PlanSpec extends SparkSpec {
     import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
     // cache entries left by other suites move the InMemoryRelation
     // boundaries inside persisted pipelines; start from the state
-    // PlanProbe measures (only each query's OWN persists in play)
+    // `graft.Dev plan` measures (only each query's OWN persists in play)
     spark.sharedState.cacheManager.clearCache()
     for (name <- SparkEntry.queries.keys.toSeq.sorted) {
-      assert(exchangeBudgets.contains(name),
-        s"$name: new query without a declared exchange budget — measure with PlanProbe and add it")
       val p = planOf(name)
       val ex = p.collect { case e: ShuffleExchangeExec => e }.length
+      assert(exchangeBudgets.contains(name),
+        s"""$name: new query without a declared exchange budget — it plans $ex; add "$name" -> $ex""")
       assert(ex <= exchangeBudgets(name),
         s"$name: plan grew to $ex exchanges (budget ${exchangeBudgets(name)})")
       assert(p.collect { case c: CartesianProductExec => c }.isEmpty,

@@ -18,6 +18,14 @@ class QueriesSpec extends SparkSpec {
     assert(failures.isEmpty, failures.mkString("\n"))
   }
 
+  test("the flagship entry merges both insert batches into unique (day, segment) rows") {
+    val rows = SparkEntry.entry(spark).select("day", "segment").collect()
+    assert(rows.nonEmpty)
+    val keys = rows.map(r => (r.get(0), r.getString(1)))
+    assert(keys.distinct.length == keys.length,
+      s"duplicate rollup keys: ${keys.diff(keys.distinct).take(5).mkString(", ")}")
+  }
+
   test("every oracle entry names a declared query") {
     val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(orphans.isEmpty, s"oracles without queries: $orphans")

@@ -1,7 +1,9 @@
 #!/bin/bash
-# dev helper: run a graft main with the same JVM options sbt's forked runs
-# use (Spark 4 on JDK 17 needs the add-opens; raw `java -cp` does not get
-# them and fails on e.g. date decoding via sun.util.calendar).
+# dev helper: run a graft main (Verify, Bench, BenchScale, or the Dev CLI,
+# e.g. `tools/jrun.sh graft.Dev plan /root/testdata/sf0.001`) with the same
+# JVM options sbt's forked runs use (Spark 4 on JDK 17 needs the add-opens;
+# raw `java -cp` does not get them and fails on e.g. date decoding via
+# sun.util.calendar).
 #
 # Classpath is built directly (compiled classes + the Spark jar dir, which
 # includes RoaringBitmap) so it survives `sbt clean` — no cached export.
