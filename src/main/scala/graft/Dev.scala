@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
@@ -14,10 +15,12 @@ import scala.collection.mutable.ArrayBuffer
   * `Sessions.bench`, so what it shows is what the bench runs.
   *
   *   plan <sfDir> [--out DIR --suffix S] [names...]
-  *     one `PLANSTAT name exchanges cartesians bnlj` line per query
-  *     (default: every declared query), counted as PlanSpec counts them
-  *     (AQE off, cache cleared; PlanSpec runs 4 cores, so run with
-  *     SPARK_GRAFT_CPUS=4 to reproduce its numbers). `--out` also writes
+  *     one `PLANSTAT name exchanges cartesians bnlj fallback=<n>` line per
+  *     query (default: every declared query), counted as PlanSpec counts
+  *     them (AQE off, cache cleared; PlanSpec runs 4 cores, so run with
+  *     SPARK_GRAFT_CPUS=4 to reproduce its numbers); `fallback` counts the
+  *     `CodegenFallback` expressions in the executed plan and its
+  *     subqueries, as the perfbench trace does. `--out` also writes
   *     each plan's `explain("formatted")` under the bench config to
   *     DIR/<name>_<S>.txt (S defaults to `before`): pushed filters, read
   *     schemas, join and aggregate styles, codegen spans.
@@ -73,7 +76,10 @@ object Dev {
         val ex = p.collect { case e: ShuffleExchangeExec => e }.length
         val cart = p.collect { case c: CartesianProductExec => c }.length
         val bnlj = p.collect { case j: BroadcastNestedLoopJoinExec => j }.length
-        println(s"PLANSTAT $name $ex $cart $bnlj")
+        val fallback = p.collectWithSubqueries { case n =>
+          n.expressions.map(_.collect { case f: CodegenFallback => f }.size).sum
+        }.sum
+        println(s"PLANSTAT $name $ex $cart $bnlj fallback=$fallback")
       } catch {
         case e: Exception => println(s"PLANSTAT $name ERROR ${e.getClass.getSimpleName}")
       }

@@ -16,25 +16,32 @@ object Sessions {
     * bitmap/HLL/top-k states — compact objects — keep their partial
     * aggregation hash-based instead of the 128-group sort fallback.
     */
-  def bench(): SparkSession = build(defaultCpus = 32, hashStateAggs = true)
+  def bench(): SparkSession = build(benchConf(sys.env.get("SPARK_GRAFT_CPUS")))
 
   /** `Verify`: local[4] unless overridden, and the default fallback
     * threshold, so the gate exercises the default-config sort-based path
     * of the state aggregates too.
     */
-  def gate(): SparkSession = build(defaultCpus = 4, hashStateAggs = false)
+  def gate(): SparkSession = build(gateConf(sys.env.get("SPARK_GRAFT_CPUS")))
 
-  private def build(defaultCpus: Int, hashStateAggs: Boolean): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus.toString)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    if (hashStateAggs)
-      builder.config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
-    val spark = builder.getOrCreate()
+  /** The confs [[bench]] builds its session with, for `cpus` (else 32). */
+  private[graft] def benchConf(cpus: Option[String]): Map[String, String] =
+    common(cpus.getOrElse("32")) +
+      ("spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "1000000")
+
+  /** The confs [[gate]] builds its session with, for `cpus` (else 4). */
+  private[graft] def gateConf(cpus: Option[String]): Map[String, String] =
+    common(cpus.getOrElse("4"))
+
+  private def common(cpus: String): Map[String, String] = Map(
+    "spark.master" -> s"local[$cpus]",
+    "spark.sql.shuffle.partitions" -> cpus,
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.ui.enabled" -> "false")
+
+  private def build(conf: Map[String, String]): SparkSession = {
+    val spark = SparkSession.builder().config(conf).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.functions.ChCompat.register(spark)
     spark

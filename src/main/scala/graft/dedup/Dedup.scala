@@ -61,7 +61,7 @@ object Dedup {
   /** Signature-agreement Jaccard estimate between two minhash signatures
     * (fraction of matching positions — the standard unbiased estimator).
     * Evaluated once per CANDIDATE PAIR, so it runs through the primitive
-    * [[graft.functions.SigMatchCount]] expression rather than an
+    * `sig_match_count` kernel rather than an
     * interpreted zip_with lambda (requires `ChCompat.register`, which every
     * pipeline entry point here calls).
     */
@@ -265,7 +265,7 @@ object Dedup {
   }
 
   /** 64-bit SimHash over tokens: per-bit majority vote of token hashes,
-    * via the single-pass [[graft.functions.Simhash64Expr]] (one xxhash64
+    * via the single-pass `simhash64` kernel (one xxhash64
     * per token + 64 counter bumps — the composed 64-bit-lambda HOF form
     * evaluated interpreted and was the simhash pipeline's scale cost).
     * Requires `ChCompat.register` on the session (every entry point here
@@ -349,6 +349,7 @@ object Dedup {
     * family (and the carrier type) differ.
     */
   def simhashBitsMd5(df: DataFrame, textCol: String, idCol: String): DataFrame = {
+    graft.functions.ChCompat.register(df.sparkSession)
     graft.engine.Warehouse
       .spreadForCompute(df.select(col(idCol).as("id"), col(textCol).as("__text")), "id")
       // conv(hex, 16, 2) is Hive/Spark unsigned-64 base conversion; lpad

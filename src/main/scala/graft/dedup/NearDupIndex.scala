@@ -16,7 +16,7 @@ import org.apache.spark.storage.StorageLevel
   * LONG, sig ARRAY<LONG>)`, CLUSTERED BY (bucket) — and every history
   * join keys on `bucket` ALONE, so HashPartitioning(bucket) satisfies
   * them all without subset-co-partitioning games. Bucket values are
-  * band-seeded xxhash64 (LshBucketsExpr hashes (band, band rows)), so
+  * band-seeded xxhash64 (`lsh_buckets` hashes (band, band rows)), so
   * band can be dropped from the LSH join keys: cross-band equal buckets
   * need an xxhash64 collision, and any such pair still faces est_jaccard
   * verification downstream. Row kinds:
@@ -227,7 +227,7 @@ final class NearDupIndex(
     val raw = rawData
     // history on the LEFT = the streamed side, joined on `bucket` ALONE —
     // the table's single bucketing column, so only the batch side ever
-    // exchanges. Bucket values are band-seeded xxhash64 (LshBucketsExpr),
+    // exchanges. Bucket values are band-seeded xxhash64 (`lsh_buckets`),
     // so dropping band from the key admits only 2^-64 cross-band
     // collisions, and those still face the est_jaccard verification.
     // The history band rows are SLIM (no sig): candidates carry the

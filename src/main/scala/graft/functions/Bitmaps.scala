@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions.{call_function, coalesce, lit, when}
 import org.apache.spark.sql.types._
 import org.roaringbitmap.RoaringBitmap
@@ -57,10 +58,206 @@ object Bitmaps {
       f(s"bitmap_${op}_fold_agg")(exprs => BitmapFoldAggregate(exprs.head, op))
     // raw (null-propagating) scalar algebra — the Column helpers below
     // wrap these with the CH null conventions
-    f("bitmap_cardinality_raw")(exprs => BitmapCardinalityExpr(exprs.head))
+    f("bitmap_cardinality_raw")(cardinality)
     for ((name, op) <- Seq("bitmap_and_raw" -> "and", "bitmap_or_raw" -> "or",
         "bitmap_and_card_raw" -> "and_card", "bitmap_or_card_raw" -> "or_card"))
-      f(name)(exprs => BitmapBinaryExpr(exprs(0), exprs(1), op))
+      f(name)(binary(op))
+  }
+
+  // ---- the scalar algebra as Kernels (shared with ChCompat's bitmap*) ----
+
+  private val state = Arg.Is(BinaryType)
+
+  private[functions] def cardinality(es: Seq[Expression]): Kernel =
+    Kernel.of(this, "bitmapCardinality", "bitmapCardinality", LongType, es, Seq(state))
+
+  /** op → (kernel method, result type) of the two-bitmap forms. */
+  private val binaryOps: Map[String, (String, DataType)] = Map(
+    "and" -> ("bitmapAnd", BinaryType), "or" -> ("bitmapOr", BinaryType),
+    "xor" -> ("bitmapXor", BinaryType), "andnot" -> ("bitmapAndnot", BinaryType),
+    "and_card" -> ("bitmapAndCardinality", LongType),
+    "or_card" -> ("bitmapOrCardinality", LongType),
+    "xor_card" -> ("bitmapXorCardinality", LongType),
+    "andnot_card" -> ("bitmapAndnotCardinality", LongType),
+    "has_all" -> ("bitmapHasAll", BooleanType), "has_any" -> ("bitmapHasAny", BooleanType))
+
+  private[functions] def binary(op: String)(es: Seq[Expression]): Kernel = {
+    val (method, out) = binaryOps(op)
+    Kernel.of(this, method, s"bitmap_$op", out, es, Seq(state, state))
+  }
+
+  private[functions] def unary(method: String, name: String, out: DataType)(
+      es: Seq[Expression]): Kernel =
+    Kernel.of(this, method, name, out, es, Seq(state))
+
+  private[functions] def contains(es: Seq[Expression]): Kernel =
+    Kernel.of(this, "bitmapContains", "bitmapContains", BooleanType, es,
+      Seq(state, Arg.Integral))
+
+  // an empty `array()` literal has void elements
+  private val idArray = Arg.ArrayOf(Arg.Is(LongType, IntegerType, ShortType, NullType))
+
+  private[functions] def build(es: Seq[Expression]): Kernel =
+    Kernel.of(this, "bitmapBuild", "bitmapBuild", BinaryType, es, Seq(idArray),
+      es.take(1).map(Kernel.elementType))
+
+  /** bitmapSubsetInRange / bitmapSubsetLimit / subBitmap by `op`. */
+  private[functions] def subset(method: String, op: String)(es: Seq[Expression]): Kernel =
+    Kernel.of(this, method, s"bitmapSubset_$op", BinaryType, es,
+      Seq(state, Arg.Integral, Arg.Integral))
+
+  private[functions] def transform(es: Seq[Expression]): Kernel =
+    Kernel.of(this, "bitmapTransform", "bitmapTransform", BinaryType, es,
+      Seq(state, idArray, idArray), es.slice(1, 3).map(Kernel.elementType))
+
+  // ---- kernel methods over serialized states --------------------------
+
+  def bitmapCardinality(b: Array[Byte]): Long = fromBytes(b).getLongCardinality
+
+  def bitmapAnd(l: Array[Byte], r: Array[Byte]): Array[Byte] =
+    toBytes(RoaringBitmap.and(fromBytes(l), fromBytes(r)))
+  def bitmapOr(l: Array[Byte], r: Array[Byte]): Array[Byte] =
+    toBytes(RoaringBitmap.or(fromBytes(l), fromBytes(r)))
+  def bitmapXor(l: Array[Byte], r: Array[Byte]): Array[Byte] =
+    toBytes(RoaringBitmap.xor(fromBytes(l), fromBytes(r)))
+  def bitmapAndnot(l: Array[Byte], r: Array[Byte]): Array[Byte] =
+    toBytes(RoaringBitmap.andNot(fromBytes(l), fromBytes(r)))
+  def bitmapAndCardinality(l: Array[Byte], r: Array[Byte]): Long =
+    RoaringBitmap.andCardinality(fromBytes(l), fromBytes(r)).toLong
+  def bitmapOrCardinality(l: Array[Byte], r: Array[Byte]): Long =
+    RoaringBitmap.orCardinality(fromBytes(l), fromBytes(r)).toLong
+  def bitmapXorCardinality(l: Array[Byte], r: Array[Byte]): Long = {
+    val a = fromBytes(l); val b = fromBytes(r)
+    RoaringBitmap.orCardinality(a, b).toLong - RoaringBitmap.andCardinality(a, b).toLong
+  }
+  def bitmapAndnotCardinality(l: Array[Byte], r: Array[Byte]): Long = {
+    val a = fromBytes(l); val b = fromBytes(r)
+    a.getLongCardinality - RoaringBitmap.andCardinality(a, b).toLong
+  }
+  /** hasAll(a, b): does a contain EVERY element of b (empty b → true) */
+  def bitmapHasAll(l: Array[Byte], r: Array[Byte]): Boolean = {
+    val a = fromBytes(l); val b = fromBytes(r)
+    RoaringBitmap.andCardinality(a, b).toLong == b.getLongCardinality
+  }
+  def bitmapHasAny(l: Array[Byte], r: Array[Byte]): Boolean =
+    RoaringBitmap.intersects(fromBytes(l), fromBytes(r))
+
+  /** bitmapContains(bitmap, x) — membership of one uint32. */
+  def bitmapContains(b: Array[Byte], x: Long): Boolean =
+    x >= 0L && x <= 0xFFFFFFFFL && fromBytes(b).contains(toUint32(x))
+
+  /** bitmapToArray: ascending BIGINT array of the members. */
+  def bitmapToArray(b: Array[Byte]): ArrayData = {
+    val bm = fromBytes(b)
+    val out = new Array[Any](bm.getCardinality)
+    val it = bm.iterator()
+    var i = 0
+    while (it.hasNext) { out(i) = it.next().toLong & 0xFFFFFFFFL; i += 1 }
+    new GenericArrayData(out)
+  }
+  /** bitmapMin / bitmapMax: smallest/largest member, 0 when empty (CH's convention) */
+  def bitmapMin(b: Array[Byte]): Long = {
+    val bm = fromBytes(b)
+    if (bm.isEmpty) 0L else bm.first().toLong & 0xFFFFFFFFL
+  }
+  def bitmapMax(b: Array[Byte]): Long = {
+    val bm = fromBytes(b)
+    if (bm.isEmpty) 0L else bm.last().toLong & 0xFFFFFFFFL
+  }
+
+  /** bitmapBuild(array) — serialize an integral array into a bitmap state
+    * (the literal-set entry point of the doc's funnel recipes).
+    */
+  def bitmapBuild(arr: ArrayData, et: DataType): Array[Byte] = {
+    val bm = new RoaringBitmap()
+    var i = 0
+    while (i < arr.numElements()) {
+      val x = et match {
+        case LongType => arr.getLong(i)
+        case IntegerType => arr.getInt(i).toLong
+        case ShortType => arr.getShort(i).toLong
+        case _ => throw new IllegalArgumentException(
+          s"bitmapBuild: integral array required, got array<${et.simpleString}>")
+      }
+      bm.add(toUint32(x))
+      i += 1
+    }
+    toBytes(bm)
+  }
+
+  /** bitmapSubsetInRange(bm, start, end) — members in [start, end). */
+  def bitmapSubsetInRange(b: Array[Byte], a: Long, c: Long): Array[Byte] = {
+    val out = new RoaringBitmap()
+    val it = fromBytes(b).iterator()
+    while (it.hasNext) {
+      val x = it.next().toLong & 0xFFFFFFFFL
+      if (x >= a && x < c) out.add(x.toInt)
+    }
+    toBytes(out)
+  }
+  /** bitmapSubsetLimit(bm, start, n) — the n smallest members ≥ start. */
+  def bitmapSubsetLimit(b: Array[Byte], a: Long, c: Long): Array[Byte] = {
+    val out = new RoaringBitmap()
+    val it = fromBytes(b).iterator()
+    var taken = 0L
+    while (it.hasNext && taken < c) {
+      val x = it.next().toLong & 0xFFFFFFFFL
+      if (x >= a) { out.add(x.toInt); taken += 1 }
+    }
+    toBytes(out)
+  }
+  /** subBitmap(bm, offset, n) — n members starting at rank `offset`
+    * (0-based) in ascending order. */
+  def subBitmap(b: Array[Byte], a: Long, c: Long): Array[Byte] = {
+    val out = new RoaringBitmap()
+    val it = fromBytes(b).iterator()
+    var rank = 0L
+    var taken = 0L
+    while (it.hasNext && taken < c) {
+      val x = it.next()
+      if (rank >= a) { out.add(x); taken += 1 }
+      rank += 1
+    }
+    toBytes(out)
+  }
+
+  /** CH `bitmapTransform(bm, from_array, to_array)` — sequential value
+    * remapping on the LIVE bitmap (CH's documented pair-by-pair semantics:
+    * each `from[i]` still present at step i is removed and `to[i]` added,
+    * so overlapping from/to chains compose left to right — the doc example
+    * [5,999,2]→[2,888,20] over {1..10} yields 20, not a kept 2).
+    */
+  def bitmapTransform(b: Array[Byte], fromV: ArrayData, toV: ArrayData,
+      fromEt: DataType, toEt: DataType): Array[Byte] = {
+    def elems(arr: ArrayData, et: DataType): Array[Long] =
+      Array.tabulate(arr.numElements()) { i =>
+        // a NULL slot read via getLong/getInt would silently come back 0
+        // and the remap would quietly touch value 0 — reject it
+        if (arr.isNullAt(i)) throw new IllegalArgumentException(
+          s"bitmapTransform: NULL element at position $i in from/to array")
+        et match {
+          case LongType => arr.getLong(i)
+          case IntegerType => arr.getInt(i).toLong
+          case ShortType => arr.getShort(i).toLong
+          case _ => throw new IllegalArgumentException(
+            s"bitmapTransform: integral arrays required, got array<${et.simpleString}>")
+        }
+      }
+    val bm = fromBytes(b)
+    val from = elems(fromV, fromEt)
+    val to = elems(toV, toEt)
+    require(from.length == to.length,
+      s"bitmapTransform: from/to lengths differ (${from.length} vs ${to.length})")
+    var i = 0
+    while (i < from.length) {
+      val f = toUint32(from(i))
+      if (bm.contains(f)) {
+        bm.remove(f)
+        bm.add(toUint32(to(i)))
+      }
+      i += 1
+    }
+    toBytes(bm)
   }
 
   /** groupBitmap: aggregate integral ids into a serialized RoaringBitmap. */

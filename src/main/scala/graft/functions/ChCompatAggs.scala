@@ -3,7 +3,6 @@ package graft.functions
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
@@ -479,7 +478,7 @@ private[functions] object ChCompatAggs {
     f("groupBitmap") { es =>
       // cardinality of the aggregated bitmap — scalar-on-aggregate needs the
       // aggregate wrapped explicitly when composed inside another expression
-      BitmapCardinalityExpr(BitmapAggregate(es.head).toAggregateExpression())
+      Bitmaps.cardinality(Seq(BitmapAggregate(es.head).toAggregateExpression()))
     }
     f("groupBitmapState") { es => BitmapAggregate(es.head).toAggregateExpression() }
     f("groupBitmapStateIf") { es =>
@@ -487,7 +486,7 @@ private[functions] object ChCompatAggs {
     }
     f("groupBitmapMergeState") { es => BitmapMergeAggregate(es.head).toAggregateExpression() }
     f("groupBitmapMerge") { es =>
-      BitmapCardinalityExpr(BitmapMergeAggregate(es.head).toAggregateExpression())
+      Bitmaps.cardinality(Seq(BitmapMergeAggregate(es.head).toAggregateExpression()))
     }
     // CH's aggregate-form folds over a bitmap-STATE column: plain
     // spelling = folded cardinality, -State = the folded bitmap
@@ -495,36 +494,36 @@ private[functions] object ChCompatAggs {
     // spelling's sake)
     for (op <- Seq("and", "or", "xor")) {
       f(s"groupBitmap${op.capitalize}") { es =>
-        BitmapCardinalityExpr(
-          BitmapFoldAggregate(es.head, op).toAggregateExpression())
+        Bitmaps.cardinality(Seq(BitmapFoldAggregate(es.head, op).toAggregateExpression()))
       }
       f(s"groupBitmap${op.capitalize}State") { es =>
         BitmapFoldAggregate(es.head, op).toAggregateExpression()
       }
     }
-    f("bitmapCardinality") { es => BitmapCardinalityExpr(es.head) }
-    f("bitmapAnd") { es => BitmapBinaryExpr(es(0), es(1), "and") }
-    f("bitmapOr") { es => BitmapBinaryExpr(es(0), es(1), "or") }
-    f("bitmapAndCardinality") { es => BitmapBinaryExpr(es(0), es(1), "and_card") }
-    f("bitmapOrCardinality") { es => BitmapBinaryExpr(es(0), es(1), "or_card") }
+    f("bitmapCardinality")(Bitmaps.cardinality)
+    f("bitmapAnd")(Bitmaps.binary("and"))
+    f("bitmapOr")(Bitmaps.binary("or"))
+    f("bitmapAndCardinality")(Bitmaps.binary("and_card"))
+    f("bitmapOrCardinality")(Bitmaps.binary("or_card"))
     // the rest of CH's bitmap algebra (doc:1207-1238 uses and/or; the
     // full family completes the surface): xor/andnot + cardinalities,
     // membership predicates, array round-trips, extrema, subset slicing
-    f("bitmapXor") { es => BitmapBinaryExpr(es(0), es(1), "xor") }
-    f("bitmapAndnot") { es => BitmapBinaryExpr(es(0), es(1), "andnot") }
-    f("bitmapXorCardinality") { es => BitmapBinaryExpr(es(0), es(1), "xor_card") }
-    f("bitmapAndnotCardinality") { es => BitmapBinaryExpr(es(0), es(1), "andnot_card") }
-    f("bitmapHasAll") { es => BitmapBinaryExpr(es(0), es(1), "has_all") }
-    f("bitmapHasAny") { es => BitmapBinaryExpr(es(0), es(1), "has_any") }
-    f("bitmapContains") { es => BitmapContainsExpr(es(0), es(1)) }
-    f("bitmapToArray") { es => BitmapUnaryExpr(es.head, "to_array") }
-    f("bitmapMin") { es => BitmapUnaryExpr(es.head, "min") }
-    f("bitmapMax") { es => BitmapUnaryExpr(es.head, "max") }
-    f("bitmapBuild") { es => BitmapBuildExpr(es.head) }
-    f("bitmapSubsetInRange") { es => BitmapSubsetExpr(es(0), es(1), es(2), "range") }
-    f("bitmapSubsetLimit") { es => BitmapSubsetExpr(es(0), es(1), es(2), "limit") }
-    f("subBitmap") { es => BitmapSubsetExpr(es(0), es(1), es(2), "sub") }
-    f("bitmapTransform") { es => BitmapTransformExpr(es(0), es(1), es(2)) }
+    f("bitmapXor")(Bitmaps.binary("xor"))
+    f("bitmapAndnot")(Bitmaps.binary("andnot"))
+    f("bitmapXorCardinality")(Bitmaps.binary("xor_card"))
+    f("bitmapAndnotCardinality")(Bitmaps.binary("andnot_card"))
+    f("bitmapHasAll")(Bitmaps.binary("has_all"))
+    f("bitmapHasAny")(Bitmaps.binary("has_any"))
+    f("bitmapContains")(Bitmaps.contains)
+    f("bitmapToArray")(Bitmaps.unary("bitmapToArray", "bitmap_to_array",
+      ArrayType(LongType, containsNull = false)))
+    f("bitmapMin")(Bitmaps.unary("bitmapMin", "bitmap_min", LongType))
+    f("bitmapMax")(Bitmaps.unary("bitmapMax", "bitmap_max", LongType))
+    f("bitmapBuild")(Bitmaps.build)
+    f("bitmapSubsetInRange")(Bitmaps.subset("bitmapSubsetInRange", "range"))
+    f("bitmapSubsetLimit")(Bitmaps.subset("bitmapSubsetLimit", "limit"))
+    f("subBitmap")(Bitmaps.subset("subBitmap", "sub"))
+    f("bitmapTransform")(Bitmaps.transform)
 
     // ---- medianExact family (dwm:83,100,114) -------------------------
     f("medianExact") { es => new Percentile(es.head, Literal(0.5)) }
@@ -551,8 +550,7 @@ private[functions] object ChCompatAggs {
         case n: Number => n.doubleValue()
         case other => sys.error(s"quantileTDigestMerge: bad quantile literal $other")
       }
-      QuantileSketchValueExpr(
-        QuantileSketchMergeAggregate(es.head).toAggregateExpression(), q)
+      QuantileSketch.value(QuantileSketchMergeAggregate(es.head).toAggregateExpression(), q)
     }
 
   }

@@ -3,10 +3,9 @@ package graft.functions
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.trees.BinaryLike
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData, MapData}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** ChCompat's array/tuple/map families: CH lambda-first array functions,
   * array analytics and completion, vector math over arrays, the tuple
@@ -218,15 +217,9 @@ private[functions] object ChCompatArrays {
     f("arrayRotateLeft") { es => rotL(es(0), es(1)) }
     f("arrayRotateRight") { es => rotL(es(0), UnaryMinus(es(1))) }
     // arrayShiftLeft/Right(arr, n[, default]): dropped slots fill with the
-    // explicit default (2-arg form fills with the element type's default,
-    // resolved at runtime by the dedicated expression — the builder can't
-    // inspect unresolved child types)
-    f("arrayShiftLeft") { es =>
-      ArrayShiftExpr(es(0), es(1), es.drop(2).headOption, shiftLeft = true)
-    }
-    f("arrayShiftRight") { es =>
-      ArrayShiftExpr(es(0), es(1), es.drop(2).headOption, shiftLeft = false)
-    }
+    // explicit default (2-arg form: the element type's CH default)
+    f("arrayShiftLeft")(arrayShift(shiftLeft = true))
+    f("arrayShiftRight")(arrayShift(shiftLeft = false))
     // consecutive n-windows: [a,b,c,d] / 2 → [[a,b],[b,c],[c,d]]
     f("arrayShingles") { es =>
       val arr = es(0); val n = Cast(es(1), IntegerType)
@@ -239,7 +232,12 @@ private[functions] object ChCompatArrays {
     }
     // exact ROC AUC over per-row (scores, labels) arrays — ties get the
     // average-rank half credit
-    f("arrayAUC") { es => ArrayAucExpr(es(0), es(1)) }
+    f("arrayAUC") { es =>
+      val scores = Arg.ArrayOf(Arg.Is(DoubleType, FloatType, LongType, IntegerType,
+        ShortType, BooleanType, NullType))
+      Kernel.of(this, "arrayAuc", "arrayAUC", DoubleType, es, Seq(scores, scores),
+        es.map(Kernel.elementType), returnsNull = true)
+    }
     // arrayFirst/arrayLast(lambda, arr): one fold carrying a ≤1-element
     // buffer (the lambda-bearing registration must RESOLVE to a
     // HigherOrderFunction at top level, so the pick lives in the fold and
@@ -412,7 +410,15 @@ private[functions] object ChCompatArrays {
     // HostNameExpr's contract note);
     // toTypeName reports Spark type names, not CH's — doc:897's debug aid)
     f("hostName") { _ => HostNameExpr() }
-    f("byteSize") { es => ByteSizeExpr(es.head) }
+    // exact for binary/string payloads (the state-sizing use case), element
+    // count × width for arrays; fixed-width types report their width
+    f("byteSize") { es =>
+      val width = es.headOption.map(_.dataType) match {
+        case Some(ArrayType(et, _)) => math.max(et.defaultSize, 1)
+        case other => other.fold(0)(_.defaultSize)
+      }
+      Kernel.of(this, "byteSize", "byteSize", LongType, es, Seq(Arg.AnyType), Seq(width))
+    }
     f("toTypeName") { es => ToTypeNameExpr(es.head) }
     // float classification (CH isFinite/isInfinite/ifNotFinite; isNaN is
     // Spark's case-insensitive isnan already)
@@ -479,10 +485,10 @@ private[functions] object ChCompatArrays {
       Coalesce(Seq(ArrayMin(idxHits), Literal(0)))
     }
     f("ngramDistanceCaseInsensitive") { es =>
-      StringDistExpr(Lower(es(0)), Lower(es(1)), "ngramDistance")
+      StringDistance.metric("ngramDistance")(es.map(Lower))
     }
     f("ngramSearchCaseInsensitive") { es =>
-      StringDistExpr(Lower(es(0)), Lower(es(1)), "ngramSearch")
+      StringDistance.metric("ngramSearch")(es.map(Lower))
     }
     // ---- vector math over arrays (CH tuple/array spellings) ------------
     def zipMul(a: Expression, b: Expression): Expression = {
@@ -519,9 +525,10 @@ private[functions] object ChCompatArrays {
       Sqrt(arrSumD(zipMul(d, d)))
     }
     f("cosineDistance") { es =>
-      Subtract(Literal(1.0), CosineSimilarity(es(0), es(1)))
+      Subtract(Literal(1.0), VectorOps.cosine(es))
     }
-    f("normalizeL2") { es => L2Normalize(es.head) }
+    f("normalizeL2")(VectorOps.unary("l2Normalize", "l2_normalize",
+      ArrayType(DoubleType, containsNull = false)))
     // ---- tuple / remaining alias mop-up --------------------------------
     // tupleElement(t, n) — 1-based index into the dialect's tuple()
     // (CreateStruct names fields col1..colN); a string argument addresses
@@ -572,10 +579,216 @@ private[functions] object ChCompatArrays {
     f("mapKeys") { es => MapKeys(es.head) }
     f("mapValues") { es => MapValues(es.head) }
     f("mapContains") { es => ArrayContains(MapKeys(es(0)), es(1)) }
-    f("mapAdd") { es => es.reduceLeft(MapArithExpr(_, _, add = true)) }
-    f("mapSubtract") { es => es.reduceLeft(MapArithExpr(_, _, add = false)) }
+    f("mapAdd") { es => es.reduceLeft(mapArith("mapAdd", _, _)) }
+    f("mapSubtract") { es => es.reduceLeft(mapArith("mapSubtract", _, _)) }
+    // mapPopulateSeries(m[, max]): a NULL or absent max means the max key
     f("mapPopulateSeries") { es =>
-      MapPopulateExpr(es.head, if (es.length >= 2) Some(es(1)) else None)
+      val m = es.head.dataType
+      Kernel.of(this, "mapPopulateSeries", "mapPopulateSeries", m, es,
+        Arg.MapOf(Arg.Is(LongType, IntegerType), Arg.AnyType) +:
+          es.slice(1, 2).map(_ => Arg.Cell(LongType)),
+        if (es.length >= 2) Seq(m) else Seq(new GenericArrayData(Array[Any](null)), m))
     }
+  }
+
+  /** Element types whose CH default value the 2-arg shift fills with. */
+  private val typeDefault: Arg = Arg.Named(Arg.ArrayOf(Arg.AnyOf(
+    Arg.Is(LongType, IntegerType, ShortType, ByteType, DoubleType, FloatType, BooleanType,
+      DateType, TimestampType, TimestampNTZType),
+    Arg.Str, Arg.Dec, Arg.ArrayOf(Arg.AnyType))),
+    "an array whose element type has a built-in default — pass an explicit default " +
+      "value (3-arg form) for others")
+
+  private def arrayShift(shiftLeft: Boolean)(es: Seq[Expression]): Kernel = {
+    val name = if (shiftLeft) "arrayShiftLeft" else "arrayShiftRight"
+    val (arrType, et) = es.head.dataType match {
+      case a @ ArrayType(et, cn) =>
+        // a nullable explicit default means NULL can land in the vacated
+        // slots — the array type must admit it
+        (ArrayType(et, cn || es.drop(2).exists(_.nullable)), et)
+      case other => (other, NullType)
+    }
+    if (es.length >= 3)
+      Kernel.of(this, "arrayShift", name, arrType, es,
+        Seq(Arg.ArrayOf(Arg.AnyType), Arg.Integral, Arg.Cell(et)), Seq(et, shiftLeft))
+    else
+      Kernel.of(this, "arrayShift", name, arrType, es, Seq(typeDefault, Arg.Integral),
+        Seq(new GenericArrayData(Array(chDefault(et))), et, shiftLeft))
+  }
+
+  /** CH's default value of an element type (the 2-arg shift's fill). */
+  private def chDefault(et: DataType): Any = et match {
+    case LongType => 0L
+    case IntegerType => 0
+    case ShortType => 0.toShort
+    case ByteType => 0.toByte
+    case DoubleType => 0d
+    case FloatType => 0f
+    case BooleanType => false
+    case _: StringType => org.apache.spark.unsafe.types.UTF8String.EMPTY_UTF8
+    case DateType => 0 // CH default Date = epoch (1970-01-01)
+    case TimestampType | TimestampNTZType => 0L
+    case d: DecimalType => Decimal(java.math.BigDecimal.ZERO, d.precision, d.scale)
+    case ArrayType(_, _) => new GenericArrayData(Array.empty[Any])
+    case _ => null // rejected by the type check
+  }
+
+  /** CH `arrayShiftLeft/Right(arr, n[, default])`: length-preserving
+    * shift, vacated slots filled with `fill(0)` (NULL when the explicit
+    * default is NULL). Negative n shifts the other way. */
+  def arrayShift(ad: ArrayData, n: Long, fill: ArrayData, et: DataType,
+      shiftLeft: Boolean): ArrayData = {
+    val sz = ad.numElements()
+    val shift = if (shiftLeft) n else -n
+    val f = if (fill.isNullAt(0)) null else fill.get(0, et)
+    val out = new Array[Any](sz)
+    var i = 0
+    while (i < sz) {
+      val src = i + shift
+      out(i) =
+        if (src >= 0 && src < sz) {
+          val s = src.toInt
+          if (ad.isNullAt(s)) null else ad.get(s, et)
+        } else f
+      i += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  /** CH `arrayAUC(scores, labels)`: exact ROC AUC from one row's parallel
+    * arrays — rank-sum form with average ranks on score ties (the same
+    * half-credit CH assigns). NULL when either class is absent. */
+  def arrayAuc(scoresArr: ArrayData, labelsArr: ArrayData, st: DataType,
+      lt: DataType): java.lang.Double = {
+    val n = scoresArr.numElements()
+    if (n == 0 || labelsArr.numElements() != n) return null
+    def numAt(a: ArrayData, t: DataType, i: Int): Double = t match {
+      case DoubleType => a.getDouble(i)
+      case FloatType => a.getFloat(i).toDouble
+      case LongType => a.getLong(i).toDouble
+      case IntegerType => a.getInt(i).toDouble
+      case ShortType => a.getShort(i).toDouble
+      case BooleanType => if (a.getBoolean(i)) 1d else 0d
+      case other => throw new IllegalArgumentException(
+        s"arrayAUC: numeric/boolean arrays required, got ${other.simpleString}")
+    }
+    val pairs = Array.tabulate(n) { i =>
+      (numAt(scoresArr, st, i), numAt(labelsArr, lt, i) > 0)
+    }.sortBy(_._1)
+    var pos = 0L
+    var rankSumPos = 0d
+    var i = 0
+    while (i < n) {
+      var j = i
+      while (j + 1 < n && pairs(j + 1)._1 == pairs(i)._1) j += 1
+      val avgRank = (i + j + 2) / 2.0 // 1-based average rank of the tie run
+      var k = i
+      while (k <= j) {
+        if (pairs(k)._2) { pos += 1; rankSumPos += avgRank }
+        k += 1
+      }
+      i = j + 1
+    }
+    val neg = n - pos
+    if (pos == 0 || neg == 0) null
+    else (rankSumPos - pos * (pos + 1) / 2.0) / (pos.toDouble * neg)
+  }
+
+  /** byteSize(x) — approximate in-memory size of a value, the quantity the
+    * reference doc compares across AggregateFunction vs
+    * SimpleAggregateFunction states (doc:507-607). */
+  def byteSize(b: Array[Byte], width: Int): Long = b.length.toLong
+  def byteSize(s: UTF8String, width: Int): Long = s.numBytes.toLong
+  def byteSize(a: ArrayData, width: Int): Long = a.numElements().toLong * width
+  def byteSize(v: Any, width: Int): Long = width.toLong
+
+  private val numericMap = Arg.MapOf(Arg.AnyType,
+    Arg.Is(LongType, IntegerType, ShortType, DoubleType, FloatType))
+
+  /** CH `mapAdd` / `mapSubtract` over Spark maps: per-key numeric
+    * combination, sorted-key output (bit-deterministic). */
+  private def mapArith(method: String, l: Expression, r: Expression): Kernel =
+    Kernel.of(this, method, method, l.dataType, Seq(l, r),
+      Seq(numericMap, Arg.Is(l.dataType)), Seq(l.dataType))
+
+  def mapAdd(l: MapData, r: MapData, mt: DataType): MapData = combineMaps(l, r, mt, 1d)
+  def mapSubtract(l: MapData, r: MapData, mt: DataType): MapData = combineMaps(l, r, mt, -1d)
+
+  private def combineMaps(l: MapData, r: MapData, mapType: DataType, rSign: Double): MapData = {
+    val MapType(kt, vt, _) = mapType
+    val acc = scala.collection.mutable.LinkedHashMap.empty[Any, Double]
+    def ingest(md: MapData, sign: Double): Unit = {
+      val ks = md.keyArray(); val vs = md.valueArray()
+      var i = 0
+      while (i < md.numElements()) {
+        val k = ks.get(i, kt) match {
+          case u: UTF8String => u.clone()
+          case other => other
+        }
+        val v = vs.get(i, vt) match {
+          case d: java.lang.Double => d.doubleValue()
+          case f: java.lang.Float => f.toDouble
+          case l: java.lang.Long => l.toDouble
+          case n: java.lang.Integer => n.toDouble
+          case s: java.lang.Short => s.toDouble
+        }
+        acc.update(k, acc.getOrElse(k, 0d) + sign * v)
+        i += 1
+      }
+    }
+    ingest(l, 1d)
+    ingest(r, rSign)
+    val sorted = kt match {
+      case _: StringType => acc.toSeq.sortBy(_._1.asInstanceOf[UTF8String].toString)
+      case LongType => acc.toSeq.sortBy(_._1.asInstanceOf[Long])
+      case IntegerType => acc.toSeq.sortBy(_._1.asInstanceOf[Int])
+      case _ => acc.toSeq
+    }
+    def back(v: Double): Any = vt match {
+      case DoubleType => v
+      case FloatType => v.toFloat
+      case LongType => v.toLong
+      case IntegerType => v.toInt
+      case ShortType => v.toShort
+    }
+    new ArrayBasedMapData(
+      new GenericArrayData(sorted.map(_._1).toArray),
+      new GenericArrayData(sorted.map(p => back(p._2)).toArray))
+  }
+
+  /** CH `mapPopulateSeries(m[, max])`: integer-keyed map densified from
+    * its min key through max (NULL max: the max key), gaps at 0. */
+  def mapPopulateSeries(md: MapData, max: ArrayData, mapType: DataType): MapData = {
+    val MapType(kt, vt, _) = mapType
+    val pairs = scala.collection.mutable.HashMap.empty[Long, Any]
+    val ks = md.keyArray(); val vs = md.valueArray()
+    var i = 0
+    while (i < md.numElements()) {
+      val k = ks.get(i, kt) match {
+        case l: java.lang.Long => l.longValue()
+        case n: java.lang.Integer => n.longValue()
+      }
+      pairs.update(k, vs.get(i, vt))
+      i += 1
+    }
+    if (pairs.isEmpty) return md
+    val lo = pairs.keys.min
+    val hi = if (max.isNullAt(0)) pairs.keys.max else max.getLong(0)
+    val zero: Any = vt match {
+      case DoubleType => 0d
+      case FloatType => 0f
+      case LongType => 0L
+      case IntegerType => 0
+      case ShortType => 0.toShort
+      case _ => null
+    }
+    val keysOut = (lo to hi).toArray
+    def keyBack(k: Long): Any = kt match {
+      case LongType => k
+      case IntegerType => k.toInt
+    }
+    new ArrayBasedMapData(
+      new GenericArrayData(keysOut.map(keyBack).toArray[Any]),
+      new GenericArrayData(keysOut.map(k => pairs.getOrElse(k, zero)).toArray[Any]))
   }
 }

@@ -1,12 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.aggregate._
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.trees.BinaryLike
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.types._
 
 object HostNameExpr {
@@ -23,6 +18,8 @@ object HostNameExpr {
     } catch { case _: java.net.UnknownHostException => ("localhost", "127.0.0.1") }
 }
 
+/** Keeps `CodegenFallback`: a leaf with no children, so it never splits a
+  * whole-stage-codegen span around other expressions. */
 case class HostNameExpr()
   extends LeafExpression with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
   override def dataType: DataType = StringType
@@ -43,621 +40,48 @@ case class HostNameExpr()
   override def prettyName: String = "hostName"
 }
 
-/** byteSize(x) — approximate in-memory size of a value, the quantity the
-  * reference doc compares across AggregateFunction vs SimpleAggregateFunction
-  * states (doc:507-607). Exact for binary/string payloads (the state-sizing
-  * use case); fixed-width types report their width.
-  */
-case class ByteSizeExpr(child: Expression)
-  extends UnaryExpression with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-  override def dataType: DataType = LongType
-  override def nullSafeEval(v: Any): Any = java.lang.Long.valueOf(v match {
-    case b: Array[Byte] => b.length.toLong
-    case s: org.apache.spark.unsafe.types.UTF8String => s.numBytes.toLong
-    case a: org.apache.spark.sql.catalyst.util.ArrayData =>
-      child.dataType match {
-        case ArrayType(et, _) if et.defaultSize > 0 => a.numElements().toLong * et.defaultSize
-        case _ => a.numElements().toLong
-      }
-    case _ => child.dataType.defaultSize.toLong
-  })
-  override protected def withNewChildInternal(c: Expression): ByteSizeExpr = copy(child = c)
-  override def prettyName: String = "byteSize"
-}
-
 /** toTypeName(x) — the resolved Spark SQL type of the argument (CH's
-  * debug aid, doc:897; reports Spark names, e.g. BIGINT not UInt64).
+  * debug aid, doc:897; reports Spark names, e.g. BIGINT not UInt64),
+  * replaced by that string literal once the argument is resolved.
   */
 case class ToTypeNameExpr(child: Expression)
-  extends UnaryExpression with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = false
-  override def foldable: Boolean = true
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
-    org.apache.spark.unsafe.types.UTF8String.fromString(child.dataType.sql)
+  extends Expression with RuntimeReplaceable with UnaryLike[Expression] {
+  override lazy val replacement: Expression =
+    Literal(org.apache.spark.unsafe.types.UTF8String.fromString(child.dataType.sql), StringType)
   override protected def withNewChildInternal(c: Expression): ToTypeNameExpr = copy(child = c)
   override def prettyName: String = "toTypeName"
 }
 
-/** bitmapCardinality as a Catalyst expression (scalar over binary state). */
-case class BitmapCardinalityExpr(child: Expression)
-  extends UnaryExpression with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-  override def dataType: DataType = LongType
-  override def nullSafeEval(v: Any): Any =
-    java.lang.Long.valueOf(Bitmaps.fromBytes(v.asInstanceOf[Array[Byte]]).getLongCardinality)
-  override protected def withNewChildInternal(c: Expression): BitmapCardinalityExpr = copy(child = c)
-  override def prettyName: String = "bitmapCardinality"
-}
-
-/** bitmapAnd / bitmapOr / bitmapXor / bitmapAndnot (+ their cardinality
-  * and predicate forms) as Catalyst expressions over serialized states.
-  */
-case class BitmapBinaryExpr(left: Expression, right: Expression, op: String)
-  extends BinaryExpression with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-  import org.roaringbitmap.RoaringBitmap
-  override def dataType: DataType = op match {
-    case "and" | "or" | "xor" | "andnot" => BinaryType
-    case "has_all" | "has_any" => BooleanType
-    case _ => LongType
-  }
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = Bitmaps.fromBytes(l.asInstanceOf[Array[Byte]])
-    val b = Bitmaps.fromBytes(r.asInstanceOf[Array[Byte]])
-    op match {
-      case "and" => Bitmaps.toBytes(RoaringBitmap.and(a, b))
-      case "or" => Bitmaps.toBytes(RoaringBitmap.or(a, b))
-      case "xor" => Bitmaps.toBytes(RoaringBitmap.xor(a, b))
-      case "andnot" => Bitmaps.toBytes(RoaringBitmap.andNot(a, b))
-      case "and_card" => java.lang.Long.valueOf(
-        RoaringBitmap.andCardinality(a, b).toLong)
-      case "or_card" => java.lang.Long.valueOf(
-        RoaringBitmap.orCardinality(a, b).toLong)
-      case "xor_card" => java.lang.Long.valueOf(
-        RoaringBitmap.orCardinality(a, b).toLong -
-          RoaringBitmap.andCardinality(a, b).toLong)
-      case "andnot_card" => java.lang.Long.valueOf(
-        a.getLongCardinality - RoaringBitmap.andCardinality(a, b).toLong)
-      // hasAll(a, b): does a contain EVERY element of b (empty b → true)
-      case "has_all" => java.lang.Boolean.valueOf(
-        RoaringBitmap.andCardinality(a, b).toLong == b.getLongCardinality)
-      case "has_any" => java.lang.Boolean.valueOf(RoaringBitmap.intersects(a, b))
-    }
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): BitmapBinaryExpr =
-    copy(left = l, right = r)
-  override def prettyName: String = s"bitmap_$op"
-}
-
-/** bitmapContains(bitmap, x) — membership of one uint32. */
-case class BitmapContainsExpr(left: Expression, right: Expression)
-  extends BinaryExpression with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-  override def dataType: DataType = BooleanType
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val bm = Bitmaps.fromBytes(l.asInstanceOf[Array[Byte]])
-    val x = r match {
-      case i: java.lang.Integer => i.longValue()
-      case j: java.lang.Long => j.longValue()
-    }
-    java.lang.Boolean.valueOf(x >= 0L && x <= 0xFFFFFFFFL &&
-      bm.contains(Bitmaps.toUint32(x)))
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): BitmapContainsExpr =
-    copy(left = l, right = r)
-  override def prettyName: String = "bitmapContains"
-}
-
-/** bitmapToArray / bitmapMin / bitmapMax / bitmapBuild and the subset
-  * family — unary-ish scalar forms over serialized states. `op`:
-  *  - to_array: ascending BIGINT array of the members
-  *  - min / max: smallest/largest member, 0 when empty (CH's convention)
-  */
-case class BitmapUnaryExpr(child: Expression, op: String)
-  extends UnaryExpression with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-  override def dataType: DataType = op match {
-    case "to_array" => ArrayType(LongType, containsNull = false)
-    case _ => LongType
-  }
-  override def nullSafeEval(v: Any): Any = {
-    val bm = Bitmaps.fromBytes(v.asInstanceOf[Array[Byte]])
-    op match {
-      case "to_array" =>
-        val out = new Array[Any](bm.getCardinality)
-        val it = bm.iterator()
-        var i = 0
-        while (it.hasNext) { out(i) = it.next().toLong & 0xFFFFFFFFL; i += 1 }
-        new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-      case "min" => java.lang.Long.valueOf(
-        if (bm.isEmpty) 0L else bm.first().toLong & 0xFFFFFFFFL)
-      case "max" => java.lang.Long.valueOf(
-        if (bm.isEmpty) 0L else bm.last().toLong & 0xFFFFFFFFL)
-    }
-  }
-  override protected def withNewChildInternal(c: Expression): BitmapUnaryExpr = copy(child = c)
-  override def prettyName: String = s"bitmap_$op"
-}
-
-/** bitmapBuild(array) — serialize an integral array into a bitmap state
-  * (the literal-set entry point of the doc's funnel recipes).
-  */
-case class BitmapBuildExpr(child: Expression)
-  extends UnaryExpression with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-  override def dataType: DataType = BinaryType
-  override def nullSafeEval(v: Any): Any = {
-    val arr = v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    val bm = new org.roaringbitmap.RoaringBitmap()
-    val et = child.dataType.asInstanceOf[ArrayType].elementType
-    var i = 0
-    while (i < arr.numElements()) {
-      val x = et match {
-        case LongType => arr.getLong(i)
-        case IntegerType => arr.getInt(i).toLong
-        case ShortType => arr.getShort(i).toLong
-        case _ => throw new IllegalArgumentException(
-          s"bitmapBuild: integral array required, got ${child.dataType.simpleString}")
-      }
-      bm.add(Bitmaps.toUint32(x))
-      i += 1
-    }
-    Bitmaps.toBytes(bm)
-  }
-  override protected def withNewChildInternal(c: Expression): BitmapBuildExpr = copy(child = c)
-  override def prettyName: String = "bitmapBuild"
-}
-
 /** CH defaultValueOfArgumentType(expr): the default value of the
   * argument's TYPE (0 for numbers, '' for strings, epoch for
-  * timestamps), never the argument's value. Foldable — ConstantFolding
-  * collapses it to a literal before codegen, so the CodegenFallback
-  * path never runs in a plan.
+  * timestamps), never the argument's value — replaced by that literal.
   */
 case class DefaultValueOfArgumentType(child: Expression)
-  extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = child.dataType
-  override def nullable: Boolean = false
-  override def foldable: Boolean = true
-  override def eval(input: InternalRow): Any = Literal.default(child.dataType).value
+  extends Expression with RuntimeReplaceable with UnaryLike[Expression] {
+  override lazy val replacement: Expression = Literal.default(child.dataType)
   override protected def withNewChildInternal(c: Expression): DefaultValueOfArgumentType =
     copy(child = c)
   override def prettyName: String = "defaultValueOfArgumentType"
 }
 
-/** bitmapSubsetInRange(bm, start, end) — members in [start, end);
-  * bitmapSubsetLimit(bm, start, n) — the n smallest members ≥ start;
-  * subBitmap(bm, offset, n) — n members starting at rank `offset`
-  * (0-based) in ascending order. All return serialized bitmaps.
-  */
-case class BitmapSubsetExpr(first: Expression, second: Expression,
-    third: Expression, op: String)
-  extends TernaryExpression with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-  override def dataType: DataType = BinaryType
-  private def asLong(v: Any): Long = v match {
-    case i: java.lang.Integer => i.longValue()
-    case j: java.lang.Long => j.longValue()
-  }
-  override def nullSafeEval(b: Any, p1: Any, p2: Any): Any = {
-    val bm = Bitmaps.fromBytes(b.asInstanceOf[Array[Byte]])
-    val a = asLong(p1)
-    val c = asLong(p2)
-    val out = new org.roaringbitmap.RoaringBitmap()
-    op match {
-      case "range" =>
-        val it = bm.iterator()
-        while (it.hasNext) {
-          val x = it.next().toLong & 0xFFFFFFFFL
-          if (x >= a && x < c) out.add(x.toInt)
-        }
-      case "limit" =>
-        val it = bm.iterator()
-        var taken = 0L
-        while (it.hasNext && taken < c) {
-          val x = it.next().toLong & 0xFFFFFFFFL
-          if (x >= a) { out.add(x.toInt); taken += 1 }
-        }
-      case "sub" =>
-        val it = bm.iterator()
-        var rank = 0L
-        var taken = 0L
-        while (it.hasNext && taken < c) {
-          val x = it.next()
-          if (rank >= a) { out.add(x); taken += 1 }
-          rank += 1
-        }
-    }
-    Bitmaps.toBytes(out)
-  }
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): BitmapSubsetExpr =
-    copy(first = f, second = s, third = t)
-  override def prettyName: String = s"bitmapSubset_$op"
-}
-
-/** CH `bitmapTransform(bm, from_array, to_array)` — sequential value
-  * remapping on the LIVE bitmap (CH's documented pair-by-pair semantics:
-  * each `from[i]` still present at step i is removed and `to[i]` added, so
-  * overlapping from/to chains compose left to right — the doc example
-  * [5,999,2]→[2,888,20] over {1..10} yields 20, not a kept 2).
-  */
-case class BitmapTransformExpr(first: Expression, second: Expression,
-    third: Expression)
-  extends TernaryExpression with CodegenFallback {
-  override def dataType: DataType = BinaryType
-  private def elems(v: Any, e: Expression): Array[Long] = {
-    val arr = v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    val et = e.dataType.asInstanceOf[ArrayType].elementType
-    Array.tabulate(arr.numElements()) { i =>
-      // a NULL slot read via getLong/getInt would silently come back 0 and
-      // the remap would quietly touch value 0 — reject like a bad type
-      if (arr.isNullAt(i)) throw new IllegalArgumentException(
-        s"bitmapTransform: NULL element at position $i in from/to array")
-      et match {
-        case LongType => arr.getLong(i)
-        case IntegerType => arr.getInt(i).toLong
-        case ShortType => arr.getShort(i).toLong
-        case _ => throw new IllegalArgumentException(
-          s"bitmapTransform: integral arrays required, got ${e.dataType.simpleString}")
-      }
-    }
-  }
-  override def nullSafeEval(b: Any, fromV: Any, toV: Any): Any = {
-    val bm = Bitmaps.fromBytes(b.asInstanceOf[Array[Byte]])
-    val from = elems(fromV, second)
-    val to = elems(toV, third)
-    require(from.length == to.length,
-      s"bitmapTransform: from/to lengths differ (${from.length} vs ${to.length})")
-    var i = 0
-    while (i < from.length) {
-      val f = Bitmaps.toUint32(from(i))
-      if (bm.contains(f)) {
-        bm.remove(f)
-        bm.add(Bitmaps.toUint32(to(i)))
-      }
-      i += 1
-    }
-    Bitmaps.toBytes(bm)
-  }
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): BitmapTransformExpr =
-    copy(first = f, second = s, third = t)
-  override def prettyName: String = "bitmapTransform"
-}
-
-/** CH `arrayAUC(scores, labels)`: exact ROC AUC from one row's parallel
-  * arrays — rank-sum form with average ranks on score ties (the same
-  * half-credit CH assigns). NULL when either class is absent. */
 /** Truncates a (LEGACY, wrapping) SUM back to its input's own integral
   * type — CH's sumWithOverflow contract. The input type is read from the
-  * RESOLVED aggregate child (a pre-analysis registration builder cannot
-  * inspect it); Long/float/decimal inputs pass through unchanged, and
-  * Long→Int/Short/Byte truncation is exact mod-2ᵏ arithmetic. */
+  * RESOLVED aggregate child; Long/float/decimal inputs pass through
+  * unchanged, and the LEGACY cast Long→Int/Short/Byte is exact mod-2ᵏ
+  * arithmetic. */
 case class SumInInputType(child: Expression)
-  extends UnaryExpression with CodegenFallback {
+  extends Expression with RuntimeReplaceable with UnaryLike[Expression] {
 
   private def inputType: DataType = child match {
     case ae: org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression =>
       ae.aggregateFunction.children.head.dataType
     case other => other.dataType
   }
-  override def dataType: DataType = inputType match {
-    case t @ (IntegerType | ShortType | ByteType) => t
-    case _ => child.dataType
-  }
-  override def nullable: Boolean = child.nullable
-
-  override protected def nullSafeEval(v: Any): Any = (v, dataType) match {
-    case (l: Long, IntegerType) => l.toInt
-    case (l: Long, ShortType) => l.toShort
-    case (l: Long, ByteType) => l.toByte
-    case (other, _) => other
+  override lazy val replacement: Expression = inputType match {
+    case t @ (IntegerType | ShortType | ByteType) => Cast(child, t, None, EvalMode.LEGACY)
+    case _ => child
   }
   override protected def withNewChildInternal(c: Expression): SumInInputType =
     copy(child = c)
   override def prettyName: String = "sumWithOverflow"
-}
-
-/** CH `arrayShiftLeft/Right(arr, n[, default])`: length-preserving shift,
-  * vacated slots filled with `default` (2-arg form: the element type's
-  * default — 0 / '' / false / [], per CH). Negative n shifts the other
-  * way. `default` is an ordinary expression evaluated per row and coerced
-  * to the element type.
-  */
-case class ArrayShiftExpr(
-    arr: Expression,
-    n: Expression,
-    dflt: Option[Expression],
-    shiftLeft: Boolean)
-  extends Expression with CodegenFallback {
-
-  override def children: Seq[Expression] = Seq(arr, n) ++ dflt
-  // a nullable explicit default means NULL can land in the vacated slots —
-  // the array type must admit it, or the unsafe writer silently reads the
-  // null back as the numeric zero
-  override def dataType: DataType = arr.dataType match {
-    case ArrayType(et, cn) => ArrayType(et, cn || dflt.exists(_.nullable))
-    case other => other
-  }
-  override def nullable: Boolean = arr.nullable
-
-  /** element types whose CH default value this expression knows how to
-    * materialize for the 2-arg form; anything else needs an explicit
-    * default (enforced at analysis, not as a runtime null leak) */
-  private def hasTypeDefault(et: DataType): Boolean = et match {
-    case LongType | IntegerType | ShortType | ByteType | DoubleType |
-         FloatType | BooleanType | StringType | DateType | TimestampType |
-         TimestampNTZType | _: DecimalType | ArrayType(_, _) => true
-    case _ => false
-  }
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (arr.dataType, n.dataType) match {
-      case (ArrayType(et, _), LongType | IntegerType | ShortType | ByteType) =>
-        if (dflt.isEmpty && !hasTypeDefault(et))
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-            s"$prettyName: no built-in default for ${et.simpleString} elements — " +
-              "pass an explicit default value (3-arg form)")
-        else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case (a, b) => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName(arr, n[, default]): array + integral n, got " +
-          s"(${a.simpleString}, ${b.simpleString})")
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val a = arr.eval(input)
-    val nv = n.eval(input)
-    if (a == null || nv == null) return null
-    val ad = a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    val et = arr.dataType.asInstanceOf[ArrayType].elementType
-    val sz = ad.numElements()
-    var shift = nv.asInstanceOf[Number].longValue()
-    if (!shiftLeft) shift = -shift
-    val fill = fillValue(input, et)
-    val out = new Array[Any](sz)
-    var i = 0
-    while (i < sz) {
-      val src = i + shift
-      out(i) =
-        if (src >= 0 && src < sz) {
-          val s = src.toInt
-          if (ad.isNullAt(s)) null else ad.get(s, et)
-        } else fill
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  private def fillValue(input: InternalRow, et: DataType): Any = dflt match {
-    case Some(e) => coerce(e.eval(input), et)
-    case None => et match {
-      case LongType => 0L
-      case IntegerType => 0
-      case ShortType => 0.toShort
-      case ByteType => 0.toByte
-      case DoubleType => 0d
-      case FloatType => 0f
-      case BooleanType => false
-      case StringType => org.apache.spark.unsafe.types.UTF8String.EMPTY_UTF8
-      case DateType => 0 // CH default Date = epoch (1970-01-01)
-      case TimestampType | TimestampNTZType => 0L
-      case d: DecimalType => Decimal(java.math.BigDecimal.ZERO, d.precision, d.scale)
-      case ArrayType(_, _) => new GenericArrayData(Array.empty[Any])
-      // unreachable: checkInputDataTypes rejects the 2-arg form for
-      // element types without a known default
-      case other => throw new IllegalStateException(
-        s"$prettyName: no default for ${other.simpleString}")
-    }
-  }
-
-  private def coerce(v: Any, et: DataType): Any = (v, et) match {
-    case (null, _) => null
-    case (x: java.lang.Number, LongType) => x.longValue()
-    case (x: java.lang.Number, IntegerType) => x.intValue()
-    case (x: java.lang.Number, ShortType) => x.shortValue()
-    case (x: java.lang.Number, ByteType) => x.byteValue()
-    case (x: java.lang.Number, DoubleType) => x.doubleValue()
-    case (x: java.lang.Number, FloatType) => x.floatValue()
-    case (d: Decimal, DoubleType) => d.toDouble
-    case (d: Decimal, LongType) => d.toLong
-    case (d: Decimal, t: DecimalType) =>
-      Decimal(d.toJavaBigDecimal, t.precision, t.scale)
-    case (x: java.lang.Number, d: DecimalType) =>
-      Decimal(new java.math.BigDecimal(x.toString), d.precision, d.scale)
-    case _ => v
-  }
-
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): ArrayShiftExpr =
-    copy(arr = cs(0), n = cs(1), dflt = dflt.map(_ => cs(2)))
-  override def prettyName: String = if (shiftLeft) "arrayShiftLeft" else "arrayShiftRight"
-}
-
-case class ArrayAucExpr(left: Expression, right: Expression)
-  extends Expression with BinaryLike[Expression] with CodegenFallback {
-
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-
-  override def eval(input: InternalRow): Any = {
-    val l = left.eval(input)
-    val r = right.eval(input)
-    if (l == null || r == null) return null
-    val scoresArr = l.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    val labelsArr = r.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    val n = scoresArr.numElements()
-    if (n == 0 || labelsArr.numElements() != n) return null
-    def numAt(a: org.apache.spark.sql.catalyst.util.ArrayData,
-        t: DataType, i: Int): Double = t match {
-      case DoubleType => a.getDouble(i)
-      case FloatType => a.getFloat(i).toDouble
-      case LongType => a.getLong(i).toDouble
-      case IntegerType => a.getInt(i).toDouble
-      case ShortType => a.getShort(i).toDouble
-      case BooleanType => if (a.getBoolean(i)) 1d else 0d
-      case other => throw new IllegalArgumentException(
-        s"arrayAUC: numeric/boolean arrays required, got ${other.simpleString}")
-    }
-    val st = left.dataType.asInstanceOf[ArrayType].elementType
-    val lt = right.dataType.asInstanceOf[ArrayType].elementType
-    val pairs = Array.tabulate(n) { i =>
-      (numAt(scoresArr, st, i), numAt(labelsArr, lt, i) > 0)
-    }.sortBy(_._1)
-    var pos = 0L
-    var rankSumPos = 0d
-    var i = 0
-    while (i < n) {
-      var j = i
-      while (j + 1 < n && pairs(j + 1)._1 == pairs(i)._1) j += 1
-      val avgRank = (i + j + 2) / 2.0 // 1-based average rank of the tie run
-      var k = i
-      while (k <= j) {
-        if (pairs(k)._2) { pos += 1; rankSumPos += avgRank }
-        k += 1
-      }
-      i = j + 1
-    }
-    val neg = n - pos
-    if (pos == 0 || neg == 0) null
-    else (rankSumPos - pos * (pos + 1) / 2.0) / (pos.toDouble * neg)
-  }
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): ArrayAucExpr =
-    copy(left = l, right = r)
-  override def prettyName: String = "arrayAUC"
-}
-
-/** CH `mapAdd` / `mapSubtract` over Spark maps: per-key numeric
-  * combination, sorted-key output (bit-deterministic). */
-case class MapArithExpr(left: Expression, right: Expression, add: Boolean)
-  extends Expression with BinaryLike[Expression] with CodegenFallback {
-
-  private def mt: MapType = left.dataType.asInstanceOf[MapType]
-  override def dataType: DataType = left.dataType
-  override def nullable: Boolean = left.nullable || right.nullable
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (MapType(k1, v1, _), MapType(k2, v2, _))
-        if k1 == k2 && v1 == v2 && (v1 match {
-          case LongType | IntegerType | ShortType | DoubleType | FloatType => true
-          case _ => false
-        }) => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case (a, b) => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName: same-typed numeric maps required, got " +
-          s"(${a.simpleString}, ${b.simpleString})")
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val l = left.eval(input)
-    val r = right.eval(input)
-    if (l == null || r == null) return null
-    val kt = mt.keyType
-    val vt = mt.valueType
-    val acc = scala.collection.mutable.LinkedHashMap.empty[Any, Double]
-    def ingest(m: Any, sign: Double): Unit = {
-      val md = m.asInstanceOf[org.apache.spark.sql.catalyst.util.MapData]
-      val ks = md.keyArray(); val vs = md.valueArray()
-      var i = 0
-      while (i < md.numElements()) {
-        val k = ks.get(i, kt) match {
-          case u: org.apache.spark.unsafe.types.UTF8String => u.clone()
-          case other => other
-        }
-        val v = vs.get(i, vt) match {
-          case d: java.lang.Double => d.doubleValue()
-          case f: java.lang.Float => f.toDouble
-          case l: java.lang.Long => l.toDouble
-          case n: java.lang.Integer => n.toDouble
-          case s: java.lang.Short => s.toDouble
-        }
-        acc.update(k, acc.getOrElse(k, 0d) + sign * v)
-        i += 1
-      }
-    }
-    ingest(l, 1d)
-    ingest(r, if (add) 1d else -1d)
-    val sorted = kt match {
-      case StringType => acc.toSeq.sortBy(_._1.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].toString)
-      case LongType => acc.toSeq.sortBy(_._1.asInstanceOf[Long])
-      case IntegerType => acc.toSeq.sortBy(_._1.asInstanceOf[Int])
-      case _ => acc.toSeq
-    }
-    def back(v: Double): Any = vt match {
-      case DoubleType => v
-      case FloatType => v.toFloat
-      case LongType => v.toLong
-      case IntegerType => v.toInt
-      case ShortType => v.toShort
-    }
-    new org.apache.spark.sql.catalyst.util.ArrayBasedMapData(
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(sorted.map(_._1).toArray),
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(sorted.map(p => back(p._2)).toArray))
-  }
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): MapArithExpr =
-    copy(left = l, right = r)
-  override def prettyName: String = if (add) "mapAdd" else "mapSubtract"
-}
-
-/** CH `mapPopulateSeries(m[, max])`: integer-keyed map densified from
-  * its min key (or 1) through max (default: the max key), gaps at 0. */
-case class MapPopulateExpr(child: Expression, maxChild: Option[Expression])
-  extends Expression with CodegenFallback {
-
-  override def children: Seq[Expression] = child +: maxChild.toSeq
-  private def mt: MapType = child.dataType.asInstanceOf[MapType]
-  override def dataType: DataType = child.dataType
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case MapType(LongType | IntegerType, _, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"mapPopulateSeries: integer-keyed map required, got ${t.simpleString}")
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val m = child.eval(input)
-    if (m == null) return null
-    val md = m.asInstanceOf[org.apache.spark.sql.catalyst.util.MapData]
-    val kt = mt.keyType
-    val vt = mt.valueType
-    val pairs = scala.collection.mutable.HashMap.empty[Long, Any]
-    val ks = md.keyArray(); val vs = md.valueArray()
-    var i = 0
-    while (i < md.numElements()) {
-      val k = ks.get(i, kt) match {
-        case l: java.lang.Long => l.longValue()
-        case n: java.lang.Integer => n.longValue()
-      }
-      pairs.update(k, vs.get(i, vt))
-      i += 1
-    }
-    if (pairs.isEmpty) return m
-    val lo = pairs.keys.min
-    val hi = maxChild.map(_.eval(input)) match {
-      case Some(l: java.lang.Long) => l.longValue()
-      case Some(n: java.lang.Integer) => n.longValue()
-      case _ => pairs.keys.max
-    }
-    val zero: Any = vt match {
-      case DoubleType => 0d
-      case FloatType => 0f
-      case LongType => 0L
-      case IntegerType => 0
-      case ShortType => 0.toShort
-      case _ => null
-    }
-    val keysOut = (lo to hi).toArray
-    def keyBack(k: Long): Any = kt match {
-      case LongType => k
-      case IntegerType => k.toInt
-    }
-    new org.apache.spark.sql.catalyst.util.ArrayBasedMapData(
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        keysOut.map(keyBack).toArray[Any]),
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        keysOut.map(k => pairs.getOrElse(k, zero)).toArray[Any]))
-  }
-
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): MapPopulateExpr =
-    copy(child = cs(0), maxChild = if (cs.length >= 2) Some(cs(1)) else None)
-  override def prettyName: String = "mapPopulateSeries"
 }

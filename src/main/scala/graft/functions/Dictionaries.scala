@@ -156,6 +156,9 @@ object Dictionaries {
   * castable key type works and uncastable values behave as missing keys.
   * Attribute values convert through the standard Catalyst converter, so
   * date/decimal/etc. attributes surface correctly, not just strings.
+  *
+  * Stays `CodegenFallback` (not a [[Kernel]]): the expression holds the
+  * dictionary snapshot taken at analysis.
   */
 case class DictGetExpr(dictName: String, attr: String, child: Expression)
   extends UnaryExpression with CodegenFallback {
@@ -199,6 +202,7 @@ case class DictGetExpr(dictName: String, attr: String, child: Expression)
   * per row, no shuffle, no join. Key components normalize exactly as the
   * registered snapshot's did (integral → Long, string → String), and any
   * null component behaves as a missing key (the attribute default).
+  * Stays `CodegenFallback` for the same reason as [[DictGetExpr]].
   */
 case class DictGetComplexExpr(dictName: String, attr: String, keys: Seq[Expression])
   extends Expression with CodegenFallback {

@@ -3,9 +3,7 @@ package graft.functions
 import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression}
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.Platform
@@ -55,36 +53,44 @@ import org.apache.spark.unsafe.types.UTF8String
   * hex-string `md5()` session-wide (which ChSample's gated rewrite and
   * user SQL rely on) — `unhex(md5(x))` already composes the raw form.
   *
-  * Scale shape: pure scalar expressions with real codegen (no
-  * CodegenFallback — each compiles to a static call inside whole-stage
-  * codegen), so they ride the scan like any built-in and never break a
-  * WholeStageCodegen span.
+  * Scale shape: each is a [[Kernel]] — a static call into [[HashAlgos]]
+  * inside whole-stage codegen — so they ride the scan like any built-in
+  * and never break a WholeStageCodegen span.
   */
 object Hashes {
 
-  private val algos: Map[String, ChHashAlgo] = Map(
-    "sipHash64" -> ChHashAlgo.Sip64,
-    "chXxHash64" -> ChHashAlgo.Xx64,
-    "xxHash32" -> ChHashAlgo.Xx32,
-    "halfMD5" -> ChHashAlgo.HalfMd5,
-    "intHash64" -> ChHashAlgo.IntHash64,
-    "javaHash" -> ChHashAlgo.JavaHash)
+  /** SQL name → (kernel method on [[HashAlgos]], result type). */
+  private val algos: Map[String, (String, DataType)] = Map(
+    "sipHash64" -> ("sipHash64", LongType),
+    "chXxHash64" -> ("xxHash64", LongType),
+    "xxHash32" -> ("xxHash32", LongType),
+    "halfMD5" -> ("halfMd5", LongType),
+    "intHash64" -> ("intHash64", LongType),
+    "javaHash" -> ("javaHash", IntegerType))
 
   val functions = FunctionTable.define(this) { f =>
-    algos.foreach { case (name, algo) =>
+    algos.keys.foreach { name =>
       f(name) { es =>
         require(es.length == 1, s"usage: $name(x)")
-        ChHashExpr(coerce(es.head, algo), algo)
+        kernel(name, Seq(coerce(es.head, name)))
       }
     }
+  }
+
+  /** One static call into [[HashAlgos]], overload-resolved by the
+    * child's JVM type (byte[] / long / UTF8String). */
+  private[functions] def kernel(name: String, es: Seq[Expression]): Kernel = {
+    val (method, out) = algos(name)
+    Kernel.of(HashAlgos, method, method, out, es,
+      Seq(Arg.AnyOf(Arg.Is(BinaryType, LongType), Arg.Str)))
   }
 
   /** Bytes for strings/binary, 8-byte-LE long for integers; javaHash and
     * intHash64 keep their natural input type.
     */
-  private def coerce(e: Expression, algo: ChHashAlgo): Expression = algo match {
-    case ChHashAlgo.JavaHash => Cast(e, StringType)
-    case ChHashAlgo.IntHash64 => Cast(e, LongType)
+  private def coerce(e: Expression, name: String): Expression = name match {
+    case "javaHash" => Cast(e, StringType)
+    case "intHash64" => Cast(e, LongType)
     case _ => e.dataType match {
       case ByteType | ShortType | IntegerType | LongType => Cast(e, LongType)
       case BinaryType => e
@@ -96,54 +102,6 @@ object Hashes {
   def ch_xx_hash64(c: Column): Column = call_function("chXxHash64", c)
   def half_md5(c: Column): Column = call_function("halfMD5", c)
   def int_hash64(c: Column): Column = call_function("intHash64", c)
-}
-
-sealed trait ChHashAlgo { def method: String; def out: DataType }
-object ChHashAlgo {
-  case object Sip64 extends ChHashAlgo { val method = "sipHash64"; val out: DataType = LongType }
-  case object Xx64 extends ChHashAlgo { val method = "xxHash64"; val out: DataType = LongType }
-  case object Xx32 extends ChHashAlgo { val method = "xxHash32"; val out: DataType = LongType }
-  case object HalfMd5 extends ChHashAlgo { val method = "halfMd5"; val out: DataType = LongType }
-  case object IntHash64 extends ChHashAlgo { val method = "intHash64"; val out: DataType = LongType }
-  case object JavaHash extends ChHashAlgo { val method = "javaHash"; val out: DataType = IntegerType }
-}
-
-/** Scalar hash with real whole-stage codegen: the generated code is one
-  * static call into [[HashAlgos]], overload-resolved by the child's JVM
-  * type (byte[] / long / UTF8String).
-  */
-case class ChHashExpr(child: Expression, algo: ChHashAlgo)
-  extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType | LongType | StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"${algo.method} requires binary/long/string input, got ${t.simpleString}")
-  }
-
-  override def dataType: DataType = algo.out
-  override def prettyName: String = algo.method
-
-  override protected def nullSafeEval(v: Any): Any = (algo, v) match {
-    case (ChHashAlgo.Sip64, b: Array[Byte]) => HashAlgos.sipHash64(b)
-    case (ChHashAlgo.Sip64, x: java.lang.Long) => HashAlgos.sipHash64(x.longValue)
-    case (ChHashAlgo.Xx64, b: Array[Byte]) => HashAlgos.xxHash64(b)
-    case (ChHashAlgo.Xx64, x: java.lang.Long) => HashAlgos.xxHash64(x.longValue)
-    case (ChHashAlgo.Xx32, b: Array[Byte]) => HashAlgos.xxHash32(b)
-    case (ChHashAlgo.Xx32, x: java.lang.Long) => HashAlgos.xxHash32(x.longValue)
-    case (ChHashAlgo.HalfMd5, b: Array[Byte]) => HashAlgos.halfMd5(b)
-    case (ChHashAlgo.HalfMd5, x: java.lang.Long) => HashAlgos.halfMd5(x.longValue)
-    case (ChHashAlgo.IntHash64, x: java.lang.Long) => HashAlgos.intHash64(x.longValue)
-    case (ChHashAlgo.JavaHash, s: UTF8String) => HashAlgos.javaHash(s)
-    case _ => throw new IllegalStateException(
-      s"${algo.method}: unexpected input ${v.getClass.getName}")
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashAlgos.${algo.method}($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): ChHashExpr =
-    copy(child = newChild)
 }
 
 /** The actual kernels. Static-forwarder-callable from generated Java.

@@ -1,12 +1,10 @@
 package graft.functions
 
 import java.nio.charset.{CharsetDecoder, CodingErrorAction, StandardCharsets}
+import java.util.regex.Pattern
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GetJsonObject, LengthOfJsonArray, Literal, RegExpReplace}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.trees.UnaryLike
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -30,29 +28,35 @@ import org.apache.spark.unsafe.types.UTF8String
 object HtmlText {
 
   val functions = FunctionTable.define(this) { f =>
-    f("extractTextFromHTML") { es => HtmlTextExpr(es.head) }
-    f("extractAllGroupsHorizontal") { es =>
-      ExtractGroupsExpr(es(0), es(1), horizontal = true)
-    }
-    f("extractAllGroupsVertical") { es =>
-      ExtractGroupsExpr(es(0), es(1), horizontal = false)
-    }
-    f("extractAllGroups") { es => ExtractGroupsExpr(es(0), es(1), horizontal = false) }
+    f("extractTextFromHTML") { es => unary("extractTextFromHtml", "extractTextFromHTML", StringType, es) }
+    // regex group capture: horizontal = array per GROUP (all its matches),
+    // vertical = array per MATCH (its groups); the pattern is a literal
+    for ((sqlName, horizontal) <- Seq("extractAllGroupsHorizontal" -> true,
+        "extractAllGroupsVertical" -> false, "extractAllGroups" -> false))
+      f(sqlName) { es =>
+        val name = if (horizontal) "extractAllGroupsHorizontal" else "extractAllGroupsVertical"
+        require(es.length == 2 && es(1).foldable, s"$name: the pattern must be a string literal")
+        Kernel.of(this, if (horizontal) "extractGroupsHorizontal" else "extractGroupsVertical",
+          name, ArrayType(ArrayType(StringType, containsNull = false), containsNull = false),
+          es, Seq(Arg.Str, Arg.Str))
+      }
     for (form <- Seq("NFC", "NFD", "NFKC", "NFKD"))
-      f(s"normalizeUTF8$form") { es => Utf8Expr(es.head, form) }
-    f("isValidUTF8") { es => Utf8Expr(es.head, "valid") }
-    f("toValidUTF8") { es => Utf8Expr(es.head, "repair") }
+      f(s"normalizeUTF8$form") { es => unary(s"normalize$form", s"normalizeUTF8$form", StringType, es) }
+    f("isValidUTF8") { es => unary("isValidUtf8", "isValidUTF8", BooleanType, es) }
+    f("toValidUTF8") { es => unary("toValidUtf8", "toValidUTF8", StringType, es) }
     f("normalizeQuery") { es => normalizeQueryExpr(es.head) }
     f("normalizedQueryHash") { es =>
-      ChHashExpr(org.apache.spark.sql.catalyst.expressions.Cast(
-        normalizeQueryExpr(es.head), BinaryType), ChHashAlgo.Sip64)
+      Hashes.kernel("sipHash64", Seq(org.apache.spark.sql.catalyst.expressions.Cast(
+        normalizeQueryExpr(es.head), BinaryType)))
     }
+    // top-level elements of a JSON array as raw JSON strings
     f("JSONExtractArrayRaw") { es =>
-      JsonArrayRawExpr(
-        if (es.length >= 2) GetJsonObject(es(0),
-          org.apache.spark.sql.catalyst.expressions.Concat(
-            Seq(Literal("$."), es(1))))
-        else es(0))
+      Kernel.of(this, "jsonArrayRaw", "JSONExtractArrayRaw",
+        ArrayType(StringType, containsNull = false), Seq(
+          if (es.length >= 2) GetJsonObject(es(0),
+            org.apache.spark.sql.catalyst.expressions.Concat(
+              Seq(Literal("$."), es(1))))
+          else es(0)), Seq(Arg.Str), returnsNull = true)
     }
     f("JSONArrayLength") { es =>
       LengthOfJsonArray(
@@ -62,6 +66,9 @@ object HtmlText {
         else es(0))
     }
   }
+
+  private def unary(method: String, name: String, out: DataType, es: Seq[Expression]): Kernel =
+    Kernel.of(this, method, name, out, es, Seq(Arg.Str))
 
   /** strings/numbers → `?`; CH also collapses `IN (...)` lists — the
     * placeholder form is what matters for fingerprint grouping. */
@@ -123,120 +130,79 @@ object HtmlText {
     }
     sb.toString.replaceAll("\\s+", " ").trim
   }
-}
 
-case class HtmlTextExpr(child: Expression)
-  extends Expression with UnaryLike[Expression] with CodegenFallback {
+  // ---- kernel methods -------------------------------------------------
 
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = child.nullable
+  def extractTextFromHtml(v: UTF8String): UTF8String =
+    UTF8String.fromString(stripHtml(v.toString))
 
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else UTF8String.fromString(
-      HtmlText.stripHtml(v.asInstanceOf[UTF8String].toString))
+  // compiled once per distinct pattern text per JVM, not per row (the
+  // key is copied: a row's UTF8String may point into a reused buffer)
+  private val patterns = new java.util.concurrent.ConcurrentHashMap[UTF8String, Pattern]()
+
+  private def compiled(p: UTF8String): Pattern = {
+    val hit = patterns.get(p)
+    if (hit != null) hit
+    else {
+      val c = Pattern.compile(p.toString)
+      patterns.put(p.clone(), c)
+      c
+    }
   }
 
-  override protected def withNewChildInternal(c: Expression): HtmlTextExpr =
-    copy(child = c)
-  override def prettyName: String = "extractTextFromHTML"
-}
-
-/** regex group capture: horizontal = array per GROUP (all its matches),
-  * vertical = array per MATCH (its groups). */
-case class ExtractGroupsExpr(left: Expression, right: Expression, horizontal: Boolean)
-  extends Expression with CodegenFallback {
-
-  override def children: Seq[Expression] = Seq(left, right)
-  override def dataType: DataType =
-    ArrayType(ArrayType(StringType, containsNull = false), containsNull = false)
-  override def nullable: Boolean = left.nullable || right.nullable
-
-  @transient private lazy val pattern = right match {
-    case lit if lit.foldable =>
-      java.util.regex.Pattern.compile(String.valueOf(lit.eval()))
-    case _ => throw new IllegalArgumentException(
-      s"$prettyName: the pattern must be a string literal")
-  }
-
-  override def eval(input: InternalRow): Any = {
-    val v = left.eval(input)
-    if (v == null) return null
-    val m = pattern.matcher(v.asInstanceOf[UTF8String].toString)
-    val g = pattern.matcher("").groupCount()
+  private def matchRows(v: UTF8String, p: Pattern): Seq[Seq[String]] = {
+    val m = p.matcher(v.toString)
     val rows = scala.collection.mutable.ArrayBuffer.empty[Seq[String]]
     while (m.find()) {
       rows += (1 to m.groupCount()).map(i => Option(m.group(i)).getOrElse(""))
     }
-    val out: Seq[Seq[String]] =
-      if (horizontal) {
-        if (rows.isEmpty) Seq.fill(g)(Seq.empty)
-        else rows.head.indices.map(i => rows.map(_(i)).toSeq)
-      } else rows.toSeq
-    new GenericArrayData(out.map(r =>
-      new GenericArrayData(r.map(UTF8String.fromString).toArray[Any])).toArray[Any])
+    rows.toSeq
   }
 
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): ExtractGroupsExpr =
-    copy(left = cs(0), right = cs(1))
-  override def prettyName: String =
-    if (horizontal) "extractAllGroupsHorizontal" else "extractAllGroupsVertical"
-}
+  private def nested(out: Seq[Seq[String]]): ArrayData =
+    new GenericArrayData(out.map(r =>
+      new GenericArrayData(r.map(UTF8String.fromString).toArray[Any])).toArray[Any])
 
-/** Unicode normalization forms + UTF-8 validity/repair. */
-case class Utf8Expr(child: Expression, mode: String)
-  extends Expression with UnaryLike[Expression] with CodegenFallback {
+  def extractGroupsHorizontal(v: UTF8String, pattern: UTF8String): ArrayData = {
+    val p = compiled(pattern)
+    val rows = matchRows(v, p)
+    val g = p.matcher("").groupCount()
+    nested(
+      if (rows.isEmpty) Seq.fill(g)(Seq.empty)
+      else rows.head.indices.map(i => rows.map(_(i))))
+  }
 
-  override def dataType: DataType = if (mode == "valid") BooleanType else StringType
-  override def nullable: Boolean = child.nullable
+  def extractGroupsVertical(v: UTF8String, pattern: UTF8String): ArrayData =
+    nested(matchRows(v, compiled(pattern)))
 
+  // Unicode normalization forms + UTF-8 validity/repair
   private def decoder(action: CodingErrorAction): CharsetDecoder =
     StandardCharsets.UTF_8.newDecoder()
       .onMalformedInput(action).onUnmappableCharacter(action)
 
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) return null
-    val u = v.asInstanceOf[UTF8String]
-    mode match {
-      case "valid" =>
-        try {
-          decoder(CodingErrorAction.REPORT)
-            .decode(java.nio.ByteBuffer.wrap(u.getBytes)): Unit
-          true
-        } catch { case _: java.nio.charset.CharacterCodingException => false }
-      case "repair" =>
-        val repaired = decoder(CodingErrorAction.REPLACE)
-          .replaceWith("�")
-          .decode(java.nio.ByteBuffer.wrap(u.getBytes)).toString
-        UTF8String.fromString(repaired)
-      case form =>
-        UTF8String.fromString(java.text.Normalizer.normalize(
-          u.toString, java.text.Normalizer.Form.valueOf(form)))
-    }
-  }
+  def isValidUtf8(u: UTF8String): Boolean =
+    try {
+      decoder(CodingErrorAction.REPORT)
+        .decode(java.nio.ByteBuffer.wrap(u.getBytes)): Unit
+      true
+    } catch { case _: java.nio.charset.CharacterCodingException => false }
 
-  override protected def withNewChildInternal(c: Expression): Utf8Expr =
-    copy(child = c)
-  override def prettyName: String = mode match {
-    case "valid" => "isValidUTF8"
-    case "repair" => "toValidUTF8"
-    case form => s"normalizeUTF8$form"
-  }
-}
+  def toValidUtf8(u: UTF8String): UTF8String =
+    UTF8String.fromString(decoder(CodingErrorAction.REPLACE)
+      .replaceWith("�")
+      .decode(java.nio.ByteBuffer.wrap(u.getBytes)).toString)
 
-/** top-level elements of a JSON array as raw JSON strings. */
-case class JsonArrayRawExpr(child: Expression)
-  extends Expression with UnaryLike[Expression] with CodegenFallback {
+  private def normalize(u: UTF8String, form: java.text.Normalizer.Form): UTF8String =
+    UTF8String.fromString(java.text.Normalizer.normalize(u.toString, form))
+  def normalizeNFC(u: UTF8String): UTF8String = normalize(u, java.text.Normalizer.Form.NFC)
+  def normalizeNFD(u: UTF8String): UTF8String = normalize(u, java.text.Normalizer.Form.NFD)
+  def normalizeNFKC(u: UTF8String): UTF8String = normalize(u, java.text.Normalizer.Form.NFKC)
+  def normalizeNFKD(u: UTF8String): UTF8String = normalize(u, java.text.Normalizer.Form.NFKD)
 
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) return null
-    val s = v.asInstanceOf[UTF8String].toString.trim
+  /** Top-level elements of a JSON array as raw JSON strings; NULL when
+    * the text is not an array. */
+  def jsonArrayRaw(v: UTF8String): ArrayData = {
+    val s = v.toString.trim
     if (!s.startsWith("[") || !s.endsWith("]")) return null
     val body = s.substring(1, s.length - 1)
     val out = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -265,8 +231,4 @@ case class JsonArrayRawExpr(child: Expression)
     if (body.trim.nonEmpty) out += body.substring(start).trim
     new GenericArrayData(out.map(UTF8String.fromString).toArray[Any])
   }
-
-  override protected def withNewChildInternal(c: Expression): JsonArrayRawExpr =
-    copy(child = c)
-  override def prettyName: String = "JSONExtractArrayRaw"
 }

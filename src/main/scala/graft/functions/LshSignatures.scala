@@ -2,10 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, XxHash64Function}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types._
@@ -29,7 +26,17 @@ object LshSignatures {
       require(es.length == 3, "usage: lsh_signatures(vec, tables, bits)")
       val t = intLit(es(1), "tables")
       val b = intLit(es(2), "bits")
-      LshSignaturesExpr(es.head, t, b)
+      // bits = 0 is the EXHAUSTIVE degenerate table (no hyperplanes →
+      // every vector in one bucket 0 per table): the LSH analog of IVF's
+      // nprobe = nlist, used to put the whole signature/join/rerank
+      // machinery under an exact-equality gate (candidate set = full
+      // corpus, so the top-k provably equals brute force)
+      require(t >= 1 && b >= 0 && b <= 63, s"bad tables/bits: $t/$b")
+      Kernel.of(this, "signatures", "lsh_signatures", ArrayType(StructType(Seq(
+        StructField("tbl", IntegerType, nullable = false),
+        StructField("bucket", LongType, nullable = false))), containsNull = false),
+        es.take(1), Seq(VectorOps.vector), Seq(t, b, VectorOps.isFloat(es.head)),
+        returnsNull = true)
     }
   }
 
@@ -41,32 +48,16 @@ object LshSignatures {
 
   def lsh_signatures(vec: Column, tables: Int, bits: Int): Column =
     call_function("lsh_signatures", vec, lit(tables), lit(bits))
-}
 
-case class LshSignaturesExpr(child: Expression, tables: Int, bits: Int)
-  extends Expression with UnaryLike[Expression] with CodegenFallback {
+  // plane components depend only on (plane, dim): cache per (plane count,
+  // observed dimensionality) — vectors are fixed-dim in practice; the map
+  // tolerates mixed corpora — computed once per JVM instead of once per row
+  private val planeCache =
+    new java.util.concurrent.ConcurrentHashMap[(Int, Int), Array[Array[Double]]]()
 
-  // bits = 0 is the EXHAUSTIVE degenerate table (no hyperplanes → every
-  // vector in one bucket 0 per table): the LSH analog of IVF's
-  // nprobe = nlist, used to put the whole signature/join/rerank machinery
-  // under an exact-equality gate (candidate set = full corpus, so the
-  // top-k provably equals brute force)
-  require(tables >= 1 && bits >= 0 && bits <= 63, s"bad tables/bits: $tables/$bits")
-
-  @transient private lazy val elemIsFloat = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
-  // plane components depend only on (plane, dim): cache per observed
-  // dimensionality (vectors are fixed-dim in practice; the map tolerates
-  // mixed corpora), computed once per executor instead of once per row
-  @transient private lazy val planeCache =
-    new java.util.concurrent.ConcurrentHashMap[Int, Array[Array[Double]]]()
-
-  private def planesFor(dim: Int): Array[Array[Double]] =
-    planeCache.computeIfAbsent(dim, _ =>
-      Array.tabulate(tables * bits) { plane =>
+  private def planesFor(planes: Int, dim: Int): Array[Array[Double]] =
+    planeCache.computeIfAbsent((planes, dim), _ =>
+      Array.tabulate(planes) { plane =>
         Array.tabulate(dim) { d =>
           // exactly xxhash64(plane, d) on two ints: chained seed-42 hash
           val h1 = XxHash64Function.hash(plane, IntegerType, 42L)
@@ -75,23 +66,9 @@ case class LshSignaturesExpr(child: Expression, tables: Int, bits: Int)
         }
       })
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"lsh_signatures requires array<float|double>, got ${t.simpleString}")
-  }
-
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("tbl", IntegerType, nullable = false),
-    StructField("bucket", LongType, nullable = false))), containsNull = false)
-  override def nullable: Boolean = true
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) return null
-    val a = v.asInstanceOf[ArrayData]
+  def signatures(a: ArrayData, tables: Int, bits: Int, elemIsFloat: Boolean): ArrayData = {
     val dim = a.numElements()
-    val planes = planesFor(dim)
+    val planes = planesFor(tables * bits, dim)
     val out = new Array[Any](tables)
     var t = 0
     while (t < tables) {
@@ -114,8 +91,4 @@ case class LshSignaturesExpr(child: Expression, tables: Int, bits: Int)
     }
     new GenericArrayData(out)
   }
-
-  override protected def withNewChildInternal(c: Expression): LshSignaturesExpr =
-    copy(child = c)
-  override def prettyName: String = "lsh_signatures"
 }

@@ -31,10 +31,20 @@ object MinHash {
   val functions = FunctionTable.define(this) { f =>
     f("minhash_agg")(exprs => MinHashAggregate(exprs.head,
       exprs(1).eval(null).asInstanceOf[Number].intValue()))
-    f("sig_match_count")(exprs => SigMatchCount(exprs(0), exprs(1)))
-    f("lsh_buckets")(exprs => LshBucketsExpr(exprs.head,
-      exprs(1).eval(null).asInstanceOf[Number].intValue(),
-      exprs(2).eval(null).asInstanceOf[Number].intValue()))
+    f("sig_match_count") { exprs =>
+      Kernel.of(this, "sigMatchCount", "sig_match_count", IntegerType, exprs,
+        Seq(Arg.Is(ArrayType(LongType)), Arg.Is(ArrayType(LongType))))
+    }
+    f("lsh_buckets") { exprs =>
+      val bands = exprs(1).eval(null).asInstanceOf[Number].intValue()
+      val rowsPerBand = exprs(2).eval(null).asInstanceOf[Number].intValue()
+      require(bands >= 1 && rowsPerBand >= 1, s"bad bands/rowsPerBand: $bands/$rowsPerBand")
+      Kernel.of(this, "lshBuckets", "lsh_buckets", ArrayType(StructType(Seq(
+        StructField("band", IntegerType, nullable = false),
+        StructField("bucket", LongType, nullable = false))), containsNull = false),
+        exprs.take(1), Seq(Arg.Is(ArrayType(LongType))), Seq(bands, rowsPerBand),
+        returnsNull = true)
+    }
   }
 
   /** Signature column: group rows by doc first, one shingle per row. */
@@ -50,35 +60,14 @@ object MinHash {
     call_function("lsh_buckets", sig,
       org.apache.spark.sql.functions.lit(bands),
       org.apache.spark.sql.functions.lit(rowsPerBand))
-}
 
-/** Banded bucket keys — for band b, the xxhash64 of (b, the band's
-  * signature slice joined by commas), exactly what the composed
-  * `xxhash64(b, concat_ws(",", slice(sig, ...)))` HOF computed (chained
-  * seed-42 hash of an int then the joined string), in one loop per row
-  * instead of a per-band interpreted slice + lambda dispatch.
-  */
-case class LshBucketsExpr(child: Expression, bands: Int, rowsPerBand: Int)
-  extends Expression with UnaryLike[Expression]
-  with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-
-  require(bands >= 1 && rowsPerBand >= 1, s"bad bands/rowsPerBand: $bands/$rowsPerBand")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"lsh_buckets requires array<bigint>, got ${t.simpleString}")
-  }
-
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("band", IntegerType, nullable = false),
-    StructField("bucket", LongType, nullable = false))), containsNull = false)
-  override def nullable: Boolean = true
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) return null
-    val a = v.asInstanceOf[ArrayData]
+  /** Banded bucket keys — for band b, the xxhash64 of (b, the band's
+    * signature slice joined by commas), exactly what the composed
+    * `xxhash64(b, concat_ws(",", slice(sig, ...)))` HOF computed (chained
+    * seed-42 hash of an int then the joined string), in one loop per row
+    * instead of a per-band interpreted slice + lambda dispatch.
+    */
+  def lshBuckets(a: ArrayData, bands: Int, rowsPerBand: Int): ArrayData = {
     val n = a.numElements()
     val out = new Array[Any](bands)
     val sb = new java.lang.StringBuilder(rowsPerBand * 20)
@@ -103,33 +92,12 @@ case class LshBucketsExpr(child: Expression, bands: Int, rowsPerBand: Int)
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
 
-  override protected def withNewChildInternal(c: Expression): LshBucketsExpr =
-    copy(child = c)
-  override def prettyName: String = "lsh_buckets"
-}
-
-/** Count of positions where two bigint signatures agree — the MinHash
-  * Jaccard-estimate numerator, evaluated once per CANDIDATE PAIR in every
-  * LSH verify, so the interpreted zip_with+aggregate form it replaces was
-  * per-pair lambda dispatch on the hottest dedup loop.
-  */
-case class SigMatchCount(left: Expression, right: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
-  with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case (l, r) => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"sig_match_count requires two array<bigint>, got ${l.simpleString} / ${r.simpleString}")
-    }
-
-  override def dataType: DataType = IntegerType
-
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    val b = r.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+  /** Count of positions where two bigint signatures agree — the MinHash
+    * Jaccard-estimate numerator, evaluated once per CANDIDATE PAIR in every
+    * LSH verify, so the interpreted zip_with+aggregate form it replaces was
+    * per-pair lambda dispatch on the hottest dedup loop.
+    */
+  def sigMatchCount(a: ArrayData, b: ArrayData): Int = {
     val n = math.min(a.numElements(), b.numElements())
     var cnt = 0
     var i = 0
@@ -139,10 +107,6 @@ case class SigMatchCount(left: Expression, right: Expression)
     }
     cnt
   }
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): SigMatchCount =
-    copy(left = l, right = r)
-  override def prettyName: String = "sig_match_count"
 }
 
 case class MinHashAggregate(

@@ -7,7 +7,6 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.QuantileSummaries
 import org.apache.spark.sql.functions.{call_function, lit}
@@ -76,9 +75,20 @@ object QuantileSketch {
     f("quantile_sketch_agg")(exprs => QuantileSketchAggregate(exprs.head,
       if (exprs.length > 1) evalDouble(exprs(1), "quantile_sketch_agg eps") else 0.01))
     f("quantile_sketch_merge_agg")(exprs => QuantileSketchMergeAggregate(exprs.head))
-    f("quantile_sketch_value")(exprs => QuantileSketchValueExpr(exprs.head,
-      evalDouble(exprs(1), "quantile_sketch_value q")))
+    f("quantile_sketch_value")(exprs =>
+      value(exprs.head, evalDouble(exprs(1), "quantile_sketch_value q")))
   }
+
+  /** `quantile_sketch_value(state, q)` — the scalar finisher: the
+    * q-quantile of a serialized sketch, NULL when empty. */
+  private[functions] def value(state: Expression, q: Double): Kernel = {
+    require(q >= 0.0 && q <= 1.0, s"quantile out of range: $q")
+    Kernel.of(this, "sketchQuantile", "quantile_sketch_value", DoubleType, Seq(state),
+      Seq(Arg.Is(BinaryType)), Seq(q), returnsNull = true)
+  }
+
+  def sketchQuantile(state: Array[Byte], q: Double): java.lang.Double =
+    fromBytes(state).query(q).map(java.lang.Double.valueOf).orNull
 
   /** quantileTDigestState-role: aggregate doubles into a bounded sketch. */
   def quantile_state(c: Column, eps: Double = 0.01): Column =
@@ -166,29 +176,4 @@ case class QuantileSketchMergeAggregate(
   override protected def withNewChildInternal(c: Expression): QuantileSketchMergeAggregate =
     copy(child = c)
   override def prettyName: String = "quantile_sketch_merge_agg"
-}
-
-/** `quantile_sketch_value(state, q)` — scalar finisher; runs
-  * post-aggregation on group-count-sized row sets (CodegenFallback is
-  * fine there, same posture as the bitmap algebra).
-  */
-case class QuantileSketchValueExpr(child: Expression, q: Double)
-  extends Expression with UnaryLike[Expression] with CodegenFallback {
-  require(q >= 0.0 && q <= 1.0, s"quantile out of range: $q")
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"quantile_sketch_value requires a BinaryType child, got ${t.simpleString}")
-  }
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else QuantileSketch.fromBytes(v.asInstanceOf[Array[Byte]])
-      .query(q).map(java.lang.Double.valueOf).orNull
-  }
-  override protected def withNewChildInternal(c: Expression): QuantileSketchValueExpr =
-    copy(child = c)
-  override def prettyName: String = "quantile_sketch_value"
 }

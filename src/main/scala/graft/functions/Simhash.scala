@@ -1,11 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, XxHash64Function}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.trees.UnaryLike
+import org.apache.spark.sql.catalyst.expressions.XxHash64Function
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
@@ -26,29 +22,14 @@ object Simhash {
   val functions = FunctionTable.define(this) { f =>
     f("simhash64") { es =>
       require(es.length == 1, "usage: simhash64(tokens)")
-      Simhash64Expr(es.head)
+      Kernel.of(this, "simhash", "simhash64", LongType, es,
+        Seq(Arg.ArrayOf(Arg.Str)), returnsNull = true)
     }
   }
 
   def simhash64(toks: Column): Column = call_function("simhash64", toks)
-}
 
-case class Simhash64Expr(child: Expression)
-  extends Expression with UnaryLike[Expression] with CodegenFallback {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"simhash64 requires array<string>, got ${t.simpleString}")
-  }
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) return null
-    val a = v.asInstanceOf[ArrayData]
+  def simhash(a: ArrayData): Long = {
     val n = a.numElements()
     val counts = new Array[Int](64)
     var i = 0
@@ -74,10 +55,6 @@ case class Simhash64Expr(child: Expression)
       if (2L * counts(b) >= n) out |= (1L << b)
       b += 1
     }
-    java.lang.Long.valueOf(out)
+    out
   }
-
-  override protected def withNewChildInternal(c: Expression): Simhash64Expr =
-    copy(child = c)
-  override def prettyName: String = "simhash64"
 }

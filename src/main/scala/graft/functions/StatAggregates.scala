@@ -92,15 +92,26 @@ object StatAggregates {
     f("meanZTest") { es =>
       MeanZTestAgg(es(0), es(1), es(2), es(3), es(4)).toAggregateExpression()
     }
+    // machine-precision special functions over commons-math3 (on Spark's
+    // own classpath)
     for (fn <- Seq("erf", "erfc", "lgamma", "tgamma", "digamma"))
-      f(fn) { es => MathFnExpr(es.head, fn) }
+      f(fn) { es => Kernel.of(this, fn, fn, DoubleType, es, Seq(Arg.Num), returnsNull = true) }
     // CH proportionsZTest(successes_x, successes_y, trials_x, trials_y,
     // conf_level, 'pooled'|'unpooled') — scalar two-proportion z-test
-    f("proportionsZTest") { es => ProportionsZTestExpr(es) }
-    f("minSampleSizeConversion") { es => MinSampleSizeExpr(es, conversion = true) }
+    f("proportionsZTest") { es =>
+      Kernel.of(this, "proportionsZTest", "proportionsZTest", StructType(Seq(
+        StructField("z_statistic", DoubleType, nullable = false),
+        StructField("p_value", DoubleType, nullable = false),
+        StructField("ci_lower", DoubleType, nullable = false),
+        StructField("ci_upper", DoubleType, nullable = false))), es,
+        Seq.fill(5)(Arg.Num) :+ Arg.Str)
+    }
+    f("minSampleSizeConversion") { es =>
+      minSampleSize("minSampleSizeConversion", "minSampleSizeConversion", 4, es)
+    }
     // CH's spelling really is "Continous" (sic); accept the corrected one too
-    f("minSampleSizeContinous") { es => MinSampleSizeExpr(es, conversion = false) }
-    f("minSampleSizeContinuous") { es => MinSampleSizeExpr(es, conversion = false) }
+    for (name <- Seq("minSampleSizeContinous", "minSampleSizeContinuous"))
+      f(name) { es => minSampleSize("minSampleSizeContinuous", "minSampleSizeContinous", 5, es) }
     f("intervalLengthSum") { es =>
       IntervalLengthSumAgg(es(0), es(1)).toAggregateExpression()
     }
@@ -127,10 +138,16 @@ object StatAggregates {
     f("quantileExactWeightedMergeState") { es =>
       CountMapMergeAgg(es.head, "state").toAggregateExpression()
     }
-    f("entropyFinalize") { es => CountMapFinalizeExpr(es.head, "entropy") }
+    // scalar finalizers over a STORED count-map state (post-aggregation,
+    // group-count-sized row sets — the Metric.finish role)
+    f("entropyFinalize") { es =>
+      Kernel.of(this, "entropyFinalize", "entropyFinalize", DoubleType, es,
+        Seq(Arg.Is(BinaryType)), returnsNull = true)
+    }
     f("quantileExactWeightedFinalize") { es =>
       val level = litDouble(es(1), "quantileExactWeightedFinalize level")
-      CountMapFinalizeExpr(es(0), s"quantile:$level")
+      Kernel.of(this, "quantileExactWeightedFinalize", "quantileExactWeightedFinalize",
+        LongType, es.take(1), Seq(Arg.Is(BinaryType)), Seq(level), returnsNull = true)
     }
   }
 
@@ -185,6 +202,91 @@ object StatAggregates {
       i += 1
     }
     math.log(n) / math.log(2) - s / n
+  }
+
+  // ---- kernel methods -------------------------------------------------
+
+  def erf(x: Double): Double = org.apache.commons.math3.special.Erf.erf(x)
+  def erfc(x: Double): Double = org.apache.commons.math3.special.Erf.erfc(x)
+  def lgamma(x: Double): Double = org.apache.commons.math3.special.Gamma.logGamma(x)
+  def tgamma(x: Double): Double = org.apache.commons.math3.special.Gamma.gamma(x)
+  def digamma(x: Double): Double = org.apache.commons.math3.special.Gamma.digamma(x)
+
+  private object countMaps extends StringKeyed {
+    def read(b: Array[Byte]): CountMapBuf = { val buf = new CountMapBuf; readCountMap(b, buf); buf }
+  }
+
+  def entropyFinalize(b: Array[Byte]): Double = shannon(countMaps.read(b).m.values.toArray)
+
+  def quantileExactWeightedFinalize(b: Array[Byte], level: Double): java.lang.Long = {
+    val buf = countMaps.read(b)
+    if (buf.m.isEmpty) null
+    else weightedSelect(buf.m.toSeq.map { case (k, w) => (k.toLong, w) }, level)
+  }
+
+  /** CH `proportionsZTest(sx, sy, tx, ty, conf, usevar)` — two-proportion
+    * z-test, scalar. `usevar` is the literal string 'pooled' (variance from
+    * the pooled proportion) or 'unpooled' (per-sample variances). Returns
+    * (z_statistic, p_value, ci_lower, ci_upper); the confidence interval is
+    * for the difference p_x − p_y at `conf`, using the same standard error
+    * as the statistic (CH's convention). Degenerate inputs (zero trials,
+    * zero standard error) yield NaNs, never errors — mirroring CH.
+    */
+  def proportionsZTest(sx: Double, sy: Double, tx: Double, ty: Double, conf: Double,
+      usevar: UTF8String): InternalRow = {
+    val pooled = usevar.toString.toLowerCase match {
+      case "pooled" => true
+      case "unpooled" => false
+      case other => throw new IllegalArgumentException(
+        s"proportionsZTest: usevar must be 'pooled' or 'unpooled', got '$other'")
+    }
+    val nan = InternalRow(Double.NaN, Double.NaN, Double.NaN, Double.NaN)
+    if (tx <= 0 || ty <= 0 || sx < 0 || sy < 0 || sx > tx || sy > ty ||
+      conf <= 0 || conf >= 1) return nan
+    val p1 = sx / tx; val p2 = sy / ty; val d = p1 - p2
+    val se =
+      if (pooled) {
+        val p = (sx + sy) / (tx + ty)
+        math.sqrt(p * (1 - p) * (1 / tx + 1 / ty))
+      } else math.sqrt(p1 * (1 - p1) / tx + p2 * (1 - p2) / ty)
+    if (se == 0 || se.isNaN) return nan
+    val z = d / se
+    val p = StatMath.normalTwoSidedP(z)
+    val zc = StatMath.probit(1 - (1 - conf) / 2)
+    InternalRow(z, p, d - zc * se, d + zc * se)
+  }
+
+  /** CH's A/B-test planning scalars:
+    * `minSampleSizeConversion(baseline, mde, power, alpha)` — per-group
+    * sample size to detect an absolute conversion-rate change of `mde`,
+    * and `minSampleSizeContinous(baseline, sigma, mde, power, alpha)` —
+    * the continuous-metric twin with a RELATIVE mde. Both return the CH
+    * tuple (minimum_sample_size, detect_range_lower, detect_range_upper);
+    * normal quantiles ride commons-math3's probit. */
+  private def minSampleSize(method: String, name: String, arity: Int,
+      es: Seq[Expression]): Kernel =
+    Kernel.of(this, method, name, StructType(Seq(
+      StructField("minimum_sample_size", DoubleType, nullable = false),
+      StructField("detect_range_lower", DoubleType, nullable = false),
+      StructField("detect_range_upper", DoubleType, nullable = false))), es,
+      Seq.fill(arity)(Arg.Num))
+
+  private def z(p: Double) = StatMath.probit(p)
+
+  def minSampleSizeConversion(p1: Double, mde: Double, power: Double,
+      alpha: Double): InternalRow = {
+    val p2 = p1 + mde
+    val zs = z(1 - alpha / 2) + z(power)
+    val n = zs * zs * (p1 * (1 - p1) + p2 * (1 - p2)) / (mde * mde)
+    InternalRow(n, p1 - mde, p1 + mde)
+  }
+
+  def minSampleSizeContinuous(baseline: Double, sigma: Double, mde: Double, power: Double,
+      alpha: Double): InternalRow = {
+    val delta = baseline * mde // relative mde, CH's contract
+    val zs = z(1 - alpha / 2) + z(power)
+    val n = 2 * sigma * sigma * zs * zs / (delta * delta)
+    InternalRow(n, baseline * (1 - mde), baseline * (1 + mde))
   }
 }
 
@@ -1282,34 +1384,6 @@ case class MannWhitneyAgg(
   override def prettyName: String = "mannWhitneyUTest"
 }
 
-/** machine-precision special-function scalars (CH erf/erfc/lgamma/tgamma)
-  * over commons-math3 (on Spark's own classpath). */
-case class MathFnExpr(child: Expression, fn: String)
-  extends Expression with UnaryLike[Expression]
-  with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) return null
-    val x = StatMath.numToDouble(v)
-    fn match {
-      case "erf" => org.apache.commons.math3.special.Erf.erf(x)
-      case "erfc" => org.apache.commons.math3.special.Erf.erfc(x)
-      case "lgamma" => org.apache.commons.math3.special.Gamma.logGamma(x)
-      case "tgamma" => org.apache.commons.math3.special.Gamma.gamma(x)
-      case "digamma" => org.apache.commons.math3.special.Gamma.digamma(x)
-      case other => throw new IllegalStateException(s"unknown fn $other")
-    }
-  }
-
-  override protected def withNewChildInternal(c: Expression): MathFnExpr =
-    copy(child = c)
-  override def prettyName: String = fn
-}
-
 /** CH `kolmogorovSmirnovTest(value, index)`: two-sample KS — D is the
   * max ECDF gap (ties consumed before evaluating, both samples), p the
   * asymptotic Kolmogorov tail with the small-sample correction
@@ -1772,134 +1846,4 @@ case class CountMapMergeAgg(
     case "state" => "countMapMergeState"
     case _ => "quantileExactWeightedMerge"
   }
-}
-
-/** scalar finalizers over a STORED count-map state (post-aggregation,
-  * group-count-sized row sets — the Metric.finish role). */
-case class CountMapFinalizeExpr(child: Expression, stat: String)
-  extends Expression with UnaryLike[Expression]
-  with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-  with StringKeyed {
-
-  override def dataType: DataType =
-    if (stat == "entropy") DoubleType else LongType
-  override def nullable: Boolean = true
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) return null
-    val buf = new CountMapBuf
-    readCountMap(v.asInstanceOf[Array[Byte]], buf)
-    if (stat == "entropy") StatAggregates.shannon(buf.m.values.toArray)
-    else if (buf.m.isEmpty) null
-    else StatAggregates.weightedSelect(
-      buf.m.toSeq.map { case (k, w) => (k.toLong, w) },
-      stat.stripPrefix("quantile:").toDouble)
-  }
-
-  override protected def withNewChildInternal(c: Expression): CountMapFinalizeExpr =
-    copy(child = c)
-  override def prettyName: String =
-    if (stat == "entropy") "entropyFinalize" else "quantileExactWeightedFinalize"
-}
-
-/** CH's A/B-test planning scalars:
-  * `minSampleSizeConversion(baseline, mde, power, alpha)` — per-group
-  * sample size to detect an absolute conversion-rate change of `mde`,
-  * and `minSampleSizeContinous(baseline, sigma, mde, power, alpha)` —
-  * the continuous-metric twin with a RELATIVE mde. Both return the CH
-  * tuple (minimum_sample_size, detect_range_lower, detect_range_upper);
-  * normal quantiles ride commons-math3's probit. */
-/** CH `proportionsZTest(sx, sy, tx, ty, conf, usevar)` — two-proportion
-  * z-test, scalar. `usevar` is the literal string 'pooled' (variance from
-  * the pooled proportion) or 'unpooled' (per-sample variances). Returns
-  * (z_statistic, p_value, ci_lower, ci_upper); the confidence interval is
-  * for the difference p_x − p_y at `conf`, using the same standard error
-  * as the statistic (CH's convention). Degenerate inputs (zero trials,
-  * zero standard error) yield NaNs, never errors — mirroring CH.
-  */
-case class ProportionsZTestExpr(children: Seq[Expression])
-  extends Expression
-  with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-
-  require(children.length == 6,
-    "proportionsZTest(successes_x, successes_y, trials_x, trials_y, conf_level, " +
-      "'pooled'|'unpooled')")
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("z_statistic", DoubleType, nullable = false),
-    StructField("p_value", DoubleType, nullable = false),
-    StructField("ci_lower", DoubleType, nullable = false),
-    StructField("ci_upper", DoubleType, nullable = false)))
-  override def nullable: Boolean = children.exists(_.nullable)
-
-  override def eval(input: InternalRow): Any = {
-    val vs = children.map(_.eval(input))
-    if (vs.contains(null)) return null
-    val Seq(sx, sy, tx, ty, conf) = vs.take(5).map(StatMath.numToDouble)
-    val pooled = vs(5).toString.toLowerCase match {
-      case "pooled" => true
-      case "unpooled" => false
-      case other => throw new IllegalArgumentException(
-        s"proportionsZTest: usevar must be 'pooled' or 'unpooled', got '$other'")
-    }
-    val nan = InternalRow(Double.NaN, Double.NaN, Double.NaN, Double.NaN)
-    if (tx <= 0 || ty <= 0 || sx < 0 || sy < 0 || sx > tx || sy > ty ||
-      conf <= 0 || conf >= 1) return nan
-    val p1 = sx / tx; val p2 = sy / ty; val d = p1 - p2
-    val se =
-      if (pooled) {
-        val p = (sx + sy) / (tx + ty)
-        math.sqrt(p * (1 - p) * (1 / tx + 1 / ty))
-      } else math.sqrt(p1 * (1 - p1) / tx + p2 * (1 - p2) / ty)
-    if (se == 0 || se.isNaN) return nan
-    val z = d / se
-    val p = StatMath.normalTwoSidedP(z)
-    val zc = StatMath.probit(1 - (1 - conf) / 2)
-    InternalRow(z, p, d - zc * se, d + zc * se)
-  }
-
-  override protected def withNewChildrenInternal(
-      cs: IndexedSeq[Expression]): ProportionsZTestExpr = copy(children = cs)
-  override def prettyName: String = "proportionsZTest"
-}
-
-case class MinSampleSizeExpr(children: Seq[Expression], conversion: Boolean)
-  extends Expression
-  with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-
-  require(children.length == (if (conversion) 4 else 5),
-    if (conversion) "minSampleSizeConversion(baseline, mde, power, alpha)"
-    else "minSampleSizeContinous(baseline, sigma, mde, power, alpha)")
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("minimum_sample_size", DoubleType, nullable = false),
-    StructField("detect_range_lower", DoubleType, nullable = false),
-    StructField("detect_range_upper", DoubleType, nullable = false)))
-  override def nullable: Boolean = children.exists(_.nullable)
-
-  override def eval(input: InternalRow): Any = {
-    val vs = children.map(_.eval(input))
-    if (vs.contains(null)) return null
-    val xs = vs.map(StatMath.numToDouble)
-    def z(p: Double) = StatMath.probit(p)
-    if (conversion) {
-      val Seq(p1, mde, power, alpha) = xs
-      val p2 = p1 + mde
-      val zs = z(1 - alpha / 2) + z(power)
-      val n = zs * zs * (p1 * (1 - p1) + p2 * (1 - p2)) / (mde * mde)
-      InternalRow(n, p1 - mde, p1 + mde)
-    } else {
-      val Seq(baseline, sigma, mde, power, alpha) = xs
-      val delta = baseline * mde // relative mde, CH's contract
-      val zs = z(1 - alpha / 2) + z(power)
-      val n = 2 * sigma * sigma * zs * zs / (delta * delta)
-      InternalRow(n, baseline * (1 - mde), baseline * (1 + mde))
-    }
-  }
-
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): MinSampleSizeExpr =
-    copy(children = cs)
-  override def prettyName: String =
-    if (conversion) "minSampleSizeConversion" else "minSampleSizeContinous"
 }

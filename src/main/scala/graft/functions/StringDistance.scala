@@ -2,8 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, Levenshtein}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -18,22 +16,26 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * All per-row scalar expressions (fuzzy-dedup / record-linkage
   * primitives); editDistance rides Spark's codegen'd Levenshtein, the
-  * rest are eval expressions over char arrays — O(|a|·|b|) worst case,
+  * rest are kernels over char arrays — O(|a|·|b|) worst case,
   * no state, fully distributed.
   */
 object StringDistance {
 
+  /** metric (SQL name = kernel method) → result type */
+  private val metrics: Map[String, DataType] = Map(
+    "damerauLevenshteinDistance" -> IntegerType,
+    "jaroSimilarity" -> DoubleType, "jaroWinklerSimilarity" -> DoubleType,
+    "byteHammingDistance" -> IntegerType, "stringJaccardIndex" -> DoubleType,
+    "ngramDistance" -> DoubleType, "ngramSearch" -> DoubleType)
+
   val functions = FunctionTable.define(this) { f =>
     f("editDistance") { es => Levenshtein(es(0), es(1)) }
     f("levenshteinDistance") { es => Levenshtein(es(0), es(1)) }
-    f("damerauLevenshteinDistance") { es => StringDistExpr(es(0), es(1), "damerau") }
-    f("jaroSimilarity") { es => StringDistExpr(es(0), es(1), "jaro") }
-    f("jaroWinklerSimilarity") { es => StringDistExpr(es(0), es(1), "jaroWinkler") }
-    f("byteHammingDistance") { es => StringDistExpr(es(0), es(1), "hamming") }
-    f("stringJaccardIndex") { es => StringDistExpr(es(0), es(1), "jaccard") }
-    f("ngramDistance") { es => StringDistExpr(es(0), es(1), "ngramDistance") }
-    f("ngramSearch") { es => StringDistExpr(es(0), es(1), "ngramSearch") }
+    metrics.keys.foreach(name => f(name)(metric(name)))
   }
+
+  private[functions] def metric(name: String)(es: Seq[Expression]): Kernel =
+    Kernel.of(this, name, name, metrics(name), es, Seq(Arg.Str, Arg.Str))
 
   def edit_distance(a: Column, b: Column): Column = call_function("editDistance", a, b)
   def jaro_winkler(a: Column, b: Column): Column =
@@ -117,73 +119,58 @@ object StringDistance {
     else (0 to s.length - n).map(i => s.substring(i, i + n))
       .groupBy(identity).map { case (g, occ) => g -> occ.size }
   }
-}
 
-/** Binary string-distance dispatcher (one eval expression per metric). */
-case class StringDistExpr(left: Expression, right: Expression, metric: String)
-  extends Expression with BinaryLike[Expression] with CodegenFallback {
+  // ---- kernel methods, one per metric ---------------------------------
 
-  override def dataType: DataType = metric match {
-    case "damerau" | "hamming" => IntegerType
-    case _ => DoubleType
+  def damerauLevenshteinDistance(l: UTF8String, r: UTF8String): Int =
+    damerau(l.toString.toCharArray, r.toString.toCharArray)
+
+  def jaroSimilarity(l: UTF8String, r: UTF8String): Double =
+    jaro(l.toString.toCharArray, r.toString.toCharArray)
+
+  def jaroWinklerSimilarity(l: UTF8String, r: UTF8String): Double =
+    jaroWinkler(l.toString.toCharArray, r.toString.toCharArray)
+
+  /** mismatches over the common prefix + the length difference */
+  def byteHammingDistance(l: UTF8String, r: UTF8String): Int = {
+    val a = l.toString
+    val b = r.toString
+    val n = math.min(a.length, b.length)
+    var d = math.abs(a.length - b.length)
+    var i = 0
+    while (i < n) { if (a.charAt(i) != b.charAt(i)) d += 1; i += 1 }
+    d
   }
-  override def nullable: Boolean = left.nullable || right.nullable
 
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val l = left.eval(input)
-    val r = right.eval(input)
-    if (l == null || r == null) return null
-    val a = l.asInstanceOf[UTF8String].toString
-    val b = r.asInstanceOf[UTF8String].toString
-    metric match {
-      case "damerau" => StringDistance.damerau(a.toCharArray, b.toCharArray)
-      case "jaro" => StringDistance.jaro(a.toCharArray, b.toCharArray)
-      case "jaroWinkler" => StringDistance.jaroWinkler(a.toCharArray, b.toCharArray)
-      case "hamming" =>
-        // mismatches over the common prefix + the length difference
-        val n = math.min(a.length, b.length)
-        var d = math.abs(a.length - b.length)
-        var i = 0
-        while (i < n) { if (a.charAt(i) != b.charAt(i)) d += 1; i += 1 }
-        d
-      case "jaccard" =>
-        val sa = a.toSet
-        val sb = b.toSet
-        if (sa.isEmpty && sb.isEmpty) 1d
-        else (sa & sb).size.toDouble / (sa | sb).size
-      case "ngramDistance" =>
-        // CH's 4-gram multiset distance: |A∆B| / (|A| + |B|), 0 = equal
-        val ga = StringDistance.grams(a, 4)
-        val gb = StringDistance.grams(b, 4)
-        val totA = ga.values.sum
-        val totB = gb.values.sum
-        if (totA + totB == 0) 0d
-        else {
-          val shared = ga.keysIterator
-            .map(g => 2 * math.min(ga(g), gb.getOrElse(g, 0))).sum
-          (totA + totB - shared).toDouble / (totA + totB)
-        }
-      case "ngramSearch" =>
-        // asymmetric: what fraction of the needle's 4-grams the haystack
-        // carries (1 = fully contained, 0 = none)
-        val hay = StringDistance.grams(a, 4)
-        val needle = StringDistance.grams(b, 4)
-        val tot = needle.values.sum
-        if (tot == 0) 1d
-        else needle.keysIterator
-          .map(g => math.min(needle(g), hay.getOrElse(g, 0))).sum.toDouble / tot
-      case other => throw new IllegalStateException(s"unknown metric $other")
+  def stringJaccardIndex(l: UTF8String, r: UTF8String): Double = {
+    val sa = l.toString.toSet
+    val sb = r.toString.toSet
+    if (sa.isEmpty && sb.isEmpty) 1d
+    else (sa & sb).size.toDouble / (sa | sb).size
+  }
+
+  /** CH's 4-gram multiset distance: |A∆B| / (|A| + |B|), 0 = equal */
+  def ngramDistance(l: UTF8String, r: UTF8String): Double = {
+    val ga = grams(l.toString, 4)
+    val gb = grams(r.toString, 4)
+    val totA = ga.values.sum
+    val totB = gb.values.sum
+    if (totA + totB == 0) 0d
+    else {
+      val shared = ga.keysIterator
+        .map(g => 2 * math.min(ga(g), gb.getOrElse(g, 0))).sum
+      (totA + totB - shared).toDouble / (totA + totB)
     }
   }
 
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): StringDistExpr =
-    copy(left = l, right = r)
-  override def prettyName: String = metric match {
-    case "damerau" => "damerauLevenshteinDistance"
-    case "jaro" => "jaroSimilarity"
-    case "jaroWinkler" => "jaroWinklerSimilarity"
-    case "hamming" => "byteHammingDistance"
-    case "jaccard" => "stringJaccardIndex"
-    case m => m
+  /** asymmetric: what fraction of the needle's 4-grams the haystack
+    * carries (1 = fully contained, 0 = none) */
+  def ngramSearch(l: UTF8String, r: UTF8String): Double = {
+    val hay = grams(l.toString, 4)
+    val needle = grams(r.toString, 4)
+    val tot = needle.values.sum
+    if (tot == 0) 1d
+    else needle.keysIterator
+      .map(g => math.min(needle(g), hay.getOrElse(g, 0))).sum.toDouble / tot
   }
 }

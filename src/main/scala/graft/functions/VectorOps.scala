@@ -2,8 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
@@ -20,12 +19,27 @@ import org.apache.spark.sql.types._
   */
 object VectorOps {
   val functions = FunctionTable.define(this) { f =>
-    f("cosine_sim")(exprs => CosineSimilarity(exprs(0), exprs(1)))
+    f("cosine_sim")(cosine)
     f("mean_vector")(exprs => MeanVectorAggregate(exprs.head))
-    f("l2_norm")(exprs => L2Norm(exprs.head))
-    f("l2_normalize")(exprs => L2Normalize(exprs.head))
-    f("quantize_int8")(exprs => QuantizeInt8(exprs.head))
+    f("l2_norm")(unary("l2Norm", "l2_norm", DoubleType))
+    f("l2_normalize")(unary("l2Normalize", "l2_normalize", ArrayType(DoubleType, containsNull = false)))
+    f("quantize_int8")(unary("quantizeInt8", "quantize_int8", ArrayType(IntegerType, containsNull = false)))
   }
+
+  private[functions] val vector = Arg.ArrayOf(Arg.Is(FloatType, DoubleType))
+
+  /** Whether a vector argument's elements are floats (else doubles). */
+  private[functions] def isFloat(e: Expression): Boolean = e.dataType match {
+    case ArrayType(FloatType, _) => true
+    case _ => false
+  }
+
+  private[functions] def cosine(es: Seq[Expression]): Kernel =
+    Kernel.of(this, "cosineSim", "cosine_sim", DoubleType, es, Seq(vector, vector),
+      es.map(isFloat), returnsNull = true)
+
+  private[functions] def unary(method: String, name: String, out: DataType)(es: Seq[Expression]): Kernel =
+    Kernel.of(this, method, name, out, es, Seq(vector), es.take(1).map(isFloat), returnsNull = true)
 
   /** Cosine similarity of two float/double array columns, in double. */
   def cosine_sim(a: Column, b: Column): Column = call_function("cosine_sim", a, b)
@@ -46,87 +60,59 @@ object VectorOps {
     * Null for a zero vector.
     */
   def quantize_int8(c: Column): Column = call_function("quantize_int8", c)
-}
 
-/** Shared primitive-loop base for unary vector expressions. */
-trait VectorUnary extends Expression
-  with org.apache.spark.sql.catalyst.trees.UnaryLike[Expression] with CodegenFallback {
+  private def elem(a: ArrayData, i: Int, isFloat: Boolean): Double =
+    if (isFloat) a.getFloat(i).toDouble else a.getDouble(i)
 
-  def child: Expression
-
-  @transient protected lazy val childIsFloat: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<float|double>, got ${t.simpleString}")
-  }
-
-  protected def elem(a: ArrayData, i: Int): Double =
-    if (childIsFloat) a.getFloat(i).toDouble else a.getDouble(i)
-
-  override def nullable: Boolean = true
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null else evalVector(v.asInstanceOf[ArrayData])
-  }
-
-  protected def evalVector(a: ArrayData): Any
-}
-
-/** sqrt of the index-order sum of squares — bit-identical to the q40-style
-  * mirrored DuckDB fold.
-  */
-case class L2Norm(child: Expression) extends VectorUnary {
-  override def dataType: DataType = DoubleType
-  override protected def evalVector(a: ArrayData): Any = {
+  /** sqrt of the index-order sum of squares — bit-identical to the
+    * q40-style mirrored DuckDB fold. */
+  def l2Norm(a: ArrayData, isFloat: Boolean): java.lang.Double = {
     var s = 0.0; var i = 0; val n = a.numElements()
-    while (i < n) { val x = elem(a, i); s += x * x; i += 1 }
+    while (i < n) { val x = elem(a, i, isFloat); s += x * x; i += 1 }
     java.lang.Double.valueOf(math.sqrt(s))
   }
-  override protected def withNewChildInternal(c: Expression): L2Norm = copy(child = c)
-  override def prettyName: String = "l2_norm"
-}
 
-case class L2Normalize(child: Expression) extends VectorUnary {
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override protected def evalVector(a: ArrayData): Any = {
+  def l2Normalize(a: ArrayData, isFloat: Boolean): ArrayData = {
     var s = 0.0; var i = 0; val n = a.numElements()
-    while (i < n) { val x = elem(a, i); s += x * x; i += 1 }
+    while (i < n) { val x = elem(a, i, isFloat); s += x * x; i += 1 }
     if (s == 0.0) return null
     val norm = math.sqrt(s)
     val out = new Array[Double](n)
     i = 0
-    while (i < n) { out(i) = elem(a, i) / norm; i += 1 }
-    org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(out)
+    while (i < n) { out(i) = elem(a, i, isFloat) / norm; i += 1 }
+    ArrayData.toArrayData(out)
   }
-  override protected def withNewChildInternal(c: Expression): L2Normalize = copy(child = c)
-  override def prettyName: String = "l2_normalize"
-}
 
-/** floor(x·127/maxabs + 0.5) per element (round-half-up, codes in
-  * [-127, 127] by construction — x = ±maxabs lands exactly on ±127).
-  */
-case class QuantizeInt8(child: Expression) extends VectorUnary {
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override protected def evalVector(a: ArrayData): Any = {
+  /** floor(x·127/maxabs + 0.5) per element (round-half-up, codes in
+    * [-127, 127] by construction — x = ±maxabs lands exactly on ±127).
+    */
+  def quantizeInt8(a: ArrayData, isFloat: Boolean): ArrayData = {
     var mx = 0.0; var i = 0; val n = a.numElements()
-    while (i < n) { val x = math.abs(elem(a, i)); if (x > mx) mx = x; i += 1 }
+    while (i < n) { val x = math.abs(elem(a, i, isFloat)); if (x > mx) mx = x; i += 1 }
     if (mx == 0.0) return null
     val out = new Array[Int](n)
     i = 0
     while (i < n) {
-      out(i) = math.floor(elem(a, i) * 127.0 / mx + 0.5).toInt
+      out(i) = math.floor(elem(a, i, isFloat) * 127.0 / mx + 0.5).toInt
       i += 1
     }
-    org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(out)
+    ArrayData.toArrayData(out)
   }
-  override protected def withNewChildInternal(c: Expression): QuantizeInt8 = copy(child = c)
-  override def prettyName: String = "quantize_int8"
+
+  def cosineSim(a: ArrayData, b: ArrayData, leftIsFloat: Boolean,
+      rightIsFloat: Boolean): java.lang.Double = {
+    val n = math.min(a.numElements(), b.numElements())
+    var dot = 0.0; var na = 0.0; var nb = 0.0
+    var i = 0
+    while (i < n) {
+      val x = elem(a, i, leftIsFloat)
+      val y = elem(b, i, rightIsFloat)
+      dot += x * y; na += x * x; nb += y * y
+      i += 1
+    }
+    if (na == 0.0 || nb == 0.0) null
+    else java.lang.Double.valueOf(dot / (math.sqrt(na) * math.sqrt(nb)))
+  }
 }
 
 /** Element-wise mean of array<float> rows — a [[TypedImperativeAggregate]]
@@ -208,45 +194,3 @@ case class MeanVectorAggregate(
 
 /** (element-wise double sums, row count) partial for [[MeanVectorAggregate]]. */
 case class MeanVecBuf(sums: Array[Double], count: Long)
-
-case class CosineSimilarity(left: Expression, right: Expression)
-  extends BinaryExpression with CodegenFallback {
-
-  private def elemType(e: Expression): Option[DataType] = e.dataType match {
-    case ArrayType(t @ (FloatType | DoubleType), _) => Some(t)
-    case _ => None
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (elemType(left), elemType(right)) match {
-      case (Some(_), Some(_)) => TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        s"cosine_sim requires array<float|double> inputs, got " +
-          s"${left.dataType.simpleString} / ${right.dataType.simpleString}")
-    }
-
-  override def dataType: DataType = DoubleType
-
-  @transient private lazy val leftIsFloat = elemType(left).contains(FloatType)
-  @transient private lazy val rightIsFloat = elemType(right).contains(FloatType)
-
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    val n = math.min(a.numElements(), b.numElements())
-    var dot = 0.0; var na = 0.0; var nb = 0.0
-    var i = 0
-    while (i < n) {
-      val x = if (leftIsFloat) a.getFloat(i).toDouble else a.getDouble(i)
-      val y = if (rightIsFloat) b.getFloat(i).toDouble else b.getDouble(i)
-      dot += x * y; na += x * x; nb += y * y
-      i += 1
-    }
-    if (na == 0.0 || nb == 0.0) null
-    else java.lang.Double.valueOf(dot / (math.sqrt(na) * math.sqrt(nb)))
-  }
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) =
-    copy(left = l, right = r)
-  override def prettyName: String = "cosine_sim"
-}

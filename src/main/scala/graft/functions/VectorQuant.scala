@@ -1,10 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions.{call_function, lit, typedLit}
 import org.apache.spark.sql.types._
@@ -15,7 +12,7 @@ import org.apache.spark.sql.types._
   * replace the interpreted per-row UDF closures on the index-BUILD paths
   * ([[graft.similarity.Ann.ivfIndex]], [[graft.similarity.Pq.encode]]):
   * O(nlist × dim) / O(ksub × dim) boxed work per corpus row was exactly
-  * the cost the other hot loops already shed (LshSignaturesExpr et al.).
+  * the cost the other hot loops already shed (lsh_signatures et al.).
   *
   * Centroids/codebooks ride the plan as literals parsed ONCE at function
   * construction into primitive arrays (driver side, no per-row or
@@ -34,31 +31,38 @@ object VectorQuant {
     f("nearest_centroids") { es =>
       require(es.length == 3, "usage: nearest_centroids(vec, centroidsLit, n)")
       val (cids, cents) = centroidsLit(es(1))
-      NearestCentroidsExpr(es.head, cids, cents, intLit(es(2), "n"))
+      val n = intLit(es(2), "n")
+      require(cents.nonEmpty, "nearest_centroids: empty centroid set")
+      require(n >= 1, s"nearest_centroids: n must be >= 1, got $n")
+      kernel("nearestCentroids", "nearest_centroids", ArrayType(IntegerType, containsNull = false),
+        es.take(1), Seq(VectorOps.vector), Seq(cids, cents, n, VectorOps.isFloat(es.head)))
     }
     f("pq_nearest_code") { es =>
       require(es.length == 3, "usage: pq_nearest_code(mIdx, subvec, codebookLit)")
-      PqNearestCodeExpr(es(0), es(1), codebookLit(es(2)))
+      kernel("pqNearestCode", "pq_nearest_code", IntegerType, es.take(2),
+        Seq(Arg.Is(IntegerType), VectorOps.vector), Seq(codebookLit(es(2)), VectorOps.isFloat(es(1))))
     }
     f("pq_encode") { es =>
       require(es.length == 2, "usage: pq_encode(vec, codebookLit)")
-      PqEncodeExpr(es.head, codebookLit(es(1)))
+      codebookKernel("pqEncode", "pq_encode", ArrayType(IntegerType, containsNull = false), es)
     }
     f("pq_lut") { es =>
       require(es.length == 2, "usage: pq_lut(vec, codebookLit)")
-      PqLutExpr(es.head, codebookLit(es(1)))
+      codebookKernel("pqLut", "pq_lut", ArrayType(DoubleType, containsNull = false), es)
     }
     f("pq_decode") { es =>
       require(es.length == 2, "usage: pq_decode(codes, codebookLit)")
-      PqDecodeExpr(es.head, codebookLit(es(1)))
+      val cb = codebook(es(1), "pq_decode")
+      kernel("pqDecode", "pq_decode", ArrayType(FloatType, containsNull = false), es.take(1),
+        Seq(codes), Seq(cb))
     }
     f("pq_adc_dot") { es =>
       require(es.length == 2, "usage: pq_adc_dot(codes, lut)")
-      PqAdcDotExpr(es(0), es(1))
+      kernel("pqAdcDot", "pq_adc_dot", DoubleType, es, Seq(codes, lut), Nil)
     }
     f("pq_recon_error") { es =>
       require(es.length == 2, "usage: pq_recon_error(vec, codebookLit)")
-      PqReconErrorExpr(es.head, codebookLit(es(1)))
+      codebookKernel("pqReconError", "pq_recon_error", DoubleType, es)
     }
     f("pq_adc_score") { es =>
       require(es.length == 4, "usage: pq_adc_score(codes, lut, pn, codebookLit)")
@@ -69,9 +73,30 @@ object VectorQuant {
         while (i < c.length) { s += c(i).toDouble * c(i); i += 1 }
         s
       })
-      PqAdcScoreExpr(es(0), es(1), es(2), cnorm2)
+      kernel("pqAdcScore", "pq_adc_score", DoubleType, es.take(3),
+        Seq(codes, lut, Arg.Is(DoubleType)), Seq(cnorm2))
     }
   }
+
+  private val codes = Arg.ArrayOf(Arg.Is(IntegerType))
+  private val lut = Arg.ArrayOf(Arg.Is(DoubleType))
+
+  private def kernel(method: String, name: String, out: DataType, es: Seq[Expression],
+      accepts: Seq[Arg], params: Seq[Any]): Kernel =
+    Kernel.of(this, method, name, out, es, accepts, params, returnsNull = true)
+
+  private def codebook(e: Expression, name: String): Array[Array[Array[Float]]] = {
+    val cb = codebookLit(e)
+    require(cb.nonEmpty && cb.head.nonEmpty, s"$name: empty codebook")
+    cb
+  }
+
+  /** `name(vec, codebookLit)`: a vector child, the codebook and the
+    * vector's element kind as params. */
+  private def codebookKernel(method: String, name: String, out: DataType,
+      es: Seq[Expression]): Kernel =
+    kernel(method, name, out, es.take(1), Seq(VectorOps.vector),
+      Seq(codebook(es(1), name), VectorOps.isFloat(es.head)))
 
   /** Ids of the `n` nearest centroids to `vec` by cosine, ordered by
     * (-similarity, cid); ties to the lowest cid. n = 1 is IVF assignment.
@@ -165,7 +190,7 @@ object VectorQuant {
     * Ann.cosineLocal UDF helper (min-length loop, same accumulation
     * order, -2.0 zero-norm sentinel).
     */
-  private[functions] def cosineVs(a: ArrayData, aIsFloat: Boolean, b: Array[Float]): Double = {
+  private def cosineVs(a: ArrayData, aIsFloat: Boolean, b: Array[Float]): Double = {
     val n = math.min(a.numElements(), b.length)
     var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
     while (i < n) {
@@ -176,40 +201,42 @@ object VectorQuant {
     }
     if (na == 0 || nb == 0) -2.0 else dot / (math.sqrt(na) * math.sqrt(nb))
   }
-}
 
-/** Ids of the n nearest centroids by cosine; see [[VectorQuant]]. */
-case class NearestCentroidsExpr(
-    child: Expression, cids: Array[Int], cents: Array[Array[Float]], n: Int)
-  extends Expression
-  with org.apache.spark.sql.catalyst.trees.UnaryLike[Expression] with CodegenFallback {
+  // ---- kernel methods -------------------------------------------------
 
-  require(cents.nonEmpty, "nearest_centroids: empty centroid set")
-  require(n >= 1, s"nearest_centroids: n must be >= 1, got $n")
-
-  @transient private lazy val childIsFloat = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
+  /** Shared L2 nearest-code kernel (strict <, first-wins ties — identical
+    * to the former Pq.nearestCode). */
+  private def nearestCode(a: ArrayData, aIsFloat: Boolean, off: Int, len: Int,
+      cents: Array[Array[Float]]): Int = {
+    // vectors shorter than m*subDim zero-pad the missing tail — the
+    // Arrays.copyOfRange semantics of the UDFs these expressions replaced
+    val avail = a.numElements()
+    var best = 0; var bestD = Double.MaxValue; var c = 0
+    while (c < cents.length) {
+      val cent = cents(c)
+      val n = math.min(len, cent.length)
+      var s = 0.0; var i = 0
+      while (i < n) {
+        val x = if (off + i >= avail) 0.0
+          else if (aIsFloat) a.getFloat(off + i).toDouble else a.getDouble(off + i)
+        val d = x - cent(i).toDouble
+        s += d * d; i += 1
+      }
+      if (s < bestD) { bestD = s; best = c }
+      c += 1
+    }
+    best
   }
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"nearest_centroids requires array<float|double>, got ${t.simpleString}")
-  }
-
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) return null
-    val a = v.asInstanceOf[ArrayData]
+  /** Ids of the n nearest centroids by cosine, ordered by (-similarity,
+    * cid); ties to the lowest cid. */
+  def nearestCentroids(a: ArrayData, cids: Array[Int], cents: Array[Array[Float]], n: Int,
+      isFloat: Boolean): ArrayData = {
     val m = cents.length
     val sims = new Array[Double](m)
     var i = 0
     while (i < m) {
-      sims(i) = VectorQuant.cosineVs(a, childIsFloat, cents(i))
+      sims(i) = cosineVs(a, isFloat, cents(i))
       i += 1
     }
     // top-n selection by (-sim, cid) — the sortBy order of the UDF form;
@@ -234,137 +261,29 @@ case class NearestCentroidsExpr(
     new GenericArrayData(out)
   }
 
-  override protected def withNewChildInternal(c: Expression): NearestCentroidsExpr =
-    copy(child = c)
-  override def prettyName: String = "nearest_centroids"
-}
+  /** L2-nearest code of one subspace. */
+  def pqNearestCode(mi: Int, a: ArrayData, cb: Array[Array[Array[Float]]], isFloat: Boolean): Int =
+    nearestCode(a, isFloat, 0, a.numElements(), cb(mi))
 
-/** Shared L2 nearest-code kernel (strict <, first-wins ties — identical to
-  * the former Pq.nearestCode).
-  */
-private[functions] object PqKernels {
-  def nearestCode(a: ArrayData, aIsFloat: Boolean, off: Int, len: Int,
-      cents: Array[Array[Float]]): Int = {
-    // vectors shorter than m*subDim zero-pad the missing tail — the
-    // Arrays.copyOfRange semantics of the UDFs these expressions replaced
-    val avail = a.numElements()
-    var best = 0; var bestD = Double.MaxValue; var c = 0
-    while (c < cents.length) {
-      val cent = cents(c)
-      val n = math.min(len, cent.length)
-      var s = 0.0; var i = 0
-      while (i < n) {
-        val x = if (off + i >= avail) 0.0
-          else if (aIsFloat) a.getFloat(off + i).toDouble else a.getDouble(off + i)
-        val d = x - cent(i).toDouble
-        s += d * d; i += 1
-      }
-      if (s < bestD) { bestD = s; best = c }
-      c += 1
-    }
-    best
-  }
-
-  def isFloatArray(e: Expression): Boolean = e.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
-  def vecTypeOk(e: Expression, name: String): TypeCheckResult = e.dataType match {
-    case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$name requires array<float|double>, got ${t.simpleString}")
-  }
-}
-
-/** L2-nearest code of one subspace; see [[VectorQuant]]. */
-case class PqNearestCodeExpr(mIdx: Expression, subvec: Expression,
-    cb: Array[Array[Array[Float]]])
-  extends Expression
-  with org.apache.spark.sql.catalyst.trees.BinaryLike[Expression] with CodegenFallback {
-
-  override def left: Expression = mIdx
-  override def right: Expression = subvec
-  @transient private lazy val isFloat = PqKernels.isFloatArray(subvec)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (mIdx.dataType != IntegerType)
-      TypeCheckResult.TypeCheckFailure(
-        s"pq_nearest_code: mIdx must be int, got ${mIdx.dataType.simpleString}")
-    else PqKernels.vecTypeOk(subvec, "pq_nearest_code")
-
-  override def dataType: DataType = IntegerType
-  override def nullable: Boolean = true
-
-  override def eval(input: InternalRow): Any = {
-    val mi = mIdx.eval(input)
-    val v = subvec.eval(input)
-    if (mi == null || v == null) return null
-    val a = v.asInstanceOf[ArrayData]
-    java.lang.Integer.valueOf(
-      PqKernels.nearestCode(a, isFloat, 0, a.numElements(), cb(mi.asInstanceOf[Int])))
-  }
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): PqNearestCodeExpr =
-    copy(mIdx = l, subvec = r)
-  override def prettyName: String = "pq_nearest_code"
-}
-
-/** All m codes of a full vector; see [[VectorQuant]]. */
-case class PqEncodeExpr(child: Expression, cb: Array[Array[Array[Float]]])
-  extends Expression
-  with org.apache.spark.sql.catalyst.trees.UnaryLike[Expression] with CodegenFallback {
-
-  require(cb.nonEmpty && cb.head.nonEmpty, "pq_encode: empty codebook")
-  private val m = cb.length
-  private val subDim = cb.head.head.length
-
-  @transient private lazy val isFloat = PqKernels.isFloatArray(child)
-  override def checkInputDataTypes(): TypeCheckResult =
-    PqKernels.vecTypeOk(child, "pq_encode")
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) return null
-    val a = v.asInstanceOf[ArrayData]
+  /** All m codes of a full vector. */
+  def pqEncode(a: ArrayData, cb: Array[Array[Array[Float]]], isFloat: Boolean): ArrayData = {
+    val m = cb.length
+    val subDim = cb.head.head.length
     val out = new Array[Any](m)
     var mi = 0
     while (mi < m) {
-      out(mi) = PqKernels.nearestCode(a, isFloat, mi * subDim, subDim, cb(mi))
+      out(mi) = nearestCode(a, isFloat, mi * subDim, subDim, cb(mi))
       mi += 1
     }
     new GenericArrayData(out)
   }
 
-  override protected def withNewChildInternal(c: Expression): PqEncodeExpr =
-    copy(child = c)
-  override def prettyName: String = "pq_encode"
-}
-
-/** Squared reconstruction error under a codebook; see [[VectorQuant]].
-  * Same kernel as encode (nearest code per subspace) but returning the
-  * winning L2 distance sum instead of the codes.
-  */
-case class PqReconErrorExpr(child: Expression, cb: Array[Array[Array[Float]]])
-  extends Expression
-  with org.apache.spark.sql.catalyst.trees.UnaryLike[Expression] with CodegenFallback {
-
-  require(cb.nonEmpty && cb.head.nonEmpty, "pq_recon_error: empty codebook")
-  private val m = cb.length
-  private val subDim = cb.head.head.length
-
-  @transient private lazy val isFloat = PqKernels.isFloatArray(child)
-  override def checkInputDataTypes(): TypeCheckResult =
-    PqKernels.vecTypeOk(child, "pq_recon_error")
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) return null
-    val a = v.asInstanceOf[ArrayData]
+  /** Squared reconstruction error under a codebook: the same kernel as
+    * encode (nearest code per subspace) but returning the winning L2
+    * distance sum instead of the codes. */
+  def pqReconError(a: ArrayData, cb: Array[Array[Array[Float]]], isFloat: Boolean): Double = {
+    val m = cb.length
+    val subDim = cb.head.head.length
     val avail = a.numElements() // short vectors zero-pad (copyOfRange semantics)
     var total = 0.0
     var mi = 0
@@ -389,34 +308,14 @@ case class PqReconErrorExpr(child: Expression, cb: Array[Array[Array[Float]]])
       total += bestD
       mi += 1
     }
-    java.lang.Double.valueOf(total)
+    total
   }
 
-  override protected def withNewChildInternal(c: Expression): PqReconErrorExpr =
-    copy(child = c)
-  override def prettyName: String = "pq_recon_error"
-}
-
-/** Per-probe ADC lookup table; see [[VectorQuant]]. */
-case class PqLutExpr(child: Expression, cb: Array[Array[Array[Float]]])
-  extends Expression
-  with org.apache.spark.sql.catalyst.trees.UnaryLike[Expression] with CodegenFallback {
-
-  require(cb.nonEmpty && cb.head.nonEmpty, "pq_lut: empty codebook")
-  private val m = cb.length
-  private val ksub = cb.head.length
-  private val subDim = cb.head.head.length
-
-  @transient private lazy val isFloat = PqKernels.isFloatArray(child)
-  override def checkInputDataTypes(): TypeCheckResult =
-    PqKernels.vecTypeOk(child, "pq_lut")
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) return null
-    val a = v.asInstanceOf[ArrayData]
+  /** Per-probe ADC lookup table. */
+  def pqLut(a: ArrayData, cb: Array[Array[Array[Float]]], isFloat: Boolean): ArrayData = {
+    val m = cb.length
+    val ksub = cb.head.length
+    val subDim = cb.head.head.length
     val avail = a.numElements() // short vectors zero-pad (copyOfRange semantics)
     val lut = new Array[Double](m * ksub)
     var mi = 0
@@ -440,34 +339,10 @@ case class PqLutExpr(child: Expression, cb: Array[Array[Array[Float]]])
     ArrayData.toArrayData(lut)
   }
 
-  override protected def withNewChildInternal(c: Expression): PqLutExpr =
-    copy(child = c)
-  override def prettyName: String = "pq_lut"
-}
-
-/** Reconstruction of a code row: concat of chosen sub-centroids; see
-  * [[VectorQuant.pq_decode]].
-  */
-case class PqDecodeExpr(child: Expression, cb: Array[Array[Array[Float]]])
-  extends Expression
-  with org.apache.spark.sql.catalyst.trees.UnaryLike[Expression] with CodegenFallback {
-
-  require(cb.nonEmpty && cb.head.nonEmpty, "pq_decode: empty codebook")
-  private val m = cb.length
-  private val subDim = cb.head.head.length
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(IntegerType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"pq_decode requires array<int> codes, got ${t.simpleString}")
-  }
-  override def dataType: DataType = ArrayType(FloatType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) return null
-    val a = v.asInstanceOf[ArrayData]
+  /** Reconstruction of a code row: concat of chosen sub-centroids. */
+  def pqDecode(a: ArrayData, cb: Array[Array[Array[Float]]]): ArrayData = {
+    val m = cb.length
+    val subDim = cb.head.head.length
     require(a.numElements() == m, s"pq_decode: expected $m codes, got ${a.numElements()}")
     val out = new Array[Float](m * subDim)
     var mi = 0
@@ -485,41 +360,11 @@ case class PqDecodeExpr(child: Expression, cb: Array[Array[Array[Float]]])
     ArrayData.toArrayData(out)
   }
 
-  override protected def withNewChildInternal(c: Expression): PqDecodeExpr =
-    copy(child = c)
-  override def prettyName: String = "pq_decode"
-}
-
-/** LUT-sum half of ADC (dot of probe with the reconstruction); m/ksub are
-  * inferred from the runtime array lengths. See [[VectorQuant.pq_adc_dot]].
-  */
-case class PqAdcDotExpr(codes: Expression, lut: Expression)
-  extends Expression
-  with org.apache.spark.sql.catalyst.trees.BinaryLike[Expression] with CodegenFallback {
-
-  override def left: Expression = codes
-  override def right: Expression = lut
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (!codes.dataType.isInstanceOf[ArrayType] ||
-        codes.dataType.asInstanceOf[ArrayType].elementType != IntegerType)
-      TypeCheckResult.TypeCheckFailure("pq_adc_dot: codes must be array<int>")
-    else if (!lut.dataType.isInstanceOf[ArrayType] ||
-        lut.dataType.asInstanceOf[ArrayType].elementType != DoubleType)
-      TypeCheckResult.TypeCheckFailure("pq_adc_dot: lut must be array<double>")
-    else TypeCheckResult.TypeCheckSuccess
-
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-
-  override def eval(input: InternalRow): Any = {
-    val cv = codes.eval(input)
-    val lv = lut.eval(input)
-    if (cv == null || lv == null) return null
-    val ca = cv.asInstanceOf[ArrayData]
-    val la = lv.asInstanceOf[ArrayData]
+  /** LUT-sum half of ADC (dot of probe with the reconstruction); m/ksub
+    * are inferred from the runtime array lengths. */
+  def pqAdcDot(ca: ArrayData, la: ArrayData): Double = {
     val m = ca.numElements()
-    if (m == 0) return java.lang.Double.valueOf(0.0)
+    if (m == 0) return 0.0
     require(la.numElements() % m == 0,
       s"pq_adc_dot: LUT length ${la.numElements()} not divisible by $m codes — " +
         "codes and LUT come from different codebooks")
@@ -532,49 +377,13 @@ case class PqAdcDotExpr(codes: Expression, lut: Expression)
       dot += la.getDouble(mi * ksub + c)
       mi += 1
     }
-    java.lang.Double.valueOf(dot)
+    dot
   }
 
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): PqAdcDotExpr =
-    copy(codes = l, lut = r)
-  override def prettyName: String = "pq_adc_dot"
-}
-
-/** ADC cosine score of one candidate; see [[VectorQuant]]. */
-case class PqAdcScoreExpr(codes: Expression, lut: Expression, pn: Expression,
-    cnorm2: Array[Array[Double]])
-  extends Expression
-  with org.apache.spark.sql.catalyst.trees.TernaryLike[Expression] with CodegenFallback {
-
-  private val m = cnorm2.length
-  private val ksub = if (cnorm2.isEmpty) 0 else cnorm2.head.length
-
-  override def first: Expression = codes
-  override def second: Expression = lut
-  override def third: Expression = pn
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (!codes.dataType.isInstanceOf[ArrayType] ||
-        codes.dataType.asInstanceOf[ArrayType].elementType != IntegerType)
-      TypeCheckResult.TypeCheckFailure("pq_adc_score: codes must be array<int>")
-    else if (!lut.dataType.isInstanceOf[ArrayType] ||
-        lut.dataType.asInstanceOf[ArrayType].elementType != DoubleType)
-      TypeCheckResult.TypeCheckFailure("pq_adc_score: lut must be array<double>")
-    else if (pn.dataType != DoubleType)
-      TypeCheckResult.TypeCheckFailure("pq_adc_score: pn must be double")
-    else TypeCheckResult.TypeCheckSuccess
-
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-
-  override def eval(input: InternalRow): Any = {
-    val cv = codes.eval(input)
-    val lv = lut.eval(input)
-    val pv = pn.eval(input)
-    if (cv == null || lv == null || pv == null) return null
-    val ca = cv.asInstanceOf[ArrayData]
-    val la = lv.asInstanceOf[ArrayData]
-    val p = pv.asInstanceOf[Double]
+  /** ADC cosine score of one candidate. */
+  def pqAdcScore(ca: ArrayData, la: ArrayData, p: Double, cnorm2: Array[Array[Double]]): Double = {
+    val m = cnorm2.length
+    val ksub = if (cnorm2.isEmpty) 0 else cnorm2.head.length
     var dot = 0.0; var xn2 = 0.0; var mi = 0
     while (mi < m) {
       val c = ca.getInt(mi)
@@ -582,12 +391,6 @@ case class PqAdcScoreExpr(codes: Expression, lut: Expression, pn: Expression,
       xn2 += cnorm2(mi)(c)
       mi += 1
     }
-    java.lang.Double.valueOf(
-      if (xn2 == 0.0 || p == 0.0) -2.0 else dot / (p * math.sqrt(xn2)))
+    if (xn2 == 0.0 || p == 0.0) -2.0 else dot / (p * math.sqrt(xn2))
   }
-
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): PqAdcScoreExpr =
-    copy(codes = f, lut = s, pn = t)
-  override def prettyName: String = "pq_adc_score"
 }

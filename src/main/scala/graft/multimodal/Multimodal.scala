@@ -352,6 +352,9 @@ object Multimodal {
 /** imageMeta(blob) → struct<format, width, height>; unknown/truncated
   * payloads yield ('unknown', null, null) rather than failing — corrupt
   * blobs are data, not errors, in a 100 TB crawl.
+  *
+  * Stays `CodegenFallback` (not a [[graft.functions.Kernel]]): an I/O
+  * decoder over whole blobs, where per-row call overhead is noise.
   */
 case class ImageMetaExpr(child: Expression)
   extends UnaryExpression with CodegenFallback {
@@ -420,6 +423,9 @@ case class ImageMetaExpr(child: Expression)
   * moov→trak→tkhd with nonzero size → width/height as 16.16 fixed);
   * `matroska`/`webm` (EBML header vint walk → DocType — Segment-level
   * duration needs the full element tree and stays out of scope).
+  *
+  * Stays `CodegenFallback` (not a [[graft.functions.Kernel]]): an I/O
+  * decoder over whole blobs, where per-row call overhead is noise.
   */
 case class MediaMetaExpr(child: Expression)
   extends UnaryExpression with CodegenFallback {
@@ -809,6 +815,9 @@ private[graft] object IsoBmff {
   * decode — [[Codecs.dibPrefix]]). NULL when neither container yields
   * ranges — the dispatch signal [[Multimodal.sampleFrames]] uses to
   * choose frame-aware sampling over blind equal chunking.
+  *
+  * Stays `CodegenFallback` (not a [[graft.functions.Kernel]]): an I/O
+  * decoder over whole blobs, where per-row call overhead is noise.
   */
 case class VideoSamplesExpr(child: Expression)
   extends UnaryExpression with CodegenFallback {

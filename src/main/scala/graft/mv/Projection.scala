@@ -9,6 +9,7 @@ import org.apache.spark.sql.catalyst.expressions.{
 import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
 import org.apache.spark.sql.catalyst.plans.logical.{
   Aggregate, Filter, LogicalPlan, Project, SubqueryAlias}
+import org.apache.spark.sql.catalyst.optimizer.ReplaceExpressions
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
@@ -272,20 +273,19 @@ object Projection {
   */
 final class ProjectionRewrite(owner: SparkSession) extends Rule[LogicalPlan] {
 
-  // decline tracing: -Dgraft.projection.debug=1 prints why an Aggregate
-  // was not routed (alignment with CH's EXPLAIN for projection selection)
-  private def dbg(msg: => String): Unit =
-    if (sys.props.get("graft.projection.debug").contains("1"))
-      // scalastyle:off println
-      println("[projection] " + msg)
-      // scalastyle:on println
+  // decline tracing: why an Aggregate was not routed (alignment with CH's
+  // EXPLAIN for projection selection), at DEBUG on this rule's logger
+  private def dbg(msg: => String): Unit = logDebug(msg)
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     val entries = Projection.entries(owner)
     if (entries.isEmpty) return plan
+    // the routed read is built from analyzed metric expressions after the
+    // optimizer's replacement pass ran, so replace its RuntimeReplaceable
+    // calls (the Kernel scalars) here
     plan.transformUp {
       case agg: Aggregate =>
-        rewrite(owner, agg, entries).getOrElse(agg)
+        rewrite(owner, agg, entries).map(ReplaceExpressions(_)).getOrElse(agg)
     }
   }
 

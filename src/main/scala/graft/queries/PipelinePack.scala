@@ -115,7 +115,7 @@ object PipelinePack {
     },
 
     // The exact-oracle twin of q125: the SAME production train + encode
-    // path (Bpe.train driver loop, BpeEncodeExpr greedy apply) under a
+    // path (Bpe.train driver loop, Bpe.bpeEncode greedy apply) under a
     // 5-merge budget DuckDB replays move-for-move — unrolled training
     // rounds (weighted pair counts → (cnt DESC, a, b) argmax → fuse pass)
     // and a recursive-CTE apply loop whose fuse pass is a left-to-right

@@ -17,14 +17,13 @@ import org.apache.spark.sql.types._
   *    index), probes only score their own bucket (+ optional multiprobe on
   *    1-bit flips). Recall/cost dial = nbits/multiprobe.
   *
-  * Scoring runs through the tight-loop [[graft.functions.CosineSimilarity]]
-  * expression — double precision, fixed fold order, no per-element boxing.
+  * Scoring runs through the tight-loop `cosine_sim` kernel — double
+  * precision, fixed fold order, no per-element boxing.
   */
 object Ann {
 
   /** Cosine similarity of two float-array columns, computed in double.
-    * Delegates to the tight-loop [[graft.functions.CosineSimilarity]]
-    * expression (requires `ChCompat.register` on the session — every Ann
+    * Delegates to the tight-loop `cosine_sim` kernel (requires `ChCompat.register` on the session — every Ann
     * method does this; ad-hoc users call it once). Same index-order double
     * fold as the composable zip_with/aggregate form, ~an order of magnitude
     * less per-row allocation.
@@ -77,8 +76,8 @@ object Ann {
     * LSH (L independent tables of `bits` hyperplanes each) is the standard
     * recall lever: a similar pair only needs to collide in ONE table.
     * Returns an array<struct<tbl,bucket>> of length `tables`, computed by
-    * the single-pass [[graft.functions.LshSignaturesExpr]] (planes cached
-    * per executor; the composed HOF form re-hashed every (plane, dim) pair
+    * the single-pass `lsh_signatures` kernel (planes cached
+    * per JVM; the composed HOF form re-hashed every (plane, dim) pair
     * per row — verified bit-identical, so persisted indexes stay valid).
     * Requires `ChCompat.register` (every entry point here does it).
     */

@@ -3,11 +3,7 @@ package graft.text
 import scala.collection.mutable
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -27,8 +23,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * Determinism: ties in pair frequency break lexicographically, and the
   * vocab cut breaks (count DESC, word) — identical merges on every run.
   *
-  * Encoding is a scalar expression over the learned merge ranks
-  * (broadcast as part of the expression tree): each word splits to
+  * Encoding is a scalar kernel over the learned merge ranks
+  * (shipped as a plan literal): each word splits to
   * characters with a `</w>` end-of-word marker, then applicable merges
   * apply lowest-rank-first — the standard greedy BPE apply. A per-
   * partition word→pieces memo exploits the Zipf head (the same word
@@ -143,12 +139,15 @@ object Bpe {
     f("bpeEncode") { es =>
       require(es.length == 2, "usage: bpeEncode(text, merges)")
       require(es(1).foldable, "bpeEncode merges must be a literal array")
-      val pairs = es(1).eval() match {
+      val ranks = new java.util.HashMap[String, Integer]()
+      es(1).eval() match {
         case a: org.apache.spark.sql.catalyst.util.ArrayData =>
-          (0 until a.numElements()).map(i => a.getUTF8String(i).toString).toArray
-        case _ => Array.empty[String]
+          (0 until a.numElements()).foreach(i => ranks.put(a.getUTF8String(i).toString, i))
+        case _ => ()
       }
-      BpeEncodeExpr(es.head, pairs)
+      graft.functions.Kernel.of(this, "bpeEncode", "bpeEncode",
+        ArrayType(StringType, containsNull = false), es.take(1),
+        Seq(graft.functions.Arg.Str), Seq(BpeRanks(ranks)))
     }
   }
 
@@ -182,6 +181,34 @@ object Bpe {
     }
     Integer.compare(a.length - i, b.length - j)
   }
+
+  /** Scalar BPE encode: text → array of pieces under the merge ranks
+    * (built once at planning; rank = position in the merge list).
+    * Words repeat along the Zipf head, so a word→pieces memo per ranks
+    * instance (one per task) makes the cost per DISTINCT word.
+    */
+  def bpeEncode(v: UTF8String, model: BpeRanks): ArrayData = {
+    val words = v.toString.split("\\s+")
+    val out = mutable.ArrayBuffer.empty[UTF8String]
+    var i = 0
+    while (i < words.length) {
+      val w = words(i)
+      if (w.nonEmpty) {
+        var pieces = model.memo.get(w)
+        if (pieces == null) {
+          pieces = Bpe.applyMerges(w, model.ranks)
+          if (model.memo.size < MemoCap) model.memo.put(w, pieces)
+        }
+        pieces.foreach(p => out += UTF8String.fromString(p))
+      }
+      i += 1
+    }
+    new GenericArrayData(out.toArray[Any])
+  }
+
+  // bounds the memo so an adversarial all-distinct corpus can't grow it
+  // without limit (Zipf natural text stays far under)
+  private final val MemoCap = 1 << 16
 
   /** Greedy BPE apply for one word's symbol sequence under a rank map. */
   private[text] def applyMerges(word: String,
@@ -218,71 +245,9 @@ object Bpe {
   }
 }
 
-/** Scalar BPE encode: text → array of pieces. Merges ride the expression
-  * tree as a plain string array (rank = position), so the plan is
-  * self-contained and the executor-side rank map builds once lazily.
-  * CodegenFallback (string-loop heavy, same posture as Simhash64Expr);
-  * the per-partition Zipf memo makes the fallback cost per DISTINCT
-  * word, not per occurrence.
+/** Learned merge ranks ("left right" → rank), compared by content. The
+  * memo is per deserialized instance, so each task fills its own.
   */
-case class BpeEncodeExpr(child: Expression, mergePairs: Array[String])
-  extends UnaryExpression with CodegenFallback {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"bpeEncode requires string input, got ${t.simpleString}")
-  }
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "bpeEncode"
-
-  @transient private lazy val ranks: java.util.HashMap[String, Integer] = {
-    val m = new java.util.HashMap[String, Integer](mergePairs.length * 2)
-    var i = 0
-    while (i < mergePairs.length) { m.put(mergePairs(i), i); i += 1 }
-    m
-  }
-
-  // word → pieces memo; bounded so an adversarial all-distinct corpus
-  // can't grow it without limit (Zipf natural text stays far under)
-  @transient private lazy val memo =
-    new java.util.HashMap[String, Vector[String]](1 << 12)
-  private final val MemoCap = 1 << 16
-
-  override protected def nullSafeEval(v: Any): Any = {
-    val words = v.asInstanceOf[UTF8String].toString.split("\\s+")
-    val out = mutable.ArrayBuffer.empty[UTF8String]
-    var i = 0
-    while (i < words.length) {
-      val w = words(i)
-      if (w.nonEmpty) {
-        var pieces = memo.get(w)
-        if (pieces == null) {
-          pieces = Bpe.applyMerges(w, ranks)
-          if (memo.size < MemoCap) memo.put(w, pieces)
-        }
-        pieces.foreach(p => out += UTF8String.fromString(p))
-      }
-      i += 1
-    }
-    new GenericArrayData(out.toArray[Any])
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): BpeEncodeExpr =
-    copy(child = newChild)
-
-  // Array[String] is reference-compared by the default case-class
-  // equality; merge lists are tiny, compare by content so plan equality
-  // (and codegen caching) behaves
-  override def equals(o: Any): Boolean = o match {
-    case b: BpeEncodeExpr =>
-      b.child == child && java.util.Arrays.equals(
-        b.mergePairs.asInstanceOf[Array[AnyRef]],
-        mergePairs.asInstanceOf[Array[AnyRef]])
-    case _ => false
-  }
-  override def hashCode(): Int =
-    31 * child.hashCode() + java.util.Arrays.hashCode(
-      mergePairs.asInstanceOf[Array[AnyRef]])
+final case class BpeRanks(ranks: java.util.HashMap[String, Integer]) {
+  @transient lazy val memo = new java.util.HashMap[String, Vector[String]](1 << 12)
 }

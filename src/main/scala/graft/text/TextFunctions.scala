@@ -1,15 +1,13 @@
 package graft.text
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{CreateArray, Expression, Literal}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.trees.UnaryLike
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.expressions.{CreateArray, Literal}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.functions.{Arg, Kernel}
 
 /** Text-analysis primitives for large-scale training-data pipelines:
   * tokenization, quality scoring, language ID, fingerprinting. Everything
@@ -22,7 +20,8 @@ object TextFunctions {
 
   /** SQL names of the text primitives, among them
     * `token_set_count(arr, array('a',...), lowercase)`: the stopword-hit
-    * counter behind [[qualityFeatures]] and [[langId]].
+    * counter behind [[qualityFeatures]] and [[langId]]. Each is a
+    * [[Kernel]] over one of the kernel methods at the end of this object.
     */
   val functions = graft.functions.FunctionTable.define(this) { f =>
     f("token_set_count") { es =>
@@ -41,7 +40,10 @@ object TextFunctions {
         case other => throw new IllegalArgumentException(
           s"token_set_count: lowercase flag must be a boolean literal, got $other")
       }
-      TokenSetCount(es.head, words, lc)
+      val set = new java.util.HashSet[UTF8String](words.length * 2)
+      words.foreach(w => set.add(UTF8String.fromString(if (lc) w.toLowerCase else w)))
+      Kernel.of(this, "tokenSetHits", "token_set_count", IntegerType, es.take(1),
+        Seq(Arg.ArrayOf(Arg.Str)), Seq(set, lc), returnsNull = true)
     }
     f("char_set_count") { es =>
       require(es.length == 2, "usage: char_set_count(text, array('字',...))")
@@ -54,7 +56,24 @@ object TextFunctions {
         case other => throw new IllegalArgumentException(
           s"char_set_count: second arg must be an array literal, got $other")
       }
-      CharSetCount(es.head, chars)
+      require(chars.nonEmpty && chars.forall(_.length == 1),
+        s"char_set_count: need single BMP characters, got $chars")
+      // ASCII sets (the punct/digit counters — the hot quality projection)
+      // count on the raw UTF-8 bytes: an ASCII char is a single byte, and
+      // multi-byte sequences use only bytes >= 0x80, so a byte compare
+      // below 128 is exact — no per-row String allocation. Non-ASCII sets
+      // (the zh marker chars) keep the decoded-char path.
+      if (chars.forall(_.charAt(0) < 128)) {
+        val ascii = new java.util.BitSet(128)
+        chars.foreach(c => ascii.set(c.charAt(0)))
+        Kernel.of(this, "charSetHitsAscii", "char_set_count", IntegerType, es.take(1),
+          Seq(Arg.Str), Seq(ascii), returnsNull = true)
+      } else {
+        val set = new java.util.HashSet[Character](chars.length * 2)
+        chars.foreach(c => set.add(c.charAt(0)))
+        Kernel.of(this, "charSetHits", "char_set_count", IntegerType, es.take(1),
+          Seq(Arg.Str), Seq(set), returnsNull = true)
+      }
     }
     f("shingles_n") { es =>
       val n = es(1) match {
@@ -63,9 +82,31 @@ object TextFunctions {
           s"shingles_n: n must be an integer literal, got $other")
       }
       require(n >= 1, s"shingles_n: n must be positive, got $n")
-      ShinglesExpr(es.head, n)
+      Kernel.of(this, "shinglesN", "shingles_n", ArrayType(StringType, containsNull = false),
+        es.take(1), Seq(Arg.ArrayOf(Arg.Str)), Seq(n), returnsNull = true)
     }
-    f("compression_ratio")(es => CompressionRatioExpr(es.head))
+    f("compression_ratio") { es =>
+      Kernel.of(this, "deflateRatio", "compression_ratio", DoubleType, es, Seq(Arg.Str))
+    }
+    // the declared element type is the input's StringType, collation
+    // included, and the ICU case-mapping flag is read here, at planning
+    for (lowercase <- Seq(false, true)) {
+      val name = if (lowercase) "ws_tokens_lower" else "ws_tokens"
+      f(name) { es =>
+        val st = es.headOption.map(_.dataType) match {
+          case Some(s: StringType) => s
+          case _ => StringType
+        }
+        val out = ArrayType(st, containsNull = false)
+        if (!lowercase) Kernel.of(this, "wsTokens", name, out, es, Seq(Arg.Str))
+        else Kernel.of(this, "wsTokensLower", name, out, es, Seq(Arg.Str),
+          Seq(st.collationId, org.apache.spark.sql.internal.SQLConf.get.getConf(
+            org.apache.spark.sql.internal.SQLConf.ICU_CASE_MAPPINGS_ENABLED)))
+      }
+    }
+    f("ws_token_count") { es =>
+      Kernel.of(this, "wsTokenCount", "ws_token_count", IntegerType, es, Seq(Arg.Str))
+    }
   }
 
   /** Deflate-based compression ratio (compressed/raw bytes) — the classic
@@ -83,13 +124,15 @@ object TextFunctions {
   /** Whitespace tokens, empties dropped — byte-identical to
     * `filter(split(text, "\\s+"), t => t =!= "")` (the declared-oracle
     * semantics: maximal runs of non-`[ \t\n\x0B\f\r]` bytes), via the
-    * one-pass primitive [[WsTokensExpr]]. The HOF form ran interpreted —
-    * a regex split (String/array churn) plus a per-element lambda
-    * dispatch per row — and was the dominant allocation source of every
-    * text query's hot projection (q31/q32/q34/q37/q39); the primitive
-    * does one byte scan and wraps token slices of a single buffer.
+    * one-pass kernel [[wsTokens]] (SQL `ws_tokens`; requires
+    * `ChCompat.register` or [[graft.GraftExtensions]] on the session).
+    * The HOF form ran interpreted — a regex split (String/array churn)
+    * plus a per-element lambda dispatch per row — and was the dominant
+    * allocation source of every text query's hot projection
+    * (q31/q32/q34/q37/q39); the primitive does one byte scan and wraps
+    * token slices of a single buffer.
     */
-  def tokens(text: Column): Column = wsTokens(text, lowercase = false)
+  def tokens(text: Column): Column = call_function("ws_tokens", text)
 
   /** Lowercased whitespace tokens — byte-identical to
     * `transform(tokens(text), t => lower(t))` (per-token
@@ -97,12 +140,7 @@ object TextFunctions {
     * chain computed), in the same single pass. The langid pipelines'
     * `ltoks` column.
     */
-  def lowerTokens(text: Column): Column = wsTokens(text, lowercase = true)
-
-  private def wsTokens(text: Column, lowercase: Boolean): Column =
-    org.apache.spark.sql.graftbridge.ColumnBridge.column(
-      WsTokensExpr(
-        org.apache.spark.sql.graftbridge.ColumnBridge.expression(text), lowercase))
+  def lowerTokens(text: Column): Column = call_function("ws_tokens_lower", text)
 
   /** BPE-ish subword-ish tokens: letter runs, digit runs, single punctuation
     * marks — the usual pre-tokenizer regex shape.
@@ -115,13 +153,10 @@ object TextFunctions {
     * enough to run BELOW a spread exchange as a pre-filter, so rows that
     * fail a length gate never shuffle (guide §2.3).
     */
-  def tokenCount(text: Column): Column =
-    org.apache.spark.sql.graftbridge.ColumnBridge.column(
-      WsTokenCountExpr(
-        org.apache.spark.sql.graftbridge.ColumnBridge.expression(text)))
+  def tokenCount(text: Column): Column = call_function("ws_token_count", text)
 
   /** n-token shingles joined by single spaces (for MinHash / Jaccard),
-    * via the one-pass [[ShinglesExpr]] (the HOF transform-of-slice form
+    * via the one-pass kernel [[shinglesN]] (the HOF transform-of-slice form
     * evaluated interpreted with a per-shingle array allocation). Returns
     * an empty array for documents shorter than n tokens (mirroring the
     * DuckDB oracles' empty generate_series). Requires
@@ -171,7 +206,7 @@ object TextFunctions {
 
   /** Java regex `\p{Punct}` (POSIX punct, ASCII-only without
     * UNICODE_CHARACTER_CLASS): `!"#$%&'()*+,-./:;<=>?@[\]^_`{|}~` — spelled
-    * out so [[qualityFeaturesFromTokens]]' CharSetCount counts exactly what
+    * out so [[qualityFeaturesFromTokens]]' char_set_count counts exactly what
     * the regex class matched.
     */
   private val PunctChars: Seq[String] =
@@ -193,7 +228,7 @@ object TextFunctions {
     * re-split once per projected expression (see [[shingles]]' note).
     *
     * Null-text note (r14 ADVICE): punct_cnt/digit_cnt come from
-    * [[CharSetCount]], which returns NULL on null text, while the r13
+    * `char_set_count`, which returns NULL on null text, while the r13
     * `size(regexp_extract_all(...))` form returned -1 under legacy
     * sizeOfNull — a difference only visible on rows with NULL text, which
     * the declared corpus (and every gated query) does not contain; the
@@ -206,13 +241,13 @@ object TextFunctions {
     val nChar = length(text)
     // hash-set expression, not a filter lambda: higher-order functions
     // evaluate interpreted with a per-element linear array_contains scan;
-    // TokenSetCount is one primitive loop + O(1) set probes per token
+    // token_set_count is one primitive loop + O(1) set probes per token
     val stopCnt = tokenSetCount(toks, stopwords, lowercase = true)
     // one-pass char-set counters, not size(regexp_extract_all(...)): the
     // regex form materializes an array of one-char strings per row just to
     // count it, in the hottest projection of the text family (q32/q39/
     // q62/q104). [\p{Punct}] is Java's FIXED ASCII punct class and [0-9]
-    // ten digits — both exactly a CharSetCount over single BMP chars, so
+    // ten digits — both exactly a char_set_count over single BMP chars, so
     // counts (and the hash gate) are unchanged.
     val punctCnt = charSetCount(text, PunctChars)
     val digitCnt = charSetCount(text, "0123456789".map(_.toString))
@@ -307,38 +342,18 @@ object TextFunctions {
     */
   def langIdFromBest(best: Column): Column =
     when(best.getField("hits") > 0, best.getField("lang")).otherwise(lit("und"))
-}
 
-/** Count of array elements present in a fixed word set — the hot inner
-  * loop of stopword-based quality scoring and language ID, as a primitive
-  * Catalyst expression: one `java.util.HashSet` probe per token instead of
-  * an interpreted lambda + linear `array_contains` scan. Exactly mirrors
-  * `size(filter(arr, t => array_contains(words, [lower](t))))` on non-null
-  * input (null elements skipped, null array → null), so the DuckDB oracles
-  * for q32/q37/q39 hold unchanged.
-  */
-case class TokenSetCount(child: Expression, words: Seq[String], lowercase: Boolean)
-  extends Expression with UnaryLike[Expression] with CodegenFallback {
+  // ---- kernels: the per-row loops the table's Kernel entries call -------
 
-  @transient private lazy val set: java.util.HashSet[UTF8String] = {
-    val s = new java.util.HashSet[UTF8String](words.length * 2)
-    words.foreach(w => s.add(UTF8String.fromString(if (lowercase) w.toLowerCase else w)))
-    s
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"token_set_count requires array<string>, got ${t.simpleString}")
-  }
-
-  override def dataType: DataType = IntegerType
-  override def nullable: Boolean = true
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) return null
-    val a = v.asInstanceOf[ArrayData]
+  /** Count of array elements present in a fixed word set — the hot inner
+    * loop of stopword-based quality scoring and language ID: one
+    * `java.util.HashSet` probe per token instead of an interpreted lambda
+    * + linear `array_contains` scan. Exactly mirrors
+    * `size(filter(arr, t => array_contains(words, [lower](t))))` on
+    * non-null input (null elements skipped), so the DuckDB oracles for
+    * q32/q37/q39 hold unchanged. `set` holds the (lowercased) words.
+    */
+  def tokenSetHits(a: ArrayData, set: java.util.HashSet[UTF8String], lowercase: Boolean): Int = {
     var cnt = 0
     var i = 0
     val n = a.numElements()
@@ -352,108 +367,53 @@ case class TokenSetCount(child: Expression, words: Seq[String], lowercase: Boole
     cnt
   }
 
-  override protected def withNewChildInternal(c: Expression): TokenSetCount =
-    copy(child = c)
-  override def prettyName: String = "token_set_count"
-}
-
-/** Total occurrences of a fixed set of single BMP characters in a string,
-  * in ONE pass — the zh marker-char counter of [[TextFunctions.langId]].
-  * Replaces the replace-shrinkage chain (`length(text) -
-  * length(replace(text, c, ''))` summed per marker), which re-scanned and
-  * re-allocated the whole text once per marker char; totals are identical
-  * because the markers are distinct single characters, so q37's oracle
-  * holds unchanged.
-  */
-case class CharSetCount(child: Expression, chars: Seq[String])
-  extends Expression with UnaryLike[Expression] with CodegenFallback {
-
-  require(chars.nonEmpty && chars.forall(_.length == 1),
-    s"char_set_count: need single BMP characters, got $chars")
-
-  @transient private lazy val set: java.util.HashSet[Character] = {
-    val s = new java.util.HashSet[Character](chars.length * 2)
-    chars.foreach(c => s.add(c.charAt(0)))
-    s
-  }
-
-  /** ASCII sets (the punct/digit counters — the hot quality projection)
-    * count on the raw UTF-8 bytes: an ASCII char is a single byte, and
-    * multi-byte sequences use only bytes ≥ 0x80, so a byte compare below
-    * 128 is exact — no per-row String allocation. Non-ASCII sets (the zh
-    * marker chars) keep the decoded-char path.
+  /** Total occurrences of a fixed set of single ASCII characters in a
+    * string, in ONE pass over its UTF-8 bytes — the punct/digit counters.
+    * Replaces `size(regexp_extract_all(...))`; see [[charSetHits]].
     */
-  @transient private lazy val asciiSet: Array[Boolean] =
-    if (chars.forall(_.charAt(0) < 128)) {
-      val a = new Array[Boolean](128)
-      chars.foreach(c => a(c.charAt(0)) = true)
-      a
-    } else null
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"char_set_count requires string, got ${t.simpleString}")
-  }
-
-  override def dataType: DataType = IntegerType
-  override def nullable: Boolean = true
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) return null
-    val u = v.asInstanceOf[UTF8String]
+  def charSetHitsAscii(u: UTF8String, ascii: java.util.BitSet): Int = {
     var cnt = 0
-    if (asciiSet != null) {
-      val n = u.numBytes()
-      var i = 0
-      while (i < n) {
-        val b = u.getByte(i)
-        if (b >= 0 && asciiSet(b)) cnt += 1
-        i += 1
-      }
-    } else {
-      val s = u.toString
-      var i = 0
-      while (i < s.length) {
-        if (set.contains(s.charAt(i))) cnt += 1
-        i += 1
-      }
+    val n = u.numBytes()
+    var i = 0
+    while (i < n) {
+      val b = u.getByte(i)
+      if (b >= 0 && ascii.get(b)) cnt += 1
+      i += 1
     }
     cnt
   }
 
-  override protected def withNewChildInternal(c: Expression): CharSetCount =
-    copy(child = c)
-  override def prettyName: String = "char_set_count"
-}
-
-/** All n-token shingles of a string array, space-joined, in one pass —
-  * byte-identical to `transform(sequence(0, len-n), i => concat_ws(" ",
-  * slice(toks, i+1, n)))` for len ≥ n (UTF8String.concatWs skips nulls
-  * exactly like concat_ws), and an empty array for shorter inputs where
-  * the HOF form's descending `sequence` was never well-defined.
-  */
-case class ShinglesExpr(child: Expression, n: Int)
-  extends Expression with UnaryLike[Expression] with CodegenFallback {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"shingles_n requires array<string>, got ${t.simpleString}")
+  /** Total occurrences of a fixed set of single BMP characters in a
+    * string, in ONE pass — the zh marker-char counter of [[langId]].
+    * Replaces the replace-shrinkage chain (`length(text) -
+    * length(replace(text, c, ''))` summed per marker), which re-scanned
+    * and re-allocated the whole text once per marker char; totals are
+    * identical because the markers are distinct single characters, so
+    * q37's oracle holds unchanged.
+    */
+  def charSetHits(u: UTF8String, set: java.util.HashSet[Character]): Int = {
+    var cnt = 0
+    val s = u.toString
+    var i = 0
+    while (i < s.length) {
+      if (set.contains(s.charAt(i))) cnt += 1
+      i += 1
+    }
+    cnt
   }
 
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = true
+  private val space = UTF8String.fromString(" ")
+  private val emptyArray = new GenericArrayData(Array.empty[Any])
 
-  @transient private lazy val space = UTF8String.fromString(" ")
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) return null
-    val a = v.asInstanceOf[ArrayData]
+  /** All n-token shingles of a string array, space-joined, in one pass —
+    * byte-identical to `transform(sequence(0, len-n), i => concat_ws(" ",
+    * slice(toks, i+1, n)))` for len ≥ n (UTF8String.concatWs skips nulls
+    * exactly like concat_ws), and an empty array for shorter inputs where
+    * the HOF form's descending `sequence` was never well-defined.
+    */
+  def shinglesN(a: ArrayData, n: Int): ArrayData = {
     val len = a.numElements()
-    if (len < n) return new org.apache.spark.sql.catalyst.util.GenericArrayData(Array.empty[Any])
+    if (len < n) return new GenericArrayData(Array.empty[Any])
     val out = new Array[Any](len - n + 1)
     val window = new Array[UTF8String](n)
     var i = 0
@@ -466,69 +426,45 @@ case class ShinglesExpr(child: Expression, n: Int)
       out(i) = UTF8String.concatWs(space, window: _*)
       i += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    new GenericArrayData(out)
   }
-
-  override protected def withNewChildInternal(c: Expression): ShinglesExpr =
-    copy(child = c)
-  override def prettyName: String = "shingles_n"
-}
-
-/** One-pass whitespace tokenizer — the primitive form of
-  * `filter(split(text, "\\s+"), t => t =!= "")` (and, with `lowercase`,
-  * of `transform(filter(split(text, "\\s+"), t => t =!= ""), lower)`).
-  *
-  * Byte-identical by construction: Java's `\s` is exactly
-  * `[ \t\n\x0B\f\r]` — six ASCII bytes, and UTF-8 continuation/lead bytes
-  * are ≥ 0x80, so maximal runs of non-whitespace BYTES are maximal runs
-  * of non-whitespace CHARACTERS; `split(_, -1)` can only produce empty
-  * strings at the boundaries, which the `=!= ""` filter drops, so the
-  * non-empty results are exactly those runs. The lowercase variant applies
-  * UTF8String.toLowerCase PER TOKEN, exactly like the transform+Lower
-  * chain (full-string lowercasing could differ on context-sensitive
-  * mappings such as final sigma).
-  *
-  * Why it exists: the HOF chain evaluates interpreted — a regex split
-  * (Pattern machinery, a String[] and per-element UTF8String round trips)
-  * plus one lambda dispatch per element — and was the dominant
-  * per-row allocation source of the text family (q31/q32/q34/q37/q39's
-  * shared front). This is one scan over the string's bytes and one
-  * UTF8String wrapper per token over a single shared buffer.
-  *
-  * Lowercasing delegates to the SAME entry point as the `Lower`
-  * expression (CollationSupport.Lower.exec with the input type's
-  * collation and the session ICU flag) — NOT UTF8String.toLowerCase,
-  * whose per-codepoint mapping misses context-sensitive cases (Greek
-  * final sigma: Σ word-finally must lower to ς, not σ; caught by
-  * TextSpec's fuzz equivalence test).
-  */
-case class WsTokensExpr(child: Expression, lowercase: Boolean)
-  extends Expression with UnaryLike[Expression] with CodegenFallback {
-
-  @transient private lazy val collationId: Int = child.dataType match {
-    case st: StringType => st.collationId
-    case _ => 0
-  }
-  @transient private lazy val useICU: Boolean =
-    org.apache.spark.sql.internal.SQLConf.get.getConf(
-      org.apache.spark.sql.internal.SQLConf.ICU_CASE_MAPPINGS_ENABLED)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"ws_tokens requires string, got ${t.simpleString}")
-  }
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = child.nullable
 
   private def isWs(b: Byte): Boolean =
     b == 0x20 || (b >= 0x09 && b <= 0x0D)
 
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) return null
-    val s = v.asInstanceOf[UTF8String]
+  /** One-pass whitespace tokenizer — the primitive form of
+    * `filter(split(text, "\\s+"), t => t =!= "")`.
+    *
+    * Byte-identical by construction: Java's `\s` is exactly
+    * `[ \t\n\x0B\f\r]` — six ASCII bytes, and UTF-8 continuation/lead
+    * bytes are ≥ 0x80, so maximal runs of non-whitespace BYTES are maximal
+    * runs of non-whitespace CHARACTERS; `split(_, -1)` can only produce
+    * empty strings at the boundaries, which the `=!= ""` filter drops, so
+    * the non-empty results are exactly those runs.
+    *
+    * Why it exists: the HOF chain evaluates interpreted — a regex split
+    * (Pattern machinery, a String[] and per-element UTF8String round
+    * trips) plus one lambda dispatch per element — and was the dominant
+    * per-row allocation source of the text family (q31/q32/q34/q37/q39's
+    * shared front). This is one scan over the string's bytes and one
+    * UTF8String wrapper per token over a single shared buffer.
+    */
+  def wsTokens(s: UTF8String): ArrayData = tokenize(s, lowercase = false, 0, useICU = false)
+
+  /** [[wsTokens]] with each token lowercased — the primitive form of
+    * `transform(filter(split(text, "\\s+"), t => t =!= ""), lower)`.
+    * Lowercasing goes PER TOKEN through the SAME entry point as the `Lower`
+    * expression (CollationSupport.Lower.exec with the input type's
+    * collation and the session's ICU flag, both fixed at planning) — NOT
+    * UTF8String.toLowerCase, whose per-codepoint mapping misses
+    * context-sensitive cases (Greek final sigma: Σ word-finally must lower
+    * to ς, not σ; caught by TextSpec's fuzz equivalence test).
+    */
+  def wsTokensLower(s: UTF8String, collationId: Int, useICU: Boolean): ArrayData =
+    tokenize(s, lowercase = true, collationId, useICU)
+
+  private def tokenize(s: UTF8String, lowercase: Boolean, collationId: Int,
+      useICU: Boolean): ArrayData = {
     val bytes = s.getBytes // zero-copy when the string owns its buffer
     val n = bytes.length
     // pass 1: count tokens (exact-size output array, no buffer growth)
@@ -541,7 +477,7 @@ case class WsTokensExpr(child: Expression, lowercase: Boolean)
       inTok = !ws
       i += 1
     }
-    if (cnt == 0) return WsTokensExpr.emptyArray
+    if (cnt == 0) return emptyArray
     // pass 2: fill
     val out = new Array[Any](cnt)
     var k = 0
@@ -559,42 +495,15 @@ case class WsTokensExpr(child: Expression, lowercase: Boolean)
         k += 1
       } else i += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    new GenericArrayData(out)
   }
 
-  override protected def withNewChildInternal(c: Expression): WsTokensExpr =
-    copy(child = c)
-  override def prettyName: String = if (lowercase) "ws_tokens_lower" else "ws_tokens"
-}
-
-object WsTokensExpr {
-  private val emptyArray =
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(Array.empty[Any])
-}
-
-/** Whitespace-token count without materializing the array — one byte scan,
-  * zero allocation; equals `size(`[[WsTokensExpr]]`)` on non-null input
-  * (null → null). Cheap enough to gate rows below a spread exchange.
-  */
-case class WsTokenCountExpr(child: Expression)
-  extends Expression with UnaryLike[Expression] with CodegenFallback {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"ws_token_count requires string, got ${t.simpleString}")
-  }
-
-  override def dataType: DataType = IntegerType
-  override def nullable: Boolean = child.nullable
-
-  private def isWs(b: Byte): Boolean =
-    b == 0x20 || (b >= 0x09 && b <= 0x0D)
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) return null
-    val bytes = v.asInstanceOf[UTF8String].getBytes
+  /** Whitespace-token count without materializing the array — one byte
+    * scan, zero allocation; equals `size(`[[wsTokens]]`)`. Cheap enough
+    * to gate rows below a spread exchange.
+    */
+  def wsTokenCount(s: UTF8String): Int = {
+    val bytes = s.getBytes
     var cnt = 0
     var i = 0
     var inTok = false
@@ -607,29 +516,20 @@ case class WsTokenCountExpr(child: Expression)
     cnt
   }
 
-  override protected def withNewChildInternal(c: Expression): WsTokenCountExpr =
-    copy(child = c)
-  override def prettyName: String = "ws_token_count"
-}
+  // one native Deflater per thread (reset between rows) — a fresh
+  // init/end per row is measurable JNI churn on a corpus sweep
+  private val deflaters: ThreadLocal[java.util.zip.Deflater] =
+    ThreadLocal.withInitial(() => new java.util.zip.Deflater(6))
 
-/** compressed-bytes / raw-bytes under java.util.zip Deflater level 6 —
-  * deterministic for a given input (the JDK's zlib), per-row scalar.
-  * Highly repetitive text compresses far below typical prose (~0.4),
-  * which makes low ratios a strong boilerplate signal. */
-case class CompressionRatioExpr(child: Expression)
-  extends Expression with UnaryLike[Expression] with CodegenFallback {
-
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = child.nullable
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) return null
-    val raw = v.asInstanceOf[UTF8String].getBytes
+  /** compressed-bytes / raw-bytes under java.util.zip Deflater level 6 —
+    * deterministic for a given input (the JDK's zlib), per-row scalar.
+    * Highly repetitive text compresses far below typical prose (~0.4),
+    * which makes low ratios a strong boilerplate signal. Empty text → 1.0.
+    */
+  def deflateRatio(s: UTF8String): Double = {
+    val raw = s.getBytes
     if (raw.isEmpty) return 1.0
-    // reuse one native Deflater per thread (reset between rows) — a
-    // fresh init/end per row is measurable JNI churn on a corpus sweep
-    val d = CompressionRatioExpr.deflaters.get()
+    val d = deflaters.get()
     d.reset()
     d.setInput(raw)
     d.finish()
@@ -638,13 +538,4 @@ case class CompressionRatioExpr(child: Expression)
     while (!d.finished()) total += d.deflate(buf)
     total.toDouble / raw.length
   }
-
-  override protected def withNewChildInternal(c: Expression): CompressionRatioExpr =
-    copy(child = c)
-  override def prettyName: String = "compression_ratio"
-}
-
-object CompressionRatioExpr {
-  private[text] val deflaters: ThreadLocal[java.util.zip.Deflater] =
-    ThreadLocal.withInitial(() => new java.util.zip.Deflater(6))
 }

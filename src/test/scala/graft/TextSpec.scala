@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.ArrayType
 
 import graft.text.TextFunctions._
 
@@ -155,5 +156,18 @@ class TextSpec extends SparkSpec {
         assert(g.getInt(2) == g.getSeq[String](0).size, s"count differs: $g")
       } else assert(g.isNullAt(2))
     }
+  }
+
+  test("ws_tokens_lower keeps a collated input's element type and values") {
+    import spark.implicits._
+    val df = Seq("Hello WORLD  ΣΑΒ ΟΔΟΣ", "  a\tB  ", "", null.asInstanceOf[String])
+      .toDF("text").select(collate(col("text"), "UTF8_LCASE").as("text"))
+    val ref = transform(filter(split(col("text"), "\\s+"), t => t =!= ""), t => lower(t))
+    val out = df.select(lowerTokens(col("text")).as("got"), ref.as("want"))
+    val ArrayType(gotType, _) = out.schema("got").dataType
+    val ArrayType(wantType, _) = out.schema("want").dataType
+    assert(gotType == wantType, s"$gotType vs $wantType")
+    out.collect().foreach(r =>
+      assert(Option(r.getSeq[String](0)) == Option(r.getSeq[String](1)), s"$r"))
   }
 }
