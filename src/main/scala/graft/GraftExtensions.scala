@@ -22,7 +22,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    functions.FunctionTable.quietRegistryLogger
+    LogNoise.silence()
     functions.FunctionTable.functions.foreach(ext.injectFunction)
     functions.FunctionTable.tableFunctions.foreach(ext.injectTableFunction)
     ext.injectResolutionRule(_ => SystemOne)

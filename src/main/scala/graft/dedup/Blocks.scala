@@ -10,29 +10,14 @@ import org.apache.spark.sql.DataFrame
   */
 private[graft] object Blocks {
 
-  /** `RDD.unpersist` on a locally-checkpointed RDD logs
-    * "... lineage has been truncated and cannot be recomputed after
-    * unpersisting" — a correct warning for accidental unpersists, but
-    * pure noise for this module's DELIBERATE eager releases (every
-    * consumer is materialized first, the leaf is dead by construction),
-    * and in r14 it flooded every bench/test tail, burying real warnings.
-    * Lower that logger to ERROR, once, on first release. Spark's Logging
-    * names the logger after the CONCRETE RDD subclass (the flood logs as
-    * `WARN MapPartitionsRDD:`), so the level is set on the
-    * org.apache.spark.rdd package — whose other WARNs all guard
-    * checkpoint/persist misuse patterns this codebase does not use.
-    */
-  private lazy val silenced: Unit =
-    try org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
-    catch { case _: Throwable => () }
-
   /** Drop a retired checkpoint leaf's blocks eagerly. Only ever call on
     * leaves whose every consumer is already materialized — a later read
-    * of the frame would find neither blocks nor lineage.
+    * of the frame would find neither blocks nor lineage. Spark's
+    * "lineage has been truncated" WARN for such an unpersist is dropped
+    * by [[graft.LogNoise]].
     */
   def release(df: DataFrame): Unit = {
-    silenced
+    graft.LogNoise.silence()
     df.queryExecution.analyzed match {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
       case _ => ()

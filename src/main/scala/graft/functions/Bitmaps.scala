@@ -4,10 +4,7 @@ import java.nio.ByteBuffer
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions.{call_function, coalesce, lit, when}
 import org.apache.spark.sql.types._
@@ -18,8 +15,8 @@ import org.roaringbitmap.RoaringBitmap
   * (ref scripts/sql/dwm.mainpage_stat_mv_dis.sql:134-139, 184-185, 280-290;
   * funnel doc usage in docs/物化视图的实战经验分享.md:1207-1238).
   *
-  * Implemented as Catalyst [[TypedImperativeAggregate]]s (not Scala
-  * `Aggregator`s) so the bitmap buffer lives as a mutable JVM object during
+  * Implemented as [[Fold]] aggregates (not Scala `Aggregator`s) so the
+  * bitmap buffer lives as a mutable JVM object during
   * partial aggregation and is serialized only at the shuffle boundary —
   * the same partial/final two-phase shape ClickHouse uses for `-State`/
   * `-Merge`, and the design that scales: the map-side combine collapses each
@@ -48,14 +45,30 @@ object Bitmaps {
     l.toInt
   }
 
+  /** The bitwise fold of `groupBitmapAnd/Or/Xor`, chosen when the table
+    * entry is built: `acc op= in`. */
+  sealed abstract class FoldOp(val name: String) extends Serializable {
+    def apply(acc: RoaringBitmap, in: RoaringBitmap): Unit
+  }
+  case object And extends FoldOp("and") {
+    def apply(acc: RoaringBitmap, in: RoaringBitmap): Unit = acc.and(in)
+  }
+  case object Or extends FoldOp("or") {
+    def apply(acc: RoaringBitmap, in: RoaringBitmap): Unit = acc.or(in)
+  }
+  case object Xor extends FoldOp("xor") {
+    def apply(acc: RoaringBitmap, in: RoaringBitmap): Unit = acc.xor(in)
+  }
+  private[functions] val foldOps = Seq(And, Or, Xor)
+
   /** `bitmap_agg` / `bitmap_merge_agg` and the raw scalar algebra: the
     * SQL names the Column helpers below resolve through.
     */
   val functions = FunctionTable.define(this) { f =>
-    f("bitmap_agg")(exprs => BitmapAggregate(exprs.head))
-    f("bitmap_merge_agg")(exprs => BitmapMergeAggregate(exprs.head))
-    for (op <- Seq("and", "or", "xor"))
-      f(s"bitmap_${op}_fold_agg")(exprs => BitmapFoldAggregate(exprs.head, op))
+    f("bitmap_agg")(exprs => Fold(GroupBitmap(), exprs.take(1)))
+    f("bitmap_merge_agg")(exprs => Fold(BitmapMerge(), exprs.take(1)))
+    for (op <- foldOps)
+      f(s"bitmap_${op.name}_fold_agg")(exprs => Fold(BitmapFold(op), exprs.take(1)))
     // raw (null-propagating) scalar algebra — the Column helpers below
     // wrap these with the CH null conventions
     f("bitmap_cardinality_raw")(cardinality)
@@ -298,104 +311,63 @@ object Bitmaps {
       .otherwise(call_function("bitmap_or_card_raw", a, b))
 }
 
-/** Shared shape for the two bitmap aggregates. */
-sealed abstract class BitmapAggregateBase
-    extends TypedImperativeAggregate[RoaringBitmap]
-    with UnaryLike[Expression] {
-  override def createAggregationBuffer(): RoaringBitmap = new RoaringBitmap()
-  override def merge(b: RoaringBitmap, o: RoaringBitmap): RoaringBitmap = { b.or(o); b }
-  override def eval(b: RoaringBitmap): Any = Bitmaps.toBytes(b)
-  override def serialize(b: RoaringBitmap): Array[Byte] = Bitmaps.toBytes(b)
-  override def deserialize(bytes: Array[Byte]): RoaringBitmap = Bitmaps.fromBytes(bytes)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
+/** A bitmap as its portable Roaring serialization ([[Bitmaps.toBytes]]). */
+object RoaringBuf extends BufCodec[RoaringBitmap] {
+  def write(b: RoaringBitmap): Array[Byte] = Bitmaps.toBytes(b)
+  def read(bytes: Array[Byte]): RoaringBitmap = Bitmaps.fromBytes(bytes)
 }
 
 /** `bitmap_agg(uid)` — ClickHouse `groupBitmapState(uid)`. Null inputs are
   * skipped (matches CH aggregate null handling / the `-If` combinator when
   * fed `when(cond, uid)`).
   */
-case class BitmapAggregate(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends BitmapAggregateBase {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ByteType | ShortType | IntegerType | LongType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"bitmap_agg requires an integral child, got ${t.simpleString}")
-  }
-  override def update(b: RoaringBitmap, row: InternalRow): RoaringBitmap = {
-    val v = child.eval(row)
+case class GroupBitmap() extends FoldSpec[RoaringBitmap] {
+  def name: String = "bitmap_agg"
+  def accepts: Seq[Arg] = Seq(Arg.Is(ByteType, ShortType, IntegerType, LongType))
+  def dataType(in: Seq[Expression]): DataType = BinaryType
+  def codec: BufCodec[RoaringBitmap] = RoaringBuf
+
+  def create(): RoaringBitmap = new RoaringBitmap()
+  def update(b: RoaringBitmap, in: Array[Expression], row: InternalRow): RoaringBitmap = {
+    val v = in(0).eval(row)
     if (v != null) b.add(Bitmaps.toUint32(v.asInstanceOf[Number].longValue()))
     b
   }
-  override def withNewMutableAggBufferOffset(o: Int): BitmapAggregate =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): BitmapAggregate =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildInternal(c: Expression): BitmapAggregate =
-    copy(child = c)
-  override def prettyName: String = "bitmap_agg"
+  def merge(b: RoaringBitmap, o: RoaringBitmap): RoaringBitmap = { b.or(o); b }
+  def eval(b: RoaringBitmap): Any = Bitmaps.toBytes(b)
 }
 
-/** Fold buffer for [[BitmapFoldAggregate]]: `bm == null` means "no input
-  * yet" — required because AND has no representable identity element (the
-  * full uint32 universe), so the first bitmap seeds the fold. */
+/** `bitmap_merge_agg(bm_binary)` — ClickHouse `groupBitmapMergeState`: OR
+  * together already-serialized bitmap states. Re-feeding raw ids here is a
+  * type error at analysis time (BinaryType expected) — by construction the
+  * misuse the reference doc warns about (doc:326-505) cannot compile.
+  */
+case class BitmapMerge() extends FoldSpec[RoaringBitmap] {
+  def name: String = "bitmap_merge_agg"
+  def accepts: Seq[Arg] = Seq(Arg.Is(BinaryType))
+  def dataType(in: Seq[Expression]): DataType = BinaryType
+  def codec: BufCodec[RoaringBitmap] = RoaringBuf
+
+  def create(): RoaringBitmap = new RoaringBitmap()
+  def update(b: RoaringBitmap, in: Array[Expression], row: InternalRow): RoaringBitmap = {
+    val v = in(0).eval(row)
+    if (v != null) b.or(Bitmaps.fromBytes(v.asInstanceOf[Array[Byte]]))
+    b
+  }
+  def merge(b: RoaringBitmap, o: RoaringBitmap): RoaringBitmap = { b.or(o); b }
+  def eval(b: RoaringBitmap): Any = Bitmaps.toBytes(b)
+}
+
+/** Fold buffer for [[BitmapFold]]: `bm == null` means "no input yet" —
+  * required because AND has no representable identity element (the full
+  * uint32 universe), so the first bitmap seeds the fold. */
 final class BitmapFoldBuf {
   private[graft] var bm: RoaringBitmap = null
 }
 
-/** ClickHouse's aggregate-form bitmap folds `groupBitmapAnd/Or/Xor` over
-  * an already-aggregated bitmap-state column (CH: AggregateFunction
-  * (groupBitmap, UInt32)-typed input; the plain spellings return the
-  * folded cardinality, the `-State` forms the folded bitmap). All three
-  * ops are associative AND commutative, so partial folds merge exactly
-  * under any partition order — the same two-phase shape as
-  * [[BitmapMergeAggregate]] (which is the OR fold's state form). Null
-  * inputs are skipped; an empty group evaluates to the empty bitmap
-  * (cardinality 0), matching CH.
-  */
-case class BitmapFoldAggregate(
-    child: Expression,
-    op: String,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[BitmapFoldBuf]
-  with UnaryLike[Expression] {
-
-  require(Set("and", "or", "xor")(op), s"unknown bitmap fold op: $op")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a BinaryType child (a serialized bitmap state), got ${t.simpleString}")
-  }
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def createAggregationBuffer(): BitmapFoldBuf = new BitmapFoldBuf
-
-  private def combine(b: BitmapFoldBuf, in: RoaringBitmap): Unit =
-    if (b.bm == null) b.bm = in
-    else op match {
-      case "and" => b.bm.and(in)
-      case "or"  => b.bm.or(in)
-      case "xor" => b.bm.xor(in)
-    }
-
-  override def update(b: BitmapFoldBuf, row: InternalRow): BitmapFoldBuf = {
-    val v = child.eval(row)
-    if (v != null) combine(b, Bitmaps.fromBytes(v.asInstanceOf[Array[Byte]]))
-    b
-  }
-  override def merge(b: BitmapFoldBuf, o: BitmapFoldBuf): BitmapFoldBuf = {
-    if (o.bm != null) combine(b, o.bm)
-    b
-  }
-  override def eval(b: BitmapFoldBuf): Any =
-    Bitmaps.toBytes(if (b.bm == null) new RoaringBitmap() else b.bm)
-
-  override def serialize(b: BitmapFoldBuf): Array[Byte] =
+/** A flag byte, then (when seeded) the bitmap's Roaring bytes. */
+object BitmapFoldBuf extends BufCodec[BitmapFoldBuf] {
+  def write(b: BitmapFoldBuf): Array[Byte] =
     if (b.bm == null) Array[Byte](0)
     else {
       val body = Bitmaps.toBytes(b.bm)
@@ -404,46 +376,44 @@ case class BitmapFoldAggregate(
       System.arraycopy(body, 0, out, 1, body.length)
       out
     }
-  override def deserialize(bytes: Array[Byte]): BitmapFoldBuf = {
+  def read(bytes: Array[Byte]): BitmapFoldBuf = {
     val b = new BitmapFoldBuf
     if (bytes.nonEmpty && bytes(0) == 1)
       b.bm = Bitmaps.fromBytes(java.util.Arrays.copyOfRange(bytes, 1, bytes.length))
     b
   }
-  override def withNewMutableAggBufferOffset(o: Int): BitmapFoldAggregate =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): BitmapFoldAggregate =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildInternal(c: Expression): BitmapFoldAggregate =
-    copy(child = c)
-  override def prettyName: String = s"groupBitmap${op.capitalize}"
 }
 
-/** `bitmap_merge_agg(bm_binary)` — ClickHouse `groupBitmapMergeState`: OR
-  * together already-serialized bitmap states. Re-feeding raw ids here is a
-  * type error at analysis time (BinaryType expected) — by construction the
-  * misuse the reference doc warns about (doc:326-505) cannot compile.
+/** ClickHouse's aggregate-form bitmap folds `groupBitmapAnd/Or/Xor` over
+  * an already-aggregated bitmap-state column (CH: AggregateFunction
+  * (groupBitmap, UInt32)-typed input; the plain spellings return the
+  * folded cardinality, the `-State` forms the folded bitmap). All three
+  * ops are associative AND commutative, so partial folds merge exactly
+  * under any partition order — the same two-phase shape as
+  * [[BitmapMerge]] (which is the OR fold's state form). Null inputs are
+  * skipped; an empty group evaluates to the empty bitmap (cardinality 0),
+  * matching CH.
   */
-case class BitmapMergeAggregate(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends BitmapAggregateBase {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"bitmap_merge_agg requires a BinaryType child (a serialized bitmap state), got ${t.simpleString}")
-  }
-  override def update(b: RoaringBitmap, row: InternalRow): RoaringBitmap = {
-    val v = child.eval(row)
-    if (v != null) b.or(Bitmaps.fromBytes(v.asInstanceOf[Array[Byte]]))
+case class BitmapFold(op: Bitmaps.FoldOp) extends FoldSpec[BitmapFoldBuf] {
+  def name: String = s"groupBitmap${op.name.capitalize}"
+  def accepts: Seq[Arg] = Seq(Arg.Is(BinaryType))
+  def dataType(in: Seq[Expression]): DataType = BinaryType
+  def codec: BufCodec[BitmapFoldBuf] = BitmapFoldBuf
+  def create(): BitmapFoldBuf = new BitmapFoldBuf
+
+  private def combine(b: BitmapFoldBuf, in: RoaringBitmap): Unit =
+    if (b.bm == null) b.bm = in
+    else op(b.bm, in)
+
+  def update(b: BitmapFoldBuf, in: Array[Expression], row: InternalRow): BitmapFoldBuf = {
+    val v = in(0).eval(row)
+    if (v != null) combine(b, Bitmaps.fromBytes(v.asInstanceOf[Array[Byte]]))
     b
   }
-  override def withNewMutableAggBufferOffset(o: Int): BitmapMergeAggregate =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): BitmapMergeAggregate =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildInternal(c: Expression): BitmapMergeAggregate =
-    copy(child = c)
-  override def prettyName: String = "bitmap_merge_agg"
+  def merge(b: BitmapFoldBuf, o: BitmapFoldBuf): BitmapFoldBuf = {
+    if (o.bm != null) combine(b, o.bm)
+    b
+  }
+  def eval(b: BitmapFoldBuf): Any =
+    Bitmaps.toBytes(if (b.bm == null) new RoaringBitmap() else b.bm)
 }

@@ -67,7 +67,7 @@ object ChCompat {
         spark.sql("CREATE DATABASE IF NOT EXISTS system")
         spark.sql("CREATE OR REPLACE VIEW system.one AS SELECT 0 AS dummy")
       }
-      FunctionTable.quietRegistryLogger
+      graft.LogNoise.silence()
       val tables = spark.sessionState.tableFunctionRegistry
       FunctionTable.tableFunctions.foreach { case (id, info, b) => tables.registerFunction(id, info, b) }
       val reg = spark.sessionState.functionRegistry

@@ -130,22 +130,22 @@ private[functions] object ChCompatAggs {
     // (and merge-order-robust) algorithm for these — alias them onto the
     // centered co-moment matrix machinery (StatMatrix), which is exactly
     // that; scalars extract the [0][1] (pair) or [0][0] (single) entry
-    def mx(name: String, mode: String, es: Seq[Expression], arity: Int): Expression = {
+    def mx(name: String, mode: StatMatrix.Moment, es: Seq[Expression], arity: Int): Expression = {
       // silent take() would turn corrStable(x) into the constant 1.0 —
       // a typo must be an error, not a wrong statistic
       require(es.length == arity,
         s"$name expects exactly $arity argument(s), got ${es.length}")
       GetArrayItem(GetArrayItem(
-        CoMomentMatrixAgg(es, mode).toAggregateExpression(), Literal(0)),
+        StatMatrix.matrix(mode, es), Literal(0)),
         Literal(if (arity > 1) 1 else 0))
     }
-    f("corrStable") { es => mx("corrStable", "corr", es, 2) }
-    f("covarPopStable") { es => mx("covarPopStable", "covarPop", es, 2) }
-    f("covarSampStable") { es => mx("covarSampStable", "covarSamp", es, 2) }
-    f("varPopStable") { es => mx("varPopStable", "covarPop", es, 1) }
-    f("varSampStable") { es => mx("varSampStable", "covarSamp", es, 1) }
-    f("stddevPopStable") { es => Sqrt(mx("stddevPopStable", "covarPop", es, 1)) }
-    f("stddevSampStable") { es => Sqrt(mx("stddevSampStable", "covarSamp", es, 1)) }
+    f("corrStable") { es => mx("corrStable", StatMatrix.Corr, es, 2) }
+    f("covarPopStable") { es => mx("covarPopStable", StatMatrix.CovarPop, es, 2) }
+    f("covarSampStable") { es => mx("covarSampStable", StatMatrix.CovarSamp, es, 2) }
+    f("varPopStable") { es => mx("varPopStable", StatMatrix.CovarPop, es, 1) }
+    f("varSampStable") { es => mx("varSampStable", StatMatrix.CovarSamp, es, 1) }
+    f("stddevPopStable") { es => Sqrt(mx("stddevPopStable", StatMatrix.CovarPop, es, 1)) }
+    f("stddevSampStable") { es => Sqrt(mx("stddevSampStable", StatMatrix.CovarSamp, es, 1)) }
     // CH groupArraySorted(N)(x) in the flat spelling (x, N): the smallest
     // N values in ascending order — collect + sort + slice; bounded
     // output, but the collect buffer is group-sized (like medianExact;
@@ -372,14 +372,20 @@ private[functions] object ChCompatAggs {
     // plural weighted quantiles — genuinely one map, one scan, N reads
     f("quantilesExactWeighted") { es =>
       require(es.length >= 3, "quantilesExactWeighted(x, w, p1, ...)")
-      QuantilesExactWeightedAgg(es(0), es(1), es.drop(2)).toAggregateExpression()
+      Fold.agg(QuantilesExactWeighted(es.drop(2).map(Fold.number(_, "quantilesExactWeighted level")),
+        Fold.integral.accepts(es(0).dataType)), es)
     }
     // capped distinct collect: CH's groupUniqArray(max_size)(x) keeps an
     // arbitrary max_size subset — refined here to the SORTED first
     // max_size, with per-group state BOUNDED at max_size elements (an
     // unbounded collect-then-slice would defeat the cap's purpose)
     f("groupUniqArrayCapped") { es =>
-      BoundedDistinctAgg(es(0), es(1)).toAggregateExpression()
+      val cap = Fold.literal(es(1), "groupUniqArrayCapped: max_size") match {
+        case n: Number => math.max(1, n.intValue())
+        case other => throw new IllegalArgumentException(
+          s"groupUniqArrayCapped: max_size must be an int literal, got $other")
+      }
+      Fold.agg(BoundedDistinct(cap, Fold.integral.accepts(es(0).dataType)), es.take(2))
     }
     // ---- sum/count combinators ---------------------------------------
     // SimpleAggregateFunction(sum): the partial IS the value, so -State,
@@ -478,27 +484,25 @@ private[functions] object ChCompatAggs {
     f("groupBitmap") { es =>
       // cardinality of the aggregated bitmap — scalar-on-aggregate needs the
       // aggregate wrapped explicitly when composed inside another expression
-      Bitmaps.cardinality(Seq(BitmapAggregate(es.head).toAggregateExpression()))
+      Bitmaps.cardinality(Seq(Fold.agg(GroupBitmap(), es.take(1))))
     }
-    f("groupBitmapState") { es => BitmapAggregate(es.head).toAggregateExpression() }
+    f("groupBitmapState") { es => Fold.agg(GroupBitmap(), es.take(1)) }
     f("groupBitmapStateIf") { es =>
-      BitmapAggregate(onlyIf(es(1), es(0))).toAggregateExpression()
+      Fold.agg(GroupBitmap(), Seq(onlyIf(es(1), es(0))))
     }
-    f("groupBitmapMergeState") { es => BitmapMergeAggregate(es.head).toAggregateExpression() }
+    f("groupBitmapMergeState") { es => Fold.agg(BitmapMerge(), es.take(1)) }
     f("groupBitmapMerge") { es =>
-      Bitmaps.cardinality(Seq(BitmapMergeAggregate(es.head).toAggregateExpression()))
+      Bitmaps.cardinality(Seq(Fold.agg(BitmapMerge(), es.take(1))))
     }
     // CH's aggregate-form folds over a bitmap-STATE column: plain
     // spelling = folded cardinality, -State = the folded bitmap
     // (groupBitmapOrState ≡ groupBitmapMergeState; registered for the
     // spelling's sake)
-    for (op <- Seq("and", "or", "xor")) {
-      f(s"groupBitmap${op.capitalize}") { es =>
-        Bitmaps.cardinality(Seq(BitmapFoldAggregate(es.head, op).toAggregateExpression()))
+    for (op <- Bitmaps.foldOps) {
+      f(s"groupBitmap${op.name.capitalize}") { es =>
+        Bitmaps.cardinality(Seq(Fold.agg(BitmapFold(op), es.take(1))))
       }
-      f(s"groupBitmap${op.capitalize}State") { es =>
-        BitmapFoldAggregate(es.head, op).toAggregateExpression()
-      }
+      f(s"groupBitmap${op.name.capitalize}State") { es => Fold.agg(BitmapFold(op), es.take(1)) }
     }
     f("bitmapCardinality")(Bitmaps.cardinality)
     f("bitmapAnd")(Bitmaps.binary("and"))
@@ -537,10 +541,10 @@ private[functions] object ChCompatAggs {
     // (GK summaries under the hood — see graft.functions.QuantileSketch
     // for the documented algorithm divergence; same state contract) ----
     f("quantileTDigestState") { es =>
-      QuantileSketchAggregate(es.head, 0.01).toAggregateExpression()
+      Fold.agg(GkSketch(0.01), es.take(1))
     }
     f("quantileTDigestMergeState") { es =>
-      QuantileSketchMergeAggregate(es.head).toAggregateExpression()
+      Fold.agg(GkMerge(), es.take(1))
     }
     f("quantileTDigestMerge") { es =>
       // quantileTDigestMerge(0.5)(state) is CH's parameterized spelling;
@@ -550,7 +554,7 @@ private[functions] object ChCompatAggs {
         case n: Number => n.doubleValue()
         case other => sys.error(s"quantileTDigestMerge: bad quantile literal $other")
       }
-      QuantileSketch.value(QuantileSketchMergeAggregate(es.head).toAggregateExpression(), q)
+      QuantileSketch.value(Fold.agg(GkMerge(), es.take(1)), q)
     }
 
   }

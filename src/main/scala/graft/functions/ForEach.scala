@@ -4,10 +4,7 @@ import java.nio.ByteBuffer
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
@@ -27,11 +24,19 @@ import org.apache.spark.sql.types._
   */
 object ForEach {
 
-  private val ops = Set("sum", "min", "max", "avg")
+  /** The element-wise combine, chosen when the table entry is built, and
+    * the lane fill an absent position starts from. */
+  sealed abstract class Op(val name: String, val fillD: Double, val fillL: Long)
+    extends Serializable
+  case object Sum extends Op("sum", 0d, 0L)
+  case object Min extends Op("min", Double.PositiveInfinity, Long.MaxValue)
+  case object Max extends Op("max", Double.NegativeInfinity, Long.MinValue)
+  case object Avg extends Op("avg", 0d, 0L)
 
   val functions = FunctionTable.define(this) { f =>
-    for (op <- ops)
-      f(s"${op}ForEach")(es => ForEachAgg(es.head, op).toAggregateExpression())
+    for (op <- Seq(Sum, Min, Max, Avg))
+      f(s"${op.name}ForEach")(es =>
+        Fold.agg(ForEachLanes(op, Kernel.elementType(es.head)), es.take(1)))
   }
 
   def sum_foreach(c: Column): Column = call_function("sumForEach", c)
@@ -55,132 +60,10 @@ final class ForEachState {
   }
 }
 
-case class ForEachAgg(
-    child: Expression,
-    op: String,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[ForEachState] with UnaryLike[Expression] {
-
-  private val isLongIn = child.dataType match {
-    case ArrayType(LongType | IntegerType | ShortType, _) => true
-    case _ => false
-  }
-  // exact integer lanes for sum/min/max over integral arrays; avg and
-  // double inputs ride double lanes
-  private val longLanes = isLongIn && op != "avg"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType | IntegerType | ShortType | DoubleType | FloatType, _) =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"${op}ForEach: numeric array required, got ${other.simpleString}")
-  }
-
-  override def dataType: DataType = op match {
-    case "avg" => ArrayType(DoubleType, containsNull = false)
-    case _ if longLanes => ArrayType(LongType, containsNull = false)
-    case _ => ArrayType(DoubleType, containsNull = false)
-  }
-  override def nullable: Boolean = false
-
-  private def fillD: Double = op match {
-    case "min" => Double.PositiveInfinity
-    case "max" => Double.NegativeInfinity
-    case _ => 0d
-  }
-  private def fillL: Long = op match {
-    case "min" => Long.MaxValue
-    case "max" => Long.MinValue
-    case _ => 0L
-  }
-
-  override def createAggregationBuffer(): ForEachState = new ForEachState
-
-  override def update(buf: ForEachState, row: InternalRow): ForEachState = {
-    val v = child.eval(row)
-    if (v != null) {
-      val arr = v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-      val et = child.dataType.asInstanceOf[ArrayType].elementType
-      val n = arr.numElements()
-      buf.grow(n, fillD, fillL)
-      var i = 0
-      while (i < n) {
-        if (!arr.isNullAt(i)) {
-          if (longLanes) {
-            val x = et match {
-              case LongType => arr.getLong(i)
-              case IntegerType => arr.getInt(i).toLong
-              case ShortType => arr.getShort(i).toLong
-              case _ => 0L
-            }
-            op match {
-              case "sum" => buf.longs(i) += x
-              case "min" => if (x < buf.longs(i)) buf.longs(i) = x
-              case "max" => if (x > buf.longs(i)) buf.longs(i) = x
-            }
-          } else {
-            val x = et match {
-              case DoubleType => arr.getDouble(i)
-              case FloatType => arr.getFloat(i).toDouble
-              case LongType => arr.getLong(i).toDouble
-              case IntegerType => arr.getInt(i).toDouble
-              case ShortType => arr.getShort(i).toDouble
-            }
-            op match {
-              case "sum" | "avg" => buf.vals(i) += x
-              case "min" => if (x < buf.vals(i)) buf.vals(i) = x
-              case "max" => if (x > buf.vals(i)) buf.vals(i) = x
-            }
-          }
-          buf.counts(i) += 1
-        }
-        i += 1
-      }
-    }
-    buf
-  }
-
-  override def merge(buf: ForEachState, other: ForEachState): ForEachState = {
-    buf.grow(other.counts.length, fillD, fillL)
-    var i = 0
-    while (i < other.counts.length) {
-      if (other.counts(i) > 0) {
-        if (longLanes) op match {
-          case "sum" => buf.longs(i) += other.longs(i)
-          case "min" => if (other.longs(i) < buf.longs(i)) buf.longs(i) = other.longs(i)
-          case "max" => if (other.longs(i) > buf.longs(i)) buf.longs(i) = other.longs(i)
-        } else op match {
-          case "sum" | "avg" => buf.vals(i) += other.vals(i)
-          case "min" => if (other.vals(i) < buf.vals(i)) buf.vals(i) = other.vals(i)
-          case "max" => if (other.vals(i) > buf.vals(i)) buf.vals(i) = other.vals(i)
-        }
-        buf.counts(i) += other.counts(i)
-      }
-      i += 1
-    }
-    buf
-  }
-
-  override def eval(buf: ForEachState): Any = {
-    val n = buf.counts.length
-    val out = new Array[Any](n)
-    var i = 0
-    while (i < n) {
-      out(i) =
-        if (op == "avg") {
-          if (buf.counts(i) > 0) buf.vals(i) / buf.counts(i).toDouble else 0d
-        } else if (longLanes) {
-          if (buf.counts(i) > 0) buf.longs(i) else 0L
-        } else {
-          if (buf.counts(i) > 0) buf.vals(i) else 0d
-        }
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  override def serialize(buf: ForEachState): Array[Byte] = {
+/** The lanes position by position: the value (long or double lane) then
+  * its presence count. */
+case class ForEachCodec(op: ForEach.Op, longLanes: Boolean) extends BufCodec[ForEachState] {
+  def write(buf: ForEachState): Array[Byte] = {
     val n = buf.counts.length
     val bb = ByteBuffer.allocate(4 + n * 16)
     bb.putInt(n)
@@ -193,11 +76,11 @@ case class ForEachAgg(
     bb.array()
   }
 
-  override def deserialize(bytes: Array[Byte]): ForEachState = {
+  def read(bytes: Array[Byte]): ForEachState = {
     val bb = ByteBuffer.wrap(bytes)
     val n = bb.getInt
     val buf = new ForEachState
-    buf.grow(n, fillD, fillL)
+    buf.grow(n, op.fillD, op.fillL)
     var i = 0
     while (i < n) {
       if (longLanes) buf.longs(i) = bb.getLong else buf.vals(i) = bb.getDouble
@@ -206,12 +89,114 @@ case class ForEachAgg(
     }
     buf
   }
+}
 
-  override def withNewMutableAggBufferOffset(o: Int): ForEachAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): ForEachAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildInternal(c: Expression): ForEachAgg =
-    copy(child = c)
-  override def prettyName: String = s"${op}ForEach"
+/** `elem`: the input array's element type. */
+case class ForEachLanes(op: ForEach.Op, elem: DataType) extends FoldSpec[ForEachState] {
+  import ForEach._
+
+  private val isLongIn = elem match {
+    case LongType | IntegerType | ShortType => true
+    case _ => false
+  }
+  // exact integer lanes for sum/min/max over integral arrays; avg and
+  // double inputs ride double lanes
+  private val longLanes = isLongIn && op != Avg
+
+  def name: String = s"${op.name}ForEach"
+  def accepts: Seq[Arg] = Seq(Arg.ArrayOf(Arg.Is(LongType, IntegerType, ShortType,
+    DoubleType, FloatType)))
+  def dataType(in: Seq[Expression]): DataType = op match {
+    case Avg => ArrayType(DoubleType, containsNull = false)
+    case _ if longLanes => ArrayType(LongType, containsNull = false)
+    case _ => ArrayType(DoubleType, containsNull = false)
+  }
+  @transient lazy val codec: BufCodec[ForEachState] = ForEachCodec(op, longLanes)
+
+  def create(): ForEachState = new ForEachState
+
+  def update(buf: ForEachState, in: Array[Expression], row: InternalRow): ForEachState = {
+    val v = in(0).eval(row)
+    if (v != null) {
+      val arr = v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+      val et = elem
+      val n = arr.numElements()
+      buf.grow(n, op.fillD, op.fillL)
+      var i = 0
+      while (i < n) {
+        if (!arr.isNullAt(i)) {
+          if (longLanes) {
+            val x = et match {
+              case LongType => arr.getLong(i)
+              case IntegerType => arr.getInt(i).toLong
+              case ShortType => arr.getShort(i).toLong
+              case _ => 0L
+            }
+            op match {
+              case Sum => buf.longs(i) += x
+              case Min => if (x < buf.longs(i)) buf.longs(i) = x
+              case Max => if (x > buf.longs(i)) buf.longs(i) = x
+              case Avg =>
+            }
+          } else {
+            val x = et match {
+              case DoubleType => arr.getDouble(i)
+              case FloatType => arr.getFloat(i).toDouble
+              case LongType => arr.getLong(i).toDouble
+              case IntegerType => arr.getInt(i).toDouble
+              case ShortType => arr.getShort(i).toDouble
+            }
+            op match {
+              case Sum | Avg => buf.vals(i) += x
+              case Min => if (x < buf.vals(i)) buf.vals(i) = x
+              case Max => if (x > buf.vals(i)) buf.vals(i) = x
+            }
+          }
+          buf.counts(i) += 1
+        }
+        i += 1
+      }
+    }
+    buf
+  }
+
+  def merge(buf: ForEachState, other: ForEachState): ForEachState = {
+    buf.grow(other.counts.length, op.fillD, op.fillL)
+    var i = 0
+    while (i < other.counts.length) {
+      if (other.counts(i) > 0) {
+        if (longLanes) op match {
+          case Sum => buf.longs(i) += other.longs(i)
+          case Min => if (other.longs(i) < buf.longs(i)) buf.longs(i) = other.longs(i)
+          case Max => if (other.longs(i) > buf.longs(i)) buf.longs(i) = other.longs(i)
+          case Avg =>
+        } else op match {
+          case Sum | Avg => buf.vals(i) += other.vals(i)
+          case Min => if (other.vals(i) < buf.vals(i)) buf.vals(i) = other.vals(i)
+          case Max => if (other.vals(i) > buf.vals(i)) buf.vals(i) = other.vals(i)
+        }
+        buf.counts(i) += other.counts(i)
+      }
+      i += 1
+    }
+    buf
+  }
+
+  def eval(buf: ForEachState): Any = {
+    val n = buf.counts.length
+    val out = new Array[Any](n)
+    var i = 0
+    while (i < n) {
+      out(i) =
+        if (op == Avg) {
+          if (buf.counts(i) > 0) buf.vals(i) / buf.counts(i).toDouble else 0d
+        } else if (longLanes) {
+          if (buf.counts(i) > 0) buf.longs(i) else 0L
+        } else {
+          if (buf.counts(i) > 0) buf.vals(i) else 0d
+        }
+      i += 1
+    }
+    new GenericArrayData(out)
+  }
 }

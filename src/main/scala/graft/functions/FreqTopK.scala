@@ -6,9 +6,7 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types._
@@ -40,7 +38,7 @@ object FreqTopK {
       case Seq(_, Literal(v: Int, IntegerType)) => v
       case _ => throw new IllegalArgumentException("topK: k must be an integer literal")
     }
-    FreqTopKAgg(es.head, k, valuesOnly).toAggregateExpression()
+    Fold.agg(FreqTopKSketch(k, valuesOnly, weighted = false, es.head.dataType), es.take(1))
   }
 
   private[functions] def buildWeighted(es: Seq[Expression], valuesOnly: Boolean): Expression = {
@@ -50,7 +48,7 @@ object FreqTopK {
       case Seq(_, _, Literal(v: Int, IntegerType)) => v
       case _ => throw new IllegalArgumentException("topKWeighted: k must be an integer literal")
     }
-    FreqTopKAgg(es.head, k, valuesOnly, weight = Some(es(1))).toAggregateExpression()
+    Fold.agg(FreqTopKSketch(k, valuesOnly, weighted = true, es.head.dataType), es.take(2))
   }
 
   val functions = FunctionTable.define(this) { f =>
@@ -131,70 +129,11 @@ final class FreqSketch(val capacity: Int) {
       .map { case (k, (c, e)) => (k, c, e) }
 }
 
-/** The aggregate behind `freq_topk` / the CH `topK` alias. Keys are BIGINT
-  * or STRING (cast smaller integrals up); nulls are skipped. `valuesOnly`
-  * emits CH's array-of-values form; otherwise array<struct<value,est,err>>.
-  */
-case class FreqTopKAgg(
-    child: Expression,
-    k: Int,
-    valuesOnly: Boolean = false,
-    weight: Option[Expression] = None,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[FreqSketch] {
-
-  require(k > 0, s"topK: k must be positive, got $k")
-  private val capacity = math.max(64, 8 * k)
-
-  override def children: Seq[Expression] = child +: weight.toSeq
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType | StringType => weight match {
-      case Some(w) if w.dataType != LongType => TypeCheckResult.TypeCheckFailure(
-        s"topKWeighted: weight must be BIGINT, got ${w.dataType.simpleString} (cast first)")
-      case _ => TypeCheckResult.TypeCheckSuccess
-    }
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"topK requires a BIGINT or STRING key, got ${t.simpleString} (cast first)")
-  }
-
-  override def createAggregationBuffer(): FreqSketch = new FreqSketch(capacity)
-
-  override def update(buf: FreqSketch, row: InternalRow): FreqSketch = {
-    val v = child.eval(row)
-    if (v != null) {
-      val inc = weight match {
-        case None => 1L
-        case Some(w) => w.eval(row) match {
-          case null => 0L
-          case x: Long => x
-        }
-      }
-      // zero/negative weights contribute nothing (CH skips non-positive)
-      if (inc > 0L) buf.add(v match {
-        case s: UTF8String => s.clone() // row-backed bytes are reused by Spark
-        case x => x
-      }, inc)
-    }
-    buf
-  }
-
-  override def merge(buf: FreqSketch, other: FreqSketch): FreqSketch = {
-    buf.mergeFrom(other); buf
-  }
-
-  override def eval(buf: FreqSketch): Any = {
-    val tops = buf.top(k)
-    if (valuesOnly) new GenericArrayData(tops.map(_._1).toArray[Any])
-    else new GenericArrayData(tops.map { case (key, c, e) =>
-      InternalRow(key, c, e)
-    }.toArray[Any])
-  }
-
-  override def serialize(buf: FreqSketch): Array[Byte] = {
+/** The counters in map order: key (UTF-8 string or long) then estimate
+  * and overcount. */
+case class FreqSketchCodec(isStr: Boolean, capacity: Int) extends BufCodec[FreqSketch] {
+  def write(buf: FreqSketch): Array[Byte] = {
     val items = buf.counts.toSeq
-    val isStr = child.dataType == StringType
     val payload = items.map { case (key, (c, e)) =>
       val kb = if (isStr) key.asInstanceOf[UTF8String].getBytes else null
       (kb, key, c, e)
@@ -212,11 +151,10 @@ case class FreqTopKAgg(
     bb.array()
   }
 
-  override def deserialize(bytes: Array[Byte]): FreqSketch = {
+  def read(bytes: Array[Byte]): FreqSketch = {
     val bb = ByteBuffer.wrap(bytes)
     val n = bb.getInt
     val buf = new FreqSketch(capacity)
-    val isStr = child.dataType == StringType
     var j = 0
     while (j < n) {
       val key: Any =
@@ -228,20 +166,59 @@ case class FreqTopKAgg(
     }
     buf
   }
+}
 
-  override def dataType: DataType =
-    if (valuesOnly) ArrayType(child.dataType, containsNull = false)
+/** The aggregate behind `freq_topk` / the CH `topK` alias. Keys are BIGINT
+  * or STRING (cast smaller integrals up); nulls are skipped. `valuesOnly`
+  * emits CH's array-of-values form; otherwise array<struct<value,est,err>>.
+  * `weighted`: a second, BIGINT child is the per-row increment.
+  */
+case class FreqTopKSketch(k: Int, valuesOnly: Boolean, weighted: Boolean, keyType: DataType)
+    extends FoldSpec[FreqSketch] {
+
+  require(k > 0, s"topK: k must be positive, got $k")
+  private val capacity = math.max(64, 8 * k)
+
+  def name: String = if (weighted) "freq_topk_weighted" else "freq_topk"
+  def accepts: Seq[Arg] = Seq(Arg.Is(LongType, StringType), Arg.Is(LongType))
+  def dataType(in: Seq[Expression]): DataType =
+    if (valuesOnly) ArrayType(in.head.dataType, containsNull = false)
     else ArrayType(StructType(Seq(
-      StructField("value", child.dataType, nullable = false),
+      StructField("value", in.head.dataType, nullable = false),
       StructField("est", LongType, nullable = false),
       StructField("err", LongType, nullable = false))), containsNull = false)
-  override def nullable: Boolean = false
+  @transient lazy val codec: BufCodec[FreqSketch] =
+    FreqSketchCodec(keyType == StringType, capacity)
 
-  override def withNewMutableAggBufferOffset(o: Int): FreqTopKAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): FreqTopKAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): FreqTopKAgg =
-    copy(child = cs.head, weight = if (cs.length > 1) Some(cs(1)) else None)
-  override def prettyName: String = if (weight.isDefined) "freq_topk_weighted" else "freq_topk"
+  def create(): FreqSketch = new FreqSketch(capacity)
+
+  def update(buf: FreqSketch, in: Array[Expression], row: InternalRow): FreqSketch = {
+    val v = in(0).eval(row)
+    if (v != null) {
+      val inc =
+        if (!weighted) 1L
+        else in(1).eval(row) match {
+          case null => 0L
+          case x: Long => x
+        }
+      // zero/negative weights contribute nothing (CH skips non-positive)
+      if (inc > 0L) buf.add(v match {
+        case s: UTF8String => s.clone() // row-backed bytes are reused by Spark
+        case x => x
+      }, inc)
+    }
+    buf
+  }
+
+  def merge(buf: FreqSketch, other: FreqSketch): FreqSketch = {
+    buf.mergeFrom(other); buf
+  }
+
+  def eval(buf: FreqSketch): Any = {
+    val tops = buf.top(k)
+    if (valuesOnly) new GenericArrayData(tops.map(_._1).toArray[Any])
+    else new GenericArrayData(tops.map { case (key, c, e) =>
+      InternalRow(key, c, e)
+    }.toArray[Any])
+  }
 }

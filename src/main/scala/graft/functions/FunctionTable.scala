@@ -58,19 +58,4 @@ object FunctionTable {
   ).flatten
 
   lazy val tableFunctions: Seq[Entry[LogicalPlan]] = ChCompat.tableFunctions
-
-  /** The dialect deliberately rebinds six Spark built-in names (`median`,
-    * `monthname`, `now`, `position`, `transform`, `version`) to their CH
-    * semantics, so the registry's "replaced a previously registered
-    * function" WARN fires by design on every fresh session (including the
-    * per-stream session clones MicroBatchExecution makes). Scope that one
-    * logger to ERROR.
-    */
-  lazy val quietRegistryLogger: Unit =
-    try Seq(
-      "org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry",
-      "org.apache.spark.sql.catalyst.analysis.SimpleTableFunctionRegistry"
-    ).foreach(org.apache.logging.log4j.core.config.Configurator.setLevel(
-      _, org.apache.logging.log4j.Level.ERROR))
-    catch { case _: Throwable => () } // non-log4j2 backends: keep the WARNs
 }

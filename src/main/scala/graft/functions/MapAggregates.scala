@@ -6,9 +6,7 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
@@ -35,7 +33,7 @@ object MapAggregates {
 
   private def build(es: Seq[Expression], op: MapCombineOp.Value): Expression = {
     require(es.length == 2, s"usage: ${op.toString.toLowerCase}Map(keys, values)")
-    MapCombineAgg(es(0), es(1), op).toAggregateExpression()
+    Fold.agg(MapCombine(op, Kernel.elementType(es(0)), Kernel.elementType(es(1))), es)
   }
 
   val functions = FunctionTable.define(this) { f =>
@@ -58,35 +56,66 @@ final class MapCombineBuf {
   private[graft] val m = mutable.HashMap.empty[Any, Any]
 }
 
-case class MapCombineAgg(
-    keysChild: Expression,
-    valuesChild: Expression,
-    op: MapCombineOp.Value,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[MapCombineBuf] {
-
-  override def children: Seq[Expression] = Seq(keysChild, valuesChild)
-
-  private def keyType: DataType = keysChild.dataType match {
-    case ArrayType(t, _) => t
-    case t => t
-  }
-  private def valType: DataType = valuesChild.dataType match {
-    case ArrayType(t, _) => t
-    case t => t
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (keysChild.dataType, valuesChild.dataType) match {
-      case (ArrayType(LongType | StringType, _), ArrayType(LongType | DoubleType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (k, v) => TypeCheckResult.TypeCheckFailure(
-        s"${prettyName} requires (array<bigint|string>, array<bigint|double>), " +
-          s"got (${k.simpleString}, ${v.simpleString}) — cast first")
+/** Entries in map order: key (UTF-8 string or long) then value (double
+  * or long), the lanes fixed by the plan's key and value types. */
+case class MapCombineCodec(keyType: DataType, valType: DataType) extends BufCodec[MapCombineBuf] {
+  def write(buf: MapCombineBuf): Array[Byte] = {
+    val isStrKey = keyType == StringType
+    val isDblVal = valType == DoubleType
+    val items = buf.m.toSeq
+    val size = 4 + items.map { case (k, _) =>
+      (if (isStrKey) 4 + k.asInstanceOf[UTF8String].numBytes() else 8) + 8
+    }.sum
+    val bb = ByteBuffer.allocate(size)
+    bb.putInt(items.size)
+    items.foreach { case (k, v) =>
+      if (isStrKey) {
+        val kb = k.asInstanceOf[UTF8String].getBytes
+        bb.putInt(kb.length); bb.put(kb)
+      } else bb.putLong(k.asInstanceOf[Long])
+      if (isDblVal) bb.putDouble(v.asInstanceOf[Double]) else bb.putLong(v.asInstanceOf[Long])
     }
+    bb.array()
+  }
 
-  override def createAggregationBuffer(): MapCombineBuf = new MapCombineBuf
+  def read(bytes: Array[Byte]): MapCombineBuf = {
+    val isStrKey = keyType == StringType
+    val isDblVal = valType == DoubleType
+    val buf = new MapCombineBuf
+    val bb = ByteBuffer.wrap(bytes)
+    val n = bb.getInt
+    var i = 0
+    while (i < n) {
+      val k: Any =
+        if (isStrKey) {
+          val len = bb.getInt; val arr = new Array[Byte](len); bb.get(arr)
+          UTF8String.fromBytes(arr)
+        } else bb.getLong
+      val v: Any = if (isDblVal) bb.getDouble else bb.getLong
+      buf.m(k) = v
+      i += 1
+    }
+    buf
+  }
+}
+
+/** `keyType` / `valType`: the element types of the keys and values arrays. */
+case class MapCombine(op: MapCombineOp.Value, keyType: DataType, valType: DataType)
+    extends FoldSpec[MapCombineBuf] {
+
+  def name: String = op match {
+    case MapCombineOp.Sum => "sumMap"
+    case MapCombineOp.Min => "minMap"
+    case MapCombineOp.Max => "maxMap"
+  }
+  def accepts: Seq[Arg] = Seq(Arg.ArrayOf(Arg.Is(LongType, StringType)),
+    Arg.ArrayOf(Arg.Is(LongType, DoubleType)))
+  def dataType(in: Seq[Expression]): DataType = StructType(Seq(
+    StructField("keys", ArrayType(keyType, containsNull = false), nullable = false),
+    StructField("values", ArrayType(valType, containsNull = false), nullable = false)))
+  @transient lazy val codec: BufCodec[MapCombineBuf] = MapCombineCodec(keyType, valType)
+
+  def create(): MapCombineBuf = new MapCombineBuf
 
   private def combine(a: Any, b: Any): Any = (valType, op) match {
     case (LongType, MapCombineOp.Sum) => a.asInstanceOf[Long] + b.asInstanceOf[Long]
@@ -104,14 +133,14 @@ case class MapCombineAgg(
       case None => buf.m(k) = v
     }
 
-  override def update(buf: MapCombineBuf, row: InternalRow): MapCombineBuf = {
-    val ks = keysChild.eval(row)
-    val vs = valuesChild.eval(row)
+  def update(buf: MapCombineBuf, in: Array[Expression], row: InternalRow): MapCombineBuf = {
+    val ks = in(0).eval(row)
+    val vs = in(1).eval(row)
     if (ks != null && vs != null) {
       val ka = ks.asInstanceOf[ArrayData]
       val va = vs.asInstanceOf[ArrayData]
       require(ka.numElements() == va.numElements(),
-        s"$prettyName: keys/values length mismatch " +
+        s"$name: keys/values length mismatch " +
           s"(${ka.numElements()} vs ${va.numElements()})")
       var i = 0
       while (i < ka.numElements()) {
@@ -132,12 +161,12 @@ case class MapCombineAgg(
     buf
   }
 
-  override def merge(buf: MapCombineBuf, other: MapCombineBuf): MapCombineBuf = {
+  def merge(buf: MapCombineBuf, other: MapCombineBuf): MapCombineBuf = {
     other.m.foreach { case (k, v) => put(buf, k, v) }
     buf
   }
 
-  override def eval(buf: MapCombineBuf): Any = {
+  def eval(buf: MapCombineBuf): Any = {
     val sorted = keyType match {
       case StringType => buf.m.toSeq.sortWith(
         (a, b) => a._1.asInstanceOf[UTF8String].compareTo(b._1.asInstanceOf[UTF8String]) < 0)
@@ -146,61 +175,5 @@ case class MapCombineAgg(
     InternalRow(
       new GenericArrayData(sorted.map(_._1).toArray[Any]),
       new GenericArrayData(sorted.map(_._2).toArray[Any]))
-  }
-
-  override def serialize(buf: MapCombineBuf): Array[Byte] = {
-    val isStrKey = keyType == StringType
-    val isDblVal = valType == DoubleType
-    val items = buf.m.toSeq
-    val size = 4 + items.map { case (k, _) =>
-      (if (isStrKey) 4 + k.asInstanceOf[UTF8String].numBytes() else 8) + 8
-    }.sum
-    val bb = ByteBuffer.allocate(size)
-    bb.putInt(items.size)
-    items.foreach { case (k, v) =>
-      if (isStrKey) {
-        val kb = k.asInstanceOf[UTF8String].getBytes
-        bb.putInt(kb.length); bb.put(kb)
-      } else bb.putLong(k.asInstanceOf[Long])
-      if (isDblVal) bb.putDouble(v.asInstanceOf[Double]) else bb.putLong(v.asInstanceOf[Long])
-    }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): MapCombineBuf = {
-    val isStrKey = keyType == StringType
-    val isDblVal = valType == DoubleType
-    val buf = new MapCombineBuf
-    val bb = ByteBuffer.wrap(bytes)
-    val n = bb.getInt
-    var i = 0
-    while (i < n) {
-      val k: Any =
-        if (isStrKey) {
-          val len = bb.getInt; val arr = new Array[Byte](len); bb.get(arr)
-          UTF8String.fromBytes(arr)
-        } else bb.getLong
-      val v: Any = if (isDblVal) bb.getDouble else bb.getLong
-      buf.m(k) = v
-      i += 1
-    }
-    buf
-  }
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("keys", ArrayType(keyType, containsNull = false), nullable = false),
-    StructField("values", ArrayType(valType, containsNull = false), nullable = false)))
-  override def nullable: Boolean = false
-
-  override def withNewMutableAggBufferOffset(o: Int): MapCombineAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): MapCombineAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): MapCombineAgg =
-    copy(keysChild = cs(0), valuesChild = cs(1))
-  override def prettyName: String = op match {
-    case MapCombineOp.Sum => "sumMap"
-    case MapCombineOp.Min => "minMap"
-    case MapCombineOp.Max => "maxMap"
   }
 }

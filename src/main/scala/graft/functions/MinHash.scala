@@ -4,10 +4,7 @@ import java.nio.ByteBuffer
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
@@ -29,8 +26,8 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object MinHash {
   val functions = FunctionTable.define(this) { f =>
-    f("minhash_agg")(exprs => MinHashAggregate(exprs.head,
-      exprs(1).eval(null).asInstanceOf[Number].intValue()))
+    f("minhash_agg")(exprs => Fold(MinHash(
+      exprs(1).eval(null).asInstanceOf[Number].intValue()), exprs.take(1)))
     f("sig_match_count") { exprs =>
       Kernel.of(this, "sigMatchCount", "sig_match_count", IntegerType, exprs,
         Seq(Arg.Is(ArrayType(LongType)), Arg.Is(ArrayType(LongType))))
@@ -109,25 +106,30 @@ object MinHash {
   }
 }
 
-case class MinHashAggregate(
-    child: Expression,
-    k: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]]
-  with UnaryLike[Expression] {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"minhash_agg requires a string shingle column, got ${t.simpleString}")
+/** The signature lanes: k longs, each the running minimum of h_j. */
+case class LongsCodec(k: Int) extends BufCodec[Array[Long]] {
+  def write(buf: Array[Long]): Array[Byte] = {
+    val bb = ByteBuffer.allocate(8 * k)
+    buf.foreach(bb.putLong)
+    bb.array()
   }
 
-  override def createAggregationBuffer(): Array[Long] =
-    Array.fill(k)(Long.MaxValue)
+  def read(bytes: Array[Byte]): Array[Long] = {
+    val bb = ByteBuffer.wrap(bytes)
+    Array.fill(k)(bb.getLong())
+  }
+}
 
-  override def update(buf: Array[Long], row: InternalRow): Array[Long] = {
-    val v = child.eval(row)
+case class MinHash(k: Int) extends FoldSpec[Array[Long]] {
+  def name: String = "minhash_agg"
+  def accepts: Seq[Arg] = Seq(Arg.Is(StringType))
+  def dataType(in: Seq[Expression]): DataType = ArrayType(LongType, containsNull = false)
+  @transient lazy val codec: BufCodec[Array[Long]] = LongsCodec(k)
+
+  def create(): Array[Long] = Array.fill(k)(Long.MaxValue)
+
+  def update(buf: Array[Long], in: Array[Expression], row: InternalRow): Array[Long] = {
+    val v = in(0).eval(row)
     if (v != null) {
       val s = v.asInstanceOf[UTF8String]
       val h1 = org.apache.spark.sql.catalyst.expressions.XXH64.hashUTF8String(s, 42L)
@@ -142,32 +144,11 @@ case class MinHashAggregate(
     buf
   }
 
-  override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
+  def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
     var j = 0
     while (j < k) { if (b(j) < a(j)) a(j) = b(j); j += 1 }
     a
   }
 
-  override def eval(buf: Array[Long]): Any = ArrayData.toArrayData(buf)
-
-  override def serialize(buf: Array[Long]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(8 * k)
-    buf.foreach(bb.putLong)
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val bb = ByteBuffer.wrap(bytes)
-    Array.fill(k)(bb.getLong())
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = false
-  override def withNewMutableAggBufferOffset(o: Int): MinHashAggregate =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): MinHashAggregate =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildInternal(c: Expression): MinHashAggregate =
-    copy(child = c)
-  override def prettyName: String = "minhash_agg"
+  def eval(buf: Array[Long]): Any = ArrayData.toArrayData(buf)
 }

@@ -5,10 +5,7 @@ import java.nio.ByteBuffer
 import scala.collection.mutable
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
@@ -30,29 +27,48 @@ import org.apache.spark.sql.types._
   */
 object Moving {
 
+  /** The statistic of `exponentialTimeDecayed*`, chosen when the table
+    * entry is built. */
+  sealed abstract class Decay(val name: String) extends Serializable
+  object Decay {
+    case object Sum extends Decay("sum")
+    case object Count extends Decay("count")
+    case object Avg extends Decay("avg")
+    case object Max extends Decay("max")
+  }
+
+  private val time = Arg.Is(LongType, IntegerType, ShortType, DoubleType, TimestampType,
+    TimestampNTZType)
+
   val functions = FunctionTable.define(this) { f =>
-    f("groupArrayMovingSum") { es =>
-      MovingSumAgg(es.head, if (es.length >= 2) es(1) else Literal(0),
-        avg = false).toAggregateExpression()
-    }
-    f("groupArrayMovingAvg") { es =>
-      MovingSumAgg(es.head, if (es.length >= 2) es(1) else Literal(0),
-        avg = true).toAggregateExpression()
-    }
+    for ((name, avg) <- Seq("groupArrayMovingSum" -> false, "groupArrayMovingAvg" -> true))
+      f(name) { es =>
+        val size = if (es.length >= 2) es(1) else Literal(0)
+        val window = Fold.literal(size, s"$name size") match {
+          case null => 0
+          case n: Number => n.intValue()
+        }
+        Fold.agg(MovingSum(window, avg, Fold.integral.accepts(es.head.dataType)),
+          Seq(es.head, size))
+      }
     f("exponentialMovingAverage") { es =>
-      EmaAgg(es(0), es(1), es(2)).toAggregateExpression()
+      Fold.agg(Ema(Fold.number(es(2), "exponentialMovingAverage: halflife")), es.take(3))
     }
     f("maxIntersections") { es =>
-      MaxIntersectionsAgg(es(0), es(1), position = false).toAggregateExpression()
+      Fold.agg(MaxIntersections(position = false), es.take(2))
     }
     f("maxIntersectionsPosition") { es =>
-      MaxIntersectionsAgg(es(0), es(1), position = true).toAggregateExpression()
+      Fold.agg(MaxIntersections(position = true), es.take(2))
     }
-    for (mode <- Seq("sum", "count", "avg", "max"))
-      f(s"exponentialTimeDecayed${mode.capitalize}") { es =>
-        TimeDecayedAgg(es(0), es(1), es(2), mode).toAggregateExpression()
+    for (mode <- Seq(Decay.Sum, Decay.Count, Decay.Avg, Decay.Max)) {
+      val name = s"exponentialTimeDecayed${mode.name.capitalize}"
+      f(name) { es =>
+        Fold.agg(TimeDecayed(mode, Fold.number(es(2), s"$name: decay length")), es.take(3))
       }
+    }
   }
+
+  private[functions] def pairArgs: Seq[Arg] = Seq(Fold.numeric, time, Arg.AnyType)
 }
 
 final class ValueListBuf {
@@ -64,42 +80,42 @@ final class ValueListBuf {
   private[graft] val longs = mutable.ArrayBuffer.empty[Long]
 }
 
-/** windowed running sum/avg over arrival order (size 0 = unbounded). */
-case class MovingSumAgg(
-    child: Expression,
-    sizeChild: Expression,
-    avg: Boolean,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[ValueListBuf] {
-
-  override def children: Seq[Expression] = Seq(child, sizeChild)
-
-  private lazy val window: Int = sizeChild.eval(InternalRow.empty) match {
-    case null => 0
-    case n: Number => n.intValue()
+/** The populated lane: its length, then its longs or doubles. The lane is
+  * fixed by the (plan-constant) input type, so the bytes carry no flag. */
+case class ValueListCodec(isLongIn: Boolean) extends BufCodec[ValueListBuf] {
+  def write(buf: ValueListBuf): Array[Byte] = {
+    val n = if (isLongIn) buf.longs.length else buf.buf.length
+    val bb = ByteBuffer.allocate(4 + n * 8)
+    bb.putInt(n)
+    if (isLongIn) buf.longs.foreach(bb.putLong) else buf.buf.foreach(bb.putDouble)
+    bb.array()
   }
-  private val isLongIn = child.dataType match {
-    case LongType | IntegerType | ShortType => true
-    case _ => false
+  def read(bytes: Array[Byte]): ValueListBuf = {
+    val bb = ByteBuffer.wrap(bytes)
+    val buf = new ValueListBuf
+    val n = bb.getInt
+    var i = 0
+    if (isLongIn) while (i < n) { buf.longs += bb.getLong; i += 1 }
+    else while (i < n) { buf.buf += bb.getDouble; i += 1 }
+    buf
   }
-  // CH's result element type IS the input type — so an integral avg
-  // TRUNCATES (3/2 = 1), staying in the exact Int64 lane, exactly as CH
-  private val longOut = isLongIn
+}
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType | IntegerType | ShortType | DoubleType | FloatType
-      if sizeChild.foldable => TypeCheckResult.TypeCheckSuccess
-    case _ => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName(x[, size]): numeric x + literal size")
-  }
-  override def dataType: DataType =
-    ArrayType(if (longOut) LongType else DoubleType, containsNull = false)
-  override def nullable: Boolean = false
-  override def createAggregationBuffer(): ValueListBuf = new ValueListBuf
+/** windowed running sum/avg over arrival order (size 0 = unbounded).
+  * `isLongIn`: integral input, kept in the exact Int64 lane — CH's result
+  * element type IS the input type, so an integral avg TRUNCATES (3/2 = 1),
+  * exactly as CH. */
+case class MovingSum(window: Int, avg: Boolean, isLongIn: Boolean)
+    extends FoldSpec[ValueListBuf] {
+  def name: String = if (avg) "groupArrayMovingAvg" else "groupArrayMovingSum"
+  def accepts: Seq[Arg] = Seq(Fold.numeric, Arg.AnyType)
+  def dataType(in: Seq[Expression]): DataType =
+    ArrayType(if (isLongIn) LongType else DoubleType, containsNull = false)
+  @transient lazy val codec: BufCodec[ValueListBuf] = ValueListCodec(isLongIn)
+  def create(): ValueListBuf = new ValueListBuf
 
-  override def update(buf: ValueListBuf, row: InternalRow): ValueListBuf = {
-    child.eval(row) match {
+  def update(buf: ValueListBuf, in: Array[Expression], row: InternalRow): ValueListBuf = {
+    in(0).eval(row) match {
       case null => ()
       case d: Double => buf.buf += d
       case f: Float => buf.buf += f.toDouble
@@ -109,11 +125,11 @@ case class MovingSumAgg(
     }
     buf
   }
-  override def merge(buf: ValueListBuf, o: ValueListBuf): ValueListBuf = {
+  def merge(buf: ValueListBuf, o: ValueListBuf): ValueListBuf = {
     buf.buf ++= o.buf; buf.longs ++= o.longs; buf
   }
 
-  override def eval(buf: ValueListBuf): Any = {
+  def eval(buf: ValueListBuf): Any = {
     if (isLongIn) {
       // exact Int64 running sums (wrap-on-overflow, matching CH's Int64
       // result lane) — never through Double, which loses bits past 2^53
@@ -149,85 +165,24 @@ case class MovingSumAgg(
       new GenericArrayData(out)
     }
   }
-
-  override def serialize(buf: ValueListBuf): Array[Byte] = {
-    // the populated lane is determined by the (plan-constant) input type,
-    // so the wire format needs no flag — both sides agree via isLongIn
-    val n = if (isLongIn) buf.longs.length else buf.buf.length
-    val bb = ByteBuffer.allocate(4 + n * 8)
-    bb.putInt(n)
-    if (isLongIn) buf.longs.foreach(bb.putLong) else buf.buf.foreach(bb.putDouble)
-    bb.array()
-  }
-  override def deserialize(bytes: Array[Byte]): ValueListBuf = {
-    val bb = ByteBuffer.wrap(bytes)
-    val buf = new ValueListBuf
-    val n = bb.getInt
-    var i = 0
-    if (isLongIn) while (i < n) { buf.longs += bb.getLong; i += 1 }
-    else while (i < n) { buf.buf += bb.getDouble; i += 1 }
-    buf
-  }
-  override def withNewMutableAggBufferOffset(o: Int): MovingSumAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): MovingSumAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): MovingSumAgg =
-    copy(child = cs(0), sizeChild = cs(1))
-  override def prettyName: String =
-    if (avg) "groupArrayMovingAvg" else "groupArrayMovingSum"
 }
 
 /** time-weighted EMA: weight 2^((t − t_latest)/halflife), Σw·x / Σw —
   * deterministic (ts-sorted eval), group-sized state like medianExact. */
-case class EmaAgg(
-    valueChild: Expression,
-    timeChild: Expression,
-    halflifeChild: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[PairListBuf] {
-
-  override def children: Seq[Expression] = Seq(valueChild, timeChild, halflifeChild)
-
-  private lazy val halflife: Double = halflifeChild.eval(InternalRow.empty) match {
-    case n: Number => n.doubleValue()
-    case other => throw new IllegalArgumentException(
-      s"exponentialMovingAverage: halflife must be a numeric literal, got $other")
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (valueChild.dataType, timeChild.dataType) match {
-      case (LongType | IntegerType | ShortType | DoubleType | FloatType,
-            LongType | IntegerType | ShortType | DoubleType | TimestampType | TimestampNTZType)
-        if halflifeChild.foldable => TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        "exponentialMovingAverage(value, time, halflife): numeric value, " +
-          "numeric/timestamp time, literal halflife")
-    }
-  override def dataType: DataType = DoubleType
+case class Ema(halflife: Double) extends FoldSpec[PairListBuf] {
+  def name: String = "exponentialMovingAverage"
+  def accepts: Seq[Arg] = Moving.pairArgs
+  def dataType(in: Seq[Expression]): DataType = DoubleType
   override def nullable: Boolean = true
-  override def createAggregationBuffer(): PairListBuf = new PairListBuf
+  def codec: BufCodec[PairListBuf] = PairListBuf
+  def create(): PairListBuf = new PairListBuf
 
-  private def num(e: Expression, row: InternalRow): Option[Double] =
-    e.eval(row) match {
-      case null => None
-      case d: Double => Some(d)
-      case f: Float => Some(f.toDouble)
-      case l: Long => Some(l.toDouble)
-      case i: Int => Some(i.toDouble)
-      case s: Short => Some(s.toDouble)
-    }
+  // (time, value) pairs
+  def update(buf: PairListBuf, in: Array[Expression], row: InternalRow): PairListBuf =
+    PairListBuf.add(buf, in(1), in(0), row)
+  def merge(buf: PairListBuf, o: PairListBuf): PairListBuf = PairListBuf.merge(buf, o)
 
-  override def update(buf: PairListBuf, row: InternalRow): PairListBuf = {
-    for (t <- num(timeChild, row); v <- num(valueChild, row)) buf.buf += ((t, v))
-    buf
-  }
-  override def merge(buf: PairListBuf, o: PairListBuf): PairListBuf = {
-    buf.buf ++= o.buf; buf
-  }
-
-  override def eval(buf: PairListBuf): Any = {
+  def eval(buf: PairListBuf): Any = {
     if (buf.buf.isEmpty) return null
     val sorted = buf.buf.toArray.sortBy(p => (p._1, p._2))
     val tLast = sorted.last._1
@@ -242,28 +197,6 @@ case class EmaAgg(
     }
     wx / wSum
   }
-
-  override def serialize(buf: PairListBuf): Array[Byte] = {
-    val bb = ByteBuffer.allocate(4 + buf.buf.length * 16)
-    bb.putInt(buf.buf.length)
-    buf.buf.foreach { case (a, b) => bb.putDouble(a); bb.putDouble(b) }
-    bb.array()
-  }
-  override def deserialize(bytes: Array[Byte]): PairListBuf = {
-    val bb = ByteBuffer.wrap(bytes)
-    val buf = new PairListBuf
-    val n = bb.getInt
-    var i = 0
-    while (i < n) { buf.buf += ((bb.getDouble, bb.getDouble)); i += 1 }
-    buf
-  }
-  override def withNewMutableAggBufferOffset(o: Int): EmaAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): EmaAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): EmaAgg =
-    copy(valueChild = cs(0), timeChild = cs(1), halflifeChild = cs(2))
-  override def prettyName: String = "exponentialMovingAverage"
 }
 
 final class SweepBuf {
@@ -275,28 +208,32 @@ final class SweepBuf {
   }
 }
 
+/** boundary → delta entries in map order. */
+object SweepBuf extends BufCodec[SweepBuf] {
+  def write(buf: SweepBuf): Array[Byte] = {
+    val bb = ByteBuffer.allocate(4 + buf.m.size * 16)
+    bb.putInt(buf.m.size)
+    buf.m.foreach { case (k, d) => bb.putLong(k); bb.putLong(d) }
+    bb.array()
+  }
+  def read(bytes: Array[Byte]): SweepBuf = {
+    val bb = ByteBuffer.wrap(bytes)
+    val buf = new SweepBuf
+    val n = bb.getInt
+    var i = 0
+    while (i < n) { buf.add(bb.getLong, bb.getLong); i += 1 }
+    buf
+  }
+}
+
 /** max overlapping [start, end) intervals via boundary-delta sweep. */
-case class MaxIntersectionsAgg(
-    startChild: Expression,
-    endChild: Expression,
-    position: Boolean,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[SweepBuf] with BinaryLike[Expression] {
-
-  override def left: Expression = startChild
-  override def right: Expression = endChild
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (startChild.dataType, endChild.dataType) match {
-      case (LongType | IntegerType | ShortType, LongType | IntegerType | ShortType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (a, b) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName: integral bounds required, got (${a.simpleString}, ${b.simpleString})")
-    }
-  override def dataType: DataType = LongType
+case class MaxIntersections(position: Boolean) extends FoldSpec[SweepBuf] {
+  def name: String = if (position) "maxIntersectionsPosition" else "maxIntersections"
+  def accepts: Seq[Arg] = Seq(Fold.integral)
+  def dataType(in: Seq[Expression]): DataType = LongType
   override def nullable: Boolean = position
-  override def createAggregationBuffer(): SweepBuf = new SweepBuf
+  def codec: BufCodec[SweepBuf] = SweepBuf
+  def create(): SweepBuf = new SweepBuf
 
   private def longOf(e: Expression, row: InternalRow): Option[Long] =
     e.eval(row) match {
@@ -306,18 +243,18 @@ case class MaxIntersectionsAgg(
       case s: Short => Some(s.toLong)
     }
 
-  override def update(buf: SweepBuf, row: InternalRow): SweepBuf = {
-    for (s <- longOf(startChild, row); e <- longOf(endChild, row)) {
+  def update(buf: SweepBuf, in: Array[Expression], row: InternalRow): SweepBuf = {
+    for (s <- longOf(in(0), row); e <- longOf(in(1), row)) {
       if (s < e) { buf.add(s, 1L); buf.add(e, -1L) }
     }
     buf
   }
-  override def merge(buf: SweepBuf, o: SweepBuf): SweepBuf = {
+  def merge(buf: SweepBuf, o: SweepBuf): SweepBuf = {
     o.m.foreach { case (k, d) => buf.add(k, d) }
     buf
   }
 
-  override def eval(buf: SweepBuf): Any = {
+  def eval(buf: SweepBuf): Any = {
     if (buf.m.isEmpty) return if (position) null else 0L
     val keys = buf.m.keys.toArray.sorted
     var depth = 0L
@@ -331,85 +268,26 @@ case class MaxIntersectionsAgg(
     }
     if (position) bestPos else best
   }
-
-  override def serialize(buf: SweepBuf): Array[Byte] = {
-    val bb = ByteBuffer.allocate(4 + buf.m.size * 16)
-    bb.putInt(buf.m.size)
-    buf.m.foreach { case (k, d) => bb.putLong(k); bb.putLong(d) }
-    bb.array()
-  }
-  override def deserialize(bytes: Array[Byte]): SweepBuf = {
-    val bb = ByteBuffer.wrap(bytes)
-    val buf = new SweepBuf
-    val n = bb.getInt
-    var i = 0
-    while (i < n) { buf.add(bb.getLong, bb.getLong); i += 1 }
-    buf
-  }
-  override def withNewMutableAggBufferOffset(o: Int): MaxIntersectionsAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): MaxIntersectionsAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): MaxIntersectionsAgg =
-    copy(startChild = l, endChild = r)
-  override def prettyName: String =
-    if (position) "maxIntersectionsPosition" else "maxIntersections"
 }
 
 /** CH `exponentialTimeDecayedSum/Count/Avg/Max(λ)(v, t)` in the flat
   * spelling (v, t, λ): the value at the latest observed time, each point
   * weighted exp(−(t_max − t)/λ). Deterministic (ts-sorted reduction);
   * group-sized pair state like the EMA. */
-case class TimeDecayedAgg(
-    valueChild: Expression,
-    timeChild: Expression,
-    lambdaChild: Expression,
-    mode: String,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[PairListBuf] {
-
-  require(Set("sum", "count", "avg", "max")(mode), s"unknown decay mode $mode")
-  override def children: Seq[Expression] = Seq(valueChild, timeChild, lambdaChild)
-
-  private lazy val lambda: Double = lambdaChild.eval(InternalRow.empty) match {
-    case n: Number => n.doubleValue()
-    case d: org.apache.spark.sql.types.Decimal => d.toDouble
-    case other => throw new IllegalArgumentException(
-      s"$prettyName: decay length must be a numeric literal, got $other")
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (valueChild.dataType, timeChild.dataType) match {
-      case (LongType | IntegerType | ShortType | DoubleType | FloatType,
-            LongType | IntegerType | ShortType | DoubleType | TimestampType | TimestampNTZType)
-        if lambdaChild.foldable => TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName(value, time, lambda): numeric value, numeric/timestamp time, literal lambda")
-    }
-  override def dataType: DataType = DoubleType
+case class TimeDecayed(mode: Moving.Decay, lambda: Double) extends FoldSpec[PairListBuf] {
+  def name: String = s"exponentialTimeDecayed${mode.name.capitalize}"
+  def accepts: Seq[Arg] = Moving.pairArgs
+  def dataType(in: Seq[Expression]): DataType = DoubleType
   override def nullable: Boolean = true
-  override def createAggregationBuffer(): PairListBuf = new PairListBuf
+  def codec: BufCodec[PairListBuf] = PairListBuf
+  def create(): PairListBuf = new PairListBuf
 
-  private def num(e: Expression, row: InternalRow): Option[Double] =
-    e.eval(row) match {
-      case null => None
-      case d: Double => Some(d)
-      case f: Float => Some(f.toDouble)
-      case l: Long => Some(l.toDouble)
-      case i: Int => Some(i.toDouble)
-      case s: Short => Some(s.toDouble)
-    }
+  // (time, value) pairs
+  def update(buf: PairListBuf, in: Array[Expression], row: InternalRow): PairListBuf =
+    PairListBuf.add(buf, in(1), in(0), row)
+  def merge(buf: PairListBuf, o: PairListBuf): PairListBuf = PairListBuf.merge(buf, o)
 
-  override def update(buf: PairListBuf, row: InternalRow): PairListBuf = {
-    for (t <- num(timeChild, row); v <- num(valueChild, row)) buf.buf += ((t, v))
-    buf
-  }
-  override def merge(buf: PairListBuf, o: PairListBuf): PairListBuf = {
-    buf.buf ++= o.buf; buf
-  }
-
-  override def eval(buf: PairListBuf): Any = {
+  def eval(buf: PairListBuf): Any = {
     if (buf.buf.isEmpty) return null
     val sorted = buf.buf.toArray.sortBy(p => (p._1, p._2))
     val tMax = sorted.last._1
@@ -426,33 +304,10 @@ case class TimeDecayedAgg(
       i += 1
     }
     mode match {
-      case "sum" => wx
-      case "count" => wSum
-      case "avg" => wx / wSum
-      case "max" => mx
+      case Moving.Decay.Sum => wx
+      case Moving.Decay.Count => wSum
+      case Moving.Decay.Avg => wx / wSum
+      case Moving.Decay.Max => mx
     }
   }
-
-  override def serialize(buf: PairListBuf): Array[Byte] = {
-    val bb = ByteBuffer.allocate(4 + buf.buf.length * 16)
-    bb.putInt(buf.buf.length)
-    buf.buf.foreach { case (a, b) => bb.putDouble(a); bb.putDouble(b) }
-    bb.array()
-  }
-  override def deserialize(bytes: Array[Byte]): PairListBuf = {
-    val bb = ByteBuffer.wrap(bytes)
-    val buf = new PairListBuf
-    val n = bb.getInt
-    var i = 0
-    while (i < n) { buf.buf += ((bb.getDouble, bb.getDouble)); i += 1 }
-    buf
-  }
-  override def withNewMutableAggBufferOffset(o: Int): TimeDecayedAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): TimeDecayedAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): TimeDecayedAgg =
-    copy(valueChild = cs(0), timeChild = cs(1), lambdaChild = cs(2))
-  override def prettyName: String =
-    s"exponentialTimeDecayed${mode.capitalize}"
 }

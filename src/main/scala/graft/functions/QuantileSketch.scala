@@ -4,10 +4,7 @@ import java.nio.ByteBuffer
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.QuantileSummaries
 import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types._
@@ -23,8 +20,8 @@ import org.apache.spark.sql.types._
   * bounded-median state). DOCUMENTED DIVERGENCE: the sketch algorithm is
   * GK, not t-digest — the CONTRACT matches (bounded state, mergeable,
   * ε-approximate quantiles, no exact-value guarantee in CH either), the
-  * centroid layout does not. Same two-phase TypedImperativeAggregate
-  * shape as [[Bitmaps]]/[[Sketches]]: mutable JVM buffer during partial
+  * centroid layout does not. Same two-phase [[Fold]] shape as
+  * [[Bitmaps]]/[[Sketches]]: mutable JVM buffer during partial
   * aggregation, serialized only at the shuffle boundary.
   */
 object QuantileSketch {
@@ -49,6 +46,11 @@ object QuantileSketch {
     buf.array()
   }
 
+  private[functions] def merge(b: Buf, o: Buf): Buf = {
+    b.qs = b.qs.compress().merge(o.qs.compress())
+    b
+  }
+
   private[graft] def fromBytes(b: Array[Byte]): QuantileSummaries = {
     val buf = ByteBuffer.wrap(b)
     val eps = buf.getDouble
@@ -60,23 +62,13 @@ object QuantileSketch {
     new QuantileSummaries(threshold, eps, sampled, count, true)
   }
 
-  /** SQL literals arrive as whatever the parser typed them (Int, Decimal,
-    * Double…) — normalize to Double instead of blind-casting, matching the
-    * ChCompat quantileTDigest* handling.
-    */
-  private def evalDouble(e: Expression, what: String): Double = e.eval() match {
-    case d: org.apache.spark.sql.types.Decimal => d.toDouble
-    case n: java.lang.Number => n.doubleValue()
-    case other => throw new IllegalArgumentException(
-      s"$what must be a numeric literal, got: $other")
-  }
-
   val functions = FunctionTable.define(this) { f =>
-    f("quantile_sketch_agg")(exprs => QuantileSketchAggregate(exprs.head,
-      if (exprs.length > 1) evalDouble(exprs(1), "quantile_sketch_agg eps") else 0.01))
-    f("quantile_sketch_merge_agg")(exprs => QuantileSketchMergeAggregate(exprs.head))
+    f("quantile_sketch_agg")(exprs => Fold(GkSketch(
+      if (exprs.length > 1) Fold.number(exprs(1), "quantile_sketch_agg eps") else 0.01),
+      exprs.take(1)))
+    f("quantile_sketch_merge_agg")(exprs => Fold(GkMerge(), exprs.take(1)))
     f("quantile_sketch_value")(exprs =>
-      value(exprs.head, evalDouble(exprs(1), "quantile_sketch_value q")))
+      value(exprs.head, Fold.number(exprs(1), "quantile_sketch_value q")))
   }
 
   /** `quantile_sketch_value(state, q)` — the scalar finisher: the
@@ -103,77 +95,50 @@ object QuantileSketch {
     call_function("quantile_sketch_value", c, lit(q))
 }
 
-sealed abstract class QuantileSketchAggregateBase
-    extends TypedImperativeAggregate[QuantileSketch.Buf]
-    with UnaryLike[Expression] {
-  override def merge(b: QuantileSketch.Buf, o: QuantileSketch.Buf): QuantileSketch.Buf = {
-    b.qs = b.qs.compress().merge(o.qs.compress())
-    b
-  }
-  override def eval(b: QuantileSketch.Buf): Any = QuantileSketch.toBytes(b.qs)
-  override def serialize(b: QuantileSketch.Buf): Array[Byte] = QuantileSketch.toBytes(b.qs)
-  override def deserialize(bytes: Array[Byte]): QuantileSketch.Buf =
+/** A sketch as its compressed GK summary ([[QuantileSketch.toBytes]]). */
+object GkBuf extends BufCodec[QuantileSketch.Buf] {
+  def write(b: QuantileSketch.Buf): Array[Byte] = QuantileSketch.toBytes(b.qs)
+  def read(bytes: Array[Byte]): QuantileSketch.Buf =
     new QuantileSketch.Buf(QuantileSketch.fromBytes(bytes))
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
 }
 
 /** `quantile_sketch_agg(x, eps)` — raw values into a bounded GK summary.
   * Null inputs are skipped (CH aggregate null handling).
   */
-case class QuantileSketchAggregate(
-    child: Expression,
-    eps: Double,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends QuantileSketchAggregateBase {
-  override def createAggregationBuffer(): QuantileSketch.Buf =
-    new QuantileSketch.Buf(QuantileSketch.empty(eps))
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case _: NumericType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"quantile_sketch_agg requires a numeric child, got ${t.simpleString}")
-  }
-  override def update(b: QuantileSketch.Buf, row: InternalRow): QuantileSketch.Buf = {
-    val v = child.eval(row)
+case class GkSketch(eps: Double) extends FoldSpec[QuantileSketch.Buf] {
+  def name: String = "quantile_sketch_agg"
+  def accepts: Seq[Arg] = Seq(Arg.Num)
+  def dataType(in: Seq[Expression]): DataType = BinaryType
+  def codec: BufCodec[QuantileSketch.Buf] = GkBuf
+
+  def create(): QuantileSketch.Buf = new QuantileSketch.Buf(QuantileSketch.empty(eps))
+  def update(b: QuantileSketch.Buf, in: Array[Expression], row: InternalRow): QuantileSketch.Buf = {
+    val v = in(0).eval(row)
     if (v != null) b.qs = b.qs.insert(v.asInstanceOf[Number].doubleValue())
     b
   }
-  override def withNewMutableAggBufferOffset(o: Int): QuantileSketchAggregate =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): QuantileSketchAggregate =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildInternal(c: Expression): QuantileSketchAggregate =
-    copy(child = c)
-  override def prettyName: String = "quantile_sketch_agg"
+  def merge(b: QuantileSketch.Buf, o: QuantileSketch.Buf): QuantileSketch.Buf =
+    QuantileSketch.merge(b, o)
+  def eval(b: QuantileSketch.Buf): Any = QuantileSketch.toBytes(b.qs)
 }
 
 /** `quantile_sketch_merge_agg(state)` — merge serialized sketch states;
   * feeding raw values here is an analysis-time type error.
   */
-case class QuantileSketchMergeAggregate(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends QuantileSketchAggregateBase {
-  override def createAggregationBuffer(): QuantileSketch.Buf =
-    new QuantileSketch.Buf(QuantileSketch.empty(0.01))
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"quantile_sketch_merge_agg requires a BinaryType child (a serialized sketch), got ${t.simpleString}")
-  }
-  override def update(b: QuantileSketch.Buf, row: InternalRow): QuantileSketch.Buf = {
-    val v = child.eval(row)
+case class GkMerge() extends FoldSpec[QuantileSketch.Buf] {
+  def name: String = "quantile_sketch_merge_agg"
+  def accepts: Seq[Arg] = Seq(Arg.Is(BinaryType))
+  def dataType(in: Seq[Expression]): DataType = BinaryType
+  def codec: BufCodec[QuantileSketch.Buf] = GkBuf
+
+  def create(): QuantileSketch.Buf = new QuantileSketch.Buf(QuantileSketch.empty(0.01))
+  def update(b: QuantileSketch.Buf, in: Array[Expression], row: InternalRow): QuantileSketch.Buf = {
+    val v = in(0).eval(row)
     if (v != null)
       b.qs = b.qs.compress().merge(QuantileSketch.fromBytes(v.asInstanceOf[Array[Byte]]))
     b
   }
-  override def withNewMutableAggBufferOffset(o: Int): QuantileSketchMergeAggregate =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): QuantileSketchMergeAggregate =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildInternal(c: Expression): QuantileSketchMergeAggregate =
-    copy(child = c)
-  override def prettyName: String = "quantile_sketch_merge_agg"
+  def merge(b: QuantileSketch.Buf, o: QuantileSketch.Buf): QuantileSketch.Buf =
+    QuantileSketch.merge(b, o)
+  def eval(b: QuantileSketch.Buf): Any = QuantileSketch.toBytes(b.qs)
 }

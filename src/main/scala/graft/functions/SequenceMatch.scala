@@ -1,14 +1,10 @@
 package graft.functions
 
-import java.nio.ByteBuffer
-
 import scala.collection.mutable
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -43,7 +39,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * leftmost non-overlapping matches (CH semantics: search resumes after
   * the end of the previous match).
   *
-  * Shape: a [[TypedImperativeAggregate]] buffering (ts, bitmask) pairs —
+  * Shape: a [[Fold]] aggregate buffering (ts, bitmask) pairs —
   * value-complete per group like `medianExact`/`windowFunnel` (funnel
   * groups are per-user slices, bounded by a user's event count, not the
   * corpus). Matching runs once at eval as a memoized DFS over
@@ -64,8 +60,8 @@ object SequenceMatch {
       case other => throw new IllegalArgumentException(
         s"sequenceMatch: pattern must be a string literal, got $other")
     }
-    SequenceMatchAgg(pattern, es(1), es.drop(2), returnCount = count)
-      .toAggregateExpression()
+    Fold.agg(SequencePattern(pattern, es.length - 2, es(1).dataType == LongType, count),
+      es.drop(1))
   }
 
   def sequence_match(pattern: String, ts: Column, conds: Column*): Column =
@@ -229,99 +225,41 @@ object SequenceMatch {
   }
 }
 
-/** Aggregate over (ts, condition-bitmask) events; see [[SequenceMatch]]. */
-case class SequenceMatchAgg(
-    pattern: String,
-    tsChild: Expression,
-    conds: Seq[Expression],
-    returnCount: Boolean,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[FunnelEvents] {
+/** Aggregate over (ts, condition-bitmask) events; see [[SequenceMatch]].
+  * `conds`: the number of conditions; `longTs`: the ts child is BIGINT
+  * epoch seconds. */
+case class SequencePattern(pattern: String, conds: Int, longTs: Boolean, returnCount: Boolean)
+    extends FoldSpec[FunnelEvents] {
 
-  require(conds.nonEmpty && conds.length <= 32, "sequenceMatch: 1..32 conditions")
+  require(conds >= 1 && conds <= 32, "sequenceMatch: 1..32 conditions")
   // timestamp children eval to micros; BIGINT ts is CH epoch seconds, so
   // guard bounds stay in seconds (no scaling)
   @transient private lazy val toks = SequenceMatch.scaleGuards(
-    SequenceMatch.parse(pattern),
-    if (tsChild.dataType == LongType) 1L else 1000000L)
+    SequenceMatch.parse(pattern), if (longTs) 1L else 1000000L)
   // referenced condition indexes must exist
   SequenceMatch.parse(pattern).foreach {
-    case SequenceMatch.Cond(n, _) => require(n <= conds.length,
-      s"sequenceMatch: pattern references (?$n) but only ${conds.length} conditions given")
+    case SequenceMatch.Cond(n, _) => require(n <= conds,
+      s"sequenceMatch: pattern references (?$n) but only $conds conditions given")
     case _ =>
   }
 
-  override def children: Seq[Expression] = tsChild +: conds
+  def name: String = if (returnCount) "sequenceCount" else "sequenceMatch"
+  def accepts: Seq[Arg] = FunnelEvents.accepts
+  def dataType(in: Seq[Expression]): DataType = if (returnCount) LongType else BooleanType
+  def codec: BufCodec[FunnelEvents] = FunnelEvents
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val tsOk = tsChild.dataType match {
-      case TimestampType | TimestampNTZType | LongType => true
-      case _ => false
-    }
-    if (!tsOk) TypeCheckResult.TypeCheckFailure(
-      s"sequenceMatch: ts must be a timestamp or bigint, got ${tsChild.dataType.simpleString}")
-    else conds.find(_.dataType != BooleanType) match {
-      case Some(c) => TypeCheckResult.TypeCheckFailure(
-        s"sequenceMatch: conditions must be boolean, got ${c.dataType.simpleString}")
-      case None => TypeCheckResult.TypeCheckSuccess
-    }
-  }
+  def create(): FunnelEvents = new FunnelEvents
+  // CH semantics: events matching NO condition are invisible to the
+  // pattern — `.`/`.*`/adjacency range over the condition-matching
+  // substream only (FunnelEvents.add drops mask == 0)
+  def update(buf: FunnelEvents, in: Array[Expression], row: InternalRow): FunnelEvents =
+    FunnelEvents.update(buf, in, row)
+  def merge(buf: FunnelEvents, other: FunnelEvents): FunnelEvents =
+    FunnelEvents.merge(buf, other)
 
-  override def createAggregationBuffer(): FunnelEvents = new FunnelEvents
-
-  override def update(buf: FunnelEvents, row: InternalRow): FunnelEvents = {
-    val tsVal = tsChild.eval(row)
-    if (tsVal != null) {
-      var mask = 0
-      var i = 0
-      while (i < conds.length) {
-        val c = conds(i).eval(row)
-        if (c != null && c.asInstanceOf[Boolean]) mask |= (1 << i)
-        i += 1
-      }
-      // CH semantics: events matching NO condition are invisible to the
-      // pattern — `.`/`.*`/adjacency range over the condition-matching
-      // substream only (FunnelEvents.add drops mask == 0)
-      buf.add(tsVal.asInstanceOf[Long], mask)
-    }
-    buf
-  }
-
-  override def merge(buf: FunnelEvents, other: FunnelEvents): FunnelEvents = {
-    buf.events ++= other.events; buf
-  }
-
-  override def eval(buf: FunnelEvents): Any = {
+  def eval(buf: FunnelEvents): Any = {
     val evs: IndexedSeq[(Long, Int)] = buf.events.sortBy(identity).toIndexedSeq
     if (returnCount) SequenceMatch.countMatches(evs, toks).toLong
     else SequenceMatch.matches(evs, toks)
   }
-
-  override def serialize(buf: FunnelEvents): Array[Byte] = {
-    val bb = ByteBuffer.allocate(4 + buf.events.length * 12)
-    bb.putInt(buf.events.length)
-    buf.events.foreach { case (ts, m) => bb.putLong(ts); bb.putInt(m) }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): FunnelEvents = {
-    val bb = ByteBuffer.wrap(bytes)
-    val n = bb.getInt
-    val buf = new FunnelEvents
-    var j = 0
-    while (j < n) { buf.events += ((bb.getLong, bb.getInt)); j += 1 }
-    buf
-  }
-
-  override def dataType: DataType = if (returnCount) LongType else BooleanType
-  override def nullable: Boolean = false
-
-  override def withNewMutableAggBufferOffset(o: Int): SequenceMatchAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): SequenceMatchAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): SequenceMatchAgg =
-    copy(tsChild = cs.head, conds = cs.tail)
-  override def prettyName: String = if (returnCount) "sequenceCount" else "sequenceMatch"
 }

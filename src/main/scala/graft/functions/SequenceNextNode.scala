@@ -6,9 +6,7 @@ import java.nio.charset.StandardCharsets
 import scala.collection.mutable
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -40,8 +38,8 @@ object SequenceNextNode {
       }
       require(es.length >= 6,
         "sequenceNextNode(direction, base, ts, event, base_cond, cond1, ...)")
-      SequenceNextNodeAgg(lit(es(0), "direction"), lit(es(1), "base"),
-        es(2), es(3), es(4), es.drop(5)).toAggregateExpression()
+      Fold.agg(SequenceNextNode(lit(es(0), "direction"), lit(es(1), "base"), es.length - 5),
+        es.drop(2))
     }
   }
 }
@@ -51,66 +49,79 @@ final class SnnBuf {
   private[graft] val rows = mutable.ArrayBuffer.empty[(Double, String, Long)]
 }
 
-case class SequenceNextNodeAgg(
-    direction: String,
-    base: String,
-    tsChild: Expression,
-    eventChild: Expression,
-    baseCondChild: Expression,
-    conds: Seq[Expression],
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[SnnBuf] {
+/** The rows in collection order: (ts, bits, UTF-8 value) each. */
+object SnnBuf extends BufCodec[SnnBuf] {
+  def write(buf: SnnBuf): Array[Byte] = {
+    val enc = buf.rows.map { case (_, v, _) => v.getBytes(StandardCharsets.UTF_8) }
+    val bb = ByteBuffer.allocate(4 + buf.rows.map(_ => 20).sum + enc.map(_.length).sum)
+    bb.putInt(buf.rows.length)
+    buf.rows.zip(enc).foreach { case ((t, _, bits), vb) =>
+      bb.putDouble(t); bb.putLong(bits); bb.putInt(vb.length); bb.put(vb)
+    }
+    bb.array()
+  }
+  def read(bytes: Array[Byte]): SnnBuf = {
+    val bb = ByteBuffer.wrap(bytes)
+    val buf = new SnnBuf
+    val k = bb.getInt
+    var i = 0
+    while (i < k) {
+      val t = bb.getDouble
+      val bits = bb.getLong
+      val vb = new Array[Byte](bb.getInt); bb.get(vb)
+      buf.rows += ((t, new String(vb, StandardCharsets.UTF_8), bits))
+      i += 1
+    }
+    buf
+  }
+}
+
+/** `conds` is the number of chain conditions after the base condition. */
+case class SequenceNextNode(direction: String, base: String, conds: Int)
+    extends FoldSpec[SnnBuf] {
 
   require(direction == "forward" || direction == "backward",
     s"sequenceNextNode: direction must be forward|backward, got '$direction'")
   require(Set("head", "tail", "first_match", "last_match")(base),
     s"sequenceNextNode: base must be head|tail|first_match|last_match, got '$base'")
-  require(conds.nonEmpty && conds.length <= 62, "sequenceNextNode: 1..62 conditions")
+  require(conds >= 1 && conds <= 62, "sequenceNextNode: 1..62 conditions")
 
-  override def children: Seq[Expression] =
-    Seq(tsChild, eventChild, baseCondChild) ++ conds
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (tsChild.dataType, eventChild.dataType) match {
-      case (LongType | IntegerType | DoubleType | TimestampType | TimestampNTZType,
-            StringType)
-        if (baseCondChild +: conds).forall(_.dataType == BooleanType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        "sequenceNextNode: (numeric/timestamp ts, string event, boolean conds)")
-    }
-
-  override def dataType: DataType = StringType
+  def name: String = "sequenceNextNode"
+  def accepts: Seq[Arg] = Seq(
+    Arg.Is(LongType, IntegerType, DoubleType, TimestampType, TimestampNTZType),
+    Arg.Is(StringType), Arg.Is(BooleanType))
+  def dataType(in: Seq[Expression]): DataType = StringType
   override def nullable: Boolean = true
-  override def createAggregationBuffer(): SnnBuf = new SnnBuf
+  def codec: BufCodec[SnnBuf] = SnnBuf
+  def create(): SnnBuf = new SnnBuf
 
-  override def update(buf: SnnBuf, row: InternalRow): SnnBuf = {
-    val t = tsChild.eval(row) match {
+  // children: ts, event, base_cond, cond1..condN
+  def update(buf: SnnBuf, in: Array[Expression], row: InternalRow): SnnBuf = {
+    val t = in(0).eval(row) match {
       case null => return buf
       case l: Long => l.toDouble
       case i: Int => i.toDouble
       case d: Double => d
     }
-    val v = eventChild.eval(row) match {
+    val v = in(1).eval(row) match {
       case null => return buf
       case u: UTF8String => u.toString
     }
     var bits = 0L
-    if (baseCondChild.eval(row) == true) bits |= 1L
+    if (in(2).eval(row) == true) bits |= 1L
     var i = 0
-    while (i < conds.length) {
-      if (conds(i).eval(row) == true) bits |= (1L << (i + 1))
+    while (i < conds) {
+      if (in(3 + i).eval(row) == true) bits |= (1L << (i + 1))
       i += 1
     }
     buf.rows += ((t, v, bits))
     buf
   }
-  override def merge(buf: SnnBuf, o: SnnBuf): SnnBuf = {
+  def merge(buf: SnnBuf, o: SnnBuf): SnnBuf = {
     buf.rows ++= o.rows; buf
   }
 
-  override def eval(buf: SnnBuf): Any = {
+  def eval(buf: SnnBuf): Any = {
     if (buf.rows.isEmpty) return null
     // CH model (AggregateFunctionSequenceNextNode): events sorted ascending
     // by timestamp; the BASE point is chronological — head = earliest event,
@@ -120,7 +131,7 @@ case class SequenceNextNodeAgg(
     // event one more step beyond condN (doc example: ('backward','tail')
     // over Home,Gift,Basket with conds Basket,Gift returns Home).
     val seq = buf.rows.toArray.sortBy(r => (r._1, r._2))
-    val n = conds.length
+    val n = conds
     val step = if (direction == "forward") 1 else -1
     def condAt(pos: Int, cond: Int): Boolean =
       (seq(pos)._3 & (1L << (cond + 1))) != 0
@@ -161,36 +172,4 @@ case class SequenceNextNodeAgg(
         null
     }
   }
-
-  override def serialize(buf: SnnBuf): Array[Byte] = {
-    val enc = buf.rows.map { case (_, v, _) => v.getBytes(StandardCharsets.UTF_8) }
-    val bb = ByteBuffer.allocate(4 + buf.rows.map(_ => 20).sum + enc.map(_.length).sum)
-    bb.putInt(buf.rows.length)
-    buf.rows.zip(enc).foreach { case ((t, _, bits), vb) =>
-      bb.putDouble(t); bb.putLong(bits); bb.putInt(vb.length); bb.put(vb)
-    }
-    bb.array()
-  }
-  override def deserialize(bytes: Array[Byte]): SnnBuf = {
-    val bb = ByteBuffer.wrap(bytes)
-    val buf = new SnnBuf
-    val k = bb.getInt
-    var i = 0
-    while (i < k) {
-      val t = bb.getDouble
-      val bits = bb.getLong
-      val vb = new Array[Byte](bb.getInt); bb.get(vb)
-      buf.rows += ((t, new String(vb, StandardCharsets.UTF_8), bits))
-      i += 1
-    }
-    buf
-  }
-  override def withNewMutableAggBufferOffset(o: Int): SequenceNextNodeAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): SequenceNextNodeAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): SequenceNextNodeAgg =
-    copy(tsChild = cs(0), eventChild = cs(1), baseCondChild = cs(2),
-      conds = cs.drop(3))
-  override def prettyName: String = "sequenceNextNode"
 }

@@ -8,10 +8,7 @@ import scala.collection.mutable
 import org.apache.datasketches.memory.Memory
 import org.apache.datasketches.theta.{CompactSketch, SetOperation, Sketches, UpdateSketch}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -32,29 +29,31 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object SketchAggs {
 
-  val functions = FunctionTable.define(this) { f =>
-    f("histogram") { es =>
-      HistogramAgg(es(0), if (es.length >= 2) es(1) else Literal(10))
-        .toAggregateExpression()
-    }
-    f("sparkbar") { es => SparkBarAgg(es).toAggregateExpression() }
-    f("lttb") { es => LttbAgg(es(0), es(1), es(2)).toAggregateExpression() }
-    f("largestTriangleThreeBuckets") { es =>
-      LttbAgg(es(0), es(1), es(2)).toAggregateExpression()
-    }
-    f("anyHeavy") { es => AnyHeavyAgg(es.head).toAggregateExpression() }
-    f("uniqTheta") { es => UniqThetaAgg(es.head).toAggregateExpression() }
+  private def intLit(e: Expression, what: String): Int = Fold.literal(e, what) match {
+    case n: Number => n.intValue()
+    case other => throw new IllegalArgumentException(s"$what must be an int literal, got $other")
   }
 
-  private[functions] def numEval(e: Expression, row: InternalRow): Option[Double] =
-    e.eval(row) match {
-      case null => None
-      case d: Double => Some(d)
-      case f: Float => Some(f.toDouble)
-      case l: Long => Some(l.toDouble)
-      case i: Int => Some(i.toDouble)
-      case s: Short => Some(s.toDouble)
+  val functions = FunctionTable.define(this) { f =>
+    f("histogram") { es =>
+      val bins = if (es.length >= 2) es(1) else Literal(10)
+      Fold.agg(Histogram(math.max(1, intLit(bins, "histogram: bin count"))), Seq(es(0), bins))
     }
+    f("sparkbar") { es =>
+      require(es.length >= 3 && es.length <= 5, "sparkbar(x, y, width[, min, max])")
+      Fold.agg(SparkBar(math.max(1, intLit(es(2), "sparkbar: width")),
+        if (es.length >= 5)
+          Some((Fold.number(es(3), "sparkbar: min"), Fold.number(es(4), "sparkbar: max")))
+        else None), es)
+    }
+    for (name <- Seq("lttb", "largestTriangleThreeBuckets"))
+      f(name) { es =>
+        Fold.agg(Lttb(math.max(2, intLit(es(2), "largestTriangleThreeBuckets: n"))),
+          es.take(3))
+      }
+    f("anyHeavy") { es => Fold.agg(AnyHeavy(), es.take(1)) }
+    f("uniqTheta") { es => Fold.agg(UniqTheta(), es.take(1)) }
+  }
 }
 
 final class CentroidBuf {
@@ -82,37 +81,41 @@ final class CentroidBuf {
   }
 }
 
+/** The centroids after compaction to `nbins`: count, lo, hi, then
+  * (value, weight) pairs. */
+case class CentroidCodec(nbins: Int) extends BufCodec[CentroidBuf] {
+  def write(buf: CentroidBuf): Array[Byte] = {
+    buf.compact(nbins)
+    val bb = ByteBuffer.allocate(4 + 16 + buf.centroids.length * 16)
+    bb.putInt(buf.centroids.length)
+    bb.putDouble(buf.lo); bb.putDouble(buf.hi)
+    buf.centroids.foreach { case (v, w) => bb.putDouble(v); bb.putDouble(w) }
+    bb.array()
+  }
+  def read(bytes: Array[Byte]): CentroidBuf = {
+    val bb = ByteBuffer.wrap(bytes)
+    val buf = new CentroidBuf
+    val n = bb.getInt
+    buf.lo = bb.getDouble; buf.hi = bb.getDouble
+    var i = 0
+    while (i < n) { buf.centroids += ((bb.getDouble, bb.getDouble)); i += 1 }
+    buf
+  }
+}
+
 /** Ben-Haim/Tom-Tov streaming histogram — CH's `histogram(nbins)(x)`. */
-case class HistogramAgg(
-    child: Expression,
-    binsChild: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[CentroidBuf] {
-
-  override def children: Seq[Expression] = Seq(child, binsChild)
-
-  private lazy val nbins: Int = binsChild.eval(InternalRow.empty) match {
-    case n: Number => math.max(1, n.intValue())
-    case other => throw new IllegalArgumentException(
-      s"histogram: bin count must be an int literal, got $other")
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType | IntegerType | ShortType | DoubleType | FloatType
-      if binsChild.foldable => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"histogram(x, nbins): numeric x required, got ${t.simpleString}")
-  }
-  override def dataType: DataType = ArrayType(StructType(Seq(
+case class Histogram(nbins: Int) extends FoldSpec[CentroidBuf] {
+  def name: String = "histogram"
+  def accepts: Seq[Arg] = Seq(Fold.numeric, Arg.AnyType)
+  def dataType(in: Seq[Expression]): DataType = ArrayType(StructType(Seq(
     StructField("lower", DoubleType, nullable = false),
     StructField("upper", DoubleType, nullable = false),
     StructField("height", DoubleType, nullable = false))), containsNull = false)
-  override def nullable: Boolean = false
-  override def createAggregationBuffer(): CentroidBuf = new CentroidBuf
+  @transient lazy val codec: BufCodec[CentroidBuf] = CentroidCodec(nbins)
+  def create(): CentroidBuf = new CentroidBuf
 
-  override def update(buf: CentroidBuf, row: InternalRow): CentroidBuf = {
-    SketchAggs.numEval(child, row).foreach { v =>
+  def update(buf: CentroidBuf, in: Array[Expression], row: InternalRow): CentroidBuf = {
+    Fold.num(in(0), row).foreach { v =>
       buf.centroids += ((v, 1d))
       if (v < buf.lo) buf.lo = v
       if (v > buf.hi) buf.hi = v
@@ -120,7 +123,7 @@ case class HistogramAgg(
     }
     buf
   }
-  override def merge(buf: CentroidBuf, o: CentroidBuf): CentroidBuf = {
+  def merge(buf: CentroidBuf, o: CentroidBuf): CentroidBuf = {
     buf.centroids ++= o.centroids
     if (o.lo < buf.lo) buf.lo = o.lo
     if (o.hi > buf.hi) buf.hi = o.hi
@@ -128,7 +131,7 @@ case class HistogramAgg(
     buf
   }
 
-  override def eval(buf: CentroidBuf): Any = {
+  def eval(buf: CentroidBuf): Any = {
     buf.compact(nbins)
     val cs = buf.centroids.sortBy(_._1)
     // consolidate duplicate centroid positions, then emit midpoint bins
@@ -149,80 +152,56 @@ case class HistogramAgg(
     }
     new GenericArrayData(out)
   }
-
-  override def serialize(buf: CentroidBuf): Array[Byte] = {
-    buf.compact(nbins)
-    val bb = ByteBuffer.allocate(4 + 16 + buf.centroids.length * 16)
-    bb.putInt(buf.centroids.length)
-    bb.putDouble(buf.lo); bb.putDouble(buf.hi)
-    buf.centroids.foreach { case (v, w) => bb.putDouble(v); bb.putDouble(w) }
-    bb.array()
-  }
-  override def deserialize(bytes: Array[Byte]): CentroidBuf = {
-    val bb = ByteBuffer.wrap(bytes)
-    val buf = new CentroidBuf
-    val n = bb.getInt
-    buf.lo = bb.getDouble; buf.hi = bb.getDouble
-    var i = 0
-    while (i < n) { buf.centroids += ((bb.getDouble, bb.getDouble)); i += 1 }
-    buf
-  }
-  override def withNewMutableAggBufferOffset(o: Int): HistogramAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): HistogramAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): HistogramAgg =
-    copy(child = cs(0), binsChild = cs(1))
-  override def prettyName: String = "histogram"
 }
 
 final class BucketBuf {
   private[graft] val m = mutable.HashMap.empty[Long, Double] // x-bits → Σy
 }
 
+/** x-bits → Σy entries in map order. */
+object BucketBuf extends BufCodec[BucketBuf] {
+  def write(buf: BucketBuf): Array[Byte] = {
+    val bb = ByteBuffer.allocate(4 + buf.m.size * 16)
+    bb.putInt(buf.m.size)
+    buf.m.foreach { case (k, y) => bb.putLong(k); bb.putDouble(y) }
+    bb.array()
+  }
+  def read(bytes: Array[Byte]): BucketBuf = {
+    val bb = ByteBuffer.wrap(bytes)
+    val buf = new BucketBuf
+    val n = bb.getInt
+    var i = 0
+    while (i < n) { buf.m.update(bb.getLong, bb.getDouble); i += 1 }
+    buf
+  }
+}
+
 /** CH `sparkbar(width)(x, y)` in the flat spelling (x, y, width[, min,
   * max]): ▁…█ rendering of bucketed Σy (space = empty bucket). State is
   * x → Σy (distinct x values — bounded-domain contract like sumMap). */
-case class SparkBarAgg(
-    children: Seq[Expression],
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[BucketBuf] {
+case class SparkBar(width: Int, fixedRange: Option[(Double, Double)])
+    extends FoldSpec[BucketBuf] {
+  def name: String = "sparkbar"
+  def accepts: Seq[Arg] = Seq(Arg.AnyType)
+  def dataType(in: Seq[Expression]): DataType = StringType
+  def codec: BufCodec[BucketBuf] = BucketBuf
+  def create(): BucketBuf = new BucketBuf
 
-  require(children.length >= 3 && children.length <= 5,
-    "sparkbar(x, y, width[, min, max])")
-
-  private lazy val width: Int = children(2).eval(InternalRow.empty) match {
-    case n: Number => math.max(1, n.intValue())
-    case other => throw new IllegalArgumentException(
-      s"sparkbar: width must be an int literal, got $other")
-  }
-  private lazy val fixedRange: Option[(Double, Double)] =
-    if (children.length >= 5)
-      Some((children(3).eval(InternalRow.empty).asInstanceOf[Number].doubleValue(),
-        children(4).eval(InternalRow.empty).asInstanceOf[Number].doubleValue()))
-    else None
-
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = false
-  override def createAggregationBuffer(): BucketBuf = new BucketBuf
-
-  override def update(buf: BucketBuf, row: InternalRow): BucketBuf = {
-    for (x <- SketchAggs.numEval(children(0), row);
-         y <- SketchAggs.numEval(children(1), row)) {
+  def update(buf: BucketBuf, in: Array[Expression], row: InternalRow): BucketBuf = {
+    for (x <- Fold.num(in(0), row); y <- Fold.num(in(1), row)) {
       val k = java.lang.Double.doubleToLongBits(x)
       buf.m.update(k, buf.m.getOrElse(k, 0d) + y)
     }
     buf
   }
-  override def merge(buf: BucketBuf, o: BucketBuf): BucketBuf = {
+  def merge(buf: BucketBuf, o: BucketBuf): BucketBuf = {
     o.m.foreach { case (k, y) => buf.m.update(k, buf.m.getOrElse(k, 0d) + y) }
     buf
   }
 
-  private val levels = "▁▂▃▄▅▆▇█"
+  private def levels = "▁▂▃▄▅▆▇█"
 
-  override def eval(buf: BucketBuf): Any = {
+  def eval(buf: BucketBuf): Any = {
     if (buf.m.isEmpty) return UTF8String.fromString("")
     val xs = buf.m.toSeq.map { case (k, y) => (java.lang.Double.longBitsToDouble(k), y) }
     val (lo, hi) = fixedRange.getOrElse((xs.map(_._1).min, xs.map(_._1).max))
@@ -242,65 +221,25 @@ case class SparkBarAgg(
     }
     UTF8String.fromString(sb.toString)
   }
-
-  override def serialize(buf: BucketBuf): Array[Byte] = {
-    val bb = ByteBuffer.allocate(4 + buf.m.size * 16)
-    bb.putInt(buf.m.size)
-    buf.m.foreach { case (k, y) => bb.putLong(k); bb.putDouble(y) }
-    bb.array()
-  }
-  override def deserialize(bytes: Array[Byte]): BucketBuf = {
-    val bb = ByteBuffer.wrap(bytes)
-    val buf = new BucketBuf
-    val n = bb.getInt
-    var i = 0
-    while (i < n) { buf.m.update(bb.getLong, bb.getDouble); i += 1 }
-    buf
-  }
-  override def withNewMutableAggBufferOffset(o: Int): SparkBarAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): SparkBarAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): SparkBarAgg =
-    copy(children = cs)
-  override def prettyName: String = "sparkbar"
 }
 
 /** LTTB downsample to n points — first/last kept, each middle bucket
   * contributes the point maximizing the triangle area against the
   * previously kept point and the next bucket's mean. */
-case class LttbAgg(
-    xChild: Expression,
-    yChild: Expression,
-    nChild: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[PairListBuf] {
-
-  override def children: Seq[Expression] = Seq(xChild, yChild, nChild)
-
-  private lazy val n: Int = nChild.eval(InternalRow.empty) match {
-    case num: Number => math.max(2, num.intValue())
-    case other => throw new IllegalArgumentException(
-      s"largestTriangleThreeBuckets: n must be an int literal, got $other")
-  }
-
-  override def dataType: DataType = ArrayType(StructType(Seq(
+case class Lttb(n: Int) extends FoldSpec[PairListBuf] {
+  def name: String = "largestTriangleThreeBuckets"
+  def accepts: Seq[Arg] = Seq(Arg.AnyType)
+  def dataType(in: Seq[Expression]): DataType = ArrayType(StructType(Seq(
     StructField("x", DoubleType, nullable = false),
     StructField("y", DoubleType, nullable = false))), containsNull = false)
-  override def nullable: Boolean = false
-  override def createAggregationBuffer(): PairListBuf = new PairListBuf
+  def codec: BufCodec[PairListBuf] = PairListBuf
+  def create(): PairListBuf = new PairListBuf
 
-  override def update(buf: PairListBuf, row: InternalRow): PairListBuf = {
-    for (x <- SketchAggs.numEval(xChild, row); y <- SketchAggs.numEval(yChild, row))
-      buf.buf += ((x, y))
-    buf
-  }
-  override def merge(buf: PairListBuf, o: PairListBuf): PairListBuf = {
-    buf.buf ++= o.buf; buf
-  }
+  def update(buf: PairListBuf, in: Array[Expression], row: InternalRow): PairListBuf =
+    PairListBuf.add(buf, in(0), in(1), row)
+  def merge(buf: PairListBuf, o: PairListBuf): PairListBuf = PairListBuf.merge(buf, o)
 
-  override def eval(buf: PairListBuf): Any = {
+  def eval(buf: PairListBuf): Any = {
     val pts = buf.buf.toArray.sortBy(p => (p._1, p._2))
     val m = pts.length
     if (m <= n) return new GenericArrayData(
@@ -340,28 +279,6 @@ case class LttbAgg(
     kept += pts(m - 1)
     new GenericArrayData(kept.map(p => InternalRow(p._1, p._2)).toArray[Any])
   }
-
-  override def serialize(buf: PairListBuf): Array[Byte] = {
-    val bb = ByteBuffer.allocate(4 + buf.buf.length * 16)
-    bb.putInt(buf.buf.length)
-    buf.buf.foreach { case (a, c) => bb.putDouble(a); bb.putDouble(c) }
-    bb.array()
-  }
-  override def deserialize(bytes: Array[Byte]): PairListBuf = {
-    val bb = ByteBuffer.wrap(bytes)
-    val buf = new PairListBuf
-    val k = bb.getInt
-    var i = 0
-    while (i < k) { buf.buf += ((bb.getDouble, bb.getDouble)); i += 1 }
-    buf
-  }
-  override def withNewMutableAggBufferOffset(o: Int): LttbAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): LttbAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): LttbAgg =
-    copy(xChild = cs(0), yChild = cs(1), nChild = cs(2))
-  override def prettyName: String = "largestTriangleThreeBuckets"
 }
 
 final class MajorityBuf {
@@ -369,40 +286,9 @@ final class MajorityBuf {
   private[graft] var count: Long = 0L
 }
 
-/** Boyer–Moore majority vote — CH `anyHeavy(x)`: returns a frequently
-  * occurring value; guaranteed to be THE value when it exceeds half the
-  * rows (pairing cancellation survives any merge order). */
-case class AnyHeavyAgg(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[MajorityBuf] with UnaryLike[Expression]
-  with StringKeyed {
-
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def createAggregationBuffer(): MajorityBuf = new MajorityBuf
-
-  private def vote(buf: MajorityBuf, k: String, w: Long): Unit = {
-    if (buf.count == 0L) { buf.candidate = k; buf.count = w }
-    else if (buf.candidate == k) buf.count += w
-    else if (buf.count > w) buf.count -= w
-    else { buf.candidate = k; buf.count = w - buf.count }
-  }
-
-  override def update(buf: MajorityBuf, row: InternalRow): MajorityBuf = {
-    val k = keyOf(child, row)
-    if (k != null) vote(buf, k, 1L)
-    buf
-  }
-  override def merge(buf: MajorityBuf, o: MajorityBuf): MajorityBuf = {
-    if (o.count > 0) vote(buf, o.candidate, o.count)
-    buf
-  }
-  override def eval(buf: MajorityBuf): Any =
-    if (buf.candidate == null) null else UTF8String.fromString(buf.candidate)
-
-  override def serialize(buf: MajorityBuf): Array[Byte] = {
+/** count, then the candidate's UTF-8 bytes (empty when none). */
+object MajorityBuf extends BufCodec[MajorityBuf] {
+  def write(buf: MajorityBuf): Array[Byte] = {
     val kb = if (buf.candidate == null) Array.emptyByteArray
       else buf.candidate.getBytes(StandardCharsets.UTF_8)
     val bb = ByteBuffer.allocate(12 + kb.length)
@@ -411,7 +297,7 @@ case class AnyHeavyAgg(
     bb.put(kb)
     bb.array()
   }
-  override def deserialize(bytes: Array[Byte]): MajorityBuf = {
+  def read(bytes: Array[Byte]): MajorityBuf = {
     val bb = ByteBuffer.wrap(bytes)
     val buf = new MajorityBuf
     buf.count = bb.getLong
@@ -422,13 +308,37 @@ case class AnyHeavyAgg(
     }
     buf
   }
-  override def withNewMutableAggBufferOffset(o: Int): AnyHeavyAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): AnyHeavyAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildInternal(c: Expression): AnyHeavyAgg =
-    copy(child = c)
-  override def prettyName: String = "anyHeavy"
+}
+
+/** Boyer–Moore majority vote — CH `anyHeavy(x)`: returns a frequently
+  * occurring value; guaranteed to be THE value when it exceeds half the
+  * rows (pairing cancellation survives any merge order). */
+case class AnyHeavy() extends FoldSpec[MajorityBuf] {
+  def name: String = "anyHeavy"
+  def accepts: Seq[Arg] = Seq(Arg.AnyType)
+  def dataType(in: Seq[Expression]): DataType = StringType
+  override def nullable: Boolean = true
+  def codec: BufCodec[MajorityBuf] = MajorityBuf
+  def create(): MajorityBuf = new MajorityBuf
+
+  private def vote(buf: MajorityBuf, k: String, w: Long): Unit = {
+    if (buf.count == 0L) { buf.candidate = k; buf.count = w }
+    else if (buf.candidate == k) buf.count += w
+    else if (buf.count > w) buf.count -= w
+    else { buf.candidate = k; buf.count = w - buf.count }
+  }
+
+  def update(buf: MajorityBuf, in: Array[Expression], row: InternalRow): MajorityBuf = {
+    val k = Fold.key(in(0), row)
+    if (k != null) vote(buf, k, 1L)
+    buf
+  }
+  def merge(buf: MajorityBuf, o: MajorityBuf): MajorityBuf = {
+    if (o.count > 0) vote(buf, o.candidate, o.count)
+    buf
+  }
+  def eval(buf: MajorityBuf): Any =
+    if (buf.candidate == null) null else UTF8String.fromString(buf.candidate)
 }
 
 final class ThetaBuf {
@@ -443,22 +353,33 @@ final class ThetaBuf {
   }
 }
 
+/** The sketch as a DataSketches compact theta sketch. */
+object ThetaBuf extends BufCodec[ThetaBuf] {
+  def write(buf: ThetaBuf): Array[Byte] = {
+    val c: CompactSketch =
+      if (buf.merged != null) buf.merged.getResult else buf.sketch.compact()
+    c.toByteArray
+  }
+  def read(bytes: Array[Byte]): ThetaBuf = {
+    val buf = new ThetaBuf
+    buf.merged = SetOperation.builder().buildUnion()
+    buf.merged.union(Sketches.wrapCompactSketch(Memory.wrap(bytes)))
+    buf
+  }
+}
+
 /** Theta-sketch distinct count — CH `uniqTheta(x)`. Exact below the
   * nominal 4096 retained entries, ~1.6% RSE beyond; fixed-size
-  * mergeable state either way. */
-case class UniqThetaAgg(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[ThetaBuf] with UnaryLike[Expression]
-  with StringKeyed {
+  * mergeable state either way. Each value is keyed by its string form. */
+case class UniqTheta() extends FoldSpec[ThetaBuf] {
+  def name: String = "uniqTheta"
+  def accepts: Seq[Arg] = Seq(Arg.AnyType)
+  def dataType(in: Seq[Expression]): DataType = LongType
+  def codec: BufCodec[ThetaBuf] = ThetaBuf
+  def create(): ThetaBuf = new ThetaBuf
 
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = false
-  override def createAggregationBuffer(): ThetaBuf = new ThetaBuf
-
-  override def update(buf: ThetaBuf, row: InternalRow): ThetaBuf = {
-    val k = keyOf(child, row)
+  def update(buf: ThetaBuf, in: Array[Expression], row: InternalRow): ThetaBuf = {
+    val k = Fold.key(in(0), row)
     if (k != null) {
       if (buf.merged != null)
         throw new IllegalStateException("uniqTheta: update after merge")
@@ -466,33 +387,14 @@ case class UniqThetaAgg(
     }
     buf
   }
-  override def merge(buf: ThetaBuf, o: ThetaBuf): ThetaBuf = {
+  def merge(buf: ThetaBuf, o: ThetaBuf): ThetaBuf = {
     buf.union.union(
       if (o.merged != null) o.merged.getResult else o.sketch.compact())
     buf
   }
-  override def eval(buf: ThetaBuf): Any = {
+  def eval(buf: ThetaBuf): Any = {
     val est = if (buf.merged != null) buf.merged.getResult.getEstimate
       else buf.sketch.compact().getEstimate
     math.round(est)
   }
-
-  override def serialize(buf: ThetaBuf): Array[Byte] = {
-    val c: CompactSketch =
-      if (buf.merged != null) buf.merged.getResult else buf.sketch.compact()
-    c.toByteArray
-  }
-  override def deserialize(bytes: Array[Byte]): ThetaBuf = {
-    val buf = new ThetaBuf
-    buf.merged = SetOperation.builder().buildUnion()
-    buf.merged.union(Sketches.wrapCompactSketch(Memory.wrap(bytes)))
-    buf
-  }
-  override def withNewMutableAggBufferOffset(o: Int): UniqThetaAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): UniqThetaAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildInternal(c: Expression): UniqThetaAgg =
-    copy(child = c)
-  override def prettyName: String = "uniqTheta"
 }

@@ -7,10 +7,7 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -41,56 +38,37 @@ import org.apache.spark.unsafe.types.UTF8String
 object StatAggregates {
 
   val functions = FunctionTable.define(this) { f =>
-    f("entropy") { es => EntropyAgg(es.head).toAggregateExpression() }
-    f("cramersV") { es => AssocAgg(es(0), es(1), "cramersV").toAggregateExpression() }
-    f("cramersVBiasCorrected") { es =>
-      AssocAgg(es(0), es(1), "cramersVBiasCorrected").toAggregateExpression()
-    }
-    f("theilsU") { es => AssocAgg(es(0), es(1), "theilsU").toAggregateExpression() }
-    f("contingency") { es => AssocAgg(es(0), es(1), "contingency").toAggregateExpression() }
+    f("entropy") { es => Fold.agg(Entropy(), es.take(1)) }
+    for (stat <- Seq(Assoc.CramersV, Assoc.CramersVBiasCorrected, Assoc.TheilsU,
+        Assoc.Contingency))
+      f(stat.name) { es => Fold.agg(Assoc(stat), es.take(2)) }
     // CH quantileExactWeighted(level)(x, w) in the library's flat
     // spelling (x, w, level) — same convention as quantileExact(x, p)
-    f("quantileExactWeighted") { es =>
-      QuantileExactWeightedAgg(es(0), es(1), es(2)).toAggregateExpression()
-    }
-    f("medianExactWeighted") { es =>
-      QuantileExactWeightedAgg(es(0), es(1),
-        org.apache.spark.sql.catalyst.expressions.Literal(0.5d)).toAggregateExpression()
-    }
+    f("quantileExactWeighted") { es => weighted(es, QuantileExactWeighted) }
+    f("medianExactWeighted") { es => weighted(es.take(2) :+ Literal(0.5d), QuantileExactWeighted) }
     // CH quantileInterpolatedWeighted(level)(x, w), flat (x, w, level):
     // the published weighted-percentile-with-interpolation rule — each
     // distinct value sits at the MIDPOINT of its cumulative weight span,
     // p_i = (cum_i − w_i/2)/W, and the level interpolates linearly
     // between adjacent midpoints (clamping outside [p_0, p_last]).
     // Always Float64, like CH's interpolated variants.
-    f("quantileInterpolatedWeighted") { es =>
-      QuantileInterpolatedWeightedAgg(es(0), es(1), es(2)).toAggregateExpression()
-    }
+    f("quantileInterpolatedWeighted") { es => weighted(es, QuantileInterpolatedWeighted) }
     f("medianInterpolatedWeighted") { es =>
-      QuantileInterpolatedWeightedAgg(es(0), es(1),
-        org.apache.spark.sql.catalyst.expressions.Literal(0.5d)).toAggregateExpression()
+      weighted(es.take(2) :+ Literal(0.5d), QuantileInterpolatedWeighted)
     }
-    f("deltaSum") { es => DeltaSumAgg(es.head).toAggregateExpression() }
-    f("deltaSumTimestamp") { es =>
-      DeltaSumTimestampAgg(es(0), es(1)).toAggregateExpression()
-    }
-    f("rankCorr") { es => RankCorrAgg(es(0), es(1)).toAggregateExpression() }
-    f("studentTTest") { es =>
-      TTestAgg(es(0), es(1), welch = false).toAggregateExpression()
-    }
-    f("welchTTest") { es =>
-      TTestAgg(es(0), es(1), welch = true).toAggregateExpression()
-    }
-    f("mannWhitneyUTest") { es =>
-      MannWhitneyAgg(es(0), es(1)).toAggregateExpression()
-    }
-    f("kolmogorovSmirnovTest") { es =>
-      KolmogorovSmirnovAgg(es(0), es(1)).toAggregateExpression()
-    }
+    f("deltaSum") { es => Fold.agg(DeltaSum(), es.take(1)) }
+    f("deltaSumTimestamp") { es => Fold.agg(DeltaSumTimestamp(), es.take(2)) }
+    f("rankCorr") { es => Fold.agg(RankCorr(), es.take(2)) }
+    f("studentTTest") { es => Fold.agg(TTest(welch = false), es.take(2)) }
+    f("welchTTest") { es => Fold.agg(TTest(welch = true), es.take(2)) }
+    f("mannWhitneyUTest") { es => Fold.agg(MannWhitney(), es.take(2)) }
+    f("kolmogorovSmirnovTest") { es => Fold.agg(KolmogorovSmirnov(), es.take(2)) }
     // CH meanZTest(pop_var_x, pop_var_y, conf)(sample, index) in the flat
     // spelling (sample, index, pop_var_x, pop_var_y, conf)
     f("meanZTest") { es =>
-      MeanZTestAgg(es(0), es(1), es(2), es(3), es(4)).toAggregateExpression()
+      Fold.agg(MeanZTest(Fold.number(es(2), "meanZTest: pop_var_x"),
+        Fold.number(es(3), "meanZTest: pop_var_y"), Fold.number(es(4), "meanZTest: conf")),
+        es.take(5))
     }
     // machine-precision special functions over commons-math3 (on Spark's
     // own classpath)
@@ -113,31 +91,24 @@ object StatAggregates {
     for (name <- Seq("minSampleSizeContinous", "minSampleSizeContinuous"))
       f(name) { es => minSampleSize("minSampleSizeContinuous", "minSampleSizeContinous", 5, es) }
     f("intervalLengthSum") { es =>
-      IntervalLengthSumAgg(es(0), es(1)).toAggregateExpression()
+      Fold.agg(IntervalLengthSum(es.take(2).forall(e => Fold.integral.accepts(e.dataType))),
+        es.take(2))
     }
     // -State / -Merge combinators for the count-map family (MV-
     // incremental statistics, CH's combinator contract)
-    f("entropyState") { es =>
-      CountMapStateAgg(es.head, None).toAggregateExpression()
-    }
-    f("entropyMerge") { es =>
-      CountMapMergeAgg(es.head, "entropy").toAggregateExpression()
-    }
+    f("entropyState") { es => Fold.agg(CountMapState(weighted = false), es.take(1)) }
+    f("entropyMerge") { es => Fold.agg(CountMapMerge(CountMapMerge.Entropy), es.take(1)) }
     f("quantileExactWeightedState") { es =>
-      CountMapStateAgg(es(0), Some(es(1))).toAggregateExpression()
+      Fold.agg(CountMapState(weighted = true), es.take(2))
     }
     f("quantileExactWeightedMerge") { es =>
-      val level = litDouble(es(1), "quantileExactWeightedMerge level")
-      CountMapMergeAgg(es(0), s"quantile:$level").toAggregateExpression()
+      val level = Fold.number(es(1), "quantileExactWeightedMerge level")
+      Fold.agg(CountMapMerge(CountMapMerge.Quantile(level)), es.take(1))
     }
     // partial-to-partial merges + scalar finalizers (the StateTable
     // Metric roles: merge parts on compact, finalize on read)
-    f("entropyMergeState") { es =>
-      CountMapMergeAgg(es.head, "state").toAggregateExpression()
-    }
-    f("quantileExactWeightedMergeState") { es =>
-      CountMapMergeAgg(es.head, "state").toAggregateExpression()
-    }
+    for (name <- Seq("entropyMergeState", "quantileExactWeightedMergeState"))
+      f(name) { es => Fold.agg(CountMapMerge(CountMapMerge.State), es.take(1)) }
     // scalar finalizers over a STORED count-map state (post-aggregation,
     // group-count-sized row sets — the Metric.finish role)
     f("entropyFinalize") { es =>
@@ -145,7 +116,7 @@ object StatAggregates {
         Seq(Arg.Is(BinaryType)), returnsNull = true)
     }
     f("quantileExactWeightedFinalize") { es =>
-      val level = litDouble(es(1), "quantileExactWeightedFinalize level")
+      val level = Fold.number(es(1), "quantileExactWeightedFinalize level")
       Kernel.of(this, "quantileExactWeightedFinalize", "quantileExactWeightedFinalize",
         LongType, es.take(1), Seq(Arg.Is(BinaryType)), Seq(level), returnsNull = true)
     }
@@ -162,19 +133,11 @@ object StatAggregates {
   def interval_length_sum(s: Column, e: Column): Column =
     call_function("intervalLengthSum", s, e)
 
-  /** numeric literal (Number or Spark Decimal — a bare `0.5` parses as
-    * DecimalType) for level/parameter arguments. */
-  private[functions] def litDouble(e: Expression, what: String): Double =
-    e match {
-      case lit if lit.foldable => lit.eval() match {
-        case n: Number => n.doubleValue()
-        case d: org.apache.spark.sql.types.Decimal => d.toDouble
-        case other => throw new IllegalArgumentException(
-          s"$what: numeric literal required, got $other")
-      }
-      case other => throw new IllegalArgumentException(
-        s"$what: numeric literal required, got $other")
-    }
+  /** A weighted quantile over children (x, w, level), the level read now. */
+  private def weighted(es: Seq[Expression],
+      spec: (Double, Boolean) => FoldSpec[WeightedQuantileBuf]): Expression =
+    Fold.agg(spec(Fold.number(es(2), "weighted quantile level"),
+      Fold.integral.accepts(es(0).dataType)), es.take(3))
 
   /** CH's weighted-quantile selection rule over integral (value, Σweight)
     * pairs: ascending scan, first value whose accumulated weight reaches
@@ -212,14 +175,10 @@ object StatAggregates {
   def tgamma(x: Double): Double = org.apache.commons.math3.special.Gamma.gamma(x)
   def digamma(x: Double): Double = org.apache.commons.math3.special.Gamma.digamma(x)
 
-  private object countMaps extends StringKeyed {
-    def read(b: Array[Byte]): CountMapBuf = { val buf = new CountMapBuf; readCountMap(b, buf); buf }
-  }
-
-  def entropyFinalize(b: Array[Byte]): Double = shannon(countMaps.read(b).m.values.toArray)
+  def entropyFinalize(b: Array[Byte]): Double = shannon(CountMapBuf.read(b).m.values.toArray)
 
   def quantileExactWeightedFinalize(b: Array[Byte], level: Double): java.lang.Long = {
-    val buf = countMaps.read(b)
+    val buf = CountMapBuf.read(b)
     if (buf.m.isEmpty) null
     else weightedSelect(buf.m.toSeq.map { case (k, w) => (k.toLong, w) }, level)
   }
@@ -300,18 +259,11 @@ final class CountMapBuf {
   def add(k: String, c: Long): Unit = m.update(k, m.getOrElse(k, 0L) + c)
 }
 
-private[functions] trait StringKeyed {
-  /** canonical per-row key: null input → no contribution (CH skips nulls). */
-  protected def keyOf(e: Expression, row: InternalRow): String = {
-    val v = e.eval(row)
-    if (v == null) null
-    else e.dataType match {
-      case StringType => v.asInstanceOf[UTF8String].toString
-      case _ => v.toString
-    }
-  }
-  protected def writeCountMap(m: mutable.HashMap[String, Long]): Array[Byte] = {
-    val items = m.toSeq
+/** Entries in map order: the key's UTF-8 bytes then its count. Also the
+  * value of the `-State` forms, so a stored state reads back here. */
+object CountMapBuf extends BufCodec[CountMapBuf] {
+  def write(buf: CountMapBuf): Array[Byte] = {
+    val items = buf.m.toSeq
     val enc = items.map { case (k, _) => k.getBytes(StandardCharsets.UTF_8) }
     val bb = ByteBuffer.allocate(4 + enc.map(_.length + 12).sum)
     bb.putInt(items.size)
@@ -320,7 +272,9 @@ private[functions] trait StringKeyed {
     }
     bb.array()
   }
-  protected def readCountMap(bytes: Array[Byte], into: CountMapBuf): Unit = {
+  def read(bytes: Array[Byte]): CountMapBuf = readInto(bytes, new CountMapBuf)
+  /** Adds a stored state's counts into `into`. */
+  def readInto(bytes: Array[Byte], into: CountMapBuf): CountMapBuf = {
     val bb = ByteBuffer.wrap(bytes)
     val n = bb.getInt
     var i = 0
@@ -329,76 +283,50 @@ private[functions] trait StringKeyed {
       into.add(new String(kb, StandardCharsets.UTF_8), bb.getLong)
       i += 1
     }
+    into
+  }
+  def merge(buf: CountMapBuf, other: CountMapBuf): CountMapBuf = {
+    other.m.foreach { case (k, c) => buf.add(k, c) }
+    buf
   }
 }
 
 /** CH `entropy(x)`: Shannon entropy (base 2) of the value distribution. */
-case class EntropyAgg(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[CountMapBuf] with UnaryLike[Expression]
-  with StringKeyed {
+case class Entropy() extends FoldSpec[CountMapBuf] {
+  def name: String = "entropy"
+  def accepts: Seq[Arg] = Seq(Arg.AnyType)
+  def dataType(in: Seq[Expression]): DataType = DoubleType
+  def codec: BufCodec[CountMapBuf] = CountMapBuf
+  def create(): CountMapBuf = new CountMapBuf
 
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = false
-  override def createAggregationBuffer(): CountMapBuf = new CountMapBuf
-
-  override def update(buf: CountMapBuf, row: InternalRow): CountMapBuf = {
-    val k = keyOf(child, row)
+  def update(buf: CountMapBuf, in: Array[Expression], row: InternalRow): CountMapBuf = {
+    val k = Fold.key(in(0), row)
     if (k != null) buf.add(k, 1L)
     buf
   }
-  override def merge(buf: CountMapBuf, other: CountMapBuf): CountMapBuf = {
-    other.m.foreach { case (k, c) => buf.add(k, c) }
-    buf
-  }
-  override def eval(buf: CountMapBuf): Any =
-    StatAggregates.shannon(buf.m.values.toArray)
-
-  override def serialize(buf: CountMapBuf): Array[Byte] = writeCountMap(buf.m)
-  override def deserialize(b: Array[Byte]): CountMapBuf = {
-    val buf = new CountMapBuf; readCountMap(b, buf); buf
-  }
-  override def withNewMutableAggBufferOffset(o: Int): EntropyAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): EntropyAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildInternal(c: Expression): EntropyAgg =
-    copy(child = c)
-  override def prettyName: String = "entropy"
+  def merge(buf: CountMapBuf, other: CountMapBuf): CountMapBuf = CountMapBuf.merge(buf, other)
+  def eval(buf: CountMapBuf): Any = StatAggregates.shannon(buf.m.values.toArray)
 }
 
 /** (x, y) pair counts → the CH categorical-association family:
   * cramersV, cramersVBiasCorrected, theilsU, contingency. Pair keys ride
   * one string with a 0x00 separator (neither side may contain NUL). */
-case class AssocAgg(
-    xChild: Expression,
-    yChild: Expression,
-    stat: String,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[CountMapBuf] with BinaryLike[Expression]
-  with StringKeyed {
+case class Assoc(stat: Assoc.Stat) extends FoldSpec[CountMapBuf] {
+  def name: String = stat.name
+  def accepts: Seq[Arg] = Seq(Arg.AnyType)
+  def dataType(in: Seq[Expression]): DataType = DoubleType
+  def codec: BufCodec[CountMapBuf] = CountMapBuf
+  def create(): CountMapBuf = new CountMapBuf
 
-  override def left: Expression = xChild
-  override def right: Expression = yChild
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = false
-  override def createAggregationBuffer(): CountMapBuf = new CountMapBuf
-
-  override def update(buf: CountMapBuf, row: InternalRow): CountMapBuf = {
-    val kx = keyOf(xChild, row)
-    val ky = keyOf(yChild, row)
+  def update(buf: CountMapBuf, in: Array[Expression], row: InternalRow): CountMapBuf = {
+    val kx = Fold.key(in(0), row)
+    val ky = Fold.key(in(1), row)
     if (kx != null && ky != null) buf.add(kx + "\u0000" + ky, 1L)
     buf
   }
-  override def merge(buf: CountMapBuf, other: CountMapBuf): CountMapBuf = {
-    other.m.foreach { case (k, c) => buf.add(k, c) }
-    buf
-  }
+  def merge(buf: CountMapBuf, other: CountMapBuf): CountMapBuf = CountMapBuf.merge(buf, other)
 
-  override def eval(buf: CountMapBuf): Any = {
+  def eval(buf: CountMapBuf): Any = {
     // contingency table in sorted-cell order (bit-deterministic sums)
     val cells = buf.m.toSeq.map { case (k, c) =>
       val i = k.indexOf('\u0000')
@@ -428,10 +356,10 @@ case class AssocAgg(
     }
 
     stat match {
-      case "cramersV" =>
+      case Assoc.CramersV =>
         val d = math.min(r - 1, q - 1)
         if (d <= 0) 0d else math.sqrt(chi2 / n / d)
-      case "cramersVBiasCorrected" =>
+      case Assoc.CramersVBiasCorrected =>
         if (n <= 1) return 0d
         val phi2 = chi2 / n
         val phi2c = math.max(0d, phi2 - (r - 1d) * (q - 1d) / (n - 1d))
@@ -439,10 +367,10 @@ case class AssocAgg(
         val qc = q - (q - 1d) * (q - 1d) / (n - 1d)
         val d = math.min(rc - 1d, qc - 1d)
         if (d <= 0) 0d else math.sqrt(phi2c / d)
-      case "contingency" =>
+      case Assoc.Contingency =>
         val c2 = chi2
         math.sqrt(c2 / (c2 + n))
-      case "theilsU" =>
+      case Assoc.TheilsU =>
         // uncertainty coefficient U(x|y) = (H(X) − H(X|Y)) / H(X)
         val hx = StatAggregates.shannon(rowTot.values.toArray)
         if (hx == 0d) return 0d
@@ -453,21 +381,17 @@ case class AssocAgg(
           hxy += cy.toDouble / n * StatAggregates.shannon(sub)
         }
         (hx - hxy) / hx
-      case other => throw new IllegalStateException(s"unknown stat $other")
     }
   }
+}
 
-  override def serialize(buf: CountMapBuf): Array[Byte] = writeCountMap(buf.m)
-  override def deserialize(b: Array[Byte]): CountMapBuf = {
-    val buf = new CountMapBuf; readCountMap(b, buf); buf
-  }
-  override def withNewMutableAggBufferOffset(o: Int): AssocAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): AssocAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): AssocAgg =
-    copy(xChild = l, yChild = r)
-  override def prettyName: String = stat
+object Assoc {
+  /** The statistic, chosen when the table entry is built. */
+  sealed abstract class Stat(val name: String) extends Serializable
+  case object CramersV extends Stat("cramersV")
+  case object CramersVBiasCorrected extends Stat("cramersVBiasCorrected")
+  case object TheilsU extends Stat("theilsU")
+  case object Contingency extends Stat("contingency")
 }
 
 // ---------------------------------------------------------------------------
@@ -478,12 +402,98 @@ final class WeightedQuantileBuf {
   private[graft] val m = mutable.HashMap.empty[Long, Long] // value bits → Σweight
 }
 
+/** Entries in map order: value bits then Σweight. */
+object WeightedQuantileBuf extends BufCodec[WeightedQuantileBuf] {
+  def write(buf: WeightedQuantileBuf): Array[Byte] = {
+    val bb = ByteBuffer.allocate(4 + buf.m.size * 16)
+    bb.putInt(buf.m.size)
+    buf.m.foreach { case (k, w) => bb.putLong(k); bb.putLong(w) }
+    bb.array()
+  }
+  def read(bytes: Array[Byte]): WeightedQuantileBuf = {
+    val bb = ByteBuffer.wrap(bytes)
+    val buf = new WeightedQuantileBuf
+    val n = bb.getInt
+    var i = 0
+    while (i < n) { buf.m.update(bb.getLong, bb.getLong); i += 1 }
+    buf
+  }
+
+  private def valueBits(value: Expression, row: InternalRow): Option[Long] = {
+    val v = value.eval(row)
+    if (v == null) None
+    else Some(value.dataType match {
+      case LongType => v.asInstanceOf[Long]
+      case IntegerType => v.asInstanceOf[Int].toLong
+      case ShortType => v.asInstanceOf[Short].toLong
+      case DoubleType => java.lang.Double.doubleToLongBits(v.asInstanceOf[Double])
+      case FloatType => java.lang.Double.doubleToLongBits(v.asInstanceOf[Float].toDouble)
+    })
+  }
+  private def weightOf(weight: Expression, row: InternalRow): Long = weight.eval(row) match {
+    case null => 0L
+    case l: Long => l
+    case i: Int => i.toLong
+    case s: Short => s.toLong
+  }
+
+  /** One row of children (x, w, ...): a positive weight adds to x's Σweight. */
+  def update(buf: WeightedQuantileBuf, in: Array[Expression], row: InternalRow): WeightedQuantileBuf = {
+    valueBits(in(0), row).foreach { k =>
+      val w = weightOf(in(1), row)
+      if (w > 0) buf.m.update(k, buf.m.getOrElse(k, 0L) + w)
+    }
+    buf
+  }
+  def merge(buf: WeightedQuantileBuf, o: WeightedQuantileBuf): WeightedQuantileBuf = {
+    o.m.foreach { case (k, w) => buf.m.update(k, buf.m.getOrElse(k, 0L) + w) }
+    buf
+  }
+
+  /** numeric x, integral w, then literal levels */
+  val accepts: Seq[Arg] =
+    Seq(Fold.numeric, Fold.integral, Arg.AnyType)
+}
+
 /** CH `quantileExactWeighted(level)(x, w)`: exact weighted quantile over a
   * value → Σweight map. CH's selection rule: ascending scan, return the
   * first value whose accumulated weight ≥ level · totalWeight.
   * Long inputs keep a Long result; doubles ride their raw bits in the
   * same map (sort order restored via the eval decode).
   */
+case class QuantileExactWeighted(level: Double, isLong: Boolean)
+    extends FoldSpec[WeightedQuantileBuf] {
+  def name: String = "quantileExactWeighted"
+  def accepts: Seq[Arg] = WeightedQuantileBuf.accepts
+  def dataType(in: Seq[Expression]): DataType = if (isLong) LongType else DoubleType
+  override def nullable: Boolean = true
+  def codec: BufCodec[WeightedQuantileBuf] = WeightedQuantileBuf
+  def create(): WeightedQuantileBuf = new WeightedQuantileBuf
+  def update(buf: WeightedQuantileBuf, in: Array[Expression], row: InternalRow): WeightedQuantileBuf =
+    WeightedQuantileBuf.update(buf, in, row)
+  def merge(buf: WeightedQuantileBuf, o: WeightedQuantileBuf): WeightedQuantileBuf =
+    WeightedQuantileBuf.merge(buf, o)
+
+  def eval(buf: WeightedQuantileBuf): Any = {
+    if (buf.m.isEmpty) return null
+    def decode(bits: Long): Double =
+      if (isLong) bits.toDouble else java.lang.Double.longBitsToDouble(bits)
+    val items = buf.m.toArray.sortBy { case (bits, _) => decode(bits) }
+    val total = items.map(_._2).sum
+    val threshold = level * total
+    var acc = 0L
+    var i = 0
+    while (i < items.length) {
+      acc += items(i)._2
+      if (acc >= threshold)
+        return if (isLong) items(i)._1
+        else java.lang.Double.longBitsToDouble(items(i)._1)
+      i += 1
+    }
+    if (isLong) items.last._1 else java.lang.Double.longBitsToDouble(items.last._1)
+  }
+}
+
 /** Weighted quantile with linear interpolation between midpoints of the
   * cumulative weight spans (the standard published weighted-percentile
   * method; CH's quantileInterpolatedWeighted uses the same midpoint
@@ -492,75 +502,22 @@ final class WeightedQuantileBuf {
   * Fixed double expression order (p = (cum − 0.5·w)/W; interpolation
   * ((vᵤ−vₗ)·(q−pₗ))/(pᵤ−pₗ)) so a SQL mirror reproduces the bits.
   */
-case class QuantileInterpolatedWeightedAgg(
-    valueChild: Expression,
-    weightChild: Expression,
-    levelChild: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[WeightedQuantileBuf] {
+case class QuantileInterpolatedWeighted(level: Double, isLong: Boolean)
+    extends FoldSpec[WeightedQuantileBuf] {
+  require(level >= 0 && level <= 1, s"$name: level must be in [0, 1]")
 
-  override def children: Seq[Expression] = Seq(valueChild, weightChild, levelChild)
-
-  private lazy val level: Double = levelChild.eval(InternalRow.empty) match {
-    case n: Number => n.doubleValue()
-    // a bare SQL literal like 0.25 parses as DecimalType, not Double
-    case d: Decimal => d.toDouble
-    case other => throw new IllegalArgumentException(
-      s"$prettyName: level must be a numeric literal, got $other")
-  }
-  require(!levelChild.foldable || { val l = level; l >= 0 && l <= 1 },
-    s"$prettyName: level must be in [0, 1]")
-
-  private val isLong = valueChild.dataType match {
-    case LongType | IntegerType | ShortType => true
-    case _ => false
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (valueChild.dataType, weightChild.dataType) match {
-      case (LongType | IntegerType | ShortType | DoubleType | FloatType,
-            LongType | IntegerType | ShortType) if levelChild.foldable =>
-        TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName(x, w, level): numeric x, integral w, literal level")
-    }
-
-  override def dataType: DataType = DoubleType
+  def name: String = "quantileInterpolatedWeighted"
+  def accepts: Seq[Arg] = WeightedQuantileBuf.accepts
+  def dataType(in: Seq[Expression]): DataType = DoubleType
   override def nullable: Boolean = true
-  override def createAggregationBuffer(): WeightedQuantileBuf = new WeightedQuantileBuf
+  def codec: BufCodec[WeightedQuantileBuf] = WeightedQuantileBuf
+  def create(): WeightedQuantileBuf = new WeightedQuantileBuf
+  def update(buf: WeightedQuantileBuf, in: Array[Expression], row: InternalRow): WeightedQuantileBuf =
+    WeightedQuantileBuf.update(buf, in, row)
+  def merge(buf: WeightedQuantileBuf, o: WeightedQuantileBuf): WeightedQuantileBuf =
+    WeightedQuantileBuf.merge(buf, o)
 
-  private def valueBits(row: InternalRow): Option[Long] = {
-    val v = valueChild.eval(row)
-    if (v == null) None
-    else Some(valueChild.dataType match {
-      case LongType => v.asInstanceOf[Long]
-      case IntegerType => v.asInstanceOf[Int].toLong
-      case ShortType => v.asInstanceOf[Short].toLong
-      case DoubleType => java.lang.Double.doubleToLongBits(v.asInstanceOf[Double])
-      case FloatType => java.lang.Double.doubleToLongBits(v.asInstanceOf[Float].toDouble)
-    })
-  }
-  private def weightOf(row: InternalRow): Long = weightChild.eval(row) match {
-    case null => 0L
-    case l: Long => l
-    case i: Int => i.toLong
-    case s: Short => s.toLong
-  }
-
-  override def update(buf: WeightedQuantileBuf, row: InternalRow): WeightedQuantileBuf = {
-    valueBits(row).foreach { k =>
-      val w = weightOf(row)
-      if (w > 0) buf.m.update(k, buf.m.getOrElse(k, 0L) + w)
-    }
-    buf
-  }
-  override def merge(buf: WeightedQuantileBuf, o: WeightedQuantileBuf): WeightedQuantileBuf = {
-    o.m.foreach { case (k, w) => buf.m.update(k, buf.m.getOrElse(k, 0L) + w) }
-    buf
-  }
-
-  override def eval(buf: WeightedQuantileBuf): Any = {
+  def eval(buf: WeightedQuantileBuf): Any = {
     if (buf.m.isEmpty) return null
     def decode(bits: Long): Double =
       if (isLong) bits.toDouble else java.lang.Double.longBitsToDouble(bits)
@@ -586,138 +543,46 @@ case class QuantileInterpolatedWeightedAgg(
     }
     prevV // clamp above the last midpoint
   }
-
-  override def serialize(buf: WeightedQuantileBuf): Array[Byte] = {
-    val bb = ByteBuffer.allocate(4 + buf.m.size * 16)
-    bb.putInt(buf.m.size)
-    buf.m.foreach { case (k, w) => bb.putLong(k); bb.putLong(w) }
-    bb.array()
-  }
-  override def deserialize(bytes: Array[Byte]): WeightedQuantileBuf = {
-    val bb = ByteBuffer.wrap(bytes)
-    val buf = new WeightedQuantileBuf
-    val n = bb.getInt
-    var i = 0
-    while (i < n) { buf.m.update(bb.getLong, bb.getLong); i += 1 }
-    buf
-  }
-  override def withNewMutableAggBufferOffset(o: Int): QuantileInterpolatedWeightedAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): QuantileInterpolatedWeightedAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): QuantileInterpolatedWeightedAgg =
-    copy(valueChild = cs(0), weightChild = cs(1), levelChild = cs(2))
-  override def prettyName: String = "quantileInterpolatedWeighted"
 }
 
-case class QuantileExactWeightedAgg(
-    valueChild: Expression,
-    weightChild: Expression,
-    levelChild: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[WeightedQuantileBuf] {
-
-  override def children: Seq[Expression] = Seq(valueChild, weightChild, levelChild)
-
-  private lazy val level: Double = levelChild.eval(InternalRow.empty) match {
-    case d: Double => d
-    case f: Float => f.toDouble
-    case n: Number => n.doubleValue()
-    // a bare SQL literal like 0.25 parses as DecimalType, not Double
-    case d: Decimal => d.toDouble
-    case other => throw new IllegalArgumentException(
-      s"quantileExactWeighted: level must be a numeric literal, got $other")
-  }
-
-  private val isLong = valueChild.dataType match {
-    case LongType | IntegerType | ShortType => true
-    case _ => false
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (valueChild.dataType, weightChild.dataType) match {
-      case (LongType | IntegerType | ShortType | DoubleType | FloatType,
-            LongType | IntegerType | ShortType) if levelChild.foldable =>
-        TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        "quantileExactWeighted(x, w, level): numeric x, integral w, literal level")
-    }
-
-  override def dataType: DataType = if (isLong) LongType else DoubleType
+/** plural `quantilesExactWeighted(x, w, p1, ..., pn)` — ONE value→Σweight
+  * map per group, one ascending scan reading every level (the singular
+  * form shares the same buffer and selection rule). */
+case class QuantilesExactWeighted(levels: Seq[Double], isLong: Boolean)
+    extends FoldSpec[WeightedQuantileBuf] {
+  def name: String = "quantilesExactWeighted"
+  def accepts: Seq[Arg] = WeightedQuantileBuf.accepts
+  def dataType(in: Seq[Expression]): DataType =
+    ArrayType(if (isLong) LongType else DoubleType, containsNull = false)
   override def nullable: Boolean = true
-  override def createAggregationBuffer(): WeightedQuantileBuf = new WeightedQuantileBuf
+  def codec: BufCodec[WeightedQuantileBuf] = WeightedQuantileBuf
+  def create(): WeightedQuantileBuf = new WeightedQuantileBuf
+  def update(buf: WeightedQuantileBuf, in: Array[Expression], row: InternalRow): WeightedQuantileBuf =
+    WeightedQuantileBuf.update(buf, in, row)
+  def merge(buf: WeightedQuantileBuf, o: WeightedQuantileBuf): WeightedQuantileBuf =
+    WeightedQuantileBuf.merge(buf, o)
 
-  private def valueBits(row: InternalRow): Option[Long] = {
-    val v = valueChild.eval(row)
-    if (v == null) None
-    else Some(valueChild.dataType match {
-      case LongType => v.asInstanceOf[Long]
-      case IntegerType => v.asInstanceOf[Int].toLong
-      case ShortType => v.asInstanceOf[Short].toLong
-      case DoubleType => java.lang.Double.doubleToLongBits(v.asInstanceOf[Double])
-      case FloatType => java.lang.Double.doubleToLongBits(v.asInstanceOf[Float].toDouble)
-    })
-  }
-  private def weightOf(row: InternalRow): Long = weightChild.eval(row) match {
-    case null => 0L
-    case l: Long => l
-    case i: Int => i.toLong
-    case s: Short => s.toLong
-  }
-
-  override def update(buf: WeightedQuantileBuf, row: InternalRow): WeightedQuantileBuf = {
-    valueBits(row).foreach { k =>
-      val w = weightOf(row)
-      if (w > 0) buf.m.update(k, buf.m.getOrElse(k, 0L) + w)
-    }
-    buf
-  }
-  override def merge(buf: WeightedQuantileBuf, o: WeightedQuantileBuf): WeightedQuantileBuf = {
-    o.m.foreach { case (k, w) => buf.m.update(k, buf.m.getOrElse(k, 0L) + w) }
-    buf
-  }
-
-  override def eval(buf: WeightedQuantileBuf): Any = {
+  def eval(buf: WeightedQuantileBuf): Any = {
     if (buf.m.isEmpty) return null
     def decode(bits: Long): Double =
       if (isLong) bits.toDouble else java.lang.Double.longBitsToDouble(bits)
     val items = buf.m.toArray.sortBy { case (bits, _) => decode(bits) }
     val total = items.map(_._2).sum
-    val threshold = level * total
-    var acc = 0L
-    var i = 0
-    while (i < items.length) {
-      acc += items(i)._2
-      if (acc >= threshold)
-        return if (isLong) items(i)._1
-        else java.lang.Double.longBitsToDouble(items(i)._1)
-      i += 1
+    val out = levels.map { level =>
+      val threshold = level * total
+      var acc = 0L
+      var i = 0
+      var res = items.last._1
+      var done = false
+      while (i < items.length && !done) {
+        acc += items(i)._2
+        if (acc >= threshold) { res = items(i)._1; done = true }
+        i += 1
+      }
+      if (isLong) res: Any else java.lang.Double.longBitsToDouble(res): Any
     }
-    if (isLong) items.last._1 else java.lang.Double.longBitsToDouble(items.last._1)
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(out.toArray)
   }
-
-  override def serialize(buf: WeightedQuantileBuf): Array[Byte] = {
-    val bb = ByteBuffer.allocate(4 + buf.m.size * 16)
-    bb.putInt(buf.m.size)
-    buf.m.foreach { case (k, w) => bb.putLong(k); bb.putLong(w) }
-    bb.array()
-  }
-  override def deserialize(bytes: Array[Byte]): WeightedQuantileBuf = {
-    val bb = ByteBuffer.wrap(bytes)
-    val buf = new WeightedQuantileBuf
-    val n = bb.getInt
-    var i = 0
-    while (i < n) { buf.m.update(bb.getLong, bb.getLong); i += 1 }
-    buf
-  }
-  override def withNewMutableAggBufferOffset(o: Int): QuantileExactWeightedAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): QuantileExactWeightedAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): QuantileExactWeightedAgg =
-    copy(valueChild = cs(0), weightChild = cs(1), levelChild = cs(2))
-  override def prettyName: String = "quantileExactWeighted"
 }
 
 // ---------------------------------------------------------------------------
@@ -731,44 +596,44 @@ final class DeltaSumBuf {
   var sum = 0d
 }
 
+/** seen flag, first, last, sum. */
+object DeltaSumBuf extends BufCodec[DeltaSumBuf] {
+  def write(buf: DeltaSumBuf): Array[Byte] = {
+    val bb = ByteBuffer.allocate(25)
+    bb.put(if (buf.seen) 1.toByte else 0.toByte)
+    bb.putDouble(buf.first); bb.putDouble(buf.last); bb.putDouble(buf.sum)
+    bb.array()
+  }
+  def read(bytes: Array[Byte]): DeltaSumBuf = {
+    val bb = ByteBuffer.wrap(bytes)
+    val buf = new DeltaSumBuf
+    buf.seen = bb.get() == 1
+    buf.first = bb.getDouble; buf.last = bb.getDouble; buf.sum = bb.getDouble
+    buf
+  }
+}
+
 /** CH `deltaSum(x)`: sum of positive consecutive differences in data
   * order. O(1) state (sum, first, last); carries CH's own documented
   * caveat — partial-state merge order is not data order under a shuffle,
   * so distributed results depend on merge order exactly as in CH
   * (use deltaSumTimestamp for the deterministic form). */
-case class DeltaSumAgg(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[DeltaSumBuf] with UnaryLike[Expression] {
+case class DeltaSum() extends FoldSpec[DeltaSumBuf] {
+  def name: String = "deltaSum"
+  def accepts: Seq[Arg] = Seq(Fold.numeric)
+  def dataType(in: Seq[Expression]): DataType = DoubleType
+  def codec: BufCodec[DeltaSumBuf] = DeltaSumBuf
+  def create(): DeltaSumBuf = new DeltaSumBuf
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType | IntegerType | ShortType | DoubleType | FloatType =>
-      TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"deltaSum: numeric required, got ${t.simpleString}")
-  }
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = false
-  override def createAggregationBuffer(): DeltaSumBuf = new DeltaSumBuf
-
-  private def num(row: InternalRow): Option[Double] = child.eval(row) match {
-    case null => None
-    case d: Double => Some(d)
-    case f: Float => Some(f.toDouble)
-    case l: Long => Some(l.toDouble)
-    case i: Int => Some(i.toDouble)
-    case s: Short => Some(s.toDouble)
-  }
-
-  override def update(buf: DeltaSumBuf, row: InternalRow): DeltaSumBuf = {
-    num(row).foreach { v =>
+  def update(buf: DeltaSumBuf, in: Array[Expression], row: InternalRow): DeltaSumBuf = {
+    Fold.num(in(0), row).foreach { v =>
       if (!buf.seen) { buf.seen = true; buf.first = v }
       else if (v > buf.last) buf.sum += v - buf.last
       buf.last = v
     }
     buf
   }
-  override def merge(buf: DeltaSumBuf, o: DeltaSumBuf): DeltaSumBuf = {
+  def merge(buf: DeltaSumBuf, o: DeltaSumBuf): DeltaSumBuf = {
     if (o.seen) {
       if (!buf.seen) { buf.seen = true; buf.first = o.first; buf.last = o.last; buf.sum = o.sum }
       else {
@@ -779,69 +644,24 @@ case class DeltaSumAgg(
     }
     buf
   }
-  override def eval(buf: DeltaSumBuf): Any = buf.sum
-
-  override def serialize(buf: DeltaSumBuf): Array[Byte] = {
-    val bb = ByteBuffer.allocate(25)
-    bb.put(if (buf.seen) 1.toByte else 0.toByte)
-    bb.putDouble(buf.first); bb.putDouble(buf.last); bb.putDouble(buf.sum)
-    bb.array()
-  }
-  override def deserialize(bytes: Array[Byte]): DeltaSumBuf = {
-    val bb = ByteBuffer.wrap(bytes)
-    val buf = new DeltaSumBuf
-    buf.seen = bb.get() == 1
-    buf.first = bb.getDouble; buf.last = bb.getDouble; buf.sum = bb.getDouble
-    buf
-  }
-  override def withNewMutableAggBufferOffset(o: Int): DeltaSumAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): DeltaSumAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildInternal(c: Expression): DeltaSumAgg =
-    copy(child = c)
-  override def prettyName: String = "deltaSum"
+  def eval(buf: DeltaSumBuf): Any = buf.sum
 }
 
 final class PairListBuf {
   private[graft] val buf = mutable.ArrayBuffer.empty[(Double, Double)]
 }
 
-private[functions] trait PairCollecting { self: TypedImperativeAggregate[PairListBuf] =>
-  protected def aChild: Expression
-  protected def bChild: Expression
-
-  protected def numOf(e: Expression, row: InternalRow): Option[Double] =
-    e.eval(row) match {
-      case null => None
-      case d: Double => Some(d)
-      case f: Float => Some(f.toDouble)
-      case l: Long => Some(l.toDouble)
-      case i: Int => Some(i.toDouble)
-      case s: Short => Some(s.toDouble)
-      // boolean 0/1 indexes (mannWhitneyUTest(v, cond) — the natural
-      // spelling the t-tests also accept)
-      case b: Boolean => Some(if (b) 1d else 0d)
-      // decimal literals (Spark parses 1.0 as DECIMAL(2,1))
-      case d: org.apache.spark.sql.types.Decimal => Some(d.toDouble)
-      case ts: java.lang.Long => Some(ts.toDouble)
-    }
-
-  override def createAggregationBuffer(): PairListBuf = new PairListBuf
-  override def update(buf: PairListBuf, row: InternalRow): PairListBuf = {
-    for (a <- numOf(aChild, row); b <- numOf(bChild, row)) buf.buf += ((a, b))
-    buf
-  }
-  override def merge(buf: PairListBuf, o: PairListBuf): PairListBuf = {
-    buf.buf ++= o.buf; buf
-  }
-  override def serialize(buf: PairListBuf): Array[Byte] = {
+/** The pairs in collection order, two doubles each. Shared by every
+  * pair-collecting aggregate (the EMA and decays, LTTB, deltaSumTimestamp,
+  * rankCorr, the rank tests). */
+object PairListBuf extends BufCodec[PairListBuf] {
+  def write(buf: PairListBuf): Array[Byte] = {
     val bb = ByteBuffer.allocate(4 + buf.buf.length * 16)
     bb.putInt(buf.buf.length)
     buf.buf.foreach { case (a, b) => bb.putDouble(a); bb.putDouble(b) }
     bb.array()
   }
-  override def deserialize(bytes: Array[Byte]): PairListBuf = {
+  def read(bytes: Array[Byte]): PairListBuf = {
     val bb = ByteBuffer.wrap(bytes)
     val buf = new PairListBuf
     val n = bb.getInt
@@ -849,38 +669,35 @@ private[functions] trait PairCollecting { self: TypedImperativeAggregate[PairLis
     while (i < n) { buf.buf += ((bb.getDouble, bb.getDouble)); i += 1 }
     buf
   }
+
+  /** Collects (a, b) when both are non-NULL ([[Fold.num]]: a TIMESTAMP as
+    * its micros, a BOOLEAN index as 0/1). */
+  def add(buf: PairListBuf, a: Expression, b: Expression, row: InternalRow): PairListBuf = {
+    for (x <- Fold.num(a, row); y <- Fold.num(b, row)) buf.buf += ((x, y))
+    buf
+  }
+  def merge(buf: PairListBuf, o: PairListBuf): PairListBuf = {
+    buf.buf ++= o.buf; buf
+  }
 }
 
 /** CH `deltaSumTimestamp(value, ts)` — the deterministic deltaSum: pairs
   * sort by (ts, value) at eval and positive deltas accumulate in that
   * order, so the result is independent of partitioning. State is
   * group-sized (like medianExact) — the price of exact order recovery. */
-case class DeltaSumTimestampAgg(
-    valueChild: Expression,
-    tsChild: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[PairListBuf] with BinaryLike[Expression]
-  with PairCollecting {
+case class DeltaSumTimestamp() extends FoldSpec[PairListBuf] {
+  def name: String = "deltaSumTimestamp"
+  def accepts: Seq[Arg] = Seq(Fold.numeric, Arg.Is(LongType, IntegerType, ShortType,
+    DoubleType, TimestampType, TimestampNTZType))
+  def dataType(in: Seq[Expression]): DataType = DoubleType
+  def codec: BufCodec[PairListBuf] = PairListBuf
+  def create(): PairListBuf = new PairListBuf
+  // (ts, value) pairs
+  def update(buf: PairListBuf, in: Array[Expression], row: InternalRow): PairListBuf =
+    PairListBuf.add(buf, in(1), in(0), row)
+  def merge(buf: PairListBuf, o: PairListBuf): PairListBuf = PairListBuf.merge(buf, o)
 
-  override def left: Expression = valueChild
-  override def right: Expression = tsChild
-  override protected def aChild: Expression = tsChild
-  override protected def bChild: Expression = valueChild
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (valueChild.dataType, tsChild.dataType) match {
-      case (LongType | IntegerType | ShortType | DoubleType | FloatType,
-            LongType | IntegerType | ShortType | DoubleType | TimestampType | TimestampNTZType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (v, t) => TypeCheckResult.TypeCheckFailure(
-        s"deltaSumTimestamp(value, ts): numeric value + numeric/timestamp ts, " +
-          s"got (${v.simpleString}, ${t.simpleString})")
-    }
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = false
-
-  override def eval(buf: PairListBuf): Any = {
+  def eval(buf: PairListBuf): Any = {
     val sorted = buf.buf.toArray.sortBy(p => (p._1, p._2)) // (ts, value)
     var sum = 0d
     var i = 1
@@ -891,41 +708,20 @@ case class DeltaSumTimestampAgg(
     }
     sum
   }
-
-  override def withNewMutableAggBufferOffset(o: Int): DeltaSumTimestampAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): DeltaSumTimestampAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): DeltaSumTimestampAgg =
-    copy(valueChild = l, tsChild = r)
-  override def prettyName: String = "deltaSumTimestamp"
 }
 
 /** CH `rankCorr(x, y)`: Spearman rank correlation, exact — average ranks
   * on ties, Pearson over the rank pairs (accumulated in sorted order). */
-case class RankCorrAgg(
-    xChild: Expression,
-    yChild: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[PairListBuf] with BinaryLike[Expression]
-  with PairCollecting {
-
-  override def left: Expression = xChild
-  override def right: Expression = yChild
-  override protected def aChild: Expression = xChild
-  override protected def bChild: Expression = yChild
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (xChild.dataType, yChild.dataType) match {
-      case (LongType | IntegerType | ShortType | DoubleType | FloatType,
-            LongType | IntegerType | ShortType | DoubleType | FloatType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (a, b) => TypeCheckResult.TypeCheckFailure(
-        s"rankCorr: numeric inputs required, got (${a.simpleString}, ${b.simpleString})")
-    }
-  override def dataType: DataType = DoubleType
+case class RankCorr() extends FoldSpec[PairListBuf] {
+  def name: String = "rankCorr"
+  def accepts: Seq[Arg] = Seq(Fold.numeric)
+  def dataType(in: Seq[Expression]): DataType = DoubleType
   override def nullable: Boolean = true
+  def codec: BufCodec[PairListBuf] = PairListBuf
+  def create(): PairListBuf = new PairListBuf
+  def update(buf: PairListBuf, in: Array[Expression], row: InternalRow): PairListBuf =
+    PairListBuf.add(buf, in(0), in(1), row)
+  def merge(buf: PairListBuf, o: PairListBuf): PairListBuf = PairListBuf.merge(buf, o)
 
   /** average-rank transform (ties share the mean of their positions). */
   private def ranks(vs: Array[Double]): Array[Double] = {
@@ -943,7 +739,7 @@ case class RankCorrAgg(
     out
   }
 
-  override def eval(buf: PairListBuf): Any = {
+  def eval(buf: PairListBuf): Any = {
     val n = buf.buf.length
     if (n < 2) return null
     // deterministic processing order
@@ -963,14 +759,6 @@ case class RankCorrAgg(
     }
     if (vx == 0d || vy == 0d) null else cov / math.sqrt(vx * vy)
   }
-
-  override def withNewMutableAggBufferOffset(o: Int): RankCorrAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): RankCorrAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): RankCorrAgg =
-    copy(xChild = l, yChild = r)
-  override def prettyName: String = "rankCorr"
 }
 
 // ---------------------------------------------------------------------------
@@ -998,77 +786,16 @@ final class IntervalBuf {
   }
 }
 
-/** CH `intervalLengthSum(start, end)`: total length of the union of the
-  * group's [start, end] segments (overlaps counted once, adjacent
-  * segments merge, start > end rows ignored). State is the compacted
-  * disjoint-island list — O(islands), not O(rows). Integral inputs
-  * return BIGINT (CH UInt64), floats return DOUBLE (CH Float64). */
-case class IntervalLengthSumAgg(
-    startChild: Expression,
-    endChild: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[IntervalBuf] with BinaryLike[Expression] {
-
-  override def left: Expression = startChild
-  override def right: Expression = endChild
-
-  private val isLong = (startChild.dataType, endChild.dataType) match {
-    case (LongType | IntegerType | ShortType, LongType | IntegerType | ShortType) => true
-    case _ => false
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (startChild.dataType, endChild.dataType) match {
-      case (LongType | IntegerType | ShortType | DoubleType | FloatType,
-            LongType | IntegerType | ShortType | DoubleType | FloatType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (a, b) => TypeCheckResult.TypeCheckFailure(
-        s"intervalLengthSum: numeric bounds required, got (${a.simpleString}, ${b.simpleString})")
-    }
-  override def dataType: DataType = if (isLong) LongType else DoubleType
-  override def nullable: Boolean = false
-  override def createAggregationBuffer(): IntervalBuf = new IntervalBuf
-
-  private def num(e: Expression, row: InternalRow): Option[Double] =
-    e.eval(row) match {
-      case null => None
-      case d: Double => Some(d)
-      case f: Float => Some(f.toDouble)
-      case l: Long => Some(l.toDouble)
-      case i: Int => Some(i.toDouble)
-      case s: Short => Some(s.toDouble)
-    }
-
-  override def update(buf: IntervalBuf, row: InternalRow): IntervalBuf = {
-    for (s <- num(startChild, row); e <- num(endChild, row)) {
-      if (s <= e) {
-        buf.segs += ((s, e))
-        if (buf.segs.length >= 256) buf.compact()
-      }
-    }
-    buf
-  }
-  override def merge(buf: IntervalBuf, o: IntervalBuf): IntervalBuf = {
-    buf.segs ++= o.segs
-    buf.compact()
-    buf
-  }
-  override def eval(buf: IntervalBuf): Any = {
-    buf.compact()
-    var total = 0d
-    buf.segs.foreach { case (s, e) => total += e - s }
-    if (isLong) total.toLong else total
-  }
-
-  override def serialize(buf: IntervalBuf): Array[Byte] = {
+/** The disjoint islands after compaction, (start, end) doubles each. */
+object IntervalBuf extends BufCodec[IntervalBuf] {
+  def write(buf: IntervalBuf): Array[Byte] = {
     buf.compact()
     val bb = ByteBuffer.allocate(4 + buf.segs.length * 16)
     bb.putInt(buf.segs.length)
     buf.segs.foreach { case (s, e) => bb.putDouble(s); bb.putDouble(e) }
     bb.array()
   }
-  override def deserialize(bytes: Array[Byte]): IntervalBuf = {
+  def read(bytes: Array[Byte]): IntervalBuf = {
     val bb = ByteBuffer.wrap(bytes)
     val buf = new IntervalBuf
     val n = bb.getInt
@@ -1076,13 +803,40 @@ case class IntervalLengthSumAgg(
     while (i < n) { buf.segs += ((bb.getDouble, bb.getDouble)); i += 1 }
     buf
   }
-  override def withNewMutableAggBufferOffset(o: Int): IntervalLengthSumAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): IntervalLengthSumAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): IntervalLengthSumAgg =
-    copy(startChild = l, endChild = r)
-  override def prettyName: String = "intervalLengthSum"
+}
+
+/** CH `intervalLengthSum(start, end)`: total length of the union of the
+  * group's [start, end] segments (overlaps counted once, adjacent
+  * segments merge, start > end rows ignored). State is the compacted
+  * disjoint-island list — O(islands), not O(rows). Integral inputs
+  * return BIGINT (CH UInt64), floats return DOUBLE (CH Float64). */
+case class IntervalLengthSum(isLong: Boolean) extends FoldSpec[IntervalBuf] {
+  def name: String = "intervalLengthSum"
+  def accepts: Seq[Arg] = Seq(Fold.numeric)
+  def dataType(in: Seq[Expression]): DataType = if (isLong) LongType else DoubleType
+  def codec: BufCodec[IntervalBuf] = IntervalBuf
+  def create(): IntervalBuf = new IntervalBuf
+
+  def update(buf: IntervalBuf, in: Array[Expression], row: InternalRow): IntervalBuf = {
+    for (s <- Fold.num(in(0), row); e <- Fold.num(in(1), row)) {
+      if (s <= e) {
+        buf.segs += ((s, e))
+        if (buf.segs.length >= 256) buf.compact()
+      }
+    }
+    buf
+  }
+  def merge(buf: IntervalBuf, o: IntervalBuf): IntervalBuf = {
+    buf.segs ++= o.segs
+    buf.compact()
+    buf
+  }
+  def eval(buf: IntervalBuf): Any = {
+    buf.compact()
+    var total = 0d
+    buf.segs.foreach { case (s, e) => total += e - s }
+    if (isLong) total.toLong else total
+  }
 }
 
 // ---------------------------------------------------------------------------
@@ -1220,59 +974,64 @@ final class TTestBuf {
   }
 }
 
+/** (n, mean, M2) for each of the first `groups` samples. */
+case class TTestCodec(groups: Int) extends BufCodec[TTestBuf] {
+  def write(buf: TTestBuf): Array[Byte] = {
+    val bb = ByteBuffer.allocate(24 * groups)
+    var g = 0
+    while (g < groups) {
+      bb.putLong(buf.n(g)); bb.putDouble(buf.mean(g)); bb.putDouble(buf.m2(g))
+      g += 1
+    }
+    bb.array()
+  }
+  def read(bytes: Array[Byte]): TTestBuf = {
+    val bb = ByteBuffer.wrap(bytes)
+    val buf = new TTestBuf
+    var g = 0
+    while (g < groups) {
+      buf.n(g) = bb.getLong; buf.mean(g) = bb.getDouble; buf.m2(g) = bb.getDouble
+      g += 1
+    }
+    buf
+  }
+}
+
+object TTestBuf {
+  val one: BufCodec[TTestBuf] = TTestCodec(1)
+  val two: BufCodec[TTestBuf] = TTestCodec(2)
+
+  /** A 0/1 sample index: a boolean, or an integral (non-zero = 1). */
+  def index(v: Any): Int = v match {
+    case b: Boolean => if (b) 1 else 0
+    case l: Long => if (l != 0) 1 else 0
+    case i: Int => if (i != 0) 1 else 0
+    case s: Short => if (s != 0) 1 else 0
+  }
+}
+
 /** CH `studentTTest(value, index)` / `welchTTest(value, index)`:
   * two-sample location tests over 0/1-indexed samples. O(1) Welford
   * state per group, exact merge; returns (t_statistic, p_value). */
-case class TTestAgg(
-    valueChild: Expression,
-    indexChild: Expression,
-    welch: Boolean,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[TTestBuf] with BinaryLike[Expression] {
-
-  override def left: Expression = valueChild
-  override def right: Expression = indexChild
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (valueChild.dataType, indexChild.dataType) match {
-      case (LongType | IntegerType | ShortType | DoubleType | FloatType,
-            LongType | IntegerType | ShortType | BooleanType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (v, i) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName(value, index): numeric value + 0/1 index, " +
-          s"got (${v.simpleString}, ${i.simpleString})")
-    }
-
-  override def dataType: DataType = StructType(Seq(
+case class TTest(welch: Boolean) extends FoldSpec[TTestBuf] {
+  def name: String = if (welch) "welchTTest" else "studentTTest"
+  def accepts: Seq[Arg] = Seq(Fold.numeric, Arg.Is(LongType, IntegerType, ShortType, BooleanType))
+  def dataType(in: Seq[Expression]): DataType = StructType(Seq(
     StructField("t_statistic", DoubleType, nullable = true),
     StructField("p_value", DoubleType, nullable = true)))
-  override def nullable: Boolean = false
-  override def createAggregationBuffer(): TTestBuf = new TTestBuf
+  def codec: BufCodec[TTestBuf] = TTestBuf.two
+  def create(): TTestBuf = new TTestBuf
 
-  private def numV(row: InternalRow): Option[Double] = valueChild.eval(row) match {
-    case null => None
-    case d: Double => Some(d)
-    case f: Float => Some(f.toDouble)
-    case l: Long => Some(l.toDouble)
-    case i: Int => Some(i.toDouble)
-    case s: Short => Some(s.toDouble)
-  }
-  private def groupOf(row: InternalRow): Option[Int] = indexChild.eval(row) match {
-    case null => None
-    case b: Boolean => Some(if (b) 1 else 0)
-    case l: Long => Some(if (l != 0) 1 else 0)
-    case i: Int => Some(if (i != 0) 1 else 0)
-    case s: Short => Some(if (s != 0) 1 else 0)
-  }
-
-  override def update(buf: TTestBuf, row: InternalRow): TTestBuf = {
-    for (v <- numV(row); g <- groupOf(row)) buf.add(g, v)
+  def update(buf: TTestBuf, in: Array[Expression], row: InternalRow): TTestBuf = {
+    for (v <- Fold.num(in(0), row)) {
+      val g = in(1).eval(row)
+      if (g != null) buf.add(TTestBuf.index(g), v)
+    }
     buf
   }
-  override def merge(buf: TTestBuf, o: TTestBuf): TTestBuf = { buf.mergeFrom(o); buf }
+  def merge(buf: TTestBuf, o: TTestBuf): TTestBuf = { buf.mergeFrom(o); buf }
 
-  override def eval(buf: TTestBuf): Any = {
+  def eval(buf: TTestBuf): Any = {
     val n0 = buf.n(0).toDouble; val n1 = buf.n(1).toDouble
     if (n0 < 2 || n1 < 2) return InternalRow(null, null)
     val diff = buf.mean(0) - buf.mean(1)
@@ -1290,58 +1049,25 @@ case class TTestAgg(
       }
     InternalRow(t, StatMath.studentP(t, df))
   }
-
-  override def serialize(buf: TTestBuf): Array[Byte] = {
-    val bb = ByteBuffer.allocate(48)
-    var g = 0
-    while (g < 2) {
-      bb.putLong(buf.n(g)); bb.putDouble(buf.mean(g)); bb.putDouble(buf.m2(g))
-      g += 1
-    }
-    bb.array()
-  }
-  override def deserialize(bytes: Array[Byte]): TTestBuf = {
-    val bb = ByteBuffer.wrap(bytes)
-    val buf = new TTestBuf
-    var g = 0
-    while (g < 2) {
-      buf.n(g) = bb.getLong; buf.mean(g) = bb.getDouble; buf.m2(g) = bb.getDouble
-      g += 1
-    }
-    buf
-  }
-  override def withNewMutableAggBufferOffset(o: Int): TTestAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): TTestAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): TTestAgg =
-    copy(valueChild = l, indexChild = r)
-  override def prettyName: String = if (welch) "welchTTest" else "studentTTest"
 }
 
 /** CH `mannWhitneyUTest(value, index)`: rank-sum U (reported for the
   * smaller side: U = min(U0, U1)) with the tie-corrected normal
   * approximation and continuity correction for the p-value. Collects the
   * group's pairs (rank transforms are per-group-global, like rankCorr). */
-case class MannWhitneyAgg(
-    valueChild: Expression,
-    indexChild: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[PairListBuf] with BinaryLike[Expression]
-  with PairCollecting {
-
-  override def left: Expression = valueChild
-  override def right: Expression = indexChild
-  override protected def aChild: Expression = valueChild
-  override protected def bChild: Expression = indexChild
-
-  override def dataType: DataType = StructType(Seq(
+case class MannWhitney() extends FoldSpec[PairListBuf] {
+  def name: String = "mannWhitneyUTest"
+  def accepts: Seq[Arg] = Seq(Arg.AnyType)
+  def dataType(in: Seq[Expression]): DataType = StructType(Seq(
     StructField("u_statistic", DoubleType, nullable = true),
     StructField("p_value", DoubleType, nullable = true)))
-  override def nullable: Boolean = false
+  def codec: BufCodec[PairListBuf] = PairListBuf
+  def create(): PairListBuf = new PairListBuf
+  def update(buf: PairListBuf, in: Array[Expression], row: InternalRow): PairListBuf =
+    PairListBuf.add(buf, in(0), in(1), row)
+  def merge(buf: PairListBuf, o: PairListBuf): PairListBuf = PairListBuf.merge(buf, o)
 
-  override def eval(buf: PairListBuf): Any = {
+  def eval(buf: PairListBuf): Any = {
     val pairs = buf.buf.toArray.sortBy(_._1)
     val n = pairs.length
     val n1 = pairs.count(_._2 != 0d).toDouble
@@ -1374,39 +1100,25 @@ case class MannWhitneyAgg(
     val z = (u - mu + 0.5) / math.sqrt(sigma2) // continuity toward the mean
     InternalRow(u, StatMath.normalTwoSidedP(z))
   }
-
-  override def withNewMutableAggBufferOffset(o: Int): MannWhitneyAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): MannWhitneyAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): MannWhitneyAgg =
-    copy(valueChild = l, indexChild = r)
-  override def prettyName: String = "mannWhitneyUTest"
 }
 
 /** CH `kolmogorovSmirnovTest(value, index)`: two-sample KS — D is the
   * max ECDF gap (ties consumed before evaluating, both samples), p the
   * asymptotic Kolmogorov tail with the small-sample correction
   * λ = (√ne + 0.12 + 0.11/√ne)·D. Collects the pooled sample. */
-case class KolmogorovSmirnovAgg(
-    valueChild: Expression,
-    indexChild: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[PairListBuf] with BinaryLike[Expression]
-  with PairCollecting {
-
-  override def left: Expression = valueChild
-  override def right: Expression = indexChild
-  override protected def aChild: Expression = valueChild
-  override protected def bChild: Expression = indexChild
-
-  override def dataType: DataType = StructType(Seq(
+case class KolmogorovSmirnov() extends FoldSpec[PairListBuf] {
+  def name: String = "kolmogorovSmirnovTest"
+  def accepts: Seq[Arg] = Seq(Arg.AnyType)
+  def dataType(in: Seq[Expression]): DataType = StructType(Seq(
     StructField("d_statistic", DoubleType, nullable = true),
     StructField("p_value", DoubleType, nullable = true)))
-  override def nullable: Boolean = false
+  def codec: BufCodec[PairListBuf] = PairListBuf
+  def create(): PairListBuf = new PairListBuf
+  def update(buf: PairListBuf, in: Array[Expression], row: InternalRow): PairListBuf =
+    PairListBuf.add(buf, in(0), in(1), row)
+  def merge(buf: PairListBuf, o: PairListBuf): PairListBuf = PairListBuf.merge(buf, o)
 
-  override def eval(buf: PairListBuf): Any = {
+  def eval(buf: PairListBuf): Any = {
     val pairs = buf.buf.toArray.sortBy(_._1)
     val n = pairs.length
     val n1 = pairs.count(_._2 != 0d).toDouble
@@ -1445,63 +1157,35 @@ case class KolmogorovSmirnovAgg(
       }
     InternalRow(d, math.max(0d, math.min(1d, p)))
   }
-
-  override def withNewMutableAggBufferOffset(o: Int): KolmogorovSmirnovAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): KolmogorovSmirnovAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): KolmogorovSmirnovAgg =
-    copy(valueChild = l, indexChild = r)
-  override def prettyName: String = "kolmogorovSmirnovTest"
 }
 
 /** CH `meanZTest(sample, index, pop_var_0, pop_var_1, conf)` in the flat
   * spelling: two-sample z-test with KNOWN population variances —
   * (z, p, ci_low, ci_high) where the CI bounds the mean difference at
   * the given confidence. O(1) Welford state (means only matter). */
-case class MeanZTestAgg(
-    valueChild: Expression,
-    indexChild: Expression,
-    var0Child: Expression,
-    var1Child: Expression,
-    confChild: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[TTestBuf] {
-
-  override def children: Seq[Expression] =
-    Seq(valueChild, indexChild, var0Child, var1Child, confChild)
-
-  private lazy val v0 = var0Child.eval(InternalRow.empty).asInstanceOf[Number].doubleValue()
-  private lazy val v1 = var1Child.eval(InternalRow.empty).asInstanceOf[Number].doubleValue()
-  private lazy val conf = confChild.eval(InternalRow.empty).asInstanceOf[Number].doubleValue()
-
-  override def dataType: DataType = StructType(Seq(
+case class MeanZTest(v0: Double, v1: Double, conf: Double) extends FoldSpec[TTestBuf] {
+  def name: String = "meanZTest"
+  def accepts: Seq[Arg] = Seq(Arg.AnyType)
+  def dataType(in: Seq[Expression]): DataType = StructType(Seq(
     StructField("z_statistic", DoubleType, nullable = true),
     StructField("p_value", DoubleType, nullable = true),
     StructField("ci_low", DoubleType, nullable = true),
     StructField("ci_high", DoubleType, nullable = true)))
-  override def nullable: Boolean = false
-  override def createAggregationBuffer(): TTestBuf = new TTestBuf
+  def codec: BufCodec[TTestBuf] = TTestBuf.two
+  def create(): TTestBuf = new TTestBuf
 
-  override def update(buf: TTestBuf, row: InternalRow): TTestBuf = {
-    val v = valueChild.eval(row)
-    val g = indexChild.eval(row)
+  def update(buf: TTestBuf, in: Array[Expression], row: InternalRow): TTestBuf = {
+    val v = in(0).eval(row)
+    val g = in(1).eval(row)
     if (v != null && g != null) {
       val x = StatMath.numToDouble(v)
-      val gi = g match {
-        case b: Boolean => if (b) 1 else 0
-        case l: Long => if (l != 0) 1 else 0
-        case i: Int => if (i != 0) 1 else 0
-        case s: Short => if (s != 0) 1 else 0
-      }
-      buf.add(gi, x)
+      buf.add(TTestBuf.index(g), x)
     }
     buf
   }
-  override def merge(buf: TTestBuf, o: TTestBuf): TTestBuf = { buf.mergeFrom(o); buf }
+  def merge(buf: TTestBuf, o: TTestBuf): TTestBuf = { buf.mergeFrom(o); buf }
 
-  override def eval(buf: TTestBuf): Any = {
+  def eval(buf: TTestBuf): Any = {
     val n0 = buf.n(0).toDouble
     val n1 = buf.n(1).toDouble
     if (n0 < 1 || n1 < 1) return InternalRow(null, null, null, null)
@@ -1512,115 +1196,20 @@ case class MeanZTestAgg(
     val zq = StatMath.probit(1 - (1 - conf) / 2)
     InternalRow(z, p, diff - zq * se, diff + zq * se)
   }
-
-  override def serialize(buf: TTestBuf): Array[Byte] = {
-    val bb = ByteBuffer.allocate(48)
-    var g = 0
-    while (g < 2) {
-      bb.putLong(buf.n(g)); bb.putDouble(buf.mean(g)); bb.putDouble(buf.m2(g))
-      g += 1
-    }
-    bb.array()
-  }
-  override def deserialize(bytes: Array[Byte]): TTestBuf = {
-    val bb = ByteBuffer.wrap(bytes)
-    val buf = new TTestBuf
-    var g = 0
-    while (g < 2) {
-      buf.n(g) = bb.getLong; buf.mean(g) = bb.getDouble; buf.m2(g) = bb.getDouble
-      g += 1
-    }
-    buf
-  }
-  override def withNewMutableAggBufferOffset(o: Int): MeanZTestAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): MeanZTestAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): MeanZTestAgg =
-    copy(valueChild = cs(0), indexChild = cs(1), var0Child = cs(2),
-      var1Child = cs(3), confChild = cs(4))
-  override def prettyName: String = "meanZTest"
 }
 
-/** Bounded distinct collect — CH `groupUniqArray(max_size)(x)` with the
-  * deterministic refinement "the SORTED first max_size distinct values":
-  * per-group state holds AT MOST max_size elements (a candidate only
-  * displaces the current maximum), so high-cardinality columns cannot
-  * blow the aggregation buffer the way an unbounded collect_set would. */
-case class BoundedDistinctAgg(
-    child: Expression,
-    capChild: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[mutable.TreeSet[String]]
-  with BinaryLike[Expression] with StringKeyed {
-
-  override def left: Expression = child
-  override def right: Expression = capChild
-
-  private lazy val cap: Int = capChild.eval(InternalRow.empty) match {
-    case n: Number => math.max(1, n.intValue())
-    case other => throw new IllegalArgumentException(
-      s"groupUniqArrayCapped: max_size must be an int literal, got $other")
-  }
-
-  private val stringIn = child.dataType == StringType
-  private val longIn = child.dataType match {
-    case LongType | IntegerType | ShortType => true
-    case _ => false
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType | LongType | IntegerType | ShortType
-      if capChild.foldable => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"groupUniqArrayCapped(x, max_size): string/integral x, got ${t.simpleString}")
-  }
-  override def dataType: DataType =
-    ArrayType(if (longIn) LongType else StringType, containsNull = false)
-  override def nullable: Boolean = false
-
-  // keys ride their canonical string form; numeric order is restored by
-  // a numeric-aware ordering so 9 < 10 for integral inputs
-  private implicit val ord: Ordering[String] =
-    if (longIn) Ordering.by[String, Long](_.toLong) else Ordering.String
-
-  override def createAggregationBuffer(): mutable.TreeSet[String] =
-    mutable.TreeSet.empty[String](ord)
-
-  private def offer(buf: mutable.TreeSet[String], k: String): Unit = {
-    if (buf.size < cap) buf.add(k): Unit
-    else if (ord.lt(k, buf.last) && !buf.contains(k)) {
-      buf.remove(buf.last): Unit
-      buf.add(k): Unit
-    }
-  }
-
-  override def update(buf: mutable.TreeSet[String], row: InternalRow): mutable.TreeSet[String] = {
-    val k = keyOf(child, row)
-    if (k != null) offer(buf, k)
-    buf
-  }
-  override def merge(buf: mutable.TreeSet[String], o: mutable.TreeSet[String]): mutable.TreeSet[String] = {
-    o.foreach(offer(buf, _))
-    buf
-  }
-  override def eval(buf: mutable.TreeSet[String]): Any =
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      buf.toSeq.map(k =>
-        if (longIn) k.toLong
-        else UTF8String.fromString(k): Any).toArray)
-
-  override def serialize(buf: mutable.TreeSet[String]): Array[Byte] = {
+/** The set in order, UTF-8 strings; read back under the set's ordering. */
+case class SortedStringsCodec(longIn: Boolean) extends BufCodec[mutable.TreeSet[String]] {
+  def write(buf: mutable.TreeSet[String]): Array[Byte] = {
     val enc = buf.toSeq.map(_.getBytes(StandardCharsets.UTF_8))
     val bb = ByteBuffer.allocate(4 + enc.map(_.length + 4).sum)
     bb.putInt(enc.size)
     enc.foreach { b => bb.putInt(b.length); bb.put(b) }
     bb.array()
   }
-  override def deserialize(bytes: Array[Byte]): mutable.TreeSet[String] = {
+  def read(bytes: Array[Byte]): mutable.TreeSet[String] = {
     val bb = ByteBuffer.wrap(bytes)
-    val buf = createAggregationBuffer()
+    val buf = SortedStringsCodec.empty(longIn)
     val n = bb.getInt
     var i = 0
     while (i < n) {
@@ -1630,94 +1219,56 @@ case class BoundedDistinctAgg(
     }
     buf
   }
-  override def withNewMutableAggBufferOffset(o: Int): BoundedDistinctAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): BoundedDistinctAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): BoundedDistinctAgg =
-    copy(child = l, capChild = r)
-  override def prettyName: String = "groupUniqArrayCapped"
 }
 
-/** plural `quantilesExactWeighted(x, w, p1, ..., pn)` — ONE value→Σweight
-  * map per group, one ascending scan reading every level (the singular
-  * form shares the same buffer class and selection rule). */
-case class QuantilesExactWeightedAgg(
-    valueChild: Expression,
-    weightChild: Expression,
-    levelChildren: Seq[Expression],
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[WeightedQuantileBuf] {
+object SortedStringsCodec {
+  // keys ride their canonical string form; numeric order is restored by
+  // a numeric-aware ordering so 9 < 10 for integral inputs
+  def ordering(longIn: Boolean): Ordering[String] =
+    if (longIn) Ordering.by[String, Long](_.toLong) else Ordering.String
+  def empty(longIn: Boolean): mutable.TreeSet[String] =
+    mutable.TreeSet.empty[String](ordering(longIn))
+}
 
-  override def children: Seq[Expression] =
-    Seq(valueChild, weightChild) ++ levelChildren
+/** Bounded distinct collect — CH `groupUniqArray(max_size)(x)` with the
+  * deterministic refinement "the SORTED first max_size distinct values":
+  * per-group state holds AT MOST max_size elements (a candidate only
+  * displaces the current maximum), so high-cardinality columns cannot
+  * blow the aggregation buffer the way an unbounded collect_set would.
+  * `longIn`: an integral input (else STRING). */
+case class BoundedDistinct(cap: Int, longIn: Boolean) extends FoldSpec[mutable.TreeSet[String]] {
+  def name: String = "groupUniqArrayCapped"
+  def accepts: Seq[Arg] = Seq(Arg.Is(StringType, LongType, IntegerType, ShortType), Arg.AnyType)
+  def dataType(in: Seq[Expression]): DataType =
+    ArrayType(if (longIn) LongType else StringType, containsNull = false)
+  @transient lazy val codec: BufCodec[mutable.TreeSet[String]] = SortedStringsCodec(longIn)
 
-  private lazy val levels: Seq[Double] = levelChildren.map(_.eval(InternalRow.empty) match {
-    case n: Number => n.doubleValue()
-    case other => throw new IllegalArgumentException(
-      s"quantilesExactWeighted: levels must be numeric literals, got $other")
-  })
+  @transient private lazy val ord = SortedStringsCodec.ordering(longIn)
+  def create(): mutable.TreeSet[String] = SortedStringsCodec.empty(longIn)
 
-  private val isLong = valueChild.dataType match {
-    case LongType | IntegerType | ShortType => true
-    case _ => false
+  private def offer(buf: mutable.TreeSet[String], k: String): Unit = {
+    if (buf.size < cap) buf.add(k): Unit
+    else if (ord.lt(k, buf.last) && !buf.contains(k)) {
+      buf.remove(buf.last): Unit
+      buf.add(k): Unit
+    }
   }
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (valueChild.dataType, weightChild.dataType) match {
-      case (LongType | IntegerType | ShortType | DoubleType | FloatType,
-            LongType | IntegerType | ShortType) if levelChildren.forall(_.foldable) =>
-        TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        "quantilesExactWeighted(x, w, p1, ...): numeric x, integral w, literal levels")
-    }
-
-  override def dataType: DataType =
-    ArrayType(if (isLong) LongType else DoubleType, containsNull = false)
-  override def nullable: Boolean = true
-  override def createAggregationBuffer(): WeightedQuantileBuf = new WeightedQuantileBuf
-
-  private val single = QuantileExactWeightedAgg(valueChild, weightChild,
-    org.apache.spark.sql.catalyst.expressions.Literal(0.5d))
-
-  override def update(buf: WeightedQuantileBuf, row: InternalRow): WeightedQuantileBuf =
-    single.update(buf, row)
-  override def merge(buf: WeightedQuantileBuf, o: WeightedQuantileBuf): WeightedQuantileBuf =
-    single.merge(buf, o)
-
-  override def eval(buf: WeightedQuantileBuf): Any = {
-    if (buf.m.isEmpty) return null
-    def decode(bits: Long): Double =
-      if (isLong) bits.toDouble else java.lang.Double.longBitsToDouble(bits)
-    val items = buf.m.toArray.sortBy { case (bits, _) => decode(bits) }
-    val total = items.map(_._2).sum
-    val out = levels.map { level =>
-      val threshold = level * total
-      var acc = 0L
-      var i = 0
-      var res = items.last._1
-      var done = false
-      while (i < items.length && !done) {
-        acc += items(i)._2
-        if (acc >= threshold) { res = items(i)._1; done = true }
-        i += 1
-      }
-      if (isLong) res: Any else java.lang.Double.longBitsToDouble(res): Any
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out.toArray)
+  def update(buf: mutable.TreeSet[String], in: Array[Expression],
+      row: InternalRow): mutable.TreeSet[String] = {
+    val k = Fold.key(in(0), row)
+    if (k != null) offer(buf, k)
+    buf
   }
-
-  override def serialize(buf: WeightedQuantileBuf): Array[Byte] = single.serialize(buf)
-  override def deserialize(bytes: Array[Byte]): WeightedQuantileBuf =
-    single.deserialize(bytes)
-  override def withNewMutableAggBufferOffset(o: Int): QuantilesExactWeightedAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): QuantilesExactWeightedAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): QuantilesExactWeightedAgg =
-    copy(valueChild = cs(0), weightChild = cs(1), levelChildren = cs.drop(2))
-  override def prettyName: String = "quantilesExactWeighted"
+  def merge(buf: mutable.TreeSet[String], o: mutable.TreeSet[String]): mutable.TreeSet[String] = {
+    o.foreach(offer(buf, _))
+    buf
+  }
+  def eval(buf: mutable.TreeSet[String]): Any =
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(
+      buf.toSeq.map(k =>
+        if (longIn) k.toLong
+        else UTF8String.fromString(k): Any).toArray)
 }
 
 /** `-State` / `-Merge` combinators for the count-map statistics —
@@ -1726,124 +1277,75 @@ case class QuantilesExactWeightedAgg(
   * uniqCombinedState), `entropyMerge(state)` folds stored partials and
   * finalizes. The same pair exists for quantileExactWeighted (its map is
   * value→Σweight). This is CH's any-aggregate-takes-combinators contract
-  * for the family whose state is a count map. */
-case class CountMapStateAgg(
-    child: Expression,
-    weightChild: Option[Expression],
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[CountMapBuf] with StringKeyed {
+  * for the family whose state is a count map. `weighted`: a second child
+  * is the per-row weight. */
+case class CountMapState(weighted: Boolean) extends FoldSpec[CountMapBuf] {
+  def name: String = if (weighted) "quantileExactWeightedState" else "entropyState"
+  // any type counts; the weighted state's keys must round-trip through
+  // toLong at merge and finalize time — restrict to integral values (the
+  // one-shot quantileExactWeighted's Double path does not persist as a state)
+  def accepts: Seq[Arg] =
+    if (!weighted) Seq(Arg.AnyType)
+    else Seq(Arg.Is(LongType, IntegerType, ShortType))
+  def dataType(in: Seq[Expression]): DataType = BinaryType
+  def codec: BufCodec[CountMapBuf] = CountMapBuf
+  def create(): CountMapBuf = new CountMapBuf
 
-  override def children: Seq[Expression] = child +: weightChild.toSeq
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (weightChild.isEmpty) TypeCheckResult.TypeCheckSuccess // any type counts
-    else (child.dataType, weightChild.get.dataType) match {
-      // the weighted state's keys must round-trip through toLong at merge
-      // and finalize time — restrict to integral values (the one-shot
-      // quantileExactWeighted's Double path does not persist as a state)
-      case (LongType | IntegerType | ShortType, LongType | IntegerType | ShortType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (v, w) => TypeCheckResult.TypeCheckFailure(
-        s"quantileExactWeightedState(x, w): integral x and w required, " +
-          s"got (${v.simpleString}, ${w.simpleString})")
-    }
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def createAggregationBuffer(): CountMapBuf = new CountMapBuf
-
-  override def update(buf: CountMapBuf, row: InternalRow): CountMapBuf = {
-    val k = keyOf(child, row)
+  def update(buf: CountMapBuf, in: Array[Expression], row: InternalRow): CountMapBuf = {
+    val k = Fold.key(in(0), row)
     if (k != null) {
-      val w = weightChild.map(_.eval(row)) match {
-        case None => 1L
-        case Some(null) => 0L
-        case Some(l: java.lang.Long) => l.longValue()
-        case Some(i: java.lang.Integer) => i.longValue()
-        case Some(s: java.lang.Short) => s.longValue()
-        case Some(other) => throw new IllegalArgumentException(
-          s"${prettyName}: integral weight required, got $other")
-      }
+      val w =
+        if (!weighted) 1L
+        else in(1).eval(row) match {
+          case null => 0L
+          case l: java.lang.Long => l.longValue()
+          case i: java.lang.Integer => i.longValue()
+          case s: java.lang.Short => s.longValue()
+          case other => throw new IllegalArgumentException(
+            s"$name: integral weight required, got $other")
+        }
       if (w > 0) buf.add(k, w)
     }
     buf
   }
-  override def merge(buf: CountMapBuf, o: CountMapBuf): CountMapBuf = {
-    o.m.foreach { case (k, c) => buf.add(k, c) }
-    buf
-  }
-  override def eval(buf: CountMapBuf): Any = writeCountMap(buf.m)
-  override def serialize(buf: CountMapBuf): Array[Byte] = writeCountMap(buf.m)
-  override def deserialize(b: Array[Byte]): CountMapBuf = {
-    val buf = new CountMapBuf; readCountMap(b, buf); buf
-  }
-  override def withNewMutableAggBufferOffset(o: Int): CountMapStateAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): CountMapStateAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): CountMapStateAgg =
-    copy(child = cs(0), weightChild = if (cs.length >= 2) Some(cs(1)) else None)
-  override def prettyName: String =
-    if (weightChild.isDefined) "quantileExactWeightedState" else "entropyState"
+  def merge(buf: CountMapBuf, o: CountMapBuf): CountMapBuf = CountMapBuf.merge(buf, o)
+  def eval(buf: CountMapBuf): Any = CountMapBuf.write(buf)
 }
 
-/** folds stored count-map partials and finalizes the named statistic. */
-case class CountMapMergeAgg(
-    child: Expression,
-    stat: String, // "entropy" | "quantile:<level>"
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[CountMapBuf] with UnaryLike[Expression]
-  with StringKeyed {
+/** folds stored count-map partials and finalizes the chosen statistic. */
+case class CountMapMerge(stat: CountMapMerge.Finish) extends FoldSpec[CountMapBuf] {
+  def name: String = stat.name
+  def accepts: Seq[Arg] = Seq(Arg.Named(Arg.Is(BinaryType), "a serialized count-map state"))
+  def dataType(in: Seq[Expression]): DataType = stat.dataType
+  override def nullable: Boolean = stat.nullable
+  def codec: BufCodec[CountMapBuf] = CountMapBuf
+  def create(): CountMapBuf = new CountMapBuf
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a serialized count-map state, got ${t.simpleString}")
-  }
-  override def dataType: DataType = stat match {
-    case "entropy" => DoubleType
-    case "state" => BinaryType
-    case _ => LongType
-  }
-  override def nullable: Boolean = stat != "entropy" && stat != "state"
-  override def createAggregationBuffer(): CountMapBuf = new CountMapBuf
-
-  override def update(buf: CountMapBuf, row: InternalRow): CountMapBuf = {
-    val v = child.eval(row)
-    if (v != null) readCountMap(v.asInstanceOf[Array[Byte]], buf)
+  def update(buf: CountMapBuf, in: Array[Expression], row: InternalRow): CountMapBuf = {
+    val v = in(0).eval(row)
+    if (v != null) CountMapBuf.readInto(v.asInstanceOf[Array[Byte]], buf)
     buf
   }
-  override def merge(buf: CountMapBuf, o: CountMapBuf): CountMapBuf = {
-    o.m.foreach { case (k, c) => buf.add(k, c) }
-    buf
-  }
-  override def eval(buf: CountMapBuf): Any = stat match {
-    case "entropy" => StatAggregates.shannon(buf.m.values.toArray)
-    case "state" => writeCountMap(buf.m) // partial-to-partial merge
-    case q if q.startsWith("quantile:") =>
+  def merge(buf: CountMapBuf, o: CountMapBuf): CountMapBuf = CountMapBuf.merge(buf, o)
+  def eval(buf: CountMapBuf): Any = stat match {
+    case CountMapMerge.Entropy => StatAggregates.shannon(buf.m.values.toArray)
+    case CountMapMerge.State => CountMapBuf.write(buf) // partial-to-partial merge
+    case CountMapMerge.Quantile(level) =>
       if (buf.m.isEmpty) null
       else StatAggregates.weightedSelect(
         // count-map keys are the canonical string form of LONG values
-        // (CountMapStateAgg's weighted mode type-checks that)
+        // (CountMapState's weighted mode type-checks that)
         buf.m.toSeq.map { case (k, w) => (k.toLong, w) },
-        q.stripPrefix("quantile:").toDouble)
-    case other => throw new IllegalStateException(s"unknown stat $other")
+        level)
   }
+}
 
-  override def serialize(buf: CountMapBuf): Array[Byte] = writeCountMap(buf.m)
-  override def deserialize(b: Array[Byte]): CountMapBuf = {
-    val buf = new CountMapBuf; readCountMap(b, buf); buf
-  }
-  override def withNewMutableAggBufferOffset(o: Int): CountMapMergeAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): CountMapMergeAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildInternal(c: Expression): CountMapMergeAgg =
-    copy(child = c)
-  override def prettyName: String = stat match {
-    case "entropy" => "entropyMerge"
-    case "state" => "countMapMergeState"
-    case _ => "quantileExactWeightedMerge"
-  }
+object CountMapMerge {
+  /** What the merged map finalizes to, chosen when the table entry is built. */
+  sealed abstract class Finish(val name: String, val dataType: DataType, val nullable: Boolean)
+    extends Serializable
+  case object Entropy extends Finish("entropyMerge", DoubleType, false)
+  /** the merged map itself: a partial-to-partial merge */
+  case object State extends Finish("countMapMergeState", BinaryType, false)
+  case class Quantile(level: Double) extends Finish("quantileExactWeightedMerge", LongType, true)
 }

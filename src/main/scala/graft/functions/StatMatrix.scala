@@ -6,10 +6,7 @@ import java.nio.charset.StandardCharsets
 import scala.collection.mutable
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -24,7 +21,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *    100 TB regime); O(k²) doubles per group, map-side combined.
   *  - `studentTTestOneSample(value, population_mean)` — one-sample
   *    location t-test, (t_statistic, p_value) like the two-sample
-  *    [[TTestAgg]]; O(1) Welford state.
+  *    [[TTest]]; O(1) Welford state.
   *  - `groupArrayInsertAt(x, pos[, default[, size]])` (flat spelling of
   *    CH's `groupArrayInsertAt(default, size)(x, pos)`) — place each
   *    value at its position, `default` (or the type default) filling
@@ -33,26 +30,46 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object StatMatrix {
 
+  /** The statistic of `corrMatrix` / `covarSampMatrix` /
+    * `covarPopMatrix`, chosen when the table entry is built. */
+  sealed abstract class Moment(val name: String) extends Serializable
+  case object Corr extends Moment("corr")
+  case object CovarSamp extends Moment("covarSamp")
+  case object CovarPop extends Moment("covarPop")
+
+  private[functions] def matrix(mode: Moment, es: Seq[Expression]): Expression =
+    Fold.agg(CoMoment(mode, es.length), es)
+
   val functions = FunctionTable.define(this) { f =>
-    for (mode <- Seq("corr", "covarSamp", "covarPop"))
-      f(s"${mode}Matrix") { es =>
-        CoMomentMatrixAgg(es, mode).toAggregateExpression()
-      }
+    for (mode <- Seq(Corr, CovarSamp, CovarPop))
+      f(s"${mode.name}Matrix")(matrix(mode, _))
     f("studentTTestOneSample") { es =>
-      TTestOneSampleAgg(es(0), es(1)).toAggregateExpression()
+      Fold.agg(TTestOneSample(
+        Fold.number(es(1), "studentTTestOneSample: population mean")), es.take(2))
     }
     f("groupArrayInsertAt") { es =>
-      GroupArrayInsertAtAgg(es(0), es(1),
-        if (es.length >= 3) Some(es(2)) else None,
-        if (es.length >= 4) Some(es(3)) else None).toAggregateExpression()
+      val lane = es(0).dataType match {
+        case StringType => StringType
+        case DoubleType | FloatType => DoubleType
+        case _ => LongType
+      }
+      val default = es.lift(2).map(Fold.literal(_, "groupArrayInsertAt: default"))
+      val size = es.lift(3).map(Fold.literal(_, "groupArrayInsertAt: size") match {
+        case n: Number => n.intValue()
+        case other => throw new IllegalArgumentException(
+          s"groupArrayInsertAt: size must be an integer literal, got $other")
+      })
+      Fold.agg(GroupArrayInsertAt(lane, GroupArrayInsertAt.defaultIn(lane, default), size),
+        es.take(4))
     }
-    f("sumKahan") { es => KahanSumAgg(es.head).toAggregateExpression() }
-    f("analysisOfVariance") { es =>
-      AnovaAgg(es(0), es(1)).toAggregateExpression()
+    f("sumKahan") { es =>
+      Fold.agg(KahanSum(Fold.integral.accepts(es.head.dataType)),
+        es.take(1))
     }
-    f("anova") { es => AnovaAgg(es(0), es(1)).toAggregateExpression() }
+    for (name <- Seq("analysisOfVariance", "anova"))
+      f(name) { es => Fold.agg(Anova(es(1).dataType == StringType), es.take(2)) }
     f("groupArrayIntersect") { es =>
-      GroupArrayIntersectAgg(es.head).toAggregateExpression()
+      Fold.agg(GroupArrayIntersect(Kernel.elementType(es.head)), es.take(1))
     }
   }
 }
@@ -65,89 +82,16 @@ final class ArrayIntersectBuf {
 
 /** CH `groupArrayIntersect(arr)`: the intersection of all the group's
   * arrays (per-row duplicates count once). Associative + commutative
-  * null-seeded fold like [[BitmapFoldAggregate]]'s AND; the state only
+  * null-seeded fold like [[BitmapFold]]'s AND; the state only
   * ever SHRINKS after the seed, so it is bounded by the first row's
   * array. Output sorted ascending for partition-order determinism (CH
   * leaves the order unspecified). Long/Double/String element lanes.
   */
-case class GroupArrayIntersectAgg(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[ArrayIntersectBuf]
-  with UnaryLike[Expression] {
-
-  // hoisted: these pattern-match on dataType and sit inside per-element
-  // hot loops
-  private lazy val elem: DataType = child.dataType match {
-    case ArrayType(et, _) => et
-    case _ => NullType
-  }
-  private lazy val isString = elem == StringType
-  private lazy val isDouble = elem match {
-    case DoubleType | FloatType => true
-    case _ => false
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType | IntegerType | ShortType | DoubleType | FloatType
-                   | StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName: array of long/double/string required (cast other " +
-        s"element types), got ${t.simpleString}")
-  }
-  private def outElem: DataType =
-    if (isString) StringType else if (isDouble) DoubleType else LongType
-  override def dataType: DataType = ArrayType(outElem, containsNull = false)
-  override def nullable: Boolean = false
-  override def createAggregationBuffer(): ArrayIntersectBuf = new ArrayIntersectBuf
-
-  private def norm(v: Any): Any = v match {
-    case u: UTF8String => u.toString
-    case f: Float => f.toDouble
-    case i: Int => i.toLong
-    case s: Short => s.toLong
-    case other => other
-  }
-
-  override def update(buf: ArrayIntersectBuf, row: InternalRow): ArrayIntersectBuf = {
-    // once annihilated the intersection can never grow — skip the
-    // per-row set build entirely
-    if (buf.s != null && buf.s.isEmpty) return buf
-    val a = child.eval(row)
-    if (a != null) {
-      val ad = a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-      val incoming = mutable.HashSet.empty[Any]
-      var i = 0
-      while (i < ad.numElements()) {
-        if (!ad.isNullAt(i)) incoming += norm(ad.get(i, elem))
-        i += 1
-      }
-      if (buf.s == null) buf.s = incoming
-      else buf.s.filterInPlace(incoming.contains)
-    }
-    buf
-  }
-  override def merge(buf: ArrayIntersectBuf, o: ArrayIntersectBuf): ArrayIntersectBuf = {
-    if (o.s != null) {
-      if (buf.s == null) buf.s = o.s
-      else buf.s.filterInPlace(o.s.contains)
-    }
-    buf
-  }
-
-  override def eval(buf: ArrayIntersectBuf): Any = {
-    if (buf.s == null) return new GenericArrayData(Array.empty[Any])
-    val sorted: Array[Any] =
-      if (isString) buf.s.toArray.map(_.asInstanceOf[String]).sorted
-        .map(s => UTF8String.fromString(s): Any)
-      else if (isDouble) buf.s.toArray.map(_.asInstanceOf[Double]).sorted
-        .map(d => d: Any)
-      else buf.s.toArray.map(_.asInstanceOf[Long]).sorted.map(l => l: Any)
-    new GenericArrayData(sorted)
-  }
-
-  override def serialize(buf: ArrayIntersectBuf): Array[Byte] = {
+/** A flag byte (0 = unseeded), then the set's count and its values in the
+  * lane of the plan's element type. */
+case class ArrayIntersectCodec(isString: Boolean, isDouble: Boolean)
+    extends BufCodec[ArrayIntersectBuf] {
+  def write(buf: ArrayIntersectBuf): Array[Byte] = {
     if (buf.s == null) return Array[Byte](0)
     val entries = buf.s.toArray
     val strBytes = entries.map {
@@ -167,7 +111,7 @@ case class GroupArrayIntersectAgg(
     }
     bb.array()
   }
-  override def deserialize(bytes: Array[Byte]): ArrayIntersectBuf = {
+  def read(bytes: Array[Byte]): ArrayIntersectBuf = {
     val buf = new ArrayIntersectBuf
     val bb = ByteBuffer.wrap(bytes)
     if (bb.get() == 1.toByte) {
@@ -185,13 +129,71 @@ case class GroupArrayIntersectAgg(
     }
     buf
   }
-  override def withNewMutableAggBufferOffset(o: Int): GroupArrayIntersectAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): GroupArrayIntersectAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildInternal(c: Expression): GroupArrayIntersectAgg =
-    copy(child = c)
-  override def prettyName: String = "groupArrayIntersect"
+}
+
+/** `elem`: the input array's element type. */
+case class GroupArrayIntersect(elem: DataType) extends FoldSpec[ArrayIntersectBuf] {
+  // hoisted: these pattern-match on dataType and sit inside per-element
+  // hot loops
+  private val isString = elem == StringType
+  private val isDouble = elem match {
+    case DoubleType | FloatType => true
+    case _ => false
+  }
+
+  def name: String = "groupArrayIntersect"
+  def accepts: Seq[Arg] = Seq(Arg.ArrayOf(Arg.Is(LongType, IntegerType, ShortType,
+    DoubleType, FloatType, StringType)))
+  private def outElem: DataType =
+    if (isString) StringType else if (isDouble) DoubleType else LongType
+  def dataType(in: Seq[Expression]): DataType = ArrayType(outElem, containsNull = false)
+  @transient lazy val codec: BufCodec[ArrayIntersectBuf] = ArrayIntersectCodec(isString, isDouble)
+  def create(): ArrayIntersectBuf = new ArrayIntersectBuf
+
+  private def norm(v: Any): Any = v match {
+    case u: UTF8String => u.toString
+    case f: Float => f.toDouble
+    case i: Int => i.toLong
+    case s: Short => s.toLong
+    case other => other
+  }
+
+  def update(buf: ArrayIntersectBuf, in: Array[Expression], row: InternalRow): ArrayIntersectBuf = {
+    // once annihilated the intersection can never grow — skip the
+    // per-row set build entirely
+    if (buf.s != null && buf.s.isEmpty) return buf
+    val a = in(0).eval(row)
+    if (a != null) {
+      val ad = a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+      val incoming = mutable.HashSet.empty[Any]
+      var i = 0
+      while (i < ad.numElements()) {
+        if (!ad.isNullAt(i)) incoming += norm(ad.get(i, elem))
+        i += 1
+      }
+      if (buf.s == null) buf.s = incoming
+      else buf.s.filterInPlace(incoming.contains)
+    }
+    buf
+  }
+  def merge(buf: ArrayIntersectBuf, o: ArrayIntersectBuf): ArrayIntersectBuf = {
+    if (o.s != null) {
+      if (buf.s == null) buf.s = o.s
+      else buf.s.filterInPlace(o.s.contains)
+    }
+    buf
+  }
+
+  def eval(buf: ArrayIntersectBuf): Any = {
+    if (buf.s == null) return new GenericArrayData(Array.empty[Any])
+    val sorted: Array[Any] =
+      if (isString) buf.s.toArray.map(_.asInstanceOf[String]).sorted
+        .map(s => UTF8String.fromString(s): Any)
+      else if (isDouble) buf.s.toArray.map(_.asInstanceOf[Double]).sorted
+        .map(d => d: Any)
+      else buf.s.toArray.map(_.asInstanceOf[Long]).sorted.map(l => l: Any)
+    new GenericArrayData(sorted)
+  }
 }
 
 final class AnovaBuf {
@@ -220,6 +222,45 @@ final class AnovaBuf {
   }
 }
 
+/** Groups in map order: the key (long, or UTF-8 string for a STRING group
+  * child — a plan constant, so no per-entry flag), then (n, mean, M2). */
+case class AnovaCodec(isStringGroup: Boolean) extends BufCodec[AnovaBuf] {
+  def write(buf: AnovaBuf): Array[Byte] = {
+    val keyBytes = buf.m.keysIterator.map {
+      case s: String => s.getBytes(StandardCharsets.UTF_8)
+      case _ => null
+    }.toArray
+    val size = 4 + buf.m.size * 24 +
+      (if (isStringGroup) keyBytes.map(4 + _.length).sum else buf.m.size * 8)
+    val bb = ByteBuffer.allocate(size)
+    bb.putInt(buf.m.size)
+    buf.m.iterator.zip(keyBytes.iterator).foreach { case ((g, s), kb) =>
+      g match {
+        case l: Long => bb.putLong(l)
+        case _: String => bb.putInt(kb.length); bb.put(kb)
+      }
+      bb.putDouble(s(0)); bb.putDouble(s(1)); bb.putDouble(s(2))
+    }
+    bb.array()
+  }
+  def read(bytes: Array[Byte]): AnovaBuf = {
+    val bb = ByteBuffer.wrap(bytes)
+    val buf = new AnovaBuf
+    val n = bb.getInt
+    var i = 0
+    while (i < n) {
+      val g: Any =
+        if (isStringGroup) {
+          val kb = new Array[Byte](bb.getInt); bb.get(kb)
+          new String(kb, StandardCharsets.UTF_8)
+        } else bb.getLong
+      buf.m.update(g, Array(bb.getDouble, bb.getDouble, bb.getDouble))
+      i += 1
+    }
+    buf
+  }
+}
+
 /** CH `analysisOfVariance(value, group_index)` (alias `anova`): one-way
   * ANOVA over any number of groups — returns (f_statistic, p_value).
   * State is one Welford triple per group index (O(groups), map-side
@@ -227,31 +268,17 @@ final class AnovaBuf {
   * p-value is the F(k−1, N−k) upper tail via the regularized incomplete
   * beta (shared [[StatMath]] machinery — for 2 groups it equals the
   * two-sided pooled-t p, pinned in the spec). */
-case class AnovaAgg(
-    valueChild: Expression,
-    groupChild: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[AnovaBuf] {
-
-  override def children: Seq[Expression] = Seq(valueChild, groupChild)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (valueChild.dataType, groupChild.dataType) match {
-      case (LongType | IntegerType | ShortType | DoubleType | FloatType,
-            LongType | IntegerType | ShortType | StringType | BooleanType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (v, g) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName(value, group): numeric value + integral/string group, " +
-          s"got (${v.simpleString}, ${g.simpleString})")
-    }
-  override def dataType: DataType = StructType(Seq(
+case class Anova(isStringGroup: Boolean) extends FoldSpec[AnovaBuf] {
+  def name: String = "analysisOfVariance"
+  def accepts: Seq[Arg] = Seq(Fold.numeric,
+    Arg.Is(LongType, IntegerType, ShortType, StringType, BooleanType))
+  def dataType(in: Seq[Expression]): DataType = StructType(Seq(
     StructField("f_statistic", DoubleType, nullable = true),
     StructField("p_value", DoubleType, nullable = true)))
-  override def nullable: Boolean = false
-  override def createAggregationBuffer(): AnovaBuf = new AnovaBuf
+  @transient lazy val codec: BufCodec[AnovaBuf] = AnovaCodec(isStringGroup)
+  def create(): AnovaBuf = new AnovaBuf
 
-  private def groupOf(row: InternalRow): Option[Any] = groupChild.eval(row) match {
+  private def groupOf(e: Expression, row: InternalRow): Option[Any] = e.eval(row) match {
     case null => None
     case l: Long => Some(l)
     case i: Int => Some(i.toLong)
@@ -262,20 +289,20 @@ case class AnovaAgg(
     case u: UTF8String => Some(u.toString)
   }
 
-  override def update(buf: AnovaBuf, row: InternalRow): AnovaBuf = {
-    val v = valueChild.eval(row) match {
+  def update(buf: AnovaBuf, in: Array[Expression], row: InternalRow): AnovaBuf = {
+    val v = in(0).eval(row) match {
       case null => return buf
       case x => StatMath.numToDouble(x)
     }
-    groupOf(row).foreach(g => buf.add(g, v))
+    groupOf(in(1), row).foreach(g => buf.add(g, v))
     buf
   }
-  override def merge(buf: AnovaBuf, o: AnovaBuf): AnovaBuf = {
+  def merge(buf: AnovaBuf, o: AnovaBuf): AnovaBuf = {
     o.m.foreach { case (g, s) => buf.mergeGroup(g, s) }
     buf
   }
 
-  override def eval(buf: AnovaBuf): Any = {
+  def eval(buf: AnovaBuf): Any = {
     val k = buf.m.size
     val bigN = buf.m.valuesIterator.map(_(0)).sum
     if (k < 2 || bigN <= k) return InternalRow(null, null)
@@ -301,52 +328,6 @@ case class AnovaAgg(
     val p = StatMath.betainc(d2 / 2, d1 / 2, d2 / (d2 + d1 * f))
     InternalRow(f, p)
   }
-
-  // the key lane is a plan-constant property of the group child's type,
-  // so the wire format needs no per-entry flag
-  private def isStringGroup = groupChild.dataType == StringType
-
-  override def serialize(buf: AnovaBuf): Array[Byte] = {
-    val keyBytes = buf.m.keysIterator.map {
-      case s: String => s.getBytes(StandardCharsets.UTF_8)
-      case _ => null
-    }.toArray
-    val size = 4 + buf.m.size * 24 +
-      (if (isStringGroup) keyBytes.map(4 + _.length).sum else buf.m.size * 8)
-    val bb = ByteBuffer.allocate(size)
-    bb.putInt(buf.m.size)
-    buf.m.iterator.zip(keyBytes.iterator).foreach { case ((g, s), kb) =>
-      g match {
-        case l: Long => bb.putLong(l)
-        case _: String => bb.putInt(kb.length); bb.put(kb)
-      }
-      bb.putDouble(s(0)); bb.putDouble(s(1)); bb.putDouble(s(2))
-    }
-    bb.array()
-  }
-  override def deserialize(bytes: Array[Byte]): AnovaBuf = {
-    val bb = ByteBuffer.wrap(bytes)
-    val buf = new AnovaBuf
-    val n = bb.getInt
-    var i = 0
-    while (i < n) {
-      val g: Any =
-        if (isStringGroup) {
-          val kb = new Array[Byte](bb.getInt); bb.get(kb)
-          new String(kb, StandardCharsets.UTF_8)
-        } else bb.getLong
-      buf.m.update(g, Array(bb.getDouble, bb.getDouble, bb.getDouble))
-      i += 1
-    }
-    buf
-  }
-  override def withNewMutableAggBufferOffset(o: Int): AnovaAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): AnovaAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): AnovaAgg =
-    copy(valueChild = cs(0), groupChild = cs(1))
-  override def prettyName: String = "analysisOfVariance"
 }
 
 final class KahanBuf {
@@ -357,6 +338,23 @@ final class KahanBuf {
   var n = 0L
 }
 
+/** sum, compensation, long sum, count. */
+object KahanBuf extends BufCodec[KahanBuf] {
+  def write(buf: KahanBuf): Array[Byte] = {
+    val bb = ByteBuffer.allocate(32)
+    bb.putDouble(buf.sum); bb.putDouble(buf.comp)
+    bb.putLong(buf.lsum); bb.putLong(buf.n)
+    bb.array()
+  }
+  def read(bytes: Array[Byte]): KahanBuf = {
+    val bb = ByteBuffer.wrap(bytes)
+    val buf = new KahanBuf
+    buf.sum = bb.getDouble; buf.comp = bb.getDouble
+    buf.lsum = bb.getLong; buf.n = bb.getLong
+    buf
+  }
+}
+
 /** CH `sumKahan(x)`: compensated (Kahan–Babuška/Neumaier) float
   * summation — the running compensation term rides the state, so
   * magnitude-mismatched additions (1e16 + 1.0 − 1e16) keep the small
@@ -365,27 +363,13 @@ final class KahanBuf {
   * Int64 lane instead (compensation can't beat exactness, and routing
   * Longs through Double would LOSE bits past 2^53 — the same contract as
   * groupArrayMovingSum's long lane); result type follows the lane. */
-case class KahanSumAgg(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[KahanBuf]
-  with UnaryLike[Expression] {
-
-  private val isLongIn = child.dataType match {
-    case LongType | IntegerType | ShortType => true
-    case _ => false
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case DoubleType | FloatType | LongType | IntegerType | ShortType =>
-      TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"sumKahan: numeric input required, got ${t.simpleString}")
-  }
-  override def dataType: DataType = if (isLongIn) LongType else DoubleType
+case class KahanSum(isLongIn: Boolean) extends FoldSpec[KahanBuf] {
+  def name: String = "sumKahan"
+  def accepts: Seq[Arg] = Seq(Fold.numeric)
+  def dataType(in: Seq[Expression]): DataType = if (isLongIn) LongType else DoubleType
   override def nullable: Boolean = true
-  override def createAggregationBuffer(): KahanBuf = new KahanBuf
+  def codec: BufCodec[KahanBuf] = KahanBuf
+  def create(): KahanBuf = new KahanBuf
 
   private def kadd(buf: KahanBuf, v: Double): Unit = {
     // Neumaier's variant: robust when the addend exceeds the running sum
@@ -396,8 +380,8 @@ case class KahanSumAgg(
     buf.sum = t
   }
 
-  override def update(buf: KahanBuf, row: InternalRow): KahanBuf = {
-    child.eval(row) match {
+  def update(buf: KahanBuf, in: Array[Expression], row: InternalRow): KahanBuf = {
+    in(0).eval(row) match {
       case null => ()
       case d: Double => kadd(buf, d); buf.n += 1
       case f: Float => kadd(buf, f.toDouble); buf.n += 1
@@ -407,37 +391,16 @@ case class KahanSumAgg(
     }
     buf
   }
-  override def merge(buf: KahanBuf, o: KahanBuf): KahanBuf = {
+  def merge(buf: KahanBuf, o: KahanBuf): KahanBuf = {
     if (isLongIn) buf.lsum += o.lsum
     else { kadd(buf, o.sum); kadd(buf, o.comp) }
     buf.n += o.n
     buf
   }
-  override def eval(buf: KahanBuf): Any =
+  def eval(buf: KahanBuf): Any =
     if (buf.n == 0) null
     else if (isLongIn) buf.lsum
     else buf.sum + buf.comp
-
-  override def serialize(buf: KahanBuf): Array[Byte] = {
-    val bb = ByteBuffer.allocate(32)
-    bb.putDouble(buf.sum); bb.putDouble(buf.comp)
-    bb.putLong(buf.lsum); bb.putLong(buf.n)
-    bb.array()
-  }
-  override def deserialize(bytes: Array[Byte]): KahanBuf = {
-    val bb = ByteBuffer.wrap(bytes)
-    val buf = new KahanBuf
-    buf.sum = bb.getDouble; buf.comp = bb.getDouble
-    buf.lsum = bb.getLong; buf.n = bb.getLong
-    buf
-  }
-  override def withNewMutableAggBufferOffset(o: Int): KahanSumAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): KahanSumAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildInternal(c: Expression): KahanSumAgg =
-    copy(child = c)
-  override def prettyName: String = "sumKahan"
 }
 
 /** Centered co-moment state: n, means, and C[i][j] = Σ(xi−x̄i)(xj−x̄j)
@@ -488,75 +451,9 @@ final class CoMomentBuf(val k: Int) {
   def cAt(i: Int, j: Int): Double = if (i <= j) c(i)(j) else c(j)(i)
 }
 
-case class CoMomentMatrixAgg(
-    children: Seq[Expression],
-    mode: String,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[CoMomentBuf] {
-
-  require(Set("corr", "covarSamp", "covarPop")(mode), s"unknown matrix mode $mode")
-  require(children.nonEmpty, s"$prettyName needs at least one column")
-  private def k = children.length
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (children.forall(_.dataType match {
-      case LongType | IntegerType | ShortType | DoubleType | FloatType => true
-      case _ => false
-    })) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"$prettyName: numeric columns required")
-
-  override def dataType: DataType =
-    ArrayType(ArrayType(DoubleType, containsNull = false), containsNull = false)
-  override def nullable: Boolean = false
-  override def createAggregationBuffer(): CoMomentBuf = new CoMomentBuf(k)
-
-  override def update(buf: CoMomentBuf, row: InternalRow): CoMomentBuf = {
-    val x = new Array[Double](k)
-    var i = 0
-    while (i < k) {
-      children(i).eval(row) match {
-        case null => return buf // CH skips the row if any column is NULL
-        case d: Double => x(i) = d
-        case f: Float => x(i) = f.toDouble
-        case l: Long => x(i) = l.toDouble
-        case n: Int => x(i) = n.toDouble
-        case s: Short => x(i) = s.toDouble
-      }
-      i += 1
-    }
-    buf.add(x)
-    buf
-  }
-  override def merge(buf: CoMomentBuf, o: CoMomentBuf): CoMomentBuf = {
-    buf.mergeFrom(o); buf
-  }
-
-  override def eval(buf: CoMomentBuf): Any = {
-    val rows = new Array[Any](k)
-    var i = 0
-    while (i < k) {
-      val r = new Array[Any](k)
-      var j = 0
-      while (j < k) {
-        r(j) = mode match {
-          case "covarPop" =>
-            if (buf.n < 1) Double.NaN else buf.cAt(i, j) / buf.n
-          case "covarSamp" =>
-            if (buf.n < 2) Double.NaN else buf.cAt(i, j) / (buf.n - 1)
-          case "corr" =>
-            // zero variance (or n<2) divides to NaN, matching CH's nan
-            buf.cAt(i, j) / math.sqrt(buf.cAt(i, i) * buf.cAt(j, j))
-        }
-        j += 1
-      }
-      rows(i) = new GenericArrayData(r)
-      i += 1
-    }
-    new GenericArrayData(rows)
-  }
-
-  override def serialize(buf: CoMomentBuf): Array[Byte] = {
+/** n, the k means, then the upper triangle row by row. */
+case class CoMomentCodec(k: Int) extends BufCodec[CoMomentBuf] {
+  def write(buf: CoMomentBuf): Array[Byte] = {
     val bb = ByteBuffer.allocate(8 + 8 * k + 8 * k * (k + 1) / 2)
     bb.putLong(buf.n)
     var i = 0
@@ -569,7 +466,7 @@ case class CoMomentMatrixAgg(
     }
     bb.array()
   }
-  override def deserialize(bytes: Array[Byte]): CoMomentBuf = {
+  def read(bytes: Array[Byte]): CoMomentBuf = {
     val bb = ByteBuffer.wrap(bytes)
     val buf = new CoMomentBuf(k)
     buf.n = bb.getLong
@@ -583,46 +480,78 @@ case class CoMomentMatrixAgg(
     }
     buf
   }
-  override def withNewMutableAggBufferOffset(o: Int): CoMomentMatrixAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): CoMomentMatrixAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): CoMomentMatrixAgg =
-    copy(children = cs)
-  override def prettyName: String = s"${mode}Matrix"
+}
+
+/** `k`: the number of columns. */
+case class CoMoment(mode: StatMatrix.Moment, k: Int) extends FoldSpec[CoMomentBuf] {
+  require(k >= 1, s"$name needs at least one column")
+
+  def name: String = s"${mode.name}Matrix"
+  def accepts: Seq[Arg] = Seq(Fold.numeric)
+  def dataType(in: Seq[Expression]): DataType =
+    ArrayType(ArrayType(DoubleType, containsNull = false), containsNull = false)
+  @transient lazy val codec: BufCodec[CoMomentBuf] = CoMomentCodec(k)
+  def create(): CoMomentBuf = new CoMomentBuf(k)
+
+  def update(buf: CoMomentBuf, in: Array[Expression], row: InternalRow): CoMomentBuf = {
+    val x = new Array[Double](k)
+    var i = 0
+    while (i < k) {
+      in(i).eval(row) match {
+        case null => return buf // CH skips the row if any column is NULL
+        case d: Double => x(i) = d
+        case f: Float => x(i) = f.toDouble
+        case l: Long => x(i) = l.toDouble
+        case n: Int => x(i) = n.toDouble
+        case s: Short => x(i) = s.toDouble
+      }
+      i += 1
+    }
+    buf.add(x)
+    buf
+  }
+  def merge(buf: CoMomentBuf, o: CoMomentBuf): CoMomentBuf = {
+    buf.mergeFrom(o); buf
+  }
+
+  def eval(buf: CoMomentBuf): Any = {
+    val rows = new Array[Any](k)
+    var i = 0
+    while (i < k) {
+      val r = new Array[Any](k)
+      var j = 0
+      while (j < k) {
+        r(j) = mode match {
+          case StatMatrix.CovarPop =>
+            if (buf.n < 1) Double.NaN else buf.cAt(i, j) / buf.n
+          case StatMatrix.CovarSamp =>
+            if (buf.n < 2) Double.NaN else buf.cAt(i, j) / (buf.n - 1)
+          case StatMatrix.Corr =>
+            // zero variance (or n<2) divides to NaN, matching CH's nan
+            buf.cAt(i, j) / math.sqrt(buf.cAt(i, i) * buf.cAt(j, j))
+        }
+        j += 1
+      }
+      rows(i) = new GenericArrayData(r)
+      i += 1
+    }
+    new GenericArrayData(rows)
+  }
 }
 
 /** One-sample Student t: t = (x̄ − μ)/(s/√n), df = n−1; O(1) Welford. */
-case class TTestOneSampleAgg(
-    valueChild: Expression,
-    muChild: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[TTestBuf] {
-
-  override def children: Seq[Expression] = Seq(valueChild, muChild)
-
-  private lazy val mu: Double = muChild.eval(InternalRow.empty) match {
-    case n: Number => n.doubleValue()
-    case d: Decimal => d.toDouble
-    case other => throw new IllegalArgumentException(
-      s"$prettyName: population mean must be a numeric literal, got $other")
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult = valueChild.dataType match {
-    case LongType | IntegerType | ShortType | DoubleType | FloatType
-      if muChild.foldable => TypeCheckResult.TypeCheckSuccess
-    case _ => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName(value, population_mean): numeric value + literal mean")
-  }
-  override def dataType: DataType = StructType(Seq(
+case class TTestOneSample(mu: Double) extends FoldSpec[TTestBuf] {
+  def name: String = "studentTTestOneSample"
+  def accepts: Seq[Arg] = Seq(Fold.numeric, Arg.AnyType)
+  def dataType(in: Seq[Expression]): DataType = StructType(Seq(
     StructField("t_statistic", DoubleType, nullable = true),
     StructField("p_value", DoubleType, nullable = true)))
-  override def nullable: Boolean = false
-  override def createAggregationBuffer(): TTestBuf = new TTestBuf
+  // one sample: group 0 only
+  def codec: BufCodec[TTestBuf] = TTestBuf.one
+  def create(): TTestBuf = new TTestBuf
 
-  override def update(buf: TTestBuf, row: InternalRow): TTestBuf = {
-    valueChild.eval(row) match {
+  def update(buf: TTestBuf, in: Array[Expression], row: InternalRow): TTestBuf = {
+    in(0).eval(row) match {
       case null => ()
       case d: Double => buf.add(0, d)
       case f: Float => buf.add(0, f.toDouble)
@@ -632,34 +561,15 @@ case class TTestOneSampleAgg(
     }
     buf
   }
-  override def merge(buf: TTestBuf, o: TTestBuf): TTestBuf = { buf.mergeFrom(o); buf }
+  def merge(buf: TTestBuf, o: TTestBuf): TTestBuf = { buf.mergeFrom(o); buf }
 
-  override def eval(buf: TTestBuf): Any = {
+  def eval(buf: TTestBuf): Any = {
     val n = buf.n(0).toDouble
     if (n < 2) return InternalRow(null, null)
     val s2 = buf.m2(0) / (n - 1)
     val t = (buf.mean(0) - mu) / math.sqrt(s2 / n)
     InternalRow(t, StatMath.studentP(t, n - 1))
   }
-
-  override def serialize(buf: TTestBuf): Array[Byte] = {
-    val bb = ByteBuffer.allocate(24)
-    bb.putLong(buf.n(0)); bb.putDouble(buf.mean(0)); bb.putDouble(buf.m2(0))
-    bb.array()
-  }
-  override def deserialize(bytes: Array[Byte]): TTestBuf = {
-    val bb = ByteBuffer.wrap(bytes)
-    val buf = new TTestBuf
-    buf.n(0) = bb.getLong; buf.mean(0) = bb.getDouble; buf.m2(0) = bb.getDouble
-    buf
-  }
-  override def withNewMutableAggBufferOffset(o: Int): TTestOneSampleAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): TTestOneSampleAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): TTestOneSampleAgg =
-    copy(valueChild = cs(0), muChild = cs(1))
-  override def prettyName: String = "studentTTestOneSample"
 }
 
 final class InsertAtBuf {
@@ -667,132 +577,10 @@ final class InsertAtBuf {
   private[graft] val m = mutable.HashMap.empty[Int, Any]
 }
 
-case class GroupArrayInsertAtAgg(
-    valueChild: Expression,
-    posChild: Expression,
-    defaultChild: Option[Expression],
-    sizeChild: Option[Expression],
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[InsertAtBuf] {
-
-  override def children: Seq[Expression] =
-    Seq(valueChild, posChild) ++ defaultChild ++ sizeChild
-
-  // guard against a hostile/corrupt position column allocating the driver
-  // away: CH bounds positions too (it errors past array_size_overflow)
-  private val MaxPos = 1 << 20
-
-  private lazy val sizeOpt: Option[Int] = sizeChild.map(_.eval(InternalRow.empty) match {
-    case n: Number => n.intValue()
-    case other => throw new IllegalArgumentException(
-      s"$prettyName: size must be an integer literal, got $other")
-  })
-
-  private def isString = valueChild.dataType == StringType
-  private def isDouble = valueChild.dataType match {
-    case DoubleType | FloatType => true
-    case _ => false
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (valueChild.dataType, posChild.dataType) match {
-      case (LongType | IntegerType | DoubleType | FloatType | StringType,
-            LongType | IntegerType | ShortType)
-        if defaultChild.forall(_.foldable) && sizeChild.forall(_.foldable) =>
-        // the default must live in the value lane, or serialization and
-        // the unsafe array writer disagree at runtime — reject at analysis
-        val laneOk = defaultChild.forall { d =>
-          (d.dataType, valueChild.dataType) match {
-            case (NullType, _) => true
-            case (StringType, StringType) => true
-            case (StringType, _) | (_, StringType) => false
-            case (LongType | IntegerType | ShortType | DoubleType | FloatType, _) => true
-            case _ => false
-          }
-        }
-        if (laneOk) TypeCheckResult.TypeCheckSuccess
-        else TypeCheckResult.TypeCheckFailure(
-          s"$prettyName: default type ${defaultChild.get.dataType.simpleString} " +
-            s"does not match the value lane ${valueChild.dataType.simpleString}")
-      case _ => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName(x, pos[, default[, size]]): long/double/string x (cast " +
-          "other types), integral pos, literal default/size")
-    }
-
-  private def elemType: DataType =
-    if (isString) StringType else if (isDouble) DoubleType else LongType
-  // a nullable default means NULL fills the gaps — the array type must
-  // admit it or the unsafe writer reads the null back as 0
-  override def dataType: DataType =
-    ArrayType(elemType, containsNull = defaultChild.exists(_.nullable))
-  override def nullable: Boolean = false
-  override def createAggregationBuffer(): InsertAtBuf = new InsertAtBuf
-
-  private def norm(v: Any): Any = v match {
-    case u: UTF8String => u.toString
-    case f: Float => f.toDouble
-    case i: Int => i.toLong
-    case other => other // Long | Double | String
-  }
-  private lazy val defaultValue: Any = defaultChild match {
-    case Some(e) => e.eval(InternalRow.empty) match {
-      case null => null // explicit NULL default → NULL gaps (CH parity)
-      case u: UTF8String => u.toString
-      // coerce into the value lane so the typed array writer agrees
-      case n: java.lang.Number => if (isDouble) n.doubleValue() else n.longValue()
-      case other => norm(other)
-    }
-    case None => if (isString) "" else if (isDouble) 0.0d else 0L
-  }
-
-  @annotation.nowarn("msg=match may not be exhaustive")
-  private def lt(a: Any, b: Any): Boolean = (a, b) match {
-    case (x: Long, y: Long) => x < y
-    case (x: Double, y: Double) => x < y
-    case (x: String, y: String) => x < y
-  }
-
-  override def update(buf: InsertAtBuf, row: InternalRow): InsertAtBuf = {
-    val p = posChild.eval(row)
-    val v = valueChild.eval(row)
-    if (p != null && v != null) {
-      val pos = p.asInstanceOf[Number].intValue()
-      require(pos >= 0 && pos <= MaxPos, s"$prettyName: position out of range: $pos")
-      val nv = norm(v)
-      buf.m.get(pos) match {
-        case Some(old) if !lt(nv, old) => ()
-        case _ => buf.m.update(pos, nv)
-      }
-    }
-    buf
-  }
-  override def merge(buf: InsertAtBuf, o: InsertAtBuf): InsertAtBuf = {
-    o.m.foreach { case (pos, nv) =>
-      buf.m.get(pos) match {
-        case Some(old) if !lt(nv, old) => ()
-        case _ => buf.m.update(pos, nv)
-      }
-    }
-    buf
-  }
-
-  override def eval(buf: InsertAtBuf): Any = {
-    val len = sizeOpt.getOrElse(if (buf.m.isEmpty) 0 else buf.m.keys.max + 1)
-    val out = new Array[Any](len)
-    var i = 0
-    while (i < len) {
-      val v = buf.m.getOrElse(i, defaultValue)
-      out(i) = v match {
-        case s: String => UTF8String.fromString(s)
-        case other => other
-      }
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  override def serialize(buf: InsertAtBuf): Array[Byte] = {
+/** Entries in map order: position, then the value in the plan's lane (a
+  * STRING value pads an 8-byte slot before its length and UTF-8 bytes). */
+case class InsertAtCodec(isString: Boolean, isDouble: Boolean) extends BufCodec[InsertAtBuf] {
+  def write(buf: InsertAtBuf): Array[Byte] = {
     val entries = buf.m.toSeq
     val strBytes = entries.map {
       case (_, s: String) => s.getBytes(StandardCharsets.UTF_8)
@@ -812,7 +600,7 @@ case class GroupArrayInsertAtAgg(
     }
     bb.array()
   }
-  override def deserialize(bytes: Array[Byte]): InsertAtBuf = {
+  def read(bytes: Array[Byte]): InsertAtBuf = {
     val bb = ByteBuffer.wrap(bytes)
     val buf = new InsertAtBuf
     val n = bb.getInt
@@ -829,13 +617,109 @@ case class GroupArrayInsertAtAgg(
     }
     buf
   }
-  override def withNewMutableAggBufferOffset(o: Int): GroupArrayInsertAtAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): GroupArrayInsertAtAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): GroupArrayInsertAtAgg =
-    copy(valueChild = cs(0), posChild = cs(1),
-      defaultChild = defaultChild.map(_ => cs(2)),
-      sizeChild = sizeChild.map(_ => cs(if (defaultChild.isDefined) 3 else 2)))
-  override def prettyName: String = "groupArrayInsertAt"
+}
+
+/** `lane`: LongType, DoubleType or StringType, from the value child;
+  * `defaultValue`: the gap fill, already in the lane (null = NULL gaps);
+  * `size`: the fixed result length, if given. */
+case class GroupArrayInsertAt(lane: DataType, defaultValue: Any, size: Option[Int])
+    extends FoldSpec[InsertAtBuf] {
+
+  // guard against a hostile/corrupt position column allocating the driver
+  // away: CH bounds positions too (it errors past array_size_overflow)
+  private val MaxPos = 1 << 20
+
+  private def isString = lane == StringType
+  private def isDouble = lane == DoubleType
+
+  def name: String = "groupArrayInsertAt"
+  def accepts: Seq[Arg] = Seq(Arg.Is(LongType, IntegerType, DoubleType, FloatType, StringType),
+    Arg.Is(LongType, IntegerType, ShortType), Arg.AnyType)
+  // the default must live in the value lane, or serialization and the
+  // unsafe array writer disagree at runtime — reject at analysis
+  override def check(in: Seq[Expression]): Option[String] =
+    in.lift(2).filterNot { d =>
+      (d.dataType, in(0).dataType) match {
+        case (NullType, _) => true
+        case (StringType, StringType) => true
+        case (StringType, _) | (_, StringType) => false
+        case (LongType | IntegerType | ShortType | DoubleType | FloatType, _) => true
+        case _ => false
+      }
+    }.map(d => s"$name: default type ${d.dataType.simpleString} " +
+      s"does not match the value lane ${in(0).dataType.simpleString}")
+  // a nullable default means NULL fills the gaps — the array type must
+  // admit it or the unsafe writer reads the null back as 0
+  def dataType(in: Seq[Expression]): DataType =
+    ArrayType(lane, containsNull = in.lift(2).exists(_.nullable))
+  @transient lazy val codec: BufCodec[InsertAtBuf] = InsertAtCodec(isString, isDouble)
+  def create(): InsertAtBuf = new InsertAtBuf
+
+  private def norm(v: Any): Any = v match {
+    case u: UTF8String => u.toString
+    case f: Float => f.toDouble
+    case i: Int => i.toLong
+    case other => other // Long | Double | String
+  }
+
+  @annotation.nowarn("msg=match may not be exhaustive")
+  private def lt(a: Any, b: Any): Boolean = (a, b) match {
+    case (x: Long, y: Long) => x < y
+    case (x: Double, y: Double) => x < y
+    case (x: String, y: String) => x < y
+  }
+
+  def update(buf: InsertAtBuf, in: Array[Expression], row: InternalRow): InsertAtBuf = {
+    val p = in(1).eval(row)
+    val v = in(0).eval(row)
+    if (p != null && v != null) {
+      val pos = p.asInstanceOf[Number].intValue()
+      require(pos >= 0 && pos <= MaxPos, s"$name: position out of range: $pos")
+      val nv = norm(v)
+      buf.m.get(pos) match {
+        case Some(old) if !lt(nv, old) => ()
+        case _ => buf.m.update(pos, nv)
+      }
+    }
+    buf
+  }
+  def merge(buf: InsertAtBuf, o: InsertAtBuf): InsertAtBuf = {
+    o.m.foreach { case (pos, nv) =>
+      buf.m.get(pos) match {
+        case Some(old) if !lt(nv, old) => ()
+        case _ => buf.m.update(pos, nv)
+      }
+    }
+    buf
+  }
+
+  def eval(buf: InsertAtBuf): Any = {
+    val len = size.getOrElse(if (buf.m.isEmpty) 0 else buf.m.keys.max + 1)
+    val out = new Array[Any](len)
+    var i = 0
+    while (i < len) {
+      val v = buf.m.getOrElse(i, defaultValue)
+      out(i) = v match {
+        case s: String => UTF8String.fromString(s)
+        case other => other
+      }
+      i += 1
+    }
+    new GenericArrayData(out)
+  }
+}
+
+object GroupArrayInsertAt {
+  /** The literal default coerced into the value lane (CH's type default
+    * when absent). */
+  def defaultIn(lane: DataType, default: Option[Any]): Any = default match {
+    case Some(v) => v match {
+      case null => null // explicit NULL default → NULL gaps (CH parity)
+      case u: UTF8String => u.toString
+      // coerce into the value lane so the typed array writer agrees
+      case n: java.lang.Number => if (lane == DoubleType) n.doubleValue() else n.longValue()
+      case other => other
+    }
+    case None => if (lane == StringType) "" else if (lane == DoubleType) 0.0d else 0L
+  }
 }

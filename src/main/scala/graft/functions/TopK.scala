@@ -6,10 +6,7 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types._
@@ -19,7 +16,7 @@ import org.apache.spark.sql.types._
   * by lowest id (fully deterministic, oracle-comparable).
   *
   * This is the scale-safe formulation of per-group top-k ranking: as a
-  * [[TypedImperativeAggregate]] it runs as a partial aggregate — every input
+  * [[Fold]] aggregate it runs as a partial aggregate — every input
   * partition reduces to ≤ k pairs per group BEFORE the shuffle, and the merge
   * combines k-bounded heaps. The `Window.partitionBy(group).orderBy(score)`
   * + `row_number` alternative funnels every scored candidate of a group
@@ -36,7 +33,7 @@ object TopK {
         case other => throw new IllegalArgumentException(
           s"topk_by_score: k must be an integer literal, got $other")
       }
-      TopKByScore(exprs(0), k)
+      Fold(TopKByScore(k), exprs.take(1))
     }
   }
 
@@ -74,47 +71,9 @@ final class TopKHeap(val k: Int) {
   def size: Int = heap.size
 }
 
-/** The aggregate expression behind `topk_by_score`. Child must be a struct
-  * whose first field is DOUBLE (the score) and second BIGINT (the id).
-  * Null structs / null fields are skipped.
-  */
-case class TopKByScore(
-    child: Expression,
-    k: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[TopKHeap] with UnaryLike[Expression] {
-
-  require(k > 0, s"topk_by_score: k must be positive, got $k")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StructType(Array(a, b)) if a.dataType == DoubleType && b.dataType == LongType =>
-      TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"topk_by_score requires struct<double, bigint>, got ${t.simpleString}")
-  }
-
-  override def createAggregationBuffer(): TopKHeap = new TopKHeap(k)
-
-  override def update(buf: TopKHeap, row: InternalRow): TopKHeap = {
-    val v = child.eval(row)
-    if (v != null) {
-      val r = v.asInstanceOf[InternalRow]
-      if (!r.isNullAt(0) && !r.isNullAt(1)) buf.add(r.getDouble(0), r.getLong(1))
-    }
-    buf
-  }
-
-  override def merge(buf: TopKHeap, other: TopKHeap): TopKHeap = {
-    buf.mergeFrom(other); buf
-  }
-
-  override def eval(buf: TopKHeap): Any =
-    new GenericArrayData(buf.sortedBestFirst.map { case (s, i) =>
-      InternalRow(s, i)
-    }.toArray[Any])
-
-  override def serialize(buf: TopKHeap): Array[Byte] = {
+/** A heap as its pairs best-first; reading re-adds them to a fresh heap. */
+case class TopKHeapCodec(k: Int) extends BufCodec[TopKHeap] {
+  def write(buf: TopKHeap): Array[Byte] = {
     val items = buf.sortedBestFirst
     val bb = ByteBuffer.allocate(4 + items.size * 16)
     bb.putInt(items.size)
@@ -122,7 +81,7 @@ case class TopKByScore(
     bb.array()
   }
 
-  override def deserialize(bytes: Array[Byte]): TopKHeap = {
+  def read(bytes: Array[Byte]): TopKHeap = {
     val bb = ByteBuffer.wrap(bytes)
     val n = bb.getInt
     val buf = new TopKHeap(k)
@@ -130,17 +89,43 @@ case class TopKByScore(
     while (j < n) { buf.add(bb.getDouble, bb.getLong); j += 1 }
     buf
   }
+}
 
-  override def dataType: DataType = ArrayType(StructType(Seq(
+/** The aggregate behind `topk_by_score`. The child must be a struct whose
+  * first field is DOUBLE (the score) and second BIGINT (the id). Null
+  * structs / null fields are skipped.
+  */
+case class TopKByScore(k: Int) extends FoldSpec[TopKHeap] {
+  require(k > 0, s"topk_by_score: k must be positive, got $k")
+
+  def name: String = "topk_by_score"
+  def accepts: Seq[Arg] = Seq(Arg.Struct)
+  override def check(in: Seq[Expression]): Option[String] = in.head.dataType match {
+    case StructType(Array(a, b)) if a.dataType == DoubleType && b.dataType == LongType => None
+    case t => Some(s"topk_by_score requires struct<double, bigint>, got ${t.simpleString}")
+  }
+  def dataType(in: Seq[Expression]): DataType = ArrayType(StructType(Seq(
     StructField("score", DoubleType, nullable = false),
     StructField("id", LongType, nullable = false))), containsNull = false)
-  override def nullable: Boolean = false
+  @transient lazy val codec: BufCodec[TopKHeap] = TopKHeapCodec(k)
 
-  override def withNewMutableAggBufferOffset(o: Int): TopKByScore =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): TopKByScore =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildInternal(c: Expression): TopKByScore =
-    copy(child = c)
-  override def prettyName: String = "topk_by_score"
+  def create(): TopKHeap = new TopKHeap(k)
+
+  def update(buf: TopKHeap, in: Array[Expression], row: InternalRow): TopKHeap = {
+    val v = in(0).eval(row)
+    if (v != null) {
+      val r = v.asInstanceOf[InternalRow]
+      if (!r.isNullAt(0) && !r.isNullAt(1)) buf.add(r.getDouble(0), r.getLong(1))
+    }
+    buf
+  }
+
+  def merge(buf: TopKHeap, other: TopKHeap): TopKHeap = {
+    buf.mergeFrom(other); buf
+  }
+
+  def eval(buf: TopKHeap): Any =
+    new GenericArrayData(buf.sortedBestFirst.map { case (s, i) =>
+      InternalRow(s, i)
+    }.toArray[Any])
 }

@@ -6,9 +6,7 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -39,7 +37,7 @@ object UniqUpTo {
           s"uniqUpTo: N must be an integer literal, got $other")
       }
       require(n >= 1 && n <= 1000000, s"uniqUpTo: N out of range: $n")
-      UniqUpToAgg(es(1), n).toAggregateExpression()
+      Fold.agg(UniqUpTo(n, es(1).dataType), es.drop(1))
     }
   }
 
@@ -52,55 +50,12 @@ final class UpToSet {
   private[graft] val values = mutable.HashSet.empty[Any]
 }
 
-case class UniqUpToAgg(
-    child: Expression,
-    n: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[UpToSet] {
-
-  override def children: Seq[Expression] = Seq(child)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ByteType | ShortType | IntegerType | LongType | BooleanType |
-         StringType | DateType | TimestampType | TimestampNTZType =>
-      TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"uniqUpTo: unsupported input type ${dt.simpleString}")
-  }
-
-  override def createAggregationBuffer(): UpToSet = new UpToSet
-
-  private def saturate(buf: UpToSet): Unit =
-    if (buf.values.size > n) { buf.saturated = true; buf.values.clear() }
-
-  override def update(buf: UpToSet, row: InternalRow): UpToSet = {
-    if (!buf.saturated) {
-      val v = child.eval(row)
-      if (v != null) {
-        // UTF8String from eval may be buffer-backed; copy before retaining
-        buf.values += (v match {
-          case s: UTF8String => s.clone()
-          case other => other
-        })
-        saturate(buf)
-      }
-    }
-    buf
-  }
-
-  override def merge(buf: UpToSet, other: UpToSet): UpToSet = {
-    if (other.saturated) { buf.saturated = true; buf.values.clear() }
-    else if (!buf.saturated) { buf.values ++= other.values; saturate(buf) }
-    buf
-  }
-
-  override def eval(buf: UpToSet): Any =
-    if (buf.saturated) (n + 1).toLong else buf.values.size.toLong
-
-  override def serialize(buf: UpToSet): Array[Byte] = {
+/** A saturated set is one flag byte; otherwise the values, as UTF-8
+  * strings for a STRING input and as longs for the rest. */
+case class UpToSetCodec(elem: DataType) extends BufCodec[UpToSet] {
+  def write(buf: UpToSet): Array[Byte] = {
     if (buf.saturated) return Array[Byte](1)
-    child.dataType match {
+    elem match {
       case StringType =>
         val items = buf.values.toSeq.map(_.asInstanceOf[UTF8String].getBytes)
         val bb = ByteBuffer.allocate(1 + 4 + items.map(4 + _.length).sum)
@@ -123,12 +78,12 @@ case class UniqUpToAgg(
     }
   }
 
-  override def deserialize(bytes: Array[Byte]): UpToSet = {
+  def read(bytes: Array[Byte]): UpToSet = {
     val buf = new UpToSet
     val bb = ByteBuffer.wrap(bytes)
     if (bb.get() == (1: Byte)) { buf.saturated = true; return buf }
     val count = bb.getInt
-    child.dataType match {
+    elem match {
       case StringType =>
         var i = 0
         while (i < count) {
@@ -154,15 +109,41 @@ case class UniqUpToAgg(
     }
     buf
   }
+}
 
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = false
+case class UniqUpTo(n: Int, elem: DataType) extends FoldSpec[UpToSet] {
+  def name: String = "uniqUpTo"
+  def accepts: Seq[Arg] = Seq(Arg.Is(ByteType, ShortType, IntegerType, LongType,
+    BooleanType, StringType, DateType, TimestampType, TimestampNTZType))
+  def dataType(in: Seq[Expression]): DataType = LongType
+  @transient lazy val codec: BufCodec[UpToSet] = UpToSetCodec(elem)
 
-  override def withNewMutableAggBufferOffset(o: Int): UniqUpToAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): UniqUpToAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): UniqUpToAgg =
-    copy(child = cs.head)
-  override def prettyName: String = "uniqUpTo"
+  def create(): UpToSet = new UpToSet
+
+  private def saturate(buf: UpToSet): Unit =
+    if (buf.values.size > n) { buf.saturated = true; buf.values.clear() }
+
+  def update(buf: UpToSet, in: Array[Expression], row: InternalRow): UpToSet = {
+    if (!buf.saturated) {
+      val v = in(0).eval(row)
+      if (v != null) {
+        // UTF8String from eval may be buffer-backed; copy before retaining
+        buf.values += (v match {
+          case s: UTF8String => s.clone()
+          case other => other
+        })
+        saturate(buf)
+      }
+    }
+    buf
+  }
+
+  def merge(buf: UpToSet, other: UpToSet): UpToSet = {
+    if (other.saturated) { buf.saturated = true; buf.values.clear() }
+    else if (!buf.saturated) { buf.values ++= other.values; saturate(buf) }
+    buf
+  }
+
+  def eval(buf: UpToSet): Any =
+    if (buf.saturated) (n + 1).toLong else buf.values.size.toLong
 }

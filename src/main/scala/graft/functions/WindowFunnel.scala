@@ -6,9 +6,7 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types._
@@ -34,7 +32,7 @@ import org.apache.spark.sql.types._
   * `strict_dedup` (an event repeating an already-matched condition
   * interrupts) switch eval to CH's documented greedy forward scan.
   *
-  * Shape: a [[TypedImperativeAggregate]] whose state is the group's
+  * Shape: a [[Fold]] aggregate whose state is the group's
   * (ts, condition-bitmask) pairs — like `medianExact`, deliberately
   * value-complete per group (funnel groups are per-user/per-day slices,
   * bounded by a user's event count, not the corpus). The partial/merge
@@ -69,9 +67,9 @@ object WindowFunnel {
       val known = Set("strict_order", "strict_dedup", "strict_increase")
       val unknown = modes -- known
       require(unknown.isEmpty, s"windowFunnel: unknown modes $unknown")
-      WindowFunnelAgg(es.head, window, conds,
-        strictOrder = modes("strict_order"),
-        strictDedup = modes("strict_dedup")).toAggregateExpression()
+      Fold.agg(WindowFunnel(window, conds.length, es.head.dataType == LongType,
+        strictOrder = modes("strict_order"), strictDedup = modes("strict_dedup")),
+        es.head +: conds)
     }
   }
 
@@ -90,48 +88,35 @@ final class FunnelEvents {
   def add(ts: Long, mask: Int): Unit = if (mask != 0) events += ((ts, mask))
 }
 
-case class WindowFunnelAgg(
-    tsChild: Expression,
-    windowSeconds: Long,
-    conds: Seq[Expression],
-    strictOrder: Boolean = false,
-    strictDedup: Boolean = false,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[FunnelEvents] {
-
-  require(conds.nonEmpty && conds.length <= 32, "windowFunnel: 1..32 conditions")
-  // timestamp children eval to micros; BIGINT ts is CH's DateTime epoch
-  // seconds, so the window stays in the column's own units
-  @transient private lazy val windowScaled =
-    if (tsChild.dataType == LongType) windowSeconds else windowSeconds * 1000000L
-
-  override def children: Seq[Expression] = tsChild +: conds
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val tsOk = tsChild.dataType match {
-      case TimestampType | TimestampNTZType | LongType => true
-      case _ => false
-    }
-    if (!tsOk) TypeCheckResult.TypeCheckFailure(
-      s"windowFunnel: ts must be a timestamp or bigint, got ${tsChild.dataType.simpleString}")
-    else conds.find(_.dataType != BooleanType) match {
-      case Some(c) => TypeCheckResult.TypeCheckFailure(
-        s"windowFunnel: conditions must be boolean, got ${c.dataType.simpleString}")
-      case None => TypeCheckResult.TypeCheckSuccess
-    }
+/** The events in collection order, (ts long, mask int) each; shared by
+  * windowFunnel and sequenceMatch/sequenceCount. */
+object FunnelEvents extends BufCodec[FunnelEvents] {
+  def write(buf: FunnelEvents): Array[Byte] = {
+    val bb = ByteBuffer.allocate(4 + buf.events.length * 12)
+    bb.putInt(buf.events.length)
+    buf.events.foreach { case (ts, m) => bb.putLong(ts); bb.putInt(m) }
+    bb.array()
   }
 
-  override def createAggregationBuffer(): FunnelEvents = new FunnelEvents
+  def read(bytes: Array[Byte]): FunnelEvents = {
+    val bb = ByteBuffer.wrap(bytes)
+    val n = bb.getInt
+    val buf = new FunnelEvents
+    var j = 0
+    while (j < n) { buf.events += ((bb.getLong, bb.getInt)); j += 1 }
+    buf
+  }
 
-  override def update(buf: FunnelEvents, row: InternalRow): FunnelEvents = {
-    val tsVal = tsChild.eval(row)
+  /** One row's (ts, condition mask) from children ts, cond1..condN. */
+  private[functions] def update(buf: FunnelEvents, in: Array[Expression],
+      row: InternalRow): FunnelEvents = {
+    val tsVal = in(0).eval(row)
     if (tsVal != null) {
       var mask = 0
-      var i = 0
-      while (i < conds.length) {
-        val c = conds(i).eval(row)
-        if (c != null && c.asInstanceOf[Boolean]) mask |= (1 << i)
+      var i = 1
+      while (i < in.length) {
+        val c = in(i).eval(row)
+        if (c != null && c.asInstanceOf[Boolean]) mask |= (1 << (i - 1))
         i += 1
       }
       buf.add(tsVal.asInstanceOf[Long], mask)
@@ -139,15 +124,42 @@ case class WindowFunnelAgg(
     buf
   }
 
-  override def merge(buf: FunnelEvents, other: FunnelEvents): FunnelEvents = {
+  private[functions] def merge(buf: FunnelEvents, other: FunnelEvents): FunnelEvents = {
     buf.events ++= other.events; buf
   }
 
-  override def eval(buf: FunnelEvents): Any = {
+  /** ts: a timestamp (micros) or BIGINT epoch seconds; then boolean conditions. */
+  private[functions] val accepts: Seq[Arg] =
+    Seq(Arg.Is(TimestampType, TimestampNTZType, LongType), Arg.Is(BooleanType))
+}
+
+/** `conds`: the number of conditions; `longTs`: the ts child is BIGINT
+  * epoch seconds. */
+case class WindowFunnel(windowSeconds: Long, conds: Int, longTs: Boolean,
+    strictOrder: Boolean, strictDedup: Boolean) extends FoldSpec[FunnelEvents] {
+
+  require(conds >= 1 && conds <= 32, "windowFunnel: 1..32 conditions")
+
+  // timestamp children eval to micros; BIGINT ts is CH's DateTime epoch
+  // seconds, so the window stays in the column's own units
+  private val windowScaled = if (longTs) windowSeconds else windowSeconds * 1000000L
+
+  def name: String = "windowFunnel"
+  def accepts: Seq[Arg] = FunnelEvents.accepts
+  def dataType(in: Seq[Expression]): DataType = IntegerType
+  def codec: BufCodec[FunnelEvents] = FunnelEvents
+
+  def create(): FunnelEvents = new FunnelEvents
+  def update(buf: FunnelEvents, in: Array[Expression], row: InternalRow): FunnelEvents =
+    FunnelEvents.update(buf, in, row)
+  def merge(buf: FunnelEvents, other: FunnelEvents): FunnelEvents =
+    FunnelEvents.merge(buf, other)
+
+  def eval(buf: FunnelEvents): Any = {
     if (strictOrder || strictDedup)
       return greedyEval(buf.events.sortBy(e => (e._1, e._2)).toSeq)
     val evs = buf.events.sortBy(_._1)
-    val levels = conds.length
+    val levels = conds
     val none = Long.MinValue
     // best(i) = max chain start among chains of length i+1 ending at a
     // STRICTLY earlier event than the current one
@@ -212,7 +224,7 @@ case class WindowFunnelAgg(
     evs.foreach { case (ts, mask) =>
       if (level > 0 && ts - start > windowScaled) { level = 0; matched = 0 }
       val needBit = 1 << level
-      if (level < conds.length && (mask & needBit) != 0 &&
+      if (level < conds && (mask & needBit) != 0 &&
           (level == 0 || ts > lastStep)) {
         if (level == 0) start = ts
         matched |= needBit
@@ -229,31 +241,4 @@ case class WindowFunnelAgg(
     }
     maxLevel
   }
-
-  override def serialize(buf: FunnelEvents): Array[Byte] = {
-    val bb = ByteBuffer.allocate(4 + buf.events.length * 12)
-    bb.putInt(buf.events.length)
-    buf.events.foreach { case (ts, m) => bb.putLong(ts); bb.putInt(m) }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): FunnelEvents = {
-    val bb = ByteBuffer.wrap(bytes)
-    val n = bb.getInt
-    val buf = new FunnelEvents
-    var j = 0
-    while (j < n) { buf.events += ((bb.getLong, bb.getInt)); j += 1 }
-    buf
-  }
-
-  override def dataType: DataType = IntegerType
-  override def nullable: Boolean = false
-
-  override def withNewMutableAggBufferOffset(o: Int): WindowFunnelAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): WindowFunnelAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): WindowFunnelAgg =
-    copy(tsChild = cs.head, conds = cs.tail)
-  override def prettyName: String = "windowFunnel"
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInterna
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.functions.{UniqUpTo, UniqUpToAgg}
+import graft.functions.{Fold, UniqUpTo, UpToSet}
 
 /** uniqUpTo: answer equals least(exact, N+1) on random data across types,
   * and the state bound actually holds — a saturated buffer holds zero
@@ -45,8 +45,8 @@ class UniqUpToSpec extends SparkSpec {
   }
 
   test("state bound: saturated buffer drops its values and serializes to 1 byte") {
-    val agg = UniqUpToAgg(BoundReference(0, LongType, nullable = true), n = 10)
-    val buf = agg.createAggregationBuffer()
+    val agg = Fold(UniqUpTo(10, LongType), Seq(BoundReference(0, LongType, nullable = true)))
+    val buf = agg.createAggregationBuffer().asInstanceOf[UpToSet]
     val row = new GenericInternalRow(1)
     for (v <- 0L until 100000L) {
       row.update(0, v)
@@ -57,14 +57,14 @@ class UniqUpToSpec extends SparkSpec {
     assert(agg.serialize(buf).length == 1)
     assert(agg.eval(buf) == 11L)
     // saturated partial dominates a merge
-    val other = agg.createAggregationBuffer()
+    val other = agg.createAggregationBuffer().asInstanceOf[UpToSet]
     row.update(0, 7L); agg.update(other, row)
     agg.merge(other, agg.deserialize(agg.serialize(buf)))
     assert(other.saturated && agg.eval(other) == 11L)
   }
 
   test("unsaturated partials roundtrip and merge exactly") {
-    val agg = UniqUpToAgg(BoundReference(0, StringType, nullable = true), n = 50)
+    val agg = Fold(UniqUpTo(50, StringType), Seq(BoundReference(0, StringType, nullable = true)))
     val a = agg.createAggregationBuffer()
     val b = agg.createAggregationBuffer()
     val row = new GenericInternalRow(1)
