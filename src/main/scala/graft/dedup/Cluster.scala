@@ -79,15 +79,6 @@ object Cluster {
     def checksum(df: DataFrame): java.math.BigDecimal =
       df.agg(sum(col("comp").cast(DecimalType(38, 0)))).head().getDecimal(0)
 
-    // Eagerly drop a retired checkpoint leaf's blocks. Each round's
-    // relax/jump is a localCheckpoint whose blocks otherwise live until
-    // the driver GC notices the dropped reference (ContextCleaner) — on a
-    // long chain (161 rounds at the measured 1e6-node worst case) or
-    // across bench reps that lag lets dead label/edge blocks pile up in
-    // the block manager and evict live ones. Only ever called on leaves
-    // whose every consumer is already materialized (by its checksum).
-    def release(df: DataFrame): Unit = Blocks.release(df)
-
     // seed labels with one aggregation: label(v) = min(v, min neighbor) —
     // equivalent to (distinct nodes + one relax round) in a single shuffle
     var lbl = und.groupBy(col("a").as("id"))
@@ -113,7 +104,7 @@ object Cluster {
       if (ckRelax.compareTo(prev) == 0) {
         // relax-stable ⇒ labels are final; the pending jump would be a no-op
         // (relaxed ≡ lbl here — return lbl, drop relaxed's blocks)
-        release(relaxed)
+        Blocks.release(relaxed)
         converged = true
       } else {
         // (2) pointer jump: follow the label one more hop (labels are node
@@ -124,9 +115,15 @@ object Cluster {
           .localCheckpoint(eager = false)
         prev = checksum(jumped)
         // jumped is materialized (by its checksum): the previous round's
-        // labels and this round's relax leaf are now dead — drop them
-        release(lbl)
-        release(relaxed)
+        // labels and this round's relax leaf are now dead — drop their
+        // blocks eagerly. Each round's relax/jump is a localCheckpoint whose
+        // blocks otherwise live until the driver GC notices the dropped
+        // reference (ContextCleaner) — on a long chain (161 rounds at the
+        // measured 1e6-node worst case) or across bench reps that lag lets
+        // dead label/edge blocks pile up in the block manager and evict
+        // live ones
+        Blocks.release(lbl, jumped)
+        Blocks.release(relaxed, jumped)
         lbl = jumped
       }
     }

@@ -44,14 +44,20 @@ import org.apache.spark.storage.StorageLevel
   * stamp written on first use).
   *
   * Scale shape: `append` is one shuffle (signature aggregate keyed by doc
-  * id) + one append-only bucketed write; every history-side relation in
-  * `probe`/`dedupAndAppend` is on the STREAMED side of its join — the
-  * sig-free band join AND the membership-sig verification join both key
-  * on the table's bucket column. Under AQE a normal-sized batch
-  * broadcasts and history is exchange-free, sort-free scans; a
-  * backfill-sized batch degrades to sort-merge joins whose history sides
-  * are still exchange-free (bucketing satisfies the joins' distribution;
-  * the in-bucket sorts are spillable). Per-batch exchange volume is
+  * id) + one append-only bucketed write in at most `defaultParallelism`
+  * tasks (the largest divisor of dataBuckets that fits), still one file
+  * per bucket; every history-side relation in `probe`/`dedupAndAppend`
+  * is on the STREAMED side of its static join — the sig-free band join
+  * AND the membership-sig verification join both key on the table's
+  * bucket column. Under AQE a join may broadcast
+  * either side: while the index is under the broadcast threshold (a few
+  * MB, as in `perfbench`), all three history joins build on the HISTORY
+  * side (BuildLeft), so each batch collects three history scans to the
+  * driver; a larger index can only broadcast the batch and streams
+  * history exchange-free. A backfill-sized batch degrades to sort-merge
+  * joins whose history sides are still exchange-free (bucketing
+  * satisfies the joins' distribution; the in-bucket sorts are
+  * spillable). Per-batch exchange volume is
   * O(batch + candidate pairs), never O(|history|) — the round-4
   * formulation distinct-ed EVERY indexed id through an exchange per
   * batch. Probe scan IO is slim too: band-row scans read no signature
@@ -127,14 +133,22 @@ final class NearDupIndex(
     spark.table(dataTable)
   }
 
-  // repartition to the bucket layout before writing: a bucketed write
-  // emits one file per (task × bucket), so an unaligned batch sprays
-  // partitions × buckets tiny files; pre-partitioning on the bucket hash
-  // (repartition and bucketing share Murmur3 HashPartitioning) makes each
-  // append exactly one file per bucket
+  // Write tasks per append: the largest divisor of dataBuckets that fits
+  // the cores. One task per bucket spent most of each append scheduling
+  // one tiny file per task; fewer, fuller tasks write the same files.
+  private def writeTasks: Int =
+    (math.min(spark.sparkContext.defaultParallelism, dataBuckets) to 1 by -1)
+      .find(dataBuckets % _ == 0).get
+
+  // repartition on the bucket hash before writing: a bucketed write emits
+  // one file per (task × bucket), so an unaligned batch sprays
+  // partitions × buckets tiny files. Repartition and bucketing share
+  // Murmur3 HashPartitioning, and k = writeTasks divides dataBuckets, so
+  // pmod(h, dataBuckets) mod k = pmod(h, k): every bucket id lands in
+  // exactly one task and each append is still one file per bucket
   private def writeData(rows: DataFrame): Unit =
     rows.select("band", "bucket", "id", "sig")
-      .repartition(dataBuckets, col("bucket"))
+      .repartition(writeTasks, col("bucket"))
       .write.mode("append").format("parquet")
       .bucketBy(dataBuckets, "bucket").sortBy("band", "bucket")
       .option("path", dataPath.toString)
@@ -352,15 +366,17 @@ final class NearDupIndex(
     val keptB = freshB.join(dupNew, Seq("id"), "left_anti")
       .select(col("band"), col("bucket"), col("id"), col("sig"))
       .localCheckpoint(eager = false)
+    // Every signatured id has exactly ONE band-0 row (minhashSignatures
+    // groups by id; lshBuckets emits bands 0 until bands for any sig), so
+    // band 0 is the per-id view of keptB — no distinct, no shuffle
+    val keptIds = keptB.where(col("band") === 0)
     // Stored form: slim band rows + membership rows carrying the one
-    // stored signature copy (every kept id has one — it came from a band
-    // row; dropDuplicates keeps any, they are identical per id)
+    // stored signature copy
     writeData(stripSig(keptB)
-      .unionByName(membershipRows(keptB.select("id", "sig").dropDuplicates("id"))))
-    // keptB is materialized (by the write): freshB's blocks are now dead —
-    // everything downstream reads keptB's checkpoint
-    Blocks.release(freshB)
-    val keptIds = keptB.select("id").dropDuplicates("id")
+      .unionByName(membershipRows(keptIds)))
+    // keptB is materialized (by the write; release checks): freshB's
+    // blocks are now dead — everything downstream reads keptB's checkpoint
+    Blocks.release(freshB, keptB)
     docs.join(keptIds.select(col("id").as("__kept_id")),
       docs(idCol) === col("__kept_id"), "left_semi")
   }

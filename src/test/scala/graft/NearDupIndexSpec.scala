@@ -91,6 +91,61 @@ class NearDupIndexSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("append layout: at most defaultParallelism write tasks, one file per bucket, " +
+      "one membership row per kept id") {
+    import spark.implicits._
+    val path = tmp()
+    val ix = new NearDupIndex(spark, path, numHashes = 64, bands = 16)
+    val cores = spark.sparkContext.defaultParallelism
+    val dataDir = new java.io.File(path, "data")
+    // part-<task index>-<job uuid>_<bucket id>.c000.<codec>.parquet
+    val Part = """part-(\d{5})-.*_(\d{5})\.c000.*\.parquet""".r
+    var seen = Set.empty[String]
+    def checkAppend(): Unit = {
+      val added = dataDir.listFiles().map(_.getName).filter(_.endsWith(".parquet")).toSet -- seen
+      assert(added.nonEmpty, "an append with survivors writes files")
+      val parts = added.toSeq.map { case Part(task, bucket) => (task.toInt, bucket.toInt) }
+      assert(parts.forall(_._1 < cores),
+        s"write tasks must stay below defaultParallelism $cores: ${added.toSeq.sorted}")
+      val perBucket = parts.groupBy(_._2).filter(_._2.size > 1)
+      assert(perBucket.isEmpty, s"more than one file per bucket in one append: $perBucket")
+      seen ++= added
+    }
+    def sigs(batch: org.apache.spark.sql.DataFrame): Map[Long, Seq[Long]] =
+      Dedup.minhashSignatures(batch, "text", "doc_id", 64).collect()
+        .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+    def kept(batch: org.apache.spark.sql.DataFrame): Set[Long] =
+      ix.dedupAndAppend(batch, "text", "doc_id").select("doc_id").collect().map(_.getLong(0)).toSet
+
+    val history = corpus.filter(col("doc_id") <= 3)
+    ix.append(history, "text", "doc_id")
+    checkAppend()
+    // a repeated doc_id (two texts, one signature over both) and a doc too
+    // short to signature (no shingle, so no band rows: it is never kept)
+    val batch1 = corpus.filter(col("doc_id").isin(4, 5)).unionByName(Seq(
+      (5L, "a second text under the same id about parquet row groups and footers"),
+      (7L, "too short")).toDF("doc_id", "text"))
+    val kept1 = kept(batch1)
+    checkAppend()
+    // an exact dup of history and a novel doc
+    val batch2 = corpus.filter(col("doc_id") === 6).unionByName(
+      corpus.filter(col("doc_id") === 0).select(lit(8L).as("doc_id"), col("text")))
+    val kept2 = kept(batch2)
+    checkAppend()
+    val sig1 = sigs(batch1)
+    assert(!sig1.contains(7L), "fixture: doc 7 must be too short to signature")
+    assert(kept1 == Set(4L, 5L) && kept2 == Set(6L), s"kept $kept1 then $kept2")
+
+    val members = spark.read.parquet(dataDir.toString).where(col("band") === -1)
+      .select("id", "sig").collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toSeq
+    val ids = members.map(_._1)
+    assert(ids.sorted == Seq(0L, 1L, 2L, 3L, 4L, 5L, 6L),
+      s"one membership row per indexed id, got ${ids.sorted}")
+    val expected = sigs(history) ++ sig1.filter(e => kept1(e._1)) ++
+      sigs(batch2).filter(e => kept2(e._1))
+    assert(members.toMap == expected, "membership rows carry each id's batch signature")
+  }
+
   test("property: survivors of any batched ingest are pairwise below threshold") {
     // 300 synthetic docs in planted near-dup groups of 4, ingested in 3
     // arbitrary batches. For any two survivors x < y: when y arrived, x
