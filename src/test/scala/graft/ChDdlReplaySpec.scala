@@ -20,7 +20,7 @@ import graft.engine.{Catalog, ChDdl, ChReplay}
   */
 class ChDdlReplaySpec extends SparkSpec {
 
-  private val sqlDir = "/root/reference/scripts/sql"
+  private val sqlDir = ChReplay.scriptsDir
   private val sf = "/root/testdata/sf0.001"
 
   private def script(f: String): String =
@@ -36,6 +36,7 @@ class ChDdlReplaySpec extends SparkSpec {
   }
 
   test("parser: statement inventory of every reference script") {
+    assume(ReferenceTree.hasScripts, ReferenceTree.missing(ReferenceTree.scripts))
     import ChDdl._
     val a1 = parse(script("ods.action_001_dis.sql"))
     assert(a1.length == 2)
@@ -285,6 +286,7 @@ class ChDdlReplaySpec extends SparkSpec {
   }
 
   test("streaming DDL replay: streamed micro-batches == batch replay, exactly-once per MV") {
+    assume(ReferenceTree.hasScripts, ReferenceTree.missing(ReferenceTree.scripts))
     import org.apache.spark.sql.streaming.Trigger
     Catalog.register(spark, sf)
 
@@ -351,6 +353,8 @@ class ChDdlReplaySpec extends SparkSpec {
   }
 
   test("full replay: scripts run file-verbatim and the doc equivalences hold") {
+    // reads the scripts and, for doc:1161-1195, the reference doc
+    assume(ReferenceTree.present, ReferenceTree.missing(ReferenceTree.scripts, ReferenceTree.docs))
     Catalog.register(spark, sf)
     val wh = tmpDir("graft-chreplay")
     val replay = new ChReplay(spark, wh)

@@ -489,22 +489,32 @@ class PlanSpec extends SparkSpec {
     // boundaries inside persisted pipelines; start from the state
     // `graft.Dev plan` measures (only each query's OWN persists in play)
     spark.sharedState.cacheManager.clearCache()
-    for (name <- SparkEntry.queries.keys.toSeq.sorted) {
-      val p = planOf(name)
-      val ex = p.collect { case e: ShuffleExchangeExec => e }.length
-      assert(exchangeBudgets.contains(name),
-        s"""$name: new query without a declared exchange budget — it plans $ex; add "$name" -> $ex""")
-      assert(ex <= exchangeBudgets(name),
-        s"$name: plan grew to $ex exchanges (budget ${exchangeBudgets(name)})")
-      assert(p.collect { case c: CartesianProductExec => c }.isEmpty,
-        s"$name: CartesianProduct in plan")
-      if (!bnljAllowed(name))
-        assert(p.collect { case j: BroadcastNestedLoopJoinExec => j }.isEmpty,
-          s"$name: unexpected nested-loop join")
-      // every per-row hot loop is a Catalyst expression; an interpreted
-      // Scala UDF anywhere in a declared plan is a regression
-      assert(!p.toString.contains("UDF"), s"$name: interpreted UDF in plan")
+    val (names, leftOutProblems) = sweptQueries(dir)
+    // every query is checked; all offenders are reported in one failure
+    val offenders = leftOutProblems ++ names.flatMap { name =>
+      try {
+        val p = planOf(name)
+        val ex = p.collect { case e: ShuffleExchangeExec => e }.length
+        Seq(
+          exchangeBudgets.get(name) match {
+            case None => Some(
+              s"""$name: new query without a declared exchange budget — it plans $ex; add "$name" -> $ex""")
+            case Some(budget) if ex > budget =>
+              Some(s"$name: plan grew to $ex exchanges (budget $budget)")
+            case _ => None
+          },
+          Option.when(p.collect { case c: CartesianProductExec => c }.nonEmpty)(
+            s"$name: CartesianProduct in plan"),
+          Option.when(!bnljAllowed(name) &&
+              p.collect { case j: BroadcastNestedLoopJoinExec => j }.nonEmpty)(
+            s"$name: unexpected nested-loop join"),
+          // every per-row hot loop is a Catalyst expression; an interpreted
+          // Scala UDF anywhere in a declared plan is a regression
+          Option.when(p.toString.contains("UDF"))(s"$name: interpreted UDF in plan")
+        ).flatten
+      } catch { case e: Exception => Seq(s"$name: plan failed: $e") }
     }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
   test("asof/session/aggregate plans keep their exchange budgets") {

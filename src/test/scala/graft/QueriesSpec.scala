@@ -7,10 +7,13 @@ package graft
   */
 class QueriesSpec extends SparkSpec {
 
+  private val dir = "/root/testdata/sf0.001"
+
   test("every declared query analyzes at sf0.001") {
-    val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, q) =>
+    val (names, leftOutProblems) = sweptQueries(dir)
+    val failures = leftOutProblems ++ names.flatMap { name =>
       try {
-        val df = q(spark, "/root/testdata/sf0.001")
+        val df = SparkEntry.queries(name)(spark, dir)
         df.queryExecution.optimizedPlan // force analysis + optimization
         if (df.schema.isEmpty) Some(s"$name: empty schema") else None
       } catch { case e: Exception => Some(s"$name: ${e.getMessage.take(200)}") }

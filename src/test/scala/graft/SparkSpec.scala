@@ -24,6 +24,27 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       case (k, None) => spark.conf.unset(k)
     }
   }
+
+  /** The declared queries a sweep checks, sorted, and the problems found
+    * with the ones it leaves out. Where the reference tree is present that
+    * is every query and no problem. Where it is absent, each of
+    * [[ReferenceTree.readers]] is built and must fail for want of the tree;
+    * those are left out (and named with `info`), and any other outcome is
+    * returned as a problem for the sweep to report.
+    */
+  def sweptQueries(sfDir: String): (Seq[String], Seq[String]) = {
+    val all = SparkEntry.queries.keys.toSeq.sorted
+    if (ReferenceTree.present) (all, Nil)
+    else {
+      val leftOut = ReferenceTree.readers.toSeq.sorted
+      val problems = leftOut.flatMap(name =>
+        ReferenceTree.absenceProblem(name, SparkEntry.queries(name)(spark, sfDir)))
+      val kept = all.filterNot(ReferenceTree.readers)
+      info(s"checking ${kept.size} of ${all.size}; left out, no reference tree at " +
+        s"${ReferenceTree.root}: ${leftOut.mkString(", ")}")
+      (kept, problems)
+    }
+  }
 }
 
 object SparkSpec {
@@ -38,4 +59,47 @@ object SparkSpec {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+}
+
+/** The reference checkout that replay tests and three declared queries read
+  * at run time: `ChReplay.scriptsDir` (`GRAFT_REFERENCE_SCRIPTS`, default
+  * `/root/reference/scripts/sql`) and the `docs` directory two levels up.
+  * It is not part of this repository; where it is absent, tests that read
+  * it cancel and query sweeps leave its readers out.
+  */
+object ReferenceTree {
+  import java.nio.file.{Files, NoSuchFileException, Path, Paths}
+
+  val scripts: Path = Paths.get(graft.engine.ChReplay.scriptsDir).toAbsolutePath.normalize()
+  val root: Path = scripts.resolve("../..").normalize()
+  val docs: Path = root.resolve("docs")
+
+  /** The declared queries that read the tree while they build: q74 one
+    * script, q105 the doc, q113 all seven scripts.
+    */
+  val readers: Set[String] =
+    Set("q74_ddl_replay", "q105_doc_handrows", "q113_stream_cascade")
+
+  def hasScripts: Boolean = Files.isDirectory(scripts)
+  def present: Boolean = hasScripts && Files.isDirectory(docs)
+
+  /** The `assume` clue of a test that needs `dirs`. */
+  def missing(dirs: Path*): String =
+    s"no reference checkout: ${dirs.filterNot(Files.isDirectory(_)).mkString(", ")} " +
+      "missing (point GRAFT_REFERENCE_SCRIPTS at its scripts/sql)"
+
+  /** None when building `name` fails with a `NoSuchFileException` under
+    * [[root]], as a reader must without the tree; else what happened.
+    */
+  def absenceProblem(name: String, build: => Any): Option[String] =
+    try {
+      build
+      Some(s"$name: builds without the reference tree; drop it from ReferenceTree.readers")
+    } catch {
+      case e: NoSuchFileException
+          if Option(e.getFile).exists(f =>
+            Paths.get(f).toAbsolutePath.normalize().startsWith(root)) => None
+      case e: Exception =>
+        Some(s"$name: expected a NoSuchFileException under $root, got $e")
+    }
 }
