@@ -43,9 +43,18 @@ import org.apache.spark.storage.StorageLevel
   * must not change over the index's life (enforced by a `_meta.json`
   * stamp written on first use).
   *
+  * Bucket count: an index that has a stamp keeps the stamped
+  * `dataBuckets`; a new one gets one bucket per task slot,
+  * `min(32, defaultParallelism)` — 4 in a `local[4]` session, 32 on the
+  * 32-slot `bench` profile. Each history scan runs one task per bucket
+  * and each append writes one file per bucket, so buckets beyond the
+  * slots only add task waves and small files. Bucket values are column
+  * hashes, never the file's bucket id, so the survivors of an ingest do
+  * not depend on the count.
+  *
   * Scale shape: `append` is one shuffle (signature aggregate keyed by doc
   * id) + one append-only bucketed write in at most `defaultParallelism`
-  * tasks (the largest divisor of dataBuckets that fits), still one file
+  * tasks (the largest divisor of the bucket count that fits), still one file
   * per bucket; every history-side relation in `probe`/`dedupAndAppend`
   * is on the STREAMED side of its static join — the sig-free band join
   * AND the membership-sig verification join both key on the table's
@@ -71,8 +80,7 @@ final class NearDupIndex(
     path: String,
     numHashes: Int = 64,
     bands: Int = 16,
-    shingleSize: Int = 3,
-    dataBuckets: Int = 32) {
+    shingleSize: Int = 3) {
 
   private val rowsPerBand = numHashes / bands
   require(bands * rowsPerBand == numHashes, "bands must divide numHashes")
@@ -83,25 +91,35 @@ final class NearDupIndex(
 
   // catalog name bound to this path — md5 keeps it stable across sessions
   // and instances so a reopen appends to the same table
-  private val dataTable = "graft_ndi_data_" +
+  private[graft] val dataTable = "graft_ndi_data_" +
     java.security.MessageDigest.getInstance("MD5")
       .digest(path.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
+
+  private def readStamp(): Option[String] =
+    if (!fs.exists(metaPath)) None
+    else {
+      val in = fs.open(metaPath)
+      Some(try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close())
+    }
+
+  // the stamped bucket count, else one bucket per task slot up to 32
+  private val buckets: Int = readStamp()
+    .flatMap(""""dataBuckets":(\d+)""".r.findFirstMatchIn(_)).map(_.group(1).toInt)
+    .getOrElse(math.min(32, spark.sparkContext.defaultParallelism))
 
   // "layout":2 = slim band rows (sig stored once, on the membership
   // row) — a v1 index (sig duplicated per band row) fails fast on the
   // stamp rather than silently probing against null history signatures
   private def expectMeta: String =
     s"""{"numHashes":$numHashes,"bands":$bands,""" +
-      s""""shingleSize":$shingleSize,"dataBuckets":$dataBuckets,"layout":2}"""
+      s""""shingleSize":$shingleSize,"dataBuckets":$buckets,"layout":2}"""
 
   /** Fails fast when an existing stamp disagrees (different banding or a
     * v1 layout). Read paths call this too — [[probe]] on a v1 index would
     * otherwise find no membership sigs and silently admit every dup.
     */
   private def checkMeta(): Unit =
-    if (fs.exists(metaPath)) {
-      val in = fs.open(metaPath)
-      val got = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+    readStamp().foreach { got =>
       require(got == expectMeta,
         s"NearDupIndex at $path was built with $got; this instance has $expectMeta")
     }
@@ -119,7 +137,7 @@ final class NearDupIndex(
       spark.sql(
         s"""CREATE TABLE $dataTable (band INT, bucket BIGINT, id BIGINT, sig ARRAY<BIGINT>)
            |USING PARQUET
-           |CLUSTERED BY (bucket) SORTED BY (band, bucket) INTO $dataBuckets BUCKETS
+           |CLUSTERED BY (bucket) SORTED BY (band, bucket) INTO $buckets BUCKETS
            |LOCATION '$dataPath'""".stripMargin)
 
   /** The persisted table, file listing snapshotted at call time: an append
@@ -133,24 +151,24 @@ final class NearDupIndex(
     spark.table(dataTable)
   }
 
-  // Write tasks per append: the largest divisor of dataBuckets that fits
+  // Write tasks per append: the largest divisor of the bucket count that fits
   // the cores. One task per bucket spent most of each append scheduling
   // one tiny file per task; fewer, fuller tasks write the same files.
   private def writeTasks: Int =
-    (math.min(spark.sparkContext.defaultParallelism, dataBuckets) to 1 by -1)
-      .find(dataBuckets % _ == 0).get
+    (math.min(spark.sparkContext.defaultParallelism, buckets) to 1 by -1)
+      .find(buckets % _ == 0).get
 
   // repartition on the bucket hash before writing: a bucketed write emits
   // one file per (task × bucket), so an unaligned batch sprays
   // partitions × buckets tiny files. Repartition and bucketing share
-  // Murmur3 HashPartitioning, and k = writeTasks divides dataBuckets, so
-  // pmod(h, dataBuckets) mod k = pmod(h, k): every bucket id lands in
+  // Murmur3 HashPartitioning, and k = writeTasks divides buckets, so
+  // pmod(h, buckets) mod k = pmod(h, k): every bucket id lands in
   // exactly one task and each append is still one file per bucket
   private def writeData(rows: DataFrame): Unit =
     rows.select("band", "bucket", "id", "sig")
       .repartition(writeTasks, col("bucket"))
       .write.mode("append").format("parquet")
-      .bucketBy(dataBuckets, "bucket").sortBy("band", "bucket")
+      .bucketBy(buckets, "bucket").sortBy("band", "bucket")
       .option("path", dataPath.toString)
       .saveAsTable(dataTable)
 
@@ -270,9 +288,9 @@ final class NearDupIndex(
       .agg(max("est_jaccard").as("est_jaccard"))
   }
 
-  /** The fused history probe over a batch's banded rows: ids that are
-    * either near-dups of an indexed doc OR already indexed themselves
-    * (replay). Exposed for plan assertions — this is the exact join
+  /** The history probe over a batch's banded rows: ids that are either
+    * near-dups of an indexed doc OR already indexed themselves (replay).
+    * Exposed for plan assertions — these are the exact joins
     * `dedupAndAppend` runs against history.
     */
   private[graft] def historyDupIds(bandedBatch: DataFrame, threshold: Double): DataFrame = {
@@ -280,13 +298,18 @@ final class NearDupIndex(
       .unionByName(bandedBatch.select(col("id")).dropDuplicates("id")
         .select(col("id").as("bucket"), col("id"),
           lit(null).cast("array<bigint>").as("sig")))
-    // the fused bucket join answers BOTH row kinds against one sig-free
-    // history scan: membership hits (h_band = -1 × sig-null probe row) are
-    // replay dups outright; band hits are CANDIDATES that still need the
-    // history signature — pair-deduped (band-duplicate rows would multiply
-    // the verification join ~bands×), then verified against the membership
-    // rows' stored sigs via bucket = dup_of (streamed, bucket-aligned)
-    // ONE rawData resolution: hist and memberSigs read the same snapshot
+    // one logical bucket join answers BOTH row kinds: membership hits
+    // (h_band = -1 × sig-null probe row) are replay dups outright; band
+    // hits are CANDIDATES that still need the history signature —
+    // pair-deduped (band-duplicate rows would multiply the verification
+    // join ~bands×), then verified against the membership rows' stored
+    // sigs via bucket = dup_of (streamed, bucket-aligned). Filter pushdown
+    // splits `joined` into one copy per branch, so the executed plan scans
+    // the table three times: band = -1 reading bucket (replay), band >= 0
+    // reading bucket, id (candidates) and band = -1 reading bucket, sig
+    // (verification) — each a sig-free or membership-only read
+    // (`NearDupIndexSpec` "history probe" pins the count).
+    // ONE rawData resolution: all three scans read the same snapshot
     val raw = rawData
     val hist = raw.select(col("band").as("h_band"), col("bucket"),
       col("id").as("dup_of"))
@@ -321,14 +344,16 @@ final class NearDupIndex(
       threshold: Double = 0.5): DataFrame = {
     checkOrStampMeta()
     val b = banded(docs, textCol, idCol).persist(StorageLevel.MEMORY_AND_DISK)
-    // ONE fused history probe: membership rows and banded rows live in the
+    // the history probe: membership rows and banded rows live in the
     // same bucketed table, so the near-dup check (history band rows vs the
     // batch's banded rows) and the replay/membership check (history band=-1
-    // rows, bucket = id, vs the batch's ids keyed the same way) ride a
-    // single scan + single bucket join. The probe side tags its two row
-    // kinds by sig nullness (member probes carry no signature); the history
-    // side by its band column. Mixed-kind bucket collisions (an xxhash64
-    // bucket numerically equal to a doc id) fall out in the WHERE.
+    // rows, bucket = id, vs the batch's ids keyed the same way) are written
+    // as one bucket join; the executed plan still scans the table once per
+    // check plus once for the verification sigs (see historyDupIds). The
+    // probe side tags its two row kinds by sig nullness (member probes
+    // carry no signature); the history side by its band column. Mixed-kind
+    // bucket collisions (an xxhash64 bucket numerically equal to a doc id)
+    // fall out in the WHERE.
     // `rawData` snapshots its file listing HERE (resolution time), so the
     // probe keeps answering against pre-append history even though the
     // append runs first.

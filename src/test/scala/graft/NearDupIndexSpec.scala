@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.{ShuffledHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.functions._
 
 import graft.dedup.{Dedup, NearDupIndex}
@@ -26,6 +29,39 @@ class NearDupIndexSpec extends SparkSpec {
 
   private def tmp(): String =
     java.nio.file.Files.createTempDirectory("graft-ndi").toString + "/ix"
+
+  /** History rows must never enter an exchange RAW: every shuffle in `p`
+    * may only see history data (files under `path`) that already passed
+    * through a join, i.e. batch-sized candidate rows. Bucketing satisfies
+    * each history join's distribution, so a history scan reachable from an
+    * exchange without crossing a join means history itself was shuffled —
+    * O(|history|) per batch.
+    */
+  private def historyStreamed(p: SparkPlan, path: String): Unit = {
+    val joins = p.collect {
+      case j: SortMergeJoinExec => j: SparkPlan
+      case j: ShuffledHashJoinExec => j: SparkPlan
+    }
+    assert(joins.nonEmpty, s"expected a shuffled join in:\n$p")
+    def rawHistoryReachable(n: SparkPlan): Boolean = n match {
+      case s: FileSourceScanExec =>
+        s.relation.location.rootPaths.mkString(",").contains(path)
+      case _: SortMergeJoinExec | _: ShuffledHashJoinExec => false
+      case other => other.children.exists(rawHistoryReachable)
+    }
+    for (e <- p.collect { case e: ShuffleExchangeExec => e })
+      assert(!rawHistoryReachable(e.child),
+        s"history scan feeds an exchange without an intervening join:\n$p")
+    // and the joins actually stream history somewhere: at least one join
+    // side reads the index directly with no exchange anywhere under it
+    val streamed = joins.exists(_.children.exists(side =>
+      side.collect { case e: ShuffleExchangeExec => e }.isEmpty &&
+        side.collect {
+          case s: FileSourceScanExec
+            if s.relation.location.rootPaths.mkString(",").contains(path) => s
+        }.nonEmpty))
+    assert(streamed, s"no join streams the history side directly:\n$p")
+  }
 
   test("two-batch append + probe == one-shot minhashNearDups pair set") {
     val ix = new NearDupIndex(spark, tmp(), numHashes = 64, bands = 16)
@@ -95,6 +131,9 @@ class NearDupIndexSpec extends SparkSpec {
       "one membership row per kept id") {
     import spark.implicits._
     val path = tmp()
+    // 32 buckets on local[4] (the stamp an index created on 32 slots
+    // carries): more buckets than write tasks, so each task writes several
+    writeStamp(path, numHashes = 64, buckets = 32)
     val ix = new NearDupIndex(spark, path, numHashes = 64, bands = 16)
     val cores = spark.sparkContext.defaultParallelism
     val dataDir = new java.io.File(path, "data")
@@ -144,6 +183,9 @@ class NearDupIndexSpec extends SparkSpec {
     val expected = sigs(history) ++ sig1.filter(e => kept1(e._1)) ++
       sigs(batch2).filter(e => kept2(e._1))
     assert(members.toMap == expected, "membership rows carry each id's batch signature")
+    val bucketIds = seen.toSeq.map { case Part(_, bucket) => bucket.toInt }
+    assert(bucketIds.max >= cores && bucketIds.max < 32,
+      s"fixture: buckets beyond the cores, got ${bucketIds.distinct.sorted}")
   }
 
   test("property: survivors of any batched ingest are pairwise below threshold") {
@@ -170,43 +212,9 @@ class NearDupIndexSpec extends SparkSpec {
   }
 
   test("plan: history sides of probe joins never exchange (O(batch) ingest)") {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.execution.joins.{ShuffledHashJoinExec, SortMergeJoinExec}
     val path = tmp()
     val ix = new NearDupIndex(spark, path, numHashes = 64, bands = 16)
     ix.append(corpus.filter(col("doc_id") <= 3), "text", "doc_id")
-    // history rows must never enter an exchange RAW: every shuffle in the
-    // plan may only see history data that already passed through a join
-    // (i.e. batch-sized candidate rows). Bucketing satisfies each history
-    // join's distribution, so a history scan reachable from an exchange
-    // without crossing a join means history itself was shuffled —
-    // O(|history|) per batch, the exact regression this test pins.
-    def historySidesClean(p: SparkPlan): Unit = {
-      val joins = p.collect {
-        case j: SortMergeJoinExec => j: SparkPlan
-        case j: ShuffledHashJoinExec => j: SparkPlan
-      }
-      assert(joins.nonEmpty, s"expected a shuffled join in:\n$p")
-      def rawHistoryReachable(n: SparkPlan): Boolean = n match {
-        case s: FileSourceScanExec =>
-          s.relation.location.rootPaths.mkString(",").contains(path)
-        case _: SortMergeJoinExec | _: ShuffledHashJoinExec => false
-        case other => other.children.exists(rawHistoryReachable)
-      }
-      for (e <- p.collect { case e: ShuffleExchangeExec => e })
-        assert(!rawHistoryReachable(e.child),
-          s"history scan feeds an exchange without an intervening join:\n$p")
-      // and the joins actually stream history somewhere: at least one join
-      // side reads the index directly with no exchange anywhere under it
-      val streamed = joins.exists(_.children.exists(side =>
-        side.collect { case e: ShuffleExchangeExec => e }.isEmpty &&
-          side.collect {
-            case s: FileSourceScanExec
-              if s.relation.location.rootPaths.mkString(",").contains(path) => s
-          }.nonEmpty))
-      assert(streamed, s"no join streams the history side directly:\n$p")
-    }
     val prevB = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     // worst case on purpose: no broadcast rescue, no AQE re-plan — the
     // static plan itself must keep history exchange-free
@@ -215,7 +223,7 @@ class NearDupIndexSpec extends SparkSpec {
     try {
       val batch = corpus.filter(col("doc_id") > 3)
       val probePlan = ix.probe(batch, "text", "doc_id").queryExecution.executedPlan
-      historySidesClean(probePlan)
+      historyStreamed(probePlan, path)
       // slim-layout scan pin: the band join's history scan must be
       // column-pruned to exclude sig (its rows are sig-NULL; reading the
       // column would drag the bytes of EVERY membership row group too),
@@ -233,17 +241,17 @@ class NearDupIndexSpec extends SparkSpec {
       // ids exchange
       val members = ix.replayMembers(
         batch.select(col("doc_id").as("id")).distinct())
-      historySidesClean(members.queryExecution.executedPlan)
-      // the FUSED ingest probe (near-dup + membership in one join over the
-      // whole bucketed table) — the exact join dedupAndAppend runs
-      historySidesClean(
+      historyStreamed(members.queryExecution.executedPlan, path)
+      // the ingest probe (replay, candidate and verification joins over
+      // the bucketed table) — the exact joins dedupAndAppend runs
+      historyStreamed(
         ix.historyDupIds(ix.banded(batch, "text", "doc_id"), 0.5)
-          .queryExecution.executedPlan)
+          .queryExecution.executedPlan, path)
       // REOPENING the index binds to the same catalog table — the
       // bucketed, exchange-free probe shape must survive a restart
       val reopened = new NearDupIndex(spark, path, numHashes = 64, bands = 16)
-      historySidesClean(
-        reopened.probe(batch, "text", "doc_id").queryExecution.executedPlan)
+      historyStreamed(
+        reopened.probe(batch, "text", "doc_id").queryExecution.executedPlan, path)
     } finally {
       spark.conf.unset("spark.sql.adaptive.enabled")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevB)
@@ -288,6 +296,35 @@ class NearDupIndexSpec extends SparkSpec {
       s"expected one (1, 0, 1.0) pair, got ${pairs2.toSeq}")
   }
 
+  test("history probe: the executed plan scans the data table three times") {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    val path = tmp()
+    val ix = new NearDupIndex(spark, path, numHashes = 64, bands = 16)
+    ix.append(corpus.filter(col("doc_id") <= 3), "text", "doc_id")
+    // perfbench's posture: AQE on, default broadcast threshold. Filter
+    // pushdown splits the logical bucket join per branch, so the table is
+    // read once for replay (band = -1: bucket), once for candidates
+    // (band >= 0: bucket, id) and once for verification (band = -1:
+    // bucket, sig); each scan also reads band for its filter
+    withSqlConf("spark.sql.adaptive.enabled" -> "true") {
+      val dups = ix.historyDupIds(
+        ix.banded(corpus.filter(col("doc_id") > 3), "text", "doc_id"), 0.5)
+      dups.collect(): Unit
+      def scans(p: SparkPlan): Seq[FileSourceScanExec] = (p match {
+        case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+        case q: QueryStageExec => scans(q.plan)
+        case s: FileSourceScanExec
+          if s.relation.location.rootPaths.mkString(",").contains(path) => Seq(s)
+        case _ => Nil
+      }) ++ p.children.flatMap(scans)
+      val read = scans(dups.queryExecution.executedPlan)
+        .map(_.requiredSchema.fieldNames.toSeq.sorted).sortBy(_.mkString(","))
+      assert(read == Seq(Seq("band", "bucket"), Seq("band", "bucket", "id"),
+        Seq("band", "bucket", "sig")),
+        s"data table scans (columns read): $read")
+    }
+  }
+
   test("parameter stamp: reopening with different banding fails fast") {
     val path = tmp()
     new NearDupIndex(spark, path, numHashes = 64, bands = 16)
@@ -298,4 +335,82 @@ class NearDupIndexSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("was built with"))
   }
+
+  test("reopen: an index stamped with 32 buckets keeps 32 buckets and its " +
+      "exchange-free probe") {
+    import org.apache.spark.sql.catalyst.TableIdentifier
+    val path = tmp()
+    writeStamp(path, numHashes = 64, buckets = 32)
+    val first = new NearDupIndex(spark, path, numHashes = 64, bands = 16)
+    first.append(corpus.filter(col("doc_id") <= 3), "text", "doc_id")
+    assert(stamp(path) ==
+      """{"numHashes":64,"bands":16,"shingleSize":3,"dataBuckets":32,"layout":2}""")
+    // a new session's catalog has no entry for the table: the reopened
+    // instance recreates it from the stamp
+    spark.sql(s"DROP TABLE ${first.dataTable}")
+    val reopened = new NearDupIndex(spark, path, numHashes = 64, bands = 16)
+    val dataDir = new java.io.File(path, "data")
+    def bucketIds(): Set[Int] = dataDir.listFiles().map(_.getName)
+      .collect { case BucketId(b) => b.toInt }.toSet
+    val before = bucketIds()
+    val dataFiles = dataDir.listFiles().count(_.getName.endsWith(".parquet"))
+    assert(reopened.dedupAndAppend(corpus.filter(col("doc_id") > 3), "text", "doc_id")
+      .count() > 0, "fixture: the batch has survivors")
+    val numBuckets = spark.sessionState.catalog
+      .getTableMetadata(TableIdentifier(first.dataTable)).bucketSpec.map(_.numBuckets)
+    assert(numBuckets.contains(32), s"catalog bucket count $numBuckets")
+    assert(dataDir.listFiles().count(_.getName.endsWith(".parquet")) > dataFiles)
+    assert(bucketIds().forall(_ < 32) && bucketIds().exists(_ >= 4) &&
+      before.exists(_ >= 4), s"file bucket ids ${bucketIds().toSeq.sorted}")
+    withSqlConf("spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      historyStreamed(reopened.probe(corpus, "text", "doc_id")
+        .queryExecution.executedPlan, path)
+    }
+  }
+
+  test("bucket count is layout only: 32 and default buckets keep the same survivors") {
+    val docs = BenchScale.docs(spark, 300)
+    val p32 = tmp()
+    val pDefault = tmp()
+    writeStamp(p32, numHashes = 32, buckets = 32)
+    val ix32 = new NearDupIndex(spark, p32, numHashes = 32, bands = 16)
+    val ixDefault = new NearDupIndex(spark, pDefault, numHashes = 32, bands = 16)
+    def kept(ix: NearDupIndex, batch: org.apache.spark.sql.DataFrame): Set[Long] =
+      ix.dedupAndAppend(batch, "text", "doc_id", 0.5)
+        .select("doc_id").collect().map(_.getLong(0)).toSet
+    val survivors = (0 until 3).flatMap { b =>
+      val batch = docs.filter(col("doc_id") % 3 === b)
+      val (k32, kDefault) = (kept(ix32, batch), kept(ixDefault, batch))
+      assert(k32 == kDefault, s"batch $b: 32 buckets kept $k32, default kept $kDefault")
+      k32
+    }
+    assert(survivors.nonEmpty && survivors.size < 300,
+      s"fixture should drop near-dups: kept ${survivors.size}")
+    // a new index takes one bucket per task slot of the local[4] session
+    assert(spark.sparkContext.defaultParallelism == 4)
+    assert(stamp(pDefault) ==
+      """{"numHashes":32,"bands":16,"shingleSize":3,"dataBuckets":4,"layout":2}""")
+    assert(stamp(p32).contains(""""dataBuckets":32"""))
+    def ids(ix: NearDupIndex): Set[Long] = ix.indexedIds.collect().map(_.getLong(0)).toSet
+    assert(ids(ix32) == ids(ixDefault))
+  }
+
+  // part-<task index>-<job uuid>_<bucket id>.c000.<codec>.parquet
+  private val BucketId = """part-\d{5}-.*_(\d{5})\.c000.*\.parquet""".r
+
+  /** The layout-2 stamp an index created with `buckets` buckets writes
+    * (default shingle size), so the next instance on `path` adopts it.
+    */
+  private def writeStamp(path: String, numHashes: Int, buckets: Int): Unit = {
+    val dir = java.nio.file.Paths.get(path)
+    java.nio.file.Files.createDirectories(dir)
+    java.nio.file.Files.write(dir.resolve("_meta.json"),
+      (s"""{"numHashes":$numHashes,"bands":16,"shingleSize":3,""" +
+        s""""dataBuckets":$buckets,"layout":2}""").getBytes("UTF-8"))
+  }
+
+  private def stamp(path: String): String =
+    new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(path, "_meta.json")), "UTF-8")
 }
