@@ -71,37 +71,18 @@ object ChAnyJoin {
     val lQuals = (leftAlias.toSeq :+ leftName) ++ leftName.split('.').lastOption
     val rQuals = (rightAlias.toSeq :+ rightName) ++ rightName.split('.').lastOption
 
-    val condRe = """(?s)^([\w.]+)\s*=\s*([\w.]+)$""".r
-    var keyPairs = Vector.empty[(String, String)] // (left col, right col)
-    for (cols <- usingCols) {
-      require(cols.nonEmpty, "ChAnyJoin: empty USING column list")
-      keyPairs = cols.map(c => (c, c)).toVector
-    }
-    for (raw <- onClause.toSeq.flatMap(_.split("(?i)\\band\\b")).map(_.trim).filter(_.nonEmpty)) {
-      val cm = condRe.findFirstMatchIn(raw).getOrElse(
-        sys.error(s"ChAnyJoin: unsupported ON condition '$raw' (equalities only)"))
-      val (s1, c1) = ChJoinSyntax.sideOf(cm.group(1), lQuals, rQuals, leftDf, rightDf, "ChAnyJoin")
-      val (s2, c2) = ChJoinSyntax.sideOf(cm.group(2), lQuals, rQuals, leftDf, rightDf, "ChAnyJoin")
-      if (s1 == s2) sys.error(s"ChAnyJoin: ON condition '$raw' references one side twice")
-      keyPairs :+= (if (s1 == 'l') (c1, c2) else (c2, c1))
+    val keyPairs = usingCols match {
+      case Some(cols) =>
+        require(cols.nonEmpty, "ChAnyJoin: empty USING column list")
+        cols.map(c => (c, c))
+      case None =>
+        onClause.toSeq.flatMap(ChJoinSyntax.onTerms(_, lQuals, rQuals, leftDf, rightDf,
+          "ChAnyJoin", "=", " (equalities only)")).map { case (_, _, lc, rc) => (lc, rc) }
     }
     if (keyPairs.isEmpty) sys.error("ChAnyJoin: ANY join needs at least one equality key")
 
-    // rename right keys onto the left's names (one flat output namespace);
-    // a key pair may not reuse a column either side, and each collision
-    // check runs against the PROGRESSIVELY renamed frame — checking the
-    // original would spuriously reject `l.a = r.b AND l.b = r.c` (b is
-    // renamed away before the second pair needs the name)
-    require(keyPairs.map(_._1.toLowerCase).distinct.size == keyPairs.size,
-      s"ChAnyJoin: duplicate left key in ON: ${keyPairs.map(_._1).mkString(", ")}")
-    require(keyPairs.map(_._2.toLowerCase).distinct.size == keyPairs.size,
-      s"ChAnyJoin: duplicate right key in ON: ${keyPairs.map(_._2).mkString(", ")}")
-    var right2 = rightDf
-    for ((lk, rk) <- keyPairs if !lk.equalsIgnoreCase(rk)) {
-      require(!right2.columns.exists(_.equalsIgnoreCase(lk)),
-        s"ChAnyJoin: cannot rename right key $rk -> $lk: right already has a column $lk")
-      right2 = right2.withColumnRenamed(rk, lk)
-    }
+    // rename right keys onto the left's names (one flat output namespace)
+    val right2 = ChJoinSyntax.renameRightKeys(rightDf, keyPairs, "ChAnyJoin")
     val keys = keyPairs.map(_._1)
     val collisions = right2.columns
       .filter(c => !keys.exists(_.equalsIgnoreCase(c)))

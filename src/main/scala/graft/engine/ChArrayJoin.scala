@@ -132,23 +132,15 @@ object ChArrayJoin {
       sys.error("ChArrayJoin: no ARRAY JOIN clause in query"))
     val (tableName, alias) = (m.group(1), Option(m.group(2)))
     val isLeft = m.group(3) != null
-    // consume the balanced operand expression
-    var i = m.end; var depth = 0; var inStr = false; var esc = false
-    while (i < query.length && {
-      val c = query.charAt(i)
-      if (inStr) {
-        if (esc) esc = false
-        else if (c == '\\') esc = true
-        else if (c == '\'') inStr = false
-        true
-      }
-      else c match {
-        case '\'' => inStr = true; true
-        case '(' | '[' => depth += 1; true
-        case ')' | ']' => depth -= 1; depth >= 0
-        case _ => depth > 0 || !c.isWhitespace
-      }
-    }) i += 1
+    // consume the balanced operand expression: up to depth-0 whitespace
+    // or the close of an enclosing scope, read on the masked twin
+    val masked = ChSql.maskStrings(query)
+    var i = m.end; var depth = 0
+    while (i < query.length && (masked.charAt(i) match {
+      case '(' | '[' => depth += 1; true
+      case ')' | ']' => depth -= 1; depth >= 0
+      case c => depth > 0 || !c.isWhitespace
+    })) i += 1
     val expr = query.substring(m.end, i).trim
     val asM = """(?is)^\s+as\s+(\w+)""".r.findFirstMatchIn(query.substring(i)).getOrElse(
       sys.error("ChArrayJoin: an expression ARRAY JOIN operand needs AS <name>"))

@@ -76,11 +76,6 @@ object ChAsof {
     val lQuals = (leftAlias.toSeq :+ leftName) ++ leftName.split('.').lastOption
     val rQuals = (rightAlias.toSeq :+ rightName) ++ rightName.split('.').lastOption
 
-    // classify each operand: which side does `alias.col` / bare `col` name?
-    def side(term: String): (Char, String) =
-      ChJoinSyntax.sideOf(term, lQuals, rQuals, leftDf, rightDf, "ChAsof")
-
-    val condRe = """(?s)^([\w.]+)\s*(>=|<=|!?=|<>|>|<)\s*([\w.]+)$""".r
     var keyPairs = Vector.empty[(String, String)] // (left col, right col)
     var timePair: Option[(String, String, String)] = None // (op as l-vs-r, lcol, rcol)
     // the USING form (CH: last USING column is the time axis, `>=`
@@ -94,23 +89,9 @@ object ChAsof {
       keyPairs = cols.init.map(c => (c, c)).toVector
       timePair = Some((">=", cols.last, usingRightTs))
     }
-    for (raw <- onClause.toSeq.flatMap(_.split("(?i)\\band\\b")).map(_.trim).filter(_.nonEmpty)) {
-      val cm = condRe.findFirstMatchIn(raw).getOrElse(
-        sys.error(s"ChAsof: unsupported ON condition '$raw'"))
-      val (s1, c1) = side(cm.group(1))
-      val (s2, c2) = side(cm.group(3))
-      if (s1 == s2) sys.error(s"ChAsof: ON condition '$raw' references one side twice")
-      // normalize to left-operand-first (flip the comparator when the
-      // condition was written right-side-first: `ra.t <= la.t` ≡ `la.t >= ra.t`)
-      val (lc, rc) = if (s1 == 'l') (c1, c2) else (c2, c1)
-      val op = if (s1 == 'l') cm.group(2)
-        else cm.group(2) match {
-          case ">=" => "<="
-          case "<=" => ">="
-          case ">" => "<"
-          case "<" => ">"
-          case other => other
-        }
+    for (on <- onClause; (raw, op, lc, rc) <-
+        ChJoinSyntax.onTerms(on, lQuals, rQuals, leftDf, rightDf, "ChAsof",
+          ">=|<=|!?=|<>|>|<")) {
       op match {
         case "=" => keyPairs :+= (lc, rc)
         case ">=" | "<=" | ">" | "<" =>
@@ -130,21 +111,8 @@ object ChAsof {
       case "<" => (true, true)
     }
 
-    // rename right keys onto the left's names (the operator's contract);
-    // refuse renames that would collide with an existing right column —
-    // checked against the PROGRESSIVELY renamed frame, so chains like
-    // `l.a = r.b AND l.b = r.c` (b renamed away before the second pair
-    // needs the name) pass, and duplicate key reuse is rejected up front
-    require(keyPairs.map(_._1.toLowerCase).distinct.size == keyPairs.size,
-      s"ChAsof: duplicate left key in ON: ${keyPairs.map(_._1).mkString(", ")}")
-    require(keyPairs.map(_._2.toLowerCase).distinct.size == keyPairs.size,
-      s"ChAsof: duplicate right key in ON: ${keyPairs.map(_._2).mkString(", ")}")
-    var right2 = rightDf
-    for ((lk, rk) <- keyPairs if !lk.equalsIgnoreCase(rk)) {
-      require(!right2.columns.exists(_.equalsIgnoreCase(lk)),
-        s"ChAsof: cannot rename right key $rk -> $lk: right already has a column $lk")
-      right2 = right2.withColumnRenamed(rk, lk)
-    }
+    // rename right keys onto the left's names (the operator's contract)
+    var right2 = ChJoinSyntax.renameRightKeys(rightDf, keyPairs, "ChAsof")
     if (usingCols.isDefined) right2 = right2.withColumnRenamed(leftTs, rightTs)
 
     val joined = graft.operators.AsOfJoin.asof(

@@ -17,7 +17,8 @@ import scala.collection.mutable
   * is keyword-anchored: a new statement starts at a top-level line opening
   * with CREATE/ALTER/DROP/SELECT/WITH/INSERT (unless the previous
   * statement is dangling on `AS`, which glues a materialized view to its
-  * SELECT). Comments (`--`) are stripped first.
+  * SELECT). `--` comments (never inside a literal) are stripped first;
+  * `;` and the line-start keywords count only as code.
   */
 object ChDdl {
 
@@ -156,58 +157,56 @@ object ChDdl {
 
   // ---- statement splitting -------------------------------------------------
 
-  private def stripComments(s: String): String =
-    s.linesIterator.map { l =>
-      // no '--' inside string literals in the reference scripts
-      val i = l.indexOf("--")
-      if (i >= 0) l.substring(0, i) else l
-    }.mkString("\n")
+  /** `s` without its `--` comments ([[ChSql.lex]]'s spans, so a `--`
+    * inside a literal stays), line ends normalized to `\n`. Block
+    * comments stay: `/*+ … */` is a Spark hint.
+    */
+  private def stripComments(s: String): String = {
+    val text = s.linesIterator.mkString("\n")
+    val sb = new StringBuilder
+    var last = 0
+    for (c <- ChSql.lex(text) if text.startsWith("--", c.start)) {
+      sb.append(text.substring(last, c.start))
+      last = c.end
+    }
+    sb.append(text.substring(last)).toString
+  }
 
   private val startKw = """(?i)^(create|alter|drop|select|with|insert)\b""".r
 
   /** Split a script into statement texts (see class doc for the rules). */
   def splitStatements(script: String): Seq[String] = {
     val text = stripComments(script)
+    val masked = ChSql.maskStrings(text)
+    val depth = ChSql.depths(masked)
     val out = mutable.ArrayBuffer.empty[String]
-    val cur = new StringBuilder
-    var depth = 0
-    var inStr = false
-    def flush(): Unit = {
-      val s = cur.toString.trim
+    var start = 0
+    def cut(end: Int, next: Int): Unit = {
+      val s = text.substring(start, end).trim
       if (s.nonEmpty) out += s
-      cur.clear()
+      start = next
     }
-    for (line <- text.linesIterator) {
-      val t = line.trim
-      val pending = cur.toString.trim
-      val dangling = """(?is).*\bas\s*$""".r.matches(pending)
-      // `INSERT INTO t` on its own line continues with the SELECT (or
-      // VALUES) on the next — a new statement must not start until the
-      // body arrived, and must resume once it has (else a VALUES insert
-      // would swallow everything after it)
-      val openInsert = """(?is)^insert\s+into\b""".r.findFirstIn(pending).isDefined &&
-        """(?is)\b(select|values)\b""".r.findFirstIn(pending).isEmpty
-      if (depth == 0 && !inStr && startKw.findFirstIn(t).isDefined &&
-          pending.nonEmpty && !dangling && !openInsert)
-        flush()
-      var i = 0
-      while (i < line.length) {
-        val c = line.charAt(i)
-        if (inStr) {
-          if (c == '\\' && i + 1 < line.length) { cur += c; cur += line.charAt(i + 1); i += 1 }
-          else { cur += c; if (c == '\'') inStr = false }
-        } else c match {
-          case '\'' => inStr = true; cur += c
-          case '(' => depth += 1; cur += c
-          case ')' => depth -= 1; cur += c
-          case ';' if depth == 0 => flush()
-          case _ => cur += c
-        }
-        i += 1
+    var i = 0
+    while (i < text.length) {
+      if (i == 0 || text.charAt(i - 1) == '\n') {
+        val lineEnd = text.indexOf('\n', i) match { case -1 => text.length; case e => e }
+        val pending = text.substring(start, i).trim
+        val dangling = """(?is).*\bas\s*$""".r.matches(pending)
+        // `INSERT INTO t` on its own line continues with the SELECT (or
+        // VALUES) on the next — a new statement must not start until the
+        // body arrived, and must resume once it has (else a VALUES insert
+        // would swallow everything after it)
+        val openInsert = """(?is)^insert\s+into\b""".r.findFirstIn(pending).isDefined &&
+          """(?is)\b(select|values)\b""".r.findFirstIn(pending).isEmpty
+        // a line that starts inside a literal masks to blanks and a quote
+        if (depth(i) == 0 && startKw.findFirstIn(masked.substring(i, lineEnd).trim).isDefined &&
+            pending.nonEmpty && !dangling && !openInsert)
+          cut(i, i)
       }
-      cur += '\n'
+      if (masked.charAt(i) == ';' && depth(i) == 0) cut(i, i + 1)
+      i += 1
     }
-    flush()
+    cut(text.length, text.length)
     out.toSeq
   }
 
@@ -253,53 +252,14 @@ object ChDdl {
     */
   private[engine] def balanced(s: String, open: Int): (String, Int) = {
     require(s.charAt(open) == '(', s"expected ( at $open")
-    var depth = 0
-    var inStr = false
-    var i = open
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr) {
-        if (c == '\\') i += 1
-        else if (c == '\'') inStr = false
-      }
-      else c match {
-        case '\'' => inStr = true
-        case '(' => depth += 1
-        case ')' =>
-          depth -= 1
-          if (depth == 0) return (s.substring(open + 1, i), i + 1)
-        case _ =>
-      }
-      i += 1
-    }
-    sys.error(s"unbalanced parens from $open in: ${s.take(120)}...")
+    val close = ChSql.matchingClose(ChSql.maskStrings(s), open)
+    if (close < 0) sys.error(s"unbalanced parens from $open in: ${s.take(120)}...")
+    (s.substring(open + 1, close), close + 1)
   }
 
-  /** Split on top-level commas (outside parens and strings). */
-  private def topLevelSplit(s: String): Seq[String] = {
-    val out = mutable.ArrayBuffer.empty[String]
-    val cur = new StringBuilder
-    var depth = 0
-    var inStr = false
-    var esc = false
-    for (c <- s) {
-      if (inStr) {
-        cur += c
-        if (esc) esc = false
-        else if (c == '\\') esc = true
-        else if (c == '\'') inStr = false
-      }
-      else c match {
-        case '\'' => inStr = true; cur += c
-        case '(' => depth += 1; cur += c
-        case ')' => depth -= 1; cur += c
-        case ',' if depth == 0 => out += cur.toString; cur.clear()
-        case _ => cur += c
-      }
-    }
-    if (cur.toString.trim.nonEmpty) out += cur.toString
-    out.toSeq.map(_.trim).filter(_.nonEmpty)
-  }
+  /** Split on top-level commas (outside brackets, literals and comments). */
+  private def topLevelSplit(s: String): Seq[String] =
+    ChSql.splitTop(s, ',').map(_.trim).filter(_.nonEmpty)
 
   /** `name Type [default expr] [comment 'c'] [after col]`. */
   def parseCol(text: String): Col = {
@@ -335,12 +295,12 @@ object ChDdl {
       after = clause("after").filter(_.nonEmpty))
   }
 
-  /** Absolute positions of `default`/`comment`/`after` keywords OUTSIDE
-    * single-quoted string literals (CH syntax: `''` and `\`-escapes stay
-    * inside the literal), OUTSIDE backtick-quoted identifiers (a
-    * column literally named `after` may appear in a DEFAULT expression),
-    * and at PAREN DEPTH 0 (a named-tuple field `Tuple(after UInt32)` or a
-    * function-call operand `coalesce(comment, '')` is not a clause), in
+  /** Absolute positions of `default`/`comment`/`after` keywords in CODE
+    * ([[ChSql.maskStrings]]: never inside a literal, a quoted identifier —
+    * a column literally named `after` may appear in a DEFAULT expression —
+    * or a comment) at bracket depth 0 (a named-tuple field
+    * `Tuple(after UInt32)` or a function-call operand
+    * `coalesce(comment, '')` is not a clause), in
     * text order — the one scan parseCol's type cut and clause extraction
     * share. Remaining boundary: an UNPARENTHESIZED depth-0 expression
     * ending in one of the words (e.g. `DEFAULT x + comment`) still cuts —
@@ -348,44 +308,15 @@ object ChDdl {
     * column be backticked in practice.
     */
   private def topLevelKws(s: String): Seq[(Int, String)] = {
-    val out = Seq.newBuilder[(Int, String)]
-    def isIdent(c: Char): Boolean = c == '_' || c.isLetterOrDigit
-    var i = 0
-    var depth = 0    // paren depth: a keyword INSIDE parens is a type
-                     // argument or function-call operand (`Tuple(after
-                     // UInt32)`, `coalesce(comment, '')`), never a clause
-    var inQ = false  // single-quoted string literal
-    var inBq = false // backtick-quoted identifier (`` escapes a backtick)
-    var inDq = false // double-quoted identifier (CH-legal; "" escapes)
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inQ) {
-        if (c == '\\' && i + 1 < s.length) i += 2
-        else if (c == '\'' && i + 1 < s.length && s.charAt(i + 1) == '\'') i += 2
-        else { if (c == '\'') inQ = false; i += 1 }
-      } else if (inBq) {
-        if (c == '`' && i + 1 < s.length && s.charAt(i + 1) == '`') i += 2
-        else { if (c == '`') inBq = false; i += 1 }
-      } else if (inDq) {
-        if (c == '\\' && i + 1 < s.length) i += 2
-        else if (c == '"' && i + 1 < s.length && s.charAt(i + 1) == '"') i += 2
-        else { if (c == '"') inDq = false; i += 1 }
-      } else if (c == '\'') { inQ = true; i += 1 }
-      else if (c == '`') { inBq = true; i += 1 }
-      else if (c == '"') { inDq = true; i += 1 }
-      else {
-        if (c == '(') depth += 1
-        else if (c == ')') { if (depth > 0) depth -= 1 }
-        else if (depth == 0)
-          for (w <- Seq("default", "comment", "after"))
-            if (s.regionMatches(true, i, w, 0, w.length) &&
-                (i == 0 || !isIdent(s.charAt(i - 1))) &&
-                (i + w.length >= s.length || !isIdent(s.charAt(i + w.length))))
-              out += ((i, w))
-        i += 1
-      }
-    }
-    out.result()
+    val masked = ChSql.maskStrings(s)
+    val depth = ChSql.depths(masked)
+    for {
+      i <- s.indices
+      if depth(i) == 0 && (i == 0 || !ChSql.isIdentChar(masked.charAt(i - 1)))
+      w <- Seq("default", "comment", "after")
+      if masked.regionMatches(true, i, w, 0, w.length) &&
+        (i + w.length >= s.length || !ChSql.isIdentChar(masked.charAt(i + w.length)))
+    } yield (i, w)
   }
 
   /** Undo CH string-literal escaping — [[ChSql.chUnescapeLiteral]], the

@@ -5,9 +5,10 @@ import java.util.regex.Pattern
 import org.apache.spark.sql.DataFrame
 
 /** Shared pieces of the string-level CH join-dialect translators
-  * ([[ChAsof]], [[ChAnyJoin]]): ON-term side classification against the
-  * two resolved tables, and qualifier stripping around the spliced
-  * result view (the executed join is one flat namespace).
+  * ([[ChAsof]], [[ChAnyJoin]]): ON-clause parsing with side
+  * classification against the two resolved tables, the right-key
+  * rename, and qualifier stripping around the spliced result view (the
+  * executed join is one flat namespace).
   */
 private[engine] object ChJoinSyntax {
 
@@ -31,7 +32,50 @@ private[engine] object ChJoinSyntax {
     }
   }
 
-  /** Remove `qual.` prefixes outside single-quoted literals. */
+  /** The conjuncts of an ON clause, each `a <op> b` between the two
+    * sides with `op` one of the `ops` alternation, normalized
+    * left-operand-first: (conjunct, comparator as left-vs-right, left
+    * col, right col). The comparator flips when the conjunct was written
+    * right-side-first (`ra.t <= la.t` ≡ `la.t >= ra.t`). `hint` trails
+    * the unsupported-conjunct error.
+    */
+  def onTerms(on: String, lQuals: Seq[String], rQuals: Seq[String],
+      leftDf: DataFrame, rightDf: DataFrame, who: String,
+      ops: String, hint: String = ""): Seq[(String, String, String, String)] = {
+    val condRe = ("""(?s)^([\w.]+)\s*(""" + ops + """)\s*([\w.]+)$""").r
+    val flip = Map(">=" -> "<=", "<=" -> ">=", ">" -> "<", "<" -> ">")
+    on.split("(?i)\\band\\b").map(_.trim).filter(_.nonEmpty).toSeq.map { raw =>
+      val cm = condRe.findFirstMatchIn(raw).getOrElse(
+        sys.error(s"$who: unsupported ON condition '$raw'$hint"))
+      val (s1, c1) = sideOf(cm.group(1), lQuals, rQuals, leftDf, rightDf, who)
+      val (s2, c2) = sideOf(cm.group(3), lQuals, rQuals, leftDf, rightDf, who)
+      if (s1 == s2) sys.error(s"$who: ON condition '$raw' references one side twice")
+      val op = cm.group(2)
+      if (s1 == 'l') (raw, op, c1, c2) else (raw, flip.getOrElse(op, op), c2, c1)
+    }
+  }
+
+  /** `rightDf` with each right key renamed onto its left key (the
+    * operators' one-namespace contract). Each rename is checked against
+    * the PROGRESSIVELY renamed frame, so `l.a = r.b AND l.b = r.c` passes
+    * (b is renamed away before the second pair needs the name); a key
+    * reused on either side is rejected up front.
+    */
+  def renameRightKeys(rightDf: DataFrame, keyPairs: Seq[(String, String)],
+      who: String): DataFrame = {
+    require(keyPairs.map(_._1.toLowerCase).distinct.size == keyPairs.size,
+      s"$who: duplicate left key in ON: ${keyPairs.map(_._1).mkString(", ")}")
+    require(keyPairs.map(_._2.toLowerCase).distinct.size == keyPairs.size,
+      s"$who: duplicate right key in ON: ${keyPairs.map(_._2).mkString(", ")}")
+    keyPairs.filter { case (lk, rk) => !lk.equalsIgnoreCase(rk) }
+      .foldLeft(rightDf) { case (right, (lk, rk)) =>
+        require(!right.columns.exists(_.equalsIgnoreCase(lk)),
+          s"$who: cannot rename right key $rk -> $lk: right already has a column $lk")
+        right.withColumnRenamed(rk, lk)
+      }
+  }
+
+  /** Remove `qual.` prefixes outside literals, quoted names and comments. */
   def stripQualifiers(sql: String, quals: Seq[String]): String = {
     val pat = ("(?i)(?<![\\w.])(?:" +
       quals.map(Pattern.quote).mkString("|") + ")\\.").r

@@ -1,5 +1,7 @@
 package graft.engine
 
+import scala.util.matching.Regex
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** ClickHouse `LIMIT [offset,] n BY expressions` — the per-group head
@@ -36,43 +38,29 @@ object ChLimitBy {
       offset: Long, n: Long, byCols: String,
       start: Int, end: Int)
 
-  /** Top-level (depth-0, outside string literals) spans of `q`. */
-  private[engine] def topLevel(q: String): Array[Boolean] = {
-    val ok = new Array[Boolean](q.length)
-    var depth = 0; var inStr = false; var esc = false; var i = 0
-    while (i < q.length) {
-      val c = q.charAt(i)
-      if (inStr) {
-        if (esc) esc = false
-        else if (c == '\\') esc = true
-        else if (c == '\'') inStr = false
-      }
-      else c match {
-        case '\'' => inStr = true
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case _ =>
-      }
-      ok(i) = !inStr && depth == 0 && (c != '(' || depth == 1)
-      i += 1
-    }
-    ok
+  /** Matches of `re` on `q`'s masked twin ([[ChSql.maskStrings]]) that
+    * start at bracket depth 0. Groups read the masked text, so they may
+    * only capture code.
+    */
+  private[engine] def topLevel(re: Regex, q: String): Iterator[Regex.Match] = {
+    val masked = ChSql.maskStrings(q)
+    val depth = ChSql.depths(masked)
+    re.findAllMatchIn(masked).filter(m => depth(m.start) == 0)
   }
 
   private val limitByRe =
     """(?is)\blimit\s+(\d+)(?:\s*,\s*(\d+)|\s+offset\s+(\d+))?\s+by\s+""".r
 
   private def findClause(q: String): Option[Clause] = {
-    val ok = topLevel(q)
-    limitByRe.findAllMatchIn(q).find(m => ok(m.start)).map { m =>
+    topLevel(limitByRe, q).nextOption().map { m =>
       // LIMIT a, b BY -> offset a, take b; LIMIT n OFFSET o BY -> take n
       val (off, n) =
         if (m.group(2) != null) (m.group(1).toLong, m.group(2).toLong)
         else if (m.group(3) != null) (m.group(3).toLong, m.group(1).toLong)
         else (0L, m.group(1).toLong)
       // BY list runs to the next top-level LIMIT / SETTINGS / FORMAT / end
-      val tail = """(?is)\b(limit|settings|format)\b""".r.findAllMatchIn(q)
-        .find(t => t.start >= m.end && ok(t.start)).map(_.start).getOrElse(q.length)
+      val tail = topLevel("""(?is)\b(limit|settings|format)\b""".r, q)
+        .find(_.start >= m.end).map(_.start).getOrElse(q.length)
       Clause(off, n, q.substring(m.end, tail).trim.stripSuffix(";").trim, m.start, tail)
     }
   }
@@ -87,15 +75,14 @@ object ChLimitBy {
     val c = findClause(query).getOrElse(
       sys.error("ChLimitBy: no top-level LIMIT ... BY clause"))
     require(c.byCols.nonEmpty, "ChLimitBy: empty BY expression list")
-    val ok = topLevel(query)
     // the final LIMIT (after the BY clause), if any, re-applies outside
     val finalLimit = query.substring(c.end).trim.stripSuffix(";").trim
     require(finalLimit.isEmpty || finalLimit.matches("(?is)limit\\s+\\d+"),
       s"ChLimitBy: unexpected trailing clause after LIMIT BY: '$finalLimit'")
     // the global ORDER BY (before the BY clause) drives both the window
     // rank and the restored outer ordering
-    val obM = """(?is)\border\s+by\s+""".r.findAllMatchIn(query)
-      .filter(m => m.start < c.start && ok(m.start)).toSeq.lastOption.getOrElse(
+    val obM = topLevel("""(?is)\border\s+by\s+""".r, query)
+      .filter(_.start < c.start).toSeq.lastOption.getOrElse(
         sys.error("ChLimitBy: LIMIT n BY needs an ORDER BY to be deterministic " +
           "(ClickHouse returns an arbitrary n per group without one)"))
     val orderList = query.substring(obM.end, c.start).trim

@@ -15,11 +15,9 @@ object ChQualify {
   private val qualifyRe = """(?is)\bqualify\s+""".r
 
   private def find(q: String): Option[(Int, Int, String, String)] = {
-    val ok = ChLimitBy.topLevel(q)
-    qualifyRe.findAllMatchIn(q).find(m => ok(m.start)).map { m =>
-      val tail = """(?is)\b(order\s+by|limit|settings|format)\b""".r
-        .findAllMatchIn(q).find(t => t.start >= m.end && ok(t.start))
-        .map(_.start).getOrElse(q.length)
+    ChLimitBy.topLevel(qualifyRe, q).nextOption().map { m =>
+      val tail = ChLimitBy.topLevel("""(?is)\b(order\s+by|limit|settings|format)\b""".r, q)
+        .find(_.start >= m.end).map(_.start).getOrElse(q.length)
       (m.start, tail, q.substring(m.end, tail).trim.stripSuffix(";").trim,
         q.substring(tail).trim.stripSuffix(";"))
     }
@@ -57,34 +55,17 @@ object ChDistinctOn {
   def rewrite(query: String): String = {
     val m = headRe.findFirstMatchIn(query).getOrElse(
       sys.error("ChDistinctOn: no SELECT DISTINCT ON (...) head"))
-    // balanced column list — string-aware, like every scanner here (a
-    // quoted '(' must not bump the depth)
-    var depth = 1
-    var inStr = false
-    var esc = false
-    var i = m.end
-    while (i < query.length && depth > 0) {
-      val c = query.charAt(i)
-      if (inStr) {
-        if (esc) esc = false
-        else if (c == '\\') esc = true
-        else if (c == '\'') inStr = false
-      }
-      else if (c == '\'') inStr = true
-      else if (c == '(') depth += 1
-      else if (c == ')') depth -= 1
-      i += 1
-    }
-    require(depth == 0, "ChDistinctOn: unbalanced DISTINCT ON column list")
-    val cols = query.substring(m.end, i - 1).trim
+    // balanced column list, read on the masked twin (a quoted '(' must
+    // not bump the depth)
+    val close = ChSql.matchingClose(ChSql.maskStrings(query), m.end - 1)
+    require(close >= 0, "ChDistinctOn: unbalanced DISTINCT ON column list")
+    val cols = query.substring(m.end, close).trim
     require(cols.nonEmpty, "ChDistinctOn: empty DISTINCT ON column list")
-    val rest = query.substring(i).trim
+    val rest = query.substring(close + 1).trim
     val stripped = (m.group(1) + rest).trim.stripSuffix(";").trim
     // the LIMIT 1 BY clause goes BEFORE any trailing top-level LIMIT n —
     // appending after it would feed 'LIMIT n' into the window's ORDER BY
-    val ok = ChLimitBy.topLevel(stripped)
-    val tailLimit = """(?is)\blimit\s+\d+\s*$""".r.findAllMatchIn(stripped)
-      .find(t => ok(t.start))
+    val tailLimit = ChLimitBy.topLevel("""(?is)\blimit\s+\d+\s*$""".r, stripped).nextOption()
     tailLimit match {
       case Some(t) =>
         ChLimitBy.rewrite(stripped.substring(0, t.start).trim +

@@ -1029,8 +1029,8 @@ final class ChReplay(spark: SparkSession, warehouseDir: String) {
       ensureCatalogViews()
     // mechanical dialect shims first (PREWHERE, FORMAT, WITH TOTALS)
     var q = ChSql(sql0)
-    q = """(?i)\busing\s+(\w+(?:\s*,\s*\w+)+)""".r
-      .replaceAllIn(q, m => "USING (" + m.group(1).replaceAll("\\s+", "") + ")")
+    q = ChSql.replaceOnMasked(q, """(?i)\busing\s+(\w+(?:\s*,\s*\w+)+)""".r)(m =>
+      "USING (" + m.group(1).replaceAll("\\s+", "") + ")")
     for ((from, to) <- substitutions) q = q.replace(from, to)
     // CH SAMPLE clause: hash-range filter over the table's SAMPLE BY key
     // (view-splicing form, so SAMPLE composes with the join shims below)
@@ -1097,27 +1097,21 @@ final class ChReplay(spark: SparkSession, warehouseDir: String) {
     * block's aliases, CH-style, at any nesting depth.
     */
   private def chAliasGroupBy(q: String): String = {
+    val masked = ChSql.maskStrings(q)
     val sb = new StringBuilder
     val subs = mutable.ArrayBuffer.empty[String]
     var i = 0
-    var inStr = false
     while (i < q.length) {
-      val c = q.charAt(i)
-      if (inStr) {
-        if (c == '\\' && i + 1 < q.length) { sb += c; sb += q.charAt(i + 1); i += 2 }
-        else { sb += c; if (c == '\'') inStr = false; i += 1 }
-      }
-      else if (c == '\'') { inStr = true; sb += c; i += 1 }
-      else if (c == '(' && {
+      if (masked.charAt(i) == '(' && {
         var j = i + 1
-        while (j < q.length && q.charAt(j).isWhitespace) j += 1
-        q.regionMatches(true, j, "select", 0, 6)
+        while (j < q.length && masked.charAt(j).isWhitespace) j += 1
+        masked.regionMatches(true, j, "select", 0, 6)
       }) {
         val (body, end) = ChDdl.balanced(q, i)
         subs += chAliasGroupBy(body)
         sb.append("(\u0000").append(subs.length - 1).append("\u0000)")
         i = end
-      } else { sb += c; i += 1 }
+      } else { sb += q.charAt(i); i += 1 }
     }
     val flat = rewriteFlatBlock(sb.toString)
     "\u0000(\\d+)\u0000".r.replaceAllIn(flat, m =>
@@ -1163,56 +1157,11 @@ final class ChReplay(spark: SparkSession, warehouseDir: String) {
     */
   private def rewriteFlatBranch(q: String): String = {
     val selM = """(?is)^\s*select\s+""".r.findFirstMatchIn(q).getOrElse(return q)
-    // first top-level FROM bounds the select list; a quoted literal may
-    // contain ' from ' or commas, so track single-quote state like
-    // splitStatements/topLevelSplit do
-    var depth = 0
-    var inStr = false
-    var fromIdx = -1
-    var i = selM.end
-    while (i < q.length && fromIdx < 0) {
-      val c = q.charAt(i)
-      if (inStr) {
-        if (c == '\\') i += 1
-        else if (c == '\'') inStr = false
-      }
-      else c match {
-        case '\'' => inStr = true
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case 'f' | 'F' if depth == 0 &&
-            """(?is)^\bfrom\b""".r.findFirstIn(q.substring(i, math.min(q.length, i + 5))).isDefined &&
-            (i == 0 || !q.charAt(i - 1).isLetterOrDigit) =>
-          fromIdx = i
-        case _ =>
-      }
-      i += 1
-    }
+    // first top-level FROM bounds the select list (read on the masked
+    // twin: a quoted literal may contain ' from ' or commas)
+    val fromIdx = ChSql.findTopLevelKeyword(ChSql.maskStrings(q), selM.end, "from")
     if (fromIdx < 0) return q
-    val items = {
-      val out = mutable.ArrayBuffer.empty[String]
-      val cur = new StringBuilder
-      var d = 0
-      var s = false
-      var esc = false
-      for (c <- q.substring(selM.end, fromIdx)) {
-        if (s) {
-          cur += c
-          if (esc) esc = false
-          else if (c == '\\') esc = true
-          else if (c == '\'') s = false
-        }
-        else c match {
-          case '\'' => s = true; cur += c
-          case '(' => d += 1; cur += c
-          case ')' => d -= 1; cur += c
-          case ',' if d == 0 => out += cur.toString; cur.clear()
-          case _ => cur += c
-        }
-      }
-      out += cur.toString
-      out.toSeq
-    }
+    val items = ChSql.splitTopArgs(q.substring(selM.end, fromIdx))
     val aliasOrdinal = items.zipWithIndex.flatMap { case (item, idx) =>
       """(?is)\bas\s+(\w+)\s*$""".r.findFirstMatchIn(item.trim).map(_.group(1).toLowerCase -> (idx + 1))
     }.toMap

@@ -23,11 +23,11 @@ package graft.engine
   */
 object ChSql {
 
-  /** Rewrites `q` by matching `re` against the string-MASKED text (literal
-    * contents blanked, same length — see [[maskStrings]]) and assembling
-    * the output from ORIGINAL-text slices. Keyword regexes can therefore
-    * never match inside string literals, and literal bytes (including
-    * backslash-escaped quotes) pass through untouched. `repl` receives the
+  /** Rewrites `q` by matching `re` against its masked twin (literal,
+    * quoted-identifier and comment bodies blanked, same length — see
+    * [[maskStrings]]) and assembling the output from ORIGINAL-text
+    * slices. Keyword regexes can therefore never match inside a literal
+    * or a comment, and their bytes pass through untouched. `repl` receives the
     * masked match; use [[grp]] to read a group's ORIGINAL text.
     */
   private[engine] def replaceOnMasked(q: String,
@@ -49,32 +49,22 @@ object ChSql {
   private[engine] def grp(q: String, m: scala.util.matching.Regex.Match, g: Int): String =
     q.substring(m.start(g), m.end(g))
 
-  /** Applies `f` to each maximal run of non-literal text, passing string
-    * literals AND quoted identifiers (backtick / double-quote) through
-    * verbatim — the in-place-rewrite twin of [[replaceOnMasked]] for shims
-    * whose regexes stay inside one code run. A column named `` `a.1` ``
-    * or an alias quoting a shim keyword must never be rewritten, exactly
-    * as [[maskStrings]] hides them from the keyword scans.
+  /** Applies `f` to each maximal run of CODE — the text between [[lex]]'s
+    * spans — passing string literals, quoted identifiers and comments
+    * through verbatim: the in-place-rewrite twin of [[replaceOnMasked]]
+    * for shims whose regexes stay inside one code run. A column named
+    * `` `a.1` `` or an alias quoting a shim keyword must never be
+    * rewritten, exactly as [[maskStrings]] hides them from the keyword
+    * scans.
     */
   private[engine] def mapCode(q: String)(f: String => String): String = {
     val out = new StringBuilder
-    val code = new StringBuilder
-    var i = 0; var quote: Char = 0
-    def flush(): Unit = { out.append(f(code.toString)); code.clear() }
-    while (i < q.length) {
-      val c = q.charAt(i)
-      if (quote == 0) {
-        if (c == '\'' || c == '`' || c == '"') { flush(); quote = c; out += c }
-        else code += c
-        i += 1
-      } else if ((quote == '\'' || quote == '"') && c == '\\' && i + 1 < q.length) {
-        // backslash escapes live in '...' and "..." bodies; backticks
-        // escape only by doubling
-        out += c; out += q.charAt(i + 1); i += 2
-      } else { out += c; if (c == quote) quote = 0; i += 1 }
+    var last = 0
+    for (s <- lex(q)) {
+      out.append(f(q.substring(last, s.start))).append(q.substring(s.start, s.end))
+      last = s.end
     }
-    flush()
-    out.toString
+    out.append(f(q.substring(last))).toString
   }
 
   private[engine] def isIdentChar(c: Char): Boolean = c.isLetterOrDigit || c == '_'
@@ -101,23 +91,14 @@ object ChSql {
       (j + w.length >= s.length || !isIdentChar(s.charAt(j + w.length)))
 
   /** End (exclusive) of the NAME token at `j`: a bare identifier run or a
-    * quoted identifier (masked bodies are blanked but the quote chars
-    * survive, so scanning to the matching quote is exact). Returns `j`
-    * when neither starts there (or the quote never closes).
+    * quoted identifier (masked bodies are blank, escapes included, so the
+    * next quote char is the close). Returns `j` when neither starts there
+    * (or the quote never closes).
     */
   private def nameTokenEnd(masked: String, j: Int): Int =
     if (j < masked.length && (masked.charAt(j) == '`' || masked.charAt(j) == '"')) {
-      val qc = masked.charAt(j)
-      var e = j + 1
-      var closed = false
-      while (e < masked.length && !closed) {
-        if (masked.charAt(e) == qc) {
-          // a doubled quote char is the in-identifier escape, not the close
-          if (e + 1 < masked.length && masked.charAt(e + 1) == qc) e += 2
-          else closed = true
-        } else e += 1
-      }
-      if (closed) e + 1 else j
+      val e = masked.indexOf(masked.charAt(j), j + 1)
+      if (e < 0) j else e + 1
     } else identEnd(masked, j)
 
   /** Is position `i` (a char of `masked`) the `(` opening a
@@ -299,11 +280,10 @@ object ChSql {
     cur
   }
 
-  /** A QUOTED identifier in a regex over MASKED text: the body is blanks
-    * plus surviving doubled-quote escapes (the same alternation
-    * [[nameTokenEnd]] scans).
+  /** A QUOTED identifier in a regex over MASKED text: delimiters around a
+    * blank body (the same token [[nameTokenEnd]] scans).
     */
-  private val quotedNameRe = """(?:`(?:[^`]|``)*`|"(?:[^"]|"")*")"""
+  private val quotedNameRe = """(?:`[^`]*`|"[^"]*")"""
   /** Words that can trail an expression or ORDER BY key list and are
     * therefore NEVER a bare FORMAT name — without this, `ORDER BY format
     * ASC` (a column named format, statement-final direction) would read
@@ -352,16 +332,14 @@ object ChSql {
     */
   def stripSettings(q: String): String = {
     // a value is a quoted literal or a bare token. The match runs on
-    // MASKED text: literal contents are blanks, but the QUOTE characters
-    // of a doubled '' escape survive masking, so the literal alternation
-    // must still accept them — hence ('' | [^']) inside the quotes
-    // the bare-token arm is POSSESSIVE ([^,;\s]++): a value runs to the
+    // MASKED text, where a literal is its two quotes around blanks.
+    // The bare-token arm is POSSESSIVE ([^,;\s]++): a value runs to the
     // next separator and never backtracks, so the trailing-FORMAT
     // lookahead cannot split a value like `x-format` at any boundary.
     // Strictly MORE conservative than CH's lexer (which would tokenize
     // x-format as three tokens and reject the statement): malformed
     // input passes through unstripped instead of being mangled
-    val v = "(?:'(?:[^']|'')*'|[^,;\\s]++)"
+    val v = "(?:'[^']*'|[^,;\\s]++)"
     replaceOnMasked(q,
       (s"(?is)\\bsettings\\s+\\w+\\s*=\\s*$v(\\s*,\\s*\\w+\\s*=\\s*$v)*" +
         "(?=\\s*(" + formatClauseRe + "\\s*)?;?\\s*$)").r)(_ => "")
@@ -436,9 +414,7 @@ object ChSql {
     // where `ORDER BY 1` is a CONSTANT ordering: every row ranks 1 and the
     // whole set comes back. Reject loudly instead of silently misranking —
     // the same discipline as the shim's other refusals.
-    val maskedKeys = masked.substring(afterOrder + 2, li)
-    var kd = 0; var ks = 0; var ki = 0
-    def checkKey(item: String): Unit = {
+    splitTopArgs(keys).foreach { item =>
       val bare = item.trim
         .replaceAll("(?is)\\s+nulls\\s+(first|last)\\s*$", "")
         .replaceAll("(?is)\\s+(asc|desc)\\s*$", "")
@@ -448,14 +424,6 @@ object ChSql {
           "is re-emitted inside rank() OVER, where a bare integer is a " +
           "constant ordering, not a position)")
     }
-    while (ki < maskedKeys.length) {
-      val c = maskedKeys.charAt(ki)
-      if (c == '(') kd += 1
-      else if (c == ')') kd -= 1
-      else if (c == ',' && kd == 0) { checkKey(maskedKeys.substring(ks, ki)); ks = ki + 1 }
-      ki += 1
-    }
-    checkKey(maskedKeys.substring(ks))
     val body = q.substring(0, ob).trim
     s"SELECT * EXCEPT (__gf_ties_rank) FROM (" +
       s"SELECT *, rank() OVER (ORDER BY $keys) AS __gf_ties_rank FROM (" +
@@ -489,33 +457,9 @@ object ChSql {
     */
   def scalarWith(q: String): String = {
     val m = """(?is)^\s*with\s+""".r.findFirstMatchIn(q).getOrElse(return q)
-    // scan the WITH list: top-level commas separate items; the first
-    // top-level SELECT keyword starts the body
-    var depth = 0
-    var i = m.end
-    var itemStart = i
-    val items = scala.collection.mutable.ArrayBuffer.empty[String]
-    var bodyStart = -1
-    var quote: Char = 0
-    while (i < q.length && bodyStart < 0) {
-      val c = q.charAt(i)
-      if (quote != 0) {
-        if ((quote == '\'' || quote == '"') && c == '\\') i += 1
-        else if (c == quote) quote = 0
-      }
-      else c match {
-        case '\'' | '`' | '"' => quote = c
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case ',' if depth == 0 =>
-          items += q.substring(itemStart, i); itemStart = i + 1
-        case 's' | 'S' if depth == 0 && !isIdentChar(q.charAt(i - 1)) &&
-            wordAt(q, i, "select") =>
-          items += q.substring(itemStart, i); bodyStart = i
-        case _ =>
-      }
-      i += 1
-    }
+    // the first top-level SELECT keyword starts the body; top-level
+    // commas before it separate the items
+    val bodyStart = findTopLevelKeyword(maskStrings(q), m.end, "select")
     if (bodyStart < 0) return q
     // scalar form ends in a bare identifier (`expr AS name`); a CTE item
     // ends in the parenthesized subquery (`name AS (select ...)`) and
@@ -523,7 +467,8 @@ object ChSql {
     // `(SELECT ...) AS name` scalar subqueries also pass through: CH
     // allows them, but inlining is Spark-dialect-sensitive — out of scope.
     val scalarItem = """(?is)^\s*(.*?)\s+as\s+(\w+)\s*$""".r
-    val binds = items.map(_.trim).filter(_.nonEmpty).map { it =>
+    val items = splitTopArgs(q.substring(m.end, bodyStart)).map(_.trim).filter(_.nonEmpty)
+    val binds = items.map { it =>
       scalarItem.findFirstMatchIn(it) match {
         case Some(sm) if !sm.group(1).trim.startsWith("(") =>
           (sm.group(2), sm.group(1).trim)
@@ -580,12 +525,13 @@ object ChSql {
   }
 
   /** Decode a WHOLE CH string-literal body (quotes already stripped):
-    * every `\`-escape via [[chEscape]] plus the `''` doubled-quote form.
+    * every `\`-escape via [[chEscape]] plus the doubled-`quote` form
+    * (`''`; `""` for a double-quoted identifier).
     * The one full-literal decoder — shared by ChDdl's COMMENT clause and
     * ChReplay's SHOW ... LIKE pattern handling, so an escape-rule change
     * lands everywhere at once.
     */
-  def chUnescapeLiteral(p: String): String = {
+  def chUnescapeLiteral(p: String, quote: Char = '\''): String = {
     val sb = new StringBuilder
     var i = 0
     while (i < p.length) {
@@ -594,8 +540,8 @@ object ChSql {
         val (dec, used) = chEscape(p, i + 1)
         sb.append(dec)
         i += 1 + used
-      } else if (c == '\'' && i + 1 < p.length && p.charAt(i + 1) == '\'') {
-        sb.append('\''); i += 2
+      } else if (c == quote && i + 1 < p.length && p.charAt(i + 1) == quote) {
+        sb.append(quote); i += 2
       } else { sb.append(c); i += 1 }
     }
     sb.toString
@@ -612,41 +558,15 @@ object ChSql {
     */
   def chQuotedIdents(q: String): String = {
     val sb = new StringBuilder
-    var i = 0; var quote: Char = 0
-    while (i < q.length) {
-      val c = q.charAt(i)
-      if (quote != 0) {
-        if (quote == '\'' && c == '\\' && i + 1 < q.length) {
-          sb += c; sb += q.charAt(i + 1); i += 2
-        } else { sb += c; if (c == quote) quote = 0; i += 1 }
-      } else if (c == '\'' || c == '`') { quote = c; sb += c; i += 1 }
-      else if (c == '"') {
-        val name = new StringBuilder
-        var j = i + 1; var closed = false
-        while (j < q.length && !closed) {
-          val d = q.charAt(j)
-          if (d == '\\' && j + 1 < q.length) {
-            // CH quoted identifiers use string-literal escape rules --
-            // the shared chEscape table
-            val (dec, used) = chEscape(q, j + 1)
-            name ++= dec
-            j += 1 + used
-          }
-          else if (d == '"') {
-            if (j + 1 < q.length && q.charAt(j + 1) == '"') { name += '"'; j += 2 }
-            else { closed = true; j += 1 }
-          } else { name += d; j += 1 }
-        }
-        if (!closed) { sb += c; i += 1 } // unterminated: pass through
-        else {
-          sb += '`'
-          sb.append(name.toString.replace("`", "``"))
-          sb += '`'
-          i = j
-        }
-      } else { sb += c; i += 1 }
+    var last = 0
+    // an unterminated name passes through
+    for (s <- lex(q) if q.charAt(s.start) == '"' && s.bodyEnd < s.end) {
+      // CH quoted identifiers use string-literal escape rules
+      val name = chUnescapeLiteral(q.substring(s.bodyStart, s.bodyEnd), '"')
+      sb.append(q.substring(last, s.start)).append('`').append(name.replace("`", "``")).append('`')
+      last = s.end
     }
-    sb.toString
+    sb.append(q.substring(last)).toString
   }
 
   /** CH bracket array literals — `[e1, e2, ...]` → `array(e1, ...)` —
@@ -659,43 +579,20 @@ object ChSql {
     * rule every SQL dialect uses).
     */
   def chLiterals(q: String): String = {
+    val masked = maskStrings(q)
     val sb = new StringBuilder
-    var i = 0; var quote: Char = 0
-    def balancedBracket(from: Int): Int = {
-      var d = 0; var j = from; var qt: Char = 0
-      while (j < q.length) {
-        val c = q.charAt(j)
-        if (qt != 0) {
-          if ((qt == '\'' || qt == '"') && c == '\\') j += 1
-          else if (c == qt) qt = 0
-        } else c match {
-          case '\'' | '`' | '"' => qt = c
-          case '[' => d += 1
-          case ']' => d -= 1; if (d == 0) return j
-          case _ =>
-        }
-        j += 1
-      }
-      sys.error(s"chLiterals: unbalanced [ at $from")
-    }
+    var i = 0
     while (i < q.length) {
-      val c = q.charAt(i)
-      if (quote != 0) {
-        if ((quote == '\'' || quote == '"') && c == '\\' && i + 1 < q.length) {
-          sb += c; sb += q.charAt(i + 1); i += 2
-        }
-        else { sb += c; if (c == quote) quote = 0; i += 1 }
-      }
-      else if (c == '\'' || c == '`' || c == '"') { quote = c; sb += c; i += 1 }
-      else if (c == '[' && {
+      if (masked.charAt(i) == '[' && {
         // a subscript `a[1]` has its identifier (or closing paren/bracket/
         // quoted-identifier quote) IMMEDIATELY before the bracket; any
         // whitespace (or start/other punctuation) before `[` means a literal
-        val prev = if (i == 0) ' ' else q.charAt(i - 1)
+        val prev = if (i == 0) ' ' else masked.charAt(i - 1)
         !(prev.isLetterOrDigit || prev == '_' || prev == ')' || prev == ']' ||
           prev == '`' || prev == '"')
       }) {
-        val end = balancedBracket(i)
+        val end = matchingClose(masked, i)
+        if (end < 0) sys.error(s"chLiterals: unbalanced [ at $i")
         val items = splitTopArgs(q.substring(i + 1, end)).map { raw =>
           val e = chLiterals(raw).trim
           // (a, b, ...) with a top-level comma is a CH tuple literal;
@@ -706,7 +603,7 @@ object ChSql {
         }
         sb.append("array(").append(items.mkString(", ")).append(")")
         i = end + 1
-      } else { sb += c; i += 1 }
+      } else { sb += q.charAt(i); i += 1 }
     }
     sb.toString
   }
@@ -813,83 +710,115 @@ object ChSql {
     false
   }
 
-  /** `q` with string-literal AND quoted-identifier contents blanked
-    * (same length, quote chars kept) so keyword/identifier scans cannot
-    * match inside `'...'` literals or `` `...` `` / `"..."` quoted
-    * identifiers. A backslash inside a literal escapes the next char
-    * (Spark's and CH's default string syntax), so `'don\'t'` does not
-    * terminate early; doubled quotes work naturally with the toggle
-    * (exit + re-enter).
+  /** One non-code span of a SQL text: `[start, end)` with its
+    * delimiters, `[bodyStart, bodyEnd)` between them (`bodyEnd == end`
+    * when no closing delimiter follows).
+    */
+  private[engine] final case class Span(start: Int, bodyStart: Int, bodyEnd: Int, end: Int)
+
+  /** THE lexer of the dialect layer: the non-code spans of `q`, in text
+    * order. Every scanner reads its result — through [[maskStrings]],
+    * [[mapCode]], [[depths]], [[matchingClose]] or [[splitTop]] — and
+    * none tracks quotes itself. The rules:
+    *  - `'…'` string literal: `\` escapes the next char, `''` is a quote;
+    *  - `"…"` quoted identifier (CH; a string in Spark's default
+    *    dialect): the same two escapes with `"`;
+    *  - `` `…` `` quoted identifier: only a doubled backtick escapes (a
+    *    backslash is a plain byte);
+    *  - `--` comment: runs to the end of the line (the newline is code);
+    *  - `/* … */` comment: not nested.
+    * A span that never closes runs to the end of the text.
+    */
+  private[engine] def lex(q: String): IndexedSeq[Span] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[Span]
+    val n = q.length
+    var i = 0
+    while (i < n) {
+      val c = q.charAt(i)
+      val span =
+        if (c == '\'' || c == '`' || c == '"') {
+          var j = i + 1; var close = -1
+          while (close < 0 && j < n) {
+            val d = q.charAt(j)
+            if (d == '\\' && c != '`' && j + 1 < n) j += 2
+            else if (d != c) j += 1
+            else if (j + 1 < n && q.charAt(j + 1) == c) j += 2
+            else close = j
+          }
+          Some(if (close < 0) Span(i, i + 1, n, n) else Span(i, i + 1, close, close + 1))
+        } else if (q.startsWith("--", i)) {
+          val e = q.indexOf('\n', i) match { case -1 => n; case e => e }
+          Some(Span(i, i + 2, e, e))
+        } else if (q.startsWith("/*", i)) {
+          val e = q.indexOf("*/", i + 2)
+          Some(if (e < 0) Span(i, i + 2, n, n) else Span(i, i + 2, e, e + 2))
+        } else None
+      span match {
+        case Some(s) => out += s; i = s.end
+        case None => i += 1
+      }
+    }
+    out.toIndexedSeq
+  }
+
+  /** `q`'s masked twin: every [[lex]] span's body blanked (same length,
+    * delimiters kept), so keyword, identifier and bracket scans over it
+    * cannot match inside a literal, a quoted identifier or a comment.
     */
   private[engine] def maskStrings(q: String): String = {
     val sb = new StringBuilder(q)
-    // 0 = code, else the active quote char: '\'' string literal,
-    // '`' / '"' quoted identifier. Quoted-identifier CONTENTS are blanked
-    // too — `format` / "offset" as column names must never match the
-    // keyword scans (clauseEnders, findTopLevelKeyword) or the rewrite
-    // regexes any more than a string literal's bytes may. The quote chars
-    // themselves survive, and the doubled-quote escape ('' `` "") works
-    // naturally with the toggle (exit + immediate re-enter keeps parity).
-    var quote: Char = 0
-    var i = 0
-    while (i < q.length) {
-      val c = q.charAt(i)
-      // backslash escapes exist in '...' and "..." bodies; backticks
-      // escape only by doubling, so a backslash there is a plain byte
-      if ((quote == '\'' || quote == '"') && c == '\\' && i + 1 < q.length) {
-        sb.setCharAt(i, ' '); sb.setCharAt(i + 1, ' '); i += 2
-      } else {
-        if (quote == 0 && (c == '\'' || c == '`' || c == '"')) quote = c
-        else if (c == quote) quote = 0
-        else if (quote != 0) sb.setCharAt(i, ' ')
-        i += 1
-      }
-    }
+    for (s <- lex(q); k <- s.bodyStart until s.bodyEnd) sb.setCharAt(k, ' ')
     sb.toString
   }
 
-  /** Index of the `)` matching the `(` at `open` (string-aware,
-    * backslash-escape-aware).
+  /** Bracket depth of each char of `masked`: `(`/`[` open, `)`/`]`
+    * close, and a bracket sits at its outer depth (so `(` of a top-level
+    * group reads 0). Unbalanced closes go negative.
     */
-  private[engine] def matchingParen(q: String, open: Int): Int = {
-    var d = 0; var quote: Char = 0; var j = open
-    while (j < q.length) {
-      val c = q.charAt(j)
-      if (quote != 0) {
-        if ((quote == '\'' || quote == '"') && c == '\\') j += 1
-        else if (c == quote) quote = 0
-      } else c match {
-        case '\'' | '`' | '"' => quote = c
-        case '(' => d += 1
-        case ')' => d -= 1; if (d == 0) return j
-        case _ =>
-      }
-      j += 1
+  private[engine] def depths(masked: String): Array[Int] = {
+    val out = new Array[Int](masked.length)
+    var d = 0
+    for (i <- out.indices) masked.charAt(i) match {
+      case '(' | '[' => out(i) = d; d += 1
+      case ')' | ']' => d -= 1; out(i) = d
+      case _ => out(i) = d
     }
-    sys.error(s"runningWindow: unbalanced ( at $open")
+    out
   }
 
-  /** Split `body` on top-level commas (string-, quoted-identifier-,
-    * escape- and paren-aware).
+  /** Index of the `)` / `]` closing the `(` / `[` at `open` of `masked`,
+    * or -1 when it never closes.
     */
-  private[engine] def splitTopArgs(body: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var d = 0; var quote: Char = 0; var start = 0; var j = 0
-    while (j < body.length) {
-      body.charAt(j) match {
-        case '\\' if quote == '\'' || quote == '"' => j += 1
-        case c if quote != 0 => if (c == quote) quote = 0
-        case c @ ('\'' | '`' | '"') => quote = c
-        case '(' | '[' => d += 1
-        case ')' | ']' => d -= 1
-        case ',' if d == 0 => out += body.substring(start, j); start = j + 1
-        case _ =>
-      }
+  private[engine] def matchingClose(masked: String, open: Int): Int = {
+    val (o, c) = if (masked.charAt(open) == '[') ('[', ']') else ('(', ')')
+    var d = 0
+    var j = open
+    while (j < masked.length) {
+      val ch = masked.charAt(j)
+      if (ch == o) d += 1
+      else if (ch == c) { d -= 1; if (d == 0) return j }
       j += 1
     }
-    out += body.substring(start)
-    out.toSeq
+    -1
   }
+
+  /** `q` cut at every `sep` that is code at bracket depth 0. */
+  private[engine] def splitTop(q: String, sep: Char): Seq[String] = {
+    val masked = maskStrings(q)
+    val d = depths(masked)
+    val cuts = q.indices.filter(i => masked.charAt(i) == sep && d(i) == 0)
+    (-1 +: cuts).zip(cuts :+ q.length).map { case (a, b) => q.substring(a + 1, b) }
+  }
+
+  /** Index of the `)` matching the `(` at `open`. */
+  private[engine] def matchingParen(q: String, open: Int): Int = {
+    val close = matchingClose(maskStrings(q), open)
+    if (close < 0) sys.error(s"runningWindow: unbalanced ( at $open")
+    close
+  }
+
+  /** Split `body` on top-level commas. */
+  private[engine] def splitTopArgs(body: String): Seq[String] = splitTop(body, ',')
 
   /** Statement-wide map of state-column alias → base aggregate name,
     * from every `<base>[Simple]State(...) AS alias` occurrence.
@@ -964,77 +893,66 @@ object ChSql {
           .find(k => k.matches("\\w+") && nonIdentity.contains(k.toLowerCase))
       }
     }
-    val names = trioNames
     val sb = new StringBuilder
     var i = 0
-    var quote: Char = 0
     while (i < block.length) {
-      val c = block.charAt(i)
-      if (quote != 0) {
-        if ((quote == '\'' || quote == '"') && c == '\\' && i + 1 < block.length) {
-          sb += c; sb += block.charAt(i + 1); i += 2
-        }
-        else { sb += c; if (c == quote) quote = 0; i += 1 }
-      }
-      else if (c == '\'' || c == '`' || c == '"') { quote = c; sb += c; i += 1 }
-      else {
-        val prevIdent = i > 0 && isIdentChar(block.charAt(i - 1))
-        val hit = if (prevIdent) None else names.find { n =>
-          block.regionMatches(false, i, n, 0, n.length) && {
-            val after = i + n.length
-            after < block.length && !isIdentChar(block.charAt(after)) && {
-              val j = skipWs(block, after)
-              j < block.length && block.charAt(j) == '('
-            }
+      val c = masked.charAt(i)
+      val prevIdent = i > 0 && isIdentChar(masked.charAt(i - 1))
+      val hit = if (prevIdent) None else trioNames.find { n =>
+        masked.regionMatches(false, i, n, 0, n.length) && {
+          val after = i + n.length
+          after < masked.length && !isIdentChar(masked.charAt(after)) && {
+            val j = skipWs(masked, after)
+            j < masked.length && masked.charAt(j) == '('
           }
         }
-        hit match {
-          case Some(n) =>
-            aliasOrderKey.foreach { k =>
-              throw new IllegalArgumentException(
-                s"$n(...): this block's ORDER BY key '$k' is a SELECT-list " +
-                  "alias, which a window spec cannot resolve (Spark resolves " +
-                  "windows against the input relation) — ORDER BY the " +
-                  "underlying expression, or compute the running value in a " +
-                  "subquery over an ordered inner block")
+      }
+      hit match {
+        case Some(n) =>
+          aliasOrderKey.foreach { k =>
+            throw new IllegalArgumentException(
+              s"$n(...): this block's ORDER BY key '$k' is a SELECT-list " +
+                "alias, which a window spec cannot resolve (Spark resolves " +
+                "windows against the input relation) — ORDER BY the " +
+                "underlying expression, or compute the running value in a " +
+                "subquery over an ordered inner block")
+          }
+          val open = masked.indexOf('(', i + n.length)
+          val close = matchingParen(block, open)
+          // rewrite trio calls INSIDE the argument text: legal when they
+          // sit in a scalar subquery (their own block), but a trio call
+          // at the argument's top level would become a window inside
+          // this call's window — the engine rejects that shape, so say
+          // so here with the workaround instead of surfacing Spark's
+          // opaque nested-window AnalysisException later
+          val args = splitTopArgs(block.substring(open + 1, close)).map { a =>
+            try rewriteRunningBlock(a, aliases).trim
+            catch {
+              // only a trio call at the ARGUMENT's top level is the
+              // nested-window case; an error raised from a subquery
+              // inside the argument (its own block) passes through
+              // unrewritten — it describes a real defect there
+              case e: IllegalArgumentException
+                  if orderKeys.isDefined && hasTopLevelTrioCall(a) =>
+                val err = new IllegalArgumentException(
+                  s"$n(...): a runningDifference/runningAccumulate/neighbor call " +
+                    "inside another's argument cannot share its window — compute " +
+                    "the inner call in a subquery with its own ORDER BY (one " +
+                    "block per window), then apply the outer call to that column")
+                err.initCause(e)
+                throw err
             }
-            val open = block.indexOf('(', i + n.length)
-            val close = matchingParen(block, open)
-            // rewrite trio calls INSIDE the argument text: legal when they
-            // sit in a scalar subquery (their own block), but a trio call
-            // at the argument's top level would become a window inside
-            // this call's window — the engine rejects that shape, so say
-            // so here with the workaround instead of surfacing Spark's
-            // opaque nested-window AnalysisException later
-            val args = splitTopArgs(block.substring(open + 1, close)).map { a =>
-              try rewriteRunningBlock(a, aliases).trim
-              catch {
-                // only a trio call at the ARGUMENT's top level is the
-                // nested-window case; an error raised from a subquery
-                // inside the argument (its own block) passes through
-                // unrewritten — it describes a real defect there
-                case e: IllegalArgumentException
-                    if orderKeys.isDefined && hasTopLevelTrioCall(a) =>
-                  val err = new IllegalArgumentException(
-                    s"$n(...): a runningDifference/runningAccumulate/neighbor call " +
-                      "inside another's argument cannot share its window — compute " +
-                      "the inner call in a subquery with its own ORDER BY (one " +
-                      "block per window), then apply the outer call to that column")
-                  err.initCause(e)
-                  throw err
-              }
-            }
-            sb.append(rewriteRunningCall(n, args, orderKeys, aliases))
+          }
+          sb.append(rewriteRunningCall(n, args, orderKeys, aliases))
+          i = close + 1
+        case None =>
+          if (c == '(' && subqueryOpenAt(masked, i)) {
+            val close = matchingParen(block, i)
+            sb.append('(')
+              .append(rewriteRunningBlock(block.substring(i + 1, close), aliases))
+              .append(')')
             i = close + 1
-          case None =>
-            if (c == '(' && subqueryOpenAt(masked, i)) {
-              val close = matchingParen(block, i)
-              sb.append('(')
-                .append(rewriteRunningBlock(block.substring(i + 1, close), aliases))
-                .append(')')
-              i = close + 1
-            } else { sb += c; i += 1 }
-        }
+          } else { sb += block.charAt(i); i += 1 }
       }
     }
     sb.toString
@@ -1101,28 +1019,14 @@ object ChSql {
     }
   }
 
-  /** Split `q` on depth-0 `;` outside quotes — one entry per statement,
+  /** Split `q` on depth-0 code `;` — one entry per statement,
     * empty segments dropped. The shims are single-statement rewrites
     * (end-anchored strips, one ORDER BY per block), so [[apply]] maps
     * them per statement instead of letting a scan or anchor bleed across
     * the boundary.
     */
-  private[engine] def splitStatements(q: String): Seq[String] = {
-    val masked = maskStrings(q)
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var d = 0; var start = 0; var i = 0
-    while (i < masked.length) {
-      masked.charAt(i) match {
-        case '(' => d += 1
-        case ')' => d -= 1
-        case ';' if d == 0 => out += q.substring(start, i); start = i + 1
-        case _ =>
-      }
-      i += 1
-    }
-    out += q.substring(start)
-    out.toSeq.filter(_.trim.nonEmpty)
-  }
+  private[engine] def splitStatements(q: String): Seq[String] =
+    splitTop(q, ';').filter(_.trim.nonEmpty)
 
   /** All shims, in the order they compose — applied PER STATEMENT
     * (see [[splitStatements]]), with [[chQuotedIdents]] innermost so

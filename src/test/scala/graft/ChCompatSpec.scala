@@ -2577,4 +2577,17 @@ class ChCompatSpec extends SparkSpec {
     assert(math.abs(p.getDouble(1) - 0.625698874574119) < 2e-7)
     assert(bad.getDouble(0).isNaN && bad.getDouble(1).isNaN)
   }
+
+  test("ChSql lexer: comments are not code, and a quote inside one opens no literal") {
+    import graft.engine.ChSql
+    def norm(s: String) = s.replaceAll("\\s+", " ").trim
+    // the apostrophe in the comment used to open a literal that swallowed
+    // the PREWHERE, which then reached Spark untranslated
+    assert(norm(ChSql("SELECT a FROM t -- it's a comment\nPREWHERE a > 1 WHERE b < 2")) ==
+      "SELECT a FROM t -- it's a comment WHERE (a > 1) AND (b < 2)")
+    // comment bytes pass through untouched, shim keywords in them included
+    val c = "SELECT x FROM t /* PREWHERE y */ PREWHERE a > 0 -- FORMAT JSON"
+    assert(ChSql.prewhere(c) == "SELECT x FROM t /* PREWHERE y */ WHERE a > 0 -- FORMAT JSON")
+    assert(ChSql.tupleIndex("SELECT t.1 -- t.2\n") == "SELECT t.col1 -- t.2\n")
+  }
 }

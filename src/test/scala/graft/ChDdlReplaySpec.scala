@@ -1783,4 +1783,28 @@ class ChDdlReplaySpec extends SparkSpec {
       assert(back == ct, s"comment round-trip drift for ${cmt.take(30)}:\n${render(ct)}\n$back")
     }
   }
+
+  test("parser: a `;` inside a quoted name is not a statement boundary") {
+    assert(ChDdl.splitStatements("SELECT `x;y` FROM t; SELECT 2") ==
+      Seq("SELECT `x;y` FROM t", "SELECT 2"))
+    // nor does a line inside a multi-line literal start a statement
+    assert(ChDdl.splitStatements("SELECT 'a\nselect b' AS s\nFROM t").length == 1)
+  }
+
+  test("parser: a `--` inside a literal is not a comment") {
+    // the real comment after it still goes
+    assert(ChDdl.splitStatements("SELECT '--' AS a -- note\nFROM t") ==
+      Seq("SELECT '--' AS a \nFROM t"))
+  }
+
+  test("runQuery: the USING-list rewrite leaves string literals byte-identical") {
+    val replay = new ChReplay(spark, tmpDir("graft-usingq"))
+    spark.range(0, 2).selectExpr("id AS a", "id AS b").createOrReplaceTempView("usingq_l")
+    spark.range(0, 2).selectExpr("id AS a", "id AS b", "id * 10 AS c")
+      .createOrReplaceTempView("usingq_r")
+    val got = replay.runQuery(
+      "SELECT 'using a, b' AS s, c FROM usingq_l JOIN usingq_r USING a, b ORDER BY c")
+      .collect().map(r => (r.getString(0), r.getLong(1)))
+    assert(got.toSeq == Seq(("using a, b", 0L), ("using a, b", 10L)))
+  }
 }

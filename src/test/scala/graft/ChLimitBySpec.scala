@@ -71,4 +71,22 @@ class ChLimitBySpec extends SparkSpec {
     assert(ChLimitBy.applies(
       "SELECT g FROM lb_t ORDER BY g LIMIT 2 BY g"))
   }
+
+  // a quote char or paren inside a backtick name is part of the name: the
+  // clause scanners read the lexer's masked twin, so `it's` opens no
+  // literal and `f(` / `k)` move no depth
+  test("quoted names are opaque to the LIMIT BY scanner") {
+    for (name <- Seq("`it's`", "`f(`"))
+      assert(ChLimitBy.rewrite(s"SELECT $name AS a, k FROM t ORDER BY a LIMIT 1 BY k")
+        .contains("PARTITION BY k ORDER BY a"))
+  }
+
+  test("quoted names are opaque to the DISTINCT ON column-list scan") {
+    Seq((1L, 5L), (1L, 3L), (2L, 4L)).toDF("k)", "v").createOrReplaceTempView("lb_q")
+    val sql = "SELECT DISTINCT ON (`k)`) `k)`, v FROM lb_q ORDER BY v"
+    assert(graft.engine.ChDistinctOn.rewrite(sql).contains("PARTITION BY `k)` ORDER BY v"))
+    val got = graft.engine.ChDistinctOn.sql(spark, sql)
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(got.toSeq == Seq((1L, 3L), (2L, 4L)))
+  }
 }
