@@ -95,12 +95,7 @@ final class NearDupIndex(
     java.security.MessageDigest.getInstance("MD5")
       .digest(path.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
 
-  private def readStamp(): Option[String] =
-    if (!fs.exists(metaPath)) None
-    else {
-      val in = fs.open(metaPath)
-      Some(try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close())
-    }
+  private def readStamp(): Option[String] = graft.Durable.readText(fs, metaPath)
 
   // the stamped bucket count, else one bucket per task slot up to 32
   private val buckets: Int = readStamp()
@@ -126,10 +121,7 @@ final class NearDupIndex(
 
   private def checkOrStampMeta(): Unit = {
     checkMeta()
-    if (!fs.exists(metaPath)) {
-      val out = fs.create(metaPath, true)
-      try out.write(expectMeta.getBytes("UTF-8")) finally out.close()
-    }
+    if (!fs.exists(metaPath)) graft.Durable.writeText(fs, metaPath, expectMeta)
   }
 
   private def ensureTable(): Unit =

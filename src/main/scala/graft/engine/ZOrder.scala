@@ -96,12 +96,13 @@ object ZOrder {
   }
 
   /** `OPTIMIZE ... ZORDER BY` for an existing parquet table: rewrite it
-    * z-order-clustered IN PLACE with a staged atomic swap (write to
-    * `.zorder.tmp`, stage the live table at `.zorder.old`, swap, drop the
-    * stage — readers see the old or the new layout, never a mix; a failed
-    * swap rolls back loudly). For a partitioned table pass `partitionCols`
-    * — EVERY directory level, in order (day=X/hour=Y needs
-    * Seq("day", "hour")): the layout is preserved and the Morton
+    * z-order-clustered IN PLACE with a staged atomic swap
+    * ([[graft.Durable.swap]]: write to `.zorder.tmp`, stage the live table
+    * at `.zorder.old`, swap, drop the stage — readers see the old or the
+    * new layout, never a mix; a failed swap rolls back loudly). For a
+    * partitioned table pass `partitionCols` — EVERY directory level, in
+    * order (day=X/hour=Y needs Seq("day", "hour")): the layout is
+    * preserved and the Morton
     * clustering applies WITHIN each leaf partition (range-partitioned on
     * (partitions..., z), so each partition's files still cover contiguous
     * z-ranges). The levels are discovered from the directories and must
@@ -119,14 +120,13 @@ object ZOrder {
       cols: Seq[String], bits: Int = 8, partitionCols: Seq[String] = Nil,
       numFiles: Int = 0): Unit = {
     recover(spark, path)
-    val tmp = path + ".zorder.tmp"
-    val old = path + ".zorder.old"
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (live, tmp, old) = staged(path)
+    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // the ACTUAL directory-partition levels, discovered recursively — a
     // level partitionCols does not cover would be read FLATTENED (its dirs
     // baked into data columns, with inference off: as strings) and the
     // layout silently rewritten; refuse on any mismatch instead
-    val levels = partitionLevels(fs, new Path(path))
+    val levels = partitionLevels(fs, live)
     require(partitionCols == levels,
       s"optimize: the table's directory-partition levels are " +
         s"[${levels.mkString(", ")}] but partitionCols is " +
@@ -148,19 +148,14 @@ object ZOrder {
     val df = s2.read.parquet(path)
     partitionCols.foreach(pc => require(df.columns.contains(pc),
       s"optimize: no partition column $pc"))
-    writeZOrdered(df, tmp, cols, bits, numFiles,
-      mode = "overwrite", partitionBy = partitionCols)
-    val (p, t, o) = (new Path(path), new Path(tmp), new Path(old))
-    if (fs.exists(o)) fs.delete(o, true)
-    if (!fs.rename(p, o)) sys.error(s"optimize: failed to stage $path -> $old")
-    if (!fs.rename(t, p)) {
-      val restored = fs.rename(o, p)
-      sys.error(s"optimize: failed to swap $tmp -> $path" +
-        (if (restored) " (rolled back)"
-         else s"; ROLLBACK ALSO FAILED — table preserved at $old, restored by recover()"))
+    graft.Durable.swap(fs, live, tmp, old, Nil, "optimize") {
+      writeZOrdered(df, tmp.toString, cols, bits, numFiles,
+        mode = "overwrite", partitionBy = partitionCols)
     }
-    fs.delete(o, true)
   }
+
+  private def staged(path: String) =
+    (new Path(path), new Path(path + ".zorder.tmp"), new Path(path + ".zorder.old"))
 
   /** The table's directory-partition column names, outermost first,
     * discovered by walking `name=value` directories level by level (all
@@ -193,15 +188,9 @@ object ZOrder {
     * beside a live table is dropped. No-op otherwise.
     */
   def recover(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val p = new Path(path)
-    val o = new Path(path + ".zorder.old")
-    val t = new Path(path + ".zorder.tmp")
-    if (!fs.exists(p) && fs.exists(o)) {
-      if (!fs.rename(o, p))
-        sys.error(s"recover: failed to restore $o -> $p")
-    } else if (fs.exists(o)) fs.delete(o, true)
-    if (fs.exists(t)) fs.delete(t, true)
+    val (live, tmp, old) = staged(path)
+    graft.Durable.recover(live.getFileSystem(spark.sparkContext.hadoopConfiguration),
+      live, tmp, old, Nil)
   }
 
   /** Write `df` z-order-clustered by `cols` into `numFiles` range slices of

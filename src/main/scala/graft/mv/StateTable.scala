@@ -6,6 +6,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Durable
 import graft.functions.ChCompat
 
 /** A persisted partial-aggregate state table — the Spark-native analog of a
@@ -45,8 +46,7 @@ final class StateTable(
     val metrics: Seq[Metric]) {
 
   ChCompat.register(spark)
-  recoverFromCompact()
-  recoverInFlightIngest()
+  recover()
 
   private def stateCols = metrics.map(_.state)
   private def mergeCols = metrics.map(_.merge)
@@ -70,18 +70,6 @@ final class StateTable(
   /** Aggregate + append a raw batch (insert-trigger semantics). */
   def appendBatch(batch: DataFrame): Unit = append(toStates(batch))
 
-  /** Exactly-once append: the ClickHouse inserted-block dedup analog for
-    * foreachBatch retries. A batch is written to `_staging/<batchId>`,
-    * its files MOVED into the table under `batch-<batchId>-` names (renames,
-    * no data copy), and only then is the `_ledger/batch-<batchId>` marker
-    * created — the commit point. Replays of a committed id return false and
-    * touch nothing; a crash anywhere before the marker leaves only
-    * batch-tagged orphans that [[recoverInFlightIngest]] removes on the
-    * next open, after which the retry re-ingests cleanly. Underscore paths
-    * are invisible to Spark's file listing, so staging and ledger never
-    * pollute reads. Requires a stable batchId across retries — exactly what
-    * a checkpointed foreachBatch provides.
-    */
   /** The ledger token of (namespace, batchId). `ns` keeps independent
     * writers apart: two MVs streaming into the SAME wide table each run
     * their own foreachBatch id sequence starting at 0, so an un-namespaced
@@ -106,73 +94,25 @@ final class StateTable(
     if (tag.isEmpty) s"$batchId" else s"$tag.$batchId"
   }
 
+  /** Exactly-once append: the ClickHouse inserted-block dedup analog for
+    * foreachBatch retries ([[Durable.appendOnce]]: staged, moved in under
+    * `batch-<token>-` names, committed by the `_ledger/batch-<token>`
+    * marker). Replays of a committed id return false and touch nothing; a
+    * crash before the marker is healed on the next open, after which the
+    * retry re-ingests cleanly. Requires a stable batchId across retries —
+    * exactly what a checkpointed foreachBatch provides.
+    */
   def appendExactlyOnce(states: DataFrame, batchId: Long, ns: String = ""): Boolean =
       Projection.suppress {
-    val fs = fileSystem()
-    val tok = batchTok(batchId, ns)
-    val marker = new Path(path, s"_ledger/batch-$tok")
-    if (fs.exists(marker)) return false
-    cleanIngest(fs, tok) // a previous attempt of this id may have died mid-move
-    val staging = new Path(path, s"_staging/$tok")
-    states
-      .sortWithinPartitions(keys.map(col): _*)
-      .write.mode("overwrite").partitionBy(partitionCol).parquet(staging.toString)
-    for (dayDir <- fs.listStatus(staging).toSeq
-         if dayDir.isDirectory && dayDir.getPath.getName.contains("=")) {
-      val target = new Path(path, dayDir.getPath.getName)
-      fs.mkdirs(target)
-      for (f <- fs.listStatus(dayDir.getPath).toSeq
-           if !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith(".")) {
-        if (!fs.rename(f.getPath, new Path(target, s"batch-$tok-${f.getPath.getName}")))
-          sys.error(s"exactly-once append: failed to move ${f.getPath} into $target")
-      }
-    }
-    fs.delete(staging, true)
-    fs.mkdirs(marker.getParent)
-    fs.create(marker, true).close()
-    invalidateSchema()
-    true
+    val appended = Durable.appendOnce(fileSystem(), new Path(path), partitionCol,
+      batchTok(batchId, ns), states.sortWithinPartitions(keys.map(col): _*))
+    if (appended) invalidateSchema()
+    appended
   }
 
   /** Aggregate + exactly-once append of a raw batch. */
   def appendBatchExactlyOnce(batch: DataFrame, batchId: Long, ns: String = ""): Boolean =
     appendExactlyOnce(toStates(batch), batchId, ns)
-
-  /** Remove every trace of an uncommitted batch token: its staging dir and
-    * any batch-tagged files already moved into partition dirs.
-    */
-  private def cleanIngest(fs: FileSystem, tok: String): Unit = {
-    fs.delete(new Path(path, s"_staging/$tok"), true)
-    val root = new Path(path)
-    if (fs.exists(root))
-      for (day <- fs.listStatus(root).toSeq if day.isDirectory && day.getPath.getName.contains("=");
-           f <- fs.listStatus(day.getPath).toSeq
-           if f.getPath.getName.startsWith(s"batch-$tok-"))
-        fs.delete(f.getPath, false)
-  }
-
-  /** Open-time recovery for [[appendExactlyOnce]]: every batch id seen in
-    * staging or in batch-tagged data files whose ledger marker is missing
-    * was an in-flight ingest at crash time — remove its traces so the
-    * stream's retry re-ingests from scratch.
-    */
-  private def recoverInFlightIngest(): Unit = {
-    val fs = fileSystem()
-    val root = new Path(path)
-    if (!fs.exists(root)) return
-    val stagingIds = {
-      val st = new Path(path, "_staging")
-      if (fs.exists(st)) fs.listStatus(st).toSeq.map(_.getPath.getName)
-      else Nil
-    }
-    val movedIds = for {
-      day <- fs.listStatus(root).toSeq if day.isDirectory && day.getPath.getName.contains("=")
-      f <- fs.listStatus(day.getPath).toSeq if f.getPath.getName.startsWith("batch-")
-    } yield f.getPath.getName.drop("batch-".length).takeWhile(_ != '-')
-    for (tok <- (stagingIds ++ movedIds).distinct
-         if !fs.exists(new Path(path, s"_ledger/batch-$tok")))
-      cleanIngest(fs, tok)
-  }
 
   // merged part schema, computed once per (instance, table state): the
   // footer-listing merge job is paid on the first read after open/append,
@@ -218,16 +158,10 @@ final class StateTable(
 
   private def schemaMarker = new Path(path, "_schema")
 
-  private def loadSchemaMarker(): Option[org.apache.spark.sql.types.StructType] = {
-    val fs = fileSystem()
-    if (!fs.exists(schemaMarker)) return None
-    val in = fs.open(schemaMarker)
-    val json =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    Some(org.apache.spark.sql.types.DataType.fromJson(json)
-      .asInstanceOf[org.apache.spark.sql.types.StructType])
-  }
+  private def loadSchemaMarker(): Option[org.apache.spark.sql.types.StructType] =
+    Durable.readText(fileSystem(), schemaMarker).map(json =>
+      org.apache.spark.sql.types.DataType.fromJson(json)
+        .asInstanceOf[org.apache.spark.sql.types.StructType])
 
   /** Merge-on-read at the given (possibly coarser) keys; metric columns
     * remain states (binary sketches / arrays / partial sums).
@@ -248,62 +182,35 @@ final class StateTable(
     * Single-writer discipline (like a MergeTree part set): concurrent
     * compact/append calls are not coordinated. Between the two renames the
     * live path briefly doesn't exist; a crash in that window strands the
-    * table at `.compact.old` — [[recoverFromCompact]] restores it on the
-    * next open.
+    * table at `.compact.old` — the next open restores it.
     */
   def compact(): Unit = Projection.suppress {
-    val tmp = path + ".compact.tmp"
-    val old = path + ".compact.old"
-    merged(keys)
-      .sortWithinPartitions(keys.map(col): _*)
-      .write.mode("overwrite").partitionBy(partitionCol).parquet(tmp)
-    val fs = fileSystem()
-    val p = new Path(path); val t = new Path(tmp); val o = new Path(old)
-    if (fs.exists(o)) fs.delete(o, true)
-    if (!fs.rename(p, o)) sys.error(s"compact: failed to stage $path -> $old")
-    if (!fs.rename(t, p)) { fs.rename(o, p); sys.error(s"compact: failed to swap $tmp -> $path") }
-    // the exactly-once ledger must survive the rewrite, or a late replay of
-    // a pre-compact batch would re-ingest rows the compacted parts contain
-    finishSwapCleanup("compact", o)
-    cachedSchema = None
-  }
-
-  /** Final step of every staged swap: move the exactly-once ledger from
-    * the superseded `.old` copy into the freshly-swapped live table, then
-    * drop the old copy. A FAILED ledger move must never reach the delete:
-    * the `.old` dir (ledger inside) is left in place, where
-    * [[recoverStagedSwap]] rescues the ledger on the next open — deleting
-    * it would erase the batch markers and let replayed batches re-ingest
-    * (duplicates), the exact failure the ledger exists to prevent.
-    */
-  /** The hidden artifacts that must SURVIVE every whole-table staged swap
-    * (the rewrite's tmp never contains them): the exactly-once ledger
-    * (losing it lets replayed batches re-ingest), the detached partitions
-    * (losing them destroys quarantined data), and the persisted schema
-    * marker (losing it breaks empty-table reads after a restart).
-    */
-  private val swapArtifacts = Seq("_ledger", ".detached", "_schema")
-
-  /** Move each swap artifact present in the superseded copy `o` back into
-    * the live table (skipping ones the live table already has — a crashed
-    * earlier cleanup may have moved some). Returns the first artifact
-    * whose move FAILED — the caller must then leave `o` in place, or the
-    * artifact is destroyed.
-    */
-  private def rescueSwapArtifacts(o: Path): Option[String] = {
-    val fs = fileSystem()
-    swapArtifacts.find { a =>
-      val src = new Path(o, a)
-      val dst = new Path(path, a)
-      fs.exists(src) && !fs.exists(dst) && !fs.rename(src, dst)
+    rewrite(".compact", "compact") { tmp =>
+      merged(keys)
+        .sortWithinPartitions(keys.map(col): _*)
+        .write.mode("overwrite").partitionBy(partitionCol).parquet(tmp)
     }
   }
 
-  private def finishSwapCleanup(op: String, o: Path): Unit = {
-    rescueSwapArtifacts(o).foreach(a =>
-      sys.error(s"$op: failed to move the swap artifact $a from $o back " +
-        s"into $path; superseded copy preserved at $o (recovered on next open)"))
-    fileSystem().delete(o, true): Unit
+  /** The hidden artifacts that must SURVIVE every whole-table rewrite (the
+    * rewrite's tmp never contains them): the exactly-once ledger (losing
+    * it lets replayed batches re-ingest rows the rewrite already holds),
+    * the detached partitions (losing them destroys quarantined data), and
+    * the persisted schema marker (losing it breaks empty-table reads after
+    * a restart). A def: the constructor's [[recover]] runs before the
+    * vals declared below it are initialized.
+    */
+  private def swapArtifacts = Seq("_ledger", ".detached", "_schema")
+
+  private def staged(suffix: String) =
+    (new Path(path + suffix + ".tmp"), new Path(path + suffix + ".old"))
+
+  /** The whole-table staged swap of [[compact]] and the mutations:
+    * `write` fills the `<path><suffix>.tmp` it is given. */
+  private def rewrite(suffix: String, op: String)(write: String => Unit): Unit = {
+    val (tmp, old) = staged(suffix)
+    Durable.swap(fileSystem(), new Path(path), tmp, old, swapArtifacts, op)(write(tmp.toString))
+    cachedSchema = None
   }
 
   /** MV-on-MV cascade — the reference's dwm → dws layering as a state-to-
@@ -354,28 +261,29 @@ final class StateTable(
   private def fileSystem(): FileSystem =
     FileSystem.get(new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
 
-  /** Recovery for the staged-rename window of [[compact]] AND the
-    * [[updateWhere]]/[[deleteWhere]] mutations (same swap protocol,
-    * different staging suffix). If a swap crashed after staging the live
-    * table away but before renaming the rewrite in, the staged copy is
-    * authoritative: restore it. Leftover `.tmp` / `.old` dirs from a
-    * completed or failed swap are deleted. This makes the swaps
+  /** Open-time recovery: heal a crash inside any staged swap — [[compact]]
+    * and the [[updateWhere]]/[[deleteWhere]] mutations (same swap,
+    * different staging suffix), then [[compactPartition]] — and purge the
+    * traces of uncommitted exactly-once batches. This makes the swaps
     * crash-recoverable at startup, not merely failure-atomic in-process.
     */
-  private def recoverFromCompact(): Unit = {
-    recoverStagedSwap(".compact")
-    recoverStagedSwap(".mutate")
-    recoverPartitionCompacts()
+  private def recover(): Unit = {
+    val fs = fileSystem()
+    for (suffix <- Seq(".compact", ".mutate")) {
+      val (tmp, old) = staged(suffix)
+      Durable.recover(fs, new Path(path), tmp, old, swapArtifacts)
+    }
+    recoverPartitionCompacts(fs)
+    Durable.recoverLedger(fs, new Path(path))
   }
 
   /** Recovery for [[compactPartition]]'s swap window. The staging dirs live
     * BESIDE the table (`<table>.pcompact.<value>.{tmp,old}`) — an `.old`
     * dir INSIDE the table would read as a bogus partition value during the
-    * window — so recovery scans the parent: a live-partition-missing `.old`
-    * is authoritative and moves back; anything else is superseded debris.
+    * window — so recovery scans the parent for them and recovers each
+    * partition they name.
     */
-  private def recoverPartitionCompacts(): Unit = {
-    val fs = fileSystem()
+  private def recoverPartitionCompacts(fs: FileSystem): Unit = {
     val base = new Path(path).getName + ".pcompact."
     // globStatus on the table's OWN prefix, not a full parent listing — a
     // warehouse directory with thousands of sibling tables must not make
@@ -392,20 +300,19 @@ final class StateTable(
         try fs.globStatus(new Path(path + ".pcompact.*"))
         catch { case _: java.io.FileNotFoundException => null }
     if (debris == null) return
-    debris.foreach { st =>
-      val nm = st.getPath.getName
-      if (nm.startsWith(base) && nm.endsWith(".old")) {
-        // <escaped-value> between the markers — already the exact dirname
-        val ev = nm.substring(base.length, nm.length - ".old".length)
-        val live = new Path(path, s"$partitionCol=$ev")
-        if (!fs.exists(live)) {
-          if (!fs.rename(st.getPath, live))
-            sys.error(s"recover: failed to restore ${st.getPath} -> $live")
-        } else fs.delete(st.getPath, true): Unit
-      } else if (nm.startsWith(base) && nm.endsWith(".tmp"))
-        fs.delete(st.getPath, true): Unit
-    }
+    // <escaped-value> between the markers — already the exact dirname
+    debris.map(_.getPath.getName)
+      .filter(nm => nm.startsWith(base) && (nm.endsWith(".old") || nm.endsWith(".tmp")))
+      .map(nm => nm.substring(base.length, nm.length - ".old".length))
+      .distinct
+      .foreach { ev =>
+        val (tmp, old) = pcompactStaged(ev)
+        Durable.recover(fs, new Path(path, s"$partitionCol=$ev"), tmp, old, Nil)
+      }
   }
+
+  private def pcompactStaged(ev: String) =
+    (new Path(path + s".pcompact.$ev.tmp"), new Path(path + s".pcompact.$ev.old"))
 
   /** `OPTIMIZE TABLE ... PARTITION 'v' FINAL` — [[compact]] scoped to one
     * partition directory: only that partition's states are re-merged and
@@ -423,44 +330,19 @@ final class StateTable(
     val ev = escVal(value)
     val live = new Path(path, s"$partitionCol=$ev")
     if (!fs.exists(live)) return
-    val tmp = new Path(path + s".pcompact.$ev.tmp")
-    val old = new Path(path + s".pcompact.$ev.old")
-    // filter on the partition key ABOVE the merge: partitionCol is a
-    // grouping key, so Catalyst pushes it below the Aggregate into the
-    // scan's PartitionFilters — one partition read, not a full-table merge
-    merged(keys)
-      .filter(col(partitionCol) === lit(value).cast(
-        read().schema(partitionCol).dataType))
-      .drop(partitionCol) // hive layout: the value lives in the dirname
-      .sortWithinPartitions(keys.filterNot(_ == partitionCol).map(col): _*)
-      .write.mode("overwrite").parquet(tmp.toString)
-    if (fs.exists(old)) fs.delete(old, true)
-    if (!fs.rename(live, old))
-      sys.error(s"compactPartition: failed to stage $live -> $old")
-    if (!fs.rename(tmp, live)) {
-      fs.rename(old, live)
-      sys.error(s"compactPartition: failed to swap $tmp -> $live")
+    val (tmp, old) = pcompactStaged(ev)
+    Durable.swap(fs, live, tmp, old, Nil, "compactPartition") {
+      // filter on the partition key ABOVE the merge: partitionCol is a
+      // grouping key, so Catalyst pushes it below the Aggregate into the
+      // scan's PartitionFilters — one partition read, not a full-table merge
+      merged(keys)
+        .filter(col(partitionCol) === lit(value).cast(
+          read().schema(partitionCol).dataType))
+        .drop(partitionCol) // hive layout: the value lives in the dirname
+        .sortWithinPartitions(keys.filterNot(_ == partitionCol).map(col): _*)
+        .write.mode("overwrite").parquet(tmp.toString)
     }
-    fs.delete(old, true)
     cachedSchema = None
-  }
-
-  private def recoverStagedSwap(suffix: String): Unit = {
-    val fs = fileSystem()
-    val p = new Path(path)
-    val t = new Path(path + suffix + ".tmp")
-    val o = new Path(path + suffix + ".old")
-    if (!fs.exists(p) && fs.exists(o)) {
-      if (!fs.rename(o, p)) sys.error(s"recover: failed to restore $o -> $path")
-    } else if (fs.exists(o)) {
-      // swap completed but cleanup didn't — rescue the swap artifacts the
-      // crash left behind, then the old copy is superseded. A FAILED
-      // rescue must keep `o` (the artifact lives only there).
-      rescueSwapArtifacts(o).foreach(a =>
-        sys.error(s"recover: failed to rescue the swap artifact $a from $o"))
-      fs.delete(o, true)
-    }
-    if (fs.exists(t)) fs.delete(t, true)
   }
 
   /** TTL: drop day partitions older than `days` before `today`
@@ -501,11 +383,7 @@ final class StateTable(
     if (cachedSchema.isEmpty)
       try cachedSchema = Some(read().schema)
       catch { case _: org.apache.spark.sql.AnalysisException => return }
-    val tmp = new Path(path, "_schema.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(cachedSchema.get.json.getBytes("UTF-8")) finally out.close()
-    if (!fs.rename(tmp, schemaMarker))
-      sys.error(s"captureSchema: failed to publish $schemaMarker")
+    Durable.writeText(fs, schemaMarker, cachedSchema.get.json)
   }
 
   /** Drop the cached schema AND the persisted `_schema` marker — call
@@ -781,29 +659,14 @@ final class StateTable(
     * verbatim), same atomic swap as [[deleteWhere]]. */
   def updateWhere(assignments: Seq[(String, org.apache.spark.sql.Column)],
       cond: org.apache.spark.sql.Column): Unit = Projection.suppress {
-    val tmp = path + ".mutate.tmp"
-    val old = path + ".mutate.old"
     val src = read()
     val updated = assignments.foldLeft(src) { case (df, (name, e)) =>
       df.withColumn(name, when(cond, e.cast(src.schema(name).dataType))
         .otherwise(col(name)))
     }
-    updated.write.mode("overwrite").partitionBy(partitionCol).parquet(tmp)
-    val fs = fileSystem()
-    val p = new Path(path); val t = new Path(tmp); val o = new Path(old)
-    if (fs.exists(o)) fs.delete(o, true)
-    if (!fs.rename(p, o)) sys.error(s"updateWhere: failed to stage $path -> $old")
-    if (!fs.rename(t, p)) {
-      // a rollback that itself fails must be LOUD: the table is now absent
-      // at its path and only recoverable from $old (recoverStagedSwap does
-      // exactly that on next startup)
-      val restored = fs.rename(o, p)
-      sys.error(s"updateWhere: failed to swap $tmp -> $path" +
-        (if (restored) " (rolled back)"
-         else s"; ROLLBACK ALSO FAILED — table preserved at $old, restored on next open"))
+    rewrite(".mutate", "updateWhere") { tmp =>
+      updated.write.mode("overwrite").partitionBy(partitionCol).parquet(tmp)
     }
-    finishSwapCleanup("updateWhere", o)
-    cachedSchema = None
   }
 
   /** `ALTER TABLE ... DELETE WHERE cond` — the CH mutation: rewrite the
@@ -814,24 +677,12 @@ final class StateTable(
     */
   def deleteWhere(cond: org.apache.spark.sql.Column): Long = Projection.suppress {
     val before = read().count()
-    val tmp = path + ".mutate.tmp"
-    val old = path + ".mutate.old"
     // delete only rows where cond is TRUE — a NULL predicate keeps the
     // row (CH mutation semantics), so the negation must null-guard
-    read().filter(!coalesce(cond, lit(false)))
-      .write.mode("overwrite").partitionBy(partitionCol).parquet(tmp)
-    val fs = fileSystem()
-    val p = new Path(path); val t = new Path(tmp); val o = new Path(old)
-    if (fs.exists(o)) fs.delete(o, true)
-    if (!fs.rename(p, o)) sys.error(s"deleteWhere: failed to stage $path -> $old")
-    if (!fs.rename(t, p)) {
-      val restored = fs.rename(o, p)
-      sys.error(s"deleteWhere: failed to swap $tmp -> $path" +
-        (if (restored) " (rolled back)"
-         else s"; ROLLBACK ALSO FAILED — table preserved at $old, restored on next open"))
+    rewrite(".mutate", "deleteWhere") { tmp =>
+      read().filter(!coalesce(cond, lit(false)))
+        .write.mode("overwrite").partitionBy(partitionCol).parquet(tmp)
     }
-    finishSwapCleanup("deleteWhere", o)
-    cachedSchema = None
     before - read().count()
   }
 

@@ -1,130 +1,7 @@
 package graft.similarity
 
-import org.apache.hadoop.fs.Path
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-
-/** Shared maintenance plumbing for the persisted vector indexes: the tiny
-  * metadata files behind the drift metric and the offline
-  * rebuild-and-swap that answers centroid drift (SCALE.md §4).
-  */
-private[similarity] object IndexMaint {
-
-  def fs(spark: SparkSession, p: Path) =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  def writeText(spark: SparkSession, p: Path, text: String): Unit = {
-    val f = fs(spark, p)
-    f.mkdirs(p.getParent)
-    val out = f.create(p, true)
-    try out.write(text.getBytes("UTF-8")) finally out.close()
-  }
-
-  def readText(spark: SparkSession, p: Path): Option[String] = {
-    val f = fs(spark, p)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
-      finally in.close()
-    }
-  }
-
-  /** Swap a freshly-built index directory into the live path: move the
-    * live tree aside, move the fresh tree in, drop the old one. Readers
-    * that already resolved their file listings keep their snapshot; new
-    * reads see the rebuilt index.
-    */
-  def swapIn(spark: SparkSession, livePath: String, freshPath: String): Unit = {
-    val live = new Path(livePath)
-    val f = fs(spark, live)
-    val old = new Path(livePath + "-old")
-    f.delete(old, true)
-    if (f.exists(live))
-      require(f.rename(live, old), s"swap: cannot move $live aside")
-    require(f.rename(new Path(freshPath), live), s"swap: cannot move $freshPath into $live")
-    f.delete(old, true): Unit
-  }
-
-  /** Open-time recovery for a crash inside [[swapIn]]: between
-    * rename(live, old) and rename(fresh, live) there is no live tree —
-    * if an open finds exactly that state, restore the `-old` tree so the
-    * index serves its pre-swap content (the [[graft.mv.StateTable]]
-    * recoverFromCompact posture applied to the index swap).
-    */
-  def recoverSwap(spark: SparkSession, livePath: String): Unit = {
-    val live = new Path(livePath)
-    val f = fs(spark, live)
-    val old = new Path(livePath + "-old")
-    if (!f.exists(live) && f.exists(old))
-      require(f.rename(old, live), s"swap recovery: cannot restore $old into $live")
-  }
-
-  /** Exactly-once append of a partitioned batch into `dataPath` — the
-    * [[graft.mv.StateTable.appendExactlyOnce]] protocol for the vector
-    * indexes: stage the batch, MOVE its files in under `batch-<id>-`
-    * names, then create the `_ledger/batch-<id>` marker (the commit
-    * point). Replays of a committed id return false and touch nothing;
-    * a crash before the marker leaves batch-tagged orphans that
-    * [[recoverInFlight]] removes on the next open. Underscore paths are
-    * invisible to Spark's listing, so staging/ledger never pollute reads.
-    */
-  def appendExactlyOnce(spark: SparkSession, dataPath: String, partitionCol: String,
-      rows: DataFrame, batchId: Long): Boolean = {
-    val root = new Path(dataPath)
-    val f = fs(spark, root)
-    val marker = new Path(dataPath, s"_ledger/batch-$batchId")
-    if (f.exists(marker)) return false
-    cleanBatch(f, root, batchId)
-    val staging = new Path(dataPath, s"_staging/$batchId")
-    rows.write.mode("overwrite").partitionBy(partitionCol).parquet(staging.toString)
-    for (part <- f.listStatus(staging).toSeq
-         if part.isDirectory && part.getPath.getName.contains("=")) {
-      val target = new Path(root, part.getPath.getName)
-      f.mkdirs(target)
-      for (file <- f.listStatus(part.getPath).toSeq
-           if !file.getPath.getName.startsWith("_") && !file.getPath.getName.startsWith(".")) {
-        if (!f.rename(file.getPath, new Path(target, s"batch-$batchId-${file.getPath.getName}")))
-          sys.error(s"exactly-once append: failed to move ${file.getPath} into $target")
-      }
-    }
-    f.delete(staging, true)
-    f.mkdirs(marker.getParent)
-    f.create(marker, true).close()
-    true
-  }
-
-  private def cleanBatch(f: org.apache.hadoop.fs.FileSystem, root: Path, batchId: Long): Unit = {
-    f.delete(new Path(root, s"_staging/$batchId"), true)
-    if (f.exists(root))
-      for (part <- f.listStatus(root).toSeq if part.isDirectory && part.getPath.getName.contains("=");
-           file <- f.listStatus(part.getPath).toSeq
-           if file.getPath.getName.startsWith(s"batch-$batchId-"))
-        f.delete(file.getPath, false)
-  }
-
-  /** Open-time recovery: remove traces of batch ids whose marker is
-    * missing (in-flight at crash time), so the stream's retry re-ingests
-    * from scratch.
-    */
-  def recoverInFlight(spark: SparkSession, dataPath: String): Unit = {
-    val root = new Path(dataPath)
-    val f = fs(spark, root)
-    if (!f.exists(root)) return
-    val stagingIds = {
-      val st = new Path(dataPath, "_staging")
-      if (f.exists(st)) f.listStatus(st).toSeq.map(_.getPath.getName) else Nil
-    }
-    val movedIds = for {
-      part <- f.listStatus(root).toSeq if part.isDirectory && part.getPath.getName.contains("=")
-      file <- f.listStatus(part.getPath).toSeq if file.getPath.getName.startsWith("batch-")
-    } yield file.getPath.getName.drop("batch-".length).takeWhile(_ != '-')
-    for (id <- (stagingIds ++ movedIds).distinct; n <- scala.util.Try(id.toLong).toOption
-         if !f.exists(new Path(dataPath, s"_ledger/batch-$n")))
-      cleanBatch(f, root, n)
-  }
-}
 
 /** Persisted, incrementally-growable IVF index — the vector twin of
   * [[graft.dedup.NearDupIndex]]: train centroids once, then ingest
@@ -154,11 +31,7 @@ final class IvfIndex(
   private val centsPath = s"$path/centroids"
   private val dataPath = s"$path/data"
 
-  // crash recovery: first heal a half-finished rebuild swap (restore the
-  // '-old' tree if the live path vanished mid-swap), then purge in-flight
-  // exactly-once batch traces
-  IndexMaint.recoverSwap(spark, path)
-  IndexMaint.recoverInFlight(spark, dataPath)
+  PqLayout.recover(spark, path)
 
   /** Train centroids on `corpus` (seeded pick + distributed Lloyd) and
     * write the full initial index. Overwrites any existing index at
@@ -167,16 +40,11 @@ final class IvfIndex(
   def build(corpus: DataFrame, nlist: Int, lloydIterations: Int = 2): Unit = {
     val c = Ann.refineCentroids(corpus, idCol, vecCol,
       Ann.pickCentroids(corpus, idCol, vecCol, nlist), lloydIterations)
-    import spark.implicits._
-    c.toSeq.map { case (i, v) => (i, v.toSeq) }
-      .toDF("list_id", "centroid")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(centsPath)
+    PqLayout.writeCentroids(spark, centsPath, c)
     Ann.ivfIndex(corpus, idCol, vecCol, c)
       .write.mode("overwrite").partitionBy("list_id").parquet(dataPath)
     // drift baseline: how well the training corpus fits its own centroids
-    IndexMaint.writeText(spark, new Path(path, "_drift.json"),
-      s"""{"mean_assign_sim":${meanAssignSim(corpus)}}""")
+    PqLayout.writeDriftBaseline(spark, path, "mean_assign_sim", meanAssignSim(corpus))
   }
 
   /** Mean cosine of each vector to its assigned (nearest) centroid — the
@@ -195,11 +63,7 @@ final class IvfIndex(
   }
 
   /** The training-time fit recorded by [[build]]. */
-  def driftBaseline: Double =
-    IndexMaint.readText(spark, new Path(path, "_drift.json"))
-      .flatMap(s => """"mean_assign_sim":([-0-9.eE]+)""".r.findFirstMatchIn(s))
-      .map(_.group(1).toDouble)
-      .getOrElse(sys.error(s"$path: no drift baseline — index predates build()?"))
+  def driftBaseline: Double = PqLayout.readDriftBaseline(spark, path, "mean_assign_sim")
 
   /** Centroid-drift metric for an incoming batch: how much worse it fits
     * the frozen centroids than the training corpus did (positive = drift;
@@ -213,12 +77,11 @@ final class IvfIndex(
     * stream), build a complete new index at a sibling path, and swap it
     * into `path`. Appends against the old centroids remain valid history;
     * the swap is the ClickHouse-style background re-merge made explicit.
+    * The exactly-once ledger carries over ([[PqLayout.rebuildAndSwap]]).
     */
-  def rebuildAndSwap(corpus: DataFrame, nlist: Int, lloydIterations: Int = 2): Unit = {
-    val freshPath = s"$path-rebuild"
-    new IvfIndex(spark, freshPath, idCol, vecCol).build(corpus, nlist, lloydIterations)
-    IndexMaint.swapIn(spark, path, freshPath)
-  }
+  def rebuildAndSwap(corpus: DataFrame, nlist: Int, lloydIterations: Int = 2): Unit =
+    PqLayout.rebuildAndSwap(spark, path)(fresh =>
+      new IvfIndex(spark, fresh, idCol, vecCol).build(corpus, nlist, lloydIterations))
 
   /** [[rebuildAndSwap]] from the index's own stored vectors — no external
     * corpus needed (IVF keeps full vectors, unlike PQ).
@@ -229,10 +92,7 @@ final class IvfIndex(
       nlist, lloydIterations)
 
   /** The frozen centroids (driver-side, nlist rows — the IVF regime). */
-  def centroids: Array[(Int, Array[Float])] =
-    spark.read.parquet(centsPath).collect()
-      .map(r => r.getInt(0) -> r.getSeq[Float](1).toArray)
-      .sortBy(_._1)
+  def centroids: Array[(Int, Array[Float])] = PqLayout.readCentroids(spark, centsPath)
 
   /** Assign a new batch against the frozen centroids and append its rows
     * to the inverted lists. History is never read or rewritten.
@@ -247,8 +107,7 @@ final class IvfIndex(
     * to the inverted lists. Returns false on a deduplicated replay.
     */
   def appendExactlyOnce(batch: DataFrame, batchId: Long): Boolean =
-    IndexMaint.appendExactlyOnce(spark, dataPath, "list_id",
-      Ann.ivfIndex(batch, idCol, vecCol, centroids), batchId)
+    PqLayout.appendOnce(spark, path, Ann.ivfIndex(batch, idCol, vecCol, centroids), batchId)
 
   /** The persisted inverted lists (list_id is the partition column). */
   def index: DataFrame = spark.read.parquet(dataPath)

@@ -29,10 +29,7 @@ final class IvfPqIndex(
   private val cbPath = s"$path/codebook"
   private val dataPath = s"$path/data"
 
-  // crash recovery: heal a half-finished rebuild swap, then purge
-  // in-flight exactly-once batch traces
-  IndexMaint.recoverSwap(spark, path)
-  IndexMaint.recoverInFlight(spark, dataPath)
+  PqLayout.recover(spark, path)
 
   /** Train the (refined) coarse quantizer and residual codebook on
     * `corpus`, encode it, and write the full initial index.
@@ -45,7 +42,7 @@ final class IvfPqIndex(
     val cb = IvfPq.train(corpus, idCol, vecCol, cents, m, ksub, lloydIterations)
     PqLayout.writeCodebook(spark, cbPath, cb)
     writeBatch(corpus, cents, cb, overwrite = true)
-    PqLayout.writeDriftBaseline(spark, path, meanReconError(corpus))
+    PqLayout.writeDriftBaseline(spark, path, "mean_recon_error", meanReconError(corpus))
   }
 
   /** Mean squared RESIDUAL reconstruction error of a batch under the
@@ -55,21 +52,21 @@ final class IvfPqIndex(
     IvfPq.quantizationError(batch, idCol, vecCol, centroids, codebook)
 
   /** The training-time error recorded by [[build]]. */
-  def driftBaseline: Double = PqLayout.readDriftBaseline(spark, path)
+  def driftBaseline: Double = PqLayout.readDriftBaseline(spark, path, "mean_recon_error")
 
   /** Reconstruction-error growth over the training baseline; past a
     * chosen threshold, [[rebuildAndSwap]] offline.
     */
   def drift(batch: DataFrame): Double = meanReconError(batch) - driftBaseline
 
-  /** Offline rebuild + crash-safe path swap (see [[IndexMaint.swapIn]]). */
+  /** Offline rebuild + crash-safe path swap (see [[PqLayout.rebuildAndSwap]]).
+    * The exactly-once ledger carries over, so the corpus must include
+    * every batch appended through [[appendExactlyOnce]].
+    */
   def rebuildAndSwap(corpus: DataFrame, nlist: Int, m: Int = 8, ksub: Int = 16,
-      lloydIterations: Int = 2): Unit = {
-    val freshPath = s"$path-rebuild"
-    new IvfPqIndex(spark, freshPath, idCol, vecCol)
-      .build(corpus, nlist, m, ksub, lloydIterations)
-    IndexMaint.swapIn(spark, path, freshPath)
-  }
+      lloydIterations: Int = 2): Unit =
+    PqLayout.rebuildAndSwap(spark, path)(fresh =>
+      new IvfPqIndex(spark, fresh, idCol, vecCol).build(corpus, nlist, m, ksub, lloydIterations))
 
   /** The frozen coarse centroids. */
   def centroids: Array[(Int, Array[Float])] = PqLayout.readCentroids(spark, centsPath)
@@ -91,7 +88,7 @@ final class IvfPqIndex(
     * [[IvfIndex.appendExactlyOnce]]; returns false on a replay.
     */
   def appendExactlyOnce(batch: DataFrame, batchId: Long): Boolean =
-    IndexMaint.appendExactlyOnce(spark, dataPath, "list_id",
+    PqLayout.appendOnce(spark, path,
       IvfPq.encode(batch, idCol, vecCol, centroids, codebook), batchId)
 
   /** The persisted code table (list_id is the partition column). */

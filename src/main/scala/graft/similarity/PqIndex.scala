@@ -33,10 +33,7 @@ final class PqIndex(
   private val cbPath = s"$path/codebook"
   private val dataPath = s"$path/data"
 
-  // crash recovery: heal a half-finished rebuild swap, then purge
-  // in-flight exactly-once batch traces
-  IndexMaint.recoverSwap(spark, path)
-  IndexMaint.recoverInFlight(spark, dataPath)
+  PqLayout.recover(spark, path)
 
   /** Train the coarse quantizer and PQ codebook on `corpus`, encode it,
     * and write the full initial index (overwrites `path`).
@@ -50,7 +47,7 @@ final class PqIndex(
     PqLayout.writeCodebook(spark, cbPath, cb)
     writeBatch(corpus, cents, cb, overwrite = true)
     // drift baseline: the training corpus's own quantization error
-    PqLayout.writeDriftBaseline(spark, path, meanReconError(corpus))
+    PqLayout.writeDriftBaseline(spark, path, "mean_recon_error", meanReconError(corpus))
   }
 
   /** Mean squared PQ reconstruction error of a batch under the frozen
@@ -63,7 +60,7 @@ final class PqIndex(
       .head().getDouble(0)
 
   /** The training-time error recorded by [[build]]. */
-  def driftBaseline: Double = PqLayout.readDriftBaseline(spark, path)
+  def driftBaseline: Double = PqLayout.readDriftBaseline(spark, path, "mean_recon_error")
 
   /** Quantizer-drift metric for an incoming batch: reconstruction-error
     * growth over the training baseline (positive = the codebook fits the
@@ -76,15 +73,14 @@ final class PqIndex(
   /** Offline rebuild + path swap for quantizer drift. PQ stores only
     * codes, so the caller supplies the training corpus (the original
     * vectors, e.g. the embeddings table both quantizers were fed from);
-    * the fresh index is built beside `path` and swapped in.
+    * the fresh index is built beside `path` and swapped in. The
+    * exactly-once ledger carries over, so the corpus must include every
+    * batch appended through [[appendExactlyOnce]].
     */
   def rebuildAndSwap(corpus: DataFrame, nlist: Int, m: Int = 8, ksub: Int = 16,
-      lloydIterations: Int = 2): Unit = {
-    val freshPath = s"$path-rebuild"
-    new PqIndex(spark, freshPath, idCol, vecCol)
-      .build(corpus, nlist, m, ksub, lloydIterations)
-    IndexMaint.swapIn(spark, path, freshPath)
-  }
+      lloydIterations: Int = 2): Unit =
+    PqLayout.rebuildAndSwap(spark, path)(fresh =>
+      new PqIndex(spark, fresh, idCol, vecCol).build(corpus, nlist, m, ksub, lloydIterations))
 
   /** The frozen coarse centroids. */
   def centroids: Array[(Int, Array[Float])] = PqLayout.readCentroids(spark, centsPath)
@@ -111,7 +107,7 @@ final class PqIndex(
     * [[IvfIndex.appendExactlyOnce]]; returns false on a replay.
     */
   def appendExactlyOnce(batch: DataFrame, batchId: Long): Boolean =
-    IndexMaint.appendExactlyOnce(spark, dataPath, "list_id",
+    PqLayout.appendOnce(spark, path,
       batchRows(batch, centroids, codebook), batchId)
 
   /** The persisted code table (list_id is the partition column). */

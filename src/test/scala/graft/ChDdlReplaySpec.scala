@@ -29,9 +29,11 @@ class ChDdlReplaySpec extends SparkSpec {
 
   override def afterAll(): Unit = {
     // the published external tables shadow names other suites re-create
-    // as views (shared session) — drop them
-    for (n <- Seq("dws.mainpage_stat_mv_dis", "dwm.mainpage_stat_mv_local"))
-      spark.sql(s"DROP TABLE IF EXISTS $n")
+    // as views (shared session) — drop them, each with the command for its
+    // catalog type (a suite that ran earlier may have left a view there)
+    for (n <- Seq("dws.mainpage_stat_mv_dis", "dwm.mainpage_stat_mv_local")
+         if spark.catalog.tableExists(n))
+      spark.sql(s"DROP ${if (spark.catalog.getTable(n).tableType == "VIEW") "VIEW" else "TABLE"} $n")
     super.afterAll()
   }
 

@@ -146,6 +146,44 @@ class IvfIndexSpec extends SparkSpec {
     assert(ix.index.count() == combined.count())
   }
 
+  test("rebuild-and-swap keeps the exactly-once ledger: a replayed id stays a no-op") {
+    val ix = new IvfIndex(spark, tmp())
+    ix.build(emb.filter(col("vec_id") < 200).select("vec_id", "embedding"), nlist = 4)
+    val b = emb.filter(col("vec_id").between(200, 299)).select("vec_id", "embedding")
+    assert(ix.appendExactlyOnce(b, 1L), "first delivery must ingest")
+    ix.rebuildFromStoredAndSwap(nlist = 4)
+    val n = ix.index.count()
+    assert(n == 300)
+    assert(!ix.appendExactlyOnce(b, 1L), "a replay after the rebuild must dedup")
+    assert(ix.index.count() == n, "a replay after the rebuild must not append")
+  }
+
+  test("open drops a stale '-rebuild' and '-old' beside a live index, keeping its ledger") {
+    import org.apache.hadoop.fs.{FileUtil, Path}
+    val path = tmp()
+    val ix = new IvfIndex(spark, path)
+    ix.build(emb.filter(col("vec_id") < 200).select("vec_id", "embedding"), nlist = 4)
+    val b = emb.filter(col("vec_id").between(200, 299)).select("vec_id", "embedding")
+    assert(ix.appendExactlyOnce(b, 1L))
+    val n = ix.index.count()
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = new Path(path).getFileSystem(conf)
+    // a crash after the rebuilt tree swapped in but before its ledger moved
+    // back: the superseded tree (ledger inside) is still at '-old' and the
+    // live tree has none; a later rebuild died half-built at '-rebuild'
+    assert(FileUtil.copy(fs, new Path(path), fs, new Path(path + "-old"), false, conf))
+    assert(fs.delete(new Path(path, "data/_ledger"), true))
+    assert(FileUtil.copy(fs, new Path(path, "centroids"), fs,
+      new Path(path + "-rebuild/centroids"), false, conf))
+
+    val reopened = new IvfIndex(spark, path)
+    assert(!fs.exists(new Path(path + "-rebuild")), "open must drop the half-built tree")
+    assert(!fs.exists(new Path(path + "-old")), "open must drop the superseded tree")
+    assert(fs.exists(new Path(path, "data/_ledger/batch-1")), "the live tree must hold the ledger")
+    assert(!reopened.appendExactlyOnce(b, 1L), "a replay must stay a no-op")
+    assert(reopened.index.count() == n)
+  }
+
   test("crash mid-swap: the '-old' tree is restored on the next open") {
     import org.apache.hadoop.fs.Path
     val path = tmp()

@@ -160,6 +160,20 @@ class IvfPqSpec extends SparkSpec {
       s"post-swap search should surface a cluster-mate first: ${top.toSeq}")
   }
 
+  test("IvfPqIndex: rebuild-and-swap keeps the exactly-once ledger") {
+    import graft.similarity.IvfPqIndex
+    val ix = new IvfPqIndex(spark, tmpDir("ivfpq-ledger") + "/ix")
+    ix.build(clustered.filter(col("vec_id") < 400), nlist = 8, m = 8, ksub = 16,
+      lloydIterations = 1)
+    val b = clustered.filter(col("vec_id") >= 400)
+    assert(ix.appendExactlyOnce(b, 1L), "first delivery must ingest")
+    ix.rebuildAndSwap(clustered, nlist = 8, m = 8, ksub = 16, lloydIterations = 1)
+    val n = ix.index.count()
+    assert(n == 500)
+    assert(!ix.appendExactlyOnce(b, 1L), "a replay after the rebuild must dedup")
+    assert(ix.index.count() == n, "a replay after the rebuild must not append")
+  }
+
   test("pq_decode / pq_adc_dot agree with local replicas") {
     graft.functions.ChCompat.register(spark)
     val cb = Pq.trainCodebook(emb, "vec_id", "embedding", m = 8, ksub = 16, iterations = 1)

@@ -274,6 +274,31 @@ class StateTableSpec extends SparkSpec {
       .map(_.getDate(0).toString).toSeq == Seq("2024-01-02"))
   }
 
+  test("open rescues the ledger from a stale .compact.old beside a live table") {
+    val dir = tmpDir("state")
+    val st = newTable(dir + "/t")
+    assert(st.appendBatchExactlyOnce(batch1, batchId = 0L))
+    val expected = st.finalized().collect().map(_.toSeq).sortBy(_.mkString("|"))
+    // simulate a crash after compact() swapped the rewrite in but before
+    // the ledger moved back: live table without `_ledger`, the superseded
+    // copy (ledger inside) still at .compact.old
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
+    val p = new org.apache.hadoop.fs.Path(dir + "/t")
+    val o = new org.apache.hadoop.fs.Path(dir + "/t.compact.old")
+    assert(org.apache.hadoop.fs.FileUtil.copy(fs, p, fs, o, false,
+      spark.sparkContext.hadoopConfiguration))
+    assert(fs.delete(new org.apache.hadoop.fs.Path(p, "_ledger"), true))
+
+    val reopened = newTable(dir + "/t")
+    assert(!fs.exists(o), "recovery must drop the superseded copy")
+    assert(fs.exists(new org.apache.hadoop.fs.Path(p, "_ledger/batch-0")),
+      "recovery must move the ledger back into the live table")
+    assert(!reopened.appendBatchExactlyOnce(batch1, 0L), "a replay must stay a no-op")
+    val got = reopened.finalized().collect().map(_.toSeq).sortBy(_.mkString("|"))
+    assert(got.toSeq == expected.toSeq)
+  }
+
   test("exactly-once append: replayed batch ids are no-ops, across reopen and compact") {
     val dir = tmpDir("st-eo") + "/t"
     val st = newTable(dir)
