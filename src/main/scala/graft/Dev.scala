@@ -28,8 +28,9 @@ import scala.collection.mutable.ArrayBuffer
   *     build/plan/exec seconds per rep, then the last (steady-state) rep's
   *     per-stage wall time, tasks, input/shuffle/spill MB, CPU and GC ms.
   *   sql <sfDir> "<sql>" [n]
-  *     one statement over the raw tables as temp views named like the
-  *     DuckDB oracle's, first n rows (default 50).
+  *     one dialect statement (through `engine.ChSql.run`) over the raw
+  *     tables as temp views named like the DuckDB oracle's, first n rows
+  *     (default 50).
   */
 object Dev {
 
@@ -165,6 +166,6 @@ object Dev {
         .createOrReplaceTempView(name))
     t.events.createOrReplaceTempView("events")
     t.eventsWithDefaults.createOrReplaceTempView("events_with_defaults")
-    spark.sql(sql).show(n, truncate = false)
+    graft.engine.ChSql.run(spark, sql).show(n, truncate = false)
   }
 }

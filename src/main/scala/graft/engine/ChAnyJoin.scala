@@ -1,8 +1,6 @@
 package graft.engine
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** ClickHouse ANY-strictness join dialect → [[graft.operators.AnyJoin]]:
   * lets a CH user run the literal syntax
@@ -22,14 +20,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * this shape; ours is additionally reproducible).
   *
   * Translation mirrors [[ChAsof]]: resolve both tables, rename right keys
-  * onto the left's names, execute the ANY join, register a temp view, and
-  * splice it into the query with side qualifiers stripped. Non-key right
-  * columns must not collide with left column names (project/alias first —
-  * the output is one flat namespace).
+  * onto the left's names, execute the ANY join, bind it under a fresh
+  * name, and splice that into the query with side qualifiers stripped.
+  * Non-key right columns must not collide with left column names
+  * (project/alias first — the output is one flat namespace).
   */
 object ChAnyJoin {
-
-  private val viewSeq = new AtomicInteger
 
   private val anyJoinRe =
     ("(?is)\\bfrom\\s+([\\w.]+)(?:\\s+(?:as\\s+)?(?!any\\b|left\\b|right\\b|inner\\b|join\\b)(\\w+))?" +
@@ -40,36 +36,27 @@ object ChAnyJoin {
       "\\bhaving\\b|\\blimit\\b|\\bwindow\\b|\\bsettings\\b|$)").r
 
   /** Does the query contain an ANY join to translate? */
-  def applies(sql: String): Boolean = anyJoinRe.findFirstIn(sql).isDefined
+  def applies(sql: String): Boolean = anyJoinRe.findFirstIn(ChSql.maskStrings(sql)).isDefined
 
-  /** Run `sql`, translating one ANY join clause; table references resolve
-    * through `resolve` (defaults to the session catalog / temp views).
+  /** Rewrite the ANY join span of `query` (matched on its masked twin)
+    * into `FROM <bind's name for the ANY join of the two tables>`.
     */
-  def sql(spark: SparkSession, query: String,
-      resolve: String => DataFrame = null): DataFrame = {
-    val r = Option(resolve).getOrElse((n: String) => spark.table(n))
-    spark.sql(rewrite(spark, query, r))
-  }
-
-  /** Rewrite the ANY join span of `query` into a plain FROM over a temp
-    * view holding the executed join; throws if no ANY join present.
-    */
-  def rewrite(spark: SparkSession, query: String,
-      resolve: String => DataFrame): String = {
-    val m = anyJoinRe.findFirstMatchIn(query).getOrElse(
+  private[engine] def rewrite(query: String, table: String => DataFrame,
+      bind: DataFrame => String): String = {
+    val m = anyJoinRe.findFirstMatchIn(ChSql.maskStrings(query)).getOrElse(
       sys.error("ChAnyJoin: no ANY join clause in query"))
     val (leftName, leftAlias) = (m.group(1), Option(m.group(2)))
     val strictness = Option(m.group(3)).orElse(Option(m.group(4)))
       .map(_.toLowerCase).getOrElse("inner")
     val (rightName, rightAlias) = (m.group(5), Option(m.group(6)))
-    val onClause = Option(m.group(7)).map(_.trim)
-    val usingCols = Option(m.group(8))
+    val onClause = Option(m.group(7)).map(_ => ChSql.grp(query, m, 7).trim)
+    val usingCols = Option(m.group(8)).map(_ => ChSql.grp(query, m, 8))
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
 
-    val leftDf = resolve(leftName)
-    val rightDf = resolve(rightName)
-    val lQuals = (leftAlias.toSeq :+ leftName) ++ leftName.split('.').lastOption
-    val rQuals = (rightAlias.toSeq :+ rightName) ++ rightName.split('.').lastOption
+    val leftDf = table(leftName)
+    val rightDf = table(rightName)
+    val lQuals = ChJoinSyntax.quals(leftName, leftAlias)
+    val rQuals = ChJoinSyntax.quals(rightName, rightAlias)
 
     val keyPairs = usingCols match {
       case Some(cols) =>
@@ -96,12 +83,6 @@ object ChAnyJoin {
       case "right" => graft.operators.AnyJoin.anyRight(leftDf, right2, keys)
       case _ => graft.operators.AnyJoin.anyInner(leftDf, right2, keys)
     }
-
-    val view = s"graft_any_join_${viewSeq.incrementAndGet()}"
-    joined.createOrReplaceTempView(view)
-
-    val spliced = query.substring(0, m.start) + s" FROM $view " + query.substring(m.end)
-    val quals = (lQuals ++ rQuals).distinct.filter(_.nonEmpty)
-    ChJoinSyntax.stripQualifiers(spliced, quals)
+    ChJoinSyntax.splice(query, m, bind(joined), lQuals ++ rQuals)
   }
 }

@@ -1,8 +1,6 @@
 package graft.engine
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, explode, explode_outer}
 
 /** ClickHouse `ARRAY JOIN` clause → an explode projection: lets a CH user
@@ -24,12 +22,10 @@ import org.apache.spark.sql.functions.{col, explode, explode_outer}
   *
   * CH's multi-array zip form (`ARRAY JOIN a, b`) is rejected with a clear
   * error — compose `arrays_zip` explicitly if needed. Translation mirrors
-  * [[ChAsof]]/[[ChAnyJoin]]: resolve the table, execute the projection,
-  * splice a temp view, strip qualifiers.
+  * [[ChAsof]]/[[ChAnyJoin]]: resolve the table, build the projection,
+  * splice its bound name, strip qualifiers.
   */
 object ChArrayJoin {
-
-  private val viewSeq = new AtomicInteger
 
   private val arrayJoinRe =
     ("(?is)\\bfrom\\s+([\\w.]+)(?:\\s+(?:as\\s+)?(?!left\\b|array\\b)(\\w+))?" +
@@ -47,30 +43,24 @@ object ChArrayJoin {
       "\\s+(left\\s+)?array\\s+join\\s+(?=\\w+\\s*\\()").r
 
   /** Does the query contain an ARRAY JOIN clause to translate? */
-  def applies(sql: String): Boolean =
-    arrayJoinRe.findFirstIn(sql).isDefined || exprPrefixRe.findFirstIn(sql).isDefined
-
-  /** Run `sql`, translating one ARRAY JOIN clause; table references
-    * resolve through `resolve` (defaults to the session catalog).
-    */
-  def sql(spark: SparkSession, query: String,
-      resolve: String => DataFrame = null): DataFrame = {
-    val r = Option(resolve).getOrElse((n: String) => spark.table(n))
-    spark.sql(rewrite(spark, query, r))
+  def applies(sql: String): Boolean = {
+    val masked = ChSql.maskStrings(sql)
+    arrayJoinRe.findFirstIn(masked).isDefined || exprPrefixRe.findFirstIn(masked).isDefined
   }
 
-  /** Rewrite the ARRAY JOIN span into a plain FROM over a temp view
-    * holding the exploded projection; throws if none present.
+  /** Rewrite each ARRAY JOIN span (matched on the masked twin) into
+    * `FROM <bind's name for the exploded projection of the table>`.
     */
-  def rewrite(spark: SparkSession, query: String,
-      resolve: String => DataFrame): String = {
+  private[engine] def rewrite(query: String, table: String => DataFrame,
+      bind: DataFrame => String): String = {
     // an expression operand (`array(...)`, any fn call) also PREFIX-matches
     // the column-form regex but would mis-scan at its first comma — the
     // earliest-starting form wins, expr form on ties
-    val exprM = exprPrefixRe.findFirstMatchIn(query)
-    val simpleM = arrayJoinRe.findFirstMatchIn(query)
+    val masked = ChSql.maskStrings(query)
+    val exprM = exprPrefixRe.findFirstMatchIn(masked)
+    val simpleM = arrayJoinRe.findFirstMatchIn(masked)
     if (exprM.isDefined && simpleM.forall(_.start >= exprM.get.start))
-      return rewriteExprForm(spark, query, resolve)
+      return rewriteExprForm(query, masked, exprM.get, table, bind)
     val m = simpleM.getOrElse(
       sys.error("ChArrayJoin: no ARRAY JOIN clause in query"))
     val (tableName, alias) = (m.group(1), Option(m.group(2)))
@@ -80,9 +70,8 @@ object ChArrayJoin {
         "zip the arrays explicitly (arrays_zip) and ARRAY JOIN the result")
     val elemAlias = Option(m.group(6))
 
-    val df = resolve(tableName)
-    val quals = ((alias.toSeq :+ tableName) ++ tableName.split('.').lastOption)
-      .distinct.filter(_.nonEmpty)
+    val df = table(tableName)
+    val quals = ChJoinSyntax.quals(tableName, alias)
     // the array reference may be qualified (`t.arr`) — strip a known
     // qualifier before resolving it against the frame
     val rawArr = m.group(4)
@@ -108,12 +97,9 @@ object ChArrayJoin {
           gen.as(arrCol): _*)
     }
 
-    val view = s"graft_array_join_${viewSeq.incrementAndGet()}"
-    out.createOrReplaceTempView(view)
-    val spliced = query.substring(0, m.start) + s" FROM $view " + query.substring(m.end)
-    val res = ChJoinSyntax.stripQualifiers(spliced, quals)
+    val res = ChJoinSyntax.splice(query, m, bind(out), quals)
     // translate any remaining clause (one per UNION ALL branch)
-    if (applies(res)) rewrite(spark, res, resolve) else res
+    if (applies(res)) rewrite(res, table, bind) else res
   }
 
   /** The expression-operand form, rewritten purely at the string level
@@ -126,15 +112,13 @@ object ChArrayJoin {
     * clause per branch). CH requires AS on an expression operand and so
     * does this shim.
     */
-  private def rewriteExprForm(spark: SparkSession, query: String,
-      resolve: String => DataFrame): String = {
-    val m = exprPrefixRe.findFirstMatchIn(query).getOrElse(
-      sys.error("ChArrayJoin: no ARRAY JOIN clause in query"))
+  private def rewriteExprForm(query: String, masked: String,
+      m: scala.util.matching.Regex.Match, table: String => DataFrame,
+      bind: DataFrame => String): String = {
     val (tableName, alias) = (m.group(1), Option(m.group(2)))
     val isLeft = m.group(3) != null
     // consume the balanced operand expression: up to depth-0 whitespace
     // or the close of an enclosing scope, read on the masked twin
-    val masked = ChSql.maskStrings(query)
     var i = m.end; var depth = 0
     while (i < query.length && (masked.charAt(i) match {
       case '(' | '[' => depth += 1; true
@@ -142,19 +126,17 @@ object ChArrayJoin {
       case c => depth > 0 || !c.isWhitespace
     })) i += 1
     val expr = query.substring(m.end, i).trim
-    val asM = """(?is)^\s+as\s+(\w+)""".r.findFirstMatchIn(query.substring(i)).getOrElse(
+    val asM = """(?is)^\s+as\s+(\w+)""".r.findFirstMatchIn(masked.substring(i)).getOrElse(
       sys.error("ChArrayJoin: an expression ARRAY JOIN operand needs AS <name>"))
     val name = asM.group(1)
     val fn = if (isLeft) "explode_outer" else "explode"
     // resolve the base through the caller (replay bindings included) and
-    // splice it as a view, like the column form does
-    val baseView = s"graft_array_join_${viewSeq.incrementAndGet()}"
-    resolve(tableName).createOrReplaceTempView(baseView)
-    val sub = s"(SELECT *, $fn($expr) AS $name FROM $baseView)" +
+    // splice its bound name, like the column form does
+    val sub = s"(SELECT *, $fn($expr) AS $name FROM ${bind(table(tableName))})" +
       alias.map(a => s" $a").getOrElse("")
     val spliced = query.substring(0, m.start) + s" FROM $sub " +
       query.substring(i + asM.end)
     // recurse: translate any remaining clause (UNION ALL branches)
-    if (applies(spliced)) rewrite(spark, spliced, resolve) else spliced
+    if (applies(spliced)) rewrite(spliced, table, bind) else spliced
   }
 }

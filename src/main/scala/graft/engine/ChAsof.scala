@@ -1,8 +1,6 @@
 package graft.engine
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
 /** ClickHouse `ASOF JOIN` dialect → [[graft.operators.AsOfJoin]]: lets a
@@ -22,11 +20,12 @@ import org.apache.spark.sql.functions.col
   * Translation: resolve both table references, rename the right join keys
   * onto the left's names, run the window-formulation sort-merge
   * ([[graft.operators.AsOfJoin.asof]] — one shuffle per side, no interval
-  * explosion), register the result as a temp view, and splice that view
-  * into the original query with the side qualifiers stripped (the joined
-  * view carries every left column plus the right payload under their
-  * original names). `ASOF JOIN` without LEFT is the inner form: left rows
-  * with no match are dropped (CH inner-ASOF semantics).
+  * explosion), bind the result under a fresh name ([[ChSql.run]]'s
+  * binding), and splice that name into the original query with the side
+  * qualifiers stripped (the joined frame carries every left column plus
+  * the right payload under their original names). `ASOF JOIN` without
+  * LEFT is the inner form: left rows with no match are dropped (CH
+  * inner-ASOF semantics).
   *
   * Constraints (same as the Scala operator, checked with clear errors):
   * non-key right columns — including the right time column — must not
@@ -36,8 +35,6 @@ import org.apache.spark.sql.functions.col
   */
 object ChAsof {
 
-  private val viewSeq = new AtomicInteger
-
   private val asofJoinRe =
     ("(?is)\\bfrom\\s+([\\w.]+)(?:\\s+(?:as\\s+)?(?!asof\\b)(\\w+))?" +
       "\\s+asof\\s+(left\\s+)?join\\s+([\\w.]+)(?:\\s+(?:as\\s+)?(?!on\\b|using\\b)(\\w+))?" +
@@ -46,35 +43,26 @@ object ChAsof {
       "\\bhaving\\b|\\blimit\\b|\\bwindow\\b|\\bsettings\\b|$)").r
 
   /** Does the query contain an ASOF JOIN to translate? */
-  def applies(sql: String): Boolean = asofJoinRe.findFirstIn(sql).isDefined
+  def applies(sql: String): Boolean = asofJoinRe.findFirstIn(ChSql.maskStrings(sql)).isDefined
 
-  /** Run `sql`, translating one ASOF JOIN clause; table references resolve
-    * through `resolve` (defaults to the session catalog / temp views).
+  /** Rewrite the ASOF JOIN span of `query` (matched on its masked twin)
+    * into `FROM <bind's name for the asof join of the two tables>`.
     */
-  def sql(spark: SparkSession, query: String,
-      resolve: String => DataFrame = null): DataFrame = {
-    val r = Option(resolve).getOrElse((n: String) => spark.table(n))
-    spark.sql(rewrite(spark, query, r))
-  }
-
-  /** Rewrite the ASOF JOIN span of `query` into a plain FROM over a temp
-    * view holding the executed asof join; throws if no ASOF JOIN present.
-    */
-  def rewrite(spark: SparkSession, query: String,
-      resolve: String => DataFrame): String = {
-    val m = asofJoinRe.findFirstMatchIn(query).getOrElse(
+  private[engine] def rewrite(query: String, table: String => DataFrame,
+      bind: DataFrame => String): String = {
+    val m = asofJoinRe.findFirstMatchIn(ChSql.maskStrings(query)).getOrElse(
       sys.error("ChAsof: no ASOF JOIN clause in query"))
     val (leftName, leftAlias) = (m.group(1), Option(m.group(2)))
     val isLeft = m.group(3) != null
     val (rightName, rightAlias) = (m.group(4), Option(m.group(5)))
-    val onClause = Option(m.group(6)).map(_.trim)
-    val usingCols = Option(m.group(7))
+    val onClause = Option(m.group(6)).map(_ => ChSql.grp(query, m, 6).trim)
+    val usingCols = Option(m.group(7)).map(_ => ChSql.grp(query, m, 7))
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
 
-    val leftDf = resolve(leftName)
-    val rightDf = resolve(rightName)
-    val lQuals = (leftAlias.toSeq :+ leftName) ++ leftName.split('.').lastOption
-    val rQuals = (rightAlias.toSeq :+ rightName) ++ rightName.split('.').lastOption
+    val leftDf = table(leftName)
+    val rightDf = table(rightName)
+    val lQuals = ChJoinSyntax.quals(leftName, leftAlias)
+    val rQuals = ChJoinSyntax.quals(rightName, rightAlias)
 
     var keyPairs = Vector.empty[(String, String)] // (left col, right col)
     var timePair: Option[(String, String, String)] = None // (op as l-vs-r, lcol, rcol)
@@ -122,15 +110,6 @@ object ChAsof {
     // existed under its alias for the join — drop it (CH USING keeps the
     // left's)
     val result = if (usingCols.isDefined) matched.drop(usingRightTs) else matched
-
-    val view = s"graft_asof_join_${viewSeq.incrementAndGet()}"
-    result.createOrReplaceTempView(view)
-
-    // splice: FROM <view> replaces the whole ASOF span, then strip the two
-    // sides' qualifiers everywhere outside string literals (the view is one
-    // flat namespace carrying both sides' original column names)
-    val spliced = query.substring(0, m.start) + s" FROM $view " + query.substring(m.end)
-    val quals = (lQuals ++ rQuals).distinct.filter(_.nonEmpty)
-    ChJoinSyntax.stripQualifiers(spliced, quals)
+    ChJoinSyntax.splice(query, m, bind(result), lQuals ++ rQuals)
   }
 }

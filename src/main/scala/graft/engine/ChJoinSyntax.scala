@@ -7,8 +7,8 @@ import org.apache.spark.sql.DataFrame
 /** Shared pieces of the string-level CH join-dialect translators
   * ([[ChAsof]], [[ChAnyJoin]]): ON-clause parsing with side
   * classification against the two resolved tables, the right-key
-  * rename, and qualifier stripping around the spliced result view (the
-  * executed join is one flat namespace).
+  * rename, and qualifier stripping around the spliced result name (the
+  * joined frame is one flat namespace).
   */
 private[engine] object ChJoinSyntax {
 
@@ -74,6 +74,20 @@ private[engine] object ChJoinSyntax {
         right.withColumnRenamed(rk, lk)
       }
   }
+
+  /** The names a table's columns may be qualified with: its alias, its
+    * full name and its last name part. */
+  def quals(name: String, alias: Option[String]): Seq[String] =
+    (alias.toSeq :+ name) ++ name.split('.').lastOption
+
+  /** `query` with the clause span `m` replaced by `FROM <bound>` and the
+    * `quals` stripped everywhere outside literals (the bound frame is one
+    * flat namespace carrying the sides' original column names).
+    */
+  def splice(query: String, m: scala.util.matching.Regex.Match, bound: String,
+      quals: Seq[String]): String =
+    stripQualifiers(query.substring(0, m.start) + s" FROM $bound " +
+      query.substring(m.end), quals.distinct.filter(_.nonEmpty))
 
   /** Remove `qual.` prefixes outside literals, quoted names and comments. */
   def stripQualifiers(sql: String, quals: Seq[String]): String = {

@@ -2,8 +2,6 @@ package graft.engine
 
 import scala.util.matching.Regex
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
 /** ClickHouse `LIMIT [offset,] n BY expressions` — the per-group head
   * clause (first n rows for each distinct value of the BY expressions,
   * in the query's ORDER BY order), the SQL face of
@@ -66,10 +64,6 @@ object ChLimitBy {
   }
 
   def applies(sql: String): Boolean = findClause(sql).isDefined
-
-  /** Translate the one top-level `LIMIT n BY` clause and run the query. */
-  def sql(spark: SparkSession, query: String): DataFrame =
-    spark.sql(rewrite(query))
 
   def rewrite(query: String): String = {
     val c = findClause(query).getOrElse(

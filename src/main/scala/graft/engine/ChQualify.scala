@@ -1,7 +1,5 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
 /** CH `QUALIFY` — filter on window-function results after the windows
   * compute (ClickHouse 23.x+; Spark has no QUALIFY). Rewrite: the query
   * up to QUALIFY wraps as a subquery and the condition becomes an outer
@@ -25,9 +23,6 @@ object ChQualify {
 
   def applies(sql: String): Boolean = find(sql).isDefined
 
-  def sql(spark: SparkSession, query: String): DataFrame =
-    spark.sql(rewrite(query))
-
   def rewrite(query: String): String = {
     val (start, _, cond, tail) = find(query).getOrElse(
       sys.error("ChQualify: no top-level QUALIFY clause"))
@@ -48,9 +43,6 @@ object ChDistinctOn {
   private val headRe = """(?is)^(\s*select\s+)distinct\s+on\s*\(""".r
 
   def applies(sql: String): Boolean = headRe.findFirstIn(sql).isDefined
-
-  def sql(spark: SparkSession, query: String): DataFrame =
-    spark.sql(rewrite(query))
 
   def rewrite(query: String): String = {
     val m = headRe.findFirstMatchIn(query).getOrElse(

@@ -39,7 +39,7 @@ import graft.mv.{BitmapUvMetric, EntropyMetric, HllUvMetric, MaterializedView, M
   *    ref dwm.mainpage_stat_mv_dis.sql:78-96);
   *  - `DROP TABLE <mv>` → detaches that MV (drop-recreate flow);
   *  - SELECT statements are collected in [[queries]] for the caller to
-  *    run (see [[runQuery]] for the two mechanical dialect shims).
+  *    run through [[runQuery]] (the dialect front door, [[ChSql.run]]).
   */
 object ChReplay {
   // the interactive-statement scanners, compiled once (runQuery calls
@@ -824,16 +824,6 @@ final class ChReplay(spark: SparkSession, warehouseDir: String) {
         (liveSnapshotEmpty && anyPartAt("")))
       publishPartsViews()
 
-  /** Run one of the scripts' SELECTs with three mechanical shims: CH's
-    * paren-less `USING a,b` becomes `USING (a,b)`; literal date
-    * substitutions map the scripts' capture-day literals onto the replay's
-    * ingested days; and GROUP BY terms that name a SELECT alias become
-    * ordinals — ClickHouse resolves such names to the alias where Spark
-    * prefers the source column (the alias-shadowing divergence documented
-    * in [[graft.functions.ChCompat]]), and the ordinal implements CH's
-    * choice. Everything else (dictGet, -State/-Merge/-If, toUInt*) runs
-    * through the ChCompat dialect unchanged.
-    */
   /** CH's interactive introspection statements, answered like a server
     * would: `SHOW DATABASES`, `SHOW TABLES [FROM db] [LIKE '...']`,
     * `DESC[RIBE] [TABLE] t` (declared column order, CH's five-column
@@ -991,6 +981,17 @@ final class ChReplay(spark: SparkSession, warehouseDir: String) {
       ensurePartsViews()
     }
 
+  /** Run one statement of the scripts (or an interactive user's): CH's
+    * introspection statements answer through [[interactive]]; otherwise
+    * `cluster(...)` table functions read the local table, a SELECT over
+    * the `system.*` views refreshes them first, the literal
+    * `substitutions` apply (the scripts' capture-day literals mapped onto
+    * the replay's ingested days), and the text runs through the dialect
+    * front door ([[ChSql.run]]) with this replay's scope: table names
+    * resolve through [[bind]]ings and Distributed aliases, `SAMPLE` reads
+    * each table's declared SAMPLE BY key, and `FROM t FINAL` reads the
+    * backing [[StateTable.merged]].
+    */
   def runQuery(sql: String, substitutions: Map[String, String] = Map.empty): DataFrame = {
     interactive(sql) match {
       case Some(df) => return df
@@ -1027,250 +1028,14 @@ final class ChReplay(spark: SparkSession, warehouseDir: String) {
     // applied to the cheap views too)
     if (ChReplay.SystemCatalogRe.findFirstIn(sql0).isDefined)
       ensureCatalogViews()
-    // mechanical dialect shims first (PREWHERE, FORMAT, WITH TOTALS)
-    var q = ChSql(sql0)
-    q = ChSql.replaceOnMasked(q, """(?i)\busing\s+(\w+(?:\s*,\s*\w+)+)""".r)(m =>
-      "USING (" + m.group(1).replaceAll("\\s+", "") + ")")
-    for ((from, to) <- substitutions) q = q.replace(from, to)
-    // CH SAMPLE clause: hash-range filter over the table's SAMPLE BY key
-    // (view-splicing form, so SAMPLE composes with the join shims below)
-    if (ChSample.applies(q))
-      q = ChSample.rewriteViews(spark, q, t => tables.get(resolve(t)).flatMap(_.sampleBy))
-    // CH ASOF JOIN: execute the asof span through the window-formulation
-    // operator and splice the result view back into the query
-    if (ChAsof.applies(q)) q = ChAsof.rewrite(spark, q, sourceDf)
-    // CH ANY-strictness joins: deterministic one-row-per-key reduction
-    if (ChAnyJoin.applies(q)) q = ChAnyJoin.rewrite(spark, q, sourceDf)
-    // CH ARRAY JOIN clause: row-expanding explode projection
-    if (ChArrayJoin.applies(q)) q = ChArrayJoin.rewrite(spark, q, sourceDf)
-    // CH FROM t FINAL: merged-one-row-per-key read of a state table
-    q = applyFinal(q)
-    // CH SELECT DISTINCT ON (cols): the first row per group = LIMIT 1 BY
-    if (ChDistinctOn.applies(q)) q = ChDistinctOn.rewrite(q)
-    // CH QUALIFY first: its tail (ORDER BY ... LIMIT n BY ...) moves to
-    // the outer wrapped query, where ChLimitBy can still find it — the
-    // reverse order would bury the QUALIFY inside ChLimitBy's subquery
-    if (ChQualify.applies(q)) q = ChQualify.rewrite(q)
-    // CH LIMIT n BY: per-group heads via one row_number window
-    if (ChLimitBy.applies(q)) q = ChLimitBy.rewrite(q)
-    // CH ORDER BY ... WITH FILL: run the stripped query, densify the axis
-    if (graft.operators.WithFill.applies(q))
-      graft.operators.WithFill.sql(spark, chAliasGroupBy(q))
-    else spark.sql(chAliasGroupBy(q))
-  }
-
-  /** CH `FROM t FINAL` / `JOIN t FINAL`: read the table as if its merge
-    * debt were fully paid — one row per ORDER BY key, every
-    * SimpleAggregateFunction column re-aggregated to its plain value and
-    * every AggregateFunction column merged to a single state (still
-    * consumable by `-Merge`), which is exactly [[StateTable.merged]].
-    * The rewrite splices a temp view of that merged read over each
-    * `<table> FINAL` span; any alias after FINAL is preserved. Like CH,
-    * FINAL is only meaningful on merging engines — a name with no
-    * backing state table is refused rather than silently un-merged.
-    *
-    * Scale note: merged() is one map-side-combined aggregate over the
-    * table's key partitioning — the same cost CH pays executing FINAL
-    * (it merges on read); it does NOT force a compact().
-    */
-  private def applyFinal(q: String): String = {
-    // matches run on the string-masked text (ChSql's shared escape-aware
-    // lexer): a quoted '... from t final ...' can never trigger the
-    // rewrite, and the matched keyword/name text is outside literals so
-    // reading it from the masked match is exact
-    val re = """(?i)\b(from|join)\s+([A-Za-z_][\w.]*)\s+final\b""".r
-    ChSql.replaceOnMasked(q, re) { m =>
-      val name = m.group(2)
-      val st = stateTables.getOrElse(resolve(name), sys.error(
+    val q = substitutions.foldLeft(sql0) { case (t, (from, to)) => t.replace(from, to) }
+    // like CH, FINAL on a name with no backing state table is refused
+    // rather than silently un-merged
+    ChSql.run(spark, q, ChSql.Scope(sourceDf,
+      t => tables.get(resolve(t)).flatMap(_.sampleBy),
+      name => stateTables.getOrElse(resolve(name), sys.error(
         s"$name FINAL: FINAL needs an AggregatingMergeTree-backed table " +
-          s"(known: ${stateTables.keys.mkString(", ")})"))
-      val view = "graft_final_" + resolve(name).replaceAll("[^A-Za-z0-9_]", "_")
-      st.merged().createOrReplaceTempView(view)
-      s"${m.group(1)} $view"
-    }
-  }
-
-  /** CH alias-preference GROUP BY shim, applied PER SELECT BLOCK: each
-    * subquery is masked behind a placeholder, rewritten recursively against
-    * its own select list, and spliced back — so the doc's nested multi-log
-    * formulations (doc:1163-1205) resolve GROUP BY names to their own
-    * block's aliases, CH-style, at any nesting depth.
-    */
-  private def chAliasGroupBy(q: String): String = {
-    val masked = ChSql.maskStrings(q)
-    val sb = new StringBuilder
-    val subs = mutable.ArrayBuffer.empty[String]
-    var i = 0
-    while (i < q.length) {
-      if (masked.charAt(i) == '(' && {
-        var j = i + 1
-        while (j < q.length && masked.charAt(j).isWhitespace) j += 1
-        masked.regionMatches(true, j, "select", 0, 6)
-      }) {
-        val (body, end) = ChDdl.balanced(q, i)
-        subs += chAliasGroupBy(body)
-        sb.append("(\u0000").append(subs.length - 1).append("\u0000)")
-        i = end
-      } else { sb += q.charAt(i); i += 1 }
-    }
-    val flat = rewriteFlatBlock(sb.toString)
-    "\u0000(\\d+)\u0000".r.replaceAllIn(flat, m =>
-      java.util.regex.Matcher.quoteReplacement(subs(m.group(1).toInt)))
-  }
-
-  /** The flat-text rewrite: `q` contains no nested SELECT (subqueries
-    * are masked), but may still hold SIBLING branches joined by
-    * top-level set operations — each branch is its own alias scope in
-    * CH, so the text splits at the set-op keywords (masked match — a
-    * literal 'union' must not split) and each branch rewrites against
-    * its OWN select list.
-    */
-  private def rewriteFlatBlock(q: String): String = {
-    // A bare EXCEPT/INTERSECT keyword is only a SET OPERATION when a new
-    // branch follows: (optionally ALL/DISTINCT, then) SELECT or a masked
-    // subquery "(NUL N NUL)" — subqueries were masked before this runs.
-    // Without the lookahead the column-modifier form `SELECT * EXCEPT
-    // (col)` (which ChSql.scala / ChLimitBy.scala themselves emit) would
-    // cut here, and the non-SELECT tail would silently skip the alias
-    // rewrites. A literal `(col)` list keeps its plain text, so the
-    // masked-paren alternative cannot false-match it.
-    val setOpRe =
-      """(?i)\b(?:union(?:\s+all|\s+distinct)?|except|intersect)\b(?=\s*(?:(?:all|distinct)\b\s*)?(?:select\b|\(\x00))""".r
-    val cuts = setOpRe.findAllMatchIn(ChSql.maskStrings(q))
-      .map(m => (m.start, m.end)).toSeq
-    if (cuts.isEmpty) rewriteFlatBranch(q)
-    else {
-      val sb = new StringBuilder
-      var last = 0
-      for ((s, e) <- cuts) {
-        sb.append(rewriteFlatBranch(q.substring(last, s)))
-        sb.append(q.substring(s, e))
-        last = e
-      }
-      sb.append(rewriteFlatBranch(q.substring(last)))
-      sb.toString
-    }
-  }
-
-  /** One branch's rewrite: select list, GROUP BY and WHERE belong to a
-    * single scope here.
-    */
-  private def rewriteFlatBranch(q: String): String = {
-    val selM = """(?is)^\s*select\s+""".r.findFirstMatchIn(q).getOrElse(return q)
-    // first top-level FROM bounds the select list (read on the masked
-    // twin: a quoted literal may contain ' from ' or commas)
-    val fromIdx = ChSql.findTopLevelKeyword(ChSql.maskStrings(q), selM.end, "from")
-    if (fromIdx < 0) return q
-    val items = ChSql.splitTopArgs(q.substring(selM.end, fromIdx))
-    val aliasOrdinal = items.zipWithIndex.flatMap { case (item, idx) =>
-      """(?is)\bas\s+(\w+)\s*$""".r.findFirstMatchIn(item.trim).map(_.group(1).toLowerCase -> (idx + 1))
-    }.toMap
-    // alias → its expression text (the item minus the trailing AS name);
-    // greedy .* pins the LAST `AS`, so `CAST(x AS INT) AS y` keeps its
-    // inner cast
-    val aliasExpr = items.flatMap { item =>
-      """(?is)^(.*)\bas\s+(\w+)\s*$""".r.findFirstMatchIn(item.trim)
-        .map(m => m.group(2).toLowerCase -> m.group(1).trim)
-    }.toMap
-    // a star item (`*`, `t.*`, `* EXCEPT (...)`) expands to an unknown
-    // number of columns, so ITEM INDEX ≠ output ordinal — substitute the
-    // alias EXPRESSION (parenthesized) instead of an ordinal there; both
-    // forms carry CH's alias-over-source-column preference into Spark
-    val hasStar = items.exists { it =>
-      val t = it.trim
-      t == "*" || t.startsWith("* ") || t.startsWith("*\t") ||
-        """(?s)^\w+\s*\.\s*\*.*""".r.matches(t)
-    }
-    val groupByDone =
-      """(?is)\b(group\s+by)\s+([\w\s,]+?)(?=\border\s+by\b|\bhaving\b|\blimit\b|\bsettings\b|$)""".r
-        .replaceAllIn(q, m => {
-          val terms = m.group(2).split(",").map(_.trim).filter(_.nonEmpty).map { t =>
-            if (hasStar) aliasExpr.get(t.toLowerCase).map(e => s"($e)").getOrElse(t)
-            else aliasOrdinal.get(t.toLowerCase).map(_.toString).getOrElse(t)
-          }
-          // quote the WHOLE replacement: replaceAllIn interprets $/\ in
-          // the returned string, and an inlined alias expression may
-          // legitimately contain either
-          java.util.regex.Matcher.quoteReplacement(
-            m.group(1) + " " + terms.mkString(", ") + "\n")
-        })
-    rewriteWhereAliases(groupByDone, aliasExpr)
-  }
-
-  /** CH's alias preference in WHERE (the GROUP BY shim's sibling): a
-    * WHERE identifier naming a SELECT alias resolves to the ALIAS
-    * EXPRESSION — CH's default (prefer_column_name_to_alias = 0), and
-    * the reading the rebalance tool's own get_parts depends on
-    * (`toUInt32(bytes_on_disk/1024/1024) AS bytes_on_disk ... WHERE
-    * bytes_on_disk > 100` means a 100 MiB floor, per the tool's comment
-    * — Spark's column preference would read 100 BYTES). Inlines the
-    * alias's expression parenthesized; one pass over the alternation so
-    * inserted text is never re-substituted, literal spans left alone,
-    * qualified (`t.name`) and backticked references untouched.
-    */
-  private def rewriteWhereAliases(q: String,
-      aliasExpr: Map[String, String]): String = {
-    if (aliasExpr.isEmpty) return q
-    val names = aliasExpr.keys.map(java.util.regex.Pattern.quote).mkString("|")
-    // (?!\s*\() — an identifier followed by '(' is a FUNCTION call, which
-    // CH resolves in the function namespace, never to an alias (an alias
-    // named `floor` must not corrupt `floor(x)`)
-    val nameRe = ("(?i)(?<![\\w.`])(" + names + ")\\b(?!\\s*\\()").r
-    // one guarded substitution pass over a code run
-    def subst(run: String, m: Map[String, String], skip: String): String =
-      nameRe.replaceAllIn(run, mm => java.util.regex.Matcher.quoteReplacement {
-        val n = mm.group(1).toLowerCase
-        // the CAST type position (`CAST(x AS date)`) is never an alias
-        // reference in CH — keep the identifier when `AS` precedes it
-        if (n == skip || run.substring(0, mm.start(1)).matches("(?is).*\\bas\\s+"))
-          mm.group(0)
-        else "(" + m(n) + ")"
-      })
-    // fast bail: no WHERE/HAVING anywhere ⇒ nothing to rewrite, and the
-    // alias closure below (up to |aliases| regex passes) is skipped on
-    // the replay hot path
-    if ("""(?i)\b(?:where|having)\b""".r.findFirstIn(q).isEmpty) return q
-    // CH resolves alias chains TRANSITIVELY (`a+1 AS x, x*2 AS y ...
-    // WHERE y > 0` means (a+1)*2 > 0), so close the map to a fixed point
-    // before inlining. Rounds are bounded by the alias count: a genuine
-    // cycle (which CH rejects as circular) stops expanding there and the
-    // unresolved name falls through to Spark's resolver — a loud error,
-    // not a silent wrong answer. An alias is never substituted into its
-    // OWN expression (skip = self), so `x+1 AS x` keeps the column read.
-    // Total text is capped: a self-doubling chain (x1 = x0||x0, …) grows
-    // the closure exponentially, so past the cap expansion stops and the
-    // remaining alias names again fall through to Spark — never an OOM.
-    val maxClosureChars = 1 << 20
-    val closed = {
-      var cur = aliasExpr
-      var rounds = 0
-      var changed = true
-      while (changed && rounds < aliasExpr.size &&
-          cur.valuesIterator.map(_.length.toLong).sum < maxClosureChars) {
-        changed = false
-        cur = cur.map { case (n, e) =>
-          val e2 = ChSql.mapCode(e)(run => subst(run, cur, skip = n))
-          if (e2 != e) changed = true
-          n -> e2
-        }
-        rounds += 1
-      }
-      cur
-    }
-    // the set-operation keywords terminate the body too: an unparenthesized
-    // UNION branch is a SIBLING select, not part of this WHERE. HAVING gets
-    // the same alias preference (CH resolves it identically); its body ends
-    // at the same terminators, HAVING itself never nests.
-    val whereRe =
-      ("""(?is)\b(where|having)\s+(.+?)""" +
-        """(?=\bgroup\s+by\b|\border\s+by\b|\bhaving\b|\bqualify\b|""" +
-        """\blimit\b|\bsettings\b|\bwindow\b|""" +
-        """\bunion\b|\bexcept\b|\bintersect\b|$)""").r
-    ChSql.replaceOnMasked(q, whereRe) { m =>
-      val body = ChSql.grp(q, m, 2)
-      val rewritten = ChSql.mapCode(body)(run => subst(run, closed, skip = null))
-      m.group(1).toUpperCase + " " + rewritten
-    }
+          s"(known: ${stateTables.keys.mkString(", ")})")).merged()))
   }
 
   // ---- builders ------------------------------------------------------------

@@ -1,5 +1,7 @@
 package graft.engine
 
+import org.apache.spark.sql.DataFrame
+
 /** ClickHouse `SAMPLE` clause → a deterministic hash-range filter over the
   * table's declared `SAMPLE BY` key (CH docs: SELECT ... SAMPLE k
   * [OFFSET m]; the DDL surface parses through [[ChDdl]] and registers in
@@ -16,9 +18,10 @@ package graft.engine
   * double, and numeric order == the hex string's lexicographic order, so
   * the predicate stays a plain string range any engine can mirror.
   *
-  * The rewrite wraps the sampled table in a filtered subquery aliased to
-  * the original name, so qualified references and everything after FROM
-  * survive verbatim. The filter is an ordinary WHERE on a deterministic
+  * The rewrite binds the filtered table under a fresh name aliased to the
+  * original one, so qualified references and everything after FROM
+  * survive verbatim and the ASOF/ANY join translators downstream still
+  * see `FROM <name> <alias>`. The filter is an ordinary WHERE on a deterministic
   * expression — at scale it rides the scan (no shuffle, no sort), exactly
   * like CH's sample-range index prune in spirit.
   */
@@ -33,7 +36,7 @@ object ChSample {
       "(?:\\s+offset\\s+([0-9]*\\.?[0-9]+(?:\\s*/\\s*[0-9]+)?))?").r
 
   /** Does the query contain a SAMPLE clause to translate? */
-  def applies(sql: String): Boolean = sampleRe.findFirstIn(sql).isDefined
+  def applies(sql: String): Boolean = sampleRe.findFirstIn(ChSql.maskStrings(sql)).isDefined
 
   /** `0.25` or `1/4` → fraction. CH's row-count form (`SAMPLE 10000`) needs
     * table statistics and is rejected with a clear error.
@@ -76,32 +79,14 @@ object ChSample {
     (table, alias, pred)
   }
 
-  /** Rewrite every `FROM t [alias] SAMPLE f [OFFSET m]` span into a
-    * filtered subquery; `sampleKeyFor` supplies the table's SAMPLE BY
-    * expression. Pure string-level — fine standalone, but a subquery in
-    * FROM defeats the downstream string-level join translators; inside
-    * [[ChReplay.runQuery]] use [[rewriteViews]].
+  /** Rewrite every `FROM t [alias] SAMPLE f [OFFSET m]` span (matched on
+    * the masked twin) into `FROM <bound> alias`, `bind`'s name for
+    * `table(t)` filtered to the slice of its `sampleKeyFor(t)` key.
     */
-  def rewrite(query: String, sampleKeyFor: String => Option[String]): String =
-    sampleRe.replaceAllIn(query, m => {
-      val (table, alias, pred) = parsed(m, sampleKeyFor)
-      java.util.regex.Matcher.quoteReplacement(
-        s" FROM (SELECT * FROM $table WHERE $pred) $alias ")
-    })
-
-  private val viewSeq = new java.util.concurrent.atomic.AtomicInteger
-
-  /** Like [[rewrite]], but splices a TEMP VIEW holding the filtered scan,
-    * so `SAMPLE` composes with the ASOF/ANY join translators (their
-    * regexes need a plain `FROM <name> [alias]` span, not a subquery).
-    */
-  def rewriteViews(spark: org.apache.spark.sql.SparkSession, query: String,
-      sampleKeyFor: String => Option[String]): String =
-    sampleRe.replaceAllIn(query, m => {
-      val (table, alias, pred) = parsed(m, sampleKeyFor)
-      val view = s"graft_sample_${viewSeq.incrementAndGet()}"
-      spark.sql(s"CREATE OR REPLACE TEMPORARY VIEW $view AS " +
-        s"SELECT * FROM $table WHERE $pred")
-      java.util.regex.Matcher.quoteReplacement(s" FROM $view $alias ")
-    })
+  private[engine] def rewrite(query: String, sampleKeyFor: String => Option[String],
+      table: String => DataFrame, bind: DataFrame => String): String =
+    ChSql.replaceOnMasked(query, sampleRe) { m =>
+      val (name, alias, pred) = parsed(m, sampleKeyFor)
+      s" FROM ${bind(table(name).where(pred))} $alias "
+    }
 }

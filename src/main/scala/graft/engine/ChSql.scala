@@ -1,8 +1,17 @@
 package graft.engine
 
-/** Pure string-level ClickHouse dialect shims, shared by
-  * [[ChReplay.runQuery]] and usable directly around `spark.sql` —
-  * constructs whose Spark equivalent needs only a mechanical rewrite:
+import scala.collection.mutable
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias, UnresolvedWith}
+import org.apache.spark.sql.graftbridge.ColumnBridge
+
+/** The ClickHouse dialect's front door, [[run]] — the one way to execute
+  * dialect text — and its first step, [[apply]]: the pure string-level
+  * shims for constructs whose Spark equivalent needs only a mechanical
+  * rewrite:
   *
   *  - `PREWHERE` — CH's manual predicate-pushdown stage; Spark's optimizer
   *    already pushes filters to the scan, so it reads as WHERE (and merges
@@ -765,7 +774,7 @@ object ChSql {
     * delimiters kept), so keyword, identifier and bracket scans over it
     * cannot match inside a literal, a quoted identifier or a comment.
     */
-  private[engine] def maskStrings(q: String): String = {
+  private[graft] def maskStrings(q: String): String = {
     val sb = new StringBuilder(q)
     for (s <- lex(q); k <- s.bodyStart until s.bodyEnd) sb.setCharAt(k, ' ')
     sb.toString
@@ -1038,5 +1047,287 @@ object ChSql {
         scalarWith(tupleIndex(chLiterals(dateDiff(xxHash(runningWindow(
           chQuotedIdents(s))))))))))))))
     splitStatements(q).map(one).mkString(";\n")
+  }
+
+  /** The catalog lookups on which [[run]]'s callers differ: how a table
+    * name resolves to its DataFrame (the session catalog, or
+    * [[ChReplay]]'s bindings and Distributed aliases), a table's
+    * `SAMPLE BY` key, and its `FINAL` read (a state table's
+    * [[graft.mv.StateTable.merged]]).
+    */
+  final case class Scope(
+      table: String => DataFrame,
+      sampleKey: String => Option[String] = _ => None,
+      merged: String => DataFrame = name => sys.error(
+        s"$name FINAL: FINAL needs an AggregatingMergeTree-backed table"))
+
+  /** [[run]] over the session catalog. */
+  def run(spark: SparkSession, text: String): DataFrame =
+    run(spark, text, Scope(spark.table))
+
+  /** THE front door for ClickHouse-dialect text: one statement in, one
+    * DataFrame out. In order: the string shims ([[apply]]) and CH's
+    * paren-less `USING a, b`; SAMPLE, ASOF, ANY and ARRAY JOIN; FINAL;
+    * DISTINCT ON, QUALIFY, LIMIT BY (QUALIFY first: its tail moves to the
+    * outer wrapped query, where LIMIT BY can still find it); CH's alias
+    * preference in GROUP BY / WHERE; WITH FILL. The SAMPLE/JOIN/FINAL
+    * shims build their sub-plans from `scope` and splice a fresh name in
+    * their place; the final text is parsed with the session's parser and
+    * each such name — and each of `bound`, e.g. an MV's insert batch
+    * under its source table's name — is replaced by its plan, inside
+    * subquery expressions and CTE bodies too. Nothing is registered in
+    * the session catalog.
+    */
+  def run(spark: SparkSession, text: String, scope: Scope,
+      bound: Map[String, DataFrame] = Map.empty): DataFrame = {
+    val parser = spark.sessionState.sqlParser
+    def key(name: String): Seq[String] = parser.parseMultipartIdentifier(name).map(_.toLowerCase)
+    val frames = mutable.HashMap.empty[Seq[String], DataFrame]
+    for ((name, df) <- bound) frames(key(name)) = df
+    def bind(df: DataFrame): String = {
+      val name = s"__graft_bound_${frames.size}"
+      frames(Seq(name)) = df
+      name
+    }
+    // a clause over an earlier clause's result (SAMPLE under a join) reads its frame
+    val table = (name: String) => frames.getOrElse(key(name), scope.table(name))
+    var q = replaceOnMasked(apply(text), """(?i)\busing\s+(\w+(?:\s*,\s*\w+)+)""".r)(m =>
+      "USING (" + m.group(1).replaceAll("\\s+", "") + ")")
+    if (ChSample.applies(q)) q = ChSample.rewrite(q, scope.sampleKey, table, bind)
+    if (ChAsof.applies(q)) q = ChAsof.rewrite(q, table, bind)
+    if (ChAnyJoin.applies(q)) q = ChAnyJoin.rewrite(q, table, bind)
+    if (ChArrayJoin.applies(q)) q = ChArrayJoin.rewrite(q, table, bind)
+    q = finalReads(q, scope.merged, bind)
+    if (ChDistinctOn.applies(q)) q = ChDistinctOn.rewrite(q)
+    if (ChQualify.applies(q)) q = ChQualify.rewrite(q)
+    if (ChLimitBy.applies(q)) q = ChLimitBy.rewrite(q)
+    val (body, fill) = graft.operators.WithFill.split(aliasGroupBy(q))
+    val plan = mapRelations(parser.parsePlan(body)) { u =>
+      frames.get(u.multipartIdentifier.map(_.toLowerCase)).fold[LogicalPlan](u)(df =>
+        SubqueryAlias(u.multipartIdentifier, df.queryExecution.analyzed))
+    }
+    fill(ColumnBridge.dataFrame(spark, plan))
+  }
+
+  /** Does dialect `text` read table `name` anywhere — in a subquery
+    * expression or a CTE body too? Read on the parsed plan, so a literal
+    * or a longer identifier that merely contains the name does not count.
+    */
+  private[graft] def reads(text: String, name: String): Boolean = {
+    val key = CatalystSqlParser.parseMultipartIdentifier(name).map(_.toLowerCase)
+    var found = false
+    mapRelations(CatalystSqlParser.parsePlan(apply(text))) { u =>
+      found ||= u.multipartIdentifier.map(_.toLowerCase) == key
+      u
+    }
+    found
+  }
+
+  /** `plan` with every table reference replaced by `f`'s plan for it,
+    * in subquery expressions and CTE bodies (which are not children of
+    * their `WITH` node) too.
+    */
+  private def mapRelations(plan: LogicalPlan)(
+      f: UnresolvedRelation => LogicalPlan): LogicalPlan =
+    plan.transformUpWithSubqueries {
+      case u: UnresolvedRelation => f(u)
+      case w: UnresolvedWith => w.copy(cteRelations = w.cteRelations.map(r =>
+        r.copy(_2 = mapRelations(r._2)(f).asInstanceOf[SubqueryAlias])))
+    }
+
+  /** CH `FROM t FINAL` / `JOIN t FINAL`: each span becomes the bound
+    * name of `merged(t)` — [[graft.mv.StateTable.merged]], one row per
+    * ORDER BY key, simple aggregates as plain values, states merged (still
+    * consumable by `-Merge`); any alias after FINAL is preserved. merged()
+    * is one map-side-combined aggregate — the cost CH pays merging on
+    * read; it does NOT force a compact().
+    */
+  private def finalReads(q: String, merged: String => DataFrame,
+      bind: DataFrame => String): String =
+    replaceOnMasked(q, """(?i)\b(from|join)\s+([A-Za-z_][\w.]*)\s+final\b""".r) { m =>
+      s"${m.group(1)} ${bind(merged(m.group(2)))}"
+    }
+
+  /** CH alias-preference GROUP BY shim, applied PER SELECT BLOCK: each
+    * subquery is masked behind a placeholder, rewritten recursively against
+    * its own select list, and spliced back — so the doc's nested multi-log
+    * formulations (doc:1163-1205) resolve GROUP BY names to their own
+    * block's aliases, CH-style, at any nesting depth.
+    */
+  private def aliasGroupBy(q: String): String = {
+    val masked = maskStrings(q)
+    val sb = new StringBuilder
+    val subs = mutable.ArrayBuffer.empty[String]
+    var i = 0
+    while (i < q.length) {
+      if (masked.charAt(i) == '(' && {
+        var j = i + 1
+        while (j < q.length && masked.charAt(j).isWhitespace) j += 1
+        masked.regionMatches(true, j, "select", 0, 6)
+      }) {
+        val (body, end) = ChDdl.balanced(q, i)
+        subs += aliasGroupBy(body)
+        sb.append("(\u0000").append(subs.length - 1).append("\u0000)")
+        i = end
+      } else { sb += q.charAt(i); i += 1 }
+    }
+    val flat = rewriteFlatBlock(sb.toString)
+    "\u0000(\\d+)\u0000".r.replaceAllIn(flat, m =>
+      java.util.regex.Matcher.quoteReplacement(subs(m.group(1).toInt)))
+  }
+
+  /** The flat-text rewrite: `q` contains no nested SELECT (subqueries
+    * are masked), but may still hold SIBLING branches joined by
+    * top-level set operations — each branch is its own alias scope in
+    * CH, so the text splits at the set-op keywords (masked match — a
+    * literal 'union' must not split) and each branch rewrites against
+    * its OWN select list.
+    */
+  private def rewriteFlatBlock(q: String): String = {
+    // A bare EXCEPT/INTERSECT keyword is only a SET OPERATION when a new
+    // branch follows: (optionally ALL/DISTINCT, then) SELECT or a masked
+    // subquery "(NUL N NUL)" — subqueries were masked before this runs.
+    // Without the lookahead the column-modifier form `SELECT * EXCEPT
+    // (col)` (which scala / ChLimitBy.scala themselves emit) would
+    // cut here, and the non-SELECT tail would silently skip the alias
+    // rewrites. A literal `(col)` list keeps its plain text, so the
+    // masked-paren alternative cannot false-match it.
+    val setOpRe =
+      """(?i)\b(?:union(?:\s+all|\s+distinct)?|except|intersect)\b(?=\s*(?:(?:all|distinct)\b\s*)?(?:select\b|\(\x00))""".r
+    val cuts = setOpRe.findAllMatchIn(maskStrings(q))
+      .map(m => (m.start, m.end)).toSeq
+    if (cuts.isEmpty) rewriteFlatBranch(q)
+    else {
+      val sb = new StringBuilder
+      var last = 0
+      for ((s, e) <- cuts) {
+        sb.append(rewriteFlatBranch(q.substring(last, s)))
+        sb.append(q.substring(s, e))
+        last = e
+      }
+      sb.append(rewriteFlatBranch(q.substring(last)))
+      sb.toString
+    }
+  }
+
+  /** One branch's rewrite: select list, GROUP BY and WHERE belong to a
+    * single scope here.
+    */
+  private def rewriteFlatBranch(q: String): String = {
+    val selM = """(?is)^\s*select\s+""".r.findFirstMatchIn(q).getOrElse(return q)
+    // first top-level FROM bounds the select list (read on the masked
+    // twin: a quoted literal may contain ' from ' or commas)
+    val fromIdx = findTopLevelKeyword(maskStrings(q), selM.end, "from")
+    if (fromIdx < 0) return q
+    val items = splitTopArgs(q.substring(selM.end, fromIdx))
+    val aliasOrdinal = items.zipWithIndex.flatMap { case (item, idx) =>
+      """(?is)\bas\s+(\w+)\s*$""".r.findFirstMatchIn(item.trim).map(_.group(1).toLowerCase -> (idx + 1))
+    }.toMap
+    // alias → its expression text (the item minus the trailing AS name);
+    // greedy .* pins the LAST `AS`, so `CAST(x AS INT) AS y` keeps its
+    // inner cast
+    val aliasExpr = items.flatMap { item =>
+      """(?is)^(.*)\bas\s+(\w+)\s*$""".r.findFirstMatchIn(item.trim)
+        .map(m => m.group(2).toLowerCase -> m.group(1).trim)
+    }.toMap
+    // a star item (`*`, `t.*`, `* EXCEPT (...)`) expands to an unknown
+    // number of columns, so ITEM INDEX ≠ output ordinal — substitute the
+    // alias EXPRESSION (parenthesized) instead of an ordinal there; both
+    // forms carry CH's alias-over-source-column preference into Spark
+    val hasStar = items.exists { it =>
+      val t = it.trim
+      t == "*" || t.startsWith("* ") || t.startsWith("*\t") ||
+        """(?s)^\w+\s*\.\s*\*.*""".r.matches(t)
+    }
+    val groupByDone =
+      """(?is)\b(group\s+by)\s+([\w\s,]+?)(?=\border\s+by\b|\bhaving\b|\blimit\b|\bsettings\b|$)""".r
+        .replaceAllIn(q, m => {
+          val terms = m.group(2).split(",").map(_.trim).filter(_.nonEmpty).map { t =>
+            if (hasStar) aliasExpr.get(t.toLowerCase).map(e => s"($e)").getOrElse(t)
+            else aliasOrdinal.get(t.toLowerCase).map(_.toString).getOrElse(t)
+          }
+          // quote the WHOLE replacement: replaceAllIn interprets $/\ in
+          // the returned string, and an inlined alias expression may
+          // legitimately contain either
+          java.util.regex.Matcher.quoteReplacement(
+            m.group(1) + " " + terms.mkString(", ") + "\n")
+        })
+    rewriteWhereAliases(groupByDone, aliasExpr)
+  }
+
+  /** CH's alias preference in WHERE (the GROUP BY shim's sibling): a
+    * WHERE identifier naming a SELECT alias resolves to the ALIAS
+    * EXPRESSION — CH's default (prefer_column_name_to_alias = 0), and
+    * the reading the rebalance tool's own get_parts depends on
+    * (`toUInt32(bytes_on_disk/1024/1024) AS bytes_on_disk ... WHERE
+    * bytes_on_disk > 100` means a 100 MiB floor, per the tool's comment
+    * — Spark's column preference would read 100 BYTES). Inlines the
+    * alias's expression parenthesized; one pass over the alternation so
+    * inserted text is never re-substituted, literal spans left alone,
+    * qualified (`t.name`) and backticked references untouched.
+    */
+  private def rewriteWhereAliases(q: String,
+      aliasExpr: Map[String, String]): String = {
+    if (aliasExpr.isEmpty) return q
+    val names = aliasExpr.keys.map(java.util.regex.Pattern.quote).mkString("|")
+    // (?!\s*\() — an identifier followed by '(' is a FUNCTION call, which
+    // CH resolves in the function namespace, never to an alias (an alias
+    // named `floor` must not corrupt `floor(x)`)
+    val nameRe = ("(?i)(?<![\\w.`])(" + names + ")\\b(?!\\s*\\()").r
+    // one guarded substitution pass over a code run
+    def subst(run: String, m: Map[String, String], skip: String): String =
+      nameRe.replaceAllIn(run, mm => java.util.regex.Matcher.quoteReplacement {
+        val n = mm.group(1).toLowerCase
+        // the CAST type position (`CAST(x AS date)`) is never an alias
+        // reference in CH — keep the identifier when `AS` precedes it
+        if (n == skip || run.substring(0, mm.start(1)).matches("(?is).*\\bas\\s+"))
+          mm.group(0)
+        else "(" + m(n) + ")"
+      })
+    // fast bail: no WHERE/HAVING anywhere ⇒ nothing to rewrite, and the
+    // alias closure below (up to |aliases| regex passes) is skipped on
+    // the replay hot path
+    if ("""(?i)\b(?:where|having)\b""".r.findFirstIn(q).isEmpty) return q
+    // CH resolves alias chains TRANSITIVELY (`a+1 AS x, x*2 AS y ...
+    // WHERE y > 0` means (a+1)*2 > 0), so close the map to a fixed point
+    // before inlining. Rounds are bounded by the alias count: a genuine
+    // cycle (which CH rejects as circular) stops expanding there and the
+    // unresolved name falls through to Spark's resolver — a loud error,
+    // not a silent wrong answer. An alias is never substituted into its
+    // OWN expression (skip = self), so `x+1 AS x` keeps the column read.
+    // Total text is capped: a self-doubling chain (x1 = x0||x0, …) grows
+    // the closure exponentially, so past the cap expansion stops and the
+    // remaining alias names again fall through to Spark — never an OOM.
+    val maxClosureChars = 1 << 20
+    val closed = {
+      var cur = aliasExpr
+      var rounds = 0
+      var changed = true
+      while (changed && rounds < aliasExpr.size &&
+          cur.valuesIterator.map(_.length.toLong).sum < maxClosureChars) {
+        changed = false
+        cur = cur.map { case (n, e) =>
+          val e2 = mapCode(e)(run => subst(run, cur, skip = n))
+          if (e2 != e) changed = true
+          n -> e2
+        }
+        rounds += 1
+      }
+      cur
+    }
+    // the set-operation keywords terminate the body too: an unparenthesized
+    // UNION branch is a SIBLING select, not part of this WHERE. HAVING gets
+    // the same alias preference (CH resolves it identically); its body ends
+    // at the same terminators, HAVING itself never nests.
+    val whereRe =
+      ("""(?is)\b(where|having)\s+(.+?)""" +
+        """(?=\bgroup\s+by\b|\border\s+by\b|\bhaving\b|\bqualify\b|""" +
+        """\blimit\b|\bsettings\b|\bwindow\b|""" +
+        """\bunion\b|\bexcept\b|\bintersect\b|$)""").r
+    replaceOnMasked(q, whereRe) { m =>
+      val body = grp(q, m, 2)
+      val rewritten = mapCode(body)(run => subst(run, closed, skip = null))
+      m.group(1).toUpperCase + " " + rewritten
+    }
   }
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.Row
 
+import graft.engine.ChSql
+
 /** A materialized view: a per-batch transform feeding a [[StateTable]] —
   * ClickHouse's `CREATE MATERIALIZED VIEW ... TO dwm.x_local AS SELECT ...
   * FROM ods.y_local GROUP BY ...` insert trigger
@@ -95,9 +97,10 @@ object MaterializedView {
   /** A materialized view defined by its ClickHouse-dialect SELECT — the
     * literal `CREATE MATERIALIZED VIEW ... TO target AS <mvSql>` form
     * (ref dwm.mainpage_stat_mv_dis.sql:40-57). Per insert batch the
-    * trigger fires over THAT BATCH ONLY (doc:298-301), so `sourceTable`
-    * (the `FROM` name in the SQL, e.g. `ods.action_001_local`) is rebound
-    * to a view of the batch before running the SELECT. The SELECT's
+    * trigger fires over THAT BATCH ONLY (doc:298-301), so the SELECT runs
+    * through the dialect front door ([[graft.engine.ChSql.run]]) with
+    * `sourceTable` (the `FROM` name in the SQL, e.g.
+    * `ods.action_001_local`) bound to the batch's plan. The SELECT's
     * `-State` columns land in the target as-is; merge-on-read finishes the
     * job. Requires the SQL's output columns to match the target's keys +
     * metric names (same contract as the reference's MV column list).
@@ -112,18 +115,12 @@ object MaterializedView {
       sourceTable: String,
       target: StateTable,
       conform: DataFrame => DataFrame = identity): MaterializedView = {
-    val batchView = "graft_mv_batch_" + name.replaceAll("[^A-Za-z0-9_]", "_")
-    // word-boundary rebinding: don't mangle longer identifiers that merely
-    // contain the source name (ods.action_001_local_ext etc.)
-    val sourcePattern = ("(?<![A-Za-z0-9_.])" +
-      java.util.regex.Pattern.quote(sourceTable) + "(?![A-Za-z0-9_])").r
-    require(sourcePattern.findFirstIn(mvSql).isDefined,
+    require(ChSql.reads(mvSql, sourceTable),
       s"MV SQL does not reference source table '$sourceTable'")
     new MaterializedView(name, { batch =>
       val s = batch.sparkSession
       graft.functions.ChCompat.register(s)
-      batch.createOrReplaceTempView(batchView)
-      conform(s.sql(sourcePattern.replaceAllIn(mvSql, batchView)))
+      conform(ChSql.run(s, mvSql, ChSql.Scope(s.table), Map(sourceTable -> batch)))
     }, target, preAggregated = true)
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -80,8 +80,6 @@ object WithFill {
       """(?:\s+from\s+(-?\d+))?(?:\s+to\s+(-?\d+))?(?:\s+step\s+(-?\d+))?""" +
       """(?:\s+interpolate\s*\(([^)]*)\))?""").r
 
-  def applies(sql: String): Boolean = fillRe.findFirstIn(sql).isDefined
-
   /** Parse the INTERPOLATE item list: `c`, `c AS c`, `c AS c ± k`. */
   private def parseInterpolate(spec: String): Seq[Interpolation] =
     spec.split(",").map(_.trim).filter(_.nonEmpty).toSeq.map { item =>
@@ -102,30 +100,34 @@ object WithFill {
       }
     }
 
-  /** Run `query`, translating one `ORDER BY ... WITH FILL` clause: the
-    * modifier is stripped (the plain ORDER BY stays), the query runs, and
-    * the result is densified (+ interpolated). FROM/TO default to the
-    * result's own min / max+step (the CH behavior when the bounds are
-    * omitted).
+  /** `query` split at its one `ORDER BY ... WITH FILL` clause: the text
+    * with the modifier stripped (the plain ORDER BY stays), and the step
+    * that densifies (+ interpolates) that text's result — the last step of
+    * the dialect front door ([[graft.engine.ChSql.run]]). FROM/TO default
+    * to the result's own min / max+step (the CH behavior when the bounds
+    * are omitted). Without a WITH FILL clause: `query` and the identity.
     */
-  def sql(spark: SparkSession, query: String): DataFrame = {
-    val m = fillRe.findFirstMatchIn(query).getOrElse(
-      sys.error("WithFill: no ORDER BY ... WITH FILL clause in query"))
+  private[graft] def split(query: String): (String, DataFrame => DataFrame) = {
+    // matched on the masked twin: a WITH FILL inside a literal is text
+    val m = fillRe.findFirstMatchIn(graft.engine.ChSql.maskStrings(query))
+      .getOrElse(return (query, identity))
     val orderCol = m.group(1)
     val step = Option(m.group(4)).map(_.toLong).getOrElse(1L)
-    val interp = Option(m.group(5)).map(parseInterpolate).getOrElse(Nil)
+    val interp = Option(m.group(5)).map(_ => parseInterpolate(
+      query.substring(m.start(5), m.end(5)))).getOrElse(Nil)
     val stripped = query.substring(0, m.start) +
       s" ORDER BY $orderCol " + query.substring(m.end)
-    val base = spark.sql(stripped)
-    val (from, to) = (Option(m.group(2)).map(_.toLong), Option(m.group(3)).map(_.toLong)) match {
-      case (Some(a), Some(b)) => (a, b)
-      case (a, b) =>
-        // bounds from the data itself — the report result is small by
-        // construction, so this extra aggregate is cheap
-        val r = base.agg(min(col(orderCol)).cast("long"), max(col(orderCol)).cast("long")).head()
-        require(!r.isNullAt(0), "WithFill: empty result and no FROM/TO bounds")
-        (a.getOrElse(r.getLong(0)), b.getOrElse(r.getLong(1) + step))
-    }
-    densify(base, orderCol, from, to, step, interp)
+    (stripped, { base =>
+      val (from, to) = (Option(m.group(2)).map(_.toLong), Option(m.group(3)).map(_.toLong)) match {
+        case (Some(a), Some(b)) => (a, b)
+        case (a, b) =>
+          // bounds from the data itself — the report result is small by
+          // construction, so this extra aggregate is cheap
+          val r = base.agg(min(col(orderCol)).cast("long"), max(col(orderCol)).cast("long")).head()
+          require(!r.isNullAt(0), "WithFill: empty result and no FROM/TO bounds")
+          (a.getOrElse(r.getLong(0)), b.getOrElse(r.getLong(1) + step))
+      }
+      densify(base, orderCol, from, to, step, interp)
+    })
   }
 }

@@ -76,7 +76,7 @@ object ChPack {
     // toDayOfWeek/Year, toStartOfYear — plus avgIf/avgWeighted per day.
     "q118_ch_date_math" -> { (s, dir) =>
       Tables(s, dir).events.createOrReplaceTempView("graft_dm_events")
-      s.sql(graft.engine.ChSql(
+      graft.engine.ChSql.run(s,
         """SELECT event_id,
           |  dateDiff('second', ts, toDateTime('2024-01-15 12:00:00')) AS d_sec,
           |  dateDiff('minute', ts, toDateTime('2024-01-15 12:00:00')) AS d_min,
@@ -98,7 +98,7 @@ object ChPack {
           |  toStartOfYear(ts) AS y0
           |FROM graft_dm_events
           |WHERE event_id % 17 = 0
-          |ORDER BY event_id""".stripMargin))
+          |ORDER BY event_id""".stripMargin)
     },
 
     // avgIf / avgWeighted per day over events — the missing -If/-Weighted
@@ -163,7 +163,7 @@ object ChPack {
 
     "q122_hash_shard" -> { (s, dir) =>
       Tables(s, dir).events.createOrReplaceTempView("graft_hs_events")
-      s.sql(graft.engine.ChSql(
+      graft.engine.ChSql.run(s,
         """SELECT pmod(sipHash64(user_id), 16)  AS sip_bucket,
           |       count(*)                       AS cnt,
           |       count(DISTINCT user_id)        AS uids,
@@ -171,7 +171,7 @@ object ChPack {
           |       max(pmod(intHash64(user_id), 16)) AS int_max
           |FROM graft_hs_events
           |GROUP BY sip_bucket
-          |ORDER BY sip_bucket""".stripMargin))
+          |ORDER BY sip_bucket""".stripMargin)
     },
 
     // CH topK (SpaceSaving heavy hitters) in its exact regime: per-day
@@ -321,7 +321,7 @@ object ChPack {
         .select(col("doc_id"),
           graft.text.TextFunctions.tokens(col("text")).as("tok"))
         .createOrReplaceTempView("graft_ajc_docs")
-      graft.engine.ChArrayJoin.sql(s,
+      graft.engine.ChSql.run(s,
         """SELECT tok, count(*) AS cnt
           |FROM graft_ajc_docs ARRAY JOIN tok
           |GROUP BY tok ORDER BY tok""".stripMargin)
@@ -331,13 +331,13 @@ object ChPack {
     // inlined through filter and select — the oracle writes them inline.
     "q94_scalar_with" -> { (s, dir) =>
       Tables(s, dir).lineitem.createOrReplaceTempView("graft_sw_lineitem")
-      s.sql(graft.engine.ChSql(
+      graft.engine.ChSql.run(s,
         """WITH 25 AS qty_cut, 0.05 AS disc_cut
           |SELECT l_returnflag, count(*) AS cnt,
           |       CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS rev
           |FROM graft_sw_lineitem
           |WHERE l_quantity > qty_cut AND l_discount >= disc_cut
-          |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin))
+          |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)
     },
 
     // CH merge() table function: three shard views unioned by name with
@@ -365,7 +365,7 @@ object ChPack {
         """SELECT lang, count(*) AS docs, sum(n_chars) AS chars
           |FROM graft_sample_docs SAMPLE 0.25 OFFSET 0.5
           |GROUP BY lang ORDER BY lang""".stripMargin
-      s.sql(graft.engine.ChSample.rewrite(q, _ => Some("doc_id")))
+      graft.engine.ChSql.run(s, q, graft.engine.ChSql.Scope(s.table, _ => Some("doc_id")))
     },
 
     // CH plural quantiles (one pass, array out, exploded per quantile)
@@ -385,8 +385,7 @@ object ChPack {
           |FROM graft_qm_lines l GLOBAL ANY INNER JOIN graft_qm_orders o
           |  ON l.l_orderkey = o.o_orderkey
           |GROUP BY o.o_orderpriority""".stripMargin
-      val stripped = graft.engine.ChSql(sql)
-      graft.engine.ChAnyJoin.sql(s, stripped)
+      graft.engine.ChSql.run(s, sql)
         .select(org.apache.spark.sql.functions.posexplode(col("qs")),
           col("pri"), col("cnt"))
         .select(col("pri"), col("pos").as("qi"), col("col").as("q"), col("cnt"))
@@ -561,12 +560,12 @@ object ChPack {
     // keys are NULL (the Spark/DuckDB convention; CH renders defaults).
     "q85_with_totals" -> { (s, dir) =>
       Tables(s, dir).events.createOrReplaceTempView("graft_totals_events")
-      s.sql(graft.engine.ChSql(
+      graft.engine.ChSql.run(s,
         """SELECT event_type, count(*) AS n, uniqExact(user_id) AS uv
           |FROM graft_totals_events PREWHERE user_id % 7 = 0
           |GROUP BY event_type WITH TOTALS
           |ORDER BY event_type
-          |FORMAT TabSeparated""".stripMargin))
+          |FORMAT TabSeparated""".stripMargin)
     },
 
     // CH GROUP BY ... WITH ROLLUP (ChSql.withRollupCube): hierarchical
@@ -577,13 +576,13 @@ object ChPack {
     // CH renders type defaults — same documented divergence as TOTALS).
     "q106_with_rollup" -> { (s, dir) =>
       Tables(s, dir).lineitem.createOrReplaceTempView("graft_ru_lineitem")
-      s.sql(graft.engine.ChSql(
+      graft.engine.ChSql.run(s,
         """SELECT l_returnflag, l_linestatus,
           |       CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
           |       count(*) AS n
           |FROM graft_ru_lineitem
           |GROUP BY l_returnflag, l_linestatus WITH ROLLUP
-          |ORDER BY l_returnflag, l_linestatus""".stripMargin))
+          |ORDER BY l_returnflag, l_linestatus""".stripMargin)
     },
 
     // CH URL function battery over deterministically synthesized URLs
@@ -641,7 +640,7 @@ object ChPack {
     // funnel; total ORDER BY (unique o_orderkey) keeps it deterministic.
     "q96_limit_by_sql" -> { (s, dir) =>
       Tables(s, dir).orders.createOrReplaceTempView("graft_lb_orders")
-      graft.engine.ChLimitBy.sql(s,
+      graft.engine.ChSql.run(s,
         """SELECT o_custkey % 10 AS bucket, o_orderkey, o_totalprice
           |FROM graft_lb_orders
           |ORDER BY bucket, o_totalprice DESC, o_orderkey
@@ -654,7 +653,7 @@ object ChPack {
     // modifier a time-series user expects.
     "q84_with_fill" -> { (s, dir) =>
       Tables(s, dir).events.createOrReplaceTempView("graft_fill_events")
-      graft.operators.WithFill.sql(s,
+      graft.engine.ChSql.run(s,
         """SELECT toHour(ts) AS h, count(*) AS purchases
           |FROM graft_fill_events
           |WHERE event_type = 'purchase' AND user_id % 50 = 0
@@ -667,7 +666,7 @@ object ChPack {
     // the PREVIOUS row, so `max_uid + 10` climbs by 10 per filled hour.
     "q116_fill_interpolate" -> { (s, dir) =>
       Tables(s, dir).events.createOrReplaceTempView("graft_fill2_events")
-      graft.operators.WithFill.sql(s,
+      graft.engine.ChSql.run(s,
         """SELECT toHour(ts) AS h, count(*) AS purchases, max(user_id) AS max_uid
           |FROM graft_fill2_events
           |WHERE event_type = 'purchase' AND user_id % 97 = 0
@@ -1008,7 +1007,7 @@ object ChPack {
     // argument). DuckDB mirrors with plain lag/lead/windowed SUM.
     "q169_running_window" -> { (s, dir) =>
       Tables(s, dir).events.createOrReplaceTempView("graft_rw_events")
-      s.sql(graft.engine.ChSql(
+      graft.engine.ChSql.run(s,
         """WITH h AS (
           |  SELECT event_type, toStartOfHour(ts) AS hr,
           |         sumState(CAST(user_id % 97 AS BIGINT)) AS st,
@@ -1020,7 +1019,7 @@ object ChPack {
           |       neighbor(c, -1, CAST(-1 AS BIGINT)) AS prev_c,
           |       runningAccumulate(st, event_type) AS run_sum
           |FROM h
-          |ORDER BY event_type, hr""".stripMargin))
+          |ORDER BY event_type, hr""".stripMargin)
     },
 
     // bitwise integer folds + the argMin/argMax -If combinators, all
@@ -1301,7 +1300,7 @@ object ChPack {
     // LIMIT 1 BY — so does the rewrite).
     "q156_qualify_distinct_on" -> { (s, dir) =>
       Tables(s, dir).orders.createOrReplaceTempView("graft_qd_orders")
-      val top = graft.engine.ChQualify.sql(s,
+      val top = graft.engine.ChSql.run(s,
         """SELECT o_custkey, o_orderkey, o_totalprice,
           |       row_number() OVER (PARTITION BY o_custkey
           |                          ORDER BY o_totalprice DESC, o_orderkey) AS rn
@@ -1309,7 +1308,7 @@ object ChPack {
           |QUALIFY rn <= 2
           |ORDER BY o_custkey, rn""".stripMargin)
       top.createOrReplaceTempView("graft_qd_top")
-      val first = graft.engine.ChDistinctOn.sql(s,
+      val first = graft.engine.ChSql.run(s,
         """SELECT DISTINCT ON (bucket)
           |       o_custkey % 10 AS bucket, o_orderkey, o_totalprice
           |FROM graft_qd_orders

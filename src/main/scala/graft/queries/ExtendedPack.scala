@@ -172,7 +172,7 @@ object ExtendedPack {
         .agg(count(lit(1)).as("day_orders"),
           sum(dec("o_totalprice")).cast(DoubleType).as("day_total"))
         .createOrReplaceTempView("graft_asof_daily_orders")
-      graft.engine.ChAsof.sql(s,
+      graft.engine.ChSql.run(s,
         """SELECT e.event_id, e.user_id, o.od AS last_order_day,
           |       o.day_orders, o.day_total
           |FROM graft_asof_events e ASOF JOIN graft_asof_daily_orders o
@@ -193,7 +193,7 @@ object ExtendedPack {
       t.lineitem.select(col("l_orderkey"), col("l_linenumber"),
           col("l_quantity"), col("l_extendedprice"))
         .createOrReplaceTempView("graft_any_lines")
-      graft.engine.ChAnyJoin.sql(s,
+      graft.engine.ChSql.run(s,
         """SELECT o.o_orderkey, o.o_totalprice, l.l_linenumber,
           |       l.l_quantity, l.l_extendedprice
           |FROM graft_any_orders o ANY LEFT JOIN graft_any_lines l
@@ -215,7 +215,7 @@ object ExtendedPack {
       // the dialect's output is one flat namespace under the LEFT key
       // names (the right key is renamed onto l_orderkey for the join) —
       // address the key as l.l_orderkey and alias it back
-      graft.engine.ChAnyJoin.sql(s,
+      graft.engine.ChSql.run(s,
         """SELECT l.l_orderkey AS o_orderkey, o.o_totalprice, l.l_linenumber,
           |       l.l_quantity, l.l_extendedprice
           |FROM graft_anyr_lines l ANY RIGHT JOIN graft_anyr_orders o
@@ -236,7 +236,7 @@ object ExtendedPack {
         .agg(count(lit(1)).as("day_orders"),
           sum(dec("o_totalprice")).cast(DoubleType).as("day_total"))
         .createOrReplaceTempView("graft_asofu_daily")
-      graft.engine.ChAsof.sql(s,
+      graft.engine.ChSql.run(s,
         """SELECT event_id, user_id, day_orders, day_total
           |FROM graft_asofu_events e ASOF LEFT JOIN graft_asofu_daily o
           |  USING (user_id, ts)
@@ -276,7 +276,7 @@ object ExtendedPack {
         .groupBy(col("user_id"), col("ts").as("pts"))
         .agg(max(col("event_id")).as("purchase_id"))
         .createOrReplaceTempView("graft_fwd_purchases")
-      graft.engine.ChAsof.sql(s,
+      graft.engine.ChSql.run(s,
         """SELECT e.event_id, e.user_id, p.pts, p.purchase_id
           |FROM graft_fwd_views e ASOF LEFT JOIN graft_fwd_purchases p
           |  ON e.user_id = p.user_id AND e.ts < p.pts
@@ -476,10 +476,10 @@ object ExtendedPack {
     // QUALIFY + rank(), an independent engine path.
     "q174_with_ties" -> { (s, dir) =>
       Tables(s, dir).lineitem.createOrReplaceTempView("graft_wt_lineitem")
-      s.sql(graft.engine.ChSql(
+      graft.engine.ChSql.run(s,
         """SELECT l_orderkey, l_linenumber, l_quantity
           |FROM graft_wt_lineitem
-          |ORDER BY l_quantity DESC LIMIT 5 WITH TIES""".stripMargin))
+          |ORDER BY l_quantity DESC LIMIT 5 WITH TIES""".stripMargin)
         .orderBy(col("l_quantity").desc, col("l_orderkey"), col("l_linenumber"))
     }
   )

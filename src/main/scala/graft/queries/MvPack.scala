@@ -105,7 +105,7 @@ object MvPack {
         .orderBy("day", "bucket")
     },
 
-    // CH `SELECT ... FROM t FINAL` (ChReplay.applyFinal): the merge-debt-
+    // CH `SELECT ... FROM t FINAL` (ChSql.run's FINAL step): the merge-debt-
     // free read of an Aggregating table — SimpleAggregateFunction columns
     // come back as plain values with NO -Merge/GROUP BY in the query, the
     // idiom CH users reach FINAL for. The table is DDL-declared, filled

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.engine.ChAnyJoin
+import graft.engine.ChSql
 import graft.operators.AnyJoin
 
 /** ANY-strictness joins: the deterministic pick, all three strictness
@@ -53,7 +53,7 @@ class AnyJoinSpec extends SparkSpec {
     left.createOrReplaceTempView("aj_left")
     right.createOrReplaceTempView("aj_right")
     val expectLeft = Set((1, 10), (2, 5), (3, -1), (4, -1))
-    def run(q: String) = ChAnyJoin.sql(spark, q)
+    def run(q: String) = ChSql.run(spark, q)
       .select(col("k"), coalesce(col("rv"), lit(-1)).as("rv"))
       .collect().map(r => (r.getInt(0), r.getInt(1))).toSet
 
@@ -70,17 +70,17 @@ class AnyJoinSpec extends SparkSpec {
     left.createOrReplaceTempView("aj_left")
     right.createOrReplaceTempView("aj_right")
     val e1 = intercept[RuntimeException] {
-      ChAnyJoin.sql(spark, "SELECT 1 FROM aj_left l ANY LEFT JOIN aj_right r ON l.k >= r.k")
+      ChSql.run(spark, "SELECT 1 FROM aj_left l ANY LEFT JOIN aj_right r ON l.k >= r.k")
     }
     assert(e1.getMessage.contains("equalities only"))
     val e2 = intercept[RuntimeException] {
-      ChAnyJoin.sql(spark, "SELECT 1 FROM aj_left l ANY LEFT JOIN aj_right r ON l.k = l.k")
+      ChSql.run(spark, "SELECT 1 FROM aj_left l ANY LEFT JOIN aj_right r ON l.k = l.k")
     }
     assert(e2.getMessage.contains("one side twice"))
     val collide = right.withColumnRenamed("rt", "lv")
     collide.createOrReplaceTempView("aj_collide")
     val e3 = intercept[IllegalArgumentException] {
-      ChAnyJoin.sql(spark, "SELECT 1 FROM aj_left l ANY LEFT JOIN aj_collide r ON l.k = r.k")
+      ChSql.run(spark, "SELECT 1 FROM aj_left l ANY LEFT JOIN aj_collide r ON l.k = r.k")
     }
     assert(e3.getMessage.contains("collide"))
   }
@@ -92,7 +92,7 @@ class AnyJoinSpec extends SparkSpec {
     val r = Seq((1, 10, "R1"), (1, 10, "R0"), (2, 99, "R2")).toDF("b", "c", "rv")
     l.createOrReplaceTempView("aj_ml")
     r.createOrReplaceTempView("aj_mr")
-    val got = ChAnyJoin.sql(spark,
+    val got = ChSql.run(spark,
       "SELECT a, b, rv FROM aj_ml l ANY LEFT JOIN aj_mr r ON l.a = r.b AND l.b = r.c")
       .collect().map(x => (x.getInt(0), x.getInt(1), x.getString(2))).toSet
     assert(got == Set((1, 10, "R0"), (2, 20, null)))
@@ -100,7 +100,7 @@ class AnyJoinSpec extends SparkSpec {
     // the same right column driving two key pairs is an error, not a
     // silent no-op rename
     val e = intercept[IllegalArgumentException] {
-      ChAnyJoin.sql(spark,
+      ChSql.run(spark,
         "SELECT 1 FROM aj_ml l ANY LEFT JOIN aj_mr r ON l.a = r.c AND l.b = r.c")
     }
     assert(e.getMessage.contains("duplicate right key"))

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.engine.ChAsof
+import graft.engine.ChSql
 import graft.operators.AsOfJoin
 
 /** CH ASOF JOIN dialect (ChAsof): every SQL form must execute to exactly
@@ -31,7 +31,7 @@ class ChAsofSpec extends SparkSpec {
 
   test("LEFT backward inclusive == the Scala operator") {
     setup()
-    val got = ChAsof.sql(spark,
+    val got = ChSql.run(spark,
       """SELECT l.k, l.lts, l.lval, r.rts, r.rval
         |FROM asof_l l ASOF LEFT JOIN asof_r r
         |  ON l.k = r.k AND l.lts >= r.rts""".stripMargin)
@@ -44,10 +44,10 @@ class ChAsofSpec extends SparkSpec {
 
   test("operand order flips the comparator: r.rts <= l.lts is the same join") {
     setup()
-    val a = ChAsof.sql(spark,
+    val a = ChSql.run(spark,
       "SELECT l.k, l.lts, r.rts FROM asof_l l ASOF LEFT JOIN asof_r r " +
         "ON l.k = r.k AND l.lts >= r.rts")
-    val b = ChAsof.sql(spark,
+    val b = ChSql.run(spark,
       "SELECT l.k, l.lts, r.rts FROM asof_l l ASOF LEFT JOIN asof_r r " +
         "ON r.k = l.k AND r.rts <= l.lts")
     assert(rows(a) == rows(b))
@@ -55,14 +55,14 @@ class ChAsofSpec extends SparkSpec {
 
   test("forward and strict forms map to the operator's modes") {
     setup()
-    val fwd = ChAsof.sql(spark,
+    val fwd = ChSql.run(spark,
       "SELECT l.k, l.lts, r.rts FROM asof_l l ASOF LEFT JOIN asof_r r " +
         "ON l.k = r.k AND l.lts <= r.rts")
     val wantFwd = AsOfJoin.asof(leftDf, rightDf, Seq("k"), "lts", "rts",
       forward = true).select("k", "lts", "rts")
     assert(rows(fwd) == rows(wantFwd))
 
-    val strict = ChAsof.sql(spark,
+    val strict = ChSql.run(spark,
       "SELECT l.k, l.lts, r.rts FROM asof_l l ASOF LEFT JOIN asof_r r " +
         "ON l.k = r.k AND l.lts > r.rts")
     val wantStrict = AsOfJoin.asof(leftDf, rightDf, Seq("k"), "lts", "rts",
@@ -75,7 +75,7 @@ class ChAsofSpec extends SparkSpec {
 
   test("inner form (no LEFT) drops unmatched left rows, CH-style") {
     setup()
-    val inner = ChAsof.sql(spark,
+    val inner = ChSql.run(spark,
       "SELECT l.k, l.lts, r.rval FROM asof_l l ASOF JOIN asof_r r " +
         "ON l.k = r.k AND l.lts >= r.rts")
     // k=3 has no right rows at all -> dropped
@@ -88,7 +88,7 @@ class ChAsofSpec extends SparkSpec {
   test("right keys under different names are renamed onto the left's") {
     setup()
     rightDf.withColumnRenamed("k", "rk").createOrReplaceTempView("asof_r2")
-    val got = ChAsof.sql(spark,
+    val got = ChSql.run(spark,
       "SELECT l.k, l.lts, r.rts FROM asof_l l ASOF LEFT JOIN asof_r2 r " +
         "ON l.k = r.rk AND l.lts >= r.rts")
     val want = AsOfJoin.asof(leftDf, rightDf, Seq("k"), "lts", "rts")
@@ -98,7 +98,7 @@ class ChAsofSpec extends SparkSpec {
 
   test("qualifier stripping skips string literals; WHERE/ORDER survive") {
     setup()
-    val got = ChAsof.sql(spark,
+    val got = ChSql.run(spark,
       """SELECT l.k, concat(l.lval, 'l.k') AS tagged, r.rval
         |FROM asof_l l ASOF LEFT JOIN asof_r r
         |  ON l.k = r.k AND l.lts >= r.rts
@@ -114,14 +114,14 @@ class ChAsofSpec extends SparkSpec {
     // the last one the >= time condition, output carrying the LEFT's ts
     leftDf.withColumnRenamed("lts", "ts").createOrReplaceTempView("asof_lu")
     rightDf.withColumnRenamed("rts", "ts").createOrReplaceTempView("asof_ru")
-    val got = ChAsof.sql(spark,
+    val got = ChSql.run(spark,
       "SELECT k, ts, lval, rval FROM asof_lu ASOF LEFT JOIN asof_ru USING (k, ts)")
     val want = AsOfJoin.asof(
       leftDf.withColumnRenamed("lts", "ts"), rightDf, Seq("k"), "ts", "rts")
       .select("k", "ts", "lval", "rval")
     assert(rows(got) == rows(want))
     // the view's namespace holds exactly one ts column (the left's)
-    val viewCols = ChAsof.sql(spark,
+    val viewCols = ChSql.run(spark,
       "SELECT * FROM asof_lu ASOF JOIN asof_ru USING (k, ts)")
     assert(!viewCols.columns.exists(_.startsWith("__asof")),
       s"right-ts alias leaked into the output: ${viewCols.columns.mkString(", ")}")
@@ -148,7 +148,7 @@ class ChAsofSpec extends SparkSpec {
   test("malformed ON clauses fail with clear errors") {
     setup()
     def err(sql: String): String =
-      intercept[RuntimeException](ChAsof.sql(spark, sql)).getMessage
+      intercept[RuntimeException](ChSql.run(spark, sql)).getMessage
     assert(err("SELECT 1 FROM asof_l l ASOF JOIN asof_r r ON l.lts >= r.rts")
       .contains("at least one equality"))
     assert(err("SELECT 1 FROM asof_l l ASOF JOIN asof_r r ON l.k = r.k")

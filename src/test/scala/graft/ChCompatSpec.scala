@@ -1402,7 +1402,7 @@ class ChCompatSpec extends SparkSpec {
     Seq((1, 10), (1, 30), (2, 50)).toDF("g", "v")
       .createOrReplaceTempView("graft_edge_fix")
     // QUALIFY over a plain alias (no window) still filters correctly
-    assert(graft.engine.ChQualify.sql(spark,
+    assert(graft.engine.ChSql.run(spark,
       """SELECT g, v * 2 AS dbl FROM graft_edge_fix
         |QUALIFY dbl > 50 ORDER BY g, dbl""".stripMargin).collect()
       .map(_.getInt(1)).toSeq == Seq(60, 100))
@@ -1423,7 +1423,7 @@ class ChCompatSpec extends SparkSpec {
       .map(r => (r.getString(0), r.getLong(2))).toSeq
     assert(tw == Seq(("a", 2L), ("b", 1L)))
     // DISTINCT ON ordered by an expression, not just columns
-    val d = graft.engine.ChDistinctOn.sql(spark,
+    val d = graft.engine.ChSql.run(spark,
       """SELECT DISTINCT ON (g) g, v FROM graft_edge_fix
         |ORDER BY g, v * -1""".stripMargin).collect()
       .map(r => (r.getInt(0), r.getInt(1))).toSeq
@@ -1565,7 +1565,7 @@ class ChCompatSpec extends SparkSpec {
     Seq((1, 10), (1, 30), (1, 20), (2, 5), (2, 50))
       .toDF("g", "v").createOrReplaceTempView("graft_qd_fix")
     // QUALIFY filters on the window alias after computation
-    val q = graft.engine.ChQualify.sql(spark,
+    val q = graft.engine.ChSql.run(spark,
       """SELECT g, v, row_number() OVER (PARTITION BY g ORDER BY v DESC) AS rn
         |FROM graft_qd_fix
         |QUALIFY rn = 1
@@ -1573,7 +1573,7 @@ class ChCompatSpec extends SparkSpec {
       .map(r => (r.getInt(0), r.getInt(1))).toSeq
     assert(q == Seq((1, 30), (2, 50)))
     // DISTINCT ON = first row per group under the ORDER BY
-    val d = graft.engine.ChDistinctOn.sql(spark,
+    val d = graft.engine.ChSql.run(spark,
       """SELECT DISTINCT ON (g) g, v
         |FROM graft_qd_fix
         |ORDER BY g, v""".stripMargin).collect()
@@ -1586,7 +1586,7 @@ class ChCompatSpec extends SparkSpec {
       graft.engine.ChDistinctOn.rewrite("SELECT DISTINCT ON (g) g, v FROM t")
     }
     // a trailing LIMIT stays OUTSIDE the per-group pick
-    val dl = graft.engine.ChDistinctOn.sql(spark,
+    val dl = graft.engine.ChSql.run(spark,
       """SELECT DISTINCT ON (g) g, v
         |FROM graft_qd_fix
         |ORDER BY g, v LIMIT 1""".stripMargin).collect()

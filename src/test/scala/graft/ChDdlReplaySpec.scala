@@ -647,7 +647,7 @@ class ChDdlReplaySpec extends SparkSpec {
     assert(st.finalized().collect().map(_.toSeq).toSet == mergedBefore)
 
     // crash window: partition staged away at .pcompact.<v>.old, live dir
-    // missing — a fresh open (recoverFromCompact) restores it
+    // missing — a fresh open (Durable.recover) restores it
     val fs = new org.apache.hadoop.fs.Path(st.path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(fs.rename(

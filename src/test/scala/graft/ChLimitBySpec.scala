@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.engine.ChLimitBy
+import graft.engine.{ChLimitBy, ChSql}
 
 /** CH `LIMIT [offset,] n BY cols` translation: per-group heads in ORDER
   * BY order, offset spellings, final-LIMIT composition, determinism
@@ -22,7 +22,7 @@ class ChLimitBySpec extends SparkSpec {
 
   test("top n per group in ORDER BY order") {
     t.createOrReplaceTempView("lb_t")
-    val got = ChLimitBy.sql(spark,
+    val got = ChSql.run(spark,
       "SELECT g, v, id FROM lb_t ORDER BY g, v DESC, id LIMIT 2 BY g")
       .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2)))
     assert(got.toSeq == Seq(
@@ -34,7 +34,7 @@ class ChLimitBySpec extends SparkSpec {
     for (q <- Seq(
         "SELECT g, v, id FROM lb_t ORDER BY g, v DESC, id LIMIT 1, 2 BY g",
         "SELECT g, v, id FROM lb_t ORDER BY g, v DESC, id LIMIT 2 OFFSET 1 BY g")) {
-      val got = ChLimitBy.sql(spark, q)
+      val got = ChSql.run(spark, q)
         .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2)))
       // skip the first of each group, take the next 2
       assert(got.toSeq == Seq(
@@ -44,7 +44,7 @@ class ChLimitBySpec extends SparkSpec {
 
   test("final LIMIT composes after the per-group heads") {
     t.createOrReplaceTempView("lb_t")
-    val got = ChLimitBy.sql(spark,
+    val got = ChSql.run(spark,
       "SELECT g, v, id FROM lb_t ORDER BY g, v DESC, id LIMIT 2 BY g LIMIT 3")
       .collect().map(r => (r.getString(0), r.getLong(2)))
     assert(got.toSeq == Seq(("a", 1L), ("a", 3L), ("b", 5L)))
@@ -52,7 +52,7 @@ class ChLimitBySpec extends SparkSpec {
 
   test("aggregated-report idiom: top 1 per key of a GROUP BY") {
     t.createOrReplaceTempView("lb_t")
-    val got = ChLimitBy.sql(spark,
+    val got = ChSql.run(spark,
       """SELECT g, v % 2 AS par, count(*) AS n, sum(id) AS ids
         |FROM lb_t GROUP BY g, v % 2
         |ORDER BY g, n DESC, par LIMIT 1 BY g""".stripMargin)
@@ -85,7 +85,7 @@ class ChLimitBySpec extends SparkSpec {
     Seq((1L, 5L), (1L, 3L), (2L, 4L)).toDF("k)", "v").createOrReplaceTempView("lb_q")
     val sql = "SELECT DISTINCT ON (`k)`) `k)`, v FROM lb_q ORDER BY v"
     assert(graft.engine.ChDistinctOn.rewrite(sql).contains("PARTITION BY `k)` ORDER BY v"))
-    val got = graft.engine.ChDistinctOn.sql(spark, sql)
+    val got = ChSql.run(spark, sql)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(got.toSeq == Seq((1L, 3L), (2L, 4L)))
   }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.engine.{ChDdl, ChSample}
+import graft.engine.ChSql
 
 /** SAMPLE clause: fixed-subset algebra (nesting supersets, disjoint
   * offsets, full coverage), DDL SAMPLE BY parse, replay routing, and the
@@ -18,8 +18,10 @@ class ChSampleSpec extends SparkSpec {
     df
   }
 
+  private lazy val keyed = ChSql.Scope(spark.table, _ => Some("id"))
+
   private def ids(q: String): Set[Long] =
-    spark.sql(ChSample.rewrite(q, _ => Some("id"))).collect().map(_.getLong(0)).toSet
+    ChSql.run(spark, q, keyed).collect().map(_.getLong(0)).toSet
 
   test("sample is a fixed subset: deterministic, nested, offset-disjoint, covering") {
     t
@@ -38,18 +40,18 @@ class ChSampleSpec extends SparkSpec {
     assert(quarters.reduce(_ ++ _).size == 2000)
 
     // fraction as a ratio, and a query body that keeps WHERE/GROUP intact
-    val r = spark.sql(ChSample.rewrite(
+    val r = ChSql.run(spark,
       "SELECT grp, count(*) AS n FROM chs_t SAMPLE 1/2 WHERE grp < 3 GROUP BY grp ORDER BY grp",
-      _ => Some("id"))).collect()
+      keyed).collect()
     assert(r.map(_.getInt(0)).toSeq == Seq(0, 1, 2))
     assert(r.map(_.getLong(1)).sum > 300)
   }
 
   test("alias survives; qualified references still resolve") {
     t
-    val out = spark.sql(ChSample.rewrite(
+    val out = ChSql.run(spark,
       "SELECT d.grp, count(*) AS n FROM chs_t d SAMPLE 0.5 GROUP BY d.grp ORDER BY d.grp",
-      _ => Some("id")))
+      keyed)
     assert(out.count() == 7)
   }
 
@@ -94,7 +96,7 @@ class ChSampleSpec extends SparkSpec {
     Seq((0, "zero"), (1, "one"), (2, "two"), (3, "three"), (4, "four"),
         (5, "five"), (6, "six"))
       .toDF("grp", "label").createOrReplaceTempView("chs_dim")
-    // SAMPLE rewrites to a temp view (not a subquery), so the ANY JOIN
+    // SAMPLE rewrites to a bound name (not a subquery), so the ANY JOIN
     // regex downstream still sees FROM <name> <alias> and translates
     val out = rep.runQuery(
       """SELECT d.label, count(*) AS n
@@ -108,20 +110,20 @@ class ChSampleSpec extends SparkSpec {
   test("error contract: no SAMPLE BY key, row-count form, out-of-range fractions") {
     t
     val e1 = intercept[RuntimeException] {
-      ChSample.rewrite("SELECT id FROM chs_t SAMPLE 0.5", _ => None)
+      ChSql.run(spark, "SELECT id FROM chs_t SAMPLE 0.5")
     }
     assert(e1.getMessage.contains("no SAMPLE BY"))
     val e2 = intercept[IllegalArgumentException] {
-      ChSample.rewrite("SELECT id FROM chs_t SAMPLE 10000", _ => Some("id"))
+      ChSql.run(spark, "SELECT id FROM chs_t SAMPLE 10000", keyed)
     }
     assert(e2.getMessage.contains("row-count"))
     val e3 = intercept[IllegalArgumentException] {
-      ChSample.rewrite("SELECT id FROM chs_t SAMPLE 0.5 OFFSET 1.5", _ => Some("id"))
+      ChSql.run(spark, "SELECT id FROM chs_t SAMPLE 0.5 OFFSET 1.5", keyed)
     }
     assert(e3.getMessage.contains("OFFSET"))
     // fraction + offset past the end would silently shrink the slice
     val e4 = intercept[IllegalArgumentException] {
-      ChSample.rewrite("SELECT id FROM chs_t SAMPLE 0.5 OFFSET 0.75", _ => Some("id"))
+      ChSql.run(spark, "SELECT id FROM chs_t SAMPLE 0.5 OFFSET 0.75", keyed)
     }
     assert(e4.getMessage.contains("past the end"))
     // exactly reaching the end is legal (the [off, 1) tail slice)

@@ -120,23 +120,10 @@ class FuzzParitySpec extends SparkSpec {
     var first = true
     def runOne(q: FuzzGen.FuzzQuery): Unit = {
       val df =
-        if (q.viaChSql) {
-          // the engine's full string-dialect chain in PRODUCTION order
-          // (ChReplay.runQuery:326-351): ChSql shims, the session-bound
-          // ASOF rewrite, then DISTINCT ON → QUALIFY → LIMIT BY — QUALIFY
-          // before LIMIT BY matters (the reverse buries a QUALIFY inside
-          // ChLimitBy's subquery where its rewrite can't find it)
-          var s2 = graft.engine.ChSql(q.sparkSql)
-          if (graft.engine.ChAsof.applies(s2))
-            s2 = graft.engine.ChAsof.rewrite(spark, s2, n => spark.table(n))
-          if (graft.engine.ChDistinctOn.applies(s2))
-            s2 = graft.engine.ChDistinctOn.rewrite(s2)
-          if (graft.engine.ChQualify.applies(s2))
-            s2 = graft.engine.ChQualify.rewrite(s2)
-          if (graft.engine.ChLimitBy.applies(s2))
-            s2 = graft.engine.ChLimitBy.rewrite(s2)
-          spark.sql(s2)
-        } else spark.sql(q.sparkSql)
+        // the engine's dialect front door: the full shim chain in
+        // production order (ChReplay.runQuery runs the same call)
+        if (q.viaChSql) graft.engine.ChSql.run(spark, q.sparkSql)
+        else spark.sql(q.sparkSql)
       if (q.mustRoute) {
         val plan = df.queryExecution.executedPlan.toString
         assert(plan.contains("fz-proj") && !plan.contains("events.parquet"),

@@ -191,7 +191,7 @@ class IvfIndexSpec extends SparkSpec {
     val base = emb.filter(col("vec_id") < 300).select("vec_id", "embedding")
     ix.build(base, nlist = 4)
     val before = ix.index.count()
-    // simulate swapIn dying between rename(live, old) and rename(fresh, live):
+    // simulate Durable.swap dying between rename(live, old) and rename(fresh, live):
     // the live tree is gone, only the '-old' tree exists
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.rename(new Path(path), new Path(path + "-old")))

@@ -442,7 +442,7 @@ class StateTableSpec extends SparkSpec {
     }
 
     // same-instance replay (foreachBatch retry without restart):
-    // appendExactlyOnce's own cleanIngest must purge the torn traces
+    // appendExactlyOnce's own purge (Durable.appendOnce) must remove the torn traces
     tearMidMove("9")
     assert(st.appendBatchExactlyOnce(batch2, 9L))
     val reference = {

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.engine.ChSql
 import graft.operators.WithFill
 
 /** CH ORDER BY ... WITH FILL semantics: grid holes inserted with nulls,
@@ -23,12 +24,12 @@ class WithFillSpec extends SparkSpec {
 
   test("SQL form strips the modifier and defaults bounds to the data") {
     Seq((1, 10), (4, 40)).toDF("h", "n").createOrReplaceTempView("wf_t")
-    val got = WithFill.sql(spark,
+    val got = ChSql.run(spark,
       "SELECT h, n FROM wf_t ORDER BY h WITH FILL")
       .collect().map(r => (r.getInt(0), if (r.isNullAt(1)) -1 else r.getInt(1)))
     assert(got.toSeq == Seq((1, 10), (2, -1), (3, -1), (4, 40)))
     // explicit FROM/TO/STEP
-    val stepped = WithFill.sql(spark,
+    val stepped = ChSql.run(spark,
       "SELECT h, n FROM wf_t ORDER BY h WITH FILL FROM 0 TO 7 STEP 2")
       .collect().map(_.getInt(0))
     assert(stepped.toSeq == Seq(0, 1, 2, 4, 6))
@@ -37,7 +38,7 @@ class WithFillSpec extends SparkSpec {
   test("INTERPOLATE: carry-forward and linear accumulation, CH prev-row walk") {
     Seq((1, 10, 100L), (4, 40, 400L)).toDF("h", "n", "m")
       .createOrReplaceTempView("wf_i")
-    val got = WithFill.sql(spark,
+    val got = ChSql.run(spark,
       """SELECT h, n, m FROM wf_i
         |ORDER BY h WITH FILL FROM 0 TO 6
         |  INTERPOLATE (n, m AS m + 5)""".stripMargin)
@@ -55,17 +56,17 @@ class WithFillSpec extends SparkSpec {
 
   test("INTERPOLATE: unsupported expression and unknown column are refused") {
     Seq((1, 10)).toDF("h", "n").createOrReplaceTempView("wf_bad")
-    val e1 = intercept[Exception](WithFill.sql(spark,
+    val e1 = intercept[Exception](ChSql.run(spark,
       "SELECT h, n FROM wf_bad ORDER BY h WITH FILL INTERPOLATE (n AS n * 2)"))
     assert(e1.getMessage.contains("unsupported form"))
-    val e2 = intercept[Exception](WithFill.sql(spark,
+    val e2 = intercept[Exception](ChSql.run(spark,
       "SELECT h, n FROM wf_bad ORDER BY h WITH FILL INTERPOLATE (zz)"))
     assert(e2.getMessage.contains("no such column"))
   }
 
   test("empty result without bounds errors; bad step errors") {
     Seq.empty[(Int, Int)].toDF("h", "n").createOrReplaceTempView("wf_empty")
-    val e = intercept[Exception](WithFill.sql(spark,
+    val e = intercept[Exception](ChSql.run(spark,
       "SELECT h, n FROM wf_empty ORDER BY h WITH FILL"))
     assert(e.getMessage.contains("empty result"))
     val s = intercept[Exception](WithFill.densify(
