@@ -1,6 +1,10 @@
 package graft.engine
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, AttributeMap, EqualTo}
+import org.apache.spark.sql.catalyst.plans.{RightOuter, UsingJoin}
+import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan, Project}
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** ClickHouse ANY-strictness join dialect → [[graft.operators.AnyJoin]]:
   * lets a CH user run the literal syntax
@@ -19,70 +23,62 @@ import org.apache.spark.sql.DataFrame
   * refinement of the CH contract (any CH-legal answer set has exactly
   * this shape; ours is additionally reproducible).
   *
-  * Translation mirrors [[ChAsof]]: resolve both tables, rename right keys
-  * onto the left's names, execute the ANY join, bind it under a fresh
-  * name, and splice that into the query with side qualifiers stripped.
-  * Non-key right columns must not collide with left column names
-  * (project/alias first — the output is one flat namespace).
+  * Translation: [[mark]] drops the `ANY` keyword and marks the right
+  * relation; Spark's parser reads the rest. [[join]] keeps the parsed
+  * Spark join and replaces its deduplicated side (the right one; the left
+  * one for RIGHT ANY) with [[graft.operators.AnyJoin.firstRowPerKey]] of
+  * it, keyed on that side's key columns and projected back under their
+  * names and qualifiers. In the ON form an unqualified name both sides
+  * carry reads the left's ([[ChSql.preferLeft]]); USING keeps Spark's
+  * USING output.
   */
 object ChAnyJoin {
 
   private val anyJoinRe =
-    ("(?is)\\bfrom\\s+([\\w.]+)(?:\\s+(?:as\\s+)?(?!any\\b|left\\b|right\\b|inner\\b|join\\b)(\\w+))?" +
-      "\\s+(?:(left|right|inner)\\s+any|any\\s+(left|right|inner)|any)\\s+join" +
-      "\\s+([\\w.]+)(?:\\s+(?:as\\s+)?(?!on\\b|using\\b)(\\w+))?" +
-      "\\s+(?:on\\s+(.*?)|using\\s*\\(([^)]*)\\)\\s*)" +
-      "(?=\\bwhere\\b|\\bgroup\\s+by\\b|\\border\\s+by\\b|" +
-      "\\bhaving\\b|\\blimit\\b|\\bwindow\\b|\\bsettings\\b|$)").r
+    ("(?is)\\b(?:(left|right|inner)\\s+any|any\\s+(left|right|inner)|any)\\s+join" +
+      "\\s+([\\w.]+)").r
 
   /** Does the query contain an ANY join to translate? */
   def applies(sql: String): Boolean = anyJoinRe.findFirstIn(ChSql.maskStrings(sql)).isDefined
 
-  /** Rewrite the ANY join span of `query` (matched on its masked twin)
-    * into `FROM <bind's name for the ANY join of the two tables>`.
+  /** `query` with each ANY join (matched on its masked twin) read as the
+    * same join without `ANY` over `<marker(r)>`.
     */
-  private[engine] def rewrite(query: String, table: String => DataFrame,
-      bind: DataFrame => String): String = {
-    val m = anyJoinRe.findFirstMatchIn(ChSql.maskStrings(query)).getOrElse(
-      sys.error("ChAnyJoin: no ANY join clause in query"))
-    val (leftName, leftAlias) = (m.group(1), Option(m.group(2)))
-    val strictness = Option(m.group(3)).orElse(Option(m.group(4)))
-      .map(_.toLowerCase).getOrElse("inner")
-    val (rightName, rightAlias) = (m.group(5), Option(m.group(6)))
-    val onClause = Option(m.group(7)).map(_ => ChSql.grp(query, m, 7).trim)
-    val usingCols = Option(m.group(8)).map(_ => ChSql.grp(query, m, 8))
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-
-    val leftDf = table(leftName)
-    val rightDf = table(rightName)
-    val lQuals = ChJoinSyntax.quals(leftName, leftAlias)
-    val rQuals = ChJoinSyntax.quals(rightName, rightAlias)
-
-    val keyPairs = usingCols match {
-      case Some(cols) =>
-        require(cols.nonEmpty, "ChAnyJoin: empty USING column list")
-        cols.map(c => (c, c))
-      case None =>
-        onClause.toSeq.flatMap(ChJoinSyntax.onTerms(_, lQuals, rQuals, leftDf, rightDf,
-          "ChAnyJoin", "=", " (equalities only)")).map { case (_, _, lc, rc) => (lc, rc) }
+  private[engine] def mark(query: String, marker: String => String): String =
+    ChSql.replaceOnMasked(query, anyJoinRe) { m =>
+      val kind = Option(m.group(1)).orElse(Option(m.group(2))).fold("")(_ + " ")
+      s"${kind}JOIN ${marker(m.group(3))}"
     }
-    if (keyPairs.isEmpty) sys.error("ChAnyJoin: ANY join needs at least one equality key")
 
-    // rename right keys onto the left's names (one flat output namespace)
-    val right2 = ChJoinSyntax.renameRightKeys(rightDf, keyPairs, "ChAnyJoin")
-    val keys = keyPairs.map(_._1)
-    val collisions = right2.columns
-      .filter(c => !keys.exists(_.equalsIgnoreCase(c)))
-      .filter(c => leftDf.columns.exists(_.equalsIgnoreCase(c)))
-    require(collisions.isEmpty,
-      s"ChAnyJoin: right columns collide with left: ${collisions.mkString(", ")} — " +
-        "project/alias the right side first")
-
-    val joined = strictness match {
-      case "left" => graft.operators.AnyJoin.anyLeft(leftDf, right2, keys)
-      case "right" => graft.operators.AnyJoin.anyRight(leftDf, right2, keys)
-      case _ => graft.operators.AnyJoin.anyInner(leftDf, right2, keys)
+  /** The ANY join `j` (an inner, left or right join as parsed) as a plan. */
+  private[engine] def join(spark: SparkSession, j: Join): LogicalPlan = {
+    val (left, right, terms) = ChSql.joinTerms(spark, j, "ChAnyJoin")
+    terms.find(_._1 != "=").foreach { case (op, l, r) =>
+      sys.error(s"ChAnyJoin: unsupported ON condition '${l.sql} $op ${r.sql}' (equalities only)")
     }
-    ChJoinSyntax.splice(query, m, bind(joined), lQuals ++ rQuals)
+    if (terms.isEmpty) sys.error("ChAnyJoin: ANY join needs at least one equality key")
+    val dedupLeft = j.joinType match {
+      case RightOuter | UsingJoin(RightOuter, _) => true
+      case _ => false
+    }
+    val (side, keys) = if (dedupLeft) (left, terms.map(_._2)) else (right, terms.map(_._3))
+    val names = keys.map {
+      case a: Attribute => a.name
+      case e => sys.error(s"ChAnyJoin: ANY join key ${e.sql} must be a column of its side")
+    }.distinct
+    val first = graft.operators.AnyJoin.firstRowPerKey(
+      ColumnBridge.dataFrame(spark, side), names).queryExecution.analyzed
+    val deduped = Project(side.output.map(a =>
+      Alias(first.output.find(_.name.equalsIgnoreCase(a.name)).get, a.name)(
+        qualifier = a.qualifier)), first)
+    val (l, r) = if (dedupLeft) (deduped, right) else (left, deduped)
+    j.joinType match {
+      case u: UsingJoin => Join(l, r, u, None, j.hint)
+      case tpe =>
+        val moved = AttributeMap(side.output.zip(deduped.output))
+        val cond = terms.map { case (_, a, b) => EqualTo(a, b) }.reduce(And)
+          .transform { case a: Attribute => moved.getOrElse(a, a) }
+        ChSql.preferLeft(Join(l, r, tpe, Some(cond), j.hint), l.output.length)
+    }
   }
 }

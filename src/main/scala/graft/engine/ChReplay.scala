@@ -344,11 +344,11 @@ final class ChReplay(spark: SparkSession, warehouseDir: String) {
         }
     case TruncateTable(name, ifExists) =>
       val t = resolve(name)
-      // Bindings only feed the rewrite helpers — plain SELECTs resolve
-      // through the catalog — so if a SAME-NAMED CATALOG object carries
-      // the storage (the documented bind() alternative, possibly BESIDE a
-      // binding), the truncate must empty the catalog object too or every
-      // row stays visible there: a VIEW is replaced with an empty
+      // runQuery reads a binding before the catalog, but plain spark.sql
+      // reads only the catalog — so if a SAME-NAMED CATALOG object
+      // carries the storage (the documented bind() alternative, possibly
+      // BESIDE a binding), the truncate must empty the catalog object too
+      // or every row stays visible there: a VIEW is replaced with an empty
       // same-schema view (the ENGINE=Null trick), a temp view
       // re-registered empty; an externally-registered TABLE refuses
       // loudly (deleting a user's files behind a registration is not this
@@ -358,7 +358,7 @@ final class ChReplay(spark: SparkSession, warehouseDir: String) {
             spark.catalog.tableExists(t)) {
           // refuse BEFORE touching any state: a half-applied truncate
           // (empty binding installed, catalog refused) would shadow the
-          // populated catalog table with emptiness for the rewrite helpers
+          // populated catalog table with emptiness for runQuery
           val tt = spark.catalog.getTable(t)
           if (tt.tableType != "VIEW" && tt.tableType != "TEMPORARY")
             sys.error(s"TRUNCATE TABLE $name: storage is an externally-" +
@@ -435,9 +435,11 @@ final class ChReplay(spark: SparkSession, warehouseDir: String) {
         try st.append(conformed) finally partsViewsDirty = true
       case None =>
         // ENGINE=Null discards the rows but still fires the MVs watching
-        // the table — CH's feed-the-views-without-storing pattern
+        // the table — CH's feed-the-views-without-storing pattern; an
+        // unbound name starts from what it reads (its catalog object)
         if (!tables.get(target).exists(_.engine.equalsIgnoreCase("Null")))
-          bindings(target) = bindings.get(target) match {
+          bindings(target) = bindings.get(target)
+            .orElse(Some(target).filter(spark.catalog.tableExists).map(spark.table)) match {
             case Some(prev) => prev.unionByName(named, allowMissingColumns = true)
             case None => named
           }
@@ -987,10 +989,10 @@ final class ChReplay(spark: SparkSession, warehouseDir: String) {
     * the `system.*` views refreshes them first, the literal
     * `substitutions` apply (the scripts' capture-day literals mapped onto
     * the replay's ingested days), and the text runs through the dialect
-    * front door ([[ChSql.run]]) with this replay's scope: table names
-    * resolve through [[bind]]ings and Distributed aliases, `SAMPLE` reads
-    * each table's declared SAMPLE BY key, and `FROM t FINAL` reads the
-    * backing [[StateTable.merged]].
+    * front door ([[ChSql.run]]) with this replay's scope: every clause
+    * reads a [[bind]]ing (under its own name or a Distributed alias of
+    * it) before the catalog, `SAMPLE` reads each table's declared SAMPLE
+    * BY key, and `FROM t FINAL` reads the backing [[StateTable.merged]].
     */
   def runQuery(sql: String, substitutions: Map[String, String] = Map.empty): DataFrame = {
     interactive(sql) match {
@@ -1031,11 +1033,12 @@ final class ChReplay(spark: SparkSession, warehouseDir: String) {
     val q = substitutions.foldLeft(sql0) { case (t, (from, to)) => t.replace(from, to) }
     // like CH, FINAL on a name with no backing state table is refused
     // rather than silently un-merged
-    ChSql.run(spark, q, ChSql.Scope(sourceDf,
+    ChSql.run(spark, q, ChSql.Scope(
       t => tables.get(resolve(t)).flatMap(_.sampleBy),
       name => stateTables.getOrElse(resolve(name), sys.error(
         s"$name FINAL: FINAL needs an AggregatingMergeTree-backed table " +
-          s"(known: ${stateTables.keys.mkString(", ")})")).merged()))
+          s"(known: ${stateTables.keys.mkString(", ")})")).merged()),
+      bindings.toMap ++ aliases.keys.flatMap(a => bindings.get(resolve(a)).map(a -> _)))
   }
 
   // ---- builders ------------------------------------------------------------

@@ -1,7 +1,5 @@
 package graft.engine
 
-import org.apache.spark.sql.DataFrame
-
 /** ClickHouse `SAMPLE` clause → a deterministic hash-range filter over the
   * table's declared `SAMPLE BY` key (CH docs: SELECT ... SAMPLE k
   * [OFFSET m]; the DDL surface parses through [[ChDdl]] and registers in
@@ -18,12 +16,13 @@ import org.apache.spark.sql.DataFrame
   * double, and numeric order == the hex string's lexicographic order, so
   * the predicate stays a plain string range any engine can mirror.
   *
-  * The rewrite binds the filtered table under a fresh name aliased to the
-  * original one, so qualified references and everything after FROM
-  * survive verbatim and the ASOF/ANY join translators downstream still
-  * see `FROM <name> <alias>`. The filter is an ordinary WHERE on a deterministic
-  * expression — at scale it rides the scan (no shuffle, no sort), exactly
-  * like CH's sample-range index prune in spirit.
+  * The rewrite is plain Spark SQL under the original alias,
+  * `FROM (SELECT * FROM t a WHERE <md5 range>) a`, so qualified references
+  * and everything after FROM survive verbatim (an ASOF/ANY join after it
+  * included), and Spark resolves the table like any other. The filter is
+  * an ordinary WHERE on a deterministic expression — at scale it rides the
+  * scan (no shuffle, no sort), exactly like CH's sample-range index prune
+  * in spirit.
   */
 object ChSample {
 
@@ -80,13 +79,12 @@ object ChSample {
   }
 
   /** Rewrite every `FROM t [alias] SAMPLE f [OFFSET m]` span (matched on
-    * the masked twin) into `FROM <bound> alias`, `bind`'s name for
-    * `table(t)` filtered to the slice of its `sampleKeyFor(t)` key.
+    * the masked twin) into a subquery over `t` filtered to the slice of
+    * its `sampleKeyFor(t)` key.
     */
-  private[engine] def rewrite(query: String, sampleKeyFor: String => Option[String],
-      table: String => DataFrame, bind: DataFrame => String): String =
+  private[engine] def rewrite(query: String, sampleKeyFor: String => Option[String]): String =
     ChSql.replaceOnMasked(query, sampleRe) { m =>
       val (name, alias, pred) = parsed(m, sampleKeyFor)
-      s" FROM ${bind(table(name).where(pred))} $alias "
+      s" FROM (SELECT * FROM $name $alias WHERE $pred) $alias "
     }
 }

@@ -4,8 +4,11 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+import org.apache.spark.sql.catalyst.expressions.{And, BinaryComparison, Expression}
 import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias, UnresolvedWith}
+import org.apache.spark.sql.catalyst.plans.{Inner, UsingJoin}
+import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan, Project, SubqueryAlias, UnresolvedWith}
+import org.apache.spark.sql.catalyst.util.MetadataColumnHelper
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** The ClickHouse dialect's front door, [[run]] — the one way to execute
@@ -1049,36 +1052,31 @@ object ChSql {
     splitStatements(q).map(one).mkString(";\n")
   }
 
-  /** The catalog lookups on which [[run]]'s callers differ: how a table
-    * name resolves to its DataFrame (the session catalog, or
-    * [[ChReplay]]'s bindings and Distributed aliases), a table's
-    * `SAMPLE BY` key, and its `FINAL` read (a state table's
+  /** The catalog lookups on which [[run]]'s callers differ: a table's
+    * `SAMPLE BY` key and its `FINAL` read (a state table's
     * [[graft.mv.StateTable.merged]]).
     */
   final case class Scope(
-      table: String => DataFrame,
       sampleKey: String => Option[String] = _ => None,
       merged: String => DataFrame = name => sys.error(
         s"$name FINAL: FINAL needs an AggregatingMergeTree-backed table"))
-
-  /** [[run]] over the session catalog. */
-  def run(spark: SparkSession, text: String): DataFrame =
-    run(spark, text, Scope(spark.table))
 
   /** THE front door for ClickHouse-dialect text: one statement in, one
     * DataFrame out. In order: the string shims ([[apply]]) and CH's
     * paren-less `USING a, b`; SAMPLE, ASOF, ANY and ARRAY JOIN; FINAL;
     * DISTINCT ON, QUALIFY, LIMIT BY (QUALIFY first: its tail moves to the
     * outer wrapped query, where LIMIT BY can still find it); CH's alias
-    * preference in GROUP BY / WHERE; WITH FILL. The SAMPLE/JOIN/FINAL
-    * shims build their sub-plans from `scope` and splice a fresh name in
-    * their place; the final text is parsed with the session's parser and
-    * each such name — and each of `bound`, e.g. an MV's insert batch
-    * under its source table's name — is replaced by its plan, inside
-    * subquery expressions and CTE bodies too. Nothing is registered in
-    * the session catalog.
+    * preference in GROUP BY / WHERE; WITH FILL. SAMPLE and ARRAY JOIN
+    * become plain Spark SQL; ASOF and ANY drop their keyword and mark the
+    * join's right relation, and the session's parser reads the rest. In
+    * the parsed plan each name of `bound` (e.g. an MV's insert batch under
+    * its source table's name, a replay's bindings) and each FINAL read is
+    * replaced by its plan, and each marked `Join` by its ASOF or ANY
+    * rewrite ([[ChAsof.join]], [[ChAnyJoin.join]]), inside subquery
+    * expressions and CTE bodies too. Nothing is registered in the session
+    * catalog.
     */
-  def run(spark: SparkSession, text: String, scope: Scope,
+  def run(spark: SparkSession, text: String, scope: Scope = Scope(),
       bound: Map[String, DataFrame] = Map.empty): DataFrame = {
     val parser = spark.sessionState.sqlParser
     def key(name: String): Seq[String] = parser.parseMultipartIdentifier(name).map(_.toLowerCase)
@@ -1089,24 +1087,103 @@ object ChSql {
       frames(Seq(name)) = df
       name
     }
-    // a clause over an earlier clause's result (SAMPLE under a join) reads its frame
-    val table = (name: String) => frames.getOrElse(key(name), scope.table(name))
+    // marker name -> (the right relation's name, the rewrite of its join)
+    val marks = mutable.HashMap.empty[String, (String, (SparkSession, Join) => LogicalPlan)]
+    def mark(rewrite: (SparkSession, Join) => LogicalPlan)(name: String): String = {
+      val marker = s"__graft_join_${marks.size}"
+      marks(marker) = (name, rewrite)
+      marker
+    }
+    def relation(u: UnresolvedRelation): LogicalPlan =
+      frames.get(u.multipartIdentifier.map(_.toLowerCase)).fold[LogicalPlan](u)(df =>
+        SubqueryAlias(u.multipartIdentifier, df.queryExecution.analyzed))
+    // the marked relation under its alias, back under its own name
+    def unmark(p: LogicalPlan): Option[(LogicalPlan, (SparkSession, Join) => LogicalPlan)] =
+      p match {
+        case a: SubqueryAlias => unmark(a.child).map { case (c, f) => (a.copy(child = c), f) }
+        case u: UnresolvedRelation => marks.get(u.multipartIdentifier.mkString(".")).map {
+          case (name, f) => (relation(UnresolvedRelation(parser.parseMultipartIdentifier(name))), f)
+        }
+        case _ => None
+      }
     var q = replaceOnMasked(apply(text), """(?i)\busing\s+(\w+(?:\s*,\s*\w+)+)""".r)(m =>
       "USING (" + m.group(1).replaceAll("\\s+", "") + ")")
-    if (ChSample.applies(q)) q = ChSample.rewrite(q, scope.sampleKey, table, bind)
-    if (ChAsof.applies(q)) q = ChAsof.rewrite(q, table, bind)
-    if (ChAnyJoin.applies(q)) q = ChAnyJoin.rewrite(q, table, bind)
-    if (ChArrayJoin.applies(q)) q = ChArrayJoin.rewrite(q, table, bind)
+    q = ChSample.rewrite(q, scope.sampleKey)
+    q = ChAsof.mark(q, mark(ChAsof.join))
+    q = ChAnyJoin.mark(q, mark(ChAnyJoin.join))
+    q = ChArrayJoin.rewrite(q)
     q = finalReads(q, scope.merged, bind)
     if (ChDistinctOn.applies(q)) q = ChDistinctOn.rewrite(q)
     if (ChQualify.applies(q)) q = ChQualify.rewrite(q)
     if (ChLimitBy.applies(q)) q = ChLimitBy.rewrite(q)
     val (body, fill) = graft.operators.WithFill.split(aliasGroupBy(q))
-    val plan = mapRelations(parser.parsePlan(body)) { u =>
-      frames.get(u.multipartIdentifier.map(_.toLowerCase)).fold[LogicalPlan](u)(df =>
-        SubqueryAlias(u.multipartIdentifier, df.queryExecution.analyzed))
+    val plan = mapPlan(parser.parsePlan(body)) {
+      case u: UnresolvedRelation => relation(u)
+      case j: Join => unmark(j.right).fold[LogicalPlan](j) { case (right, rewrite) =>
+        rewrite(spark, j.copy(right = right))
+      }
     }
     fill(ColumnBridge.dataFrame(spark, plan))
+  }
+
+  /** A marked join's two analyzed sides and its condition as terms
+    * `(comparator, left operand, right operand)`: each ON conjunct is
+    * classified by where its attributes come from and written left
+    * operand first (`r.t <= l.t` reads `l.t >= r.t`); USING columns are
+    * `=` terms.
+    */
+  private[engine] def joinTerms(spark: SparkSession, j: Join, who: String)
+      : (LogicalPlan, LogicalPlan, Seq[(String, Expression, Expression)]) = {
+    val using = j.joinType match {
+      case UsingJoin(_, cols) => cols
+      case _ => Nil
+    }
+    // a condition on a side's hidden column (an earlier marked join's
+    // `r.k`) adds it to that side's output under a Project
+    val a = ColumnBridge.dataFrame(spark, Join(j.left, j.right, Inner, j.condition, j.hint))
+      .queryExecution.analyzed match {
+        case a: Join => a
+        case Project(_, a: Join) => a
+      }
+    def column(side: LogicalPlan, c: String): Expression =
+      side.resolve(Seq(c), spark.sessionState.conf.resolver).getOrElse(
+        sys.error(s"$who: USING column $c is not in both sides"))
+    def conjuncts(e: Expression): Seq[Expression] = e match {
+      case And(x, y) => conjuncts(x) ++ conjuncts(y)
+      case other => Seq(other)
+    }
+    def side(e: Expression): Int =
+      if (e.references.isEmpty) 0
+      else if (e.references.subsetOf(a.left.outputSet)) 1
+      else if (e.references.subsetOf(a.right.outputSet)) 2
+      else 0
+    val flip = Map("=" -> "=", ">=" -> "<=", "<=" -> ">=", ">" -> "<", "<" -> ">")
+    val on = a.condition.toSeq.flatMap(conjuncts).map {
+      case c: BinaryComparison if flip.contains(c.symbol) => (side(c.left), side(c.right)) match {
+        case (1, 2) => (c.symbol, c.left, c.right)
+        case (2, 1) => (flip(c.symbol), c.right, c.left)
+        case (x, y) if x == y && x != 0 =>
+          sys.error(s"$who: ON condition '${c.sql}' references one side twice")
+        case _ => sys.error(s"$who: unsupported ON condition '${c.sql}'")
+      }
+      case c => sys.error(s"$who: unsupported ON condition '${c.sql}'")
+    }
+    (a.left, a.right, using.map(c => ("=", column(a.left, c), column(a.right, c))) ++ on)
+  }
+
+  /** `plan`'s first `nLeft` columns (the left side's), then the right
+    * side's, less those that share a left column's name: those stay
+    * reachable by qualifier only (`r.k`), the way Spark hides a USING
+    * join's right keys, so an unqualified name reads the left side as in
+    * ClickHouse.
+    */
+  private[engine] def preferLeft(plan: LogicalPlan, nLeft: Int): LogicalPlan = {
+    val (left, right) = plan.output.splitAt(nLeft)
+    val names = left.map(_.name.toLowerCase).toSet
+    val (hidden, shown) = right.partition(a => names(a.name.toLowerCase))
+    val p = Project(left ++ shown, plan)
+    p.setTagValue(Project.hiddenOutputTag, hidden.map(_.markAsQualifiedAccessOnly()))
+    p
   }
 
   /** Does dialect `text` read table `name` anywhere — in a subquery
@@ -1116,24 +1193,22 @@ object ChSql {
   private[graft] def reads(text: String, name: String): Boolean = {
     val key = CatalystSqlParser.parseMultipartIdentifier(name).map(_.toLowerCase)
     var found = false
-    mapRelations(CatalystSqlParser.parsePlan(apply(text))) { u =>
+    mapPlan(CatalystSqlParser.parsePlan(apply(text))) { case u: UnresolvedRelation =>
       found ||= u.multipartIdentifier.map(_.toLowerCase) == key
       u
     }
     found
   }
 
-  /** `plan` with every table reference replaced by `f`'s plan for it,
-    * in subquery expressions and CTE bodies (which are not children of
-    * their `WITH` node) too.
+  /** `plan` rewritten bottom-up by `f`, in subquery expressions and CTE
+    * bodies (which are not children of their `WITH` node) too.
     */
-  private def mapRelations(plan: LogicalPlan)(
-      f: UnresolvedRelation => LogicalPlan): LogicalPlan =
-    plan.transformUpWithSubqueries {
-      case u: UnresolvedRelation => f(u)
+  private def mapPlan(plan: LogicalPlan)(
+      f: PartialFunction[LogicalPlan, LogicalPlan]): LogicalPlan =
+    plan.transformUpWithSubqueries(f.orElse {
       case w: UnresolvedWith => w.copy(cteRelations = w.cteRelations.map(r =>
-        r.copy(_2 = mapRelations(r._2)(f).asInstanceOf[SubqueryAlias])))
-    }
+        r.copy(_2 = mapPlan(r._2)(f).asInstanceOf[SubqueryAlias])))
+    })
 
   /** CH `FROM t FINAL` / `JOIN t FINAL`: each span becomes the bound
     * name of `merged(t)` — [[graft.mv.StateTable.merged]], one row per

@@ -140,18 +140,24 @@ object ChCompat {
           Seq(Alias(range.output.head, "number")()), range)
       }),
 
-    // merge('db', 'tables_regexp') — CH's union table function: every
+    // merge(db, 'tables_regexp') — CH's union table function: every
     // table of `db` whose name matches the (unanchored) regex, unioned BY
     // NAME, with the `_table` virtual column naming each row's source.
     // Missing columns resolve as NULL (documented divergence: CH fills
     // type defaults). Tables enumerate at plan construction — the regex
-    // is against the catalog, resolution stays with the analyzer.
+    // is against the catalog, resolution stays with the analyzer. `db`
+    // is CH's `currentDatabase()` or any constant string.
     // The builder runs during analysis, where the active session is the
     // querying one.
     FunctionTable.entry(this, "merge", { es: Seq[Expression] =>
         val spark = SparkSession.active
         require(es.length == 2, s"merge takes (db, tables_regexp), got ${es.length} args")
-        val db = stringLit(es(0), "merge database")
+        val db = es(0) match {
+          case CurrentDatabase() => spark.catalog.currentDatabase
+          case e if e.resolved && e.foldable && e.dataType == StringType && e.eval() != null =>
+            e.eval().toString
+          case e => stringLit(e, "merge database")
+        }
         val re = stringLit(es(1), "merge tables_regexp").r
         // listTables(db) returns session temp views for ANY db argument;
         // CH merge() is database-scoped, so temp views only participate

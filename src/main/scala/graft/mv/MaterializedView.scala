@@ -120,7 +120,7 @@ object MaterializedView {
     new MaterializedView(name, { batch =>
       val s = batch.sparkSession
       graft.functions.ChCompat.register(s)
-      conform(ChSql.run(s, mvSql, ChSql.Scope(s.table), Map(sourceTable -> batch)))
+      conform(ChSql.run(s, mvSql, bound = Map(sourceTable -> batch)))
     }, target, preAggregated = true)
   }
 }

@@ -365,13 +365,13 @@ object ChPack {
         """SELECT lang, count(*) AS docs, sum(n_chars) AS chars
           |FROM graft_sample_docs SAMPLE 0.25 OFFSET 0.5
           |GROUP BY lang ORDER BY lang""".stripMargin
-      graft.engine.ChSql.run(s, q, graft.engine.ChSql.Scope(s.table, _ => Some("doc_id")))
+      graft.engine.ChSql.run(s, q, graft.engine.ChSql.Scope(sampleKey = _ => Some("doc_id")))
     },
 
     // CH plural quantiles (one pass, array out, exploded per quantile)
     // plus the GLOBAL keyword shim: the dialect text uses GLOBAL ANY JOIN
-    // — GLOBAL strips (Catalyst owns distribution), ANY resolves through
-    // ChAnyJoin, quantilesExact aggregates the flat spelling.
+    // — GLOBAL strips (Catalyst owns distribution), ANY rewrites the parsed
+    // join (ChAnyJoin), quantilesExact aggregates the flat spelling.
     "q90_quantiles_multi" -> { (s, dir) =>
       val t = Tables(s, dir)
       t.lineitem.select(col("l_orderkey"), col("l_quantity"), col("l_extendedprice"))

@@ -161,8 +161,8 @@ object ExtendedPack {
     // ON k = k AND t > t2` syntax a ClickHouse user writes, translated
     // onto the same window-formulation operator as q63 — here the INNER +
     // STRICT variant (unmatched left rows dropped, equal timestamps do
-    // not match), with alias-qualified select/WHERE exercising the
-    // qualifier splice.
+    // not match), with alias-qualified select/WHERE resolving to each
+    // side of the rewritten join.
     "q80_asof_sql" -> { (s, dir) =>
       val t = Tables(s, dir)
       t.events.select(col("event_id"), col("user_id"), col("ts"))
@@ -212,11 +212,10 @@ object ExtendedPack {
       t.lineitem.select(col("l_orderkey"), col("l_linenumber"),
           col("l_quantity"), col("l_extendedprice"))
         .createOrReplaceTempView("graft_anyr_lines")
-      // the dialect's output is one flat namespace under the LEFT key
-      // names (the right key is renamed onto l_orderkey for the join) —
-      // address the key as l.l_orderkey and alias it back
+      // each side keeps its own columns: an order with no lines reads
+      // NULL for l.l_orderkey, so the key is the order's own o.o_orderkey
       graft.engine.ChSql.run(s,
-        """SELECT l.l_orderkey AS o_orderkey, o.o_totalprice, l.l_linenumber,
+        """SELECT o.o_orderkey, o.o_totalprice, l.l_linenumber,
           |       l.l_quantity, l.l_extendedprice
           |FROM graft_anyr_lines l ANY RIGHT JOIN graft_anyr_orders o
           |  ON l.l_orderkey = o.o_orderkey

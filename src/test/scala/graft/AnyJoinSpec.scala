@@ -66,7 +66,7 @@ class AnyJoinSpec extends SparkSpec {
       Set((1, 10), (2, 5)))
   }
 
-  test("dialect error contract: non-equality ON, one-sided ON, colliding columns") {
+  test("dialect error contract: non-equality ON, one-sided ON; colliding columns join") {
     left.createOrReplaceTempView("aj_left")
     right.createOrReplaceTempView("aj_right")
     val e1 = intercept[RuntimeException] {
@@ -79,13 +79,14 @@ class AnyJoinSpec extends SparkSpec {
     assert(e2.getMessage.contains("one side twice"))
     val collide = right.withColumnRenamed("rt", "lv")
     collide.createOrReplaceTempView("aj_collide")
-    val e3 = intercept[IllegalArgumentException] {
-      ChSql.run(spark, "SELECT 1 FROM aj_left l ANY LEFT JOIN aj_collide r ON l.k = r.k")
-    }
-    assert(e3.getMessage.contains("collide"))
+    // each side keeps its own lv; the unqualified name reads the left's
+    val both = ChSql.run(spark,
+      "SELECT l.k, lv, r.lv FROM aj_left l ANY LEFT JOIN aj_collide r ON l.k = r.k")
+      .collect().map(r => (r.getInt(0), r.getString(1), Option(r.getString(2)))).toSet
+    assert(both == Set((1, "a", Some("x")), (2, "b", Some("q")), (3, "c", None), (4, "d", None)))
   }
 
-  test("multi-key ON with swapped names: rename chain passes; key reuse rejected") {
+  test("multi-key ON with swapped names and a right key used twice") {
     // l.a = r.b AND l.b = r.c — right's own `b` is renamed away before the
     // second pair needs the name, so the chain must be legal
     val l = Seq((1, 10, "L1"), (2, 20, "L2")).toDF("a", "b", "lv")
@@ -97,13 +98,11 @@ class AnyJoinSpec extends SparkSpec {
       .collect().map(x => (x.getInt(0), x.getInt(1), x.getString(2))).toSet
     assert(got == Set((1, 10, "R0"), (2, 20, null)))
 
-    // the same right column driving two key pairs is an error, not a
-    // silent no-op rename
-    val e = intercept[IllegalArgumentException] {
-      ChSql.run(spark,
-        "SELECT 1 FROM aj_ml l ANY LEFT JOIN aj_mr r ON l.a = r.c AND l.b = r.c")
-    }
-    assert(e.getMessage.contains("duplicate right key"))
+    // the same right column in two key pairs: both must equal it
+    val reused = ChSql.run(spark,
+      "SELECT l.a, r.rv FROM aj_ml l ANY LEFT JOIN aj_mr r ON l.a = r.b AND l.a = r.b AND l.b = r.c")
+      .collect().map(x => (x.getInt(0), x.getString(1))).toSet
+    assert(reused == Set((1, "R0"), (2, null)))
   }
 
   test("replay routes ANY joins: runQuery executes the dialect form") {

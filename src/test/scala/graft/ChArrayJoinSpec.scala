@@ -64,7 +64,7 @@ class ChArrayJoinSpec extends SparkSpec {
     val e2 = intercept[Exception] {
       ChSql.run(spark, "SELECT 1 FROM caj_t ARRAY JOIN nope WHERE id = 1")
     }
-    assert(e2.getMessage.contains("no column"))
+    assert(e2.getMessage.contains("`nope`"), e2.getMessage)
   }
 
   test("expression operand: computed arrays explode in a subquery, per UNION branch") {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.engine.ChSql
@@ -8,7 +8,7 @@ import graft.operators.AsOfJoin
 
 /** CH ASOF JOIN dialect (ChAsof): every SQL form must execute to exactly
   * what the Scala operator produces — directions, strictness, operand
-  * order, inner vs LEFT — with qualifiers spliced out correctly.
+  * order, inner vs LEFT — with each qualified reference reading its side.
   */
 class ChAsofSpec extends SparkSpec {
 
@@ -156,7 +156,9 @@ class ChAsofSpec extends SparkSpec {
     assert(err("SELECT 1 FROM asof_l l ASOF JOIN asof_r r " +
       "ON l.k = r.k AND l.lts >= r.rts AND l.lts > r.rts")
       .contains("exactly ONE inequality"))
-    assert(err("SELECT 1 FROM asof_l l ASOF JOIN asof_r r " +
-      "ON k = r.k AND l.lts >= r.rts").contains("ambiguous"))
+    // an unqualified key both sides carry: Spark's analyzer names it
+    val amb = intercept[AnalysisException](ChSql.run(spark, "SELECT 1 FROM asof_l l " +
+      "ASOF JOIN asof_r r ON k = r.k AND l.lts >= r.rts")).getMessage
+    assert(amb.contains("ambiguous") && amb.contains("`k`"), amb)
   }
 }

@@ -6,10 +6,11 @@ import org.apache.spark.sql.functions._
 import graft.engine.{ChAnyJoin, ChArrayJoin, ChAsof, ChReplay, ChSample, ChSql}
 import graft.mv.{MaterializedView, StateTable, SumMetric}
 
-/** The dialect front door (`ChSql.run`): every clause shim that needs a
-  * sub-plan binds it into the parsed query, so running one leaves the
-  * session catalog as it found it; the clause scanners read the masked
-  * twin; an MV batch is bound under its source table's name.
+/** The dialect front door (`ChSql.run`): running a clause shim leaves
+  * the session catalog as it found it; the clause scanners read the
+  * masked twin; an MV batch is bound under its source table's name; an
+  * ASOF/ANY join keeps each side's columns; a replay's plain SELECTs read
+  * the same frame per name as its clauses.
   */
 class ChFrontDoorSpec extends SparkSpec {
 
@@ -41,7 +42,7 @@ class ChFrontDoorSpec extends SparkSpec {
   test("each clause shim runs through the front door without a catalog object") {
     register(spark)
     val sample = unchanged("SAMPLE")(ChSql.run(spark,
-      "SELECT k FROM graft_fd_l SAMPLE 1/1", ChSql.Scope(spark.table, keyed)))
+      "SELECT k FROM graft_fd_l SAMPLE 1/1", ChSql.Scope(keyed)))
     assert(sample.size == 3)
     val asofOn = unchanged("ASOF ON")(ChSql.run(spark,
       """SELECT l.k, l.ts, r.rval FROM graft_fd_l l ASOF LEFT JOIN graft_fd_r r
@@ -101,10 +102,8 @@ class ChFrontDoorSpec extends SparkSpec {
       "ON l.k = r.k AND l.ts >= r.rts").collect()
     ChSql.run(s, "SELECT l.k, r.rval FROM graft_fd_l l ANY INNER JOIN graft_fd_r r " +
       "ON l.k = r.k").collect()
-    ChSql.run(s, "SELECT k FROM graft_fd_l SAMPLE 0.5",
-      ChSql.Scope(s.table, keyed)).collect()
-    val listed = s.sql(
-      s"SELECT DISTINCT _table FROM merge('${s.catalog.currentDatabase}', '^graft_')")
+    ChSql.run(s, "SELECT k FROM graft_fd_l SAMPLE 0.5", ChSql.Scope(keyed)).collect()
+    val listed = s.sql("SELECT DISTINCT _table FROM merge(currentDatabase(), '^graft_')")
       .collect().map(_.getString(0)).toSet
     assert(listed == Set("graft_fd_l", "graft_fd_r", "graft_fd_u", "graft_fd_a"))
   }
@@ -147,5 +146,45 @@ class ChFrontDoorSpec extends SparkSpec {
       "SELECT k, 'ods.graft_fd_src' AS n FROM ods.other GROUP BY k",
       sourceTable = "ods.graft_fd_src", target = target))
     assert(e.getMessage.contains("does not reference source table"))
+  }
+
+  test("an unmatched ASOF LEFT or ANY LEFT row reads NULL for every right column") {
+    import spark.implicits._
+    Seq((1L, 10L, "e1"), (2L, 5L, "e3")).toDF("k", "ts", "lval")
+      .createOrReplaceTempView("graft_fd_pl")
+    Seq((1L, 10L, "a"), (2L, 9L, "c")).toDF("k", "rts", "rval")
+      .createOrReplaceTempView("graft_fd_pr")
+    val asof = ChSql.run(spark,
+      """SELECT l.k, r.k, r.rts, r.rval FROM graft_fd_pl l ASOF LEFT JOIN graft_fd_pr r
+        |  ON l.k = r.k AND l.ts >= r.rts WHERE l.k = 2""".stripMargin).collect()
+    assert(asof.map(_.toSeq).toSeq == Seq(Seq(2L, null, null, null)))
+    val any = ChSql.run(spark,
+      """SELECT l.k, r.k, r.rts, r.rval FROM graft_fd_pl l ANY LEFT JOIN graft_fd_pr r
+        |  ON l.k = r.k AND l.ts = r.rts WHERE l.k = 2""".stripMargin).collect()
+    assert(any.map(_.toSeq).toSeq == Seq(Seq(2L, null, null, null)))
+  }
+
+  test("ChReplay: a plain SELECT reads a bound or INSERT-filled name like SAMPLE does") {
+    val replay = new ChReplay(spark, ChReplay.scratchWarehouse("graft-fd-names"))
+    replay.executeScript(
+      """create table ods.pbound (k UInt64, v UInt64) engine=MergeTree ORDER BY k SAMPLE BY k;
+        |create table ods.pmt (k UInt64, v UInt64) engine=MergeTree ORDER BY k SAMPLE BY k;
+        |insert into ods.pmt (k, v) select id, id*10 from range(5);""".stripMargin)
+    replay.bind("ods.pbound", spark.range(5).toDF("k").withColumn("v", col("k") * 10))
+    for (t <- Seq("ods.pbound", "ods.pmt")) {
+      def count(q: String) = replay.runQuery(q).head().getLong(0)
+      assert(count(s"SELECT count(*) FROM $t SAMPLE 1/1") == 5L, t)
+      assert(count(s"SELECT count(*) FROM $t") == 5L, t)
+    }
+  }
+
+  test("an ASOF join inside a FROM subquery") {
+    register(spark)
+    val got = ChSql.run(spark,
+      """SELECT x.k, x.rval FROM (SELECT l.k, l.ts, r.rval FROM graft_fd_l l
+        |  ASOF LEFT JOIN graft_fd_r r ON l.k = r.k AND l.ts >= r.rts) x
+        |ORDER BY x.k, x.ts""".stripMargin).collect()
+      .map(r => (r.getLong(0), Option(r.getString(1))))
+    assert(got.toSeq == Seq((1L, Some("a")), (1L, Some("b")), (2L, None)))
   }
 }

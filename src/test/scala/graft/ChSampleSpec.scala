@@ -18,7 +18,7 @@ class ChSampleSpec extends SparkSpec {
     df
   }
 
-  private lazy val keyed = ChSql.Scope(spark.table, _ => Some("id"))
+  private lazy val keyed = ChSql.Scope(sampleKey = _ => Some("id"))
 
   private def ids(q: String): Set[Long] =
     ChSql.run(spark, q, keyed).collect().map(_.getLong(0)).toSet
@@ -96,8 +96,8 @@ class ChSampleSpec extends SparkSpec {
     Seq((0, "zero"), (1, "one"), (2, "two"), (3, "three"), (4, "four"),
         (5, "five"), (6, "six"))
       .toDF("grp", "label").createOrReplaceTempView("chs_dim")
-    // SAMPLE rewrites to a bound name (not a subquery), so the ANY JOIN
-    // regex downstream still sees FROM <name> <alias> and translates
+    // SAMPLE rewrites to a subquery under the same alias; the ANY join
+    // after it is marked on its own keyword and right relation
     val out = rep.runQuery(
       """SELECT d.label, count(*) AS n
         |FROM graft_chc.facts f SAMPLE 0.5 ANY LEFT JOIN chs_dim d ON f.grp = d.grp
