@@ -1,8 +1,9 @@
 package graft.engine
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -39,7 +40,11 @@ import graft.mv.{BitmapUvMetric, EntropyMetric, HllUvMetric, MaterializedView, M
   *    ref dwm.mainpage_stat_mv_dis.sql:78-96);
   *  - `DROP TABLE <mv>` → detaches that MV (drop-recreate flow);
   *  - SELECT statements are collected in [[queries]] for the caller to
-  *    run through [[runQuery]] (the dialect front door, [[ChSql.run]]).
+  *    run through [[runQuery]] (the dialect front door, [[ChSql.run]]);
+  *  - CH's `system.*` introspection tables ([[systemTable]]) are built
+  *    from the replay's maps and part directories when a statement reads
+  *    them and bound into that one query, so they are always current and
+  *    never a session catalog object.
   */
 object ChReplay {
   // the interactive-statement scanners, compiled once (runQuery calls
@@ -59,15 +64,11 @@ object ChReplay {
   private val ShowDictRe =
     "(?i)^SHOW\\s+DICTIONARIES(?:\\s+FROM\\s+(\\w+))?(?:\\s+LIKE\\s+'((?:[^'\\\\]|\\\\.|'')*)')?$".r
   private val ShowRe = "(?i)^SHOW\\b".r
-  // matches the bare, backtick-quoted and double-quoted spellings alike
-  // (the dialect converts "x" identifiers to backticks AFTER this gate
-  // runs on the raw text)
-  private val SystemPartsRe =
-    "(?i)\\bsystem\\s*[`\"]?\\s*\\.\\s*[`\"]?\\s*(?:detached_)?parts\\b".r
-  // the metadata views' twin of SystemPartsRe: a SELECT touching these
-  // must see every CREATE/DROP that ran since the last publish — the
-  // refresh is metadata-only (no filesystem cost), so runQuery just
-  // republishes on sight instead of tracking a dirty flag
+  // a `system.<name>` mention: bare, backtick- and double-quoted alike
+  // (the dialect converts "x" identifiers to backticks inside the front
+  // door, after this runs on the raw text)
+  private val SystemRe =
+    "(?i)\\bsystem\\s*[`\"]?\\s*\\.\\s*[`\"]?\\s*(\\w+)".r
   // cluster('c', db, t) / clusterAllReplicas('c', db, t) — the FROM-side
   // table functions of the rebalance tool's statements. CH also accepts
   // quoted args ('db', 'tbl') and the 2-arg dotted form (db.tbl); each
@@ -87,32 +88,6 @@ object ChReplay {
     val second = orig(3).orElse(orig(4))
     second.map(t => s"$first.$t").getOrElse(first)
   }
-  private val SystemCatalogRe =
-    ("(?i)\\bsystem\\s*[`\"]?\\s*\\.\\s*[`\"]?\\s*" +
-      "(?:databases|tables|columns|dictionaries|clusters|macros|processes)\\b").r
-
-  /** Last publisher of each session-global system.* snapshot, per
-    * session and kind ∈ {"catalog", "parts"}. Weakly keyed by the
-    * SESSION (the session object itself, strongly referenced elsewhere
-    * while alive — a tuple key would be weakly-unreachable at once and
-    * evaporate): a retired SparkSession must not be pinned by this map.
-    */
-  private val snapshotOwners =
-    new java.util.WeakHashMap[SparkSession,
-      mutable.Map[String, java.lang.ref.WeakReference[AnyRef]]]
-  private[engine] def snapshotOwner(s: SparkSession, kind: String): Option[AnyRef] =
-    snapshotOwners.synchronized {
-      Option(snapshotOwners.get(s)).flatMap(_.get(kind)).flatMap(r => Option(r.get))
-    }
-  private[engine] def claimSnapshot(s: SparkSession, kind: String,
-      owner: AnyRef): Unit =
-    snapshotOwners.synchronized {
-      // the owner rides a WeakReference: a strong value would chain to
-      // the owner's own `spark` field and pin the weak KEY forever
-      // (WeakHashMap's documented value→key pitfall)
-      snapshotOwners.computeIfAbsent(s, _ => mutable.Map.empty)
-        .update(kind, new java.lang.ref.WeakReference[AnyRef](owner))
-    }
 
   /** Where the reference's .sql scripts live — overridable per deployment
     * via `-Dgraft.reference.scripts=...` or `GRAFT_REFERENCE_SCRIPTS`.
@@ -221,25 +196,7 @@ final class ChReplay(spark: SparkSession, warehouseDir: String) {
 
   def executeScript(script: String): Unit = ChDdl.parse(script).foreach(execute)
 
-  def execute(stmt: Stmt): Unit = {
-    // any statement that can change the catalog-object maps dirties the
-    // metadata views (set BEFORE executing — a half-applied DDL must
-    // not leave a stale snapshot either). ALTERs dirty only when they
-    // carry schema subcommands: the rebalance loop's pure partition/PART
-    // moves (and DELETE/UPDATE rewrites) change no catalog metadata, and
-    // each would otherwise force a 7-view republish on the next poll.
-    stmt match {
-      case a: AlterTable =>
-        if (a.addColumns.nonEmpty || a.modifyColumns.nonEmpty ||
-            a.newOrderBy.nonEmpty) catalogViewsDirty = true
-      case _: CreateTable | _: CreateMaterializedView | _: CreateDictionary |
-          _: DropStmt => catalogViewsDirty = true
-      case _ => ()
-    }
-    executeStmt(stmt)
-  }
-
-  private def executeStmt(stmt: Stmt): Unit = stmt match {
+  def execute(stmt: Stmt): Unit = stmt match {
     case ct: CreateTable if ct.isDistributed =>
       ct.distributedTarget.foreach(t => aliases(ct.name) = t)
       aliasDefs(ct.name) = ct
@@ -331,10 +288,6 @@ final class ChReplay(spark: SparkSession, warehouseDir: String) {
                       spark.sparkContext.hadoopConfiguration)
                     fs.delete(new org.apache.hadoop.fs.Path(st.path), true): Unit
                     aliasesTo(n).foreach(dropCatalogObject)
-                    // published parts snapshots would keep listing the
-                    // dropped table's parts over deleted files — dirty
-                    // them like every other part-moving statement
-                    partsViewsDirty = true
                   }
                   dropCatalogObject(n)
                 } else if (wasAlias) dropCatalogObject(n)
@@ -371,7 +324,7 @@ final class ChReplay(spark: SparkSession, warehouseDir: String) {
           else bindings(t).createOrReplaceTempView(t)
         }
       stateTables.get(t) match {
-        case Some(st) => try st.truncate() finally partsViewsDirty = true
+        case Some(st) => st.truncate()
         case None => bindings.get(t) match {
           case Some(df) =>
             truncateCatalogObject() // refusals fire before any mutation
@@ -387,10 +340,8 @@ final class ChReplay(spark: SparkSession, warehouseDir: String) {
       // table's accumulated parts — a no-op for plain MergeTree bindings,
       // whose storage has no merge debt here; PARTITION 'v' scopes the
       // fold (and the rewrite) to that one partition directory
-      stateTables.get(resolve(name)).foreach { st =>
-        try part.fold(st.compact())(st.compactPartition)
-        finally partsViewsDirty = true
-      }
+      stateTables.get(resolve(name)).foreach(st =>
+        part.fold(st.compact())(st.compactPartition))
     case Query(sql) => queries += sql
     case ins: InsertSelect => executeInsert(ins)
     case _: Unparsed => ()
@@ -429,10 +380,7 @@ final class ChReplay(spark: SparkSession, warehouseDir: String) {
           else if (c.isSimpleAggState) lit(0L).cast(stateType(c)).as(c.name)
           else lit(null).cast(stateType(c)).as(c.name)
         }: _*)
-        // the append adds parts — a published snapshot must not keep
-        // serving the pre-insert listing (CH's system.parts is always
-        // current); dirty even on partial failure, like the ALTER paths
-        try st.append(conformed) finally partsViewsDirty = true
+        st.append(conformed)
       case None =>
         // ENGINE=Null discards the rows but still fires the MVs watching
         // the table — CH's feed-the-views-without-storing pattern; an
@@ -452,13 +400,8 @@ final class ChReplay(spark: SparkSession, warehouseDir: String) {
     */
   def insert(tableName: String, batch: DataFrame): Unit = {
     val t = resolve(tableName)
-    val watching = mvSources.collect { case (mv, src) if resolve(src) == t => mv }.toSeq
-    // each processBatch appends parts to the MV's target state table —
-    // same snapshot-staleness rule as a direct INSERT (dirty even when a
-    // batch fails half-written)
-    if (watching.nonEmpty)
-      try watching.foreach(mv => mvs(mv).processBatch(batch))
-      finally partsViewsDirty = true
+    mvSources.collect { case (mv, src) if resolve(src) == t => mv }
+      .foreach(mv => mvs(mv).processBatch(batch))
   }
 
   /** The Structured-Streaming twin of [[insert]]: attach every MV watching
@@ -475,10 +418,7 @@ final class ChReplay(spark: SparkSession, warehouseDir: String) {
     val t = resolve(tableName)
     mvSources.collect { case (mvName, src) if resolve(src) == t => mvName }.toSeq
       .map(n => mvs(n).attach(stream, trigger,
-        checkpointDir.map(d => s"$d/${n.replace('.', '_')}"),
-        // each micro-batch appends parts to the MV's target — same
-        // snapshot-staleness rule as insert()'s batch path
-        onBatch = () => partsViewsDirty = true))
+        checkpointDir.map(d => s"$d/${n.replace('.', '_')}")))
   }
 
   /** Enforce a table's DDL-declared TTL (`TTL day + toIntervalDay(d) +
@@ -492,359 +432,173 @@ final class ChReplay(spark: SparkSession, warehouseDir: String) {
       sys.error(s"$n: no TTL declared in its DDL"))
     val st = stateTables.getOrElse(n,
       sys.error(s"$n: TTL enforcement needs StateTable storage"))
-    // expiry moves parts like any ALTER — the snapshot must not keep
-    // listing the dropped partitions (dirty even on partial failure)
-    val dropped =
-      try st.expire(ttl.days, ttl.hours, now)
-      catch { case e: Throwable => partsViewsDirty = true; throw e }
-    if (dropped.nonEmpty) partsViewsDirty = true
-    dropped
+    st.expire(ttl.days, ttl.hours, now)
   }
 
   /** Register every state table (and its Distributed aliases) as an
     * external parquet catalog table, so the scripts' SELECTs address
     * `dws.x_dis` names verbatim. Re-call after ingests to re-list files.
+    * The `system.*` tables are not catalog objects: each is built when a
+    * statement reads it ([[systemTable]]).
     */
-  def publish(): Unit = {
-    for ((name, st) <- stateTables) {
-      val names = name +: aliasesTo(name)
-      for (n <- names if n.contains('.')) {
-        spark.sql(s"CREATE DATABASE IF NOT EXISTS ${n.split('.')(0)}")
-        // the name may exist as a VIEW (e.g. Catalog.registerParquet from a
-        // previous consumer of the same name) — DROP TABLE refuses views,
-        // so drop whichever object type is actually there
-        dropCatalogObject(n)
-        spark.sql(
-          s"CREATE TABLE $n USING parquet OPTIONS (mergeSchema 'true') LOCATION '${st.path}'")
-        // partitioned external tables track partitions in the catalog —
-        // discover the day=... directories the StateTable wrote
-        spark.sql(s"MSCK REPAIR TABLE $n")
-      }
+  def publish(): Unit =
+    for ((name, st) <- stateTables; n <- name +: aliasesTo(name) if n.contains('.')) {
+      spark.sql(s"CREATE DATABASE IF NOT EXISTS ${n.split('.')(0)}")
+      // the name may exist as a VIEW (e.g. Catalog.registerParquet from a
+      // previous consumer of the same name) — DROP TABLE refuses views,
+      // so drop whichever object type is actually there
+      dropCatalogObject(n)
+      spark.sql(
+        s"CREATE TABLE $n USING parquet OPTIONS (mergeSchema 'true') LOCATION '${st.path}'")
+      // partitioned external tables track partitions in the catalog —
+      // discover the day=... directories the StateTable wrote
+      spark.sql(s"MSCK REPAIR TABLE $n")
     }
-    // once, after the loop: per-table republication was N× redundant, and
-    // a DDL-only replay (tables but no StateTable storage yet) still needs
-    // system.databases/.tables/.columns published
-    publishSystemTables()
-  }
-
-  /** Rebuild CH's introspection tables (`system.databases` / `.tables` /
-    * `.columns` / `.parts`) as catalog views over a snapshot of the
-    * replay's state. CH keeps these live; here they refresh on every
-    * [[publish]] (and on an explicit call) — the metadata volume is tiny,
-    * so the views are literal VALUES rewritten in place.
-    */
-  def publishSystemTables(): Unit = {
-    publishCatalogViews()
-    publishPartsViews()
-  }
-
-  /** Spark string-literal escaping for the VALUES views: backslash FIRST
-    * (Spark processes `\x` escapes in literals by default — an unescaped
-    * backslash in a partition value would corrupt the value or, before a
-    * closing quote, abort the whole CREATE VIEW), then quote doubling.
-    */
-  private def qlit(s: String): String =
-    "'" + s.replace("\\", "\\\\").replace("'", "''") + "'"
-
-  /** `emptySchema` keeps the zero-row view's column types identical to the
-    * populated form (all-STRING nulls would flip e.g. sum(rows) from BIGINT
-    * to DOUBLE the moment a table empties — schema must not depend on
-    * emptiness).
-    */
-  private def mkSysView(name: String, cols: Seq[String], rows: Seq[Seq[String]],
-      emptySchema: Option[StructType] = None): Unit = {
-    val body =
-      if (rows.isEmpty)
-        emptySchema.map(emptySelectSql).getOrElse(
-          cols.map(c => s"CAST(NULL AS STRING) AS $c").mkString("SELECT ", ", ", " WHERE false"))
-      else rows.map(_.mkString("(", ", ", ")"))
-        .mkString(s"SELECT * FROM VALUES ", ", ", s" AS t(${cols.mkString(", ")})")
-    spark.sql(s"CREATE OR REPLACE VIEW system.$name AS $body")
-  }
 
   // a table created without a database qualifier (the ENGINE=Null branch
-  // admits these) lands in CH's `default` db; destructuring split('.')
-  // into exactly two parts would MatchError on it and abort publish()
+  // admits these) lands in CH's `default` db
   private def dbTable(n: String): (String, String) = n.indexOf('.') match {
     case -1 => ("default", n)
     case i  => (n.substring(0, i), n.substring(i + 1))
   }
 
-  /** The metadata-only views (databases/tables/columns) — cheap, no
-    * filesystem access; what the interactive SHOW statements refresh.
+  /** CH's introspection tables, built from this replay's state when read,
+    * so every statement, direct [[StateTable]] write and streamed batch
+    * before the read shows, as CH's own are always current:
+    *  - `databases`, `tables`, `columns`, `dictionaries` from the catalog
+    *    maps (MVs and DDL dictionaries list in `tables` too, with engines
+    *    MaterializedView and Dictionary);
+    *  - `clusters`, `macros`, `processes`: the rebalance tool's topology
+    *    surface (ref data_rebalance.py:117, 186-199) — a static
+    *    1-shard/1-replica cluster named `cluster` (metrika.xml:4-17), the
+    *    metrika macros (metrika.xml:24-28) and no running queries (a
+    *    single-driver engine has none to list). host_name is the identity
+    *    hostName() serves, as CH's is_local replica's is;
+    *  - `parts` and `detached_parts`: one row per PART (= one parquet data
+    *    file, [[Rebalance.dataFiles]]) with the UNESCAPED partition value,
+    *    the file name and its footer record count ([[Rebalance.footerRows]],
+    *    metadata only), so the rebalance tool's `SELECT partition,
+    *    sum(rows), sum(bytes_on_disk) FROM system.parts WHERE table = 't'
+    *    GROUP BY partition` runs verbatim.
+    * Each is a local relation of an explicit schema, so an empty table
+    * keeps its column types. None for any other name.
     */
-  def publishCatalogViews(): Unit = {
-    spark.sql("CREATE DATABASE IF NOT EXISTS system")
-    // CH lists MVs (engine MaterializedView) and DDL dictionaries (engine
-    // Dictionary) in system.tables too — EXISTS/DESCRIBE answering for a
-    // name that SHOW TABLES omits would be an internally inconsistent
-    // catalog
+  def systemTable(name: String): Option[DataFrame] = {
+    def schema(cols: (String, DataType)*) =
+      StructType(cols.map { case (n, t) => StructField(n, t) })
+    def strings(names: String*) = schema(names.map(_ -> StringType): _*)
+    def parts = schema("database" -> StringType, "table" -> StringType,
+      "partition" -> StringType, "name" -> StringType, "rows" -> LongType,
+      "active" -> IntegerType, "bytes_on_disk" -> LongType,
+      // single-node storage has one disk; the rebalance tool's statements
+      // filter `disk_name<>'hdfs'` (ref data_rebalance.py:140,150,173,198)
+      "disk_name" -> StringType,
+      // the part file's mtime — check_attach_part_is_exists filters
+      // `toDate(modification_time)=today()` (ref data_rebalance.py:201-206)
+      "modification_time" -> TimestampType)
+    lazy val names =
+      (tables.keys ++ aliases.keys ++ aliasDefs.keys ++ mvDdls.keys ++ dictDdls.keys)
+        .toSeq.distinct.sorted
     // aliasDefs, not aliases: a Distributed CREATE whose target tuple
-    // failed to parse registers a descriptor but no resolution entry —
-    // EXISTS/DESCRIBE answer for it via declaredCols, so SHOW TABLES and
-    // engine reporting must list it too (catalog consistency)
-    val engineOf: String => String = n =>
+    // failed to parse registers a descriptor but no resolution entry, and
+    // EXISTS/DESCRIBE answer for it through declaredCols
+    def engine(n: String): String =
       if (aliases.contains(n) || aliasDefs.contains(n)) "Distributed"
       else if (mvDdls.contains(n)) "MaterializedView"
       else if (dictDdls.contains(n)) "Dictionary"
       else if (tables.get(n).exists(_.isAggregating)) "AggregatingMergeTree"
       else if (tables.get(n).exists(_.engine.equalsIgnoreCase("Null"))) "Null"
-      else if (tables.contains(n)) "MergeTree"
-      else "View"
-    val allNames =
-      (tables.keys ++ aliases.keys ++ aliasDefs.keys ++ mvDdls.keys ++ dictDdls.keys)
-        .toSeq.distinct.sorted
-    mkSysView("databases", Seq("name"),
-      (allNames.map(dbTable(_)._1).distinct.sorted :+ "system")
-        .map(d => Seq(qlit(d))))
-    mkSysView("tables", Seq("database", "name", "engine"),
-      allNames.map { n =>
-        val (db, t) = dbTable(n)
-        Seq(qlit(db), qlit(t), qlit(engineOf(n)))
-      })
-    mkSysView("columns", Seq("database", "table", "name", "type"),
-      allNames.flatMap { n =>
-        val (db, t) = dbTable(n)
-        declaredCols(n).toSeq.flatten.map(c =>
-          Seq(qlit(db), qlit(t), qlit(c.name), qlit(c.chType)))
-      })
-    // the rebalance tool's topology surface (ref data_rebalance.py:117,
-    // 186-199): a static 1-shard/1-replica cluster named `cluster`
-    // (config/clickhouse/metrika.xml:4-17), the metrika macros kv
-    // (metrika.xml:24-28), and a typed-EMPTY processes view (a
-    // single-driver engine has no concurrent server queries to list —
-    // the tool's `query LIKE '%FETCH PART%'` probe correctly reads
-    // nothing running). host_name is THE capture hostName() serves
-    // (one shared, DNS-failure-guarded identity) — in CH the is_local
-    // replica's host_name and hostName() agree, and a statement
-    // correlating them must not read two identities.
-    val (lhName, lhAddr) = graft.functions.HostNameExpr.localHostIdentity
-    mkSysView("clusters",
-      Seq("cluster", "shard_num", "shard_weight", "replica_num",
-        "host_name", "host_address", "port", "is_local"),
-      Seq(Seq(qlit("cluster"), "CAST(1 AS INT)", "CAST(1 AS INT)",
-        "CAST(1 AS INT)", qlit(lhName), qlit(lhAddr),
-        "CAST(9000 AS INT)", "CAST(1 AS INT)")))
-    mkSysView("macros", Seq("macro", "substitution"),
-      Seq(Seq(qlit("layer"), qlit("cluster")),
-        Seq(qlit("replica"), qlit("ck01")),
-        Seq(qlit("shard"), qlit("shard1"))))
-    mkSysView("processes",
-      Seq("is_initial_query", "user", "query_id", "address", "elapsed",
-        "query"),
-      Nil,
-      Some(StructType(Seq(
-        StructField("is_initial_query", IntegerType),
-        StructField("user", StringType),
-        StructField("query_id", StringType),
-        StructField("address", StringType),
-        StructField("elapsed", DoubleType),
-        StructField("query", StringType)))))
-    mkSysView("dictionaries",
-      Seq("database", "name", "source", "layout", "lifetime_min", "lifetime_max"),
-      dictDdls.toSeq.sortBy(_._1).map { case (n, d) =>
-        val (db, t) = dbTable(n)
-        Seq(qlit(db), qlit(t), qlit(d.sourceName), qlit(d.layout),
-          s"CAST(${d.lifetimeMin} AS INT)", s"CAST(${d.lifetimeMax} AS INT)")
-      },
-      Some(StructType(Seq(
-        StructField("database", StringType), StructField("name", StringType),
-        StructField("source", StringType), StructField("layout", StringType),
-        StructField("lifetime_min", IntegerType),
-        StructField("lifetime_max", IntegerType)))))
-    catalogViewsDirty = false
-    claimSnapshot("catalog")
-  }
-
-  /** One row per PART (= one parquet data file), as in CH: `partition` is
-    * the UNESCAPED value (the dirname is hive-escaped — substring past the
-    * FIRST '=' then unescape, so values containing ':' or '=' read back as
-    * written), `name` the part's file name, `rows` its footer record count
-    * (metadata only — no scan; the part definition and the footer read are
-    * [[Rebalance.dataFiles]]/[[Rebalance.footerRows]], shared with the
-    * rebalance tool so the two views can never disagree). The canonical
-    * operational query shape — `SELECT partition, sum(rows),
-    * sum(bytes_on_disk) FROM system.parts WHERE table = 't' GROUP BY
-    * partition` (ref data_rebalance.py:116-205) — runs verbatim. Detached
-    * copies mirror into system.detached_parts (CH keeps them out of
-    * system.parts too). Split from [[publishCatalogViews]] because this
-    * one costs a footer read per data file — the interactive SHOW
-    * statements must not pay it just to list names.
-    */
-  def publishPartsViews(): Unit = {
-    def enumerateParts(stPath: String, sub: String)
-        : Seq[(String, String, Long, Long, Long)] = {
-      val conf = spark.sparkContext.hadoopConfiguration
-      val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(stPath), conf)
-      val root = if (sub.isEmpty) new org.apache.hadoop.fs.Path(stPath)
-                 else new org.apache.hadoop.fs.Path(stPath, sub)
-      partDirs(fs, root)
-        .flatMap { d =>
-          val dn = d.getPath.getName
-          val value = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-            .unescapePathName(dn.substring(dn.indexOf('=') + 1))
-          Rebalance.dataFiles(fs, d.getPath).map { f =>
-            (value, f.getPath.getName, Rebalance.footerRows(conf, f.getPath),
-              f.getLen, f.getModificationTime)
-          }
-        }.sortBy(p => (p._1, p._2))
+      else "MergeTree"
+    val table: Option[(StructType, Seq[Row])] = name.toLowerCase match {
+      case "databases" => Some((strings("name"),
+        (names.map(dbTable(_)._1).distinct.sorted :+ "system").map(Row(_))))
+      case "tables" => Some((strings("database", "name", "engine"),
+        names.map { n => val (db, t) = dbTable(n); Row(db, t, engine(n)) }))
+      case "columns" => Some((strings("database", "table", "name", "type"),
+        names.flatMap { n =>
+          val (db, t) = dbTable(n)
+          declaredCols(n).toSeq.flatten.map(c => Row(db, t, c.name, c.chType))
+        }))
+      case "dictionaries" => Some((schema("database" -> StringType,
+          "name" -> StringType, "source" -> StringType, "layout" -> StringType,
+          "lifetime_min" -> IntegerType, "lifetime_max" -> IntegerType),
+        dictDdls.toSeq.sortBy(_._1).map { case (n, d) =>
+          val (db, t) = dbTable(n)
+          Row(db, t, d.sourceName, d.layout, d.lifetimeMin, d.lifetimeMax)
+        }))
+      case "clusters" =>
+        val (host, address) = graft.functions.HostNameExpr.localHostIdentity
+        Some((schema("cluster" -> StringType, "shard_num" -> IntegerType,
+            "shard_weight" -> IntegerType, "replica_num" -> IntegerType,
+            "host_name" -> StringType, "host_address" -> StringType,
+            "port" -> IntegerType, "is_local" -> IntegerType),
+          Seq(Row("cluster", 1, 1, 1, host, address, 9000, 1))))
+      case "macros" => Some((strings("macro", "substitution"),
+        Seq(Row("layer", "cluster"), Row("replica", "ck01"), Row("shard", "shard1"))))
+      case "processes" => Some((schema("is_initial_query" -> IntegerType,
+        "user" -> StringType, "query_id" -> StringType, "address" -> StringType,
+        "elapsed" -> DoubleType, "query" -> StringType), Nil))
+      case "parts" => Some((parts, partRows("")))
+      case "detached_parts" => Some((parts, partRows(".detached")))
+      case _ => None
     }
-    def partRows(sub: String): Seq[Seq[String]] =
-      stateTables.toSeq.sortBy(_._1).flatMap { case (n, st) =>
-        val (db, t) = dbTable(n)
-        enumerateParts(st.path, sub).map { case (value, name, rows, bytes, mtime) =>
-          // rows/bytes as explicit BIGINT — a bare small literal would type
-          // INT and the column's type would depend on the data's magnitude
-          Seq(qlit(db), qlit(t), qlit(value), qlit(name),
-            s"CAST($rows AS BIGINT)", "1", s"CAST($bytes AS BIGINT)",
-            qlit("default"),
-            s"CAST(${qlit(java.time.Instant.ofEpochMilli(mtime).toString)} AS TIMESTAMP)")
-        }
-      }
-    spark.sql("CREATE DATABASE IF NOT EXISTS system")
-    val live = partRows("")
-    val detached = partRows(".detached")
-    mkSysView("parts", partCols, live, Some(partSchema))
-    mkSysView("detached_parts", partCols, detached, Some(partSchema))
-    liveSnapshotEmpty = live.isEmpty
-    partsViewsDirty = false
-    claimSnapshot("parts")
+    table.map { case (s, rows) => spark.createDataFrame(rows.asJava, s) }
   }
 
-  /** The parts views' one schema definition — the populated VALUES form
-    * derives its column list from this, so the two can never drift.
+  /** The footer record counts of the part files each side (`""` = live,
+    * `".detached"`) listed last, keyed by (path, length, mtime). A parquet
+    * part never changes in place and a moved part changes its path, so an
+    * entry cannot go stale; each read keeps only the files it listed, and
+    * reads the footers of the others.
     */
-  private val partSchema = StructType(Seq(
-    StructField("database", StringType),
-    StructField("table", StringType),
-    StructField("partition", StringType),
-    StructField("name", StringType),
-    StructField("rows", LongType),
-    StructField("active", IntegerType),
-    StructField("bytes_on_disk", LongType),
-    // single-node storage has one disk; the rebalance tool's statements
-    // filter `disk_name<>'hdfs'` (ref data_rebalance.py:140,150,173,198)
-    StructField("disk_name", StringType),
-    // the part file's mtime — check_attach_part_is_exists filters
-    // `toDate(modification_time)=today()` (ref data_rebalance.py:201-206)
-    StructField("modification_time", TimestampType)))
-  private def partCols: Seq[String] = partSchema.fieldNames.toSeq
+  private val footerRows = mutable.Map.empty[String, Map[(String, Long, Long), Long]]
 
-  /** Emptiness of the last snapshot's LIVE side — a snapshot pinned
-    * before the first insert must republish once a live part exists, or
-    * every later listing would read a plausible-looking empty view over
-    * real data. While it waits, each listing pays [[anyPartAt]]'s
-    * directory probes only (never footer reads); the probe stops the
-    * moment a non-empty snapshot publishes. Detached parts need no probe:
-    * they appear/vanish ONLY through this replay's own statements, which
-    * set [[partsViewsDirty]] instead.
-    */
-  private var liveSnapshotEmpty = false
-
-  /** True when the catalog-object maps (tables/aliases/mvDdls/dictDdls)
-    * changed since the last [[publishCatalogViews]] — set by execute()'s
-    * DDL branches, consumed by runQuery's metadata-view gate. Starts
-    * true: a fresh instance sharing a session with an older one must
-    * replace the other instance's snapshots on first read.
-    */
-  @volatile private var catalogViewsDirty = true
-
-  /** Did THIS instance publish the session's current snapshot of `kind`
-    * (`"catalog"` / `"parts"`)? The system.* views are session-global,
-    * so when several ChReplay instances share one SparkSession (the test
-    * harness does; a notebook could), instance-local dirty flags can't
-    * see another instance's overwrite — the companion registry records
-    * the last publisher per (session, kind), and a non-owner republishes
-    * on its next read regardless of its own flag.
-    */
-  private def ownsSnapshot(kind: String): Boolean =
-    ChReplay.snapshotOwner(spark, kind).exists(_ eq this)
-  private def claimSnapshot(kind: String): Unit =
-    ChReplay.claimSnapshot(spark, kind, this)
-
-  /** Set by every statement that moves parts — ALTER partition ops and
-    * DELETE/UPDATE rewrites (including PARTIAL application when an op
-    * fails mid-statement), OPTIMIZE, TRUNCATE, DROP of a state table.
-    * Consumed by the next listing AND by any [[runQuery]] whose SQL
-    * references system.parts/detached_parts, so statement effects are
-    * visible without explicit publish calls and steady-state listings
-    * pay only two catalog existence checks. No-op partition statements
-    * (dropping a missing partition) do NOT set it.
-    */
-  // volatile: streaming foreachBatch callbacks set it from their own
-  // thread; the next runQuery on the caller's thread must see it.
-  // Starts TRUE like catalogViewsDirty: a fresh instance sharing a
-  // session with an older one must replace the other instance's
-  // snapshot on its first parts read, not serve it as its own.
-  @volatile private var partsViewsDirty = true
-
-  /** The `col=value` partition directories under a parts root — the ONE
-    * dir-level definition of where parts live, shared by the publication
-    * enumeration and the emptiness probe so the two can never disagree.
-    */
-  private def partDirs(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
-    if (!fs.exists(root)) Nil
-    else fs.listStatus(root).toSeq
-      .filter(d => d.isDirectory && d.getPath.getName.contains("="))
-
-  /** Does any state table have at least one part on this side (`""` =
-    * live, `".detached"`)? Directory listings only — the cheap existence
-    * probe behind the stale-empty-snapshot repair.
-    */
-  private def anyPartAt(sub: String): Boolean =
-    stateTables.values.exists { st =>
-      val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(st.path),
-        spark.sparkContext.hadoopConfiguration)
+  /** The `system.parts` rows of every state table's parts on one side. */
+  private def partRows(sub: String): Seq[Row] = footerRows.synchronized {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val files = stateTables.toSeq.sortBy(_._1).flatMap { case (n, st) =>
+      val (db, t) = dbTable(n)
+      val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(st.path), conf)
       val root = if (sub.isEmpty) new org.apache.hadoop.fs.Path(st.path)
                  else new org.apache.hadoop.fs.Path(st.path, sub)
-      partDirs(fs, root).exists(d => Rebalance.dataFiles(fs, d.getPath).nonEmpty)
+      val dirs = if (!fs.exists(root)) Nil else fs.listStatus(root).toSeq
+        .filter(d => d.isDirectory && d.getPath.getName.contains("="))
+      dirs.flatMap { d =>
+        // the dirname is hive-escaped: the value is past the FIRST '=',
+        // unescaped, so values containing ':' or '=' read back as written
+        val dn = d.getPath.getName
+        val value = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+          .unescapePathName(dn.substring(dn.indexOf('=') + 1))
+        Rebalance.dataFiles(fs, d.getPath).map(f => (db, t, value, f))
+      }.sortBy { case (_, _, value, f) => (value, f.getPath.getName) }
     }
-
-  /** Parts views exist-on-demand for interactive sessions that never
-    * called [[publish]] — published once when missing (the per-file
-    * footer cost amortizes: the views then exist, so later listings skip
-    * this), and re-published when a side whose snapshot was EMPTY now has
-    * a part (directory probe, no footer reads) — so a snapshot pinned
-    * before the first insert, or before a DETACH populated the detached
-    * side, repopulates on the next listing. Refresh beyond that stays on
-    * the publish calls.
-    */
-  /** The metadata-view freshness gate — dirty flag, cross-instance
-    * ownership, existence — in ONE place (the parts twin is
-    * [[ensurePartsViews]]); every reader of the cheap views calls this.
-    */
-  private def ensureCatalogViews(): Unit =
-    if (catalogViewsDirty || !ownsSnapshot("catalog") ||
-        !spark.catalog.tableExists("system.tables"))
-      publishCatalogViews()
-
-  private def ensurePartsViews(): Unit =
-    if (!spark.catalog.tableExists("system.parts") ||
-        !spark.catalog.tableExists("system.detached_parts") ||
-        partsViewsDirty || !ownsSnapshot("parts") ||
-        (liveSnapshotEmpty && anyPartAt("")))
-      publishPartsViews()
+    val seen = footerRows.getOrElse(sub, Map.empty)
+    val counted = files.map { case (_, _, _, f) =>
+      val key = (f.getPath.toString, f.getLen, f.getModificationTime)
+      key -> seen.getOrElse(key, Rebalance.footerRows(conf, f.getPath))
+    }
+    footerRows(sub) = counted.toMap
+    files.zip(counted).map { case ((db, t, value, f), (_, rows)) =>
+      Row(db, t, value, f.getPath.getName, rows, 1, f.getLen, "default",
+        new java.sql.Timestamp(f.getModificationTime))
+    }
+  }
 
   /** CH's interactive introspection statements, answered like a server
     * would: `SHOW DATABASES`, `SHOW TABLES [FROM db] [LIKE '...']`,
+    * `SHOW DICTIONARIES` (each read from its [[systemTable]]),
     * `DESC[RIBE] [TABLE] t` (declared column order, CH's five-column
-    * shape), `EXISTS [TABLE] t` (one `result` row, 0 for unknown names —
-    * CH returns 0, not an error), and `SHOW CREATE TABLE t` (one
-    * `statement` row of re-rendered canonical DDL — [[ChDdl.render]],
-    * whose output reparses to the identical descriptor). Returns None for
-    * anything else so [[runQuery]] falls through to the SELECT path —
-    * including DESCRIBE / SHOW CREATE of names this replay does not own
-    * but the Spark catalog does (system.*, externally bound tables):
-    * those fall through to Spark's native statements. Two deliberate
-    * deviations from a server: the unqualified `SHOW TABLES` lists every
-    * database (this engine has no USE statement, so there is no "current"
-    * database to scope to), and only the cheap metadata views refresh
-    * here — parts views are created when missing (and re-created while a
-    * zero-parts snapshot is the only one, so pre-insert pins repopulate)
-    * but otherwise rebuild only on [[publish]] / [[publishSystemTables]]
-    * (they cost a footer read per data file, which a name listing must
-    * not pay).
+    * shape; a `system.*` name describes its table's schema), `EXISTS
+    * [TABLE] t` (one `result` row, 0 for unknown names — CH returns 0,
+    * not an error), and `SHOW CREATE TABLE t` (one `statement` row of
+    * re-rendered canonical DDL — [[ChDdl.render]], whose output reparses
+    * to the identical descriptor). Returns None for anything else so
+    * [[runQuery]] falls through to the SELECT path — including DESCRIBE /
+    * SHOW CREATE of names this replay does not own but the Spark catalog
+    * does (externally bound tables): those fall through to Spark's native
+    * statements. One deliberate deviation from a server: the unqualified
+    * `SHOW TABLES` lists every database (this engine has no USE
+    * statement, so there is no "current" database to scope to).
     */
   def interactive(sql: String): Option[DataFrame] = {
     import spark.implicits._
@@ -855,6 +609,8 @@ final class ChReplay(spark: SparkSession, warehouseDir: String) {
     def known(t: String): Boolean = declaredCols(t).isDefined
     def catalogHas(t: String): Boolean =
       try spark.catalog.tableExists(t) catch { case _: Exception => false }
+    def system(t: String): Option[DataFrame] =
+      if (t.toLowerCase.startsWith("system.")) systemTable(t.substring(7)) else None
     def descriptor(t: String): CreateTable =
       tables.getOrElse(t, aliasDefs.getOrElse(t, tables.getOrElse(resolve(t),
         sys.error(s"unknown table $t (known: $knownNames)"))))
@@ -886,19 +642,11 @@ final class ChReplay(spark: SparkSession, warehouseDir: String) {
       }
       sb.toString
     }
-    def likeLit(p: String): String = qlit(sparkLikePattern(chUnescape(p)))
-    // one assembly for all three name listings (db filter + CH LIKE);
-    // `parts` gates ensurePartsViews — a dictionary listing must never pay
-    // the parts-view probes
-    def listing(view: String, db: String, like: String,
-        parts: Boolean = true): DataFrame = {
-      // a steady-state SHOW must not pay 7 view replacements
-      ensureCatalogViews()
-      if (parts) ensurePartsViews()
-      val conds = Option(db).map(d => s"database = ${qlit(d)}").toSeq ++
-        Option(like).map(p => s"name LIKE ${likeLit(p)}").toSeq
-      val wh = if (conds.isEmpty) "" else conds.mkString(" WHERE ", " AND ", "")
-      spark.sql(s"SELECT name FROM system.$view$wh ORDER BY name")
+    // one assembly for all three name listings (db filter + CH LIKE)
+    def listing(table: String, db: String, like: String): DataFrame = {
+      val conds = Option(db).map(col("database") === _).toSeq ++
+        Option(like).map(p => col("name").like(sparkLikePattern(chUnescape(p)))).toSeq
+      conds.foldLeft(systemTable(table).get)(_ where _).select("name").orderBy("name")
     }
     def describe(cols: Seq[Col]): DataFrame =
       cols.map(c => (c.name, c.chType,
@@ -906,16 +654,10 @@ final class ChReplay(spark: SparkSession, warehouseDir: String) {
           c.comment.getOrElse("")))
         .toDF("name", "type", "default_type", "default_expression", "comment")
     s match {
-      // the DATABASE and TABLE listings ensure parts views (they are the
-      // table-shaped introspection surface — system.parts must be
-      // queryable after them; steady-state cost is two catalog existence
-      // checks, the live-side probe only while a pre-insert pin waits).
-      // SHOW DICTIONARIES reads dictionary metadata only and skips it.
       case showDb(like) => Some(listing("databases", null, like))
       case showTbl(db, like) => Some(listing("tables", db, like))
-      case showDict(db, like) => Some(listing("dictionaries", db, like, parts = false))
+      case showDict(db, like) => Some(listing("dictionaries", db, like))
       case desc(kind, t) =>
-        ensureSystemFor(t)
         Option(kind).map(_.toUpperCase) match {
           case Some("DICTIONARY") =>
             Some(describe(dictDdls.getOrElse(t, sys.error(
@@ -926,12 +668,13 @@ final class ChReplay(spark: SparkSession, warehouseDir: String) {
               s"unknown view $t (known: ${
                 mvDdls.keys.toSeq.sorted.mkString(", ")})")).cols))
           case _ =>
-            if (!known(t) && catalogHas(t)) None // native DESCRIBE answers
-            else Some(describe(declaredCols(t).getOrElse(
+            val cols = declaredCols(t)
+              .orElse(system(t).map(_.schema.map(f => Col(f.name, f.dataType.sql))))
+            if (cols.isEmpty && catalogHas(t)) None // native DESCRIBE answers
+            else Some(describe(cols.getOrElse(
               sys.error(s"unknown table $t (known: $knownNames)"))))
         }
       case existsRe(kind, t) =>
-        ensureSystemFor(t)
         // CH's kind-qualified EXISTS answers for that kind only
         val exists = Option(kind).map(_.toUpperCase) match {
           case Some("DICTIONARY") => dictDdls.contains(t)
@@ -940,11 +683,10 @@ final class ChReplay(spark: SparkSession, warehouseDir: String) {
           // materialized view is a VIEW to CH here, and EXISTS VIEW = 1
           // must imply SHOW CREATE VIEW succeeds
           case Some("VIEW") => mvDdls.contains(t)
-          case _ => known(t) || catalogHas(t)
+          case _ => known(t) || system(t).isDefined || catalogHas(t)
         }
         Some(Seq(if (exists) 1 else 0).toDF("result"))
       case showCreate(t) =>
-        ensureSystemFor(t)
         if (mvDdls.contains(t))
           Some(Seq(ChDdl.render(mvDdls(t))).toDF("statement"))
         else if (dictDdls.contains(t)) // CH answers generically here too
@@ -973,25 +715,15 @@ final class ChReplay(spark: SparkSession, warehouseDir: String) {
     }
   }
 
-  /** Make a `system.*` name introspectable before DESCRIBE/EXISTS/SHOW
-    * CREATE consult the catalog — a fresh session that never published
-    * would otherwise report system tables unknown (CH's always exist).
-    */
-  private def ensureSystemFor(t: String): Unit =
-    if (t.toLowerCase.startsWith("system.")) {
-      ensureCatalogViews()
-      ensurePartsViews()
-    }
-
   /** Run one statement of the scripts (or an interactive user's): CH's
     * introspection statements answer through [[interactive]]; otherwise
-    * `cluster(...)` table functions read the local table, a SELECT over
-    * the `system.*` views refreshes them first, the literal
+    * `cluster(...)` table functions read the local table, the literal
     * `substitutions` apply (the scripts' capture-day literals mapped onto
     * the replay's ingested days), and the text runs through the dialect
     * front door ([[ChSql.run]]) with this replay's scope: every clause
     * reads a [[bind]]ing (under its own name or a Distributed alias of
-    * it) before the catalog, `SAMPLE` reads each table's declared SAMPLE
+    * it) or a `system.*` table the text names ([[systemTable]], built
+    * now) before the catalog, `SAMPLE` reads each table's declared SAMPLE
     * BY key, and `FROM t FINAL` reads the backing [[StateTable.merged]].
     */
   def runQuery(sql: String, substitutions: Map[String, String] = Map.empty): DataFrame = {
@@ -1000,7 +732,7 @@ final class ChReplay(spark: SparkSession, warehouseDir: String) {
       case None =>
     }
     // CH cluster table functions (ref data_rebalance.py:116-205): on the
-    // 1-shard topology system.clusters publishes, cluster(c, db, t) and
+    // 1-shard topology system.clusters lists, cluster(c, db, t) and
     // clusterAllReplicas(c, db, t) ARE the local table. The `_shard_num`
     // VIRTUAL column materializes only when the query names it — CH
     // excludes virtuals from SELECT *, so an unconditional injection
@@ -1011,7 +743,7 @@ final class ChReplay(spark: SparkSession, warehouseDir: String) {
     // statements never combine the two.) Matching runs on the string-
     // MASKED text (house rule for every regex rewrite: a literal
     // containing "cluster('x', a, b)" must not trigger). Rewritten FIRST
-    // so the system-view freshness gates below see the dotted names.
+    // so the system-table scan below sees the dotted names.
     val needsShardNum = "(?i)\\b_shard_num\\b".r
       .findFirstIn(ChSql.maskStrings(sql)).isDefined
     val sql0 = ChSql.replaceOnMasked(sql, ChReplay.ClusterFnRe) { m =>
@@ -1019,17 +751,9 @@ final class ChReplay(spark: SparkSession, warehouseDir: String) {
       if (needsShardNum) s"(SELECT CAST(1 AS INT) AS _shard_num, * FROM $target)"
       else target
     }
-    // a SELECT that reads the parts views must see the effects of every
-    // prior part-moving statement, same as the listings do
-    if (ChReplay.SystemPartsRe.findFirstIn(sql0).isDefined) ensurePartsViews()
-    // and one reading the metadata views must see every CREATE/DROP —
-    // republish only when a DDL statement ran since the last publish (or
-    // this instance never published): the rebalance tool POLLS
-    // system.processes in a loop, and steady-state polls must not pay 7
-    // view replacements each (the parts views' dirty-flag discipline,
-    // applied to the cheap views too)
-    if (ChReplay.SystemCatalogRe.findFirstIn(sql0).isDefined)
-      ensureCatalogViews()
+    // only the system tables the text names are built (parts lists files)
+    val system = ChReplay.SystemRe.findAllMatchIn(sql0).map(_.group(1).toLowerCase)
+      .distinct.flatMap(n => systemTable(n).map(s"system.$n" -> _))
     val q = substitutions.foldLeft(sql0) { case (t, (from, to)) => t.replace(from, to) }
     // like CH, FINAL on a name with no backing state table is refused
     // rather than silently un-merged
@@ -1038,7 +762,7 @@ final class ChReplay(spark: SparkSession, warehouseDir: String) {
       name => stateTables.getOrElse(resolve(name), sys.error(
         s"$name FINAL: FINAL needs an AggregatingMergeTree-backed table " +
           s"(known: ${stateTables.keys.mkString(", ")})")).merged()),
-      bindings.toMap ++ aliases.keys.flatMap(a => bindings.get(resolve(a)).map(a -> _)))
+      bindings.toMap ++ aliases.keys.flatMap(a => bindings.get(resolve(a)).map(a -> _)) ++ system)
   }
 
   // ---- builders ------------------------------------------------------------
@@ -1191,18 +915,16 @@ final class ChReplay(spark: SparkSession, warehouseDir: String) {
       // in STATEMENT order (CH runs subcommands sequentially): `ATTACH
       // PARTITION 'a', DROP PARTITION 'a'` must attach then drop — grouped
       // execution would leave 'a' live
-      var moved = false
-      try a.partitionOps.foreach {
-        case ChDdl.DropPartition(v) => moved |= st.dropPartition(v)
-        case ChDdl.DetachPartition(v) => moved |= st.detachPartition(v)
-        case ChDdl.AttachPartition(v) => moved |= st.attachPartition(v)
-        case ChDdl.DropDetachedPartition(v) => moved |= st.dropDetachedPartition(v)
+      a.partitionOps.foreach {
+        case ChDdl.DropPartition(v) => st.dropPartition(v)
+        case ChDdl.DetachPartition(v) => st.detachPartition(v)
+        case ChDdl.AttachPartition(v) => st.attachPartition(v)
+        case ChDdl.DropDetachedPartition(v) => st.dropDetachedPartition(v)
         // PART granularity (the rebalance tool's statements) — these
-        // ERROR on unknown names (CH parity), so reaching past one means
-        // a part moved
-        case ChDdl.DetachPart(p) => st.detachPart(p); moved = true
-        case ChDdl.AttachPart(p) => st.attachPart(p); moved = true
-        case ChDdl.DropDetachedPart(p) => st.dropDetachedPart(p); moved = true
+        // ERROR on unknown names (CH parity)
+        case ChDdl.DetachPart(p) => st.detachPart(p)
+        case ChDdl.AttachPart(p) => st.attachPart(p)
+        case ChDdl.DropDetachedPart(p) => st.dropDetachedPart(p)
         case ChDdl.FetchPart(p, from) =>
           // CH's FROM is the donor's zookeeper path
           // `/clickhouse/tables/{layer}-{shard}/{db}.{table}` (ref
@@ -1213,24 +935,16 @@ final class ChReplay(spark: SparkSession, warehouseDir: String) {
             sys.error(s"FETCH PART FROM '$from': the path's last segment " +
               s"('$donorName') names no table with storage — known: " +
               stateTables.keys.toSeq.sorted.mkString(", ")))
-          st.fetchPart(donor.path, p); moved = true
-      } catch {
-        // an op that fails MID-statement leaves the earlier ops' effects
-        // on disk — they must not stay invisible to the snapshot
-        case e: Throwable => partsViewsDirty = true; throw e
+          st.fetchPart(donor.path, p)
       }
-      if (moved) partsViewsDirty = true
-      a.deleteWhere.foreach { cond =>
-        try st.deleteWhere(org.apache.spark.sql.functions.expr(ChSql(cond))): Unit
-        finally partsViewsDirty = true
-      }
+      a.deleteWhere.foreach(cond =>
+        st.deleteWhere(org.apache.spark.sql.functions.expr(ChSql(cond))): Unit)
       if (a.updateSet.nonEmpty)
-        try st.updateWhere(
+        st.updateWhere(
           a.updateSet.map { case (c, e) =>
             c -> org.apache.spark.sql.functions.expr(ChSql(e)) },
           org.apache.spark.sql.functions.expr(ChSql(
             a.updateWhere.getOrElse("true"))))
-        finally partsViewsDirty = true
     }
   }
 }

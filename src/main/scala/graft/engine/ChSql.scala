@@ -1171,17 +1171,17 @@ object ChSql {
     (a.left, a.right, using.map(c => ("=", column(a.left, c), column(a.right, c))) ++ on)
   }
 
-  /** `plan`'s first `nLeft` columns (the left side's), then the right
-    * side's, less those that share a left column's name: those stay
-    * reachable by qualifier only (`r.k`), the way Spark hides a USING
-    * join's right keys, so an unqualified name reads the left side as in
-    * ClickHouse.
+  /** `plan`'s output with only the first column of each name shown (the
+    * left side's, in a join's output); every later column of that name
+    * stays reachable by qualifier only (`r.k`), the way Spark hides a
+    * USING join's right keys, so an unqualified name reads the left side
+    * as in ClickHouse — also when an earlier marked join's hidden right
+    * column came back into this join's left side through its condition.
     */
-  private[engine] def preferLeft(plan: LogicalPlan, nLeft: Int): LogicalPlan = {
-    val (left, right) = plan.output.splitAt(nLeft)
-    val names = left.map(_.name.toLowerCase).toSet
-    val (hidden, shown) = right.partition(a => names(a.name.toLowerCase))
-    val p = Project(left ++ shown, plan)
+  private[engine] def preferLeft(plan: LogicalPlan): LogicalPlan = {
+    val seen = mutable.HashSet.empty[String]
+    val (shown, hidden) = plan.output.partition(a => seen.add(a.name.toLowerCase))
+    val p = Project(shown, plan)
     p.setTagValue(Project.hiddenOutputTag, hidden.map(_.markAsQualifiedAccessOnly()))
     p
   }

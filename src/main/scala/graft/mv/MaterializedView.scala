@@ -68,10 +68,10 @@ final class MaterializedView(
     * (the generators' ~2000-row/10s cadence, ref make_user_action_001.py:50-62).
     * The transform runs inside foreachBatch so dictionary broadcasts are
     * re-resolved per batch (dictionary LIFETIME refresh, SURVEY §2.8 ST4).
+    * With a `checkpoint`, batches go through [[processBatchExactlyOnce]].
     */
   def attach(stream: DataFrame, trigger: Trigger = Trigger.ProcessingTime("10 seconds"),
-      checkpoint: Option[String] = None,
-      onBatch: () => Unit = () => ()): StreamingQuery = {
+      checkpoint: Option[String] = None): StreamingQuery = {
     // with a checkpoint, batch ids are stable across restarts — use the
     // exactly-once path so a crash-and-replay can't double-ingest; without
     // one, ids restart at 0 on every attach and must not be deduped on
@@ -80,12 +80,8 @@ final class MaterializedView(
       .queryName(name)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        // onBatch runs even when the exactly-once ledger skips a replayed
-        // id — the owner's invalidation must err toward freshness
-        try {
-          if (exactlyOnce) { processBatchExactlyOnce(batch, id); () }
-          else processBatch(batch)
-        } finally onBatch()
+        if (exactlyOnce) { processBatchExactlyOnce(batch, id); () }
+        else processBatch(batch)
       }
     checkpoint.foreach(c => w = w.option("checkpointLocation", c))
     w.start()

@@ -902,23 +902,23 @@ class ChDdlReplaySpec extends SparkSpec {
         .select(org.apache.spark.sql.functions.to_date(col("day_s")).as("day"),
           col("k"), col("v")))
     replay.publish()
-    val t = spark.sql(
+    val t = replay.runQuery(
       "SELECT engine FROM system.tables WHERE database = 'dws' AND name = 'sys_local'")
       .head().getString(0)
     assert(t == "AggregatingMergeTree")
-    assert(spark.sql(
+    assert(replay.runQuery(
       "SELECT engine FROM system.tables WHERE name = 'sys_dis'")
       .head().getString(0) == "Distributed")
-    assert(spark.sql("SELECT name FROM system.databases").collect()
+    assert(replay.runQuery("SELECT name FROM system.databases").collect()
       .map(_.getString(0)).toSet.contains("dws"))
-    val cols = spark.sql(
+    val cols = replay.runQuery(
       """SELECT name, type FROM system.columns
         |WHERE database = 'dws' AND table = 'sys_local' ORDER BY name""".stripMargin)
       .collect().map(r => (r.getString(0), r.getString(1))).toSeq
     assert(cols.map(_._1) == Seq("day", "k", "v"))
     // per-PART granularity (one row per parquet data file, as in CH) — the
     // canonical operational aggregation over it must work verbatim
-    val parts = spark.sql(
+    val parts = replay.runQuery(
       """SELECT partition, sum(rows) AS rows, sum(bytes_on_disk) AS bytes
         |FROM system.parts WHERE table = 'sys_local'
         |GROUP BY partition ORDER BY partition""".stripMargin).collect()
@@ -929,11 +929,10 @@ class ChDdlReplaySpec extends SparkSpec {
     // an UNQUALIFIED table name (ENGINE=Null admits these) must publish
     // under CH's `default` db instead of aborting with a MatchError
     replay.executeScript("create table bare_null (k UInt64) engine=Null;")
-    replay.publishSystemTables()
-    assert(spark.sql(
+    assert(replay.runQuery(
       "SELECT engine FROM system.tables WHERE database = 'default' AND name = 'bare_null'")
       .head().getString(0) == "Null")
-    assert(!spark.sql("SELECT name FROM system.databases").collect()
+    assert(!replay.runQuery("SELECT name FROM system.databases").collect()
       .map(_.getString(0)).contains("bare_null"))
   }
 
@@ -959,8 +958,7 @@ class ChDdlReplaySpec extends SparkSpec {
     // (part_count, state rows, bytes) per partition, through the SQL surface
     // an operator actually types (ref data_rebalance.py:116-205's shape)
     def partsBy(view: String): Map[String, (Long, Long, Long)] = {
-      replay.publishSystemTables()
-      spark.sql(
+      replay.runQuery(
         s"""SELECT partition, count(*) AS parts, sum(rows) AS rows,
            |       sum(bytes_on_disk) AS bytes
            |FROM system.$view WHERE table = 'sp_local'
@@ -1070,9 +1068,7 @@ class ChDdlReplaySpec extends SparkSpec {
       .getString(0).contains("ENGINE = Distributed(c, dws, ia_local, rand())"))
     intercept[RuntimeException](replay.runQuery("SHOW CREATE TABLE dws.nope"))
 
-    // names the replay does not own but the Spark catalog does fall
-    // through to the NATIVE statements instead of erroring
-    replay.publishSystemTables()
+    // system tables are introspectable like the replay's own names
     assert(replay.runQuery("DESCRIBE TABLE system.parts").collect()
       .map(_.getString(0)).contains("partition"))
     assert(replay.runQuery("EXISTS TABLE system.parts").head().getInt(0) == 1)
@@ -1126,7 +1122,7 @@ class ChDdlReplaySpec extends SparkSpec {
     assert(mvDdl.startsWith("CREATE MATERIALIZED VIEW dws.ia_mv TO dws.ia_local"),
       s"got:\n$mvDdl")
     assert(ChDdl.parseStatement(mvDdl).isInstanceOf[ChDdl.CreateMaterializedView])
-    assert(spark.sql(
+    assert(replay.runQuery(
       "SELECT source, layout, lifetime_max FROM system.dictionaries WHERE name = 'ia_dict'")
       .collect().map(r => (r.getString(0), r.getString(1), r.getInt(2))).toSeq ==
       Seq(("dws.ia_src", "FLAT", 2)))
@@ -1136,10 +1132,10 @@ class ChDdlReplaySpec extends SparkSpec {
     val shown = replay.runQuery("SHOW TABLES FROM dws").collect()
       .map(_.getString(0)).toSet
     assert(shown.contains("ia_mv") && shown.contains("ia_dict"), s"got $shown")
-    assert(spark.sql(
+    assert(replay.runQuery(
       "SELECT engine FROM system.tables WHERE name = 'ia_mv'")
       .head().getString(0) == "MaterializedView")
-    assert(spark.sql(
+    assert(replay.runQuery(
       "SELECT engine FROM system.tables WHERE name = 'ia_dict'")
       .head().getString(0) == "Dictionary")
 
@@ -1199,25 +1195,24 @@ class ChDdlReplaySpec extends SparkSpec {
     assert(!replay.runQuery("SHOW TABLES FROM dws").collect()
       .map(_.getString(0)).contains("ia_local"))
     assert(!new java.io.File(iaPath).exists(), "DROP TABLE must drop storage")
-    // a parts read through the replay consumes the statement-dirty flag
+    // a parts read lists the storage as it is now
     assert(replay.runQuery(
       "SELECT count(*) FROM system.parts WHERE table = 'ia_local'")
       .head().getLong(0) == 0L,
-      "a dropped table's parts must leave the published snapshot")
+      "a dropped table's parts must leave system.parts")
     // a trailing lone escape is LIKE's own well-formed error — not a
     // corrupted listing statement
     intercept[org.apache.spark.sql.AnalysisException](
       replay.runQuery("SHOW TABLES FROM dws LIKE '%\\\\'").collect())
 
-    // a partition value containing a backslash survives the VALUES views
+    // a partition value containing a backslash reads back as written
     import spark.implicits._
     val bst = new graft.mv.StateTable(spark, tmpDir("ia-esc") + "/bs",
       keys = Seq("grp", "k"), partitionCol = "grp",
       metrics = Seq(graft.mv.CountMetric("cnt")))
     bst.appendBatch(Seq(("a\\b", 1L)).toDF("grp", "k"))
     replay.stateTables("dws.bs_local") = bst
-    replay.publishSystemTables()
-    val pv = spark.sql("SELECT partition FROM system.parts WHERE table = 'bs_local'")
+    val pv = replay.runQuery("SELECT partition FROM system.parts WHERE table = 'bs_local'")
       .collect().map(_.getString(0)).toSeq
     assert(pv == Seq("a\\b"), s"backslash partition value corrupted: $pv")
 
@@ -1229,14 +1224,12 @@ class ChDdlReplaySpec extends SparkSpec {
     intercept[RuntimeException](replay.runQuery("SHOW TABLES IN dws"))
 
     // a FRESH replay that never published can still introspect system
-    // tables (CH's always exist) — with correctly TYPED empty parts views
-    spark.sql("DROP VIEW IF EXISTS system.parts")
-    spark.sql("DROP VIEW IF EXISTS system.detached_parts")
+    // tables (CH's always exist) — with a correctly TYPED empty parts table
     val fresh = new ChReplay(spark, ChReplay.scratchWarehouse("graft-ia2"))
     assert(fresh.runQuery("EXISTS TABLE system.parts").head().getInt(0) == 1)
     assert(fresh.runQuery("DESCRIBE TABLE system.parts").collect()
       .map(_.getString(0)).contains("partition"))
-    assert(spark.sql("SELECT sum(rows) AS r FROM system.parts").schema("r")
+    assert(fresh.runQuery("SELECT sum(rows) AS r FROM system.parts").schema("r")
       .dataType == org.apache.spark.sql.types.LongType,
       "empty parts view must keep the populated form's BIGINT rows")
 
@@ -1247,11 +1240,9 @@ class ChDdlReplaySpec extends SparkSpec {
     assert(replay.runQuery("SHOW TABLES FROM dws LIKE 'ia\\glocal'").collect()
       .isEmpty)
 
-    // an empty parts snapshot pinned BEFORE the first insert republishes
-    // once parts exist — a listing must not read plausible-looking
-    // emptiness over live data forever
-    spark.sql("DROP VIEW IF EXISTS system.parts")
-    spark.sql("DROP VIEW IF EXISTS system.detached_parts")
+    // parts read empty BEFORE the first insert list the first part once
+    // it exists — a read must not see plausible-looking emptiness over
+    // live data
     val r3 = new ChReplay(spark, ChReplay.scratchWarehouse("graft-ia3"))
     r3.executeScript(
       """create table dws.ps_local (
@@ -1261,36 +1252,35 @@ class ChDdlReplaySpec extends SparkSpec {
         |) engine=AggregatingMergeTree()
         |PARTITION BY day ORDER BY (day, k);""".stripMargin)
     assert(r3.runQuery("SHOW TABLES FROM dws").collect()
-      .map(_.getString(0)).toSeq == Seq("ps_local")) // pins the empty snapshot
-    def psParts(): Long = spark.sql(
+      .map(_.getString(0)).toSeq == Seq("ps_local"))
+    def psParts(): Long = r3.runQuery(
       "SELECT count(*) FROM system.parts WHERE table = 'ps_local'").head().getLong(0)
     assert(psParts() == 0L)
     r3.stateTables("dws.ps_local").appendBatch(
       Seq(("2024-01-01", 1L, 10L)).toDF("day_s", "k", "v")
         .select(org.apache.spark.sql.functions.to_date(col("day_s")).as("day"),
           col("k"), col("v")))
-    r3.runQuery("SHOW TABLES FROM dws").collect() // any listing re-ensures
-    assert(psParts() == 1L, "the pinned-empty snapshot must republish once parts exist")
+    r3.runQuery("SHOW TABLES FROM dws").collect()
+    assert(psParts() == 1L, "parts read empty must list the first part once it exists")
 
-    // BOTH sides self-repair through listings alone: a DETACH after the
-    // detached side was pinned empty surfaces in detached_parts on the
-    // next listing, the now-empty live side reads 0, and an ATTACH then
-    // repopulates the live side the same way — no explicit publish calls
-    def psDetached(): Long = spark.sql(
+    // BOTH sides follow the storage: a DETACH after the detached side read
+    // empty surfaces in detached_parts, the now-empty live side reads 0,
+    // and an ATTACH then repopulates the live side — no publish calls
+    def psDetached(): Long = r3.runQuery(
       "SELECT count(*) FROM system.detached_parts WHERE table = 'ps_local'")
       .head().getLong(0)
     r3.execute(ChDdl.parseStatement(
       "ALTER TABLE dws.ps_local DETACH PARTITION '2024-01-01'"))
-    r3.runQuery("SHOW TABLES FROM dws").collect() // detached side was pinned empty
+    r3.runQuery("SHOW TABLES FROM dws").collect()
     assert(psParts() == 0L && psDetached() == 1L,
-      "a detach after an empty detached pin must surface on the next listing")
-    r3.runQuery("SHOW TABLES FROM dws").collect() // waiting listing: stays consistent
+      "a detach after an empty detached read must surface on the next read")
+    r3.runQuery("SHOW TABLES FROM dws").collect()
     assert(psParts() == 0L && psDetached() == 1L)
     r3.execute(ChDdl.parseStatement(
       "ALTER TABLE dws.ps_local ATTACH PARTITION '2024-01-01'"))
-    r3.runQuery("SHOW TABLES FROM dws").collect() // live part reappeared -> republish
+    r3.runQuery("SHOW TABLES FROM dws").collect()
     assert(psParts() == 1L && psDetached() == 0L,
-      "a detached-only pin must repopulate once live parts reappear")
+      "a detached-only read must repopulate once live parts reappear")
   }
 
   test("SELECT ... FROM t FINAL reads merge-debt-free (simple + state columns)") {
@@ -1418,20 +1408,19 @@ class ChDdlReplaySpec extends SparkSpec {
       Seq(("2024-01-01", 1L, 10L)).toDF("day_s", "k", "v")
         .select(org.apache.spark.sql.functions.to_date(col("day_s")).as("day"),
           col("k"), col("v")))
-    replay.publishSystemTables() // pin a non-empty snapshot
     def partRows(): Long = replay.runQuery(
       "SELECT sum(rows) AS r FROM system.parts WHERE table = 'fr_local'")
       .head().getAs[Any]("r").toString.toLong
     assert(partRows() == 1L)
-    // an INSERT INTO a non-empty state table dirties the pinned snapshot —
-    // the next parts SELECT must see the new part WITHOUT a publish call
-    // (CH's system.parts is always current)
+    // an INSERT INTO a non-empty state table — the next parts SELECT must
+    // see the new part WITHOUT a publish call (CH's system.parts is always
+    // current)
     replay.execute(parseStatement(
       """INSERT INTO dws.fr_local (day, k, v)
         |SELECT toDate('2024-01-02') AS day, 2 AS k, toUInt64(5) AS v
         |FROM system.one""".stripMargin))
     assert(partRows() == 2L, "insert-added part invisible to system.parts")
-    // the MV-fired append path dirties it too
+    // the MV-fired append path too
     replay.executeScript(
       """create table ods.fr_src (day Date, k UInt64, v UInt64) engine=Null;
         |create materialized view dws.fr_mv to dws.fr_local
@@ -1443,8 +1432,7 @@ class ChDdlReplaySpec extends SparkSpec {
           col("k"), col("v")))
     assert(partRows() == 3L, "MV-fired append invisible to system.parts")
     // the STREAMING twin: a micro-batch append through attachStreams
-    // must dirty the snapshot like insert() does (the foreachBatch
-    // callback runs on the stream's thread — volatile flag)
+    // (the foreachBatch callback runs on the stream's thread)
     val srcDir = ChReplay.scratchWarehouse("graft-fr-src")
     Seq(("2024-01-04", 4L, 2L)).toDF("day_s", "k", "v")
       .select(org.apache.spark.sql.functions.to_date(col("day_s")).as("day"),
@@ -1458,8 +1446,8 @@ class ChDdlReplaySpec extends SparkSpec {
     try qs.foreach(_.awaitTermination(60000): Unit) finally qs.foreach(_.stop())
     assert(partRows() == 4L, "streamed micro-batch invisible to system.parts")
 
-    // a CREATE after the snapshot must reach a plain SELECT on the
-    // metadata views too (no SHOW/DESC/publish in between)
+    // a CREATE after the first read must reach a plain SELECT on the
+    // metadata tables too (no SHOW/DESC/publish in between)
     replay.executeScript("create table dws.fr_late (k UInt64) engine=Null;")
     assert(replay.runQuery(
       "SELECT engine FROM system.tables WHERE name = 'fr_late'")
@@ -1467,6 +1455,50 @@ class ChDdlReplaySpec extends SparkSpec {
     assert(replay.runQuery(
       "SELECT count(*) AS c FROM system.columns WHERE table = 'fr_late'")
       .head().getLong(0) == 1L)
+  }
+
+  test("system.parts lists direct StateTable writes; each replay lists only its own objects") {
+    val replay = new ChReplay(spark, ChReplay.scratchWarehouse("graft-sysdirect"))
+    replay.executeScript(
+      """create table dws.sd_local (
+        | day Date,
+        | k UInt64,
+        | v SimpleAggregateFunction(sum, UInt64)
+        |) engine=AggregatingMergeTree()
+        |PARTITION BY day ORDER BY (day, k);""".stripMargin)
+    import spark.implicits._
+    def batch(day: String) = Seq((day, 1L, 10L)).toDF("day_s", "k", "v")
+      .select(org.apache.spark.sql.functions.to_date(col("day_s")).as("day"),
+        col("k"), col("v"))
+    val st = replay.stateTables("dws.sd_local")
+    def parts(): Long = replay.runQuery(
+      "SELECT count(*) FROM system.parts WHERE table = 'sd_local'").head().getLong(0)
+    // the data files under the partition directories, one part each
+    def files(): Long = {
+      val fs = org.apache.hadoop.fs.FileSystem.get(
+        new java.net.URI(st.path), spark.sparkContext.hadoopConfiguration)
+      fs.listStatus(new org.apache.hadoop.fs.Path(st.path)).toSeq
+        .filter(d => d.isDirectory && d.getPath.getName.contains("="))
+        .map(d => graft.engine.Rebalance.dataFiles(fs, d.getPath).length.toLong).sum
+    }
+    st.appendBatch(batch("2024-01-01"))
+    assert(parts() == 1L && files() == 1L)
+    st.appendBatch(batch("2024-01-02"))
+    st.appendBatch(batch("2024-01-02"))
+    assert(files() == 3L)
+    assert(parts() == files(), "direct appends invisible to system.parts")
+    st.compact()
+    assert(files() == 2L)
+    assert(parts() == files(), "a compaction invisible to system.parts")
+
+    // two replays on one session: each lists its own objects, whichever reads first
+    val other = new ChReplay(spark, ChReplay.scratchWarehouse("graft-sysdirect2"))
+    other.executeScript("create table dws.sd_other (k UInt64) engine=Null;")
+    def listed(r: ChReplay): Set[String] =
+      r.runQuery("SELECT name FROM system.tables WHERE database = 'dws'")
+        .collect().map(_.getString(0)).toSet
+    assert(listed(replay) == Set("sd_local") && listed(other) == Set("sd_other"))
+    assert(listed(other) == Set("sd_other") && listed(replay) == Set("sd_local"))
   }
 
   test("Distributed descriptor without a parsable target still lists as Distributed") {
@@ -1503,10 +1535,6 @@ class ChDdlReplaySpec extends SparkSpec {
     val src = replay.stateTables("dws.rb_src_local")
     src.appendBatch(batch(Seq((1L, 10L), (2L, 5L))))
     src.appendBatch(batch(Seq((3L, 7L))))
-    // direct StateTable appends publish explicitly, as a real ingest
-    // pipeline does (only STATEMENT effects ride the dirty flag) — and a
-    // PRIOR test's replay may own the current system.* snapshots
-    replay.publishSystemTables()
 
     // get_nodes (ref data_rebalance.py:115-118), verbatim template with
     // cluster='cluster' (the metrika.xml topology)

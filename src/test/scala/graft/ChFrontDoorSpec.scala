@@ -178,6 +178,20 @@ class ChFrontDoorSpec extends SparkSpec {
     }
   }
 
+  test("a second marked join whose ON names the first one's hidden right column") {
+    import spark.implicits._
+    Seq((1L, 10L, "e1"), (2L, 5L, "e3")).toDF("k", "ts", "ev")
+      .createOrReplaceTempView("graft_fd_zl")
+    Seq((1L, 10L, "a"), (2L, 4L, "c")).toDF("k", "rts", "rval")
+      .createOrReplaceTempView("graft_fd_zr")
+    Seq((1L, "d1"), (2L, "d2")).toDF("k", "dv").createOrReplaceTempView("graft_fd_zd")
+    val got = ChSql.run(spark,
+      """SELECT k, r.k, r.rval, d.dv FROM graft_fd_zl l
+        |  ASOF LEFT JOIN graft_fd_zr r ON l.k = r.k AND l.ts >= r.rts
+        |  ANY LEFT JOIN graft_fd_zd d ON r.k = d.k ORDER BY k""".stripMargin).collect()
+    assert(got.map(_.toSeq).toSeq == Seq(Seq(1L, 1L, "a", "d1"), Seq(2L, 2L, "c", "d2")))
+  }
+
   test("an ASOF join inside a FROM subquery") {
     register(spark)
     val got = ChSql.run(spark,

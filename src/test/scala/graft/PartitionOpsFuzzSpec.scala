@@ -171,10 +171,8 @@ class PartitionOpsFuzzSpec extends SparkSpec {
               .map(r => String.valueOf(r.get(0)) -> r.getLong(1)).toMap
         assert(got == live.toMap,
           s"seed $seed after $opName: table=$got model=$live detached=$det")
-        // the introspection surface must agree with the model too — read
-        // through runQuery so the statement-dirty flag's repair path is
-        // what keeps the snapshots fresh (appends publish explicitly, as
-        // a real ingest pipeline does)
+        // the introspection surface must agree with the model too, after
+        // statements and direct appends alike
         def names(view: String): Set[String] =
           replay.runQuery(s"SELECT DISTINCT partition FROM system.$view " +
               s"WHERE table = '${tbl.split('.').last}'")
@@ -236,9 +234,6 @@ class PartitionOpsFuzzSpec extends SparkSpec {
               .toDF("slot", "k", "v"))
             live(v) = live.getOrElse(v, 0L) + 2 * base + 3
             wrote = true
-            // direct appends bypass the statement layer — publish, as a
-            // real ingest pipeline does after writing
-            replay.publishSystemTables()
           case 2 =>
             if (live.contains(v)) run(s"OPTIMIZE TABLE $tbl PARTITION '$v' FINAL")
             else if (live.nonEmpty) run(s"OPTIMIZE TABLE $tbl FINAL")
