@@ -17,7 +17,8 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * [[functions.FunctionTable]] — bitmap aggregate family, MinHash, cosine,
   * the ClickHouse-dialect names and the `numbers` / `merge` table
   * functions — resolves in SQL without further setup, as does
-  * `system.one`. Sessions built without the extension call
+  * `system.one`, and a global sort over small AQE stages plans in one
+  * task ([[engine.SmallSort]]). Sessions built without the extension call
   * `functions.ChCompat.register(spark)` instead.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
@@ -26,6 +27,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     functions.FunctionTable.functions.foreach(ext.injectFunction)
     functions.FunctionTable.tableFunctions.foreach(ext.injectTableFunction)
     ext.injectResolutionRule(_ => SystemOne)
+    ext.injectPlannerStrategy(_ => engine.SmallSort)
     // CH-projection-style automatic aggregate routing onto registered state
     // tables (no-op until graft.mv.Projection.register is called). The rule
     // carries ITS session: a plan optimized while another session is

@@ -78,7 +78,7 @@ object ChAnyJoin {
         val moved = AttributeMap(side.output.zip(deduped.output))
         val cond = terms.map { case (_, a, b) => EqualTo(a, b) }.reduce(And)
           .transform { case a: Attribute => moved.getOrElse(a, a) }
-        ChSql.preferLeft(Join(l, r, tpe, Some(cond), j.hint))
+        ChSql.preferLeft(Join(l, r, tpe, Some(cond), j.hint), left)
     }
   }
 }

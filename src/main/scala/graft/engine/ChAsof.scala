@@ -93,6 +93,6 @@ object ChAsof {
     def back(side: LogicalPlan, tag: String) = side.output.zipWithIndex.map { case (a, i) =>
       Alias(byName(s"__$tag$i"), a.name)(qualifier = a.qualifier)
     }
-    ChSql.preferLeft(Project(back(left, "l") ++ back(right, "r"), out))
+    ChSql.preferLeft(Project(back(left, "l") ++ back(right, "r"), out), left)
   }
 }

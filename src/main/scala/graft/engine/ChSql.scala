@@ -1171,18 +1171,26 @@ object ChSql {
     (a.left, a.right, using.map(c => ("=", column(a.left, c), column(a.right, c))) ++ on)
   }
 
-  /** `plan`'s output with only the first column of each name shown (the
-    * left side's, in a join's output); every later column of that name
-    * stays reachable by qualifier only (`r.k`), the way Spark hides a
-    * USING join's right keys, so an unqualified name reads the left side
-    * as in ClickHouse — also when an earlier marked join's hidden right
-    * column came back into this join's left side through its condition.
+  /** A marked join's output `plan` (`left`'s columns first, in order)
+    * with every right column whose name repeats an earlier one hidden:
+    * reachable by qualifier only (`r.k`), the way Spark hides a USING
+    * join's right keys, so an unqualified name reads the left side as in
+    * ClickHouse. The left side's own same-named columns (a plain join's
+    * `a.k`, `b.k`) stay shown; a left column that an earlier marked join
+    * hid, and that came back through this join's condition, is hidden
+    * again.
     */
-  private[engine] def preferLeft(plan: LogicalPlan): LogicalPlan = {
+  private[engine] def preferLeft(plan: LogicalPlan, left: LogicalPlan): LogicalPlan = {
+    val rehidden = left.collect {
+      case p: Project => p.getTagValue(Project.hiddenOutputTag).getOrElse(Nil).map(_.exprId)
+    }.flatten.toSet
+    val own = left.output.map(a => !rehidden(a.exprId)).padTo(plan.output.size, false)
     val seen = mutable.HashSet.empty[String]
-    val (shown, hidden) = plan.output.partition(a => seen.add(a.name.toLowerCase))
-    val p = Project(shown, plan)
-    p.setTagValue(Project.hiddenOutputTag, hidden.map(_.markAsQualifiedAccessOnly()))
+    val (shown, hidden) = plan.output.zip(own).partition { case (a, o) =>
+      seen.add(a.name.toLowerCase) || o
+    }
+    val p = Project(shown.map(_._1), plan)
+    p.setTagValue(Project.hiddenOutputTag, hidden.map(_._1.markAsQualifiedAccessOnly()))
     p
   }
 

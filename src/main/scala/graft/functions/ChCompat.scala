@@ -1,12 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.catalyst.trees.BinaryLike
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
 /** ClickHouse-dialect function names registered as Spark SQL functions, so
@@ -51,7 +48,8 @@ import org.apache.spark.sql.types._
 object ChCompat {
 
   /** Bind the [[FunctionTable]] into a session built without
-    * [[graft.GraftExtensions]], and create CH's one-row `system.one`.
+    * [[graft.GraftExtensions]], create CH's one-row `system.one` and add
+    * [[graft.engine.SmallSort]] to the session's extra strategies (once).
     * Idempotent: a session whose registry already binds the table's last
     * entry to our builder instance (a repeat call, an extensions session,
     * a clone of a registered session) costs one registry lookup. A
@@ -68,6 +66,9 @@ object ChCompat {
         spark.sql("CREATE OR REPLACE VIEW system.one AS SELECT 0 AS dummy")
       }
       graft.LogNoise.silence()
+      val exp = spark.experimental
+      if (!exp.extraStrategies.contains(graft.engine.SmallSort))
+        exp.extraStrategies = exp.extraStrategies :+ graft.engine.SmallSort
       val tables = spark.sessionState.tableFunctionRegistry
       FunctionTable.tableFunctions.foreach { case (id, info, b) => tables.registerFunction(id, info, b) }
       val reg = spark.sessionState.functionRegistry

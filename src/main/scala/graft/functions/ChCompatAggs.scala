@@ -3,8 +3,6 @@ package graft.functions
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
-import org.apache.spark.sql.catalyst.trees.BinaryLike
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
 /** ChCompat's aggregate families: misc aggregates/aliases, the common CH
@@ -15,7 +13,7 @@ import org.apache.spark.sql.types._
   */
 private[functions] object ChCompatAggs {
 
-  import ChCompat.{onlyIf, chFormatToJava, hllState, hllMerge, medianMerged, medianFinalize, stringLit}
+  import ChCompat.{onlyIf, hllState, hllMerge, medianMerged, medianFinalize}
 
   val functions = FunctionTable.define(this) { f =>
     // ---- misc aggregates / aliases ------------------------------------

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData, MapData}
@@ -14,7 +13,7 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 private[functions] object ChCompatArrays {
 
-  import ChCompat.{onlyIf, chFormatToJava, hllState, hllMerge, medianMerged, medianFinalize, stringLit}
+  import ChCompat.hllState
 
   val functions = FunctionTable.define(this) { f =>
     // ---- CH array functions (lambda-first argument order) ------------
@@ -264,7 +263,6 @@ private[functions] object ChCompatArrays {
     def pickIdxOf(lf: LambdaFunction, arr: Expression, first: Boolean): Expression = {
       val tag = if (first) "fi" else "li"
       val acc = lamVar(s"__pi_acc$tag"); val fin = lamVar(s"__pi_fin$tag")
-      val x = lf.arguments.head
       // acc = [lastIndexSeen, foundIndex]; position tracking rides the fold
       val seen = GetArrayItem(acc, Literal(0), failOnError = false)
       val found = GetArrayItem(acc, Literal(1), failOnError = false)
@@ -602,7 +600,7 @@ private[functions] object ChCompatArrays {
   private def arrayShift(shiftLeft: Boolean)(es: Seq[Expression]): Kernel = {
     val name = if (shiftLeft) "arrayShiftLeft" else "arrayShiftRight"
     val (arrType, et) = es.head.dataType match {
-      case a @ ArrayType(et, cn) =>
+      case ArrayType(et, cn) =>
         // a nullable explicit default means NULL can land in the vacated
         // slots — the array type must admit it
         (ArrayType(et, cn || es.drop(2).exists(_.nullable)), et)

@@ -1,10 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.aggregate._
-import org.apache.spark.sql.catalyst.trees.BinaryLike
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
 /** ChCompat's date/time family: the scalar date/time/cast spellings and
@@ -12,8 +8,6 @@ import org.apache.spark.sql.types._
   * join the [[FunctionTable]]; see ChCompat's doc for the dialect map).
   */
 private[functions] object ChCompatDates {
-
-  import ChCompat.{onlyIf, chFormatToJava, hllState, hllMerge, medianMerged, medianFinalize, stringLit}
 
   val functions = FunctionTable.define(this) { f =>
     // ---- scalar date/time/casts --------------------------------------

@@ -1,10 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.aggregate._
-import org.apache.spark.sql.catalyst.trees.BinaryLike
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
 /** ChCompat's string-shaped families: URL functions, string search,
@@ -12,8 +8,6 @@ import org.apache.spark.sql.types._
   * [[ChCompat]] verbatim.
   */
 private[functions] object ChCompatStrings {
-
-  import ChCompat.{onlyIf, chFormatToJava, hllState, hllMerge, medianMerged, medianFinalize, stringLit}
 
   val functions = FunctionTable.define(this) { f =>
     // ---- CH URL functions (composed on ParseUrl — codegen'd java.net

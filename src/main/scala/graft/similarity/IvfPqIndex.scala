@@ -1,7 +1,6 @@
 package graft.similarity
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Persisted RESIDUAL IVF-PQ index — [[PqIndex]]'s layout with the
   * residual-coded payload of [[IvfPq]] (codes quantize `vec − centroid`,

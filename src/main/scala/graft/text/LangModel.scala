@@ -2,7 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, LongType}
+import org.apache.spark.sql.types.DoubleType
 
 /** N-gram language-model perplexity scoring — the CCNet quality filter
   * (Wenzek et al. 2020: score every document with a LM trained on a

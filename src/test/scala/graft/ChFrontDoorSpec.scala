@@ -192,6 +192,22 @@ class ChFrontDoorSpec extends SparkSpec {
     assert(got.map(_.toSeq).toSeq == Seq(Seq(1L, 1L, "a", "d1"), Seq(2L, 2L, "c", "d2")))
   }
 
+  test("SELECT * over a marked join keeps the left side's own same-named columns") {
+    import spark.implicits._
+    Seq((1L, 10L), (2L, 5L)).toDF("k", "ts").createOrReplaceTempView("graft_fd_lda")
+    Seq((1L, "b1"), (2L, "b2")).toDF("k", "bv").createOrReplaceTempView("graft_fd_ldb")
+    Seq((1L, 9L, "c1"), (2L, 7L, "c2")).toDF("k", "rts", "cv")
+      .createOrReplaceTempView("graft_fd_ldc")
+    val df = ChSql.run(spark,
+      """SELECT * FROM graft_fd_lda a JOIN graft_fd_ldb b ON a.k = b.k
+        |  ASOF LEFT JOIN graft_fd_ldc r ON a.k = r.k AND a.ts >= r.rts
+        |ORDER BY a.k""".stripMargin)
+    // ClickHouse lists b.k (named b.k there); the right side's k stays hidden
+    assert(df.columns.toSeq == Seq("k", "ts", "k", "bv", "rts", "cv"))
+    assert(df.collect().map(_.toSeq).toSeq ==
+      Seq(Seq(1L, 10L, 1L, "b1", 9L, "c1"), Seq(2L, 5L, 2L, "b2", null, null)))
+  }
+
   test("an ASOF join inside a FROM subquery") {
     register(spark)
     val got = ChSql.run(spark,

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.engine.{ChLimitBy, ChSql}
 
 /** CH `LIMIT [offset,] n BY cols` translation: per-group heads in ORDER

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.dedup.Cluster
 
 /** Connected components: hand graphs, brute-force equivalence on a seeded

@@ -78,7 +78,6 @@ class DedupSpec extends SparkSpec {
   }
 
   test("simhash: identical docs at distance 0, planted near-dups closer than unrelated") {
-    import spark.implicits._
     val sigs = docs.select(col("doc_id"), Dedup.simhash64(col("text")).as("sh"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     def ham(a: Long, b: Long) = java.lang.Long.bitCount(sigs(a) ^ sigs(b))

@@ -31,7 +31,6 @@ class HllSpec extends SparkSpec {
   }
 
   test("HllUvMetric in a state table merges across batches like the rest") {
-    import graft.queries.dec
     val dir = tmpDir("hll-state") + "/t"
     val st = new StateTable(spark, dir,
       keys = Seq("day"), partitionCol = "day",

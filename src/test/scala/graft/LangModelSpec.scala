@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.text.LangModel
 
 /** Bigram-LM perplexity scoring: hand-computed tiny model, smoothing

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.functions.MapAggregates
 
 /** sumMap/minMap/maxMap: combination semantics across multi-entry rows,

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.engine.{Rebalance, Warehouse}
+import graft.engine.Rebalance
 
 /** The rebalance tool's logic against planted skew: detection predicate,
   * rewrite, and the reconciliation gate (ref data_rebalance.py:159-160,

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.functions.SequenceMatch
 import graft.functions.SequenceMatch.{AnyOne, AnyStar, Cond, Tok}
 

@@ -15,13 +15,17 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     * values (or unsetting) after — the shared session must not leak confs
     * across suites.
     */
-  def withSqlConf[A](pairs: (String, String)*)(body: => A): A = {
-    val prev = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
+  def withSqlConf[A](pairs: (String, String)*)(body: => A): A =
+    withSessionConf(spark)(pairs: _*)(body)
+
+  /** [[withSqlConf]] on another session `s`. */
+  def withSessionConf[A](s: SparkSession)(pairs: (String, String)*)(body: => A): A = {
+    val prev = pairs.map { case (k, _) => k -> s.conf.getOption(k) }
+    pairs.foreach { case (k, v) => s.conf.set(k, v) }
     try body
     finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
     }
   }
 

@@ -1,6 +1,5 @@
 package graft
 
-import java.sql.{Date, Timestamp}
 import java.time.LocalDate
 
 import org.apache.spark.sql.DataFrame

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions.{Fold, UniqUpTo, UpToSet}

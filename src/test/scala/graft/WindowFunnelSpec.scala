@@ -1,9 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
-import graft.functions.WindowFunnel
-
 /** windowFunnel: exact-existential chain semantics verified against
   * brute-force subsequence enumeration on seeded random event sets.
   */

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.engine.ChSql
 import graft.operators.WithFill
 
