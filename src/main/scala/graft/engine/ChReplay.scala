@@ -17,7 +17,8 @@ import graft.mv.{BitmapUvMetric, EntropyMetric, HllUvMetric, MaterializedView, M
   *
   *  - `CREATE TABLE ... AggregatingMergeTree` → a [[StateTable]] under
   *    `warehouseDir` (keys = ORDER BY, partition = PARTITION BY, one
-  *    [[Metric]] per AggregateFunction/SimpleAggregateFunction column);
+  *    [[Metric]] per AggregateFunction/SimpleAggregateFunction column),
+  *    read by name as its parts when a statement reads it;
   *  - `CREATE TABLE ... ENGINE=Distributed(c,db,t,..)` → a name alias
   *    (every Spark table is already distributed — SURVEY §1.1);
   *  - plain MergeTree tables → descriptors only: their storage is
@@ -41,10 +42,10 @@ import graft.mv.{BitmapUvMetric, EntropyMetric, HllUvMetric, MaterializedView, M
   *  - `DROP TABLE <mv>` → detaches that MV (drop-recreate flow);
   *  - SELECT statements are collected in [[queries]] for the caller to
   *    run through [[runQuery]] (the dialect front door, [[ChSql.run]]);
-  *  - CH's `system.*` introspection tables ([[systemTable]]) are built
-  *    from the replay's maps and part directories when a statement reads
-  *    them and bound into that one query, so they are always current and
-  *    never a session catalog object.
+  *  - every name a statement reads ([[table]]: bindings, state tables and
+  *    CH's `system.*` introspection tables, [[systemTable]]) is resolved
+  *    when that statement reads it, so it is always current and never a
+  *    session catalog object.
   */
 object ChReplay {
   // the interactive-statement scanners, compiled once (runQuery calls
@@ -64,11 +65,6 @@ object ChReplay {
   private val ShowDictRe =
     "(?i)^SHOW\\s+DICTIONARIES(?:\\s+FROM\\s+(\\w+))?(?:\\s+LIKE\\s+'((?:[^'\\\\]|\\\\.|'')*)')?$".r
   private val ShowRe = "(?i)^SHOW\\b".r
-  // a `system.<name>` mention: bare, backtick- and double-quoted alike
-  // (the dialect converts "x" identifiers to backticks inside the front
-  // door, after this runs on the raw text)
-  private val SystemRe =
-    "(?i)\\bsystem\\s*[`\"]?\\s*\\.\\s*[`\"]?\\s*(\\w+)".r
   // cluster('c', db, t) / clusterAllReplicas('c', db, t) — the FROM-side
   // table functions of the rebalance tool's statements. CH also accepts
   // quoted args ('db', 'tbl') and the 2-arg dotted form (db.tbl); each
@@ -141,9 +137,19 @@ final class ChReplay(spark: SparkSession, warehouseDir: String) {
     case None => name
   }
 
-  private def sourceDf(name: String): DataFrame = {
-    val n = resolve(name)
-    bindings.getOrElse(n, spark.table(n))
+  /** The frame a statement reads under `name`, resolved when the
+    * statement reads it ([[ChSql.run]] asks once per name, lowercased;
+    * names match ignoring case, as in Spark's catalog): Distributed
+    * aliases resolve first, then a [[bind]]ing answers, then a state
+    * table's parts ([[StateTable.read]], CH's non-FINAL read, listed now),
+    * then a `system.*` table ([[systemTable]], built now). None leaves the
+    * name to the session catalog.
+    */
+  private def table(name: String): Option[DataFrame] = {
+    val n = resolve((aliases.keys ++ bindings.keys ++ stateTables.keys)
+      .find(_.equalsIgnoreCase(name)).getOrElse(name))
+    bindings.get(n).orElse(stateTables.get(n).map(_.read())).orElse(
+      Option.when(n.startsWith("system."))(n.substring(7)).flatMap(systemTable))
   }
 
   /** The declared column list of ANY named object — tables, Distributed
@@ -163,25 +169,19 @@ final class ChReplay(spark: SparkSession, warehouseDir: String) {
       .toSeq.sorted.mkString(", ")
 
   /** `SELECT CAST(NULL AS t) AS c, ... WHERE false` — an empty result of
-    * exactly `schema` (shared by the ENGINE=Null view and TRUNCATE's
-    * catalog-view replacement); names are backtick-quoted so reserved
-    * words and special characters survive.
+    * exactly `schema` (TRUNCATE's catalog-view replacement); names are
+    * backtick-quoted so reserved words and special characters survive.
     */
   private def emptySelectSql(schema: org.apache.spark.sql.types.StructType): String =
     "SELECT " + schema.map(f =>
       s"CAST(NULL AS ${f.dataType.sql}) AS `${f.name.replace("`", "``")}`")
       .mkString(", ") + " WHERE false"
 
-  /** The alias names that resolve (transitively) to `name` — the ONE
-    * definition of which catalog objects publish() registers for a local
-    * table and DROP must clean up after it.
-    */
-  private def aliasesTo(name: String): Seq[String] =
-    aliases.collect { case (a, t) if resolve(t) == name => a }.toSeq
-
-  /** Drop whichever catalog object type carries `name` (publish() creates
-    * external TABLEs, the Null-engine path creates VIEWs) — one definition
-    * shared by [[publish]] and the DROP handler.
+  /** DROP TABLE of a plain table whose storage is a same-named catalog
+    * object of the user's (the [[bind]] alternative, e.g. a [[Catalog]]
+    * view): the object goes too, with the command for its type, so EXISTS,
+    * which also asks the catalog, answers 0 after the drop. The replay
+    * itself creates no catalog object.
     */
   private def dropCatalogObject(name: String): Unit =
     if (name.contains('.')) {
@@ -205,16 +205,11 @@ final class ChReplay(spark: SparkSession, warehouseDir: String) {
       if (ct.isAggregating) rebuildStateTable(ct.name)
       // ENGINE=Null reads as forever-empty (CH returns 0 rows, not an
       // unknown-table error) — bind an empty frame of the declared schema
-      // and publish the same emptiness as a catalog view for plain SQL
       else if (ct.engine.equalsIgnoreCase("Null")) {
         val schema =
           StructType(ct.cols.map(c => StructField(c.name, valueType(c.chType))))
         bindings(ct.name) = spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-        if (ct.name.contains('.')) {
-          spark.sql(s"CREATE DATABASE IF NOT EXISTS ${ct.name.split('.')(0)}")
-          spark.sql(s"CREATE OR REPLACE VIEW ${ct.name} AS ${emptySelectSql(schema)}")
-        }
       }
     case mv: CreateMaterializedView => buildMv(mv)
     case d: CreateDictionary => buildDictionary(d)
@@ -270,27 +265,23 @@ final class ChReplay(spark: SparkSession, warehouseDir: String) {
               // CH allows DROP TABLE of an MV — the scripts' drop-recreate
               // flow (ref dwm script :87,:156,:195)
               if (!dropMv()) {
-                // plain tables and Distributed aliases leave the catalog
-                // too — EXISTS answering 1 for a dropped name would
-                // contradict the catalog-consistency invariant. Dropping an
-                // alias drops ONLY the alias (CH: the local table
-                // survives); dropping a state table deletes its storage
-                // (CH drops data) and deregisters the catalog objects of
-                // aliases that resolved to it (their selects must error,
-                // not read a stale registration over a deleted location).
-                val wasAlias = aliases.remove(n).isDefined |
-                  aliasDefs.remove(n).isDefined
+                // a dropped name leaves every surface — EXISTS answering 1
+                // for it would contradict the catalog-consistency
+                // invariant. Dropping an alias drops ONLY the alias (CH:
+                // the local table survives); dropping a state table
+                // deletes its storage (CH drops data), so the aliases that
+                // resolved to it read nothing and their selects error.
+                aliases.remove(n); aliasDefs.remove(n)
                 bindings.remove(n)
-                if (tables.remove(n).isDefined) {
-                  stateTables.remove(n).foreach { st =>
-                    val fs = org.apache.hadoop.fs.FileSystem.get(
-                      new java.net.URI(st.path),
-                      spark.sparkContext.hadoopConfiguration)
-                    fs.delete(new org.apache.hadoop.fs.Path(st.path), true): Unit
-                    aliasesTo(n).foreach(dropCatalogObject)
+                if (tables.remove(n).isDefined)
+                  stateTables.remove(n) match {
+                    case Some(st) =>
+                      val fs = org.apache.hadoop.fs.FileSystem.get(
+                        new java.net.URI(st.path),
+                        spark.sparkContext.hadoopConfiguration)
+                      fs.delete(new org.apache.hadoop.fs.Path(st.path), true): Unit
+                    case None => dropCatalogObject(n)
                   }
-                  dropCatalogObject(n)
-                } else if (wasAlias) dropCatalogObject(n)
               }
           }
           ()
@@ -434,26 +425,6 @@ final class ChReplay(spark: SparkSession, warehouseDir: String) {
       sys.error(s"$n: TTL enforcement needs StateTable storage"))
     st.expire(ttl.days, ttl.hours, now)
   }
-
-  /** Register every state table (and its Distributed aliases) as an
-    * external parquet catalog table, so the scripts' SELECTs address
-    * `dws.x_dis` names verbatim. Re-call after ingests to re-list files.
-    * The `system.*` tables are not catalog objects: each is built when a
-    * statement reads it ([[systemTable]]).
-    */
-  def publish(): Unit =
-    for ((name, st) <- stateTables; n <- name +: aliasesTo(name) if n.contains('.')) {
-      spark.sql(s"CREATE DATABASE IF NOT EXISTS ${n.split('.')(0)}")
-      // the name may exist as a VIEW (e.g. Catalog.registerParquet from a
-      // previous consumer of the same name) — DROP TABLE refuses views,
-      // so drop whichever object type is actually there
-      dropCatalogObject(n)
-      spark.sql(
-        s"CREATE TABLE $n USING parquet OPTIONS (mergeSchema 'true') LOCATION '${st.path}'")
-      // partitioned external tables track partitions in the catalog —
-      // discover the day=... directories the StateTable wrote
-      spark.sql(s"MSCK REPAIR TABLE $n")
-    }
 
   // a table created without a database qualifier (the ENGINE=Null branch
   // admits these) lands in CH's `default` db
@@ -678,10 +649,10 @@ final class ChReplay(spark: SparkSession, warehouseDir: String) {
         // CH's kind-qualified EXISTS answers for that kind only
         val exists = Option(kind).map(_.toUpperCase) match {
           case Some("DICTIONARY") => dictDdls.contains(t)
-          // Spark tableType is a STORAGE detail (Null tables and
-          // registerParquet back CH tables with catalog views) — only a
-          // materialized view is a VIEW to CH here, and EXISTS VIEW = 1
-          // must imply SHOW CREATE VIEW succeeds
+          // Spark tableType is a STORAGE detail (registerParquet backs
+          // CH tables with catalog views) — only a materialized view is a
+          // VIEW to CH here, and EXISTS VIEW = 1 must imply SHOW CREATE
+          // VIEW succeeds
           case Some("VIEW") => mvDdls.contains(t)
           case _ => known(t) || system(t).isDefined || catalogHas(t)
         }
@@ -720,11 +691,10 @@ final class ChReplay(spark: SparkSession, warehouseDir: String) {
     * `cluster(...)` table functions read the local table, the literal
     * `substitutions` apply (the scripts' capture-day literals mapped onto
     * the replay's ingested days), and the text runs through the dialect
-    * front door ([[ChSql.run]]) with this replay's scope: every clause
-    * reads a [[bind]]ing (under its own name or a Distributed alias of
-    * it) or a `system.*` table the text names ([[systemTable]], built
-    * now) before the catalog, `SAMPLE` reads each table's declared SAMPLE
-    * BY key, and `FROM t FINAL` reads the backing [[StateTable.merged]].
+    * front door ([[ChSql.run]]) with this replay's scope: every name the
+    * statement reads is looked up through [[table]] before the catalog,
+    * `SAMPLE` reads each table's declared SAMPLE BY key, and `FROM t
+    * FINAL` reads the backing [[StateTable.merged]].
     */
   def runQuery(sql: String, substitutions: Map[String, String] = Map.empty): DataFrame = {
     interactive(sql) match {
@@ -742,8 +712,7 @@ final class ChReplay(spark: SparkSession, warehouseDir: String) {
     // metadata column, which a plain subquery cannot express; the tool's
     // statements never combine the two.) Matching runs on the string-
     // MASKED text (house rule for every regex rewrite: a literal
-    // containing "cluster('x', a, b)" must not trigger). Rewritten FIRST
-    // so the system-table scan below sees the dotted names.
+    // containing "cluster('x', a, b)" must not trigger).
     val needsShardNum = "(?i)\\b_shard_num\\b".r
       .findFirstIn(ChSql.maskStrings(sql)).isDefined
     val sql0 = ChSql.replaceOnMasked(sql, ChReplay.ClusterFnRe) { m =>
@@ -751,9 +720,6 @@ final class ChReplay(spark: SparkSession, warehouseDir: String) {
       if (needsShardNum) s"(SELECT CAST(1 AS INT) AS _shard_num, * FROM $target)"
       else target
     }
-    // only the system tables the text names are built (parts lists files)
-    val system = ChReplay.SystemRe.findAllMatchIn(sql0).map(_.group(1).toLowerCase)
-      .distinct.flatMap(n => systemTable(n).map(s"system.$n" -> _))
     val q = substitutions.foldLeft(sql0) { case (t, (from, to)) => t.replace(from, to) }
     // like CH, FINAL on a name with no backing state table is refused
     // rather than silently un-merged
@@ -762,7 +728,7 @@ final class ChReplay(spark: SparkSession, warehouseDir: String) {
       name => stateTables.getOrElse(resolve(name), sys.error(
         s"$name FINAL: FINAL needs an AggregatingMergeTree-backed table " +
           s"(known: ${stateTables.keys.mkString(", ")})")).merged()),
-      bindings.toMap ++ aliases.keys.flatMap(a => bindings.get(resolve(a)).map(a -> _)) ++ system)
+      table)
   }
 
   // ---- builders ------------------------------------------------------------
@@ -835,7 +801,7 @@ final class ChReplay(spark: SparkSession, warehouseDir: String) {
   }
 
   private def buildDictionary(d: CreateDictionary): Unit = {
-    val src = sourceDf(d.sourceName)
+    val src = table(d.sourceName).getOrElse(spark.table(resolve(d.sourceName)))
     val defaults = d.cols.filterNot(c => d.primaryKeys.contains(c.name)).flatMap { c =>
       c.default.map(v => c.name -> defaultValue(v, c.chType))
     }.toMap

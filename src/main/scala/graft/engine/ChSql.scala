@@ -1069,22 +1069,23 @@ object ChSql {
     * preference in GROUP BY / WHERE; WITH FILL. SAMPLE and ARRAY JOIN
     * become plain Spark SQL; ASOF and ANY drop their keyword and mark the
     * join's right relation, and the session's parser reads the rest. In
-    * the parsed plan each name of `bound` (e.g. an MV's insert batch under
-    * its source table's name, a replay's bindings) and each FINAL read is
-    * replaced by its plan, and each marked `Join` by its ASOF or ANY
+    * the parsed plan each table name is asked of `bound` once per call, as
+    * its lowercased dotted name (an MV's insert batch answers its source
+    * table's name, a replay its tables); a frame it answers, and each
+    * FINAL read, replaces the name by its plan, and None leaves the name
+    * to the session catalog. Each marked `Join` becomes its ASOF or ANY
     * rewrite ([[ChAsof.join]], [[ChAnyJoin.join]]), inside subquery
     * expressions and CTE bodies too. Nothing is registered in the session
     * catalog.
     */
   def run(spark: SparkSession, text: String, scope: Scope = Scope(),
-      bound: Map[String, DataFrame] = Map.empty): DataFrame = {
+      bound: String => Option[DataFrame] = _ => None): DataFrame = {
     val parser = spark.sessionState.sqlParser
-    def key(name: String): Seq[String] = parser.parseMultipartIdentifier(name).map(_.toLowerCase)
-    val frames = mutable.HashMap.empty[Seq[String], DataFrame]
-    for ((name, df) <- bound) frames(key(name)) = df
+    // each name's answer, asked once; FINAL reads enter under their own names
+    val frames = mutable.HashMap.empty[Seq[String], Option[DataFrame]]
     def bind(df: DataFrame): String = {
       val name = s"__graft_bound_${frames.size}"
-      frames(Seq(name)) = df
+      frames(Seq(name)) = Some(df)
       name
     }
     // marker name -> (the right relation's name, the rewrite of its join)
@@ -1094,9 +1095,11 @@ object ChSql {
       marks(marker) = (name, rewrite)
       marker
     }
-    def relation(u: UnresolvedRelation): LogicalPlan =
-      frames.get(u.multipartIdentifier.map(_.toLowerCase)).fold[LogicalPlan](u)(df =>
+    def relation(u: UnresolvedRelation): LogicalPlan = {
+      val key = u.multipartIdentifier.map(_.toLowerCase)
+      frames.getOrElseUpdate(key, bound(key.mkString("."))).fold[LogicalPlan](u)(df =>
         SubqueryAlias(u.multipartIdentifier, df.queryExecution.analyzed))
+    }
     // the marked relation under its alias, back under its own name
     def unmark(p: LogicalPlan): Option[(LogicalPlan, (SparkSession, Join) => LogicalPlan)] =
       p match {

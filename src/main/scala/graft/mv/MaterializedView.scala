@@ -116,7 +116,8 @@ object MaterializedView {
     new MaterializedView(name, { batch =>
       val s = batch.sparkSession
       graft.functions.ChCompat.register(s)
-      conform(ChSql.run(s, mvSql, bound = Map(sourceTable -> batch)))
+      conform(ChSql.run(s, mvSql,
+        bound = n => Option.when(n.equalsIgnoreCase(sourceTable))(batch)))
     }, target, preAggregated = true)
   }
 }

@@ -285,11 +285,11 @@ final class ProjectionRewrite(owner: SparkSession) extends Rule[LogicalPlan] {
     // calls (the Kernel scalars) here
     plan.transformUp {
       case agg: Aggregate =>
-        rewrite(owner, agg, entries).map(ReplaceExpressions(_)).getOrElse(agg)
+        rewrite(agg, entries).map(ReplaceExpressions(_)).getOrElse(agg)
     }
   }
 
-  private def rewrite(spark: SparkSession, agg: Aggregate,
+  private def rewrite(agg: Aggregate,
       entries: Seq[Projection.Registered]): Option[LogicalPlan] = {
     // Global aggregates: COUNT(*) over an empty source is 1 row; over an
     // empty state table it would be 0 rows. Decline rather than diverge.
@@ -308,7 +308,7 @@ final class ProjectionRewrite(owner: SparkSession) extends Rule[LogicalPlan] {
       .sortBy(_.table.keys.size)
       .iterator
       .flatMap { e =>
-        val r = rewriteWith(spark, agg, sub, qFilters, e)
+        val r = rewriteWith(agg, sub, qFilters, e)
         if (r.isDefined) dbg("selection: answering from keys " +
           e.table.keys.mkString("(", ",", ")"))
         r
@@ -316,7 +316,7 @@ final class ProjectionRewrite(owner: SparkSession) extends Rule[LogicalPlan] {
       .nextOption()
   }
 
-  private def rewriteWith(spark: SparkSession, agg: Aggregate,
+  private def rewriteWith(agg: Aggregate,
       sub: Map[Long, Expression], qFilters: Seq[Expression],
       e: Projection.Registered): Option[LogicalPlan] = {
     def toBase(x: Expression): Option[Expression] =
@@ -372,7 +372,7 @@ final class ProjectionRewrite(owner: SparkSession) extends Rule[LogicalPlan] {
         dbg("decline: output not covered by defs/groupings: " + x); return None }
     }
 
-    Some(build(spark, agg, e, stateFilters, gState, gNames, needed.toSeq,
+    Some(build(agg, e, stateFilters, gState, gNames, needed.toSeq,
       favg.toSeq, outExprs))
   }
 
@@ -552,7 +552,7 @@ final class ProjectionRewrite(owner: SparkSession) extends Rule[LogicalPlan] {
     * optimizer batches, so nothing will prune for us) and capped with a
     * Project restoring the original names, types and expression ids.
     */
-  private def build(spark: SparkSession, agg: Aggregate, e: Projection.Registered,
+  private def build(agg: Aggregate, e: Projection.Registered,
       stateFilters: Seq[Expression], gState: Seq[Expression], gNames: Seq[String],
       needed: Seq[String], favg: Seq[String],
       outExprs: Seq[Expression]): LogicalPlan = {

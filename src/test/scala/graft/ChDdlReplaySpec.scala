@@ -26,16 +26,6 @@ class ChDdlReplaySpec extends SparkSpec {
     new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$sqlDir/$f")), "UTF-8")
 
-  override def afterAll(): Unit = {
-    // the published external tables shadow names other suites re-create
-    // as views (shared session) — drop them, each with the command for its
-    // catalog type (a suite that ran earlier may have left a view there)
-    for (n <- Seq("dws.mainpage_stat_mv_dis", "dwm.mainpage_stat_mv_local")
-         if spark.catalog.tableExists(n))
-      spark.sql(s"DROP ${if (spark.catalog.getTable(n).tableType == "VIEW") "VIEW" else "TABLE"} $n")
-    super.afterAll()
-  }
-
   test("parser: statement inventory of every reference script") {
     assume(ReferenceTree.hasScripts, ReferenceTree.missing(ReferenceTree.scripts))
     import ChDdl._
@@ -409,7 +399,6 @@ class ChDdlReplaySpec extends SparkSpec {
     }
     assert(replay.mvs.keySet == Set("dwm.mv_main_page_stat_mv_001_local",
       "dwm.mv_main_page_stat_mv_002_local"), "drop-recreate flow should leave the wide MVs")
-    replay.publish()
     val dwmQueries = dwmStmts.collect { case q: ChDdl.Query => q.sql }
 
     // ---- doc:287-292 — MV merge-read == direct aggregation over raw ------
@@ -900,7 +889,6 @@ class ChDdlReplaySpec extends SparkSpec {
       Seq(("2024-01-01", 1L, 10L), ("2024-01-02", 2L, 5L)).toDF("day_s", "k", "v")
         .select(org.apache.spark.sql.functions.to_date(col("day_s")).as("day"),
           col("k"), col("v")))
-    replay.publish()
     val t = replay.runQuery(
       "SELECT engine FROM system.tables WHERE database = 'dws' AND name = 'sys_local'")
       .head().getString(0)
@@ -925,7 +913,7 @@ class ChDdlReplaySpec extends SparkSpec {
     assert(parts.forall(_.getAs[Any]("bytes").toString.toLong > 0))
     // one ingested row per partition -> footer record counts say exactly 1
     assert(parts.map(_.getAs[Any]("rows").toString.toLong).toSeq == Seq(1L, 1L))
-    // an UNQUALIFIED table name (ENGINE=Null admits these) must publish
+    // an UNQUALIFIED table name (ENGINE=Null admits these) must list
     // under CH's `default` db instead of aborting with a MatchError
     replay.executeScript("create table bare_null (k UInt64) engine=Null;")
     assert(replay.runQuery(
@@ -1156,7 +1144,7 @@ class ChDdlReplaySpec extends SparkSpec {
       .map(_.getString(0)).contains("ia_dict"))
 
     // EXISTS VIEW means materialized view, not Spark catalog storage (a
-    // Null table is BACKED by a catalog view but is a TABLE to CH)
+    // registerParquet-backed table is a catalog view but a TABLE to CH)
     assert(replay.runQuery("EXISTS VIEW dws.ia_mv").head().getInt(0) == 1)
     assert(replay.runQuery("EXISTS VIEW dws.iaglocal").head().getInt(0) == 0)
 
@@ -1372,7 +1360,6 @@ class ChDdlReplaySpec extends SparkSpec {
         |    ARRAY JOIN [(1, 1001), (1, 1002), (2, 10001), (3, 10001)] AS a1
         |)
         |GROUP BY id""".stripMargin))
-    replay.publish()
     // the doc's merge SELECT — golden: (1,1,2003), (2,1,10001), (3,2,10001)
     def merged() = replay.runQuery(
       """SELECT
@@ -1388,7 +1375,6 @@ class ChDdlReplaySpec extends SparkSpec {
     assert(merged() == golden)
     // doc:954 OPTIMIZE FINAL — the merge is read-equivalent after folding
     replay.execute(ChDdl.parseStatement("OPTIMIZE TABLE test.mv_union_max FINAL"))
-    spark.sql("REFRESH TABLE test.mv_union_max")
     assert(merged() == golden)
   }
 
@@ -1498,6 +1484,106 @@ class ChDdlReplaySpec extends SparkSpec {
         .collect().map(_.getString(0)).toSet
     assert(listed(replay) == Set("sd_local") && listed(other) == Set("sd_other"))
     assert(listed(other) == Set("sd_other") && listed(replay) == Set("sd_local"))
+  }
+
+  /** A replay declaring the state table `<dws>.t`, its Distributed alias
+    * `<dws>.t_dis`, the Null source `<ods>.t_src` and an MV from it into t.
+    */
+  private def byNameReplay(prefix: String, dws: String = "dws",
+      ods: String = "ods"): ChReplay = {
+    val replay = new ChReplay(spark, ChReplay.scratchWarehouse(prefix))
+    replay.executeScript(
+      s"""create table $dws.t (
+        | day Date,
+        | k UInt64,
+        | v SimpleAggregateFunction(sum, UInt64)
+        |) engine=AggregatingMergeTree()
+        |PARTITION BY day ORDER BY (day, k);
+        |create table $dws.t_dis (day Date, k UInt64, v UInt64)
+        | engine=Distributed(c, $dws, t, rand());
+        |create table $ods.t_src (day Date, k UInt64, v UInt64) engine=Null;
+        |create materialized view $dws.t_mv to $dws.t
+        | (day Date, k UInt64, v SimpleAggregateFunction(sum, UInt64))
+        | as select day, k, sum(v) as v from $ods.t_src group by day, k;""".stripMargin)
+    replay
+  }
+
+  private def dayRows(day: String, ks: Long*) = {
+    import spark.implicits._
+    ks.map(k => (day, k, 10L)).toDF("day_s", "k", "v")
+      .select(to_date(col("day_s")).as("day"), col("k"), col("v"))
+  }
+
+  test("a state table read by name sees every write; two replays each read their own") {
+    import ChDdl._
+    val replay = byNameReplay("graft-byname")
+    val st = replay.stateTables("dws.t")
+    def count(r: ChReplay, name: String): Long =
+      r.runQuery(s"SELECT count(*) FROM $name").head().getLong(0)
+    def check(step: String): Unit = {
+      val parts = spark.read.parquet(st.path).count()
+      for (n <- Seq("dws.t", "dws.t_dis"))
+        assert(count(replay, n) == parts, s"$n after $step")
+    }
+    st.appendBatch(dayRows("2024-01-01", 1L))
+    check("a direct append")
+    replay.insert("ods.t_src", dayRows("2024-01-01", 1L, 2L))
+    check("an MV-fired insert")
+    replay.execute(parseStatement(
+      """INSERT INTO dws.t (day, k, v)
+        |SELECT toDate('2024-01-01') AS day, toUInt64(3) AS k, toUInt64(5) AS v
+        |FROM system.one""".stripMargin))
+    check("an INSERT ... SELECT")
+    st.appendBatch(dayRows("2024-01-02", 1L, 2L, 3L))
+    check("a new partition")
+    assert(count(replay, "dws.t") == 7L)
+    replay.execute(parseStatement("OPTIMIZE TABLE dws.t FINAL"))
+    check("OPTIMIZE FINAL")
+    assert(count(replay, "dws.t") == 6L)
+    replay.execute(parseStatement("ALTER TABLE dws.t DETACH PARTITION '2024-01-01'"))
+    check("DETACH PARTITION")
+    assert(count(replay, "dws.t_dis") == 3L)
+    replay.execute(parseStatement("ALTER TABLE dws.t ATTACH PARTITION '2024-01-01'"))
+    check("ATTACH PARTITION")
+    assert(count(replay, "dws.t_dis") == 6L)
+
+    // the same name in a second warehouse reads that replay's own parts
+    val other = byNameReplay("graft-byname2")
+    other.stateTables("dws.t").appendBatch(dayRows("2024-01-05", 1L))
+    assert(count(replay, "dws.t") == 6L && count(other, "dws.t") == 1L)
+    assert(count(other, "dws.t_dis") == 1L && count(replay, "dws.t_dis") == 6L)
+  }
+
+  test("a replay's CREATE, INSERT, OPTIMIZE and DROP leave the session catalog as it was") {
+    import ChDdl._
+    // databases no other test names, so the listing starts without them
+    val (dws, ods) = ("graft_cat_dws", "graft_cat_ods")
+    def listing(): Set[String] =
+      spark.catalog.listDatabases().collect().map(_.name).toSet ++
+        Seq(dws, ods).filter(spark.catalog.databaseExists).flatMap(db =>
+          spark.catalog.listTables(db).collect().map(t => s"$db.${t.name}"))
+    val before = listing()
+    val replay = byNameReplay("graft-bycat", dws, ods)
+    replay.execute(parseStatement(
+      s"""INSERT INTO $ods.t_src (day, k, v)
+        |SELECT toDate('2024-01-01') AS day, toUInt64(1) AS k, toUInt64(5) AS v
+        |FROM system.one""".stripMargin))
+    assert(listing() == before)
+    assert(replay.runQuery(s"SELECT sum(v) FROM $dws.t_dis").head().getLong(0) == 5L)
+    replay.execute(parseStatement(s"OPTIMIZE TABLE $dws.t FINAL"))
+    assert(listing() == before)
+    replay.executeScript(
+      s"drop table $dws.t_mv; drop table $dws.t_dis; drop table $dws.t; drop table $ods.t_src;")
+    assert(listing() == before)
+    assert(replay.runQuery(s"EXISTS TABLE $dws.t").head().getInt(0) == 0)
+    // a plain table stored in the user's own catalog view: DROP TABLE takes
+    // the view with it, so EXISTS answers 0
+    spark.sql(s"CREATE DATABASE IF NOT EXISTS $ods")
+    spark.sql(s"CREATE OR REPLACE VIEW $ods.plain AS SELECT 1L AS k")
+    replay.executeScript(s"create table $ods.plain (k UInt64) engine=MergeTree ORDER BY k;")
+    assert(replay.runQuery(s"SELECT count(*) FROM $ods.plain").head().getLong(0) == 1L)
+    replay.executeScript(s"drop table $ods.plain;")
+    assert(replay.runQuery(s"EXISTS TABLE $ods.plain").head().getInt(0) == 0)
   }
 
   test("Distributed descriptor without a parsable target still lists as Distributed") {
@@ -1640,9 +1726,7 @@ class ChDdlReplaySpec extends SparkSpec {
     assert(checkPartitions("rb_dst_local") == partRows)
 
     // CH's other cluster-fn spellings resolve too: quoted args and the
-    // 2-arg dotted form (these read the data table itself — register it
-    // now that both tables have parts to infer from)
-    replay.publish()
+    // 2-arg dotted form (these read the data table itself, by name)
     assert(replay.runQuery(
       "select count(*) from cluster('cluster', 'dws', 'rb_src_local')")
       .head().getLong(0) == 3L)

@@ -171,6 +171,17 @@ class PartitionOpsFuzzSpec extends SparkSpec {
               .map(r => String.valueOf(r.get(0)) -> r.getLong(1)).toMap
         assert(got == live.toMap,
           s"seed $seed after $opName: table=$got model=$live detached=$det")
+        // the table read by name through the statement layer (its parts,
+        // summed) agrees too, with the same allowance before the first write
+        val byName =
+          try replay.runQuery(s"SELECT slot, sum(v) FROM $tbl GROUP BY slot")
+            .collect().map(r => String.valueOf(r.get(0)) -> r.getLong(1)).toMap
+          catch {
+            case _: org.apache.spark.sql.AnalysisException if !wrote => Map.empty[String, Long]
+            case _: java.io.FileNotFoundException if !wrote => Map.empty[String, Long]
+          }
+        assert(byName == live.toMap,
+          s"seed $seed after $opName: by name=$byName model=$live detached=$det")
         // the introspection surface must agree with the model too, after
         // statements and direct appends alike
         def names(view: String): Set[String] =

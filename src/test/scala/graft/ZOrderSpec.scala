@@ -146,7 +146,6 @@ class ZOrderSpec extends SparkSpec {
     assert(spark.read.parquet(p).count() == 5000L)
     // hash-bucketing confines each platform to a slice of the files: no
     // platform should appear in every file (4 values, 128 hash buckets)
-    val conf = spark.sparkContext.hadoopConfiguration
     val perFile = new java.io.File(p).listFiles().toSeq
       .filter(f => f.getName.endsWith(".parquet"))
       .map(f => spark.read.parquet(f.getPath)
