@@ -36,7 +36,7 @@ object ChDdl {
     def isSimpleAggState: Boolean = chType.toLowerCase.startsWith("simpleaggregatefunction")
     /** (function, value CH type) of an AggregateFunction/SimpleAggregateFunction. */
     def aggSpec: Option[(String, String)] = {
-      val m = """(?i)(?:Simple)?AggregateFunction\s*\(\s*(\w+)\s*,\s*([^)]+)\)""".r
+      val m = """(?i)(?:Simple)?AggregateFunction\s*\(\s*(\w+)\s*,\s*((?:[^()]|\([^()]*\))+?)\s*\)""".r
       m.findFirstMatchIn(chType).map(g => (g.group(1), g.group(2).trim))
     }
   }

@@ -17,8 +17,9 @@ import graft.mv.{BitmapUvMetric, EntropyMetric, HllUvMetric, MaterializedView, M
   *
   *  - `CREATE TABLE ... AggregatingMergeTree` → a [[StateTable]] under
   *    `warehouseDir` (keys = ORDER BY, partition = PARTITION BY, one
-  *    [[Metric]] per AggregateFunction/SimpleAggregateFunction column),
-  *    read by name as its parts when a statement reads it;
+  *    [[Metric]] per AggregateFunction/SimpleAggregateFunction column,
+  *    the declared columns as its definition), read by name as its parts
+  *    when a statement reads it;
   *  - `CREATE TABLE ... ENGINE=Distributed(c,db,t,..)` → a name alias
   *    (every Spark table is already distributed — SURVEY §1.1);
   *  - plain MergeTree tables → descriptors only: their storage is
@@ -36,9 +37,9 @@ import graft.mv.{BitmapUvMetric, EntropyMetric, HllUvMetric, MaterializedView, M
   *  - `CREATE DICTIONARY` → [[Dictionaries.register]] from the source
   *    table's bound DataFrame, with declared per-attribute defaults;
   *  - `ALTER TABLE ADD COLUMN / MODIFY ORDER BY` → descriptor update +
-  *    StateTable rebuild at the same path (part schemas union on read, so
-  *    widening is metadata-only — the reference's live-ALTER flow,
-  *    ref dwm.mainpage_stat_mv_dis.sql:78-96);
+  *    StateTable rebuild at the same path, whose definition gains the added
+  *    columns (older parts read them as NULL, so widening is metadata-only
+  *    — the reference's live-ALTER flow, ref dwm.mainpage_stat_mv_dis.sql:78-96);
   *  - `DROP TABLE <mv>` → detaches that MV (drop-recreate flow);
   *  - SELECT statements are collected in [[queries]] for the caller to
   *    run through [[runQuery]] (the dialect front door, [[ChSql.run]]);
@@ -65,6 +66,9 @@ object ChReplay {
   private val ShowDictRe =
     "(?i)^SHOW\\s+DICTIONARIES(?:\\s+FROM\\s+(\\w+))?(?:\\s+LIKE\\s+'((?:[^'\\\\]|\\\\.|'')*)')?$".r
   private val ShowRe = "(?i)^SHOW\\b".r
+  // value types valueType reads through (lowercased, without blanks)
+  private val WrappedType = "(?:nullable|lowcardinality)\\((.*)\\)".r
+  private val DecimalOf = "decimal\\((\\d+),(\\d+)\\)".r
   // cluster('c', db, t) / clusterAllReplicas('c', db, t) — the FROM-side
   // table functions of the rebalance tool's statements. CH also accepts
   // quoted args ('db', 'tbl') and the 2-arg dotted form (db.tbl); each
@@ -344,10 +348,8 @@ final class ChReplay(spark: SparkSession, warehouseDir: String) {
     * positionally, and:
     *  - an aggregating target appends the rows AS STATES (the SELECT
     *    already produced `-State` columns), with unwritten columns
-    *    conformed exactly like an MV insert — simple aggregates take the
-    *    type default 0, aggregate states stay empty (stored NULL here;
-    *    CH stores a zero-element state — same merge identity, documented
-    *    divergence of [[buildMv]]'s conform);
+    *    filled exactly like an MV insert ([[fill]]) and each value
+    *    converted to the declared type by the append;
     *  - a plain (MergeTree) target unions into its binding and fires the
     *    MVs watching it, CH insert-trigger semantics.
     */
@@ -363,15 +365,7 @@ final class ChReplay(spark: SparkSession, warehouseDir: String) {
         out.toDF(ins.cols: _*)
       }
     stateTables.get(target) match {
-      case Some(st) =>
-        val declared = tables(target).cols
-        val present = named.columns.map(_.toLowerCase).toSet
-        val conformed = named.select(declared.map { c =>
-          if (present.contains(c.name.toLowerCase)) col(c.name)
-          else if (c.isSimpleAggState) lit(0L).cast(stateType(c)).as(c.name)
-          else lit(null).cast(stateType(c)).as(c.name)
-        }: _*)
-        st.append(conformed)
+      case Some(st) => st.append(fill(named, tables(target).cols))
       case None =>
         // ENGINE=Null discards the rows but still fires the MVs watching
         // the table — CH's feed-the-views-without-storing pattern; an
@@ -738,9 +732,17 @@ final class ChReplay(spark: SparkSession, warehouseDir: String) {
     val keys = if (ct.orderBy.nonEmpty) ct.orderBy else ct.primaryKey
     require(keys.nonEmpty, s"$name: AggregatingMergeTree needs ORDER BY/PRIMARY KEY")
     val metrics = ct.cols.filter(c => c.isAggState || c.isSimpleAggState).map(metricFor(name, _))
-    stateTables(name) = new StateTable(spark,
-      s"$warehouseDir/${name.replace('.', '_')}",
+    val st = new StateTable(spark, s"$warehouseDir/${name.replace('.', '_')}",
       keys, ct.partitionBy.getOrElse(keys.head), metrics)
+    // the declared columns as stored: a metric column at the type of its
+    // metric's state over the declared value type (analyzed, not run),
+    // any other column at its value type
+    val values = StructType(ct.cols.map(c =>
+      StructField(c.name, valueType(c.aggSpec.fold(c.chType)(_._2)))))
+    val states = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], values)
+      .select(metrics.map(_.state): _*).schema
+    st.declare(values.map(f => states.find(_.name == f.name).getOrElse(f)))
+    stateTables(name) = st
   }
 
   private def metricFor(table: String, c: Col): Metric = c.aggSpec match {
@@ -755,25 +757,34 @@ final class ChReplay(spark: SparkSession, warehouseDir: String) {
     case other => sys.error(s"$table.${c.name}: unsupported aggregate type ${c.chType} ($other)")
   }
 
-  /** Spark type of a column's stored STATE — used only to type the null/
-    * default fill of columns a given MV does not produce.
+  /** `df` as the `declared` columns by name, CH insert semantics:
+    * surplus columns are discarded, a missing simple aggregate takes the
+    * type default 0 (also its merge identity — this reproduces the
+    * reference's show_cnt/shown_cnt mismatch golden, shown_cnt = 0,
+    * doc:287-292), any other missing column an empty state (NULL; CH
+    * stores a zero-element state — the same merge identity). The append
+    * converts each value to its declared type.
     */
-  private def stateType(c: Col): DataType = c.aggSpec match {
-    case Some(("uniqCombined", _)) | Some(("groupBitmap", _)) |
-         Some(("entropy", _)) => BinaryType
-    case Some(("medianExact", t)) => ArrayType(valueType(t))
-    case Some((_, t)) => valueType(t) // simple aggregates store plain values
-    case None => valueType(c.chType)
+  private def fill(df: DataFrame, declared: Seq[Col]): DataFrame = {
+    val present = df.columns.map(_.toLowerCase).toSet
+    df.select(declared.map { c =>
+      if (present(c.name.toLowerCase)) col(c.name)
+      else (if (c.isSimpleAggState) lit(0L) else lit(null)).as(c.name)
+    }: _*)
   }
 
-  private def valueType(chType: String): DataType = {
-    val t = chType.toLowerCase
-    if (t.startsWith("uint") || t.startsWith("int")) LongType
-    else if (t.startsWith("float")) DoubleType
-    else if (t == "date") DateType
-    else if (t.startsWith("datetime")) TimestampNTZType
-    else StringType
-  }
+  /** The Spark type of a CH value type (Spark has no unsigned integers;
+    * every width fits a long). */
+  private def valueType(chType: String): DataType =
+    chType.toLowerCase.replaceAll("\\s", "") match {
+      case ChReplay.WrappedType(inner) => valueType(inner)
+      case ChReplay.DecimalOf(p, sc) => DecimalType(p.toInt, sc.toInt)
+      case t if t.startsWith("uint") || t.startsWith("int") => LongType
+      case t if t.startsWith("float") => DoubleType
+      case "date" => DateType
+      case t if t.startsWith("datetime") => TimestampNTZType
+      case _ => StringType
+    }
 
   private def buildMv(mv: CreateMaterializedView): Unit = {
     val targetName = resolve(mv.to)
@@ -783,19 +794,8 @@ final class ChReplay(spark: SparkSession, warehouseDir: String) {
     // to the table as it existed when the MV ran, and later ALTERs rebuild
     // the MV anyway (the scripts' drop-recreate flow)
     val declared = tables(targetName).cols
-    val conform = (df: DataFrame) => {
-      val present = df.columns.toSet
-      df.select(declared.map { c =>
-        if (present.contains(c.name)) col(c.name)
-        else if (c.isSimpleAggState)
-          // missing simple-aggregate column: CH type default (0), which is
-          // also the merge identity — reproduces the reference's
-          // show_cnt/shown_cnt mismatch golden (shown_cnt = 0, doc:287-292)
-          lit(0L).cast(stateType(c)).as(c.name)
-        else lit(null).cast(stateType(c)).as(c.name)
-      }: _*)
-    }
-    mvs(mv.name) = MaterializedView.fromSql(mv.name, mv.select, mv.sourceTable, st, conform)
+    mvs(mv.name) = MaterializedView.fromSql(mv.name, mv.select, mv.sourceTable, st,
+      fill(_, declared))
     mvDdls(mv.name) = mv
     mvSources(mv.name) = mv.sourceTable
   }

@@ -4,7 +4,10 @@ import java.time.LocalDate
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField, StructType}
 
 import graft.Durable
 import graft.functions.ChCompat
@@ -37,6 +40,14 @@ import graft.functions.ChCompat
   * map-side partial aggregate of the batch (no shuffle of history), reads
   * prune to the queried days, and compaction shuffles only the keys within
   * each rewritten partition.
+  *
+  * Like an AggregatingMergeTree, the table has one declared schema, its
+  * definition (the `_schema` file): a CREATE [[declare]]s it,
+  * else the first append's columns are it. Every write converts to it and
+  * every read uses it. Only a column addition changes it ([[declare]], or
+  * an append bringing a key or metric of this instance that it lacks —
+  * the `add column if not exists` flow, ref dwm.mainpage_stat_mv_dis.sql:
+  * 78-96); older parts read the new column as NULL, a merge identity.
   */
 final class StateTable(
     spark: SparkSession,
@@ -47,6 +58,9 @@ final class StateTable(
 
   ChCompat.register(spark)
   recover()
+
+  // None until something is declared or appended
+  @volatile private var definition: Option[StructType] = open()
 
   private def stateCols = metrics.map(_.state)
   private def mergeCols = metrics.map(_.merge)
@@ -61,10 +75,9 @@ final class StateTable(
     // source, the ingest aggregate must NOT route onto the table itself —
     // the table is out of sync with the source for exactly this batch, so
     // a routed read would lose the batch (new partition) or double it
-    states
+    conform(states)
       .sortWithinPartitions(keys.map(col): _*)
       .write.mode("append").partitionBy(partitionCol).parquet(path)
-    invalidateSchema() // new parts may widen the union schema
   }
 
   /** Aggregate + append a raw batch (insert-trigger semantics). */
@@ -104,64 +117,84 @@ final class StateTable(
     */
   def appendExactlyOnce(states: DataFrame, batchId: Long, ns: String = ""): Boolean =
       Projection.suppress {
-    val appended = Durable.appendOnce(fileSystem(), new Path(path), partitionCol,
-      batchTok(batchId, ns), states.sortWithinPartitions(keys.map(col): _*))
-    if (appended) invalidateSchema()
-    appended
+    Durable.appendOnce(fileSystem(), new Path(path), partitionCol,
+      batchTok(batchId, ns), conform(states).sortWithinPartitions(keys.map(col): _*))
   }
 
   /** Aggregate + exactly-once append of a raw batch. */
   def appendBatchExactlyOnce(batch: DataFrame, batchId: Long, ns: String = ""): Boolean =
     appendExactlyOnce(toStates(batch), batchId, ns)
 
-  // merged part schema, computed once per (instance, table state): the
-  // footer-listing merge job is paid on the first read after open/append,
-  // not on every merge-on-read. The cache tracks THIS instance's writes
-  // only — a reader instance that must observe another writer's ALTER
-  // widening calls [[refresh]] (same contract as re-opening).
-  @volatile private var cachedSchema: Option[org.apache.spark.sql.types.StructType] = None
+  /** Raw state rows as stored (pre-merge), under the definition: no footer
+    * is read to plan it, a partition value keeps its declared type, and an
+    * empty table reads empty. */
+  def read(): DataFrame = spark.read.schema(schema).parquet(path)
 
-  /** Drop the cached part-schema union so the next read re-merges part
-    * footers — call after another process/instance widened the table.
-    */
-  def refresh(): Unit = invalidateSchema()
+  private def schema: StructType = defined.getOrElse(throw new java.io.FileNotFoundException(
+    s"$schemaFile: the table has no definition yet (nothing declared or appended)"))
 
-  /** Raw state rows as stored (pre-merge). Part schemas are unioned so an
-    * ALTER-style widening works on live tables (the reference's
-    * `add column if not exists` flow, ref dwm.mainpage_stat_mv_dis.sql:78-96,
-    * 157-182): parts that predate a metric surface it as NULL, which every
-    * merge treats as identity.
-    */
-  def read(): DataFrame = cachedSchema match {
-    case Some(schema) => spark.read.schema(schema).parquet(path)
-    case None =>
-      try {
-        val df = spark.read.option("mergeSchema", "true").parquet(path)
-        cachedSchema = Some(df.schema)
-        df
-      } catch {
-        // a table whose every live partition was dropped/detached/
-        // truncated has nothing to infer from — the PERSISTED schema
-        // marker (written by captureSchema before the destructive op)
-        // keeps it readable as EMPTY across reopens and rebuilds, the CH
-        // semantics. Any other analysis error propagates untouched.
-        case e: org.apache.spark.sql.AnalysisException
-            if String.valueOf(e.getMessage).contains("UNABLE_TO_INFER_SCHEMA") =>
-          loadSchemaMarker() match {
-            case Some(s) =>
-              cachedSchema = Some(s)
-              spark.read.schema(s).parquet(path)
-            case None => throw e
-          }
-      }
+  private def defined: Option[StructType] = {
+    if (definition.isEmpty) definition = open()
+    definition
   }
 
-  private def schemaMarker = new Path(path, "_schema")
+  private def schemaFile = new Path(path, "_schema")
 
-  private def loadSchemaMarker(): Option[org.apache.spark.sql.types.StructType] =
-    Durable.readText(fileSystem(), schemaMarker).map(json =>
-      org.apache.spark.sql.types.DataType.fromJson(json)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
+  /** The stored definition; for a directory of parts without one (an
+    * older layout), their footers' union, inferred once and stored. */
+  private def open(): Option[StructType] = {
+    val fs = fileSystem()
+    def hasParts = fs.exists(new Path(path)) && fs.listStatus(new Path(path)).exists(d =>
+      d.getPath.getName.startsWith(s"$partitionCol=") &&
+        graft.engine.Rebalance.dataFiles(fs, d.getPath).nonEmpty)
+    Durable.readText(fs, schemaFile).map(DataType.fromJson).orElse(Option.when(hasParts) {
+      val inferred = spark.read.option("mergeSchema", "true").parquet(path).schema
+      Durable.writeText(fs, schemaFile, inferred.json)
+      inferred
+    }).map(nullable(_).asInstanceOf[StructType])
+  }
+
+  /** Add each column the stored definition lacks (CREATE TABLE, ALTER
+    * TABLE ADD COLUMN); a defined column keeps its type. */
+  def declare(columns: Seq[StructField]): StructType = {
+    val base = open().getOrElse(new StructType())
+    val added = columns.filterNot(f => base.fieldNames.exists(_.equalsIgnoreCase(f.name)))
+    val next = nullable(StructType(base ++ added)).asInstanceOf[StructType]
+    if (added.nonEmpty) Durable.writeText(fileSystem(), schemaFile, next.json)
+    definition = Some(next)
+    next
+  }
+
+  /** `t` with every field, element and value nullable, as a read or a
+    * merge makes them. */
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case ArrayType(e, _) => ArrayType(nullable(e), containsNull = true)
+    case MapType(k, v, _) => MapType(nullable(k), nullable(v), valueContainsNull = true)
+    case o => o
+  }
+
+  /** `frame` as the definition's columns, the step every write takes:
+    * each cast to its declared type under ANSI rules (a value that does not
+    * fit fails the write before a part lands), a missing one NULL. A column
+    * the definition lacks is declared if it is a key or metric here (or
+    * the table's first write); any other fails. */
+  private def conform(frame: DataFrame): DataFrame = {
+    val known = defined
+    val own = (keys ++ metrics.map(_.name) :+ partitionCol).map(_.toLowerCase).toSet
+    val extra = frame.schema.filterNot(f =>
+      known.exists(_.fieldNames.exists(_.equalsIgnoreCase(f.name))))
+    val stray = if (known.isEmpty) Nil else extra.filterNot(f => own(f.name.toLowerCase))
+    require(stray.isEmpty, s"$path: no column ${stray.map(_.name).mkString(", ")} " +
+      s"in the table's definition ${known.get.simpleString}")
+    val target = if (extra.isEmpty) known.get else declare(extra)
+    val present = frame.columns.map(_.toLowerCase).toSet
+    frame.select(target.map { f =>
+      if (!present(f.name.toLowerCase)) lit(null).cast(f.dataType).as(f.name)
+      else ColumnBridge.column(Cast(ColumnBridge.expression(col(f.name)), f.dataType,
+        None, EvalMode.ANSI)).as(f.name)
+    }: _*)
+  }
 
   /** Merge-on-read at the given (possibly coarser) keys; metric columns
     * remain states (binary sketches / arrays / partial sums).
@@ -185,19 +218,14 @@ final class StateTable(
     * table at `.compact.old` — the next open restores it.
     */
   def compact(): Unit = Projection.suppress {
-    rewrite(".compact", "compact") { tmp =>
-      merged(keys)
-        .sortWithinPartitions(keys.map(col): _*)
-        .write.mode("overwrite").partitionBy(partitionCol).parquet(tmp)
-    }
+    rewrite(".compact", "compact")(merged(keys).sortWithinPartitions(keys.map(col): _*))
   }
 
   /** The hidden artifacts that must SURVIVE every whole-table rewrite (the
     * rewrite's tmp never contains them): the exactly-once ledger (losing
     * it lets replayed batches re-ingest rows the rewrite already holds),
     * the detached partitions (losing them destroys quarantined data), and
-    * the persisted schema marker (losing it breaks empty-table reads after
-    * a restart). A def: the constructor's [[recover]] runs before the
+    * the definition. A def: the constructor's [[recover]] runs before the
     * vals declared below it are initialized.
     */
   private def swapArtifacts = Seq("_ledger", ".detached", "_schema")
@@ -205,12 +233,12 @@ final class StateTable(
   private def staged(suffix: String) =
     (new Path(path + suffix + ".tmp"), new Path(path + suffix + ".old"))
 
-  /** The whole-table staged swap of [[compact]] and the mutations:
-    * `write` fills the `<path><suffix>.tmp` it is given. */
-  private def rewrite(suffix: String, op: String)(write: String => Unit): Unit = {
+  /** The whole-table staged swap of [[compact]] and the mutations: `rows`,
+    * conformed, fill the `<path><suffix>.tmp` that replaces the table. */
+  private def rewrite(suffix: String, op: String)(rows: DataFrame): Unit = {
     val (tmp, old) = staged(suffix)
-    Durable.swap(fileSystem(), new Path(path), tmp, old, swapArtifacts, op)(write(tmp.toString))
-    cachedSchema = None
+    Durable.swap(fileSystem(), new Path(path), tmp, old, swapArtifacts, op)(
+      conform(rows).write.mode("overwrite").partitionBy(partitionCol).parquet(tmp.toString))
   }
 
   /** MV-on-MV cascade — the reference's dwm → dws layering as a state-to-
@@ -335,14 +363,12 @@ final class StateTable(
       // filter on the partition key ABOVE the merge: partitionCol is a
       // grouping key, so Catalyst pushes it below the Aggregate into the
       // scan's PartitionFilters — one partition read, not a full-table merge
-      merged(keys)
-        .filter(col(partitionCol) === lit(value).cast(
-          read().schema(partitionCol).dataType))
+      conform(merged(keys)
+        .filter(col(partitionCol) === lit(value).cast(schema(partitionCol).dataType)))
         .drop(partitionCol) // hive layout: the value lives in the dirname
         .sortWithinPartitions(keys.filterNot(_ == partitionCol).map(col): _*)
         .write.mode("overwrite").parquet(tmp.toString)
     }
-    cachedSchema = None
   }
 
   /** TTL: drop day partitions older than `days` before `today`
@@ -354,46 +380,11 @@ final class StateTable(
   /** `ALTER TABLE ... DROP PARTITION 'v'` — drop one partition directory
     * outright (metadata-only, no rewrite; CH's partition drop). */
   def dropPartition(value: String): Boolean = {
-    captureSchema()
     val fs = fileSystem()
     val p = new Path(path, s"$partitionCol=${escVal(value)}")
     val existed = fs.exists(p)
     if (existed) fs.delete(p, true): Unit
     existed
-  }
-
-  /** PERSIST the table's schema (the `_schema` marker, underscore-prefixed
-    * so readers never see it) before an operation that can remove the LAST
-    * live partition: an empty table must still read (as empty, with its
-    * definition — CH semantics) — including from a REOPENED or rebuilt
-    * instance, so an in-memory cache alone is not enough. Cost discipline:
-    * when the marker already matches the known schema this is ONE
-    * exists()/tiny-read; the full footer scan happens at most once per
-    * table lifetime (only when neither the cache nor the marker knows the
-    * schema yet). A widened schema (ALTER ADD COLUMN) refreshes the marker
-    * the next time a destructive op runs with the wider cache in hand.
-    */
-  private def captureSchema(): Unit = {
-    val fs = fileSystem()
-    // FRESHNESS INVARIANT: every schema-changing write (append, staged
-    // ingest, attach, external refresh()) DELETES the marker — so a
-    // present marker was written after the last such write and is
-    // current; trust it without a scan.
-    if (fs.exists(schemaMarker)) return
-    if (cachedSchema.isEmpty)
-      try cachedSchema = Some(read().schema)
-      catch { case _: org.apache.spark.sql.AnalysisException => return }
-    Durable.writeText(fs, schemaMarker, cachedSchema.get.json)
-  }
-
-  /** Drop the cached schema AND the persisted `_schema` marker — call
-    * after any write that can change the file-union schema (see
-    * [[captureSchema]]'s freshness invariant).
-    */
-  private def invalidateSchema(): Unit = {
-    cachedSchema = None
-    val fs = fileSystem()
-    if (fs.exists(schemaMarker)) fs.delete(schemaMarker, false): Unit
   }
 
   /** The hive-escaped directory form of a partition value — the SAME
@@ -434,7 +425,6 @@ final class StateTable(
     * in file-by-file instead of wedging the statement.
     */
   def detachPartition(value: String): Boolean = {
-    captureSchema()
     val fs = fileSystem()
     val ev = escVal(value)
     val live = new Path(path, s"$partitionCol=$ev")
@@ -465,7 +455,6 @@ final class StateTable(
       if (!fs.rename(src, live))
         sys.error(s"attachPartition: failed to move $src -> $live")
     } else mergePartDirInto(fs, src, live, "attachPartition")
-    invalidateSchema() // the attached copy may carry columns the marker lacks
     true
   }
 
@@ -535,7 +524,6 @@ final class StateTable(
     */
   def detachPart(part: String): Unit = {
     requirePlainPartName("detachPart", part)
-    captureSchema()
     val fs = fileSystem()
     val dir = findPartDir("", part).getOrElse(
       sys.error(s"detachPart: no live part '$part'"))
@@ -556,7 +544,6 @@ final class StateTable(
     */
   def attachPart(part: String): Unit = {
     requirePlainPartName("attachPart", part)
-    captureSchema()
     val fs = fileSystem()
     val dir = findPartDir(".detached", part).getOrElse(
       sys.error(s"attachPart: no detached part '$part'"))
@@ -568,7 +555,6 @@ final class StateTable(
     if (!fs.rename(new Path(dir, part), dst))
       sys.error(s"attachPart: failed to move $part -> $dst")
     pruneEmptyPartDir(fs, dir)
-    invalidateSchema() // the attached part may carry columns the marker lacks
   }
 
   /** `ALTER TABLE ... DROP DETACHED PART 'name'` (ref
@@ -610,17 +596,13 @@ final class StateTable(
       sys.error(s"fetchPart: donor partitions by " +
         s"'${srcDir.getName.takeWhile(_ != '=')}' but this table " +
         s"partitions by '$partitionCol' — structures must match")
-    // and the part's COLUMNS must match this table's data schema (name +
-    // type), or the mismatch would surface far away as a schema-merge or
-    // cast failure on a later ATTACH+read. Both footers are metadata
-    // reads. Skipped only when this table has neither data nor a schema
-    // marker to compare against (nothing yet to corrupt).
+    // and the part's COLUMNS must match this table's definition (name +
+    // type), or the mismatch would surface far away as a cast failure on
+    // a later ATTACH+read. The donor footer is a metadata read. Skipped
+    // only when this table has no definition yet (nothing yet to corrupt).
     val donorSchema = spark.read
       .parquet(new Path(srcDir, part).toString).schema
-    val mySchema =
-      try Some(read().schema.filter(_.name != partitionCol))
-      catch { case _: Exception => None }
-    mySchema.foreach { mine =>
+    defined.map(_.filter(_.name != partitionCol)).foreach { mine =>
       val donorFields = donorSchema.map(f => (f.name, f.dataType)).toSet
       val myFields = mine.map(f => (f.name, f.dataType)).toSet
       if (donorFields != myFields)
@@ -643,7 +625,6 @@ final class StateTable(
     * data the same way). Detached partitions survive, as in CH.
     */
   def truncate(): Unit = {
-    captureSchema()
     val fs = fileSystem()
     val root = new Path(path)
     if (fs.exists(root))
@@ -659,14 +640,9 @@ final class StateTable(
     * verbatim), same atomic swap as [[deleteWhere]]. */
   def updateWhere(assignments: Seq[(String, org.apache.spark.sql.Column)],
       cond: org.apache.spark.sql.Column): Unit = Projection.suppress {
-    val src = read()
-    val updated = assignments.foldLeft(src) { case (df, (name, e)) =>
-      df.withColumn(name, when(cond, e.cast(src.schema(name).dataType))
-        .otherwise(col(name)))
-    }
-    rewrite(".mutate", "updateWhere") { tmp =>
-      updated.write.mode("overwrite").partitionBy(partitionCol).parquet(tmp)
-    }
+    rewrite(".mutate", "updateWhere")(assignments.foldLeft(read()) { case (df, (name, e)) =>
+      df.withColumn(name, when(cond, e.cast(schema(name).dataType)).otherwise(col(name)))
+    })
   }
 
   /** `ALTER TABLE ... DELETE WHERE cond` — the CH mutation: rewrite the
@@ -679,10 +655,7 @@ final class StateTable(
     val before = read().count()
     // delete only rows where cond is TRUE — a NULL predicate keeps the
     // row (CH mutation semantics), so the negation must null-guard
-    rewrite(".mutate", "deleteWhere") { tmp =>
-      read().filter(!coalesce(cond, lit(false)))
-        .write.mode("overwrite").partitionBy(partitionCol).parquet(tmp)
-    }
+    rewrite(".mutate", "deleteWhere")(read().filter(!coalesce(cond, lit(false))))
     before - read().count()
   }
 
@@ -695,7 +668,6 @@ final class StateTable(
     * overload above.
     */
   def expire(days: Int, hours: Int, now: java.time.LocalDateTime): Seq[String] = {
-    captureSchema() // TTL can expire the LAST partition; empty must still read
     val fs = FileSystem.get(new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
     val root = new Path(path)
     if (!fs.exists(root)) return Nil

@@ -1486,6 +1486,84 @@ class ChDdlReplaySpec extends SparkSpec {
     assert(listed(other) == Set("sd_other") && listed(replay) == Set("sd_local"))
   }
 
+  test("a declared state table that was never written reads empty, by name and FINAL") {
+    val replay = byNameReplay("graft-unwritten")
+    for (q <- Seq("SELECT count(*) FROM dws.t", "SELECT count(*) FROM dws.t FINAL",
+        "SELECT count(*) FROM dws.t_dis"))
+      assert(replay.runQuery(q).head().getLong(0) == 0L, q)
+    assert(replay.stateTables("dws.t").finalized().count() == 0L)
+  }
+
+  test("an INSERT converts its values to the declared types: FINAL, merged(), " +
+      "compact() and OPTIMIZE FINAL match the model, directly and through an MV") {
+    import ChDdl._
+    for (target <- Seq("dws.t", "ods.t_src")) {
+      val replay = byNameReplay(s"graft-conv-$target")
+      val st = replay.stateTables("dws.t")
+      st.appendBatch(dayRows("2024-01-01", 1L, 2L))
+      // INT literals into UInt64 columns (BIGINT): the part stores BIGINT
+      replay.execute(parseStatement(
+        s"""INSERT INTO $target (day, k, v)
+          |SELECT toDate('2024-01-01') AS day, 2 AS k, 5 AS v""".stripMargin))
+      val model = Map(1L -> 10L, 2L -> 15L)
+      def sums(df: org.apache.spark.sql.DataFrame) =
+        df.select("k", "v").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      def check(step: String): Unit = {
+        assert(sums(replay.runQuery("SELECT k, v FROM dws.t FINAL")) == model, s"$target $step")
+        assert(sums(st.merged()) == model, s"$target $step")
+      }
+      check("after the INSERT")
+      st.compact()
+      check("after compact()")
+      replay.execute(parseStatement("OPTIMIZE TABLE dws.t FINAL"))
+      check("after OPTIMIZE FINAL")
+    }
+  }
+
+  test("String partition values read back as written, not as numbers or dates") {
+    import ChDdl._
+    for (slot <- Seq("007", "2024-01-01")) {
+      val replay = new ChReplay(spark, ChReplay.scratchWarehouse("graft-strpart"))
+      replay.executeScript(
+        """create table dws.sp (slot String, k UInt64, v SimpleAggregateFunction(sum, UInt64))
+          |engine=AggregatingMergeTree() PARTITION BY slot ORDER BY (slot, k);""".stripMargin)
+      replay.execute(parseStatement(
+        s"INSERT INTO dws.sp (slot, k, v) SELECT '$slot' AS slot, 1 AS k, 3 AS v"))
+      for ((how, df) <- Seq(
+          "by name" -> replay.runQuery("SELECT slot, v FROM dws.sp"),
+          "finalized()" -> replay.stateTables("dws.sp").finalized().select("slot", "v"))) {
+        assert(df.schema("slot").dataType == org.apache.spark.sql.types.StringType, s"$slot $how")
+        assert(df.collect().map(r => r.getString(0) -> r.getLong(1)).toSeq == Seq(slot -> 3L),
+          s"$slot $how")
+      }
+    }
+  }
+
+  test("an INSERT that leaves out a quantileTDigest column stores an empty state; " +
+      "FINAL and OPTIMIZE FINAL match the model") {
+    import spark.implicits._
+    import ChDdl._
+    val replay = new ChReplay(spark, ChReplay.scratchWarehouse("graft-qtfill"))
+    replay.executeScript(
+      """create table dws.qf (k UInt64, c SimpleAggregateFunction(sum, UInt64),
+        | q AggregateFunction(quantileTDigest, Float64))
+        |engine=AggregatingMergeTree() ORDER BY k;""".stripMargin)
+    val st = replay.stateTables("dws.qf")
+    replay.execute(parseStatement(
+      "INSERT INTO dws.qf (k, c) SELECT toUInt64(1) AS k, toUInt64(5) AS c"))
+    st.appendBatch(Seq((1L, 2L, 10.0), (1L, 3L, 20.0), (1L, 4L, 30.0)).toDF("k", "c", "q"))
+    // model: c sums 5 + 9; q is the median of the appended values
+    def check(step: String): Unit = {
+      assert(st.finalized().collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+        .toSeq == Seq((1L, 14L, 20.0)), step)
+      assert(replay.runQuery("SELECT k, c FROM dws.qf FINAL").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq((1L, 14L)), step)
+    }
+    check("after the INSERT")
+    replay.execute(parseStatement("OPTIMIZE TABLE dws.qf FINAL"))
+    check("after OPTIMIZE FINAL")
+  }
+
   /** A replay declaring the state table `<dws>.t`, its Distributed alias
     * `<dws>.t_dis`, the Null source `<ods>.t_src` and an MV from it into t.
     */

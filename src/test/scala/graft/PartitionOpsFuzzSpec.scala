@@ -64,9 +64,7 @@ class PartitionOpsFuzzSpec extends SparkSpec {
             st.finalized().groupBy("slot")
               .agg(sum(col("v")).as("s"), sum(col("cnt")).as("c"))
               .collect()
-              // partition-type inference may read a date-like slot back as
-              // DATE — compare on the rendered value, which round-trips
-              .map(r => String.valueOf(r.get(0)) -> (r.getLong(1), r.getLong(2)))
+              .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2)))
               .toMap
         assert(got == live.toMap,
           s"seed $seed after $opName: table=$got model=$live detached=$det")
@@ -132,10 +130,13 @@ class PartitionOpsFuzzSpec extends SparkSpec {
 
   test("the same model through the STATEMENT layer: parsed DDL sequences " +
       "(incl. multi-subcommand ALTERs, which must run in statement order)") {
-    import spark.implicits._
     import graft.engine.{ChDdl, ChReplay}
+    // the literal types an INSERT converts to the declared UInt64 (BIGINT)
+    val literal: Seq[Long => String] = Seq(n => s"$n", n => s"CAST($n AS BIGINT)",
+      n => s"CAST($n AS DECIMAL(12, 2))", n => s"toUInt8($n)", n => s"toUInt32($n)")
     for (seed <- 1 to 10) {
       val rnd = new Random(seed * 104729L + 7L)
+      val litRnd = new Random(seed)
       val replay = new ChReplay(spark, ChReplay.scratchWarehouse(s"graft-popsql$seed"))
       val tbl = s"dws.pops_$seed"
       replay.executeScript(
@@ -150,36 +151,16 @@ class PartitionOpsFuzzSpec extends SparkSpec {
 
       val live = scala.collection.mutable.Map.empty[String, Long]
       val det = scala.collection.mutable.Map.empty[String, Long]
-      var wrote = false
       def check(opName: String): Unit = {
-        val got =
-          if (live.isEmpty) {
-            try assert(st.finalized().count() == 0L,
-              s"seed $seed after $opName: expected empty")
-            catch {
-              // legal only before the FIRST append: after that, the
-              // persisted schema marker must keep empty reads working
-              // (ALTERs rebuild the instance, so this pins the marker)
-              case _: org.apache.spark.sql.AnalysisException if !wrote => ()
-              case _: java.io.FileNotFoundException if !wrote => ()
-            }
-            Map.empty[String, Long]
-          } else
-            st.finalized().groupBy("slot").agg(sum(col("v")).as("s"))
-              .collect()
-              // date-like slots read back as DATE via partition inference
-              .map(r => String.valueOf(r.get(0)) -> r.getLong(1)).toMap
+        // the declared table reads (empty) before its first write too
+        val got = st.finalized().groupBy("slot").agg(sum(col("v")).as("s"))
+          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
         assert(got == live.toMap,
           s"seed $seed after $opName: table=$got model=$live detached=$det")
         // the table read by name through the statement layer (its parts,
-        // summed) agrees too, with the same allowance before the first write
-        val byName =
-          try replay.runQuery(s"SELECT slot, sum(v) FROM $tbl GROUP BY slot")
-            .collect().map(r => String.valueOf(r.get(0)) -> r.getLong(1)).toMap
-          catch {
-            case _: org.apache.spark.sql.AnalysisException if !wrote => Map.empty[String, Long]
-            case _: java.io.FileNotFoundException if !wrote => Map.empty[String, Long]
-          }
+        // summed) agrees too
+        val byName = replay.runQuery(s"SELECT slot, sum(v) FROM $tbl GROUP BY slot")
+          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
         assert(byName == live.toMap,
           s"seed $seed after $opName: by name=$byName model=$live detached=$det")
         // the introspection surface must agree with the model too, after
@@ -238,13 +219,15 @@ class PartitionOpsFuzzSpec extends SparkSpec {
         val v = values(rnd.nextInt(values.length))
         val opName = s"step$step($v)"
         rnd.nextInt(7) match {
-          case 0 | 1 => // ingest (the replay path: bind + INSERT SELECT
-            // would need a source table; appendBatch is the MV ingest path)
+          case 0 | 1 => // ingest: an INSERT whose literals each take a
+            // type drawn from `literal` (its own Random, so the op sequence
+            // of every seed is the one `rnd` alone draws)
             val base = rnd.nextInt(50).toLong
-            st.appendBatch((1 to 2).map(i => (v, i.toLong, base + i))
-              .toDF("slot", "k", "v"))
+            def lit(n: Long) = literal(litRnd.nextInt(literal.length))(n)
+            run(s"INSERT INTO $tbl (slot, k, v) " + (1 to 2).map(i =>
+              s"SELECT '$v' AS slot, ${lit(i.toLong)} AS k, ${lit(base + i)} AS v")
+              .mkString(" UNION ALL "))
             live(v) = live.getOrElse(v, 0L) + 2 * base + 3
-            wrote = true
           case 2 =>
             if (live.contains(v)) run(s"OPTIMIZE TABLE $tbl PARTITION '$v' FINAL")
             else if (live.nonEmpty) run(s"OPTIMIZE TABLE $tbl FINAL")

@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.GraftTestBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.execution.{CoalesceExec, SparkPlan, TakeOrderedAndProjectExec}
@@ -63,29 +59,6 @@ class SmallSortSpec extends SparkSpec {
 
   private def rangeExchanges(p: SparkPlan): Seq[SparkPlan] = flatten(p).collect {
     case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
-  }
-
-  /** Jobs `body` starts on this thread's job group, counted by a listener. */
-  private def jobs(s: SparkSession)(body: => Unit): Int = {
-    val sc = s.sparkContext
-    val group = s"graft-small-sort-${System.nanoTime()}"
-    val n = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group) {
-          n.incrementAndGet(): Unit
-        }
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "small sort job count", interruptOnCancel = false)
-    try {
-      body
-      GraftTestBridge.drainListeners(sc)
-      n.get
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
   }
 
   test("an ORDER BY over a small aggregate runs 2 jobs, not 4, and returns the same rows") {

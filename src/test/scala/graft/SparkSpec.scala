@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.GraftTestBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -26,6 +30,29 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     finally prev.foreach {
       case (k, Some(v)) => s.conf.set(k, v)
       case (k, None) => s.conf.unset(k)
+    }
+  }
+
+  /** Jobs `body` starts on this thread's job group, counted by a listener. */
+  def jobs(s: SparkSession)(body: => Unit): Int = {
+    val sc = s.sparkContext
+    val group = s"graft-jobs-${System.nanoTime()}"
+    val n = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group) {
+          n.incrementAndGet(): Unit
+        }
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "job count", interruptOnCancel = false)
+    try {
+      body
+      GraftTestBridge.drainListeners(sc)
+      n.get
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
     }
   }
 

@@ -505,4 +505,69 @@ class StateTableSpec extends SparkSpec {
     assert(reopened.finalized().collect().map(_.toSeq).toSet == mergedBefore,
       "recovery lost the escaped-name partition")
   }
+
+  test("read() runs no Spark job, also on the first read after an append") {
+    val st = newTable(tmpDir("st-jobs") + "/t")
+    st.appendBatch(batch1)
+    assert(jobs(spark)(st.read()) == 0)
+    st.appendBatch(batch2)
+    assert(jobs(spark)(st.read()) == 0)
+    st.compact()
+    assert(jobs(spark)(st.read()) == 0)
+    // the merge widens the decimal sum; the rewrite stores the declared width
+    assert(st.read().schema("value_sum").dataType == DecimalType(28, 2))
+  }
+
+  test("a directory written before the definition file opens, reads the same rows " +
+      "and has a definition afterwards") {
+    import org.apache.hadoop.fs.Path
+    val dir = tmpDir("st-upgrade")
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val states = newTable(dir + "/states") // toStates only: nothing is written
+    for (withSchemaFile <- Seq(false, true)) {
+      val p = s"$dir/t$withSchemaFile"
+      // the earlier layout: each batch's states appended as they come, and
+      // (for a table that had a partition dropped) the footer union stored
+      for (b <- Seq(batch1, batch2, batch3))
+        states.toStates(b).write.mode("append").partitionBy("day").parquet(p)
+      val before = spark.read.option("mergeSchema", "true").parquet(p)
+      if (withSchemaFile) Durable.writeText(fs, new Path(p, "_schema"), before.schema.json)
+      val st = newTable(p)
+      assert(fs.exists(new Path(p, "_schema")), s"no definition stored ($p)")
+      val after = st.read()
+      assert(after.schema.map(f => f.name -> f.dataType) ==
+        before.schema.map(f => f.name -> f.dataType))
+      assert(after.exceptAll(before).isEmpty && before.exceptAll(after).isEmpty, p)
+      assertSameResult(st.finalized(Seq("day", "hour", "etype")),
+        direct(Seq("day", "hour", "etype")))
+    }
+  }
+
+  test("every write converts to the definition; a value that does not fit " +
+      "fails the write before any part lands") {
+    import spark.implicits._
+    val dir = tmpDir("st-conform") + "/t"
+    val st = new StateTable(spark, dir, keys = Seq("day", "k"), partitionCol = "day",
+      metrics = Seq(SumMetric("v", col("v_src"))))
+    def rows(k: org.apache.spark.sql.Column, v: org.apache.spark.sql.Column) =
+      Seq("2024-01-01").toDF("day").select(to_date(col("day")).as("day"), k.as("k"), v.as("v"))
+    st.append(rows(lit(1L), lit(10L)))
+    st.append(rows(lit(1), lit(5).cast(ShortType)))         // narrower integers
+    st.append(rows(lit(2).cast("decimal(10,0)"), lit("7"))) // decimal, numeric text
+    def parts = new java.io.File(dir, "day=2024-01-01").listFiles()
+      .count(_.getName.endsWith(".parquet"))
+    assert(parts == 3)
+    assert(st.read().schema.map(_.dataType) == Seq(LongType, LongType, DateType))
+    val model = Seq((1L, 15L), (2L, 7L))
+    def sums = st.merged().select("k", "v").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
+    assert(sums == model)
+    for (bad <- Seq(rows(lit(3L), lit("x")), rows(lit(Long.MaxValue).cast("decimal(38,0)") * 10, lit(1L))))
+      intercept[Exception](st.append(bad))
+    assert(parts == 3 && sums == model)
+    // a column outside the definition that is no key or metric is refused
+    intercept[IllegalArgumentException](st.append(rows(lit(1L), lit(1L)).withColumn("w", lit(1))))
+    st.compact()
+    assert(st.read().schema.map(_.dataType) == Seq(LongType, LongType, DateType) && sums == model)
+  }
 }
